@@ -6,6 +6,11 @@ distributions of the engine's sf0.01 oracle tier: a TPC-H-shaped star
 schema, an `events` clickstream, a `documents` corpus with near- and
 exact duplicates, and labelled unit-norm `embeddings`.
 
+corpus.json holds the row count and the Arrow type of every column of
+that tier's tables; `generate` refuses to publish a corpus that differs
+from it. `events.ts` is stored as it is in every tier: TIMESTAMP(µs)
+without a timezone.
+
 The tables are a fixed corpus (`DATA_SEED`), not a function of the
 benchmark's `--seed`: outputs are checked against hashes pinned for this
 corpus (pins.json), so the corpus must not move between runs.
@@ -16,6 +21,7 @@ Usage: python3 perfbench/gen.py <out_dir>
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import sys
 
@@ -24,6 +30,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 DATA_SEED = 20240101
+CORPUS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "corpus.json")
 
 # sf0.01 row counts
 N_CUSTOMER = 1_500
@@ -228,10 +235,23 @@ def embeddings_table(rng: np.random.Generator) -> pa.Table:
     )
 
 
+def shape(data_dir: str) -> dict[str, dict]:
+    """Row count and column types of every table under `data_dir`, in the
+    form corpus.json keeps them."""
+    out = {}
+    for name in sorted(os.listdir(data_dir)):
+        f = pq.ParquetFile(os.path.join(data_dir, name))
+        out[name.removesuffix(".parquet")] = {
+            "rows": f.metadata.num_rows,
+            "columns": {fld.name: str(fld.type) for fld in f.schema_arrow},
+        }
+    return out
+
+
 def generate(out_dir: str) -> None:
     """Write every table under `out_dir` (created if missing). Writes to a
-    sibling temp dir and renames, so a half-written corpus never exists
-    at `out_dir`."""
+    sibling temp dir, checks it against corpus.json and renames, so a
+    half-written or misshapen corpus never exists at `out_dir`."""
     rng = np.random.default_rng(DATA_SEED)
     tables = star_tables(rng)
     tables["events"] = events_table(rng)
@@ -246,6 +266,12 @@ def generate(out_dir: str) -> None:
             row_group_size=1 << 30,
             store_schema=False,
         )
+    with open(CORPUS_PATH) as f:
+        expected = json.load(f)
+    got = shape(tmp)
+    if got != expected:
+        bad = sorted(t for t in expected.keys() | got.keys() if got.get(t) != expected.get(t))
+        raise RuntimeError(f"generated tables differ from corpus.json: {bad}")
     os.rename(tmp, out_dir)
 
 

@@ -1,6 +1,6 @@
 """Repository benchmark: cold-path passes over one workload's queries.
 
-    python3 perfbench/run.py --workload tabular --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload tabular --seed 1 --seconds 20 --trace 0
 
 One process drives `local[<cpus>]` in a closed loop: one client issues the
 next query only after the previous one finished. Each query is built by
@@ -12,11 +12,14 @@ seed shuffles query order within each pass.
 
 A run:
   1. generates the input corpus under .perfbench/data once per checkout;
-  2. sets up the session `SETUPS` times, the first one cold (setup_s);
+  2. sets up the session cold: a new JVM, the registry, the first views;
   3. makes one untimed pass that collects every result and checks its
      hash against pins.json; it is also the JIT warm-up;
   4. makes the timed passes that fill `--seconds` at the workload's
      nominal pass time (at least two).
+
+Every reported time is net of the CPU time the hypervisor stole from this
+guest during the interval (see `Interval`).
 
 The last stdout line is the JSON result. `--trace 1` enables the Spark
 event log at launch and reports the per-layer metrics instead of the
@@ -45,7 +48,6 @@ WORK = os.path.join(ROOT, ".perfbench")
 DATA_DIR = os.path.join(WORK, "data", "sf0.01")
 OUT_DIR = os.path.join(WORK, "out")
 DRIVER_MEM = "1g"
-SETUPS = 3
 MIN_PASSES = 2
 
 MODULES = [
@@ -74,7 +76,6 @@ END_TO_END = {
     "setup_s": "s",
     "pass_s": "s",
     "query_gmean_s": "s",
-    "query_tail_s": "s",
     "peak_rss_mb": "MB",
 }
 PER_LAYER = {
@@ -104,11 +105,6 @@ PER_LAYER = {
 def module_of(fn) -> str:
     mod = fn.__module__.removeprefix("tf_datapipeline_spark.")
     return "streaming" if mod.startswith("streaming.") else mod
-
-
-def tail_index(n: int) -> int:
-    """Index, in ascending order, of the p90 sample by nearest rank."""
-    return max(0, -(-9 * n // 10) - 1)
 
 
 def timed_passes(workload: str, seconds: float) -> int:
@@ -185,11 +181,44 @@ def vm_hwm_mb(pid) -> float:
     raise RuntimeError(f"no VmHWM for pid {pid}")
 
 
-def steal_s() -> float:
-    """CPU time the hypervisor gave to other guests, summed over all CPUs
-    (/proc/stat): a host-quiet diagnostic recorded for every pass."""
+def host_cpu_s() -> list[tuple[float, float]]:
+    """Busy and stolen CPU seconds so far of the whole guest, then of each
+    of its CPUs (/proc/stat). Busy is user + nice + system + irq +
+    softirq; stolen is time a CPU of this guest was ready to run while the
+    hypervisor ran another guest."""
+    hz = os.sysconf("SC_CLK_TCK")
+    out = []
     with open("/proc/stat") as f:
-        return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+        for line in f:
+            if not line.startswith("cpu"):
+                break
+            v = [int(x) for x in line.split()[1:9]]
+            out.append(((v[0] + v[1] + v[2] + v[5] + v[6]) / hz, v[7] / hz))
+    return out
+
+
+class Interval:
+    """Wall time of an interval, raw and net of steal.
+
+    If the hypervisor steals a share s of the time this guest's CPUs want
+    to run, evenly, every runnable thread advances at 1 - s of its speed,
+    and the interval takes 1 / (1 - s) times as long as on an unshared
+    host, whatever its parallelism. `net_s` = wall x (1 - s), with
+    s = stolen / (stolen + busy) over the interval. On a shared 4-vCPU
+    host this halved the spread of pass times between runs; it does not
+    remove a neighbour's contention for caches and memory bandwidth."""
+
+    def __init__(self) -> None:
+        self.t0 = time.perf_counter()
+        self.cpu0 = host_cpu_s()
+
+    def stop(self) -> dict:
+        wall = time.perf_counter() - self.t0
+        deltas = [(b1 - b0, s1 - s0) for (b0, s0), (b1, s1) in zip(self.cpu0, host_cpu_s())]
+        busy, stolen = deltas[0]
+        share = stolen / (stolen + busy) if stolen + busy > 0 else 0.0
+        return {"wall_s": wall, "net_s": wall * (1.0 - share), "steal_s": stolen,
+                "busy_s": busy, "steal_share": share, "per_cpu": deltas[1:]}
 
 
 def table_stats(data_dir: str) -> dict:
@@ -241,7 +270,7 @@ class Bench:
         self.spark = None
         self.tracker = None
         self.n_paths = 0
-        self.setups: list[dict] = []
+        self.setup_times: dict = {}
         self.passes: list[dict] = []
         self.failures: list[dict] = []
         self.attempted = 0
@@ -256,9 +285,9 @@ class Bench:
 
     def setup(self) -> None:
         """session.get_spark + registry.queries() + the first
-        catalog.register_views: the fixed cost before a job's first query."""
-        if self.spark is not None:
-            self.spark.stop()
+        catalog.register_views, in a new JVM: the fixed cost a job pays
+        before its first query."""
+        whole = Interval()
         t0 = time.perf_counter()
         from tf_datapipeline_spark.session import get_spark
 
@@ -271,9 +300,8 @@ class Bench:
         t2 = time.perf_counter()
         catalog.register_views(self.spark, self.fresh_path())
         t3 = time.perf_counter()
-        self.setups.append(
-            {"session_s": t1 - t0, "registry_s": t2 - t1, "views_s": t3 - t2, "total_s": t3 - t0}
-        )
+        self.setup_times = {"session_s": t1 - t0, "registry_s": t2 - t1,
+                            "views_s": t3 - t2, **whole.stop()}
 
     def run_query(self, name: str, p: int, path: str, timed: bool) -> dict | None:
         sc = self.spark.sparkContext
@@ -283,6 +311,7 @@ class Bench:
         self.attempted += 1
         rec = {"name": name, "pass": p, "start_ms": time.time() * 1000.0}
         try:
+            whole = Interval()
             t0 = time.perf_counter()
             df = self.queries[name](self.spark, path)
             t1 = time.perf_counter()
@@ -302,6 +331,7 @@ class Bench:
             sc.setLocalProperty("spark.job.description", None)
         rec["end_ms"] = time.time() * 1000.0
         rec["build_s"], rec["action_s"] = t1 - t0, t2 - t1
+        rec["latency_net_s"] = whole.stop()["net_s"]
         rec["action_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group)) - rec["build_jobs"]
         rec["stream_runs"] = self.tracker.runs_of((name, p))
         rec["stream_jobs"] = sum(
@@ -323,17 +353,15 @@ class Bench:
         random.Random(f"{self.seed}:{p}").shuffle(order)
         path = self.fresh_path()
         since = time.time()
-        steal0 = steal_s()
+        whole = Interval()
         t0 = time.perf_counter()
         self.catalog.register_views(self.spark, path)
         t1 = time.perf_counter()
         recs = [self.run_query(n, p, path, timed) for n in order]
-        wall = time.perf_counter() - t0
         ps = {
             "pass": p,
             "timed": timed,
-            "wall_s": wall,
-            "steal_s": steal_s() - steal0,
+            **whole.stop(),
             "register_views_s": t1 - t0,
             "queries": [r for r in recs if r is not None],
         }
@@ -351,8 +379,7 @@ class Bench:
         return ps
 
     def run(self) -> dict:
-        for _ in range(SETUPS):
-            self.setup()
+        self.setup()
         spark = self.spark
         names = resolve(list(self.queries), WORKLOADS[self.workload])
         unknown = {module_of(self.queries[n]) for n in names} - set(MODULES)
@@ -377,7 +404,7 @@ class Bench:
         info = {
             "measured_s": measured_s,
             "calibration_probe_s": probe,
-            "host_steal_s": sum(ps["steal_s"] for ps in self.passes if ps["timed"]),
+            "host_steal_share": median(ps["steal_share"] for ps in self.passes if ps["timed"]),
             "streams_all_terminated": self.tracker.wait_terminated(),
             "app_id": spark.sparkContext.applicationId,
             "spark": spark.version,
@@ -435,19 +462,21 @@ def end_to_end(b: Bench, info: dict, timed: list[dict]) -> tuple[dict, dict]:
     per_query: dict[str, list[float]] = defaultdict(list)
     for ps in timed:
         for r in ps["queries"]:
-            per_query[r["name"]].append(r["build_s"] + r["action_s"])
+            per_query[r["name"]].append(r["latency_net_s"])
     latencies = sorted(t for ts in per_query.values() for t in ts)
-    typical = sorted(median(ts) for ts in per_query.values())
+    typical = {n: median(ts) for n, ts in per_query.items()}
     metrics = {
-        "setup_s": median(s["total_s"] for s in b.setups),
-        "pass_s": median(ps["wall_s"] for ps in timed),
-        "query_gmean_s": statistics.geometric_mean(typical),
-        "query_tail_s": typical[tail_index(len(typical))],
+        "setup_s": b.setup_times["net_s"],
+        "pass_s": median(ps["net_s"] for ps in timed),
+        "query_gmean_s": statistics.geometric_mean(typical.values()),
         "peak_rss_mb": info["peak_rss_mb"],
     }
-    i = tail_index(len(latencies))
+    slowest = max(typical, key=typical.get)
     samples = {"passes": len(timed), "latency_samples": len(latencies),
-               "query_p50_s": median(latencies), "sample_p90_s": latencies[i]}
+               "query_p50_s": median(latencies),
+               "slowest_query": {"name": slowest, "median_s": typical[slowest]},
+               "setup_wall_s": b.setup_times["wall_s"],
+               "pass_wall_s": median(ps["wall_s"] for ps in timed)}
     return metrics, samples
 
 
@@ -510,8 +539,8 @@ def per_layer(b: Bench, info: dict, timed: list[dict]) -> tuple[dict, list[dict]
         per_pass.append(acc)
     first = timed[0]["queries"]
     metrics = {
-        "session.start_s": median(s["session_s"] for s in b.setups),
-        "registry.load_s": b.setups[0]["registry_s"],
+        "session.start_s": b.setup_times["session_s"],
+        "registry.load_s": b.setup_times["registry_s"],
         "catalog.register_views_s": median(ps["register_views_s"] for ps in timed),
         "catalog.documents_splits": info["documents_splits"],
         "plans.exchanges": sum(r["plan"]["exchanges"] for r in first),
@@ -567,9 +596,9 @@ def main() -> int:
             "env": {**env, "spark": info["spark"], "python": info["python"],
                     "tables": table_stats(DATA_DIR)},
             "calibration_probe_s": info["calibration_probe_s"],
-            "host_steal_s": info["host_steal_s"],
+            "host_steal_share": info["host_steal_share"],
             "measured_s": info["measured_s"],
-            "setups": b.setups,
+            "setup": b.setup_times,
             "passes": b.passes,
             "streams": {
                 run_id: {"owner": list(owner), "batches": b.tracker.batches_of(run_id)}
@@ -590,7 +619,7 @@ def main() -> int:
             if os.path.isfile(untraced):
                 with open(untraced) as f:
                     base = json.load(f)["end_to_end"]["pass_s"]
-                artifact["tracing_overhead_s"] = metrics["trace.pass_s"] - base
+                artifact["tracing_overhead_s"] = e2e["pass_s"] - base
     finally:
         b.shutdown()
         shutil.rmtree(run_dir, ignore_errors=True)
@@ -601,9 +630,9 @@ def main() -> int:
     if artifact["job_counts"]["carryover_suspect"]:
         print(f"job totals changed between fresh-path passes: {artifact['job_counts']}",
               file=sys.stderr)
-    if artifact["host_steal_s"] > 0.02 * env["cpus"] * artifact["measured_s"]:
-        print(f"host busy: {artifact['host_steal_s']:.1f} s of CPU stolen during "
-              f"{artifact['measured_s']:.1f} s of timed passes", file=sys.stderr)
+    if artifact["host_steal_share"] > 0.05:
+        print(f"host busy: the hypervisor stole {artifact['host_steal_share']:.0%} of the "
+              "CPU time of a typical timed pass", file=sys.stderr)
     if args.trace and not artifact["reconcile"]["within_10pct"]:
         print(f"per-module times do not reconcile: {artifact['reconcile']}", file=sys.stderr)
     result = {
