@@ -457,3 +457,103 @@ def test_nlj_audit_catches_corpus_broadcast(spark):
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id")
     bad = F_broadcast(docs).crossJoin(docs.select(F_col("doc_id").alias("d2")))
     assert unbounded_nlj_builds(bad), "corpus broadcast not flagged"
+
+
+# Heavy per-row streams over `documents` (md5 shingles/tokens, the winnow
+# transform): catalog.docs_scan_source must feed each of them, directly or
+# through the table it materializes.
+_DOCS_STREAM_QUERIES = [
+    "q62_minhash_signature",
+    "q64_simhash",
+    "q65_ngram_jaccard",
+    "q6h_kmv_source_overlap",
+    "q6k_lsh_calibration",
+    "q5h_winnow_fingerprint",
+    "q5p_ngram_novelty",
+    "qt1_prep_pipeline",
+]
+
+
+def _docs_round_robin_exchanges(plan: str) -> list[bool]:
+    """For each round-robin Exchange over a `documents` scan in a
+    simple-mode plan tree, whether a Generate (explode) sits between the
+    scan and the Exchange — an exchange above the explode shuffles
+    n_positions x text instead of the slim input."""
+    lines = plan.splitlines()
+
+    def depth(i: int) -> int:
+        return len(lines[i]) - len(lines[i].lstrip(" +-:"))
+
+    def ancestors(j: int) -> list[int]:
+        out, d = [], depth(j)
+        for k in range(j - 1, -1, -1):
+            if lines[k].strip() and depth(k) < d:
+                out.append(k)
+                d = depth(k)
+        return out
+
+    out = []
+    for i, line in enumerate(lines):
+        if "Exchange RoundRobinPartitioning" not in line:
+            continue
+        for j in range(i + 1, len(lines)):
+            if not lines[j].strip() or depth(j) <= depth(i):
+                break
+            if "FileScan parquet" in lines[j] and "documents.parquet" in lines[j]:
+                path = [k for k in ancestors(j) if k > i]
+                out.append(any("Generate " in lines[k] for k in path))
+    return out
+
+
+def test_docs_streams_use_adaptive_source(spark, monkeypatch, tmp_path):
+    """The adaptive documents source must not drop silently. On the
+    one-file smoke corpus (fewer splits than cores) every heavy stream
+    gets a round-robin Exchange below its explode; on a copy split into
+    2 x defaultParallelism files the split-count gate returns 0 and no
+    such Exchange appears."""
+    import shutil
+
+    from tf_datapipeline_spark import catalog
+
+    assert catalog.adaptive_scan_parallelism(spark, SF_SMOKE) > 0
+    split_dir = str(tmp_path)
+    for name in catalog.TABLES:
+        if name != "documents":
+            shutil.copyfile(
+                catalog.table_path(SF_SMOKE, name), catalog.table_path(split_dir, name)
+            )
+    n_files = 2 * spark.sparkContext.defaultParallelism
+    catalog.load_table(spark, SF_SMOKE, "documents").repartition(n_files).write.parquet(
+        catalog.table_path(split_dir, "documents")
+    )
+    assert catalog.adaptive_scan_parallelism(spark, split_dir) == 0
+
+    # record the plan of every table a query localCheckpoints on the way
+    # (those builds never show in the final plan), then the final plan
+    def simple_plan(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "simple"
+        )
+
+    plans = []
+    cls = type(spark.range(1))
+    original = cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(simple_plan(self))
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+
+    def exchanges(name, sf_dir):
+        plans.clear()
+        plans.append(simple_plan(registry.queries()[name](spark, sf_dir)))
+        return [x for p in plans for x in _docs_round_robin_exchanges(p)]
+
+    for name in _DOCS_STREAM_QUERIES:
+        rr = exchanges(name, SF_SMOKE)
+        assert rr, f"{name}: no round-robin Exchange on the one-file corpus"
+        assert not any(rr), f"{name}: round-robin Exchange above the explode"
+        assert not exchanges(name, split_dir), (
+            f"{name}: round-robin Exchange on the split corpus"
+        )

@@ -3,6 +3,7 @@ deterministic primitives the engine's reproducibility rests on."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -162,32 +163,117 @@ def test_substring_dup_interval_union(spark):
     assert got[2] == (_SUB_K + 12, _SUB_K)
 
 
-def test_cc_labels_memoized_across_queries(spark):
-    """q67 and qt1 must share ONE connected-components run per corpus —
-    the iterative CC is the dedup family's dominant cost."""
-    from tests.conftest import SF_SMOKE
-    from tf_datapipeline_spark.operators.dedup import materialize_cc_labels
+def _view_after(query_name, view):
+    """A build function for a per-invocation view: it runs the
+    registered query that materializes `view`, then reads the view."""
 
-    a = materialize_cc_labels(spark, SF_SMOKE)
-    b = materialize_cc_labels(spark, SF_SMOKE)
-    assert a is b
+    def build(spark, sf_dir):
+        from tf_datapipeline_spark import registry
+
+        registry.queries()[query_name](spark, sf_dir)
+        return spark.table(view)
+
+    return build
 
 
-def test_sig_materialization_is_per_invocation(spark):
-    """r12 bench-row honesty (r11 verdict task 3): the MinHash signature
-    table is rebuilt on EVERY invocation — a session-level memo let the
-    bench's min-of-N passes time a cached-table read instead of the
-    signature build the q62 row claims to measure. Two invocations must
-    produce independent checkpoints with identical values."""
-    from tests.conftest import SF_SMOKE
+def _sig(spark, sf_dir):
     from tf_datapipeline_spark.operators.dedup import _materialize_sig
 
-    a = _materialize_sig(spark, SF_SMOKE)
-    b = _materialize_sig(spark, SF_SMOKE)
+    return _materialize_sig(spark, sf_dir)
+
+
+def _cc_labels(spark, sf_dir):
+    from tf_datapipeline_spark.operators.dedup import materialize_cc_labels
+
+    return materialize_cc_labels(spark, sf_dir)
+
+
+def _ahash(spark, sf_dir):
+    from tf_datapipeline_spark.operators.multimodal import _ahash_table
+
+    return _ahash_table(spark, sf_dir)
+
+
+_MATERIALIZED_TABLES = {
+    "sig": _sig,
+    "cc_labels": _cc_labels,
+    "dims_mat": _view_after("q72_label_centroids", "dims_mat"),
+    "ahash": _ahash,
+    "kmv_base_mat": _view_after("q9e_kmv_quantile_rollup", "kmv_base_mat"),
+    "dv_pospl_mat": _view_after("q9g_deletion_vectors", "dv_pospl_mat"),
+}
+
+
+@pytest.mark.parametrize("table", sorted(_MATERIALIZED_TABLES))
+def test_materialization_is_per_invocation(spark, table):
+    """Every shared table is rebuilt on EVERY invocation — a session
+    memo let min-of-N bench passes time a cached-table read instead of
+    the build the row claims to measure, and served stale rows after an
+    in-place table rewrite. Two invocations must each run the build
+    (Spark jobs in their own job group; a memo hit runs none) and
+    produce independent checkpoints with identical values."""
+    from tests.conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    build = _MATERIALIZED_TABLES[table]
+    frames, n_jobs = [], []
+    for i in range(2):
+        group = f"per-invocation-{table}-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            frames.append(build(spark, SF_SMOKE))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    a, b = frames
     assert a is not b
-    rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, b.collect()))
+    assert min(n_jobs) >= 1, f"{table}: an invocation ran no build ({n_jobs})"
+    rows_a = sorted(map(tuple, a.collect()), key=repr)
+    rows_b = sorted(map(tuple, b.collect()), key=repr)
     assert rows_a == rows_b and rows_a
+
+
+def test_invalidate_caches_exposes_in_place_rewrites(spark, tmp_path):
+    """The documented hook for an in-place table rewrite: after
+    catalog.invalidate_caches() every query must answer from the
+    rewritten data. q67 (CC labels), q72 (dims), q9e (KMV base) and q9g
+    (DV positions) once kept their shared tables in session memos that
+    outlived the hook and kept returning the pre-rewrite answer."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_SMOKE
+    from tests.oracle_harness import compare
+    from tf_datapipeline_spark import catalog, registry
+
+    sf_dir = str(tmp_path)
+    for name in catalog.TABLES:
+        shutil.copyfile(
+            catalog.table_path(SF_SMOKE, name), catalog.table_path(sf_dir, name)
+        )
+    names = [
+        "q67_dedup_clusters",
+        "q72_label_centroids",
+        "q9e_kmv_quantile_rollup",
+        "q9g_deletion_vectors",
+    ]
+    qs, oracle = registry.queries(), registry.oracle_sql()
+    before = {
+        n: sorted(map(tuple, qs[n](spark, sf_dir).collect()), key=repr)
+        for n in names
+    }
+    # keep every other row: same schema, different contents
+    for name in ("documents", "embeddings", "events", "orders"):
+        path = catalog.table_path(sf_dir, name)
+        t = pq.read_table(path)
+        pq.write_table(t.take(list(range(0, t.num_rows, 2))), path)
+    catalog.invalidate_caches()
+    for n in names:
+        df = qs[n](spark, sf_dir)
+        compare(df, oracle[n], sf_dir, name=n)
+        after = sorted(map(tuple, df.collect()), key=repr)
+        assert after != before[n], f"{n}: the rewrite did not change its answer"
 
 
 def test_register_views_recovers_dropped_view(spark):

@@ -53,9 +53,13 @@ _TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def invalidate_caches() -> None:
-    """Drop all memoized table handles and view registrations — the
-    invalidation hook for any caller that mutates the catalog state
-    (rewrites a table dir in place, or drops/replaces a temp view)."""
+    """Drop the catalog's metadata memos — table handles, split counts
+    and view registrations — the invalidation hook for any caller that
+    mutates the catalog state (rewrites a table dir in place, or
+    drops/replaces a temp view). The next query re-reads the footers
+    and file listings. No operator keeps data across invocations (every
+    shared table is rebuilt per call by `materialize`), so after this
+    call every query sees the rewritten tables."""
     _TABLE_MEMO.clear()
     _VIEWS_AT.clear()
     _SPLITS_MEMO.clear()
@@ -78,14 +82,14 @@ def adaptive_scan_parallelism(
     per-row-heavy streams (the md5-per-5-gram shingle explode, the
     winnow transform) serialize on one core no matter how many the
     session has. When the scan's split count is below the session's
-    core count, callers repartition a SLIM pre-explode projection to
+    core count, `docs_scan_source` repartitions the input to
     `defaultParallelism` — the shuffle moves (once) an input that is
     small by the very condition that fired, and keyless round-robin
     repartition is deterministic (sortBeforeRepartition) with every
     consumer order-independent. At production scale the input has at
     least as many splits as cores and this returns 0: no shuffle is
     ever added where the scan already parallelizes. Measured (matched
-    quiet window, tools/exp_sig.py): the MinHash signature build
+    quiet window, OPTIMIZATION_r12.md): the MinHash signature build
     2.6 s → 0.85 s at sf0.1/local[32]."""
     key = (
         spark.sparkContext.applicationId,
@@ -101,14 +105,32 @@ def adaptive_scan_parallelism(
 
 
 def docs_scan_source(spark: SparkSession, sf_dir: str) -> str:
-    """SQL source expression for `documents` feeding a heavy per-row
-    stream: the bare table when its scan parallelizes, else a
-    REPARTITION-hinted slim projection (hint BELOW any explode — an
-    exchange above the explode would shuffle n_positions × text)."""
+    """The ONE way to pick the `documents` source of a heavy per-row
+    stream: a SQL relation over the registered `documents` view — the
+    bare view when its scan parallelizes, else a REPARTITION-hinted
+    projection. The SQL generators take it as their source relation;
+    DataFrame callers read `SELECT ... FROM <it>`. Callers project
+    before the explode, so Catalyst places the round-robin exchange
+    BELOW it (one above would shuffle n_positions × text)."""
+    register_views(spark, sf_dir)
     n = adaptive_scan_parallelism(spark, sf_dir, "documents")
     if not n:
         return "documents"
     return f"(SELECT /*+ REPARTITION({n}) */ * FROM documents)"
+
+
+def materialize(spark: SparkSession, sf_dir: str, view: str, sql: str) -> DataFrame:
+    """The ONE way an operator materializes a shared table: run `sql`
+    (over the catalog views of `sf_dir`, registered here) as an eager
+    localCheckpoint, bind the result to temp view `view`, and return
+    it. Built once per CALL — every downstream reference in the
+    invocation reads the checkpoint instead of re-deriving it under
+    Spark's CTE inlining, and nothing is cached across invocations, so
+    each query pays its own build and sees the current table data."""
+    register_views(spark, sf_dir)
+    df = spark.sql(sql).localCheckpoint()
+    df.createOrReplaceTempView(view)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from tf_datapipeline_spark.catalog import (
     docs_scan_source,
     load_table,
+    materialize,
     register_views,
 )
 from tf_datapipeline_spark.functions.texthash import (
@@ -102,10 +103,11 @@ def q61_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # differences are array-explosion syntax and bit-shift spelling; the hash
 # arithmetic is byte-identical.
 # --------------------------------------------------------------------------
-def _sql_shingles(dialect: str, distinct: bool = True) -> str:
-    """CTE body producing (doc_id, h) — hashed 5-char
-    shingles. The md5 digest is projected once in an inner SELECT; the
-    8-digit decode references that column (not 8 separate md5 calls)."""
+def _sql_shingles(dialect: str, distinct: bool = True, src: str = "documents") -> str:
+    """CTE body producing (doc_id, h) — hashed 5-char shingles of the
+    `src` relation. The md5 digest is projected once in an inner SELECT;
+    the 8-digit decode references that column (not 8 separate md5
+    calls)."""
     if dialect == "spark":
         pos = "explode(sequence(1, length(text) - 4)) AS pos"
     else:
@@ -116,50 +118,40 @@ def _sql_shingles(dialect: str, distinct: bool = True) -> str:
       FROM (
         SELECT doc_id, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
         FROM (SELECT doc_id, text, {pos}
-              FROM documents WHERE length(text) >= 5)
+              FROM {src} WHERE length(text) >= 5)
       )
     """
 
 
-# r12 (r11 verdict task 3 — bench-row honesty): the signature/shingle
-# tables are materialized PER INVOCATION (localCheckpoint + temp view,
-# the q6h/q6k idiom), not memoized per session. The r8-era session memo
-# meant q62's min-of-N bench row timed a cached-table read (~0.06s)
-# instead of the signature build it claims to measure, and q63/q65
-# likewise excluded the build from every pass after the first. Within
-# one invocation the table is still built exactly once and every
-# downstream arm reads the checkpoint. `_MATERIALIZED` now holds ONLY
-# the connected-component labels (cc_labels), which q67/qt1/qt2 share
-# by design (test-pinned engine architecture: one CC run per corpus
-# per session).
-_MATERIALIZED: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _memo_key(spark: SparkSession, sf_dir: str, kind: str) -> tuple[str, str, str]:
-    return (spark.sparkContext.applicationId, sf_dir, kind)
-
-
-def _sql_signature(dialect: str = "duckdb") -> str:
+# The signature/shingle tables, like every shared table in the engine,
+# are materialized PER INVOCATION (catalog.materialize): a session-keyed
+# cache would let min-of-N bench rows time a cached read instead of the
+# build they claim to measure, and would serve stale rows after an
+# in-place table rewrite.
+def _sql_signature(dialect: str = "duckdb", src: str = "documents") -> str:
     """MinHash signature aggregation. MIN over a multiset equals MIN over
     the set, so the Spark side aggregates the RAW shingle stream — the
     map-side partial MIN collapses each partition to one row per doc
     before the shuffle, skipping the DISTINCT's full 1-row-per-shingle
     exchange entirely (the dominant cost at corpus scale). The oracle
-    reads the distinct `shingles` CTE: same values either way."""
+    reads the distinct `shingles` CTE: same values either way. `src` is
+    the Spark-side documents relation."""
     mins = ",\n             ".join(
         f"MIN({sql_minhash_perm('h', a, b)}) AS m{i}"
         for i, (a, b) in enumerate(_PARAMS)
     )
-    src = (
-        f"({_sql_shingles('spark', distinct=False)})" if dialect == "spark" else "shingles"
+    sh = (
+        f"({_sql_shingles('spark', distinct=False, src=src)})"
+        if dialect == "spark"
+        else "shingles"
     )
-    return f"SELECT doc_id,\n             {mins}\n      FROM {src} GROUP BY doc_id"
+    return f"SELECT doc_id,\n             {mins}\n      FROM {sh} GROUP BY doc_id"
 
 
 def _with_prelude(dialect: str, body: str, need_sig: bool) -> str:
     """Wrap a query body with the shingle (and signature) CTEs for the
-    oracle dialect; the Spark side pre-materializes `shingles`/`sig` views
-    instead (see _materialize_shingles) so they are computed once."""
+    oracle dialect; the Spark side pre-materializes the `sig` view
+    instead (see _materialize_sig) so it is computed once."""
     if dialect == "spark":
         return body
     ctes = [f"shingles AS ({_sql_shingles(dialect)})"]
@@ -174,17 +166,12 @@ def _materialize_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs exact intersection counts). Per-invocation: every caller pays
     the build (see the module note above); callers that need the table
     twice read the returned checkpoint / the `sig` view."""
-    register_views(spark, sf_dir)
     # adaptive scan parallelism (catalog.docs_scan_source): the
     # md5-per-5-gram stream is the family's dominant cost and runs on
     # ONE core when the local corpus is a single parquet file —
-    # measured 2.6 s → 0.85 s at sf0.1 (tools/exp_sig.py, quiet window)
-    sql = _sql_signature("spark").replace(
-        "FROM documents WHERE", f"FROM {docs_scan_source(spark, sf_dir)} WHERE"
-    )
-    df = spark.sql(sql).localCheckpoint()
-    df.createOrReplaceTempView("sig")
-    return df
+    # measured 2.6 s → 0.85 s at sf0.1 (OPTIMIZATION_r12.md)
+    src = docs_scan_source(spark, sf_dir)
+    return materialize(spark, sf_dir, "sig", _sql_signature("spark", src))
 
 
 def _minhash_signature_sql(dialect: str) -> str:
@@ -270,7 +257,7 @@ def q63_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_lsh_pairs_sql("spark"))
 
 
-def _simhash_sql(dialect: str) -> str:
+def _simhash_sql(dialect: str, src: str = "documents") -> str:
     if dialect == "spark":
         tok = "explode(split(trim(text), '\\\\s+')) AS term"
         bit = "shiftright(h, {b}) & 1"
@@ -284,7 +271,7 @@ def _simhash_sql(dialect: str) -> str:
     )
     return f"""
     WITH toks AS (
-      SELECT doc_id, {tok} FROM documents
+      SELECT doc_id, {tok} FROM {src}
     ), th AS (
       SELECT doc_id, {sql_hash32_dialect("term", dialect)} AS h FROM toks
     )
@@ -299,15 +286,9 @@ def q64_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc sum of ±1 votes from each token-hash's bit b. Near-dup docs
     land on equal or hamming-close simhashes; grouping by value clusters
     them."""
-    register_views(spark, sf_dir)
     # adaptive scan parallelism — see _materialize_sig (the per-token
     # md5 stream serializes on a 1-task scan otherwise)
-    return spark.sql(
-        _simhash_sql("spark").replace(
-            "FROM documents\n",
-            f"FROM {docs_scan_source(spark, sf_dir)}\n",
-        )
-    )
+    return spark.sql(_simhash_sql("spark", docs_scan_source(spark, sf_dir)))
 
 
 def _jaccard_body() -> str:
@@ -360,16 +341,22 @@ def _materialize_shingle_sets(spark: SparkSession, sf_dir: str) -> None:
         f"SELECT DISTINCT explode(array(doc_a, doc_b)) AS doc_id "
         f"FROM ({_band_candidates()})"
     ).createOrReplaceTempView("_cand_ids")
-    cand_shingles = _sql_shingles("spark", distinct=False).replace(
-        "FROM documents",
-        f"FROM (SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
-        " LEFT SEMI JOIN _cand_ids c ON c.doc_id = d.doc_id)",
+    cand_docs = (
+        f"(SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
+        " LEFT SEMI JOIN _cand_ids c ON c.doc_id = d.doc_id)"
     )
-    spark.sql(
+    materialize(spark, sf_dir, "shingle_sets", _shingle_sets_sql(cand_docs))
+
+
+def _shingle_sets_sql(src: str) -> str:
+    """(doc_id, hs array<bigint>, sz): one collect_set per doc over the
+    raw shingle stream of `src` (partial collect_set dedups map-side)."""
+    return (
         f"SELECT doc_id, hs, CAST(size(hs) AS BIGINT) AS sz FROM ("
         f"  SELECT doc_id, collect_set(h) AS hs"
-        f"  FROM ({cand_shingles}) GROUP BY doc_id)"
-    ).localCheckpoint().createOrReplaceTempView("shingle_sets")
+        f"  FROM ({_sql_shingles('spark', distinct=False, src=src)})"
+        f" GROUP BY doc_id)"
+    )
 
 
 def _jaccard_sql(dialect: str) -> str:
@@ -744,24 +731,18 @@ def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
 
 
 def materialize_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized connected-component labels over the LSH pair graph.
-    q67 and qt1 consume the SAME labels, so a warm engine runs the
-    iterative CC once per corpus and shares the checkpointed result —
-    the same convention as the shared signature table (the iteration is
-    the single most expensive step in the dedup family)."""
-    key = _memo_key(spark, sf_dir, "cc_labels")
-    if key not in _MATERIALIZED:
-        _materialize_sig(spark, sf_dir)
-        pairs = (
-            spark.sql(_lsh_pairs_body()).select("doc_a", "doc_b").localCheckpoint()
-        )
-        # connected_components checkpoints each round; the returned frame
-        # is backed by the final round's checkpoint
-        _MATERIALIZED[key] = connected_components(pairs.distinct())
-        # the labels derive only from the final checkpoint, so the edge
-        # list's blocks can be released now
-        pairs.unpersist()
-    return _MATERIALIZED[key]
+    """Connected-component labels over the LSH pair graph, built per
+    invocation like every shared table (q67, qt1 and qt2 each pay their
+    own iterative CC run; within a query the labels are built once)."""
+    _materialize_sig(spark, sf_dir)
+    pairs = spark.sql(_lsh_pairs_body()).select("doc_a", "doc_b").localCheckpoint()
+    # connected_components checkpoints each round; the returned frame
+    # is backed by the final round's checkpoint
+    labels = connected_components(pairs.distinct())
+    # the labels derive only from the final checkpoint, so the edge
+    # list's blocks can be released now
+    pairs.unpersist()
+    return labels
 
 
 @query("q67_dedup_clusters", oracle=_clusters_oracle())
@@ -1150,7 +1131,7 @@ def q69_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # next round's corpus — the q63/q67 batch path handles intra-corpus).
 #
 # Scale: at 100 TB the corpus side is a PREBUILT band index (the
-# memoized signature table here is its harness analog); the band join is
+# materialized signature table here is its harness analog); the band join is
 # delta-signatures x corpus-bands — a small-side-broadcast equi-join, so
 # incremental cost is O(delta), not O(corpus). Exact check joins 16-byte
 # md5 keys. Both legs replayed verbatim by the oracle.
@@ -1342,7 +1323,7 @@ def q6b_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # id-order analog of degree ordering), wedges (a<b<c) form on the
 # shared middle vertex, and one membership join closes them — wedge
 # fan-out is bounded by per-vertex degree, never all-pairs, and only
-# (id, id) pairs shuffle. Shares the memoized signature table with the
+# (id, id) pairs shuffle. Shares the materialized signature table with the
 # rest of the family.
 # --------------------------------------------------------------------------
 def _triangle_sql() -> str:
@@ -1713,9 +1694,9 @@ def q6g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_K = 128
 
 
-def _kmv_sketch_sql(dialect: str) -> str:
+def _kmv_sketch_sql(dialect: str, src: str = "documents") -> str:
     """The corpus-proportional part: per-source bottom-k shingle-hash
-    sketch (k x N_sources rows out)."""
+    sketch (k x N_sources rows out) over the `src` relation."""
     if dialect == "spark":
         pos = "explode(sequence(1, length(text) - 4)) AS pos"
     else:
@@ -1727,7 +1708,7 @@ def _kmv_sketch_sql(dialect: str) -> str:
       FROM (
         SELECT source, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
         FROM (SELECT source, text, {pos}
-              FROM documents WHERE length(text) >= 5)
+              FROM {src} WHERE length(text) >= 5)
       )
     ),
     sk AS {mat}(
@@ -1784,17 +1765,12 @@ def _kmv_overlap_sql(dialect: str) -> str:
 
 @query("q6h_kmv_source_overlap", oracle=_kmv_overlap_sql("duckdb"))
 def q6h_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     # ONE shingle scan: materialize the k x N_sources sketch (bounded
     # metadata at any corpus size), then run the pair/merge arithmetic
     # over it — the Spark twin of the oracle's MATERIALIZED hint.
-    sk_sql = _kmv_sketch_sql("spark").replace(
-        "FROM documents WHERE",
-        f"FROM {docs_scan_source(spark, sf_dir)} WHERE",
-    )  # adaptive scan parallelism — see _materialize_sig
-    spark.sql(
-        f"WITH {sk_sql} SELECT * FROM sk"
-    ).localCheckpoint().createOrReplaceTempView("kmv_sk_mat")
+    # Adaptive scan parallelism — see _materialize_sig.
+    sk_sql = _kmv_sketch_sql("spark", docs_scan_source(spark, sf_dir))
+    materialize(spark, sf_dir, "kmv_sk_mat", f"WITH {sk_sql} SELECT * FROM sk")
     return spark.sql(_kmv_overlap_sql("spark"))
 
 
@@ -1951,7 +1927,7 @@ def q6j_dup_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # QUERY TEXT at any corpus scale — a fixed-size random audit, not a
 # corpus-quadratic sweep. Exact Jaccard for sampled pairs reuses the
 # q65 shingle-join form restricted (Spark-side) to sampled docs; band
-# capture is pair-level band-column equality on the memoized signature
+# capture is pair-level band-column equality on the materialized signature
 # table (no bucket cap here: capture probability is a property of the
 # band scheme, the cap is a production-fanout guard audited by q63).
 #
@@ -2104,16 +2080,11 @@ def _materialize_cal_sets(spark: SparkSession, sf_dir: str) -> None:
         """
     )
     ids.createOrReplaceTempView("_cal_ids")
-    sampled_shingles = _sql_shingles("spark", distinct=False).replace(
-        "FROM documents",
-        f"FROM (SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
-        " LEFT SEMI JOIN _cal_ids c ON c.doc_id = d.doc_id)",
+    sampled_docs = (
+        f"(SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
+        " LEFT SEMI JOIN _cal_ids c ON c.doc_id = d.doc_id)"
     )
-    spark.sql(
-        f"SELECT doc_id, hs, CAST(size(hs) AS BIGINT) AS sz FROM ("
-        f"  SELECT doc_id, collect_set(h) AS hs"
-        f"  FROM ({sampled_shingles}) GROUP BY doc_id)"
-    ).localCheckpoint().createOrReplaceTempView("cal_sets")
+    materialize(spark, sf_dir, "cal_sets", _shingle_sets_sql(sampled_docs))
 
 
 def _lsh_calibration_sql(dialect: str) -> str:
@@ -2138,7 +2109,10 @@ def q6k_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     _materialize_cal_sets(spark, sf_dir)
     # r11: ONE documents scan for the pair sample (≤ ~32k pairs by the
     # query text) — both downstream arms read the checkpoint
-    spark.sql(
-        f"WITH {_cal_pairs_sql('spark')} SELECT * FROM cal_pairs"
-    ).localCheckpoint().createOrReplaceTempView("q6k_pairs_mat")
+    materialize(
+        spark,
+        sf_dir,
+        "q6k_pairs_mat",
+        f"WITH {_cal_pairs_sql('spark')} SELECT * FROM cal_pairs",
+    )
     return spark.sql(_lsh_calibration_sql("spark"))

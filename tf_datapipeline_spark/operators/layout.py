@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tf_datapipeline_spark.catalog import register_views
+from tf_datapipeline_spark.catalog import materialize, register_views
 from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
 from tf_datapipeline_spark.registry import query
 
@@ -88,16 +88,10 @@ def _bucketed_sql(dialect: str) -> str:
 # bucketed is consumed by THREE downstream aggregates (zfiles, lfiles,
 # hits); Spark inlines CTEs, so the CTE form re-derived it — and
 # re-scanned orders — three times (the r5 verdict's q9a plan-audit nit:
-# 3 full scans at 100 TB). Materialize the 16-byte (xb, yb) projection
-# ONCE PER INVOCATION (r12, r11 verdict task 3's honesty rule: the
-# r8-era session memo meant q9a/q9o's min-of-N bench rows excluded the
-# projection build every pass after the first). The DuckDB oracle keeps
-# the self-contained CTE (DuckDB materializes multiply-referenced CTEs
-# on its own).
-def _materialize_bucketed(spark: SparkSession, sf_dir: str) -> None:
-    register_views(spark, sf_dir)
-    spark.sql(_bucketed_sql("spark")).localCheckpoint(
-    ).createOrReplaceTempView("bucketed_mat")
+# 3 full scans at 100 TB). q9a/q9o therefore materialize the 16-byte
+# (xb, yb) projection as `bucketed_mat` once per invocation. The DuckDB
+# oracle keeps the self-contained CTE (DuckDB materializes
+# multiply-referenced CTEs on its own).
 
 
 def _probe_pred() -> str:
@@ -197,7 +191,7 @@ def _zorder_body(dialect: str) -> str:
 
 @query("q9a_zorder_layout", oracle=_zorder_body("duckdb"))
 def q9a_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_bucketed(spark, sf_dir)
+    materialize(spark, sf_dir, "bucketed_mat", _bucketed_sql("spark"))
     return spark.sql(_zorder_body("spark"))
 
 
@@ -222,7 +216,7 @@ def q9a_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every intermediate is a bounded nonnegative integer.
 #
 # Scale: identical to q9a — per-row scalar arithmetic (codegen, no
-# shuffle) over the memoized (xb, yb) projection, one partial-aggregated
+# shuffle) over the materialized (xb, yb) projection, one partial-aggregated
 # groupBy(file) per layout; a production writer feeds the same hv
 # expression to repartitionByRange(hv).sortWithinPartitions(hv).
 # --------------------------------------------------------------------------
@@ -351,7 +345,7 @@ def _hilbert_body(dialect: str) -> str:
 
 @query("q9o_hilbert_layout", oracle=_hilbert_body("duckdb"))
 def q9o_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_bucketed(spark, sf_dir)
+    materialize(spark, sf_dir, "bucketed_mat", _bucketed_sql("spark"))
     return spark.sql(_hilbert_body("spark"))
 
 
@@ -596,14 +590,12 @@ def q9d_range_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sketch and the exact quantiles are the CERTIFICATION arms only (they
 # rescan events; a production rollup would not run them), which is why
 # the narrow (day, hr, hash, id, value) projection is materialized once
-# per session — the q9a memo pattern — instead of being re-derived per
+# per invocation — the q9a pattern — instead of being re-derived per
 # consumer under Spark CTE inlining. Quantile ranks use integer-exact
 # ceil arithmetic (FLOOR((kk+1)/2.0), FLOOR((9kk+9)/10.0)) so neither
 # engine's decimal-vs-double literal typing can shift a rank boundary.
 # --------------------------------------------------------------------------
 _KMV_K = 32  # bottom-k sketch size; quantile error ~ 1/sqrt(k)
-
-_KMV_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
 def _kmv_base_sql(dialect: str) -> str:
@@ -614,14 +606,6 @@ def _kmv_base_sql(dialect: str) -> str:
              value AS v, event_id AS ek, {h} AS hv
       FROM events
     """
-
-
-def _materialize_kmv_base(spark: SparkSession, sf_dir: str) -> None:
-    register_views(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KMV_MEMO:
-        _KMV_MEMO[key] = spark.sql(_kmv_base_sql("spark")).localCheckpoint()
-    _KMV_MEMO[key].createOrReplaceTempView("kmv_base_mat")
 
 
 def _kmv_rollup_body(dialect: str) -> str:
@@ -695,7 +679,7 @@ def _kmv_rollup_body(dialect: str) -> str:
 
 @query("q9e_kmv_quantile_rollup", oracle=_kmv_rollup_body("duckdb"))
 def q9e_kmv_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_kmv_base(spark, sf_dir)
+    materialize(spark, sf_dir, "kmv_base_mat", _kmv_base_sql("spark"))
     return spark.sql(_kmv_rollup_body("spark"))
 
 
@@ -864,14 +848,9 @@ def q9f_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DV_FILES = 64
 
 
-def _dv_pospl_cte(dialect: str) -> str:
-    """(file_id, pos, o_orderkey, o_custkey, o_orderstatus) — the base
-    layout with per-file row positions. Spark reads the session-
-    materialized view (one scan + one shuffle, reused by every CTE
-    reference — the dims_mat pattern); DuckDB keeps the inline CTE."""
-    if dialect == "spark":
-        return "SELECT file_id, pos, o_orderkey, o_custkey, o_orderstatus FROM dv_pospl_mat"
-    return f"""
+# (file_id, pos, o_orderkey, o_custkey, o_orderstatus) — the base layout
+# with per-file row positions.
+_DV_POSPL_SQL = f"""
       SELECT file_id,
              ROW_NUMBER() OVER (PARTITION BY file_id ORDER BY o_orderkey) - 1
                AS pos,
@@ -885,32 +864,20 @@ def _dv_pospl_cte(dialect: str) -> str:
     """
 
 
-_DV_MEMO: dict = {}
-
-
-def _materialize_dv_pospl(spark: SparkSession, sf_dir: str) -> None:
-    register_views(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DV_MEMO:
-        _DV_MEMO[key] = spark.sql(
-            f"""
-            SELECT CAST(FLOOR(o_orderkey * {_DV_FILES}.0 / (mk + 1)) AS INT)
-                     AS file_id,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY CAST(FLOOR(o_orderkey * {_DV_FILES}.0
-                                             / (mk + 1)) AS INT)
-                     ORDER BY o_orderkey) - 1 AS pos,
-                   o_orderkey, o_custkey, o_orderstatus
-            FROM orders, (SELECT MAX(o_orderkey) AS mk FROM orders) m
-            """
-        ).localCheckpoint()
-    _DV_MEMO[key].createOrReplaceTempView("dv_pospl_mat")
+def _dv_pospl_cte(dialect: str) -> str:
+    """The pospl CTE body. Spark reads the per-invocation view
+    `dv_pospl_mat` built from _DV_POSPL_SQL (one scan + one shuffle,
+    reused by every CTE reference — the dims_mat pattern); DuckDB keeps
+    the inline CTE."""
+    if dialect == "spark":
+        return "SELECT file_id, pos, o_orderkey, o_custkey, o_orderstatus FROM dv_pospl_mat"
+    return _DV_POSPL_SQL
 
 
 def _dv_body(dialect: str) -> str:
     # pospl is referenced 3x (two DELETE scans + the flagged join):
     # MATERIALIZED in DuckDB so the window pass runs once (plain CTEs
-    # inline per reference); Spark reads the session-materialized view
+    # inline per reference); Spark reads the per-invocation view
     mat = "MATERIALIZED " if dialect == "duckdb" else ""
     return f"""
     WITH pospl AS {mat}({_dv_pospl_cte(dialect)}),
@@ -944,7 +911,7 @@ def _dv_body(dialect: str) -> str:
 
 @query("q9g_deletion_vectors", oracle=_dv_body("duckdb"))
 def q9g_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dv_pospl(spark, sf_dir)
+    materialize(spark, sf_dir, "dv_pospl_mat", _DV_POSPL_SQL)
     return spark.sql(_dv_body("spark"))
 
 
@@ -1254,7 +1221,7 @@ def q9j_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dry-run prints.
 #
 # Scale (100 TB): everything after the q9g DV accounting (O(deleted)
-# predicate scans + one file-count shuffle on the memoized position
+# predicate scans + one file-count shuffle on the materialized position
 # table) is arithmetic on the 64-row file manifest — the decision
 # layer costs metadata, exactly like a real transaction-log VACUUM
 # plan. Integer-exact end to end; the one double (dead_frac) is a
@@ -1309,7 +1276,7 @@ def _vacuum_body(dialect: str) -> str:
 
 @query("q9k_vacuum_plan", oracle=_vacuum_body("duckdb"))
 def q9k_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dv_pospl(spark, sf_dir)
+    materialize(spark, sf_dir, "dv_pospl_mat", _DV_POSPL_SQL)
     return spark.sql(_vacuum_body("spark"))
 
 
@@ -1348,8 +1315,6 @@ _Q9L_SQL = """
 
 @query("q9l_partition_evolution", oracle=_Q9L_SQL)
 def q9l_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.catalog import register_views
-
     register_views(spark, sf_dir)
     return spark.sql(_Q9L_SQL)
 

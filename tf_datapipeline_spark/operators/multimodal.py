@@ -1511,21 +1511,10 @@ def _ahash_oracle() -> str:
     """
 
 
-# The hash table is memoized per (session, sf_dir) like the dedup
-# family's MinHash signature table: q8f and q8i share one decode +
-# hash pass (the binary decode dominates the family's cost), and
-# localCheckpoint keeps the 4-column result alive for the session.
-_AHASH_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _ahash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _AHASH_MEMO:
-        _AHASH_MEMO[key] = _ahash_df(spark, sf_dir).localCheckpoint()
-    return _AHASH_MEMO[key]
-
-
-def _ahash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n_bits, hash_lo, hash_hi) per image, localCheckpointed
+    per invocation so q8i's band and verify arms share one decode + hash
+    pass (the binary decode dominates the family's cost)."""
     from tf_datapipeline_spark.functions.imagecodec import decode_image
     from tf_datapipeline_spark.functions.imageops import resize_nearest
 
@@ -1552,7 +1541,7 @@ def _ahash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return corpus.mapInPandas(
         ahash, schema="doc_id bigint, n_bits bigint, hash_lo bigint, hash_hi bigint"
-    )
+    ).localCheckpoint()
 
 
 @query("q8f_image_ahash", oracle=_ahash_oracle())

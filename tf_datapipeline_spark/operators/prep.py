@@ -131,7 +131,7 @@ def _prep_oracle() -> str:
 @query("qt1_prep_pipeline", oracle=_prep_oracle())
 def qt1_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # (adaptive repartition A/B'd OFF here — tools/exp_repart2.py: the
+    # (adaptive repartition A/B'd OFF here — OPTIMIZATION_r12.md: the
     # tokenize/gram streams are whitespace splits, and the added
     # shuffle measured 1.3s -> 2.1-2.8s; the device only pays on
     # md5-per-position streams like the shingle/winnow families)

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tf_datapipeline_spark.catalog import load_table, register_views
+from tf_datapipeline_spark.catalog import load_table, materialize, register_views
 from tf_datapipeline_spark.registry import query
 
 _DIM = 64
@@ -40,45 +40,30 @@ _N_TABLES = 4
 _N_BITS = 6
 
 
+def _dims_sql(dialect: str) -> str:
+    """The exploded (vec_id, x, pos) table: one row per embedding
+    dimension (1-based pos)."""
+    if dialect == "spark":
+        x = "element_at(embedding, CAST(pos AS INT))"
+        pos = "explode(sequence(1, 64))"
+    else:
+        x = "embedding[CAST(pos AS INT)]"
+        pos = "unnest(generate_series(1, 64))"
+    return f"""
+      SELECT vec_id, CAST({x} AS DOUBLE) AS x, pos
+      FROM (SELECT vec_id, embedding, {pos} AS pos FROM embeddings)
+    """
+
+
 def _dims_cte(dialect: str) -> str:
     if dialect == "spark":
         # Spark inlines CTEs, so a `dims` CTE referenced N times would
         # re-explode (and re-scan) the corpus N times — q76's plan showed
-        # 8 parquet scans before this. The spark dialect therefore reads
-        # the session-materialized view (see _materialize_dims); the
-        # DuckDB oracle keeps the self-contained CTE.
+        # 8 parquet scans before this. Spark callers therefore
+        # materialize _dims_sql once per invocation as `dims_mat` and
+        # read that; the DuckDB oracle keeps the self-contained CTE.
         return "SELECT vec_id, x, pos FROM dims_mat"
-    return """
-      SELECT vec_id, CAST(embedding[CAST(pos AS INT)] AS DOUBLE) AS x, pos
-      FROM (SELECT vec_id, embedding,
-                   unnest(generate_series(1, 64)) AS pos
-            FROM embeddings)
-    """
-
-
-# Exploded (vec_id, pos, x) table memoized per (session, sf_dir) — the
-# dedup family's signature-table pattern: q72/q74/q75/q76/q78 share one
-# explode + one parquet scan instead of one per CTE reference;
-# localCheckpoint keeps the partitions alive for the session and the
-# temp view is re-bound per call so alternating sf_dirs stay correct.
-_DIMS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _materialize_dims(spark: SparkSession, sf_dir: str) -> None:
-    register_views(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DIMS_MEMO:
-        _DIMS_MEMO[key] = spark.sql(
-            """
-            SELECT vec_id,
-                   CAST(element_at(embedding, CAST(pos AS INT)) AS DOUBLE) AS x,
-                   pos
-            FROM (SELECT vec_id, embedding,
-                         explode(sequence(1, 64)) AS pos
-                  FROM embeddings)
-            """
-        ).localCheckpoint()
-    _DIMS_MEMO[key].createOrReplaceTempView("dims_mat")
+    return _dims_sql(dialect)
 
 
 # ---------------------------------------------------------------------------
@@ -413,7 +398,7 @@ def q72_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid, one row per (label, dimension) — the A3-style
     'running averages' reduction (reference train.py:52-53) applied to
     vectors. Exact integer sums → deterministic at any parallelism."""
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     return spark.sql(_centroid_sql("spark"))
 
 
@@ -549,7 +534,7 @@ def _kmeans_step_sql(dialect: str) -> str:
 
 @query("q74_kmeans_step", oracle=_kmeans_step_sql("duckdb"))
 def q74_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     return spark.sql(_kmeans_step_sql("spark"))
 
 
@@ -641,7 +626,7 @@ def _pq_encode_sql(dialect: str) -> str:
 
 @query("q75_pq_encode", oracle=_pq_encode_sql("duckdb"))
 def q75_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     return spark.sql(_pq_encode_sql("spark"))
 
 
@@ -722,7 +707,7 @@ def _pq_ann_sql(dialect: str) -> str:
 
 @query("q76_pq_ann", oracle=_pq_ann_sql("duckdb"))
 def q76_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     return spark.sql(_pq_ann_sql("spark"))
 
 
@@ -1113,7 +1098,7 @@ def _sq_encode_sql(dialect: str) -> str:
 
 @query("q78_sq_encode", oracle=_sq_encode_sql("duckdb"))
 def q78_sq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     return spark.sql(_sq_encode_sql("spark"))
 
 
@@ -1486,7 +1471,7 @@ def _binary_hamming_sql(dialect: str) -> str:
 
 @query("q7e_binary_hamming", oracle=_binary_hamming_sql("duckdb"))
 def q7e_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     return spark.sql(_binary_hamming_sql("spark"))
 
 
@@ -1888,7 +1873,7 @@ def _recall_eval_sql(dialect: str) -> str:
 
 @query("q7i_recall_eval", oracle=_recall_eval_sql("duckdb"))
 def q7i_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     return spark.sql(_recall_eval_sql("spark"))
 
 
@@ -1962,7 +1947,7 @@ def _centroid_drift_sql(dialect: str) -> str:
 
 @query("q7j_centroid_drift", oracle=_centroid_drift_sql("duckdb"))
 def q7j_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     return spark.sql(_centroid_drift_sql("spark"))
 
 
@@ -2334,7 +2319,7 @@ def q7m_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
-    # r12 (r11 verdict task 2, A/B'd via tools/exp_q7m.py): hop-superset
+    # r12 (r11 verdict task 2, A/B in OPTIMIZATION_r12.md): hop-superset
     # prescore replaces the r11 unrolled per-round rescore. The beam can
     # only ever visit nodes within _GANN_ROUNDS edge-hops of the seed
     # set — a reachable set derivable from edge METADATA alone, bounded
@@ -2695,15 +2680,17 @@ def _ivf_probe_sql(dialect: str) -> str:
 
 @query("q7o_ivf_probe_curve", oracle=_ivf_probe_sql("duckdb"))
 def q7o_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     # r11: materialize `scored` once (queries x probed-candidate
     # metadata — bounded by the fixed query set at any corpus size);
     # the per-level top-k window, the candidate counts and the hits
     # join then all read the checkpoint instead of re-deriving the
     # assignment + rescore joins (plain CTEs inline in Spark).
-    spark.sql(
-        f"WITH {_ivf_probe_prelude('spark')} SELECT * FROM scored"
-    ).localCheckpoint().createOrReplaceTempView("q7o_scored_mat")
+    materialize(
+        spark,
+        sf_dir,
+        "q7o_scored_mat",
+        f"WITH {_ivf_probe_prelude('spark')} SELECT * FROM scored",
+    )
     return spark.sql(
         f"""
     WITH scored AS (SELECT query_id, vec_id, prank, cos FROM q7o_scored_mat),
@@ -2798,7 +2785,7 @@ def _index_build_oracle() -> str:
 
 @query("qt6_index_build", oracle=_index_build_oracle())
 def qt6_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _materialize_dims(spark, sf_dir)
+    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     picks = _farthest_first_picks(spark, sf_dir)
     seeds = ", ".join(f"({rnd}, {vid})" for rnd, vid, _ in picks)
     return spark.sql(f"""

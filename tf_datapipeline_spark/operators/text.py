@@ -15,8 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import (
-    adaptive_scan_parallelism,
+    docs_scan_source,
     load_table,
+    materialize,
     register_views,
 )
 from tf_datapipeline_spark.functions.texthash import (
@@ -1168,15 +1169,12 @@ def q5h_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the explode/window shape, and values are identical: only
     # full-width windows survive either way, so the length filter
     # tightens to k+w-1 (shorter docs produced zero winnowed rows).
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.length("text") >= _WIN_K + _WIN_W - 1
-    )
-    # adaptive scan parallelism (catalog.adaptive_scan_parallelism): the
+    # adaptive scan parallelism (catalog.docs_scan_source): the
     # per-position md5 transform is this query's entire cost and runs
     # on ONE core when the corpus is a single small file
-    n_par = adaptive_scan_parallelism(spark, sf_dir, "documents")
-    if n_par:
-        docs = docs.repartition(n_par)
+    docs = spark.sql(f"SELECT * FROM {docs_scan_source(spark, sf_dir)}").filter(
+        F.length("text") >= _WIN_K + _WIN_W - 1
+    )
     h = sql_hash32_dialect(f"substr(text, CAST(i AS INT), {_WIN_K})", "spark")
     hashed = docs.select(
         "doc_id",
@@ -1822,11 +1820,10 @@ def _novelty_oracle() -> str:
 
 @query("q5p_ngram_novelty", oracle=_novelty_oracle())
 def q5p_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    # adaptive scan parallelism (see catalog.adaptive_scan_parallelism)
-    n_par = adaptive_scan_parallelism(spark, sf_dir, "documents")
-    if n_par:
-        docs = docs.select("doc_id", "text").repartition(n_par)
+    # adaptive scan parallelism (see catalog.docs_scan_source)
+    docs = spark.sql(
+        f"SELECT doc_id, text FROM {docs_scan_source(spark, sf_dir)}"
+    )
     grams = (
         docs.select("doc_id", _tokens_spark().alias("_toks"))
         .select("doc_id", F.explode(_grams_spark(F.col("_toks"))).alias("g"))
@@ -2209,7 +2206,7 @@ def _bpe_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize-then-pack composite, which lays the encoded token counts
     out into fixed-length training sequences."""
     docs = load_table(spark, sf_dir, "documents")
-    # adaptive repartition measured WORSE here (tools/exp_repart2.py:
+    # adaptive repartition measured WORSE here (OPTIMIZATION_r12.md:
     # on 2.1-2.9s vs off 1.3-1.7s): the whitespace tokenize is cheap
     # enough that the extra shuffle (paid twice — toks derives twice)
     # outweighs the parallelism; only md5-per-position streams win it
@@ -2443,14 +2440,13 @@ _Q5W_SQL = f"WITH {_Q5W_CELLT},{_Q5W_TAIL}"
 
 @query("q5w_chi2_drift", oracle=_Q5W_SQL)
 def q5w_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     # r11: the (source, band) contingency table is consumed by the row/
     # column/total marginals AND the grid join — materialize the
     # metadata-sized table once (ONE documents scan instead of four;
     # plain CTEs inline in Spark). Oracle unchanged; parity-verified.
-    spark.sql(
-        f"WITH {_Q5W_CELLT} SELECT * FROM cellt"
-    ).localCheckpoint().createOrReplaceTempView("q5w_cellt_mat")
+    materialize(
+        spark, sf_dir, "q5w_cellt_mat", f"WITH {_Q5W_CELLT} SELECT * FROM cellt"
+    )
     return spark.sql(
         f"WITH cellt AS (SELECT source, band, o FROM q5w_cellt_mat),"
         f"{_Q5W_TAIL}"

@@ -58,393 +58,9 @@ _loaded = False
 # every registered oracle each round — that is the compensating control
 # between driver rows).
 #
-# Round-9 window: the four r8-verdict debt ops (q7j, q7k, q4zc, q4zd)
-# plus 46 more never-gated queries, family-spread. Deferred to r10 (the
-# remaining never-gated 13, each with an in-gate class sibling this
-# round): q1o, q1p, q3c, q53, q5f, q5i, q44, q4k, q4e, q76, q8f, q48,
-# q8g — then the r1-era stale queries, oldest first.
-# ---------------------------------------------------------------------------
-GATE_ORDER_R9 = [
-    # relational kernels + format/layout surface (never gated r4-r7 era)
-    "q1n_colocated_join",
-    "q1s_mode_kernel",
-    "q1u_correlated_subquery",
-    "q1v_exists_subquery",
-    "q1x_quality_audit",
-    "q1z_table_stats",
-    "q1q_partitioned_week",
-    "q1r_schema_evolution",
-    "q1t_orc_roundtrip",
-    # window family
-    "q28_distribution_ranks",
-    # sampling / mixture pipeline
-    "q3a_stratified_sample",
-    "q3b_weighted_mix",
-    "q3d_reservoir_sample",
-    "q3e_kfold_assignment",
-    # events (batch) — incl. debt op q4zd
-    "q41_sliding_window",
-    "q43_event_dedup_first",
-    "q45_json_extract",
-    "q46_session_stats",
-    "q4z_zscore_outliers",
-    "q4h_value_histogram",
-    "q4l_mad_outliers",
-    "q4m_freshness_monitor",
-    "q4zd_user_growth",
-    # text analysis + the qt2 composite
-    "q50_token_stats",
-    "q51_quality_score",
-    "q52_lang_id",
-    "q54_fingerprint",
-    "q59_gopher_filter",
-    "q5a_repetition_profile",
-    "q5b_pii_scrub",
-    "q5e_bigram_lm",
-    "q5j_mixture_weights",
-    "q5n_bpe_pairs",
-    "qt2_prep_semantic",
-    # dedup
-    "q60_dedup_exact",
-    "q62_minhash_signature",
-    # similarity — incl. debt ops q7j, q7k
-    "q75_pq_encode",
-    "q78_sq_encode",
-    "q7j_centroid_drift",
-    "q7k_cell_balance",
-    # multimodal
-    "q8a_channel_stats",
-    "q8l_keyframe_dedup",
-    "q8n_media_audit",
-    # structured streaming — incl. debt op q4zc
-    "q4w_stream_dedup_watermark",
-    "q4j_stream_sliding_window",
-    "q4o_stream_ohlc",
-    "q7a_stream_sq_ingest",
-    "q8j_stream_image_ingest",
-    "q7b_stream_ivf_assign",
-    "q4zc_stream_anomaly_alerts",
-]
-
-# Rounds 1-8 window, kept for the rotation tool's history and so the
-# r10 proposal can see what r9 displaced (every name below already has
-# ≥1 driver-green row; see git history for the per-slot rationale).
-GATE_ORDER_R8 = [
-    # relational core (incl. the two sketch ops with error-bound oracles;
-    # top-k is covered by q22, the date/pivot scalar kernels stay
-    # registered + locally oracle-checked behind the window). Round 4
-    # rotates q17 (approx-distinct sketch) out for q1w (approx-quantile
-    # sketch) — the same error-bound-oracle class, previously unseen by
-    # the driver; q17 stays locally checked.
-    "q01_pricing_summary",
-    "q05_region_revenue",
-    # Round-6 rotation: q1w -> q9e (quantile-class both ways — q9e's KMV
-    # bottom-k rollup carries BOTH a rank-based quantile estimate and an
-    # exact discrete-quantile arm, plus the exact-mergeability
-    # fingerprint contract that contrasts with q9b's HLL envelope; q1w
-    # stays locally oracle-checked).
-    # Round-8 rotation (late): q9e -> q9i (SCD Type-2 dimension history —
-    # the commit-stamped validity-interval build added this round, never
-    # gated; the sketch/quantile class q9e evidences stays in-gate via
-    # q9b's mergeable-HLL row, and q9e keeps its r7+r8 green rows plus
-    # the local oracle check).
-    "q9i_scd2_history",
-    # Round-6 rotation: q1i -> q9b (both sketch-class — approx_top_k's
-    # error-bound oracle stays evidenced in-gate by the q9e/q9b sketch
-    # rows, and q1i keeps its local oracle check plus the new runtime
-    # capacity-regime guard; q9b's mergeable-HLL hourly->daily rollup was
-    # a round-5 addition with no driver row).
-    "q9b_sketch_rollup",
-    # Round-5 rotation: q32 -> q1y (CDC snapshot diff, late-round-4
-    # relational surface previously behind the window; q32's exact-head
-    # split numbering stays evidenced in-gate by qp1's composite and
-    # locally oracle-checked).
-    "q1y_snapshot_diff",
-    # window/analytic. Round-6 rotation: q22 -> q9a (top-k-per-group's
-    # rank-window machinery stays evidenced in-gate by q21's running
-    # windows and the per-vector rank windows inside q7c/q70-class rows;
-    # q9a's z-order file-skipping arithmetic was a round-5 addition with
-    # no driver row; q22 stays locally oracle-checked).
-    # Round-8 rotation (late): q21 -> q29 (cumulative market share —
-    # the dim-join + metadata-spine running-frame analytic, new this
-    # session; q21's per-row running-window class stays evidenced
-    # in-gate by q4y's spine windows and q4za's lag windows, and q21
-    # keeps its r1-r8 green rows, its bench HEADLINE slot, and the
-    # local oracle check).
-    "q29_cumulative_share",
-    # Round-8 rotation (late): q9a -> q9j (clustering-depth audit — the
-    # file-overlap re-clustering signal that decides WHEN to invoke
-    # q9a's z-order rewrite; the zone-map skip arithmetic q9a evidences
-    # stays in-gate via q9f/q9g's file-stats rows, and q9a keeps its
-    # r5-r8 green rows, its plan pin, and the local oracle check).
-    "q9j_clustering_depth",
-    # reference pipeline surface (composites + exact-numbering ops)
-    # (q36 shard math is subsumed by q84's sharded-write row)
-    "qp1_feed_pipeline",
-    "qp2_label_metrics",
-    # events (batch). Round-4 rotation: q40 -> q4d (the multi-grain
-    # rollup computes tumbling minute/hour/day windows in one pass, so
-    # tumbling-window semantics stay evidenced while the hypertable
-    # shape gains a driver row); q4a -> q4g (same ASOF oracle, but the
-    # cogrouped applyInPandas merge_asof operator class gets the row);
-    # q4f -> q4i (time-RANGE trailing-hour frame, new operator class).
-    # q40/q4a/q4f stay registered + locally oracle-checked.
-    "q4d_multigrain_rollup",
-    # Round-6 rotation: q42 -> q9d (range-partition planner — the
-    # repartitionByRange machinery with a corpus-size-adaptive bounded
-    # sample, new layout-family surface; session-window semantics stay
-    # evidenced in-gate by q4q's append-mode streaming sessionization,
-    # the strictly subtler twin, and q42 stays locally oracle-checked).
-    # Round-7 rotation (late): q9d -> q9g (deletion-vector merge-on-read
-    # — a NEW layout class this round: positional-delete metadata + the
-    # anti-join live-table reconstruction, per-file accounting and live
-    # checksum value-checked; the bounded-sample range-partition planner
-    # keeps its r6 green row, its plan stays pinned in test_plans, and
-    # the layout family keeps five other in-gate rows).
-    "q9g_deletion_vectors",
-    "q4y_gap_fill",
-    "q4g_cogroup_asof",
-    "q4r_range_join",
-    # Round-5 rotation: q4v -> q4n (OHLC bars, late-round-4 events
-    # surface; the salted range join shares q4r's oracle so the
-    # range-join class stays value-evidenced in-gate, and q4v's
-    # salt-exchange plan stays pinned in test_plans.py).
-    # Round-8 rotation (late): q4n -> q4za (Markov next-event transition
-    # matrix — the sequential-pattern row added this round, never gated;
-    # the bar-aggregation class q4n evidences stays in-gate via q4d's
-    # multigrain rollup + q4y's spine windows, and q4n keeps its r5-r8
-    # green rows plus the local oracle check).
-    "q4za_markov_transitions",
-    # Round-6 rotation (late): q4i -> q9f (per-file Bloom skipping index —
-    # the point-lookup companion to q9a's zone maps, new this round; the
-    # time-RANGE trailing-frame class stays evidenced in-gate by q21's
-    # running windows + q4y's spine windows, and q4i stays locally
-    # oracle-checked).
-    # Round-8 rotation (late): q9f -> q9k (VACUUM/retention planner —
-    # the decision layer over q9g's in-gate deletion vectors, new this
-    # session; the Bloom-skipping class q9f evidences keeps its r6-r8
-    # green rows + plan pins, and file-stats pruning stays evidenced
-    # in-gate via q9g/q9j's manifest rows).
-    "q9k_vacuum_plan",
-    # Round-8 rotation (late): q4c -> q4zb (seasonal hour-of-week
-    # baseline + 2σ anomaly counts with the FULL OUTER slot ledger — the
-    # metric-monitoring class, new this session; q4c's cohort window
-    # machinery stays evidenced by q21's running windows + q4za's lag
-    # windows, and q4c keeps its r3-r8 green rows plus the local check).
-    "q4zb_seasonal_baseline",
-    # structured streaming. Round-4 rotation: the append-mode production
-    # twins take the complete-mode slots (same oracles, stronger
-    # semantics — watermark flush + state eviction): q47 -> q4p,
-    # q49 -> q4q. q47/q49 stay locally checked, and
-    # test_batch_equals_streaming_windows still pins q40 == q47.
-    # Late-round-4 rotation: q4t -> q6c (the streaming incremental dedup
-    # IS a stream-static join — new-doc MinHash bands against the static
-    # corpus index — so the q4t class stays evidenced while the
-    # in-flight-crawl dedup shape gains a driver row; q4t stays locally
-    # checked).
-    "q4p_stream_append_windows",
-    # Round-5 rotation: q4u -> q4b (stream-stream LEFT OUTER interval
-    # join — the same class as q4u's inner join with the strictly
-    # subtler semantics on top: min-of-both-sides watermark NULL
-    # emission for unmatched left rows; q4u stays locally checked and
-    # its row set is a subset of q4b's by construction).
-    "q4b_stream_outer_join",
-    "q4q_stream_append_sessions",
-    "q4s_stream_stateful_counts",
-    "q6c_stream_incremental_dedup",
-    "q4x_stream_incremental_rollup",
-    # Round-5 addition: qt4 (composite streaming ingest — quality gate +
-    # in-flight exact/near-dup anti-joins in one micro-batched flow)
-    # takes q86's slot: the audio-window mapInPandas byte-slicing class
-    # stays evidenced in-gate by q87/q8h/q84, and q86 stays locally
-    # oracle-checked.
-    "qt4_stream_ingest",
-    # text analysis. Round-4 rotation: qt0 -> qt1 (the end-to-end prep
-    # composite subsumes the profile; recursive-CTE oracle), q56 -> q5g
-    # (overlapping context-window chunking), q57 -> q5h (winnowing
-    # fingerprints; qt1 already replays the corpus-prep filter chain).
-    # Late-round-4 rotation: q58 -> q5k (BM25 ranked retrieval computes
-    # per-term df over the same posting machinery the vocabulary builder
-    # evidences, plus the ranked-retrieval class on top; q58 stays
-    # registered + locally oracle-checked).
-    "qt1_prep_pipeline",
-    # Round-6 rotation: q55 -> q9c (small-file compaction planner — the
-    # OPTIMIZE-style sequential bin packer, new layout-family surface;
-    # tf-idf's df/posting machinery stays evidenced in-gate by q5k's
-    # BM25 row, which computes the same per-term document frequencies
-    # plus the ranked retrieval on top; q55 stays locally oracle-checked).
-    # Round-8 rotation: q9c -> q9h (incremental view maintenance — the
-    # round-7 O(changes) CDC-delta apply the verdict asked to gate; the
-    # planner class q9c evidences stays in-gate via q9a/q9f/q9g's layout
-    # rows, and q9c keeps its r6+r7 green rows + local oracle check).
-    "q9h_incremental_view_maintenance",
-    # Round-6 rotation (late): q5g -> q5o (DSIR-style target-matched
-    # selection — integer-exact linear importance score, new this round;
-    # the overlapping-window chunking class stays evidenced in-gate by
-    # q5d's sequence packing, the strictly subtler span arithmetic, and
-    # q5g stays locally oracle-checked).
-    "q5o_dsir_select",
-    # Round-5 rotation: q5h -> q5l (CCNet-style perplexity buckets,
-    # late-round-4 quality surface; winnowing's windowed-min fingerprint
-    # machinery stays evidenced in-gate by q69's rolling-hash spans and
-    # q5h stays locally oracle-checked).
-    # Round-7 rotation: q5l -> q5m (temperature-scaled mixture sampling —
-    # never-gated text surface; the quality-bucketing class q5l
-    # evidences stays in-gate via q5c/q5o's quality-score machinery and
-    # q5l keeps its r5+r6 green rows plus the local oracle check).
-    # Round-8 rotation (late): q5m -> q5r (vocabulary drift between
-    # snapshot halves — new monitoring class this session; the mixture-
-    # share class q5m evidences stays covered by q5j's local oracle and
-    # q5m keeps its r7+r8 green rows plus the local check).
-    "q5r_vocab_drift",
-    # Round-8 rotation (late): q5k -> qt5 (corpus-health report — the
-    # qt-series capstone composite, new this session; BM25's ranked-
-    # retrieval class stays evidenced in-gate by q7f's MMR scoring arm
-    # + q79's r7 green row, and q5k keeps its r4-r8 green rows plus
-    # the local oracle check).
-    "qt5_corpus_health",
-    # Round-7 rotation (late): q5c -> q5p (n-gram novelty — new text
-    # surface this round, same gram-explode machinery as contamination
-    # plus the corpus-wide first-seen MIN(doc_id) table; q5c keeps its
-    # r2-r6 green rows + local oracle check, and the broadcast
-    # gram-overlap class stays evidenced in-gate by qt1's composite
-    # contamination stage).
-    "q5p_ngram_novelty",
-    "q5d_sequence_packing",
-    # deduplication. Round-4 rotation: q61 -> q69 (exact-hash dedup is
-    # already evidenced in-gate by qt1's exact-dup stage; substring-level
-    # dup-span coverage is a new operator class) and q66 -> q68 (the
-    # SemDeDup composite computes q66's cosine near-dup pairs AND the
-    # cluster assignment + keep-first representative on top — strictly
-    # stronger semantics, same decimal-exact oracle machinery).
-    # q61/q66 stay registered + locally oracle-checked.
-    # Round-6 rotation: q69 -> q6f (chunk-level C4-style sub-document
-    # dedup — a NEW dedup granularity: global first-instance span
-    # survival + per-doc reassembly, hash-exact through the rebuilt
-    # text digest. q69's rolling-hash dup-span machinery stays locally
-    # oracle-checked; the substring-coverage class it evidenced is
-    # adjacent to q6f's span dedup, which the driver now value-checks).
-    # Round-7 rotation: q6f -> q6d (near-dup-graph triangle count — the
-    # never-gated graph-analytics row over q63's verified edge set; q6f
-    # earned its green row in r6 and stays locally oracle-checked, and
-    # the span-dedup shuffle shape stays pinned in tests).
-    # Round-8 rotation: q6d -> q6g (PageRank over the same q63 edge set —
-    # the round-7 addition the verdict asked to gate; graph analytics
-    # stays covered by the strictly subtler iterative row, q6d keeps its
-    # r7 green row + local oracle check).
-    "q6g_pagerank",
-    "q63_minhash_lsh_pairs",
-    # Round-5 rotation: q64 -> q6a (incremental delta-vs-corpus dedup,
-    # the production crawl shape, O(delta) cost) and q65 -> q6b (the
-    # r5-reworked scaled SemDeDup with the capped-coarse executor-side
-    # hierarchy and its new dynamic-cell oracle — the r4 verdict's top
-    # two asks in one row). SimHash stays locally oracle-checked; the
-    # banded-candidate exact-Jaccard verify class stays evidenced by
-    # q63+q6a's band machinery and q65 stays locally checked.
-    # Round-8 rotation (late): q6a -> q6i (canonical-representative
-    # selection per duplicate group — the keep-best-by-quality curation
-    # policy, new this session; the incremental delta-vs-corpus class
-    # q6a evidences stays in-gate via q6c's streaming incremental dedup,
-    # and q6a keeps its r5-r8 green rows plus the local oracle check).
-    "q6i_canonical_pick",
-    "q6b_semantic_dedup_scaled",
-    # Round-6 rotation: q68 -> q6e (the Bloom-filter frontier pre-screen,
-    # a round-5 addition with no driver row — and the round-6 stride-
-    # guard fix deserves gate evidence). The semantic-dedup class stays
-    # evidenced in-gate by q6b, whose production shape supersedes q68's
-    # frozen-16-cell oracle twin; q68 stays registered + locally
-    # oracle-checked, and keep-decision equality with q6b at shared
-    # scales stays pinned in tests/test_properties.py.
-    # Round-8 rotation: q6e -> q6h (KMV bottom-k cross-source overlap —
-    # the round-7 addition the verdict asked to gate; the probabilistic
-    # pre-screen class q6e evidences stays in-gate via q9f's Bloom
-    # skipping row, and q6e keeps its r6+r7 green rows + local check).
-    "q6h_kmv_source_overlap",
-    "q67_dedup_clusters",
-    # similarity search (ANN variants q71/q73 are rows-only by design —
-    # recall-tested behind the window)
-    # Late-round-4 rotation: q72 -> q79 (q74's Lloyd step already
-    # evidences centroid recompute in-gate; hybrid RRF fusion adds the
-    # BM25 arm, the exact-decimal cosine arm, and the cross-modal
-    # doc_id=vec_id join in one row; q72 stays locally checked).
-    # Round-6 rotation: q70 -> q7c (mutual-kNN, round-5 addition with no
-    # driver row — and round 6 rebased its blocking from label onto the
-    # corpus-scaled semantic cells, which deserves gate evidence). The
-    # brute-force-cosine class stays evidenced in-gate by q79's exact-
-    # decimal cosine arm; q70 stays locally oracle-checked.
-    # Round-8 rotation (all three similarity slots turn over to the
-    # round-7 serving additions the verdict asked to gate; each
-    # rotated-out query earned its green row in r7 and stays locally
-    # oracle-checked):
-    #   q7c -> q7h (label-filtered ANN — the filter-IS-the-join-key
-    #     broadcast plan; the cell-blocked retrieval class stays
-    #     evidenced by q7h's blocked join + q7c's r7 green row);
-    #   q79 -> q7f (MMR diversified re-rank — distributed scoring +
-    #     bounded driver greedy; the ranked-retrieval class stays
-    #     evidenced by q5k's in-gate BM25 row + q79's r7 green row);
-    #   q7e -> q7g (cosine radius search — pure codegen filter, no
-    #     top-k window; integer-exact similarity stays evidenced via
-    #     q7e's r7 green row).
-    "q7h_filtered_knn",
-    "q7f_mmr_rerank",
-    "q7g_radius_search",
-    # multimodal. Late-round-4 rotation: q81 -> q8i (pixel-exact decode
-    # is already evidenced in-gate by q8b/q8d's pixel-level codec rows;
-    # the banded image near-dup adds the image-dedup operator class on
-    # top of q8f's in-gate hash; q81 stays locally checked).
-    # Round-8 rotation (late): q8i -> q7i (recall@k index-quality
-    # evaluation — the serving-eval harness added this round, never
-    # gated, whose fixed NLJ build sides deserve a driver row; the
-    # banded image-dedup class q8i evidences shares q63's in-gate band
-    # machinery, and q8i keeps its r4-r8 green rows plus the local
-    # oracle check).
-    "q80_image_metadata",
-    "q7i_recall_eval",
-    "q8b_png_decode",
-    # Round-5 rotation: q8c -> q83g (per-doc literal-VALUES oracle for
-    # the eval chain M9 + fractional-scale bilinear, with spatial probe
-    # pixels — the r4 verdict's task 5; the bbox-overlay class q8c
-    # evidences is partially covered by q82g's chain and q8c stays
-    # locally oracle-checked).
-    "q83g_eval_golden",
-    "q84_etl_sharded_write",
-    # q8h (native TFRecord container round-trip, round 3) takes q85's
-    # slot: the frame-sample's mapInPandas byte-slicing plumbing is
-    # already evidenced in-gate by q86's audio windows, while q8h is the
-    # only row exercising the real S6/S7 container format (the one item
-    # the r2 verdict listed as missing). q85 stays registered and locally
-    # oracle-checked behind the window.
-    "q8h_tfrecord_roundtrip",
-    # (q86 audio-RMS rotated out round 5 for qt4 — see the streaming
-    # section; its mapInPandas byte-slicing class stays evidenced by
-    # q87/q8h/q84 and q86 stays locally oracle-checked.)
-    "q87_binaryfile_scan",
-    # round 4: q82g (golden-hash value check of the whole seeded augment
-    # chain M2-M9 — crop, dual-method resize, flip, jitter, normalize)
-    # takes q89's slot: the nearest-resize kernel is one branch of the
-    # chain q82g pins, and q89 stays locally oracle-checked.
-    "q82g_augment_golden",
-    # Round-6 rotation (late): q8e -> q8m (REAL-FFT audio spectrogram with
-    # the analytic + Parseval integer-exact oracle, new this round; the
-    # magic-byte format-dispatch class stays evidenced in-gate by q87's
-    # binaryFile scan, which decodes through the same sniffed dispatch,
-    # and q8e stays locally oracle-checked).
-    # Round-7 rotation: q8m -> q8k (video scene-change detection over
-    # frame-delta energy — the never-gated video-keyframe row; q8m
-    # earned its green row in r6 and stays locally oracle-checked, and
-    # the whole-batch-numpy mapInPandas class it evidences stays
-    # in-gate via q80/q82g/q83g/q8d2).
-    "q8k_scene_change",
-    # Round-5 rotation: q8d -> q8d2. q8d's flat-block corpus is DC-only
-    # (analytic oracle, but the huffman AC paths and any subsampling
-    # never execute); q8d2 decodes gradient-RGB content encoded 4:2:0 at
-    # quality 75 — AC runs, chroma subsample/upsample, MCU padding — with
-    # frozen per-doc literals + probe pixels as the oracle and the
-    # independent T.81 reference decoder as the codec-level check
-    # (tests/jpeg_independent.py). q8d stays locally oracle-checked.
-    "q8d2_jpeg420_golden",
-]
-
+# Only the current window is kept here; past rounds' windows (GATE_ORDER_R8
+# through GATE_ORDER_R11) live in this file's git history and in the
+# CORRECTNESS_r*.json artifacts.
 # ---------------------------------------------------------------------------
 # Permanent anchor slots (r9 advice): high-risk composites that exercise
 # many operator layers in one query, re-gated EVERY round so an
@@ -459,111 +75,6 @@ GATE_ANCHORS = [
     "qt4_stream_ingest",  # streaming quality gate + dual anti-join dedup
     "qt5_corpus_health",  # cross-family corpus monitor composite
 ]
-
-# Round-10 window: the 5 anchors, then the 25 remaining never-gated
-# queries (all 12 r9 additions + the 13 deferred from r9), then the 20
-# stalest r1-era queries — the block `tools/gate_rotation.py propose`
-# emits verbatim.
-GATE_ORDER_R10 = GATE_ANCHORS + [
-    "q2a_window_digest_running",  # never
-    "q2b_window_digest_lag",  # never
-    "q2c_window_digest_ranks",  # never
-    "q3c_stratified_sample",  # never
-    "q44_late_data_filter",  # never
-    "q4e_ewma",  # never
-    "q4k_window_topk",  # never
-    "q4ze_retention_triangle",  # never
-    "q4zf_rfm_segments",  # never
-    "q4zg_attribution",  # never
-    "q4zh_temporal_leakage",  # never
-    "q53_token_count_bpe",  # never
-    "q5f_top_ngrams",  # never
-    "q5i_oov_rate",  # never
-    "q5q_length_bands",  # never
-    "q76_pq_ann",  # never
-    "q7l_dim_variance",  # never
-    "q8f_image_ahash",  # never
-    "q8g_audio_zcr",  # never
-    "q8o_transcode_audit",  # never
-    "q48_stream_dedup_keys",  # never
-    "q1o_csv_roundtrip",  # never
-    "q1p_jsonl_roundtrip",  # never
-    "q9l_partition_evolution",  # never
-    "q9m_manifest_diff",  # never
-    "q02_filter_project",  # stale 9
-    "q03_shipping_priority",  # stale 9
-    "q04_order_priority",  # stale 9
-    "q06_forecast_revenue",  # stale 9
-    "q07_semi_join",  # stale 9
-    "q08_anti_join",  # stale 9
-    "q09_topk_orders",  # stale 9
-    "q10_distinct_agg",  # stale 9
-    "q11_union_all",  # stale 9
-    "q12_intersect",  # stale 9
-    "q13_except",  # stale 9
-    "q14_rollup",  # stale 9
-    "q15_cube",  # stale 9
-    "q16_promo_share",  # stale 9
-    "q18_grouping_sets",  # stale 9
-    "q19_set_ops_all",  # stale 9
-    "q1a_customer_distribution",  # stale 9
-    "q1b_small_quantity_revenue",  # stale 9
-    "q1c_large_orders",  # stale 9
-    "q1d_date_functions",  # stale 9
-]
-
-# Round-11 window: the 5 anchors, then the 12 never-gated queries (the
-# 11 round-10 additions + q77 newly promoted from rows-only to
-# oracle-checked), then the stalest of the r9-era staleness backlog —
-# the block `tools/gate_rotation.py propose` emits verbatim.
-GATE_ORDER_R11 = GATE_ANCHORS + [
-    "q1aa_expectation_suite",  # never
-    "q2d_moving_median",  # never
-    "q3f_importance_sample",  # never
-    "q4zi_conversion_funnel",  # never
-    "q4zj_entry_paths",  # never
-    "q4zl_ab_uplift",  # never
-    "q5s_zipf_profile",  # never
-    "q77_knn_ivfpq",  # never
-    "q6j_dup_size_histogram",  # never
-    "q4zk_stream_funnel",  # never
-    "q1ab_xml_roundtrip",  # never
-    "q9n_occ_conflicts",  # never
-    "q1e_array_functions",  # stale 10
-    "q1f_pivot",  # stale 10
-    "q1g_string_functions",  # stale 10
-    "q1h_unpivot",  # stale 10
-    "q1j_stats_kernel",  # stale 10
-    "q1k_full_outer",  # stale 10
-    "q1l_null_kernel",  # stale 10
-    "q1m_regex_kernel",  # stale 10
-    "q20_window_rank",  # stale 10
-    "q23_percentiles",  # stale 10
-    "q24_revenue_share",  # stale 10
-    "q25_lag_lead",  # stale 10
-    "q26_ntile_frames",  # stale 10
-    "q27_group_quantiles",  # stale 10
-    "q30_label_dictionary",  # stale 10
-    "q31_seeded_shuffle_split",  # stale 10
-    "q33_epoch_repeat",  # stale 10
-    "q34_one_hot",  # stale 10
-    "q35_batch_ragged_tail",  # stale 10
-    "q36_shard_assignment",  # stale 10
-    "q37_argmax",  # stale 10
-    "q38_accuracy_metric",  # stale 10
-    "q39_step_math",  # stale 10
-    "q85_frame_sample",  # stale 9
-    "q17_approx_distinct",  # stale 8
-    "q40_tumbling_window",  # stale 8
-    "q47_stream_tumbling_window",  # stale 8
-    "q49_stream_session_window",  # stale 8
-    "q4a_asof_join",  # stale 8
-    "q4f_funnel",  # stale 8
-    "q4t_stream_static_join",  # stale 8
-    "q56_levenshtein_pairs",  # stale 8
-    "q57_corpus_prep",  # stale 8
-]
-
 
 # Round-12 window: the 5 anchors, then the 18 never-gated round-11
 # operators (headed by the two r11-era never-gated ops, per the r11

@@ -10,11 +10,14 @@ is only trusted when at least one cycle's probe sat in the quiet band
 Usage:
   python tools/ab_time.py <experiment_module> [cycles]
 
-<experiment_module> is a python path (e.g. tools.exp_q7m) exposing
+<experiment_module> is an importable python path exposing
   VARIANTS: dict[str, Callable[[SparkSession, str], DataFrame]]
+for example a throwaway module `exp_q65.py` on PYTHONPATH with
+  VARIANTS = {"shipped": q65_ngram_jaccard, "candidate": q65_candidate}
 Each callable builds the DataFrame for one variant; equality of the
 variants' RESULTS is the caller's job (oracle parity / collect-compare
-— this tool times, it does not verify).
+— this tool times, it does not verify). The variants and outcomes of
+past A/B rounds are written up in OPTIMIZATION_r12.md.
 """
 
 from __future__ import annotations

@@ -2,8 +2,8 @@
 
 Runs the bench headline queries at several scales with a FIXED
 methodology — for each scale, 3 passes per query; pass 1 is the COLD
-time (includes memoized-artifact materialization like the dedup
-signature table), min(pass 2, pass 3) is the WARM steady state. The
+time (JIT warm-up, first footer reads), min(pass 2, pass 3) is the
+WARM steady state; every pass rebuilds its shared tables. The
 per-scale (cold, warm) pairs make cross-scale exponents
 apples-to-apples; bench.py's min-of-up-to-3-within-budget would compare
 a warm small scale against a cold large one.
