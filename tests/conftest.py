@@ -17,7 +17,6 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     from tf_datapipeline_spark.session import get_spark
 

@@ -263,6 +263,64 @@ def test_decode_image_routes_jpeg_to_builtin_codec():
     assert (out == 77).all() and out.shape == (16, 16, 3)
 
 
+def _png_with_ihdr(depth: int, color: int, interlace: int) -> bytes:
+    import struct
+    import zlib
+
+    ihdr = struct.pack(">IIBBBBB", 6, 6, depth, color, 0, 0, interlace)
+    chunk = struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr
+    chunk += struct.pack(">I", zlib.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF)
+    return b"\x89PNG\r\n\x1a\n" + chunk
+
+
+def _jpeg_with_sof(marker: int, ncomp: int) -> bytes:
+    """A 6x6 baseline JFIF with its SOF0 marker byte and component count
+    rewritten — header-identical otherwise."""
+    from tf_datapipeline_spark.functions.jpegcodec import encode_jpeg
+
+    data = bytearray(encode_jpeg(_img(6, 6, seed=99)))
+    sof0_at = bytes(data).find(b"\xff\xc0")
+    assert sof0_at > 0
+    data[sof0_at + 1] = marker
+    data[sof0_at + 9] = ncomp  # ncomp byte inside the SOF segment
+    return bytes(data)
+
+
+@pytest.mark.parametrize(
+    "fmt, make_payload",
+    [
+        ("png", lambda: _png_with_ihdr(8, 0, 0)),
+        ("png", lambda: _png_with_ihdr(8, 3, 0)),
+        ("png", lambda: _png_with_ihdr(16, 2, 0)),
+        ("png", lambda: _png_with_ihdr(8, 2, 1)),
+        ("ppm", lambda: b"P5\n6 6\n255\n" + bytes(36)),
+        ("ppm", lambda: b"P6\n6 6\n65535\n" + bytes(6 * 6 * 6)),
+        ("jpeg", lambda: _jpeg_with_sof(0xC2, 3)),
+        ("jpeg", lambda: _jpeg_with_sof(0xC0, 4)),
+    ],
+    ids=[
+        "png-grayscale", "png-palette", "png-16bit", "png-interlaced",
+        "ppm-p5", "ppm-16bit", "jpeg-progressive", "jpeg-4component",
+    ],
+)
+def test_decode_image_rejects_out_of_set_variants(fmt, make_payload):
+    """The accept set is the reference decoders' and nothing wider: every
+    executor raises ValueError on exactly these variants."""
+    with pytest.raises(ValueError):
+        decode_image(make_payload(), fmt)
+
+
+def test_decode_image_jpg_alias_and_unknown_format():
+    from tf_datapipeline_spark.functions.jpegcodec import encode_jpeg
+
+    payload = encode_jpeg(_img(16, 16, seed=3))
+    assert np.array_equal(
+        decode_image(payload, "jpg"), decode_image(payload, "jpeg")
+    )
+    with pytest.raises(ValueError, match="unknown image format"):
+        decode_image(b"x", "webp")
+
+
 @settings(max_examples=25, deadline=None)
 @given(
     h=st.integers(1, 40),

@@ -15,6 +15,10 @@ one outlier stretches the span). These tests pin:
   3. an already-bounded bucket is left untouched (pre-r10 plans intact),
   4. offset_running_sum agrees with the unpartitioned running sum.
 
+`_coarsen_bucket` is the one coarsening step offset_row_number,
+offset_running_sum and grouped_offset_row_number all call, so 1 and 3
+hold for each of them.
+
 r11: the sketch's bucket count ADAPTS to the measured row count
 (k = min(ceiling, ceil(n / _TARGET_BUCKET_ROWS))) — a fixed-4096
 sketch paid approxQuantile's eps=1/4096, 4095-probe cost ceiling on
@@ -55,7 +59,7 @@ def test_coarsen_bounds_bucket_count(spark, monkeypatch):
     # 64Ki-row target a 20k input would collapse to one bucket
     monkeypatch.setattr(_pipeline, "_TARGET_BUCKET_ROWS", 64)
     df = _wide_df(spark).withColumn("_b", F.col("v"))
-    out = _coarsen_bucket(df, _MAX_OFFSET_BUCKETS)
+    out, _ = _coarsen_bucket(df, df)
     counts = {
         r["_b"]: r["n"]
         for r in out.groupBy("_b").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -90,7 +94,7 @@ def test_coarsen_small_input_single_bucket(spark):
     # at all — every row lands in constant bucket 0 (one ≤64Ki-row sort
     # task), and the plan carries no Python eval node.
     df = _wide_df(spark).withColumn("_b", F.col("v"))
-    out = _coarsen_bucket(df, _MAX_OFFSET_BUCKETS)
+    out, _ = _coarsen_bucket(df, df)
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
@@ -101,8 +105,8 @@ def test_coarsen_small_input_single_bucket(spark):
 
 def test_coarsen_leaves_bounded_buckets_alone(spark):
     df = spark.range(1000).withColumn("_b", F.col("id") % 17)
-    out = _coarsen_bucket(df, _MAX_OFFSET_BUCKETS)
-    assert out is df  # byte-identical plan for every pre-r10 caller
+    slim, b = _coarsen_bucket(df, df)
+    assert slim is df and b is df  # byte-identical plan for every pre-r10 caller
 
 
 def test_offset_row_number_matches_global_sort(spark):

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = [
     "region",
@@ -55,11 +56,13 @@ _TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 def invalidate_caches() -> None:
     """Drop the catalog's metadata memos — table handles, split counts
     and view registrations — the invalidation hook for any caller that
-    mutates the catalog state (rewrites a table dir in place, or
-    drops/replaces a temp view). The next query re-reads the footers
-    and file listings. No operator keeps data across invocations (every
-    shared table is rebuilt per call by `materialize`), so after this
-    call every query sees the rewritten tables."""
+    mutates the catalog state: rewrites a table dir in place, or
+    replaces a catalog temp view with a same-name view over other data
+    (`register_views` only re-registers views that were dropped). The
+    next query re-reads the footers and file listings. No operator keeps
+    data across invocations (every shared table is rebuilt per call by
+    `materialize`), so after this call every query sees the rewritten
+    tables."""
     _TABLE_MEMO.clear()
     _VIEWS_AT.clear()
     _SPLITS_MEMO.clear()
@@ -153,14 +156,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _TABLE_MEMO[key]
 
 
+def _read_raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events parquet as stored. nanosAsLong is set at session build
+    (session.py); this defensive idempotent set covers sessions built
+    outside get_spark. It only affects TIMESTAMP(NANOS) parquet fields,
+    which it reads as raw-nanos bigint instead of erroring."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(table_path(sf_dir, "events"))
+
+
+def events_raw_ts_type(spark: SparkSession, sf_dir: str) -> str:
+    """Storage type of events.ts as the parquet reader reports it (a
+    footer read, no data scan): "bigint" for TIMESTAMP(NANOS),
+    "timestamp_ntz" for naive µs, "timestamp" for tz-aware. The stream
+    reader declares its schema from it."""
+    return dict(_read_raw_events(spark, sf_dir).dtypes)["ts"]
+
+
+def nanos_to_timestamp(col: str) -> Column:
+    """Raw-nanos bigint -> TIMESTAMP, truncated to micros — the same
+    ns→µs truncation DuckDB applies."""
+    return F.timestamp_micros(F.expr(f"{col} DIV 1000"))
+
+
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalize events.ts to TIMESTAMP_NTZ — in ONE place, for every
     storage variant the driver testdata has used:
 
     - parquet TIMESTAMP(NANOS): Spark's vectorized reader rejects it;
       read raw nanos as long (legacy conf, which only affects NANOS
-      fields) and truncate to micros — the same ns→µs truncation DuckDB
-      applies.
+      fields) and truncate to micros (`nanos_to_timestamp`).
     - parquet TIMESTAMP(µs) without timezone: Spark reads TIMESTAMP_NTZ
       natively; pass through.
     - tz-aware TIMESTAMP: cast to NTZ (the session timezone is pinned to
@@ -169,18 +194,10 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP_NTZ is the canonical type because it is exactly what DuckDB
     reads for naive parquet timestamps — oracle twins then agree on both
     values AND type (the driver's value hash is type-sensitive)."""
-    from pyspark.sql import functions as F
-
-    # nanosAsLong is set at session build (session.py); this defensive
-    # idempotent set covers sessions built outside get_spark. It only
-    # affects TIMESTAMP(NANOS) parquet fields, nothing else.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = _read_raw_events(spark, sf_dir)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":  # TIMESTAMP(NANOS) footer read as raw nanos
-        df = df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz")
-        )
+        df = df.withColumn("ts", nanos_to_timestamp("ts").cast("timestamp_ntz"))
     elif ts_type == "timestamp":  # tz-aware storage; UTC session => no-op cast
         df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
@@ -219,11 +236,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     app = spark.sparkContext.applicationId
     target = os.path.abspath(sf_dir)
     # r12 (r11 advice): the skip is only valid while ALL views are still
-    # registered — a test (or any caller) that drops/replaces a view
-    # in-session would otherwise leave later same-dir callers with a
-    # missing or foreign view. tableExists is a local catalog lookup
-    # (~ms for all 10), not a footer read, so the guard keeps the memo's
-    # ~1.2s saving.
+    # registered — a caller that drops a view in-session would otherwise
+    # leave later same-dir callers with a missing view. The guard heals
+    # dropped views only: tableExists is True for a same-name view bound
+    # to other data, so a caller that replaces a view must call
+    # invalidate_caches(). tableExists is a local catalog lookup (~ms for
+    # all 10), not a footer read, so the guard keeps the memo's ~1.2s
+    # saving.
     if _VIEWS_AT.get(app) == target and all(
         spark.catalog.tableExists(name) for name in TABLES
     ):

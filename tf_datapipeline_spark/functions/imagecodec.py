@@ -1,19 +1,21 @@
 """Image/media codecs for the binary-column pipeline.
 
 The reference decodes JPEG/PNG via TF graph ops (reference:
-make_tf_record.py:18-19, data_queue.py:29, tutorial nb cell 6). This
-container ships no image libraries, so the engine carries three REAL,
-fully-tested codecs:
+make_tf_record.py:18-19, data_queue.py:29, tutorial nb cell 6). The
+engine carries three real, fully-tested codecs in pure stdlib/numpy:
 
 - PPM (P6): trivial uncompressed raster, pure numpy.
 - PNG (8-bit truecolor): pure stdlib — zlib inflate/deflate plus all five
   scanline filters (None/Sub/Up/Average/Paeth) with per-chunk CRC checks.
 - Baseline JPEG (functions/jpegcodec.py): sequential DCT with the Annex-K
-  huffman/quant tables, grayscale and 4:4:4 color; Pillow, when present,
-  is only a fallback for non-baseline variants.
+  huffman/quant tables, grayscale and 4:4:4 / 4:2:0 color.
 
-The Spark-side plumbing (binary column in, decode inside an Arrow-batched
-pandas UDF, ndarray out) is identical for every format.
+`decode_image` dispatches on the format name to exactly these decoders,
+so every executor accepts the same payloads and raises ValueError on the
+same variants (grayscale/palette/16-bit/interlaced PNG, P5 or 16-bit
+PPM, progressive or 4-component JPEG). The Spark-side plumbing (binary
+column in, decode inside an Arrow-batched pandas UDF, ndarray out) is
+identical for every format.
 """
 
 from __future__ import annotations
@@ -23,17 +25,11 @@ import zlib
 
 import numpy as np
 
-try:  # pragma: no cover - not installed in this container
-    from PIL import Image as _PILImage  # type: ignore
-
-    _HAVE_PIL = True
-except Exception:  # pragma: no cover
-    _PILImage = None
-    _HAVE_PIL = False
+from tf_datapipeline_spark.functions.jpegcodec import decode_jpeg
 
 
 # --------------------------------------------------------------------------
-# PPM (P6): the engine's native uncompressed raster codec.
+# PPM (P6): the engine's uncompressed raster codec.
 # Layout: b"P6\n<width> <height>\n255\n" + height rows of width*3 bytes.
 # --------------------------------------------------------------------------
 def encode_ppm(img: np.ndarray) -> bytes:
@@ -191,10 +187,9 @@ def decode_png(data: bytes) -> np.ndarray:
     # vectorized across ALL such rows at once — per-lane cumsum for
     # filter 1), filter 2 rows are one whole-row numpy add, and only
     # the genuinely sequential filter 3/4 rows keep the small-int
-    # Python scan (left-neighbor dependency; the codec seam's native
-    # arm is the production path). The python-int mirror of a row is
-    # built ONLY when the next row is filter 3/4 — the old loop paid a
-    # tolist() per row regardless of need.
+    # Python scan (left-neighbor dependency). The python-int mirror of a
+    # row is built ONLY when the next row is filter 3/4 — the old loop
+    # paid a tolist() per row regardless of need.
     rows = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + stride)
     ftypes = rows[:, 0]
     if ftypes.max(initial=0) > 4:
@@ -222,10 +217,7 @@ def decode_png(data: bytes) -> np.ndarray:
             # left-and-up dependent: sequential per byte. Pure small-int
             # Python (the r8 profile showed per-byte numpy-scalar _paeth
             # calls dominating the media path); the Paeth distances
-            # reduce algebraically to |b-c|, |a-c|, |a+b-2c|. A cluster
-            # codec would hand this to a native library — this loop is
-            # the documented pluggable-codec seam's verification
-            # reference.
+            # reduce algebraically to |b-c|, |a-c|, |a+b-2c|.
             lb = raw[r * (1 + stride) + 1 : r * (1 + stride) + 1 + stride]
             # prev_l is valid here: need_list[r-1] is True exactly when
             # this row is f3/f4, so the previous iteration refreshed it
@@ -266,37 +258,23 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 # --------------------------------------------------------------------------
-# Format dispatch. All three codecs are real and pure-stdlib/numpy; Pillow,
-# when present on a cluster, serves only as a fallback for JPEG variants
-# the baseline decoder rejects (progressive, subsampled).
+# Format dispatch: one reference decoder per format.
 # --------------------------------------------------------------------------
+_DECODERS = {"ppm": decode_ppm, "png": decode_png, "jpeg": decode_jpeg}
+
+
 def decode_image(data: bytes, image_format: str) -> np.ndarray:
     """Decode an encoded image payload to (H, W, 3) uint8.
 
     Reference analog: tf.image.decode_jpeg / decode_png
-    (make_tf_record.py:18-19, tutorial nb cell 6). Dispatch goes through
-    the pluggable decoder seam (functions/codecseam.py, r10): the
-    pure-stdlib codecs in this module are the default/verification arm;
-    a Pillow-backed "native" arm serves as the production path on real
-    clusters (SPARK_GRAFT_CODEC=native), equivalence-gated by
-    tests/test_codec_seam.py. Non-baseline JPEG on the stdlib arm still
-    falls back to Pillow when installed and raises a clear error
-    otherwise.
-    """
-    from tf_datapipeline_spark.functions import codecseam
-
+    (make_tf_record.py:18-19, tutorial nb cell 6). "jpg" is an alias of
+    "jpeg"; any other format name raises ValueError, as does any payload
+    outside the format's accepted variants."""
     fmt = image_format.lower()
-    arm, dec = codecseam.decoder_for(fmt)
-    try:
-        return dec(data)
-    except ValueError:
-        if arm == "stdlib" and fmt in ("jpg", "jpeg") and _HAVE_PIL:
-            # pragma: no cover - Pillow not installed in this container
-            import io
-
-            arr = np.asarray(_PILImage.open(io.BytesIO(data)).convert("RGB"))
-            return arr.astype(np.uint8)
-        raise
+    dec = _DECODERS.get("jpeg" if fmt == "jpg" else fmt)
+    if dec is None:
+        raise ValueError(f"unknown image format {fmt!r}")
+    return dec(data)
 
 
 def image_dims(data: bytes, image_format: str) -> tuple[int, int]:

@@ -1,12 +1,12 @@
 """Pure-stdlib baseline JPEG codec (ITU-T T.81 / ISO 10918-1).
 
 The reference decodes JPEG via a TF graph op (reference:
-make_tf_record.py:18-19 ``tf.image.decode_jpeg``; data_queue.py:29). This
-container ships no image libraries, so the engine carries a REAL baseline
-codec: sequential DCT, huffman entropy coding with the Annex-K standard
-tables, 8-bit precision, grayscale (1 component) and 4:4:4 YCbCr color
-(3 components, no chroma subsampling). Progressive (SOF2) and subsampled
-streams raise a clear error.
+make_tf_record.py:18-19 ``tf.image.decode_jpeg``; data_queue.py:29). The
+engine carries a REAL baseline codec: sequential DCT, huffman entropy
+coding with the Annex-K standard tables, 8-bit precision, grayscale (1
+component) and YCbCr color (3 components, sampling factors 1-2 per
+axis). Progressive (SOF2) and other non-baseline streams raise
+ValueError.
 
 Everything here is public-spec knowledge: marker structure and huffman
 table layout from T.81 Annex B/C/F, the standard quantization and huffman
@@ -483,7 +483,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     """Decode a baseline sequential JFIF stream to (H, W, 3) uint8.
 
     Grayscale streams are replicated across 3 channels (matching the
-    ``convert("RGB")`` contract of decode_image). Supports 8-bit baseline
+    (H, W, 3) contract of decode_image). Supports 8-bit baseline
     (SOF0), 1 or 3 components, sampling factors 1-2 per axis (so 4:4:4,
     4:2:0, 4:2:2 and 4:4:0 all decode; subsampled planes upsample by
     sample replication); progressive streams raise ValueError. Reference

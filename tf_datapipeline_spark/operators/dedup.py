@@ -364,7 +364,7 @@ def _jaccard_sql(dialect: str) -> str:
 
 
 def _jaccard_spark_body() -> str:
-    """Spark-side verify: per-doc sorted shingle ARRAYS once (one
+    """Spark-side verify: per-doc shingle ARRAYS once (one
     group-by), then each candidate pair is two array lookups and a
     codegen `array_intersect` — the 70M-row shingle⋈shingle exchange of
     the portable form becomes a 2-join of 248k candidate rows against
@@ -1991,12 +1991,13 @@ def _lsh_calibration_body(dialect: str) -> str:
         else _cal_pairs_sql(dialect)
     )
     if dialect == "spark":
-        # r12 (the q65 set idiom, guide §2.4): per-doc sorted shingle
-        # SETS are already materialized (cal_sets); |A∩B| is then one
-        # codegen array_intersect per pair instead of the shingle
-        # self-join + two COUNT(*) arms (n_common and sz are the same
-        # integers either way: sets are distinct, |A∩B| is |A∩B|). The
-        # oracle keeps the portable shingle-join form below.
+        # r12 (the q65 set idiom, guide §2.4): per-doc shingle SETS
+        # (unordered collect_set arrays) are already materialized
+        # (cal_sets); |A∩B| is then one codegen array_intersect per pair
+        # instead of the shingle self-join + two COUNT(*) arms (n_common
+        # and sz are the same integers either way: sets are distinct,
+        # |A∩B| is |A∩B|). The oracle keeps the portable shingle-join
+        # form below.
         scored = f"""scored AS (
       SELECT CAST(ic.n_common AS DOUBLE)
                / (ic.sz_a + ic.sz_b - ic.n_common) AS jaccard,

@@ -31,7 +31,7 @@ from __future__ import annotations
 import math
 import os
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -72,6 +72,34 @@ def _doc_id_of(path: str) -> int:
     if m is None:
         raise ValueError(f"path without doc id: {path!r}")
     return int(m.group(1))
+
+
+def map_decoded(
+    corpus: DataFrame,
+    rows_of: Callable[[int, np.ndarray], list[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The one per-image decode loop: project (path, image_format,
+    content), decode each payload once, and emit the rows
+    `rows_of(doc_id, decoded array)` returns — one or several per image —
+    under `schema`, a DDL string whose field names are the pandas column
+    names. The plan's MapInPandas node carries `rows_of`'s name."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for path, fmt, content in zip(
+                pdf["path"], pdf["image_format"], pdf["content"]
+            ):
+                arr = decode_image(bytes(content), fmt)
+                rows.extend(rows_of(_doc_id_of(path), arr))
+            yield pd.DataFrame(rows, columns=columns)
+
+    decode_rows.__name__ = rows_of.__name__
+    return corpus.select("path", "image_format", "content").mapInPandas(
+        decode_rows, schema=schema
+    )
 
 
 # --------------------------------------------------------------------------
@@ -157,26 +185,43 @@ def q80_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q81_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir).select("path", "image_format", "content")
+    def stats(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        arr = arr.astype(np.int64)
+        s = int(arr.sum())
+        n = int(arr.size)
+        return [(doc_id, int(arr.min()), int(arr.max()), s, n, float(s) / n)]
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(pdf["path"], pdf["image_format"], pdf["content"]):
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                s = int(arr.sum())
-                n = int(arr.size)
-                rows.append(
-                    (_doc_id_of(path), int(arr.min()), int(arr.max()), s, n, float(s) / n)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "px_min", "px_max", "px_sum", "n_px", "px_mean"]
-            )
-
-    return corpus.mapInPandas(
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir),
         stats,
-        schema="doc_id bigint, px_min int, px_max int, px_sum bigint, "
+        "doc_id bigint, px_min int, px_max int, px_sum bigint, "
         "n_px bigint, px_mean double",
+    )
+
+
+def _decoded_dims_stats(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
+    """Per-image decoded dims + pixel stats over the `fmt`-encoded
+    corpus — q8b (PNG) and q8d (JPEG)."""
+
+    def stats(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        arr = arr.astype(np.int64)
+        return [
+            (
+                doc_id,
+                arr.shape[0],
+                arr.shape[1],
+                int(arr.min()),
+                int(arr.max()),
+                int(arr.sum()),
+                int(arr.size),
+            )
+        ]
+
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir, fmt=fmt),
+        stats,
+        "doc_id bigint, height int, width int, px_min int, "
+        "px_max int, px_sum bigint, n_px bigint",
     )
 
 
@@ -209,46 +254,7 @@ def q81_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q8b_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir, fmt="png").select(
-        "path", "image_format", "content"
-    )
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                rows.append(
-                    (
-                        _doc_id_of(path),
-                        arr.shape[0],
-                        arr.shape[1],
-                        int(arr.min()),
-                        int(arr.max()),
-                        int(arr.sum()),
-                        int(arr.size),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "height",
-                    "width",
-                    "px_min",
-                    "px_max",
-                    "px_sum",
-                    "n_px",
-                ],
-            )
-
-    return corpus.mapInPandas(
-        stats,
-        schema="doc_id bigint, height int, width int, px_min int, "
-        "px_max int, px_sum bigint, n_px bigint",
-    )
+    return _decoded_dims_stats(spark, sf_dir, "png")
 
 
 # --------------------------------------------------------------------------
@@ -295,37 +301,26 @@ def q8b_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q8c_bbox_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.functions.imageops import draw_bbox
 
-    corpus = synthetic_corpus(spark, sf_dir).select("path", "image_format", "content")
-
-    def overlay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                arr = decode_image(bytes(content), fmt)
-                h, w = arr.shape[:2]
-                y0, x0, y1, x1 = h // 4, w // 4, (3 * h) // 4, (3 * w) // 4
-                drawn = draw_bbox(arr, y0, x0, y1, x1).astype(np.int64)
-                border = 2 * (x1 - x0 + 1) + 2 * (y1 - y0 + 1) - 4
-                rows.append(
-                    (
-                        _doc_id_of(path),
-                        int(drawn.min()),
-                        int(drawn.max()),
-                        int(drawn.sum()),
-                        border,
-                        int(drawn.size),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "px_min", "px_max", "px_sum", "border_px", "n_px"],
+    def overlay(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        h, w = arr.shape[:2]
+        y0, x0, y1, x1 = h // 4, w // 4, (3 * h) // 4, (3 * w) // 4
+        drawn = draw_bbox(arr, y0, x0, y1, x1).astype(np.int64)
+        border = 2 * (x1 - x0 + 1) + 2 * (y1 - y0 + 1) - 4
+        return [
+            (
+                doc_id,
+                int(drawn.min()),
+                int(drawn.max()),
+                int(drawn.sum()),
+                border,
+                int(drawn.size),
             )
+        ]
 
-    return corpus.mapInPandas(
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir),
         overlay,
-        schema="doc_id bigint, px_min int, px_max int, px_sum bigint, "
+        "doc_id bigint, px_min int, px_max int, px_sum bigint, "
         "border_px bigint, n_px bigint",
     )
 
@@ -362,46 +357,7 @@ def q8c_bbox_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q8d_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir, fmt="jpeg").select(
-        "path", "image_format", "content"
-    )
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                rows.append(
-                    (
-                        _doc_id_of(path),
-                        arr.shape[0],
-                        arr.shape[1],
-                        int(arr.min()),
-                        int(arr.max()),
-                        int(arr.sum()),
-                        int(arr.size),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "height",
-                    "width",
-                    "px_min",
-                    "px_max",
-                    "px_sum",
-                    "n_px",
-                ],
-            )
-
-    return corpus.mapInPandas(
-        stats,
-        schema="doc_id bigint, height int, width int, px_min int, "
-        "px_max int, px_sum bigint, n_px bigint",
-    )
+    return _decoded_dims_stats(spark, sf_dir, "jpeg")
 
 
 # --------------------------------------------------------------------------
@@ -646,39 +602,31 @@ def _eval_stats(corpus: DataFrame) -> DataFrame:
     """Deterministic eval preprocess (M9) -> per-doc stats rows. Shared
     by q83 (full corpus) and q82g (golden-hash slice)."""
 
-    def ev(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(pdf["path"], pdf["image_format"], pdf["content"]):
-                arr = decode_image(bytes(content), fmt)
-                out = preprocess_for_eval(arr, _AUG_H, _AUG_W)
-                rows.append(
-                    (
-                        _doc_id_of(path),
-                        out.shape[0],
-                        out.shape[1],
-                        out.shape[2],
-                        float(out.min()),
-                        float(out.max()),
-                        float(out.mean()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "out_h", "out_w", "channels", "px_min", "px_max", "px_mean"],
+    def ev(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        out = preprocess_for_eval(arr, _AUG_H, _AUG_W)
+        return [
+            (
+                doc_id,
+                out.shape[0],
+                out.shape[1],
+                out.shape[2],
+                float(out.min()),
+                float(out.max()),
+                float(out.mean()),
             )
+        ]
 
-    return corpus.mapInPandas(
+    return map_decoded(
+        corpus,
         ev,
-        schema="doc_id bigint, out_h int, out_w int, channels int, "
+        "doc_id bigint, out_h int, out_w int, channels int, "
         "px_min double, px_max double, px_mean double",
     )
 
 
 @query("q83_augment_eval")
 def q83_augment_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir).select("path", "image_format", "content")
-    return _eval_stats(corpus)
+    return _eval_stats(synthetic_corpus(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -717,9 +665,7 @@ def q82g_augment_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_corpus = synthetic_corpus(spark, sf_dir, docs_filter=flt).select(
         "path", "class_name", "image_format", "content"
     )
-    eval_corpus = synthetic_corpus(spark, sf_dir, docs_filter=flt).select(
-        "path", "image_format", "content"
-    )
+    eval_corpus = synthetic_corpus(spark, sf_dir, docs_filter=flt)
     # class_name/lang is sf-dependent — exclude it from the canonical
     # string; everything else is a pure function of (doc_id, seed)
     train = _train_augment_stats(train_corpus).select(
@@ -948,45 +894,29 @@ def _q83g_sql() -> str:
     oracle=_q83g_sql() if _EVAL_GOLDEN_ROWS else None,
 )
 def q83g_eval_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
-    flt = F.col("doc_id") < _GOLDEN_DOCS
-    corpus = synthetic_corpus(spark, sf_dir, docs_filter=flt).select(
-        "path", "image_format", "content"
-    )
-
-    def ev(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                doc_id = _doc_id_of(path)
-                arr = decode_image(bytes(content), fmt)
-                for out_h, out_w in _EVAL_SIZES:
-                    out = preprocess_for_eval(arr, out_h, out_w)
-                    rows.append(
-                        (
-                            doc_id,
-                            out_h,
-                            out_w,
-                            out.shape[2],
-                            float(out.min()),
-                            float(out.max()),
-                            float(out.mean()),
-                            float(out[out_h // 3, out_w // 3, 0]),
-                            float(out[out_h // 2, out_w // 2, -1]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "out_h", "out_w", "channels",
-                    "px_min", "px_max", "px_mean", "px_probe_a", "px_probe_b",
-                ],
+    def ev(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        rows = []
+        for out_h, out_w in _EVAL_SIZES:
+            out = preprocess_for_eval(arr, out_h, out_w)
+            rows.append(
+                (
+                    doc_id,
+                    out_h,
+                    out_w,
+                    out.shape[2],
+                    float(out.min()),
+                    float(out.max()),
+                    float(out.mean()),
+                    float(out[out_h // 3, out_w // 3, 0]),
+                    float(out[out_h // 2, out_w // 2, -1]),
+                )
             )
+        return rows
 
-    return corpus.mapInPandas(
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir, docs_filter=F.col("doc_id") < _GOLDEN_DOCS),
         ev,
-        schema="doc_id bigint, out_h int, out_w int, channels int, "
+        "doc_id bigint, out_h int, out_w int, channels int, "
         "px_min double, px_max double, px_mean double, "
         "px_probe_a double, px_probe_b double",
     )
@@ -1113,24 +1043,17 @@ def q8h_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q85_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir).select("path", "image_format", "content")
+    def frames(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        arr = arr.astype(np.int64)
+        return [
+            (doc_id, frame_idx, arr[frame_idx].size, int(arr[frame_idx].sum()))
+            for frame_idx in range(0, arr.shape[0], 3)
+        ]
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(pdf["path"], pdf["image_format"], pdf["content"]):
-                doc_id = _doc_id_of(path)
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                for frame_idx in range(0, arr.shape[0], 3):
-                    frame = arr[frame_idx]
-                    rows.append((doc_id, frame_idx, frame.size, int(frame.sum())))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_n_bytes", "byte_sum"]
-            )
-
-    return corpus.mapInPandas(
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir),
         frames,
-        schema="doc_id bigint, frame_idx bigint, frame_n_bytes bigint, byte_sum bigint",
+        "doc_id bigint, frame_idx bigint, frame_n_bytes bigint, byte_sum bigint",
     )
 
 
@@ -1343,28 +1266,14 @@ _RSZ = 16
 def q89_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.functions.imageops import resize_nearest
 
-    corpus = synthetic_corpus(spark, sf_dir).select("path", "image_format", "content")
+    def rsz(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        out = resize_nearest(arr, _RSZ, _RSZ).astype(np.int64)
+        return [(doc_id, int(out.min()), int(out.max()), int(out.sum()), int(out.size))]
 
-    def rsz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(pdf["path"], pdf["image_format"], pdf["content"]):
-                arr = decode_image(bytes(content), fmt)
-                out = resize_nearest(arr, _RSZ, _RSZ).astype(np.int64)
-                rows.append(
-                    (
-                        _doc_id_of(path),
-                        int(out.min()),
-                        int(out.max()),
-                        int(out.sum()),
-                        int(out.size),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "px_min", "px_max", "px_sum", "n_px"])
-
-    return corpus.mapInPandas(
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir),
         rsz,
-        schema="doc_id bigint, px_min bigint, px_max bigint, px_sum bigint, n_px bigint",
+        "doc_id bigint, px_min bigint, px_max bigint, px_sum bigint, n_px bigint",
     )
 
 
@@ -1392,26 +1301,20 @@ def q89_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q8a_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir).select("path", "image_format", "content")
-
-    def chan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(pdf["path"], pdf["image_format"], pdf["content"]):
-                doc_id = _doc_id_of(path)
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                for ch in range(arr.shape[2]):
-                    sl = arr[:, :, ch]
-                    rows.append(
-                        (doc_id, ch, int(sl.min()), int(sl.max()), int(sl.sum()), int(sl.size))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "channel", "px_min", "px_max", "px_sum", "n_px"]
+    def chan(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        arr = arr.astype(np.int64)
+        rows = []
+        for ch in range(arr.shape[2]):
+            sl = arr[:, :, ch]
+            rows.append(
+                (doc_id, ch, int(sl.min()), int(sl.max()), int(sl.sum()), int(sl.size))
             )
+        return rows
 
-    return corpus.mapInPandas(
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir),
         chan,
-        schema="doc_id bigint, channel int, px_min bigint, px_max bigint, "
+        "doc_id bigint, channel int, px_min bigint, px_max bigint, "
         "px_sum bigint, n_px bigint",
     )
 
@@ -1515,32 +1418,20 @@ def _ahash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_bits, hash_lo, hash_hi) per image, localCheckpointed
     per invocation so q8i's band and verify arms share one decode + hash
     pass (the binary decode dominates the family's cost)."""
-    from tf_datapipeline_spark.functions.imagecodec import decode_image
     from tf_datapipeline_spark.functions.imageops import resize_nearest
 
-    corpus = synthetic_corpus(spark, sf_dir).select(
-        "path", "image_format", "content"
-    )
+    def ahash(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        gray = resize_nearest(arr.astype(np.int64), _AH, _AH).sum(axis=2)
+        total = int(gray.sum())
+        bits = (64 * gray.flatten() > total)
+        lo = sum(1 << k for k in range(32) if bits[k])
+        hi = sum(1 << (k - 32) for k in range(32, 64) if bits[k])
+        return [(doc_id, int(bits.sum()), lo, hi)]
 
-    def ahash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                gray = resize_nearest(arr, _AH, _AH).sum(axis=2)
-                total = int(gray.sum())
-                bits = (64 * gray.flatten() > total)
-                lo = sum(1 << k for k in range(32) if bits[k])
-                hi = sum(1 << (k - 32) for k in range(32, 64) if bits[k])
-                rows.append((_doc_id_of(path), int(bits.sum()), lo, hi))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_bits", "hash_lo", "hash_hi"]
-            )
-
-    return corpus.mapInPandas(
-        ahash, schema="doc_id bigint, n_bits bigint, hash_lo bigint, hash_hi bigint"
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir),
+        ahash,
+        "doc_id bigint, n_bits bigint, hash_lo bigint, hash_hi bigint",
     ).localCheckpoint()
 
 
@@ -1775,33 +1666,20 @@ _SCENE_CUT = 6.0
     """,
 )
 def q8k_scene_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir).select(
-        "path", "image_format", "content"
-    )
+    def diffs(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        arr = arr.astype(np.int64)
+        d = np.abs(arr[1:] - arr[:-1]).sum(axis=(1, 2))
+        n = arr.shape[1] * 3
+        rows = []
+        for k, ds in enumerate(d):
+            mean = float(ds) / n
+            rows.append((doc_id, k + 1, int(ds), mean, 1 if mean > _SCENE_CUT else 0))
+        return rows
 
-    def diffs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                doc_id = _doc_id_of(path)
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                d = np.abs(arr[1:] - arr[:-1]).sum(axis=(1, 2))
-                n = arr.shape[1] * 3
-                for k, ds in enumerate(d):
-                    mean = float(ds) / n
-                    rows.append(
-                        (doc_id, k + 1, int(ds), mean, 1 if mean > _SCENE_CUT else 0)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "diff_sum", "mean_diff", "is_cut"],
-            )
-
-    return corpus.mapInPandas(
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir),
         diffs,
-        schema="doc_id bigint, frame_idx bigint, diff_sum bigint, "
+        "doc_id bigint, frame_idx bigint, diff_sum bigint, "
         "mean_diff double, is_cut int",
     )
 
@@ -1869,35 +1747,21 @@ def q8k_scene_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q8l_keyframe_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir).select(
-        "path", "image_format", "content"
-    )
+    def keyframes(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        arr = arr.astype(np.int64)
+        w = arr.shape[1]
+        n = w * 3
+        d = np.abs(arr[1:] - arr[:-1]).sum(axis=(1, 2))
+        idxs = [0] + [k + 1 for k, ds in enumerate(d) if ds / n > _SCENE_CUT]
+        return [
+            (doc_id, k, w, int(arr[k].sum()), int((arr[k] * arr[k]).sum()))
+            for k in idxs
+        ]
 
-    def keyframes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                doc_id = _doc_id_of(path)
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                w = arr.shape[1]
-                n = w * 3
-                d = np.abs(arr[1:] - arr[:-1]).sum(axis=(1, 2))
-                idxs = [0] + [k + 1 for k, ds in enumerate(d) if ds / n > _SCENE_CUT]
-                for k in idxs:
-                    frame = arr[k]
-                    rows.append(
-                        (doc_id, k, w, int(frame.sum()), int((frame * frame).sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "w", "byte_sum", "byte_sqsum"],
-            )
-
-    fp = corpus.mapInPandas(
+    fp = map_decoded(
+        synthetic_corpus(spark, sf_dir),
         keyframes,
-        schema="doc_id bigint, frame_idx bigint, w bigint, "
+        "doc_id bigint, frame_idx bigint, w bigint, "
         "byte_sum bigint, byte_sqsum bigint",
     )
     return (
@@ -2298,34 +2162,22 @@ def _phash_oracle() -> str:
 
 @query("q8p_image_phash", oracle=_phash_oracle())
 def q8p_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.functions.imagecodec import decode_image
     from tf_datapipeline_spark.functions.imageops import resize_nearest
 
-    corpus = synthetic_corpus(spark, sf_dir).select(
-        "path", "image_format", "content"
-    )
     basis = np.array(_PHASH_BASIS, dtype=np.int64)  # (8, 32)
 
-    def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                arr = decode_image(bytes(content), fmt).astype(np.int64)
-                gray = resize_nearest(arr, _PH, _PH).sum(axis=2)
-                coeffs = (basis @ gray @ basis.T).flatten()  # u-major
-                # low median of the 63 AC coeffs: rank FLOOR((63+1)/2)=32
-                med = int(np.sort(coeffs[1:])[31])
-                bits = coeffs > med
-                lo = sum(1 << k for k in range(32) if bits[k])
-                hi = sum(1 << (k - 32) for k in range(32, 64) if bits[k])
-                rows.append((_doc_id_of(path), int(bits.sum()), lo, hi))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_bits", "hash_lo", "hash_hi"]
-            )
+    def phash(doc_id: int, arr: np.ndarray) -> list[tuple]:
+        gray = resize_nearest(arr.astype(np.int64), _PH, _PH).sum(axis=2)
+        coeffs = (basis @ gray @ basis.T).flatten()  # u-major
+        # low median of the 63 AC coeffs: rank FLOOR((63+1)/2)=32
+        med = int(np.sort(coeffs[1:])[31])
+        bits = coeffs > med
+        lo = sum(1 << k for k in range(32) if bits[k])
+        hi = sum(1 << (k - 32) for k in range(32, 64) if bits[k])
+        return [(doc_id, int(bits.sum()), lo, hi)]
 
-    return corpus.mapInPandas(
+    return map_decoded(
+        synthetic_corpus(spark, sf_dir),
         phash,
-        schema="doc_id bigint, n_bits bigint, hash_lo bigint, hash_hi bigint",
+        "doc_id bigint, n_bits bigint, hash_lo bigint, hash_hi bigint",
     )

@@ -131,17 +131,22 @@ def _apply_cuts(df: DataFrame, cuts: "np.ndarray") -> DataFrame:
     return df.withColumn("_b", _equi_depth("_b"))
 
 
-def _coarsen_bucket(df: DataFrame, max_buckets: int) -> DataFrame:
-    """Re-bucket `_b` so the driver prefix table stays ≤ max_buckets rows
-    no matter the caller's bucket cardinality (r9 advice: a raw metric
-    bucket — e.g. q4zf's cents — is ~user-cardinality, so the pass-1
-    collect would grow with the corpus).
+def _coarsen_bucket(
+    slim: DataFrame, b: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Re-bucket `_b` so the driver prefix table stays ≤
+    _MAX_OFFSET_BUCKETS rows no matter the caller's bucket cardinality
+    (r9 advice: a raw metric bucket — e.g. q4zf's cents — is
+    ~user-cardinality, so the pass-1 collect would grow with the
+    corpus). The probe and the sketch run over `slim` (the caller's slim
+    checkpoint of `_b`); the same cuts re-bucket both `slim` and `b`
+    (the full lineage the final plan numbers). Returns (slim, b).
 
-    Guard: when the value SPAN already fits (hi - lo + 1 ≤ max_buckets),
-    distinct ≤ span is an EXACT bound — keep the raw buckets and the
-    final plan byte-identical (the r10 review killed the earlier
-    approx_count_distinct guard, whose HLL error made the documented
-    ceiling only approximate).
+    Guard: when the value SPAN already fits (hi - lo + 1 ≤ ceiling),
+    distinct ≤ span is an EXACT bound — both frames come back unchanged
+    and the final plan stays byte-identical (the r10 review killed the
+    earlier approx_count_distinct guard, whose HLL error made the
+    documented ceiling only approximate).
 
     Otherwise: EQUI-DEPTH cut points (approxQuantile, one sketch pass)
     + a vectorized Arrow-batched np.searchsorted per row (the engine's
@@ -164,15 +169,16 @@ def _coarsen_bucket(df: DataFrame, max_buckets: int) -> DataFrame:
     table, so the count rides the same job. Values are unchanged for
     any k (monotone re-bucket); only sketch cost and plan balance
     move."""
-    stats = df.agg(
+    st = slim.agg(
         F.min("_b").alias("lo"),
         F.max("_b").alias("hi"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    if stats["lo"] is None or stats["hi"] - stats["lo"] + 1 <= max_buckets:
-        return df
-    k = _adaptive_k(stats["n"], max_buckets)
-    return _apply_cuts(df, _sketch_cuts(df, ["_b"], k)[0])
+    if st["lo"] is None or st["hi"] - st["lo"] + 1 <= _MAX_OFFSET_BUCKETS:
+        return slim, b
+    k = _adaptive_k(st["n"], _MAX_OFFSET_BUCKETS)
+    cuts = _sketch_cuts(slim, ["_b"], k)[0]
+    return _apply_cuts(slim, cuts), _apply_cuts(b, cuts)
 
 
 def offset_running_sum(
@@ -200,18 +206,7 @@ def offset_running_sum(
     # 100 TB). The final numbered plan below stays on the original
     # lineage — exactly one more evaluation — so payload columns are
     # never materialized.
-    slim = b.select("_b", "_v").localCheckpoint()
-    st = slim.agg(
-        F.min("_b").alias("lo"),
-        F.max("_b").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    if st["lo"] is not None and st["hi"] - st["lo"] + 1 > _MAX_OFFSET_BUCKETS:
-        cuts = _sketch_cuts(
-            slim, ["_b"], _adaptive_k(st["n"], _MAX_OFFSET_BUCKETS)
-        )[0]
-        slim = _apply_cuts(slim, cuts)
-        b = _apply_cuts(b, cuts)
+    slim, b = _coarsen_bucket(b.select("_b", "_v").localCheckpoint(), b)
     sums = {
         r["_b"]: r["s"]
         for r in slim.groupBy("_b").agg(F.sum("_v").alias("s")).collect()
@@ -244,7 +239,6 @@ def offset_row_number(
     bucket: Column,
     order_cols: list[Column | str],
     rn_name: str = "rn",
-    prebounded: bool = False,
     cuts: "np.ndarray | None | str" = "auto",
 ) -> tuple[DataFrame, int]:
     """Global 1-based row numbering WITHOUT an unpartitioned window.
@@ -255,47 +249,28 @@ def offset_row_number(
     bucket order == global order; every window in the final plan is
     partitioned by bucket — no `Exchange SinglePartition`, the shape that
     survives 100 TB. High-cardinality buckets (a raw metric value is
-    fine) are re-coarsened to ≤ _MAX_OFFSET_BUCKETS driver rows first;
-    a caller whose bucket is bounded BY CONSTRUCTION (q32/q36's fixed
-    64-cell hash-key grid) passes prebounded=True to skip the
-    coarsening stats pass entirely (r10 review: the guard pass is cheap
-    but it is still one extra scan); a caller ranking several metrics of
-    one table passes the fused plan_coarsen_cuts result as `cuts`
-    (ndarray = apply these cut points, None = span already fits) so the
-    guard + sketch run once for ALL metrics, not once per call.
+    fine) are re-coarsened to ≤ _MAX_OFFSET_BUCKETS driver rows first
+    (`cuts="auto"`). `cuts=None` certifies the span already fits and
+    skips the coarsening stats pass entirely: a bucket bounded BY
+    CONSTRUCTION (q32/q36's fixed 64-cell hash-key grid), or a metric
+    the fused plan_coarsen_cuts probe found in range. An ndarray applies
+    those cut points, so a caller ranking several metrics of one table
+    runs the guard + sketch once for ALL metrics, not once per call.
     Returns (numbered df, total row count) — the total falls out of
     pass 1 for free.
     """
     spark = df.sparkSession
     b = df.withColumn("_b", bucket.cast("bigint"))
     counts_src = b
-    if cuts is None or prebounded:
-        pass  # caller certifies the bucket span fits _MAX_OFFSET_BUCKETS
-    elif isinstance(cuts, str):  # "auto": probe + sketch per call
+    if isinstance(cuts, str):  # "auto": probe + sketch per call
         # r11: probe/sketch/counts over a SLIM (_b-only) localCheckpoint
         # — one lineage evaluation instead of one per stats job (see
-        # offset_running_sum). Callers on the None/prebounded/ndarray
-        # paths skip the checkpoint: they either certify the span or
-        # have already materialized their input (q4zf's per-user m).
-        slim = b.select("_b").localCheckpoint()
-        st = slim.agg(
-            F.min("_b").alias("lo"),
-            F.max("_b").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        if (
-            st["lo"] is not None
-            and st["hi"] - st["lo"] + 1 > _MAX_OFFSET_BUCKETS
-        ):
-            arr = _sketch_cuts(
-                slim, ["_b"], _adaptive_k(st["n"], _MAX_OFFSET_BUCKETS)
-            )[0]
-            slim = _apply_cuts(slim, arr)
-            b = _apply_cuts(b, arr)
-        counts_src = slim
-    else:
-        b = _apply_cuts(b, cuts)
-        counts_src = b
+        # offset_running_sum). Callers on the None/ndarray paths skip
+        # the checkpoint: they either certify the span or have already
+        # materialized their input (q4zf's per-user m).
+        counts_src, b = _coarsen_bucket(b.select("_b").localCheckpoint(), b)
+    elif cuts is not None:
+        b = counts_src = _apply_cuts(b, cuts)
     counts = {
         r["_b"]: r["n"]
         for r in counts_src.groupBy("_b")
@@ -347,18 +322,7 @@ def grouped_offset_row_number(
     spark = df.sparkSession
     b = df.withColumn("_b", bucket.cast("bigint"))
     # r11: slim checkpoint for probe/sketch/counts (see offset_running_sum)
-    slim = b.select(*group_cols, "_b").localCheckpoint()
-    st = slim.agg(
-        F.min("_b").alias("lo"),
-        F.max("_b").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    if st["lo"] is not None and st["hi"] - st["lo"] + 1 > _MAX_OFFSET_BUCKETS:
-        arr = _sketch_cuts(
-            slim, ["_b"], _adaptive_k(st["n"], _MAX_OFFSET_BUCKETS)
-        )[0]
-        slim = _apply_cuts(slim, arr)
-        b = _apply_cuts(b, arr)
+    slim, b = _coarsen_bucket(b.select(*group_cols, "_b").localCheckpoint(), b)
     counts = (
         slim.groupBy(*group_cols, "_b")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -484,7 +448,7 @@ def q32_split_exact_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = shuffle_key(F.col("doc_id"))
     numbered, total = offset_row_number(
         docs, F.floor(key / _KEY_BUCKET_W), [key, F.col("doc_id")],
-        prebounded=True,  # fixed 64-cell grid by construction
+        cuts=None,  # fixed 64-cell grid by construction
     )
     return numbered.select(
         "doc_id",
@@ -600,7 +564,7 @@ def q36_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = shuffle_key(F.col("doc_id"))
     numbered, total = offset_row_number(
         docs, F.floor(key / _KEY_BUCKET_W), [key, F.col("doc_id")],
-        prebounded=True,  # fixed 64-cell grid by construction
+        cuts=None,  # fixed 64-cell grid by construction
     )
     per_shard = math.ceil(total / 5) if total else 1
     rn0 = F.col("rn") - 1

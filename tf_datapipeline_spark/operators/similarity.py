@@ -17,8 +17,6 @@ driver check; tests/test_similarity.py asserts recall vs q70.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -735,7 +733,7 @@ def q76_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is the shared-SQL ADC twin.
 #
 # TUNING DIALS (r7 verdict task 6): IVFPQ recall is bought with two
-# knobs, both first-class here instead of frozen constants —
+# module-level dials (tests sweep them) —
 #   _IVFPQ_OVERFETCH: shortlist size rescored exactly. The sf10 measured
 #     curve (SCALING.md): recall 0.05 @ 40, 0.125 @ 320, 0.275 @ 2560 —
 #     the expected fixed-capacity decay; with exact rescore a larger
@@ -748,17 +746,11 @@ def q76_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     replayable in SQL); the production setting is 256 (FAISS IVFPQ's
 #     8-bit codes), which needs a corpus with >= 8 + 37*255 ≈ 9.5k seed
 #     vectors (sf0.1 up). Smaller corpora keep whatever seeds exist.
-# Both read an env override so a bench/recall sweep can set them without
-# code edits.
 # --------------------------------------------------------------------------
 _SUB_DIM = _DIM // _PQ_CODES  # 8 dims per PQ subspace
 _PQ_NCODES = 4  # codewords per subspace (q75's codebook geometry)
-_IVFPQ_OVERFETCH = int(
-    os.environ.get("SPARK_GRAFT_IVFPQ_OVERFETCH", str(_PQ_OVERFETCH))
-)
-_IVFPQ_NCODES = int(
-    os.environ.get("SPARK_GRAFT_IVFPQ_NCODES", str(_PQ_NCODES))
-)
+_IVFPQ_OVERFETCH = _PQ_OVERFETCH
+_IVFPQ_NCODES = _PQ_NCODES
 
 
 def _ivfpq_sql() -> str:

@@ -1,9 +1,10 @@
 """SparkSession factory.
 
-Local-mode defaults are tuned for the test harness (local[32], 128 GiB
-host); cluster-relevant settings (AQE, skew-join handling, broadcast
-threshold, Arrow batching for binary-heavy rows) are the same knobs a
-1000-executor deployment would set — nothing here is local-only magic.
+Local mode runs one task slot per core the process may use
+(SPARK_GRAFT_CPUS overrides the count); cluster-relevant settings (AQE,
+skew-join handling, broadcast threshold, Arrow batching for binary-heavy
+rows) are the same knobs a 1000-executor deployment would set — nothing
+here is local-only magic.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ def get_spark(app_name: str = "tf_datapipeline_spark") -> SparkSession:
       - maxRecordsPerBatch bounded: multimodal rows are MB-scale; 10k-row
         Arrow batches of images would OOM an executor.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -28,7 +28,11 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tf_datapipeline_spark.catalog import table_path
+from tf_datapipeline_spark.catalog import (
+    events_raw_ts_type,
+    nanos_to_timestamp,
+    table_path,
+)
 from tf_datapipeline_spark.functions.exact import dsum, sql_dsum
 from tf_datapipeline_spark.registry import query
 
@@ -38,22 +42,6 @@ _EVENTS_SCHEMA_TMPL = (
 )
 
 _sink_counter = itertools.count()
-
-# r11: the footer-sniff for the raw ts storage type is metadata that
-# cannot change within a session — memoize it (one driver-side footer
-# read per (session, dir) instead of one per streaming-query call).
-_RAW_TS_MEMO: dict[tuple[str, str], str] = {}
-
-
-def _raw_events_ts_type(spark: SparkSession, sf_dir: str) -> str:
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    if key not in _RAW_TS_MEMO:
-        _RAW_TS_MEMO[key] = dict(
-            spark.read.parquet(table_path(sf_dir, "events")).dtypes
-        )["ts"]
-    return _RAW_TS_MEMO[key]
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,9 +53,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The stream source needs a schema up front, and the driver testdata
     has stored ts two ways across rounds (TIMESTAMP(NANOS), readable only
     as raw-nanos bigint under the legacy conf; plain TIMESTAMP(µs) no-tz,
-    which Spark reads as TIMESTAMP_NTZ natively) — so sniff the actual
-    storage type from the batch reader's footer-derived schema (a
-    metadata-only operation) instead of hard-coding one era's recipe.
+    which Spark reads as TIMESTAMP_NTZ natively) — so the schema and
+    the nanos recipe come from the catalog, which owns every storage
+    variant (`catalog.events_raw_ts_type`, `catalog.nanos_to_timestamp`),
+    instead of hard-coding one era's recipe here.
 
     One type wrinkle: withWatermark rejects TIMESTAMP_NTZ, so the stream
     carries ts as TIMESTAMP (tz-aware; the session timezone is pinned to
@@ -76,20 +65,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_ntz` so streaming results are type-identical to the batch twins
     (catalog normalizes batch events.ts to NTZ — what DuckDB reads for
     naive parquet timestamps)."""
-    # defensive idempotent set; see catalog._load_events / session.py
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_ts = _raw_events_ts_type(spark, sf_dir)
-    ts_decl = "bigint" if raw_ts == "bigint" else raw_ts
+    raw_ts = events_raw_ts_type(spark, sf_dir)
     # the file stream source wants a DIRECTORY; select the single table
     # file via glob filter (a production stream would watch a drop dir).
     sdf = (
-        spark.readStream.schema(_EVENTS_SCHEMA_TMPL.format(ts_type=ts_decl))
+        spark.readStream.schema(_EVENTS_SCHEMA_TMPL.format(ts_type=raw_ts))
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
     if raw_ts == "bigint":  # TIMESTAMP(NANOS) read as raw nanos
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        sdf = sdf.withColumn("ts", nanos_to_timestamp("ts"))
     else:  # NTZ (or already tz-aware): carry as tz-aware for watermarks
         sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
     return sdf
