@@ -125,6 +125,96 @@ def test_connected_components_multiple_components(spark):
     assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
+def test_connected_components_path_over_many_partitions(spark):
+    """A 20k-node path spread round-robin over 16 partitions: no two
+    edges of one partition share a node, so the local contraction
+    merges nothing and the global rounds must carry the whole diameter.
+    Pointer jumping converges it to label 0 within the 30-round cap; a
+    1-round cap must raise instead of returning unconverged labels."""
+    from pyspark.sql import functions as F
+
+    from tf_datapipeline_spark.operators.dedup import connected_components
+
+    n = 20_000
+    path = (
+        spark.range(n - 1)
+        .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
+        .repartition(16)
+    )
+    labels = connected_components(path)
+    assert labels.count() == n
+    assert labels.filter(F.col("label") != 0).count() == 0
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(path, max_rounds=1)
+
+
+def _reference_components(edges):
+    """Loop union-find reference: node -> minimum node id of its
+    component."""
+    parent = {}
+
+    def root(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: root(x) for x in parent}
+
+
+def test_connected_components_independent_of_partitions_and_batches(spark):
+    """The labels are a function of the edge SET: the same random
+    multigraph (duplicates, self-loops, many components) arriving in 1
+    or 16 partitions, cut into Arrow batches of 7 or 2048 records, gets
+    the loop union-find's labels every time — the contraction's output
+    must not depend on partition or batch boundaries."""
+    import random
+
+    from tf_datapipeline_spark.operators.dedup import connected_components
+
+    rng = random.Random(7)
+    raw = [(rng.randrange(3000), rng.randrange(3000)) for _ in range(2500)]
+    raw += raw[:100] + [(5, 5), (2999, 2999)]  # duplicates, self-loops
+    expected = _reference_components(raw)
+    assert len(set(expected.values())) > 100  # many components
+    edges = spark.createDataFrame(raw, "doc_a long, doc_b long")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    try:
+        for batch in ("7", "2048"):
+            spark.conf.set(key, batch)
+            for parts in (1, 16):
+                got = connected_components(edges.repartition(parts))
+                assert {r.doc_id: r.label for r in got.collect()} == expected, (
+                    batch,
+                    parts,
+                )
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_cc_labels_build_runs_few_jobs(spark):
+    """The pair graph's labels on the smoke corpus — signature build,
+    LSH pairs, contraction and the confirming round — stay within 25
+    Spark jobs. A per-round count join or a separate pairs checkpoint
+    coming back pushes it past the bound (it was 45 jobs)."""
+    from tests.conftest import SF_SMOKE
+    from tf_datapipeline_spark.operators.dedup import materialize_cc_labels
+
+    sc = spark.sparkContext
+    group = "cc-labels-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        labels = materialize_cc_labels(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert labels.count() > 0
+    assert n_jobs <= 25, n_jobs
+
+
 def test_substring_dup_interval_union(spark):
     """q69's Spark side counts covered tokens as an interval UNION via a
     lag window (contrib = min(K, gap)); pin the union math directly on a
@@ -286,6 +376,77 @@ def test_register_views_recovers_dropped_view(spark):
     spark.catalog.dropTempView("documents")
     register_views(spark, SF_SMOKE)
     assert spark.catalog.tableExists("documents")
+
+
+def _testdata_tables():
+    import glob
+    import os
+
+    from tf_datapipeline_spark.catalog import TABLES, table_path
+
+    return [
+        pytest.param(sf, name, id=f"{os.path.basename(sf)}-{name}")
+        for sf in sorted(glob.glob("/root/testdata/sf*"))
+        for name in TABLES
+        if os.path.exists(table_path(sf, name))
+    ]
+
+
+@pytest.mark.parametrize("sf_dir,name", _testdata_tables())
+def test_footer_schema_equals_inferred_schema(spark, sf_dir, name):
+    """The catalog declares every table's schema from its parquet footer
+    instead of running Spark's inference job. The declared schema must
+    be exactly the inferred one — names, types and nullability — or a
+    divergence would read as nulls or retyped columns downstream. The
+    date columns must stay TIMESTAMP_NTZ (what DuckDB reads)."""
+    from pyspark.sql.types import TimestampNTZType
+
+    from tf_datapipeline_spark.catalog import footer_schema, load_table, table_path
+
+    path = table_path(sf_dir, name)
+    inferred = spark.read.parquet(path).schema
+    assert footer_schema(path) == inferred
+    if name != "events":  # events.ts is normalized after the read
+        assert load_table(spark, sf_dir, name).schema == inferred
+    if name == "orders":
+        assert isinstance(inferred["o_orderdate"].dataType, TimestampNTZType)
+    if name == "lineitem":
+        assert isinstance(inferred["l_shipdate"].dataType, TimestampNTZType)
+
+
+def test_footer_schema_of_spark_output_dir(spark, tmp_path):
+    """A table stored as a Spark output directory (several part files,
+    _SUCCESS and .crc side files) gets the same footer schema as Spark
+    infers, and the catalog reads every row of it."""
+    from tests.conftest import SF_SMOKE
+    from tf_datapipeline_spark.catalog import footer_schema, load_table, table_path
+
+    docs = spark.read.parquet(table_path(SF_SMOKE, "documents"))
+    out = table_path(str(tmp_path), "documents")
+    docs.repartition(3).write.parquet(out)
+    assert footer_schema(out) == spark.read.parquet(out).schema
+    assert load_table(spark, str(tmp_path), "documents").count() == docs.count()
+
+
+@pytest.mark.parametrize(
+    "unit,tz,raw",
+    [("ns", None, "bigint"), ("us", None, "timestamp_ntz"), ("us", "UTC", "timestamp")],
+)
+def test_events_raw_ts_type_from_footer(spark, tmp_path, unit, tz, raw):
+    """events.ts's storage type comes from the footer, with no Spark
+    job, and names what the parquet reader reports for each storage
+    era: TIMESTAMP(NANOS) as raw-nanos bigint, naive µs as NTZ,
+    tz-aware as TIMESTAMP."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tf_datapipeline_spark.catalog import events_raw_ts_type, table_path
+
+    ts = pa.array([1704067200_000000], pa.timestamp("us")).cast(pa.timestamp(unit, tz))
+    path = table_path(str(tmp_path), "events")
+    pq.write_table(pa.table({"ts": ts}), path, store_schema=False)
+    assert events_raw_ts_type(spark, str(tmp_path)) == raw
+    assert dict(spark.read.parquet(path).dtypes)["ts"] == raw
 
 
 def test_approx_top_k_certification_regime(spark):

@@ -10,8 +10,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -33,23 +37,24 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# r11 optimization: memoize the DataFrame HANDLE per (session, dir,
-# table). `spark.read.parquet` resolves schema by reading parquet
-# footers on the DRIVER — measured ~0.11s per table, ~1.2s per
-# register_views call — and the engine re-ran it for every query
-# invocation (every bench pass, every gate row). The memo caches plan
-# METADATA only (schema + file listing), exactly what a metastore
-# catalog gives a production session: every action over the handle
-# still scans the parquet from disk — no data, no results, nothing is
-# persisted or cached across bench invocations (each bench run is a
-# fresh session with a fresh applicationId key).
+# Memoize the DataFrame HANDLE per (session, dir, table). Registration
+# reads each table's schema from its parquet footer on the driver
+# (`footer_schema`, no Spark job), but a fresh `spark.read` still lists
+# files and builds a relation per table — re-running it for every query
+# invocation (every bench pass, every gate row) would make each query
+# pay the registration again. The memo caches plan METADATA only (schema
+# + file listing), exactly what a metastore catalog gives a production
+# session: every action over the handle still scans the parquet from
+# disk — no data, no results, nothing is persisted or cached across
+# bench invocations (each bench run is a fresh session with a fresh
+# applicationId key).
 #
-# STATIC-DATA ASSUMPTION (r11 advice): the memo pins schema AND the
-# file listing at first read, so an in-session rewrite of the parquet
-# at the same path would be invisible (or fail on deleted files). The
-# driver corpus is generated once and read-only, and every engine write
-# path targets scratch dirs outside the table roots; anything that DOES
-# rewrite a table in place must call invalidate_caches() first.
+# STATIC-DATA ASSUMPTION: the memo pins schema AND the file listing at
+# first read, so an in-session rewrite of the parquet at the same path
+# would be invisible (or fail on deleted files). The driver corpus is
+# generated once and read-only, and every engine write path targets
+# scratch dirs outside the table roots; anything that DOES rewrite a
+# table in place must call invalidate_caches() first.
 _TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -136,10 +141,34 @@ def materialize(spark: SparkSession, sf_dir: str, view: str, sql: str) -> DataFr
     return df
 
 
+def footer_schema(path: str) -> StructType:
+    """The Spark schema of the parquet table at `path` — one file or a
+    Spark output directory — from its parquet footer alone, no Spark job:
+    the schema Spark's own inference reports (test-pinned for every
+    testdata table). Naive timestamps map to TIMESTAMP_NTZ, as Spark
+    reads them; TIMESTAMP(NANOS) maps to the raw-nanos bigint that the
+    `nanosAsLong` reader (session.py) produces."""
+    arrow = ds.dataset(path, format="parquet").schema
+    arrow = pa.schema(
+        [
+            f.with_type(pa.int64())
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+            else f
+            for f in arrow
+        ]
+    )
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """Plain parquet scan (Catalyst keeps pushdown/pruning) over a
+    declared footer schema, so no schema-inference job runs."""
+    return spark.read.schema(footer_schema(path)).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table. Plain `spark.read.parquet` so Catalyst keeps
-    pushdown/pruning; callers should `.select()` early so ReadSchema stays
-    narrow at 100 TB."""
+    """Scan one table. Callers should `.select()` early so ReadSchema
+    stays narrow at 100 TB."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     key = (
@@ -151,26 +180,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _TABLE_MEMO[key] = (
             _load_events(spark, sf_dir)
             if name == "events"
-            else spark.read.parquet(table_path(sf_dir, name))
+            else _read(spark, table_path(sf_dir, name))
         )
     return _TABLE_MEMO[key]
 
 
-def _read_raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events parquet as stored. nanosAsLong is set at session build
-    (session.py); this defensive idempotent set covers sessions built
-    outside get_spark. It only affects TIMESTAMP(NANOS) parquet fields,
-    which it reads as raw-nanos bigint instead of erroring."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(table_path(sf_dir, "events"))
-
-
 def events_raw_ts_type(spark: SparkSession, sf_dir: str) -> str:
-    """Storage type of events.ts as the parquet reader reports it (a
-    footer read, no data scan): "bigint" for TIMESTAMP(NANOS),
+    """Storage type of events.ts as the parquet reader reports it, from
+    the footer (no Spark job): "bigint" for TIMESTAMP(NANOS),
     "timestamp_ntz" for naive µs, "timestamp" for tz-aware. The stream
-    reader declares its schema from it."""
-    return dict(_read_raw_events(spark, sf_dir).dtypes)["ts"]
+    reader declares its schema from it. nanosAsLong is set at session
+    build (session.py); this defensive idempotent set covers sessions
+    built outside get_spark, so the reader agrees with "bigint"."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return footer_schema(table_path(sf_dir, "events"))["ts"].dataType.simpleString()
 
 
 def nanos_to_timestamp(col: str) -> Column:
@@ -194,8 +217,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP_NTZ is the canonical type because it is exactly what DuckDB
     reads for naive parquet timestamps — oracle twins then agree on both
     values AND type (the driver's value hash is type-sensitive)."""
-    df = _read_raw_events(spark, sf_dir)
-    ts_type = dict(df.dtypes).get("ts")
+    ts_type = events_raw_ts_type(spark, sf_dir)
+    df = _read(spark, table_path(sf_dir, "events"))
     if ts_type == "bigint":  # TIMESTAMP(NANOS) footer read as raw nanos
         df = df.withColumn("ts", nanos_to_timestamp("ts").cast("timestamp_ntz"))
     elif ts_type == "timestamp":  # tz-aware storage; UTC session => no-op cast

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import (
@@ -565,14 +565,18 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pathological mass-near-duplicate corpus makes it O(n²) and would
     # blow the driver-side broadcast long before the quadratic contract
     # itself hurts. Materialize the id-pair set once (localCheckpoint —
-    # the GEMM prescreen must not run twice) and count it: at or below
-    # _Q66_CAND_CAP (~16 B/row -> ~128 MB worst case) the exact arm
-    # broadcasts as before; above it, the same joins run as shuffle
-    # joins — still correct, just paying two corpus shuffles instead of
-    # two broadcast probes. Arm selection is pinned in
-    # tests/test_properties.py (cap forced to 0 -> shuffle arm, same rows).
-    cand_ids = cand_ids.localCheckpoint()
-    in_broadcast_regime = cand_ids.count() <= _Q66_CAND_CAP
+    # the GEMM prescreen must not run twice) and count it in the same
+    # action (an observed metric): at or below _Q66_CAND_CAP (~16 B/row
+    # -> ~128 MB worst case) the exact arm broadcasts as before; above
+    # it, the same joins run as shuffle joins — still correct, just
+    # paying two corpus shuffles instead of two broadcast probes. Arm
+    # selection is pinned in tests/test_properties.py (cap forced to 0 ->
+    # shuffle arm, same rows).
+    counted = Observation()
+    cand_ids = cand_ids.observe(
+        counted, F.count(F.lit(1)).alias("n")
+    ).localCheckpoint()
+    in_broadcast_regime = counted.get["n"] <= _Q66_CAND_CAP
     # The exact arm REJOINS the corpus by id instead of carrying the
     # arrays through the nested loop: the id-only candidate set is the
     # sole BNLJ output, and because the decimal fold's inputs (ea/eb)
@@ -616,12 +620,14 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q67 — near-dup CLUSTERS: connected components over the LSH pair graph
 # (q63's edges), cluster id = min doc_id in the component — the final
-# step of corpus dedup (keep one doc per cluster). Spark side: iterative
-# min-label propagation over the edge list, the standard distributed CC
-# (each round: join labels to edges, take min over neighbors, localCheckpoint
-# to truncate lineage; rounds = graph diameter, tiny for near-dup
-# clusters). Oracle: DuckDB recursive CTE computing reachability, then
-# MIN over reached nodes — same fixpoint, declaratively.
+# step of corpus dedup (keep one doc per cluster). Spark side: local
+# contraction, then global rounds (Łącki et al. 2018, "Connected
+# Components at Scale via Local Contractions"; cf. large-star/small-star,
+# Kiveris et al. SoCC 2014) — see `connected_components`. On the local
+# corpus the pair graph is one partition, so the contraction is exact
+# and one confirming round follows it. Oracle: DuckDB recursive CTE
+# computing reachability, then MIN over reached nodes — same fixpoint,
+# declaratively.
 # --------------------------------------------------------------------------
 def _clusters_oracle() -> str:
     pairs = _with_prelude("duckdb", _lsh_pairs_body(), need_sig=True)
@@ -643,83 +649,127 @@ def _clusters_oracle() -> str:
     """
 
 
+def _local_stars(batches):
+    """`mapInPandas` body of the local contraction: a vectorized
+    union-find over ONE edge partition (all of its Arrow batches, so the
+    output does not depend on batch boundaries). Emits one star edge per
+    node of the partition, node -> minimum node id of its partition-local
+    component (the minimum maps to itself). The stars connect exactly the
+    nodes the partition's edges connect; duplicate edges and self-loops
+    are absorbed."""
+    frames = [pdf for pdf in batches if len(pdf)]
+    if not frames:
+        return
+    pdf = pd.concat(frames)
+    a = pdf["doc_a"].to_numpy(np.int64)
+    # compact ids are ranks of the sorted node ids, so the minimum rank
+    # of a component is its minimum node id
+    nodes, ranks = np.unique(
+        np.concatenate([a, pdf["doc_b"].to_numpy(np.int64)]), return_inverse=True
+    )
+    u, v = ranks[: len(a)], ranks[len(a) :]
+    parent = np.arange(len(nodes))  # invariant: parent[i] <= i, no cycles
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            break
+        # hook every root of an unmerged edge onto the smaller root, then
+        # jump pointers until each node points at its root; merged edges
+        # stay merged, so only the cross edges carry on
+        u, v, ru, rv = u[cross], v[cross], ru[cross], rv[cross]
+        lo = np.minimum(ru, rv)
+        np.minimum.at(parent, ru, lo)
+        np.minimum.at(parent, rv, lo)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    yield pd.DataFrame({"doc_id": nodes, "label": nodes[parent]})
+
+
 def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     """Distributed connected components over an edge list (doc_a, doc_b),
-    directed or not — edges are symmetrized internally, so callers may
-    pass raw candidate pairs; returns (doc_id, label) with label = min
-    node id in the component. Each round combines:
+    directed or not, duplicates allowed — returns (doc_id, label) with
+    label = min node id in the component.
 
-    1. neighbor-min propagation — label(v) <- min over v's neighbors'
-       labels (the classic diameter-bounded step), and
-    2. pointer jumping — label(v) <- label(label(v)): labels are always
-       real node ids of the same component, so shortcutting through the
-       label graph HALVES the remaining propagation distance.
+    1. Local contraction: `_local_stars` runs a union-find over each
+       edge partition and emits star edges node -> partition-local
+       minimum; one localCheckpoint. Memory is bounded by one edge
+       partition, and the stars connect exactly the input's components.
+    2. Seed: each node's label is the minimum over its stars.
+    3. Rounds over the symmetrized star edges, each combining
+       neighbor-min propagation — label(v) <- min over v's neighbors'
+       labels — and pointer jumping — label(v) <- label(label(v)):
+       labels are always real node ids of the same component, so the
+       jump HALVES the remaining propagation distance. Rounds are
+       therefore O(log diameter) of the contracted graph: `max_rounds`=30
+       covers a diameter of ~2^30. When the contraction was exact (one
+       edge partition), round 1 changes nothing and is the last.
 
-    Together rounds are O(log diameter): `max_rounds`=30 covers a
-    component diameter of ~2^30, so a pathological near-dup CHAIN
-    (incremental edits at 100 TB scale) converges where plain
-    propagation's rounds-=-diameter would hit the cap and raise.
-    Per round: two small-key joins on (doc_id, label) pairs only, a
-    localCheckpoint to truncate lineage, and one count for the
-    convergence check; superseded checkpoints are released each round.
+    Each round is ONE action: the new labels' localCheckpoint, which
+    also observes (`DataFrame.observe`) how many labels changed — the
+    convergence test. Superseded checkpoints are released each round.
     Raises on non-convergence rather than returning wrong labels."""
-    # neighbor-min is one-directional and the label seed only covers
-    # doc_a, so correctness REQUIRES the symmetric closure — build it
-    # here instead of trusting every caller to remember (dup edges are
-    # harmless: min-aggregation absorbs them)
-    edges = edges.unionByName(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
+    stars = (
+        edges.select("doc_a", "doc_b")
+        .mapInPandas(_local_stars, "doc_id long, label long")
         .localCheckpoint()
     )
+    links = stars.filter(F.col("doc_id") != F.col("label"))
+    # neighbor-min is one-directional, so correctness REQUIRES the
+    # symmetric closure of the star edges
+    adj = links.select(
+        F.col("doc_id").alias("src"), F.col("label").alias("dst")
+    ).unionByName(
+        links.select(F.col("label").alias("src"), F.col("doc_id").alias("dst"))
+    )
+    labels = stars.groupBy("doc_id").agg(F.min("label").alias("label"))
     changed = -1
     for _ in range(max_rounds):
         neighbor_min = (
-            edges.join(labels, edges.doc_b == labels.doc_id)
-            .groupBy("doc_a")
-            .agg(F.min("label").alias("nbr_label"))
+            adj.join(
+                labels.select(
+                    F.col("doc_id").alias("dst"), F.col("label").alias("nbr_label")
+                ),
+                "dst",
+            )
+            .groupBy(F.col("src").alias("doc_id"))
+            .agg(F.min("nbr_label").alias("nbr_label"))
         )
-        stepped = labels.join(
-            neighbor_min, labels.doc_id == neighbor_min.doc_a, "left"
-        ).select(
+        stepped = labels.join(neighbor_min, "doc_id", "left").select(
             "doc_id",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
+            F.col("label").alias("old"),
+            F.least("label", F.coalesce("nbr_label", "label")).alias("step"),
         )
         # synchronous pointer doubling: jump through the PREVIOUS round's
-        # label map (a checkpointed leaf — jumping through `stepped`
-        # itself would self-join one lineage and trip Catalyst's
-        # attribute rewrite)
+        # label map, not through `stepped` itself
         jump = labels.select(
-            F.col("doc_id").alias("j_id"), F.col("label").alias("j_label")
+            F.col("doc_id").alias("step"), F.col("label").alias("jumped")
         )
+        observed = Observation()
         new_labels = (
-            stepped.join(jump, stepped.label == jump.j_id, "left")
+            stepped.join(jump, "step", "left")
             .select(
                 "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("j_label"), F.col("label"))
-                ).alias("label"),
+                "old",
+                F.least("step", F.coalesce("jumped", "step")).alias("label"),
             )
+            .observe(
+                observed, F.count_if(F.col("label") != F.col("old")).alias("n")
+            )
+            .select("doc_id", "label")
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
+        changed = observed.get["n"]
         # the superseded checkpoint's blocks would otherwise stay pinned in
         # the block manager for the life of the session — one leak per round
         labels.unpersist()
         labels = new_labels
         if changed == 0:
             break
+    stars.unpersist()
     if changed != 0:
         # returning silently would hand back WRONG (unconverged) cluster
         # labels for any component the cap cut short
@@ -733,16 +783,13 @@ def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
 def materialize_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component labels over the LSH pair graph, built per
     invocation like every shared table (q67, qt1 and qt2 each pay their
-    own iterative CC run; within a query the labels are built once)."""
+    own run; within a query the labels are built once). The pairs plan
+    goes straight into `connected_components`: its contraction
+    checkpoint is the one action that evaluates the pairs, and its
+    union-find absorbs duplicate pairs. The returned frame is backed by
+    the final round's checkpoint."""
     _materialize_sig(spark, sf_dir)
-    pairs = spark.sql(_lsh_pairs_body()).select("doc_a", "doc_b").localCheckpoint()
-    # connected_components checkpoints each round; the returned frame
-    # is backed by the final round's checkpoint
-    labels = connected_components(pairs.distinct())
-    # the labels derive only from the final checkpoint, so the edge
-    # list's blocks can be released now
-    pairs.unpersist()
-    return labels
+    return connected_components(spark.sql(_lsh_pairs_body()))
 
 
 @query("q67_dedup_clusters", oracle=_clusters_oracle())

@@ -17,10 +17,11 @@ stage order is explicit rather than emergent. The oracle replays the
 whole composition declaratively (recursive CTE for components).
 
 Scale shape: inherits each stage's design — broadcast benchmark grams,
-banded LSH (never all-pairs), O(log diameter) component rounds, and a
-single md5-partitioned window for exact dedup. The only new shuffles the
-composite adds are the two LEFT JOINs of per-doc flags back to the
-documents scan, both on doc_id.
+banded LSH (never all-pairs), components by per-partition union-find
+contraction then O(log diameter) rounds of one observed checkpoint
+each, and a single md5-partitioned window for exact dedup. The only new
+shuffles the composite adds are the two LEFT JOINs of per-doc flags
+back to the documents scan, both on doc_id.
 """
 
 from __future__ import annotations

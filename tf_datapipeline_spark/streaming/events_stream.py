@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import (
     events_raw_ts_type,
+    footer_schema,
     nanos_to_timestamp,
     table_path,
 )
@@ -791,7 +792,7 @@ def q6c_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stream side: the delta slice of `documents`, signature as pure row
     # expressions (shingle array projected ONCE, then k permutation mins)
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = footer_schema(table_path(sf_dir, "documents"))
     sdf = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -892,7 +893,7 @@ def q7a_stream_sq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     mn_arr = F.array(*[F.lit(r.mn) for r in rng])
     mx_arr = F.array(*[F.lit(r.mx) for r in rng])
 
-    schema = spark.read.parquet(table_path(sf_dir, "embeddings")).schema
+    schema = footer_schema(table_path(sf_dir, "embeddings"))
     sdf = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -975,7 +976,7 @@ def q8j_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.operators.dedup import _DELTA_MOD
     from tf_datapipeline_spark.sources.images import synthetic_pixels
 
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = footer_schema(table_path(sf_dir, "documents"))
     sdf = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -1120,7 +1121,7 @@ def qt4_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col(m).alias(f"i_{m}") for m in mcols],
     )
 
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = footer_schema(table_path(sf_dir, "documents"))
     sdf = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -1339,7 +1340,7 @@ def q7b_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in seed_rows
     }
 
-    schema = spark.read.parquet(table_path(sf_dir, "embeddings")).schema
+    schema = footer_schema(table_path(sf_dir, "embeddings"))
     sdf = (
         spark.readStream.schema(schema)
         .format("parquet")
