@@ -1,200 +1,83 @@
-"""Headline benchmark: runs the engine's flagship queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+"""Headline benchmark: times the engine's flagship queries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Query set spans the operator families: scan/agg (q01, q06), joins
-(q03, q05), top-k (q09), windows (q20, q21), event-time (q40, q42),
-text (q50, q55, q5g, qt1), dedup (q60..q65), similarity (q70, q71),
-multimodal decode + ETL (q81, q84), streaming (q47, q4p).
+    python bench.py                  # HEADLINE (3 passes), then EXTRA (2)
+    python bench.py q47_...,q4p_...  # just these (or ALL): cold/warm each
+
+Every time comes from `time_queries`. Each pass reads the tables through a
+fresh symlink path, so no catalog memo carries from one pass into the
+next; each query runs into the noop sink, and its time is net of
+hypervisor steal (perfbench's `Interval`). Pass 1 is a query's `cold`
+time and the minimum over the later passes its `warm` time. `value` sums
+the warm times of HEADLINE. The last stdout line is the driver contract:
+  {"metric": ..., "value": <sec>, "unit": "sec", "queries": {name: sec}, "sf": ...}
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
-import time
+import tempfile
+from collections import defaultdict
 
 REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
+PERFBENCH_DIR = os.path.join(REPO_DIR, "perfbench")
 
-# The 28-query headline set frozen at r4 — kept intact so the
-# cross-round chain (r1 23.34s -> r6 quiet band 23.3-24.5s -> r8 23.39s)
-# stays apples-to-apples. `value` remains THIS set's total.
-HEADLINE_LEGACY = [
-    "q01_pricing_summary",
-    "q03_shipping_priority",
-    "q05_region_revenue",
-    "q06_forecast_revenue",
-    "q09_topk_orders",
-    "q20_window_rank",
-    "q21_window_running",
-    "q40_tumbling_window",
-    "q42_sessionization",
-    "q50_token_stats",
-    "q55_tfidf",
-    "q60_dedup_exact",
-    "q61_dedup_exact_hash",
-    "q62_minhash_signature",
-    "q63_minhash_lsh_pairs",
-    "q64_simhash",
-    "q65_ngram_jaccard",
-    "q70_knn_bruteforce",
-    "q71_knn_ann_lsh",
-    "q81_pixel_stats",
-    "q84_etl_sharded_write",
-    "q47_stream_tumbling_window",
-    "q1b_small_quantity_revenue",
-    "q4r_range_join",
-    "q4a_asof_join",
-    # round 4: the rotated-in operators carry their own timings
-    "q4p_stream_append_windows",
-    "qt1_prep_pipeline",
-    "q5g_doc_chunking",
+# Spans the operator families: scan/agg, joins, top-k, windows, event time,
+# text, dedup, similarity, multimodal decode + ETL, streaming.
+HEADLINE = [
+    "q01_pricing_summary", "q03_shipping_priority", "q05_region_revenue",
+    "q06_forecast_revenue", "q09_topk_orders", "q20_window_rank",
+    "q21_window_running", "q40_tumbling_window", "q42_sessionization",
+    "q50_token_stats", "q55_tfidf", "q60_dedup_exact", "q61_dedup_exact_hash",
+    "q62_minhash_signature", "q63_minhash_lsh_pairs", "q64_simhash",
+    "q65_ngram_jaccard", "q70_knn_bruteforce", "q71_knn_ann_lsh", "q81_pixel_stats",
+    "q84_etl_sharded_write", "q47_stream_tumbling_window",
+    "q1b_small_quantity_revenue", "q4r_range_join", "q4a_asof_join",
+    "q4p_stream_append_windows", "qt1_prep_pipeline", "q5g_doc_chunking",
 ]
 
-# Round 9 (r8 verdict task 5): one representative per post-r4 family
-# promoted into the headline pass discipline (min-of-3, own budget) so
-# the cross-round chain guards the newest surface too: q9a (storage
-# layout), q6b (semantic dedup, the production shape), q77 (IVF-PQ ANN),
-# q5h (winnowing fingerprints, post-r8-restructure). Reported in
-# `headline32_total`; `value` stays the legacy-28 total.
-HEADLINE_R9 = [
-    "q9a_zorder_layout",
-    "q6b_semantic_dedup_scaled",
-    "q77_knn_ivfpq",
-    "q5h_winnow_fingerprint",
-]
-
-# Round 10 (r9 verdict task 6): q2a promoted — it re-runs q21's full
-# running-window pass and digests it, so the headline chain now guards
-# the window family's data-proportional path. Reported in
-# `headline33_total`; `headline32_total` (legacy 28 + the 4 r9
-# promotions) and the legacy-28 `value` chains stay untouched.
-HEADLINE_R10 = [
-    "q2a_window_digest_running",
-]
-
-# Round 11 (r10 verdict task 8): q4zk promoted — the applyInPandasWithState
-# funnel is the only stateful-streaming machinery in the headline chain,
-# so micro-batch startup + per-user state cost now has a guarded series.
-# Reported in `headline34_total`; all earlier chains stay untouched.
-HEADLINE_R11 = [
-    "q4zk_stream_funnel",
-]
-
-HEADLINE = HEADLINE_LEGACY + HEADLINE_R9 + HEADLINE_R10 + HEADLINE_R11
-
-# heavy queries benched since r02 — timed and reported, but kept OUT of
-# the headline total so BENCH_rN totals stay comparable round over round
+# Timed and reported per query and per family, outside `value`.
 EXTRA = [
-    "q67_dedup_clusters",
-    "q73_knn_ann_ivf",
-    # round 4 additions: timed for evidence, out of the headline total
-    "q68_semantic_dedup",
-    "q69_substring_dup",
-    "q5k_bm25",
-    "q78_sq_encode",
-    "q79_hybrid_rrf",
-    "q8i_image_near_dup",
-    "q7a_stream_sq_ingest",
-    "q5l_perplexity_buckets",
-    "q8j_stream_image_ingest",
-    "q1x_quality_audit",
-    "q1y_snapshot_diff",
-    "qt4_stream_ingest",
-    # round 5 additions: timed for evidence, out of the headline total
-    "q6a_incremental_dedup",
-    "q4b_stream_outer_join",
-    "q4n_ohlc_bars",
-    "q83g_eval_golden",
-    "q8d2_jpeg420_golden",
-    "q6e_bloom_prescreen",
-    "q9b_sketch_rollup",
-    "q7c_mutual_knn",
-    # round 6 additions: timed for evidence, out of the headline total
-    "q6f_chunk_dedup",
-    "q9c_compaction_plan",
-    "q9d_range_partition_plan",
-    "q9e_kmv_quantile_rollup",
-    "q9f_bloom_skipping",
-    "q8m_audio_spectrogram",
-    "q5o_dsir_select",
-    "q7e_binary_hamming",
-    # round 7 additions: timed for evidence, out of the headline total
-    "q7f_mmr_rerank",
-    "q7g_radius_search",
-    "q9g_deletion_vectors",
-    "q6g_pagerank",
-    "q6h_kmv_source_overlap",
-    "q5p_ngram_novelty",
-    "q9h_incremental_view_maintenance",
-    "q7h_filtered_knn",
-    # round 8 additions: timed for evidence, out of the headline total
-    "q9i_scd2_history",
-    "q4za_markov_transitions",
-    "q7i_recall_eval",
-    # round 8 late-session additions (monitoring/curation layer)
-    "q6i_canonical_pick",
-    "q5r_vocab_drift",
-    "q4zb_seasonal_baseline",
-    "q7j_centroid_drift",
-    "q7k_cell_balance",
-    "q9j_clustering_depth",
-    "q4zc_stream_anomaly_alerts",
-    "q9k_vacuum_plan",
-    "q29_cumulative_share",
-    "q4zd_user_growth",
-    "qt5_corpus_health",
-    "q8n_media_audit",
-    # round 9 additions: timed for evidence, out of the headline total
-    "q4ze_retention_triangle",
-    "q4zf_rfm_segments",
-    "q5q_length_bands",
-    "q7l_dim_variance",
-    "q9l_partition_evolution",
-    "q8o_transcode_audit",
-    # (q2a promoted to HEADLINE_R10 in round 10)
-    "q2b_window_digest_lag",
-    "q2c_window_digest_ranks",
-    "q4zg_attribution",
-    "q4zh_temporal_leakage",
-    "q9m_manifest_diff",
-    # round 10 additions: timed for evidence, out of the headline total
-    "q4zi_conversion_funnel",
-    "q5s_zipf_profile",
-    "q6j_dup_size_histogram",
-    "q4zj_entry_paths",
-    # (q4zk promoted to HEADLINE_R11 in round 11)
-    "q1aa_expectation_suite",
-    "q4zl_ab_uplift",
-    "q2d_moving_median",
-    "q1ab_xml_roundtrip",
-    "q9n_occ_conflicts",
-    "q3f_importance_sample",
-    # round 11 additions: timed for evidence, out of the headline total
-    "q5t_bpe_encode",
-    "q7m_graph_ann",
-    "q6k_lsh_calibration",
-    "q5u_quality_classifier",
-    "q4zm_funnel_latency",
-    "q7n_farthest_first_init",
-    "q9o_hilbert_layout",
-    "q8p_image_phash",
-    "q4zo_periodicity",
-    "q4zn_stream_funnel_latency",
-    "q9p_lww_upsert",
-    "q7o_ivf_probe_curve",
-    "qt6_index_build",
-    "qt7_tokenize_pack",
-    "q9q_time_travel",
-    "q4zp_cusum_changepoint",
-    "q7p_silhouette",
-    "q5w_chi2_drift",
+    "q67_dedup_clusters", "q73_knn_ann_ivf", "q68_semantic_dedup",
+    "q69_substring_dup", "q5k_bm25", "q78_sq_encode", "q79_hybrid_rrf",
+    "q8i_image_near_dup", "q7a_stream_sq_ingest", "q5l_perplexity_buckets",
+    "q8j_stream_image_ingest", "q1x_quality_audit", "q1y_snapshot_diff",
+    "qt4_stream_ingest", "q6a_incremental_dedup", "q4b_stream_outer_join",
+    "q4n_ohlc_bars", "q83g_eval_golden", "q8d2_jpeg420_golden",
+    "q6e_bloom_prescreen", "q9b_sketch_rollup", "q7c_mutual_knn", "q6f_chunk_dedup",
+    "q9c_compaction_plan", "q9d_range_partition_plan", "q9e_kmv_quantile_rollup",
+    "q9f_bloom_skipping", "q8m_audio_spectrogram", "q5o_dsir_select",
+    "q7e_binary_hamming", "q7f_mmr_rerank", "q7g_radius_search",
+    "q9g_deletion_vectors", "q6g_pagerank", "q6h_kmv_source_overlap",
+    "q5p_ngram_novelty", "q9h_incremental_view_maintenance", "q7h_filtered_knn",
+    "q9i_scd2_history", "q4za_markov_transitions", "q7i_recall_eval",
+    "q6i_canonical_pick", "q5r_vocab_drift", "q4zb_seasonal_baseline",
+    "q7j_centroid_drift", "q7k_cell_balance", "q9j_clustering_depth",
+    "q4zc_stream_anomaly_alerts", "q9k_vacuum_plan", "q29_cumulative_share",
+    "q4zd_user_growth", "qt5_corpus_health", "q8n_media_audit",
+    "q4ze_retention_triangle", "q4zf_rfm_segments", "q5q_length_bands",
+    "q7l_dim_variance", "q9l_partition_evolution", "q8o_transcode_audit",
+    "q2b_window_digest_lag", "q2c_window_digest_ranks", "q4zg_attribution",
+    "q4zh_temporal_leakage", "q9m_manifest_diff", "q4zi_conversion_funnel",
+    "q5s_zipf_profile", "q6j_dup_size_histogram", "q4zj_entry_paths",
+    "q1aa_expectation_suite", "q4zl_ab_uplift", "q2d_moving_median",
+    "q1ab_xml_roundtrip", "q9n_occ_conflicts", "q3f_importance_sample",
+    "q5t_bpe_encode", "q7m_graph_ann", "q6k_lsh_calibration",
+    "q5u_quality_classifier", "q4zm_funnel_latency", "q7n_farthest_first_init",
+    "q9o_hilbert_layout", "q8p_image_phash", "q4zo_periodicity",
+    "q4zn_stream_funnel_latency", "q9p_lww_upsert", "q7o_ivf_probe_curve",
+    "qt6_index_build", "qt7_tokenize_pack", "q9q_time_travel",
+    "q4zp_cusum_changepoint", "q7p_silhouette", "q5w_chi2_drift",
+    "q9a_zorder_layout", "q6b_semantic_dedup_scaled", "q77_knn_ivfpq",
+    "q5h_winnow_fingerprint", "q2a_window_digest_running", "q4zk_stream_funnel",
 ]
+
+HEADLINE_PASSES, EXTRA_PASSES = 3, 2
 
 
 def calibration_probe(spark) -> float:
@@ -220,218 +103,117 @@ def calibration_probe(spark) -> float:
     return _time.perf_counter() - t0
 
 
-def main() -> None:
+def time_queries(spark, fns: dict, sf_dir: str, passes: int) -> dict:
+    """Run each `fns[name](spark, path)` into the noop sink, `passes` times.
+
+    Pass p reads `sf_dir` through a symlink path no other pass uses. Returns
+    per query and pass `times` (s, net of steal) and `wall` (raw s); for
+    queries that ran streams, `startup`: wall minus the triggerExecution of
+    the runs perfbench's StreamTracker assigns to the query. A failing query
+    goes to `failures` {name: error}, leaves `times` and is not retried.
+    `steal_share` covers the whole call."""
+    if PERFBENCH_DIR not in sys.path:
+        sys.path.insert(0, PERFBENCH_DIR)
+    from run import Interval
+    from sparktrace import StreamTracker
+
+    tracker = StreamTracker()
+    spark.streams.addListener(tracker)
+    root = tempfile.mkdtemp(prefix="bench-paths-")
+    out = {"times": {n: [] for n in fns}, "wall": {n: [] for n in fns},
+           "startup": {}, "failures": {}}
+    whole = Interval()
+    try:
+        for p in range(passes):
+            # keep the basename: scratch outputs are tagged with it
+            path = os.path.join(root, str(p), os.path.basename(os.path.normpath(sf_dir)))
+            os.makedirs(os.path.dirname(path))
+            os.symlink(os.path.abspath(sf_dir), path)
+            for name, fn in fns.items():
+                if name in out["failures"]:
+                    continue
+                tracker.current = (name, p)
+                spark.sparkContext.setJobDescription(f"{name}#{p}")
+                interval = Interval()
+                try:
+                    fn(spark, path).write.format("noop").mode("overwrite").save()
+                except Exception as exc:  # one bad query must not end the run
+                    out["failures"][name] = f"{type(exc).__name__}: {exc}"[:200]
+                    del out["times"][name], out["wall"][name]
+                    continue
+                t = interval.stop()
+                out["times"][name].append(t["net_s"])
+                out["wall"][name].append(t["wall_s"])
+                runs = tracker.runs_of((name, p))
+                if runs:
+                    tracker.wait_terminated()
+                    trigger_s = sum(b["trigger_s"] for r in runs for b in tracker.batches_of(r))
+                    out["startup"].setdefault(name, []).append(t["wall_s"] - trigger_s)
+    finally:
+        tracker.current = None
+        spark.sparkContext.setJobDescription(None)
+        spark.streams.removeListener(tracker)
+        shutil.rmtree(root, ignore_errors=True)
+    out["steal_share"] = whole.stop()["steal_share"]
+    return out
+
+
+def summarize(res: dict) -> dict:
+    """Per query: `cold` (pass 1), `warm` (min over the later passes) and,
+    for streaming queries, the `startup` of the warm pass."""
+    rows = {}
+    for name, ts in res["times"].items():
+        k = min(range(1, len(ts)), key=ts.__getitem__)
+        rows[name] = {"cold": round(ts[0], 3), "warm": round(ts[k], 3)}
+        if name in res["startup"]:
+            rows[name]["startup"] = round(res["startup"][name][k], 3)
+    return rows
+
+
+def main(argv: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from tf_datapipeline_spark import registry
     from tf_datapipeline_spark.session import get_spark
 
     spark = get_spark("tf_datapipeline_spark-bench")
     qs = registry.queries()
+    if argv:
+        names = list(qs) if argv[0] == "ALL" else [n for n in argv[0].split(",") if n]
+        res = time_queries(spark, {n: qs[n] for n in names}, sf_dir, HEADLINE_PASSES)
+        for name, row in summarize(res).items():
+            print(json.dumps({name: row}))
+        print(json.dumps({"sf": sf_dir, "steal_share": round(res["steal_share"], 3),
+                          "failures": res["failures"]}))
+        return
+    rows, failures, steal = {}, {}, {}
+    for group, names, passes in (("headline", HEADLINE, HEADLINE_PASSES),
+                                 ("extra", EXTRA, EXTRA_PASSES)):
+        res = time_queries(spark, {n: qs[n] for n in names}, sf_dir, passes)
+        rows |= summarize(res)
+        failures |= res["failures"]
+        steal[group] = round(res["steal_share"], 3)
+    from run import module_of  # perfbench is on sys.path after time_queries
 
-    # JVM/codegen warmup on the tiny sf so timings reflect the engine,
-    # not first-call JIT.
-    qs["q01_pricing_summary"](spark, "/root/testdata/sf0.001").collect()
-
-    # Fixed-work host-speed probes: same work every round, so cross-round
-    # headline comparisons divide out host-state drift. Round 8 hardening
-    # (r7 verdict task 1b): the probe no longer runs ONLY before the
-    # passes — a run that starts quiet can still be starved mid-flight and
-    # carry a quiet-looking calibration (r7's committed artifact did
-    # exactly that: calib 0.86 with 26-31x mid-run stalls). Probes now
-    # interleave between every pass of every group; `calibration_sec`
-    # stays the MIN (comparable to r5-r7) and `calibration_max` exposes
-    # the worst in-flight host state, so a starved run is visible in the
-    # artifact itself.
-    calibration_probes: list[float] = [
-        round(calibration_probe(spark), 3) for _ in range(3)
-    ]
-
-    failures: dict[str, str] = {}
-    # startup_sec for q*_stream_* rows: micro-batch machinery time (source
-    # discovery, offset log, planning) = bounded-run wall minus the
-    # engine's own triggerExecution durations, read from the streaming
-    # module's RUN_TELEMETRY. Reported for the pass whose total was KEPT
-    # (the min), so total and split describe the same run.
-    from tf_datapipeline_spark.streaming import events_stream as _es
-
-    startups: dict[str, float] = {}
-
-    def run_once(name: str) -> float | None:
-        tele_mark = len(_es.RUN_TELEMETRY)
-        t0 = time.perf_counter()
-        try:
-            df = qs[name](spark, sf_dir)
-            # noop sink: materializes every output column (a bare .count()
-            # would let Catalyst prune the expensive expressions away).
-            df.write.format("noop").mode("overwrite").save()
-        except Exception as exc:  # keep the bench alive past one bad query
-            failures[name] = f"{type(exc).__name__}: {exc}"[:200]
-            return None
-        t = time.perf_counter() - t0
-        runs = _es.RUN_TELEMETRY[tele_mark:]
-        if runs and (name not in timings or t < timings[name]):
-            startups[name] = round(
-                sum(r["total_sec"] - r["exec_sec"] for r in runs), 3
-            )
-        return t
-
-    # up to three passes per group, keep the min: pass 1 pays
-    # JIT/partition-index warmup, later passes are the steady state an
-    # always-on engine actually delivers. The shared host stalls
-    # individual queries for multi-second stretches at random
-    # (BENCH_NOTES.md); a third pass makes it overwhelmingly unlikely
-    # the same query is hit every time. HEADLINE runs first on its own
-    # budget so its min-of-3 stays comparable round over round no matter
-    # how many EXTRA queries accumulate; extra passes are skipped once a
-    # group is over budget.
-    #
-    # Round 12 (r11 verdict task 1): probe-GATED pass retry. BENCH_r11's
-    # only headline pass ran inside a multi-minute host stall burst
-    # (interleaved probes 5.3-25.9s vs the 0.62-0.8s quiet band), so
-    # min-of-1 recorded 2-4x-inflated times and PERF_r11 reported 33
-    # phantom regressions. A pass now counts as IN-BAND only when its
-    # trailing probe is within ~1.6x of the best probe seen this run
-    # (relative, so the same rule holds at the driver's low-core control
-    # runs where the constant-work probe is legitimately slower); the
-    # group keeps re-running passes — past its budget if necessary, up
-    # to 5 attempts / 3x budget — until at least TWO passes are in-band,
-    # so a single starved pass can never be the only record. Per-pass
-    # probes are recorded in the artifact (`pass_probes`). min-of-N
-    # semantics are unchanged: stalled passes still feed the min (a
-    # stall only ever inflates, never deflates, a noop-sink wall time).
-    timings: dict[str, float] = {}
-    pass_probes: dict[str, list[float]] = {}
-    inband_passes: dict[str, int] = {}
-
-    def _probe_accept() -> float:
-        return max(1.25, 1.6 * min(calibration_probes))
-
-    def run_group(group: str, names: list[str], budget: float) -> int:
-        group_start = time.perf_counter()
-        n_passes = 0
-        inband = 0
-        pass_probes[group] = []
-        while True:
-            n_passes += 1
-            for name in names:
-                if n_passes > 1 and name not in timings:
-                    continue  # failed on pass 1: don't retry failures
-                t = run_once(name)
-                if t is not None:
-                    timings[name] = (
-                        t if name not in timings else min(timings[name], t)
-                    )
-            p = round(calibration_probe(spark), 3)
-            calibration_probes.append(p)
-            pass_probes[group].append(p)
-            if p <= _probe_accept():
-                inband += 1
-            elapsed = time.perf_counter() - group_start
-            if n_passes >= 5 or elapsed > 3 * budget:
-                break  # hard caps: a long burst cannot run the bench away
-            if inband >= 2 and (elapsed > budget or n_passes >= 3):
-                break
-        inband_passes[group] = inband
-        return n_passes
-
-    # 140s: the 4 promoted queries add ~6-8s/pass over the legacy 28's
-    # ~23-25s, and three passes must still fit.
-    passes = run_group("headline", HEADLINE, 140)
-    # EXTRA grew to 41 queries (~80s/pass quiet): the old 100s budget
-    # allowed only ONE pass, so a single host stall stuck to a query's
-    # reported time with no re-pass to shake it off (a stall charged 127s
-    # to q9a in a round-8 shakeout run whose headline was clean). 190s
-    # bought a second pass at 41 queries; the late-round-8 additions
-    # take EXTRA to 56 (~103s/pass quiet), so 230s keeps min-of-2 honest.
-    # Round 9 promotes 3 to HEADLINE and adds 9 (EXTRA 62, ~115s/pass
-    # quiet after the codec speedup): 280s. Round 11 (optimization):
-    # EXTRA is 95 queries after the 18 round-11 additions (~90-100s/pass
-    # after this round's optimizations) — 340s keeps min-of-2+ honest at
-    # the grown set, same budget-per-query as the r9 sizing. Timing
-    # methodology (noop sink, min-of-N, interleaved probes) unchanged.
-    extra_passes = run_group("extra", EXTRA, 340)
-    timings = {k: round(v, 3) for k, v in timings.items()}
-    total = round(sum(timings[n] for n in HEADLINE_LEGACY if n in timings), 3)
-    total32 = round(
-        sum(
-            timings[n]
-            for n in HEADLINE_LEGACY + HEADLINE_R9
-            if n in timings
-        ),
-        3,
-    )
-    total33 = round(
-        sum(
-            timings[n]
-            for n in HEADLINE_LEGACY + HEADLINE_R9 + HEADLINE_R10
-            if n in timings
-        ),
-        3,
-    )
-    total34 = round(sum(timings[n] for n in HEADLINE if n in timings), 3)
-    extra_total = round(sum(timings[n] for n in EXTRA if n in timings), 3)
+    warm = {n: r["warm"] for n, r in rows.items()}
+    families: dict[str, float] = defaultdict(float)
+    for name, t in warm.items():
+        families[module_of(qs[name])] += t
     common = {
         "metric": "headline_queries_total_time",
-        "value": total,
+        "value": round(sum(warm[n] for n in HEADLINE if n in warm), 3),
         "unit": "sec",
-        # promoted-headline chains: headline32 = legacy 28 + the 4 r9
-        # family representatives (unchanged series), headline33 adds the
-        # r10 q2a window-family promotion; `value` stays the legacy-28
-        # chain metric.
-        "headline32_total": total32,
-        "headline33_total": total33,
-        "headline34_total": total34,
-        "extra_total": extra_total,
-        # constant-work CPU+shuffle probes now run interleaved between
-        # every pass of both groups (r7 verdict task 1b). calibration_sec
-        # is the MIN (same semantics as r5-r7, so cross-round headline
-        # ratios stay comparable); calibration_max is the WORST in-flight
-        # probe — a big min/max spread means the run was starved
-        # mid-flight and the artifact says so itself.
-        "calibration_sec": min(calibration_probes),
-        "calibration_max": max(calibration_probes),
-        # min over this many full passes (r1 recorded 1 pass, r2
-        # min-of-2 — state it so cross-round ratios are honest)
-        "passes": passes,
-        "extra_passes": extra_passes,
-        # r12: per-pass trailing probes + how many passes were in-band
-        # (probe <= max(1.25, 1.6*min)); see run_group. A reader can now
-        # tell from the artifact alone whether any kept pass ran quiet.
-        "pass_probes": pass_probes,
-        "inband_passes": inband_passes,
+        "families": {m: round(t, 3) for m, t in sorted(families.items())},
+        "passes": {"headline": HEADLINE_PASSES, "extra": EXTRA_PASSES},
+        "steal_share": steal,
         "sf": sf_dir,
         **({"failures": failures} if failures else {}),
     }
-    # Full-detail line: every query (headline + extra), per-streaming-query
-    # startup split, every interleaved probe.
-    print(
-        json.dumps(
-            {
-                **common,
-                "queries": timings,
-                "calibration_probes": calibration_probes,
-                # per-streaming-query startup (wall - triggerExecution) for
-                # the min-kept pass: attributes streaming regressions to
-                # micro-batch startup vs execution without re-running
-                "startup_sec": startups,
-            }
-        )
-    )
-    # Compact FINAL line (r7 verdict task 1a): the driver records only the
-    # tail of stdout and parses the LAST JSON line; BENCH_r07.json lost its
-    # headline total because the single detail line outgrew that capture.
-    # This line is self-sufficient (metric/value/unit/queries/sf per the
-    # driver contract) but carries only the HEADLINE per-query timings, so
-    # it stays well under the capture window no matter how EXTRA grows.
-    print(
-        json.dumps(
-            {
-                **common,
-                "queries": {n: timings[n] for n in HEADLINE if n in timings},
-            }
-        )
-    )
+    print(json.dumps({**common, "queries": warm,
+                      "cold": {n: r["cold"] for n, r in rows.items()},
+                      "startup_sec": {n: r["startup"] for n, r in rows.items() if "startup" in r}}))
+    # the driver parses the last line: HEADLINE times only, so it stays short
+    print(json.dumps({**common, "queries": {n: warm[n] for n in HEADLINE if n in warm}}))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -88,39 +88,11 @@ def _ntz(name: str, alias: str):
     return F.col(name).cast("timestamp_ntz").alias(alias)
 
 
-# Per-bounded-run telemetry appended by run_bounded/run_rollup_stream:
-# {"sink", "total_sec", "exec_sec"} where exec_sec sums the engine's own
-# triggerExecution durations (q.recentProgress) and total_sec is the
-# .start()->termination wall. bench.py snapshots this list around each
-# q*_stream_* query and reports startup_sec = total - exec, so a
-# regression in a streaming row can be attributed to micro-batch startup
-# (source discovery, offset log, planning) vs actual batch execution
-# without a manual adjudication pass (r6 verdict task 7: q4b read +29%
-# on a loaded host purely in startup).
-RUN_TELEMETRY: list[dict] = []
-
-
-def _record_run(name: str, q, t0: float) -> None:
-    import time as _time
-
-    total = _time.perf_counter() - t0
-    exec_ms = sum(
-        (p.get("durationMs") or {}).get("triggerExecution", 0)
-        for p in (q.recentProgress or [])
-    )
-    RUN_TELEMETRY.append(
-        {"sink": name, "total_sec": total, "exec_sec": exec_ms / 1000.0}
-    )
-
-
 def run_bounded(sdf: DataFrame, output_mode: str) -> DataFrame:
     """Drain all available input through the streaming plan into a memory
     sink and return the result as a batch DataFrame (B7: bounded-stream
     termination)."""
-    import time as _time
-
     name = f"stream_sink_{next(_sink_counter)}"
-    t0 = _time.perf_counter()
     q = (
         sdf.writeStream.format("memory")
         .queryName(name)
@@ -129,7 +101,6 @@ def run_bounded(sdf: DataFrame, output_mode: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    _record_run(name, q, t0)
     spark = sdf.sparkSession
     return spark.table(name)
 
@@ -546,9 +517,6 @@ def q4x_rollup_merge(out: str):
 
 def run_rollup_stream(spark: SparkSession, src: DataFrame, out: str, ck: str) -> None:
     """Drain `src` through the foreachBatch rollup merge into `out`."""
-    import time as _time
-
-    t0 = _time.perf_counter()
     q = (
         src.writeStream.foreachBatch(q4x_rollup_merge(out))
         .option("checkpointLocation", ck)
@@ -556,7 +524,6 @@ def run_rollup_stream(spark: SparkSession, src: DataFrame, out: str, ck: str) ->
         .start()
     )
     q.awaitTermination()
-    _record_run("rollup_merge", q, t0)
 
 
 _ROLLUP_SCHEMA = "user_id bigint, n_events bigint, sum_value decimal(28,6)"
