@@ -163,6 +163,9 @@ def summarize(res: dict) -> dict:
     for streaming queries, the `startup` of the warm pass."""
     rows = {}
     for name, ts in res["times"].items():
+        if len(ts) < 2:
+            raise ValueError(f"{name} ran {len(ts)} pass(es); summarize needs >= 2 "
+                             "(pass 1 is cold, the later ones give warm)")
         k = min(range(1, len(ts)), key=ts.__getitem__)
         rows[name] = {"cold": round(ts[0], 3), "warm": round(ts[k], 3)}
         if name in res["startup"]:

@@ -6,6 +6,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 import bench
 from tests.conftest import REPO_DIR, SF_SMOKE
 
@@ -70,6 +72,11 @@ def test_time_queries_core(spark):
     rows = bench.summarize(res)
     assert rows["recorder"]["warm"] == round(res["times"]["recorder"][1], 3)
     assert "startup" in rows["q47_stream_tumbling_window"]
+
+
+def test_summarize_needs_two_passes():
+    with pytest.raises(ValueError, match=r"ran 1 pass\(es\); summarize needs >= 2"):
+        bench.summarize({"times": {"q01_pricing_summary": [0.5]}, "startup": {}})
 
 
 _IMPORT_TOOLS = """

@@ -5,9 +5,13 @@ training loop: queue runners prefetch + shuffle_batch (EP1,
 train.py:113-129), Dataset iterators (EP2, train_dataset.py:110-135), or
 the hybrid prefetcher (EP3). Spark's equivalent of all three is the same
 plan: executors scan/decode/augment in parallel (the "prefetch threads"),
-Arrow streams batches to the driver, and `toLocalIterator` pulls them
-with backpressure (prefetchPartitions=True overlaps producer and
-consumer, the exact role of tf.train.start_queue_runners).
+and `toLocalIterator` pulls the rows to the driver one partition at a
+time with backpressure (prefetchPartitions=True overlaps producer and
+consumer, the exact role of tf.train.start_queue_runners). Arrow carries
+the batches only inside the executors' pandas UDFs; what crosses to the
+driver is pickled Rows (pyspark's `toLocalIterator` serves them through
+`BatchedSerializer(CPickleSerializer())`), so each pixel array arrives as
+a Python list that `batch_iterator` turns back into float32.
 
 The feed is DETERMINISTIC: epoch e reshuffles by the arithmetic
 permutation key with seed+e (reference reshuffles per epoch via
@@ -91,8 +95,9 @@ def batch_iterator(
 ) -> Iterator[tuple[int, np.ndarray, np.ndarray]]:
     """Yield (epoch, images [B,H,W,3] float32, labels [B] int64) —
     dataset.repeat + batch + one_shot_iterator (B1/B3/B4), ragged final
-    batch allowed (B2). Arrow-backed toLocalIterator keeps executor
-    prefetch ahead of the consumer (B6)."""
+    batch allowed (B2). toLocalIterator(prefetchPartitions=True) keeps
+    executor prefetch ahead of the consumer (B6); it ships pickled Rows,
+    not Arrow, so each row's pixel list is rebuilt as a float32 array."""
     for epoch in range(epochs):
         df = processed_records(records, out_h, out_w, seed, epoch, is_training)
         buf_px: list[np.ndarray] = []

@@ -20,14 +20,16 @@ def get_spark(app_name: str = "tf_datapipeline_spark") -> SparkSession:
     Scale rationale:
       - AQE on: runtime partition coalescing + skew-join splitting is the
         only robust answer to skewed keys at 100 TB.
-      - shuffle.partitions matches local cores here; on a real cluster this
-        is sized to ~2-3x total executor cores (AQE coalesces the rest).
+      - shuffle.partitions is max(local cores, 8) here; on a real cluster
+        this is sized to ~2-3x total executor cores (AQE coalesces the rest).
       - session timezone pinned UTC so results are comparable across
         engines (the DuckDB oracle is UTC-naive).
       - Arrow enabled: every pandas-UDF operator (image decode/augment,
         embedding kernels) moves data in Arrow batches, not pickled rows.
       - maxRecordsPerBatch bounded: multimodal rows are MB-scale; 10k-row
         Arrow batches of images would OOM an executor.
+      - Python workers run `worker_daemon`, pyspark's daemon with zip
+        importers that skip re-reading unchanged archives on every task.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
@@ -49,6 +51,7 @@ def get_spark(app_name: str = "tf_datapipeline_spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "tf_datapipeline_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
