@@ -352,7 +352,7 @@ def test_collect_sites_are_bounded_metadata_only():
         ("operators/pipeline.py", "grouped_offset_row_number"),
         ("operators/similarity.py", "q73_knn_ann_ivf"),  # k=16 centroid rows
         ("operators/similarity.py", "q77_knn_ivfpq"),  # k=16 seed-centroid rows
-        ("operators/similarity.py", "q7k_cell_balance"),  # <=16 seed rows
+        ("operators/similarity.py", "nearest_seed"),  # <=16 seed rows (q7k, q7b)
         # ONE argmax row per maximin round, K-1 rounds total (the
         # sequential farthest-first ledger q7n/qt6 seed from — each
         # round's distance update stays executor-side; only the single
@@ -364,7 +364,6 @@ def test_collect_sites_are_bounded_metadata_only():
         # to semcells.semantic_cells_df in r6 (shared by q6b and q7c).
         ("operators/semcells.py", "semantic_cells_df"),
         ("streaming/events_stream.py", "q7a_stream_sq_ingest"),  # 64 dim-range rows
-        ("streaming/events_stream.py", "q7b_stream_ivf_assign"),  # <=16 seed rows
         # query-set-bounded shortlist: _N_QUERIES x _MMR_POOL rel rows +
         # _N_QUERIES x _MMR_POOL^2 pairwise sims (~4.6k rows, corpus-
         # independent — the distributed corpus pass happens BEFORE the

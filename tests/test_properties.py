@@ -323,25 +323,31 @@ def test_materialization_is_per_invocation(spark, table):
     assert rows_a == rows_b and rows_a
 
 
-def test_invalidate_caches_exposes_in_place_rewrites(spark, tmp_path):
-    """The documented hook for an in-place table rewrite: after
-    catalog.invalidate_caches() every query must answer from the
-    rewritten data. q67 (CC labels), q72 (dims), q9e (KMV base) and q9g
-    (DV positions) once kept their shared tables in session memos that
-    outlived the hook and kept returning the pre-rewrite answer."""
+def _copy_of_smoke_tables(sf_dir: str) -> None:
     import shutil
 
-    import pyarrow.parquet as pq
-
     from tests.conftest import SF_SMOKE
-    from tests.oracle_harness import compare
-    from tf_datapipeline_spark import catalog, registry
+    from tf_datapipeline_spark import catalog
 
-    sf_dir = str(tmp_path)
     for name in catalog.TABLES:
         shutil.copyfile(
             catalog.table_path(SF_SMOKE, name), catalog.table_path(sf_dir, name)
         )
+
+
+def test_refresh_table_exposes_in_place_rewrites(spark, tmp_path):
+    """An in-place table rewrite followed by Spark's own
+    `spark.catalog.refreshTable` is visible to every query. q67 (CC
+    labels), q72 (dims), q9e (KMV base) and q9g (DV positions) once kept
+    their shared tables in session memos that kept returning the
+    pre-rewrite answer."""
+    import pyarrow.parquet as pq
+
+    from tests.oracle_harness import compare
+    from tf_datapipeline_spark import catalog, registry
+
+    sf_dir = str(tmp_path)
+    _copy_of_smoke_tables(sf_dir)
     names = [
         "q67_dedup_clusters",
         "q72_label_centroids",
@@ -354,11 +360,13 @@ def test_invalidate_caches_exposes_in_place_rewrites(spark, tmp_path):
         for n in names
     }
     # keep every other row: same schema, different contents
-    for name in ("documents", "embeddings", "events", "orders"):
+    rewritten = ("documents", "embeddings", "events", "orders")
+    for name in rewritten:
         path = catalog.table_path(sf_dir, name)
         t = pq.read_table(path)
         pq.write_table(t.take(list(range(0, t.num_rows, 2))), path)
-    catalog.invalidate_caches()
+    for name in rewritten:
+        spark.catalog.refreshTable(name)
     for n in names:
         df = qs[n](spark, sf_dir)
         compare(df, oracle[n], sf_dir, name=n)
@@ -366,15 +374,42 @@ def test_invalidate_caches_exposes_in_place_rewrites(spark, tmp_path):
         assert after != before[n], f"{n}: the rewrite did not change its answer"
 
 
+def test_refresh_table_reads_a_table_grown_in_place(spark, tmp_path):
+    """A view pins its table's file listing: a file that grows in place
+    is read only up to its old length, so rows go missing until
+    `spark.catalog.refreshTable` lists it again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tf_datapipeline_spark import catalog
+
+    sf_dir = str(tmp_path)
+    _copy_of_smoke_tables(sf_dir)
+    path = catalog.table_path(sf_dir, "orders")
+    t = pq.read_table(path)
+    assert catalog.load_table(spark, sf_dir, "orders").count() == t.num_rows
+    pq.write_table(pa.concat_tables([t] * 40), path)
+    stale = catalog.load_table(spark, sf_dir, "orders").count()
+    assert stale < 40 * t.num_rows, "the old listing read the grown file whole"
+    spark.catalog.refreshTable("orders")
+    assert catalog.load_table(spark, sf_dir, "orders").count() == 40 * t.num_rows
+
+
 def test_register_views_recovers_dropped_view(spark):
     """r12 (r11 advice): the register_views same-dir skip must notice a
     dropped temp view and re-register instead of silently returning."""
+    import pyarrow.parquet as pq
+
     from tests.conftest import SF_SMOKE
-    from tf_datapipeline_spark.catalog import register_views
+    from tf_datapipeline_spark.catalog import load_table, register_views, table_path
 
     register_views(spark, SF_SMOKE)
     spark.catalog.dropTempView("documents")
     register_views(spark, SF_SMOKE)
+    assert spark.catalog.tableExists("documents")
+    spark.catalog.dropTempView("documents")
+    n = pq.ParquetFile(table_path(SF_SMOKE, "documents")).metadata.num_rows
+    assert load_table(spark, SF_SMOKE, "documents").count() == n
     assert spark.catalog.tableExists("documents")
 
 

@@ -275,10 +275,3 @@ def decode_image(data: bytes, image_format: str) -> np.ndarray:
     if dec is None:
         raise ValueError(f"unknown image format {fmt!r}")
     return dec(data)
-
-
-def image_dims(data: bytes, image_format: str) -> tuple[int, int]:
-    """(height, width) probe — reference ImageReader.read_image_dims
-    (make_tf_record.py:21-23)."""
-    arr = decode_image(data, image_format)
-    return int(arr.shape[0]), int(arr.shape[1])

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import load_table, materialize, register_views
@@ -413,6 +413,56 @@ def q72_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_CELLS = 16
 _N_PROBE = 4
 _CENTROID_STRIDE = 37  # centroid c = corpus vector with vec_id = 8 + 37*c
+
+
+def nearest_seed(
+    spark: SparkSession, sf_dir: str, df: DataFrame
+) -> tuple[DataFrame, Column]:
+    """Route each `embedding` row of `df` (a batch or a stream) to its
+    nearest seed centroid: returns `df` with one named distance column
+    `_d2_<cell>` per seed, and the argmin struct `(d2, cell)` over them.
+    Cells are the seeds this corpus has (the oracles' `cw` JOIN drops
+    missing seed ids the same way). Each distance is an order-pinned
+    double fold over the zipped squared diffs, the bitwise twin of the
+    oracles' `list_reduce` (the 0.0 init is inert: every term is >= 0).
+    Ties break to the lowest cell, as the oracles' ORDER BY d2, cell.
+    The folds are projected to named columns first because nesting them
+    inside a when-chain copies each 64-term tree once per level."""
+    seed_ids = [8 + _CENTROID_STRIDE * k for k in range(_N_CELLS)]
+    seed_rows = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id").isin(seed_ids))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    cents = {
+        seed_ids.index(r.vec_id): [float(x) for x in r.embedding]
+        for r in seed_rows
+    }
+    ks = sorted(cents)
+    for k in ks:
+        arr = F.array(*[F.lit(v) for v in cents[k]])
+        df = df.withColumn(
+            f"_d2_{k}",
+            F.aggregate(
+                F.zip_with(
+                    "embedding",
+                    arr,
+                    lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
+                ),
+                F.lit(0.0),
+                lambda acc, t: acc + t,
+            ),
+        )
+    best = F.array_sort(
+        F.array(
+            *[
+                F.struct(F.col(f"_d2_{k}").alias("d2"), F.lit(k).alias("cell"))
+                for k in ks
+            ]
+        )
+    ).getItem(0)
+    return df, best
 
 
 @query("q73_knn_ann_ivf")
@@ -2006,42 +2056,7 @@ def _cell_balance_oracle() -> str:
 
 @query("q7k_cell_balance", oracle=_cell_balance_oracle())
 def q7k_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    seed_ids = [8 + _CENTROID_STRIDE * k for k in range(_N_CELLS)]
-    seed_rows = (
-        emb.filter(F.col("vec_id").isin(seed_ids))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    cents = {
-        seed_ids.index(r.vec_id): [float(x) for x in r.embedding]
-        for r in seed_rows
-    }
-
-    def d2_to(vals: list[float]):
-        arr = F.array(*[F.lit(v) for v in vals])
-        return F.aggregate(
-            F.zip_with(
-                "embedding",
-                arr,
-                lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
-    ks = sorted(cents)
-    df = emb
-    for k in ks:
-        df = df.withColumn(f"_d2_{k}", d2_to(cents[k]))
-    best = F.array_sort(
-        F.array(
-            *[
-                F.struct(F.col(f"_d2_{k}").alias("d2"), F.lit(k).alias("cell"))
-                for k in ks
-            ]
-        )
-    ).getItem(0)
+    df, best = nearest_seed(spark, sf_dir, load_table(spark, sf_dir, "embeddings"))
     percell = (
         df.select(best.getField("cell").cast("int").alias("cell"))
         .groupBy("cell")

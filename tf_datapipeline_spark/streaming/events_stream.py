@@ -30,17 +30,11 @@ from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import (
     events_raw_ts_type,
-    footer_schema,
     nanos_to_timestamp,
-    table_path,
+    read_table_stream,
 )
 from tf_datapipeline_spark.functions.exact import dsum, sql_dsum
 from tf_datapipeline_spark.registry import query
-
-_EVENTS_SCHEMA_TMPL = (
-    "event_id bigint, ts {ts_type}, user_id bigint, event_type string, "
-    "value double, props string"
-)
 
 _sink_counter = itertools.count()
 
@@ -54,9 +48,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The stream source needs a schema up front, and the driver testdata
     has stored ts two ways across rounds (TIMESTAMP(NANOS), readable only
     as raw-nanos bigint under the legacy conf; plain TIMESTAMP(µs) no-tz,
-    which Spark reads as TIMESTAMP_NTZ natively) — so the schema and
-    the nanos recipe come from the catalog, which owns every storage
-    variant (`catalog.events_raw_ts_type`, `catalog.nanos_to_timestamp`),
+    which Spark reads as TIMESTAMP_NTZ natively) — so the source (with
+    its footer schema) and the nanos recipe come from the catalog, which
+    owns every storage variant (`catalog.read_table_stream`,
+    `catalog.events_raw_ts_type`, `catalog.nanos_to_timestamp`),
     instead of hard-coding one era's recipe here.
 
     One type wrinkle: withWatermark rejects TIMESTAMP_NTZ, so the stream
@@ -67,14 +62,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (catalog normalizes batch events.ts to NTZ — what DuckDB reads for
     naive parquet timestamps)."""
     raw_ts = events_raw_ts_type(spark, sf_dir)
-    # the file stream source wants a DIRECTORY; select the single table
-    # file via glob filter (a production stream would watch a drop dir).
-    sdf = (
-        spark.readStream.schema(_EVENTS_SCHEMA_TMPL.format(ts_type=raw_ts))
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    sdf = read_table_stream(spark, sf_dir, "events")
     if raw_ts == "bigint":  # TIMESTAMP(NANOS) read as raw nanos
         sdf = sdf.withColumn("ts", nanos_to_timestamp("ts"))
     else:  # NTZ (or already tz-aware): carry as tz-aware for watermarks
@@ -759,12 +747,8 @@ def q6c_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stream side: the delta slice of `documents`, signature as pure row
     # expressions (shingle array projected ONCE, then k permutation mins)
-    schema = footer_schema(table_path(sf_dir, "documents"))
     sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
+        read_table_stream(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _DELTA_MOD == 0)
     )
     h32 = sql_hash32_dialect("substr(text, CAST(i AS INT), 5)", "spark")
@@ -860,12 +844,8 @@ def q7a_stream_sq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     mn_arr = F.array(*[F.lit(r.mn) for r in rng])
     mx_arr = F.array(*[F.lit(r.mx) for r in rng])
 
-    schema = footer_schema(table_path(sf_dir, "embeddings"))
     sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .load(sf_dir)
+        read_table_stream(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % _VEC_DELTA_MOD == 0)
     )
     with_rng = sdf.select(
@@ -943,12 +923,8 @@ def q8j_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.operators.dedup import _DELTA_MOD
     from tf_datapipeline_spark.sources.images import synthetic_pixels
 
-    schema = footer_schema(table_path(sf_dir, "documents"))
     sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
+        read_table_stream(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _DELTA_MOD == 0)
         .select("doc_id", "lang")
     )
@@ -1088,12 +1064,8 @@ def qt4_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col(m).alias(f"i_{m}") for m in mcols],
     )
 
-    schema = footer_schema(table_path(sf_dir, "documents"))
     sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
+        read_table_stream(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _DELTA_MOD == 0)
     )
     toks = F.split(F.trim(F.col("text")), r"\s+")
@@ -1286,66 +1258,16 @@ def _stream_ivf_oracle() -> str:
 
 @query("q7b_stream_ivf_assign", oracle=_stream_ivf_oracle())
 def q7b_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.catalog import load_table
     from tf_datapipeline_spark.operators.dedup import _DELTA_MOD
-    from tf_datapipeline_spark.operators.similarity import (
-        _CENTROID_STRIDE,
-        _N_CELLS,
+    from tf_datapipeline_spark.operators.similarity import nearest_seed
+
+    sdf, best = nearest_seed(
+        spark,
+        sf_dir,
+        read_table_stream(spark, sf_dir, "embeddings").filter(
+            F.col("vec_id") % _DELTA_MOD == 0
+        ),
     )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    seed_ids = [8 + _CENTROID_STRIDE * k for k in range(_N_CELLS)]
-    seed_rows = (
-        emb.filter(F.col("vec_id").isin(seed_ids))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    # cells = whatever seeds exist in this corpus (q73/q77 convention —
-    # the oracle's cw JOIN drops missing seed ids the same way)
-    cents = {
-        seed_ids.index(r.vec_id): [float(x) for x in r.embedding]
-        for r in seed_rows
-    }
-
-    schema = footer_schema(table_path(sf_dir, "embeddings"))
-    sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .load(sf_dir)
-        .filter(F.col("vec_id") % _DELTA_MOD == 0)
-    )
-
-    def d2_to(vals: list[float]):
-        # order-pinned double fold over the zipped squared diffs — the
-        # bitwise twin of the oracle's list_reduce (0.0 init is inert:
-        # every term is >= 0, and 0.0 + t == t in IEEE)
-        arr = F.array(*[F.lit(v) for v in vals])
-        return F.aggregate(
-            F.zip_with(
-                "embedding",
-                arr,
-                lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
-    # Each distance fold is projected to a NAMED column first; the argmin
-    # then sorts an array of tiny (d2, cell) struct references — nesting
-    # the folds inside a when-chain would copy each 64-term tree once per
-    # level (exponential analyzer blow-up).
-    ks = sorted(cents)
-    for k in ks:
-        sdf = sdf.withColumn(f"_d2_{k}", d2_to(cents[k]))
-    best = F.array_sort(
-        F.array(
-            *[
-                F.struct(F.col(f"_d2_{k}").alias("d2"), F.lit(k).alias("cell"))
-                for k in ks
-            ]
-        )
-    ).getItem(0)
     out = sdf.select(
         "vec_id",
         best.getField("cell").cast("int").alias("cell"),
