@@ -11,6 +11,7 @@ from tests.conftest import SF_SMOKE
 from tf_datapipeline_spark import registry
 from tf_datapipeline_spark.plans.inspect import (
     codegen_subtree_count,
+    formatted_plan,
     has_operator,
     has_pushed_filters,
     join_strategies,
@@ -556,3 +557,64 @@ def test_docs_streams_use_adaptive_source(spark, monkeypatch, tmp_path):
         assert not exchanges(name, split_dir), (
             f"{name}: round-robin Exchange on the split corpus"
         )
+
+
+def test_lsh_pairs_plan_is_one_join(spark):
+    """q63's executed plan bands the signatures with ONE self-join of the
+    band index on (band, bkey), the cap's window and both join sides
+    reading one exchange — not a join per band (plus a cap join each)
+    under a Union."""
+    df = _q("q63_minhash_lsh_pairs", spark)
+    assert df.collect()  # runs the frame's own plan to its final form
+    final = formatted_plan(df).split("== Final Plan ==")[1]
+    final = final.split("== Initial Plan ==")[0]
+    joins = [
+        line
+        for line in final.splitlines()
+        if any(op in line for op in ("HashJoin", "SortMergeJoin", "NestedLoopJoin"))
+    ]
+    assert len(joins) == 1, joins
+    assert "Union" not in final
+    assert final.count("Exchange") == 3, final  # index, its reuse, DISTINCT
+    assert "ReusedExchange" in final, final
+
+
+def test_canonical_plan_ignores_expand_group_order():
+    """tools/capture_plans.canonical_plan: an Expand whose distinct
+    groups Spark ordered by expression ids reads the same in either
+    order, as do the attribute lists downstream of it."""
+    import importlib.util
+    import os
+
+    from tests.conftest import REPO_DIR
+
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans", os.path.join(REPO_DIR, "tools", "capture_plans.py")
+    )
+    capture_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(capture_plans)
+
+    def plan(groups: list[str], base: int) -> str:
+        # `groups` in Spark's order; `base` shifts every expression id
+        g1, g2 = (f"{g}#{base + i}L" for i, g in enumerate(groups))
+        split, gid = f"split#{base + 2}", f"gid#{base + 3}"
+        shard_gid = 1 + groups.index("shard")
+        return "\n".join(
+            [
+                "(4) Expand",
+                f"Input [3]: [{split}, {g1}, {g2}]",
+                f"Arguments: [[{split}, null, null, 0], [{split}, {g1}, null, 1], "
+                f"[{split}, null, {g2}, 2]], [{split}, {g1}, {g2}, {gid}]",
+                "(5) Exchange",
+                f"Arguments: hashpartitioning({split}, {g1}, {g2}, {gid}, 8)",
+                "(6) HashAggregate",
+                f"Functions [1]: [partial_count(shard#{base + groups.index('shard')}L)"
+                f" FILTER (WHERE ({gid} = {shard_gid}))]",
+            ]
+        )
+
+    a = plan(["shard", "label"], 10)
+    b = plan(["label", "shard"], 30)
+    canon = capture_plans.canonical_plan
+    assert canon(a) == canon(b)
+    assert canon(a) != canon(plan(["shard", "lang"], 10))

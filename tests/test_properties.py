@@ -197,9 +197,10 @@ def test_connected_components_independent_of_partitions_and_batches(spark):
 
 def test_cc_labels_build_runs_few_jobs(spark):
     """The pair graph's labels on the smoke corpus — signature build,
-    LSH pairs, contraction and the confirming round — stay within 25
-    Spark jobs. A per-round count join or a separate pairs checkpoint
-    coming back pushes it past the bound (it was 45 jobs)."""
+    LSH pairs, contraction and the confirming round — stay within 16
+    Spark jobs. A per-round count join, a separate pairs checkpoint or
+    per-band pair joins coming back push it past the bound (it was 45
+    jobs, then 20 with one join per band)."""
     from tests.conftest import SF_SMOKE
     from tf_datapipeline_spark.operators.dedup import materialize_cc_labels
 
@@ -212,7 +213,34 @@ def test_cc_labels_build_runs_few_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert labels.count() > 0
-    assert n_jobs <= 25, n_jobs
+    assert n_jobs <= 16, n_jobs
+
+
+def test_hot_bucket_caps_bind_like_the_oracle(spark, monkeypatch):
+    """The hot-bucket caps never bind at the test data's scales (largest
+    sf0.001 bucket: 8 docs per MinHash band, 123 per aHash band), so
+    lower them until they do: q63 and q8i must still match their DuckDB
+    twins, rebuilt under the same caps, and must lose pairs."""
+    from tests.conftest import SF_SMOKE
+    from tests.oracle_harness import compare
+    from tf_datapipeline_spark.operators import dedup, multimodal
+
+    cases = [
+        (dedup, "_BUCKET_CAP", 3, dedup.q63_minhash_lsh_pairs, dedup._lsh_pairs_sql),
+        (
+            multimodal,
+            "_AHD_CAP",
+            16,
+            multimodal.q8i_image_near_dup,
+            multimodal._image_near_dup_oracle,
+        ),
+    ]
+    for module, cap, low, q, oracle in cases:
+        uncapped = q(spark, SF_SMOKE).count()
+        monkeypatch.setattr(module, cap, low)
+        df = q(spark, SF_SMOKE)
+        compare(df, oracle(), SF_SMOKE, name=f"{q.__name__} {cap}={low}")
+        assert 0 < df.count() < uncapped, (q.__name__, uncapped)
 
 
 def test_substring_dup_interval_union(spark):

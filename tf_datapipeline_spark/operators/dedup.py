@@ -14,8 +14,10 @@ Scale design (100 TB):
   - shingling explodes ~(len-4) rows/doc; the per-doc MIN() aggregation is
     map-side partial, so the shuffle carries k integers per doc, not the
     shingles.
-  - LSH candidate generation is a band-wise EQUI-join (union of per-band
-    joins), never a cross join; band width 4 keeps the candidate count
+  - LSH candidate generation is ONE equi-join of a band index on
+    (band, exact band values), never a cross join (band_index /
+    band_pairs: one exchange, and the index carries the signatures, so
+    scoring needs no re-join); band width 4 keeps the candidate count
     ~0.2% of all pairs on this corpus's high baseline similarity.
   - exact dedup groups by full text here (cheap, exact); at PB scale swap
     the group key to sha2(text, 256) so the shuffle carries 32 bytes/row
@@ -26,7 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import (
@@ -148,13 +150,11 @@ def _sql_signature(dialect: str = "duckdb", src: str = "documents") -> str:
     return f"SELECT doc_id,\n             {mins}\n      FROM {sh} GROUP BY doc_id"
 
 
-def _with_prelude(dialect: str, body: str, need_sig: bool) -> str:
-    """Wrap a query body with the shingle (and signature) CTEs for the
-    oracle dialect; the Spark side pre-materializes the `sig` view
-    instead (see _materialize_sig) so it is computed once."""
-    if dialect == "spark":
-        return body
-    ctes = [f"shingles AS ({_sql_shingles(dialect)})"]
+def _with_prelude(body: str, need_sig: bool) -> str:
+    """Wrap an oracle query body with the DuckDB shingle (and signature)
+    CTEs; the Spark side pre-materializes the `sig` table instead (see
+    _materialize_sig) so it is computed once."""
+    ctes = [f"shingles AS ({_sql_shingles('duckdb')})"]
     if need_sig:
         ctes.append(f"sig AS ({_sql_signature()})")
     return "WITH " + ",\n    ".join(ctes) + "\n" + body
@@ -174,27 +174,141 @@ def _materialize_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(spark, sf_dir, "sig", _sql_signature("spark", src))
 
 
-def _minhash_signature_sql(dialect: str) -> str:
-    if dialect == "spark":
-        return "SELECT * FROM sig"
-    return _with_prelude(dialect, "SELECT * FROM sig", need_sig=True)
-
-
-@query("q62_minhash_signature", oracle=_minhash_signature_sql("duckdb"))
+@query(
+    "q62_minhash_signature",
+    oracle=_with_prelude("SELECT * FROM sig", need_sig=True),
+)
 def q62_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc MinHash signature (k=8) over hashed 5-char shingles.
     Reference analog: none (the reference has no dedup; driver-contract
     extension op)."""
-    _materialize_sig(spark, sf_dir)
-    return spark.sql(_minhash_signature_sql("spark"))
+    return _materialize_sig(spark, sf_dir)
+
+
+# --------------------------------------------------------------------------
+# Banded LSH, Spark side: ONE band index and ONE band pair join behind
+# every MinHash and image near-dup operator (q63, q65, q6a, q67 and the
+# qt1/qt2 composites through the pair graph, q8i, and the q6c/qt4
+# streams). The standard banding scheme (Leskovec, Rajaraman and Ullman,
+# *Mining of Massive Datasets*, ch. 3) keys each (doc, band) by the
+# band's values; docs sharing a key are candidates. The index carries
+# each doc's payload (signature or hash), so verification — the
+# filter-then-verify shape of string-similarity joins — scores a
+# candidate pair from the join's own columns, with no re-join.
+# --------------------------------------------------------------------------
+def band_keys(bands: list[list[Column]]) -> Column:
+    """array<array<bigint>>: element b is band b's bkey, the band's
+    exact values — equal keys mean equal bands, so no hash or string
+    key can collide."""
+    return F.array(*[F.array(*cols).cast("array<bigint>") for cols in bands])
+
+
+def band_index(
+    df: DataFrame, bands: list[list[Column]], cap: int | None = None
+) -> DataFrame:
+    """(band, bkey, *df's columns): one row per row of `df` and band
+    (see band_keys). With `cap`, a bucket (band, bkey) holding more than
+    `cap` rows is dropped whole — the deterministic hot-bucket guard of
+    _lsh_pairs_body, as a window COUNT that shares the pair join's
+    exchange."""
+    idx = df.select(F.posexplode(band_keys(bands)).alias("band", "bkey"), "*")
+    if cap is None:
+        return idx
+    n = F.count(F.lit(1)).over(Window.partitionBy("band", "bkey"))
+    return idx.withColumn("_n", n).filter(F.col("_n") <= cap).drop("_n")
+
+
+def band_pairs(index: DataFrame, **scores: Column) -> DataFrame:
+    """(doc_a, doc_b, *scores): each pair of `index` docs sharing a
+    bucket, doc_a < doc_b, once however many bands it shares. One
+    self-join on (band, bkey), a sort-merge join by hint: both sides
+    and the cap's window read ONE exchange of the index on (band, bkey)
+    (a broadcast of the index would ship it whole, and costs one more
+    job on small inputs). `scores` are named expressions over the two
+    sides' payload columns `a.<col>` and `b.<col>`. All output columns
+    are DISTINCT keys, so a filter on a score runs below the
+    DISTINCT."""
+    on = [
+        F.col("a.band") == F.col("b.band"),
+        F.col("a.bkey") == F.col("b.bkey"),
+        F.col("a.doc_id") < F.col("b.doc_id"),
+    ]
+    return (
+        index.alias("a")
+        .join(index.alias("b").hint("merge"), on)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[c.alias(name) for name, c in scores.items()],
+        )
+        .distinct()
+    )
+
+
+def minhash_bands() -> list[list[Column]]:
+    """The _K // _BAND bands of a MinHash signature m0..m_K-1: _BAND
+    consecutive columns per band."""
+    return [
+        [F.col(f"m{i}") for i in range(b * _BAND, (b + 1) * _BAND)]
+        for b in range(_K // _BAND)
+    ]
+
+
+def est_jaccard(a: str, b: str) -> Column:
+    """Estimated Jaccard of two signatures: the matching fraction of
+    m0..m_K-1 on the relations (or aliases) `a` and `b`."""
+    hits = sum(
+        F.when(F.col(f"{a}.m{i}") == F.col(f"{b}.m{i}"), 1).otherwise(0)
+        for i in range(_K)
+    )
+    return hits.cast("double") / _K
+
+
+def with_row_signature(df: DataFrame) -> DataFrame:
+    """`df` plus m0..m_K-1, the MinHash signature of its `text` as pure
+    row expressions: the shingle-hash array is projected once, then
+    each permutation's array_min. MIN over a multiset equals MIN over
+    the set, so this equals the `sig` table's explode + group-by
+    signature bit for bit — the stream operators' signature, which
+    needs no aggregation state. Texts shorter than 5 chars get NULLs."""
+    h32 = sql_hash32_dialect("substr(text, CAST(i AS INT), 5)", "spark")
+    sh = (
+        f"CASE WHEN length(text) >= 5 THEN "
+        f"transform(sequence(1, length(text) - 4), i -> {h32}) "
+        f"ELSE CAST(array() AS array<bigint>) END"
+    )
+    out = df.withColumn("_sh", F.expr(sh))
+    for i, (a, b) in enumerate(_PARAMS):
+        perm = sql_minhash_perm("h", a, b)
+        out = out.withColumn(
+            f"m{i}", F.expr(f"array_min(transform(_sh, h -> {perm}))")
+        )
+    return out.drop("_sh")
+
+
+def _lsh_candidates(sig: DataFrame, **scores: Column) -> DataFrame:
+    """Banded candidate pairs of the signature table `sig`, hot buckets
+    capped at _BUCKET_CAP."""
+    return band_pairs(band_index(sig, minhash_bands(), _BUCKET_CAP), **scores)
+
+
+def lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q63's pair set (doc_a, doc_b, est_jaccard >= 0.5) over a
+    per-call signature build: the edges of the near-dup graph."""
+    sig = _materialize_sig(spark, sf_dir)
+    return _lsh_candidates(sig, est_jaccard=est_jaccard("a", "b")).filter(
+        F.col("est_jaccard") >= 0.5
+    )
 
 
 def _band_candidates() -> str:
-    """The SINGLE source of banded candidate-pair SQL (q63 scoring, q65
-    exact verify, q67/qt1 clustering and their oracles all build on it):
-    per band, docs sharing the band's signature columns pair up, with
-    HOT-BUCKET capping (see _lsh_pairs_body docstring for the measured
-    rationale); bands UNION (dedups repeated pairs)."""
+    """The oracle's banded candidate-pair SQL (q63 scoring, q65 exact
+    verify, q67/qt1 clustering): per band, docs sharing the band's
+    signature columns pair up, with HOT-BUCKET capping (see
+    _lsh_pairs_body); bands UNION (dedups repeated pairs). An
+    independent formulation of band_index + band_pairs — a per-band
+    self-join plus a GROUP BY cap — so parity checks the Spark plan
+    against different SQL, not against itself."""
     bands = []
     n_bands = _K // _BAND
     for b in range(n_bands):
@@ -215,19 +329,22 @@ def _band_candidates() -> str:
 
 
 def _lsh_pairs_body() -> str:
-    """Banded candidate generation with HOT-BUCKET capping: a band bucket
-    holding more than _BUCKET_CAP docs is a degenerate hot spot (minhash
-    values concentrate on the corpus's common shingles), and its pair
-    fan-out is quadratic in bucket size — the measured scaling run showed
-    candidates growing ~n^2 (9.6k pairs at 5k docs -> 1.01M at 50k)
-    precisely because of such buckets (top bucket: 489 docs at 50k).
-    Skipping oversized buckets bounds candidates to O(n * cap * bands) —
-    the standard production near-dedup guard — at the cost of recall
-    inside hot buckets only (docs there are dominated by false matches;
-    the other band still catches true pairs). The cap is deterministic,
-    replayed verbatim by the DuckDB oracle, and does not bind at the
-    driver's correctness/bench scales (largest observed bucket: 8 at
-    sf0.01, 50 at sf0.1)."""
+    """The oracle's scored LSH pairs (the DuckDB twin of lsh_pairs):
+    banded candidates re-joined to `sig` for est_jaccard.
+
+    HOT-BUCKET capping: a band bucket holding more than _BUCKET_CAP docs
+    is a degenerate hot spot (minhash values concentrate on the corpus's
+    common shingles), and its pair fan-out is quadratic in bucket size —
+    the measured scaling run showed candidates growing ~n^2 (9.6k pairs
+    at 5k docs -> 1.01M at 50k) precisely because of such buckets (top
+    bucket: 489 docs at 50k). Skipping oversized buckets bounds
+    candidates to O(n * cap * bands) — the standard production near-dedup
+    guard — at the cost of recall inside hot buckets only (docs there are
+    dominated by false matches; the other band still catches true
+    pairs). The cap is deterministic, applied identically by both
+    engines, and does not bind at the correctness/bench scales
+    (largest observed bucket: 8 at sf0.01, 50 at sf0.1); a test lowers it
+    until it binds."""
     cand = _band_candidates()
     est = " + ".join(
         f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(_K)
@@ -244,17 +361,16 @@ def _lsh_pairs_body() -> str:
     """
 
 
-def _lsh_pairs_sql(dialect: str) -> str:
-    return _with_prelude(dialect, _lsh_pairs_body(), need_sig=True)
+def _lsh_pairs_sql() -> str:
+    return _with_prelude(_lsh_pairs_body(), need_sig=True)
 
 
-@query("q63_minhash_lsh_pairs", oracle=_lsh_pairs_sql("duckdb"))
+@query("q63_minhash_lsh_pairs", oracle=_lsh_pairs_sql())
 def q63_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-duplicate candidate pairs: 2 bands × 4 rows,
-    candidates from band-wise equi-joins (UNION dedups), scored by
-    estimated Jaccard = matching signature fraction, thresholded at 0.5."""
-    _materialize_sig(spark, sf_dir)
-    return spark.sql(_lsh_pairs_sql("spark"))
+    candidates from one band-index self-join, scored by estimated
+    Jaccard = matching signature fraction, thresholded at 0.5."""
+    return lsh_pairs(spark, sf_dir)
 
 
 def _simhash_sql(dialect: str, src: str = "documents") -> str:
@@ -292,9 +408,10 @@ def q64_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jaccard_body() -> str:
-    # exact Jaccard VERIFICATION of the LSH candidates: candidate pairs
-    # from the banded signature join (linear-ish), then |A∩B| computed by
-    # joining only the candidates back to their shingle sets. A raw
+    # q65's oracle, the portable form of its exact Jaccard VERIFICATION
+    # of the LSH candidates: candidate pairs from the banded signature
+    # join (linear-ish), then |A∩B| computed by joining only the
+    # candidates back to their shingle rows. A raw
     # shingle self-join is quadratic in docs-per-shingle (this corpus's
     # small vocabulary makes that ~200M intermediate rows at sf0.1); the
     # candidate-verify composition is the shape that survives 100 TB.
@@ -320,32 +437,27 @@ def _jaccard_body() -> str:
     """
 
 
-def _materialize_shingle_sets(spark: SparkSession, sf_dir: str) -> None:
-    """Bind `shingle_sets` = (doc_id, hs array<bigint>, sz) for CANDIDATE
-    docs only (docs appearing in some LSH band collision) — exact-verify
-    cost then scales with the candidate set, not the corpus; the oracle
-    computes the corpus-wide CTE and agrees because the verify joins
-    only touch candidate docs' rows either way. Per-invocation (module
-    note). r12 (guide §2.4): ONE collect_set aggregate over the raw
-    candidate-restricted shingle stream replaces the r11 chain
-    (distinct exchange -> checkpoint -> second group-by exchange) —
-    partial collect_set dedups map-side, so the set semantics are
-    identical and one exchange does the whole job. The candidate
-    restriction lands BEFORE the shingle explode (semi-join documents
-    down to candidate docs — a doc_id semi-join commutes with the
-    per-doc explode), and the candidate id set derives the band join
-    ONCE (explode(array(doc_a, doc_b)) instead of a two-arm UNION);
-    the r11 shape re-ran the FULL corpus md5-per-5-gram stream a second
-    time just to semi-join most of it away."""
-    spark.sql(
-        f"SELECT DISTINCT explode(array(doc_a, doc_b)) AS doc_id "
-        f"FROM ({_band_candidates()})"
-    ).createOrReplaceTempView("_cand_ids")
+def _materialize_shingle_sets(
+    spark: SparkSession, sf_dir: str, cand: DataFrame
+) -> DataFrame:
+    """Bind `shingle_sets` = (doc_id, hs array<bigint>, sz) for the docs
+    of the candidate pairs `cand` only — exact-verify cost then scales
+    with the candidate set, not the corpus; the oracle computes the
+    corpus-wide CTE and agrees because the verify joins only touch
+    candidate docs' rows either way. Per-invocation (module note). ONE
+    collect_set aggregate over the raw candidate-restricted shingle
+    stream: partial collect_set dedups map-side, so the set semantics
+    are exact and one exchange does the whole job. The candidate
+    restriction lands BEFORE the shingle explode (a doc_id semi-join
+    commutes with the per-doc explode), so the full corpus's
+    md5-per-5-gram stream is not run a second time."""
+    ids = cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
+    ids.distinct().createOrReplaceTempView("_cand_ids")
     cand_docs = (
         f"(SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
         " LEFT SEMI JOIN _cand_ids c ON c.doc_id = d.doc_id)"
     )
-    materialize(spark, sf_dir, "shingle_sets", _shingle_sets_sql(cand_docs))
+    return materialize(spark, sf_dir, "shingle_sets", _shingle_sets_sql(cand_docs))
 
 
 def _shingle_sets_sql(src: str) -> str:
@@ -359,46 +471,41 @@ def _shingle_sets_sql(src: str) -> str:
     )
 
 
-def _jaccard_sql(dialect: str) -> str:
-    return _with_prelude(dialect, _jaccard_body(), need_sig=True)
-
-
-def _jaccard_spark_body() -> str:
-    """Spark-side verify: per-doc shingle ARRAYS once (one
-    group-by), then each candidate pair is two array lookups and a
-    codegen `array_intersect` — the 70M-row shingle⋈shingle exchange of
-    the portable form becomes a 2-join of 248k candidate rows against
-    50k array rows at sf1 (measured ~4x faster warm). The oracle keeps
-    the portable shingle-join form; results are identical (sets are
-    distinct, |A∩B| is |A∩B|)."""
-    cand = _band_candidates()
-    return f"""
-    SELECT doc_a, doc_b, n_common, size_a, size_b,
-           CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) AS jaccard
-    FROM (
-      SELECT c.doc_a, c.doc_b,
-             CAST(size(array_intersect(sa.hs, sb.hs)) AS BIGINT) AS n_common,
-             sa.sz AS size_a, sb.sz AS size_b
-      FROM (
-        {cand}
-      ) c
-      JOIN shingle_sets sa ON sa.doc_id = c.doc_a
-      JOIN shingle_sets sb ON sb.doc_id = c.doc_b
-    )
-    WHERE CAST(n_common AS DOUBLE) / (size_a + size_b - n_common) >= 0.3
-    """
-
-
-@query("q65_ngram_jaccard", oracle=_jaccard_sql("duckdb"))
+@query(
+    "q65_ngram_jaccard", oracle=_with_prelude(_jaccard_body(), need_sig=True)
+)
 def q65_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by EXACT 5-gram Jaccard, verified over MinHash-LSH
     candidate pairs (generate candidates cheaply, verify exactly — the
     standard two-phase near-dedup of large-corpus pipelines). The exact
-    |A∩B| needs SET semantics, but only for candidate docs — see
-    _materialize_shingle_sets / _jaccard_spark_body."""
-    _materialize_sig(spark, sf_dir)
-    _materialize_shingle_sets(spark, sf_dir)
-    return spark.sql(_jaccard_spark_body())
+    |A∩B| needs SET semantics, but only for candidate docs (see
+    _materialize_shingle_sets): each candidate pair is two lookups of
+    per-doc shingle ARRAYS and a codegen `array_intersect` — the
+    shingle⋈shingle exchange of the oracle's portable form becomes a
+    join of the candidates against one array row per candidate doc
+    (measured ~4x faster warm at sf1). Results are identical: sets are
+    distinct, |A∩B| is |A∩B|."""
+    cand = _lsh_candidates(_materialize_sig(spark, sf_dir))
+    sets = _materialize_shingle_sets(spark, sf_dir, cand)
+
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("hs").alias(f"hs_{s}"),
+            F.col("sz").alias(f"size_{s}"),
+        )
+
+    n_common = F.size(F.array_intersect("hs_a", "hs_b")).cast("bigint")
+    jaccard = F.col("n_common").cast("double") / (
+        F.col("size_a") + F.col("size_b") - F.col("n_common")
+    )
+    return (
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select("doc_a", "doc_b", n_common.alias("n_common"), "size_a", "size_b")
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= 0.3)
+    )
 
 
 def _embedding_neardup_sql(dialect: str) -> str:
@@ -630,7 +737,7 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # declaratively.
 # --------------------------------------------------------------------------
 def _clusters_oracle() -> str:
-    pairs = _with_prelude("duckdb", _lsh_pairs_body(), need_sig=True)
+    pairs = _lsh_pairs_sql()
     return f"""
     WITH RECURSIVE pairs AS ({pairs}),
     edges AS (
@@ -788,8 +895,7 @@ def materialize_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint is the one action that evaluates the pairs, and its
     union-find absorbs duplicate pairs. The returned frame is backed by
     the final round's checkpoint."""
-    _materialize_sig(spark, sf_dir)
-    return connected_components(spark.sql(_lsh_pairs_body()))
+    return connected_components(lsh_pairs(spark, sf_dir))
 
 
 @query("q67_dedup_clusters", oracle=_clusters_oracle())
@@ -1187,7 +1293,7 @@ _DELTA_MOD = 10  # doc_id % 10 == 0 -> "new crawl" slice
 
 
 def _incremental_dedup_oracle() -> str:
-    pairs = _with_prelude("duckdb", _lsh_pairs_body(), need_sig=True)
+    pairs = _lsh_pairs_sql()
     return f"""
     WITH RECURSIVE pairs AS ({pairs}),
     cross_pairs AS (
@@ -1218,8 +1324,7 @@ def _incremental_dedup_oracle() -> str:
 def q6a_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-vs-corpus dedup decision per new doc: exact (md5) and
     near-dup (banded LSH) checks against existing docs only."""
-    _materialize_sig(spark, sf_dir)
-    pairs = spark.sql(_lsh_pairs_body())
+    pairs = lsh_pairs(spark, sf_dir)
     is_new_a = F.col("doc_a") % _DELTA_MOD == 0
     is_new_b = F.col("doc_b") % _DELTA_MOD == 0
     cross_pairs = pairs.filter(is_new_a != is_new_b).select(
@@ -1376,7 +1481,7 @@ def q6b_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _triangle_sql() -> str:
     return f"""
     WITH e AS (
-      SELECT doc_a AS a, doc_b AS b FROM ({_lsh_pairs_sql("duckdb")})
+      SELECT doc_a AS a, doc_b AS b FROM ({_lsh_pairs_sql()})
     )
     SELECT e1.a AS doc_a, e1.b AS doc_b, e2.b AS doc_c
     FROM e e1
@@ -1659,7 +1764,7 @@ def _pagerank_oracle() -> str:
       GROUP BY e.t"""
 
     return f"""
-    WITH p AS MATERIALIZED ({_lsh_pairs_sql("duckdb")}),
+    WITH p AS MATERIALIZED ({_lsh_pairs_sql()}),
     e0 AS MATERIALIZED (SELECT doc_a AS s, doc_b AS t FROM p),
     edges AS MATERIALIZED
       (SELECT s, t FROM e0 UNION ALL SELECT t AS s, s AS t FROM e0),
@@ -2110,24 +2215,9 @@ def _materialize_cal_sets(spark: SparkSession, sf_dir: str) -> None:
     join is keyed on sampled doc_ids and |A∩B|/|A| are the same
     integers over sets either way. Per-invocation (see module note);
     the sample restriction lands BEFORE the shingle explode."""
-    ids = spark.sql(
-        f"""
-        SELECT doc_id FROM (
-          SELECT t.doc_id,
-                 {sql_hash32_from_md5_dialect("t.md5s", "spark")} % nblk.nb
-                   AS blk
-          FROM (SELECT doc_id, md5(CAST(doc_id AS STRING)) AS md5s
-                FROM documents WHERE length(text) >= 5) t
-          CROSS JOIN (
-            SELECT GREATEST(CAST(16 AS BIGINT),
-                            CAST(CEIL(COUNT(*) / CAST(32.0 AS DOUBLE))
-                                 AS BIGINT)) AS nb
-            FROM documents WHERE length(text) >= 5
-          ) nblk
-        ) keyed WHERE blk < {_CAL_BLOCKS}
-        """
-    )
-    ids.createOrReplaceTempView("_cal_ids")
+    spark.sql(
+        f"WITH {_cal_pairs_sql('spark')} SELECT doc_id FROM cal_docs"
+    ).createOrReplaceTempView("_cal_ids")
     sampled_docs = (
         f"(SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
         " LEFT SEMI JOIN _cal_ids c ON c.doc_id = d.doc_id)"

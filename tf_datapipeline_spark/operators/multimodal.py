@@ -1442,16 +1442,19 @@ def q8f_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q8i — IMAGE NEAR-DUP pairs: the image twin of MinHash-LSH dedup (q63),
-# run on q8f's 64-bit aHash. The 64 bits split into 4 x 16-bit bands;
-# docs sharing any band's exact value become candidates (equi-join on
-# (band, value) — never all-pairs), then the exact hamming distance
-# (bit_count of xor, lo+hi halves) verifies candidates at <= _AHD_T.
+# run on q8f's 64-bit aHash, through the same band index and band pair
+# join (dedup.band_index / band_pairs). The 64 bits split into 4 x
+# 16-bit bands; docs sharing any band's exact value become candidates
+# (one equi-join on (band, value) — never all-pairs), then the exact
+# hamming distance (bit_count of xor, lo+hi halves), scored from the
+# hashes the index carries, verifies candidates at <= _AHD_T.
 # By pigeonhole the banding is EXACT, not approximate: <= 3 flipped bits
 # cannot touch all 4 bands, so every qualifying pair shares a band.
 # Hot buckets (> _AHD_CAP docs — constant-color thumbnails and the like
-# concentrate there) are skipped with q63's deterministic HAVING cap,
-# replayed verbatim by the oracle; the cap does not bind at driver
-# scales (largest observed bucket: 123 at sf0.01 vs cap 256).
+# concentrate there) are skipped by the band index's deterministic cap,
+# which the oracle applies as a GROUP BY ... HAVING; the cap does not
+# bind at the test data's scales (largest observed bucket: 123 at sf0.01
+# vs cap 256), and a test lowers it until it binds.
 # --------------------------------------------------------------------------
 _AHD_CAP = 256
 _AHD_T = 3
@@ -1496,46 +1499,20 @@ def _image_near_dup_oracle() -> str:
 
 @query("q8i_image_near_dup", oracle=_image_near_dup_oracle())
 def q8i_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from tf_datapipeline_spark.operators.dedup import band_index, band_pairs
+
     h = _ahash_table(spark, sf_dir).select("doc_id", "hash_lo", "hash_hi")
-    bands = h.select(
-        "doc_id",
-        F.expr(
-            "stack(4, 0, hash_lo % 65536, 1, hash_lo div 65536, "
-            "2, hash_hi % 65536, 3, hash_hi div 65536) AS (band, val)"
-        ),
+    bands = [
+        [F.expr(f"{half} {op} 65536")]
+        for half in ("hash_lo", "hash_hi")
+        for op in ("%", "div")
+    ]
+    ham = F.expr(
+        "CAST(bit_count(a.hash_lo ^ b.hash_lo) + bit_count(a.hash_hi ^ b.hash_hi)"
+        " AS INT)"
     )
-    ok = (
-        bands.groupBy("band", "val")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= _AHD_CAP)
-        .select("band", "val")
-    )
-    okb = bands.join(ok, ["band", "val"], "left_semi")
-    a = okb.select(F.col("doc_id").alias("doc_a"), "band", "val")
-    b = okb.select(F.col("doc_id").alias("doc_b"), "band", "val")
-    cand = (
-        a.join(b, ["band", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    ha = h.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("hash_lo").alias("lo_a"),
-        F.col("hash_hi").alias("hi_a"),
-    )
-    hb = h.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("hash_lo").alias("lo_b"),
-        F.col("hash_hi").alias("hi_b"),
-    )
-    ham = F.expr("CAST(bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b) AS INT)")
-    return (
-        cand.join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= _AHD_T)
-        .select("doc_a", "doc_b", "hamming")
+    return band_pairs(band_index(h, bands, _AHD_CAP), hamming=ham).filter(
+        F.col("hamming") <= _AHD_T
     )
 
 

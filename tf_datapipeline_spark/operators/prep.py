@@ -129,8 +129,17 @@ def _prep_oracle() -> str:
     """
 
 
-@query("qt1_prep_pipeline", oracle=_prep_oracle())
-def qt1_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _prep_counts(
+    spark: SparkSession,
+    sf_dir: str,
+    stages: tuple[tuple[DataFrame, F.Column, str], ...] = (),
+) -> DataFrame:
+    """qt1's composite, per language: every doc's quality, exact-dup,
+    near-dup and contamination flags, one drop reason by that priority,
+    and the per-reason counts with the kept docs' tokens and chunks.
+    Each of `stages` — (per-doc frame LEFT JOINed on doc_id, drop
+    condition over its columns, reason) — adds one reason after
+    `contaminated`, before `kept`."""
     docs = load_table(spark, sf_dir, "documents")
     # (adaptive repartition A/B'd OFF here — OPTIMIZATION_r12.md: the
     # tokenize/gram streams are whitespace splits, and the added
@@ -171,17 +180,21 @@ def qt1_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     near_dup = F.col("label").isNotNull() & (F.col("label") != F.col("doc_id"))
-    reason = (
-        F.when(F.col("bad_quality"), "quality")
-        .when(F.col("exact_dup"), "exact_dup")
-        .when(near_dup, "near_dup")
-        .when(F.coalesce(F.col("contaminated"), F.lit(False)), "contaminated")
-        .otherwise("kept")
-    )
-    reasoned = (
-        flags.join(labels, "doc_id", "left")
-        .join(contam, "doc_id", "left")
-        .select("lang", "n_tokens", "n_chunks", reason.alias("reason"))
+    reasons = [
+        (F.col("bad_quality"), "quality"),
+        (F.col("exact_dup"), "exact_dup"),
+        (near_dup, "near_dup"),
+        (F.coalesce(F.col("contaminated"), F.lit(False)), "contaminated"),
+    ] + [(cond, r) for _, cond, r in stages]
+    (first, first_reason), *rest = reasons
+    reason = F.when(first, first_reason)
+    for cond, r in rest:
+        reason = reason.when(cond, r)
+    joined = flags.join(labels, "doc_id", "left").join(contam, "doc_id", "left")
+    for frame, _, _ in stages:
+        joined = joined.join(frame, "doc_id", "left")
+    reasoned = joined.select(
+        "lang", "n_tokens", "n_chunks", reason.otherwise("kept").alias("reason")
     )
 
     def n_reason(r: str) -> F.Column:
@@ -190,10 +203,7 @@ def qt1_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = F.col("reason") == "kept"
     return reasoned.groupBy("lang").agg(
         n_reason("kept"),
-        n_reason("quality"),
-        n_reason("exact_dup"),
-        n_reason("near_dup"),
-        n_reason("contaminated"),
+        *[n_reason(r) for _, r in reasons],
         F.coalesce(F.sum(F.when(kept, F.col("n_tokens"))), F.lit(0))
         .cast("bigint")
         .alias("kept_tokens"),
@@ -201,6 +211,11 @@ def qt1_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("kept_chunks"),
     )
+
+
+@query("qt1_prep_pipeline", oracle=_prep_oracle())
+def qt1_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _prep_counts(spark, sf_dir)
 
 
 # --------------------------------------------------------------------------
@@ -253,59 +268,10 @@ def _prep_semantic_oracle() -> str:
 def qt2_prep_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.operators.dedup import q68_semantic_dedup
 
-    docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens_spark()
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
-    w = Window.partitionBy(F.md5("text"))
-    flags = docs.select(
-        "doc_id",
-        "lang",
-        F.size(toks).alias("n_tokens"),
-        (~((F.col("n_chars") >= 100) & (n_stop > 0))).alias("bad_quality"),
-        (F.col("doc_id") != F.min("doc_id").over(w)).alias("exact_dup"),
-    )
-    labels = materialize_cc_labels(spark, sf_dir)
-    grams = docs.select("doc_id", _tokens_spark().alias("_toks")).select(
-        "doc_id", F.explode(_grams_spark(F.col("_toks"))).alias("g")
-    )
-    bench = grams.filter(F.col("doc_id") % _CONTAM_MOD == 0).select("g").distinct()
-    contam = (
-        grams.filter(F.col("doc_id") % _CONTAM_MOD != 0)
-        .join(F.broadcast(bench), "g")
-        .groupBy("doc_id")
-        .agg((F.count(F.lit(1)) >= _CONTAM_MIN_OVERLAP).alias("contaminated"))
-    )
     sem = q68_semantic_dedup(spark, sf_dir).select(
         F.col("vec_id").alias("doc_id"), F.col("keep").alias("sem_keep")
     )
-    near_dup = F.col("label").isNotNull() & (F.col("label") != F.col("doc_id"))
-    reason = (
-        F.when(F.col("bad_quality"), "quality")
-        .when(F.col("exact_dup"), "exact_dup")
-        .when(near_dup, "near_dup")
-        .when(F.coalesce(F.col("contaminated"), F.lit(False)), "contaminated")
-        .when(F.coalesce(F.col("sem_keep"), F.lit(1)) == 0, "semantic_dup")
-        .otherwise("kept")
-    )
-    reasoned = (
-        flags.join(labels, "doc_id", "left")
-        .join(contam, "doc_id", "left")
-        .join(sem, "doc_id", "left")
-        .select("lang", "n_tokens", reason.alias("reason"))
-    )
-
-    def n_reason(r: str) -> F.Column:
-        return F.count(F.when(F.col("reason") == r, 1)).alias(f"n_{r}")
-
-    kept = F.col("reason") == "kept"
-    return reasoned.groupBy("lang").agg(
-        n_reason("kept"),
-        n_reason("quality"),
-        n_reason("exact_dup"),
-        n_reason("near_dup"),
-        n_reason("contaminated"),
-        n_reason("semantic_dup"),
-        F.coalesce(F.sum(F.when(kept, F.col("n_tokens"))), F.lit(0))
-        .cast("bigint")
-        .alias("kept_tokens"),
-    )
+    semantic_dup = F.coalesce(F.col("sem_keep"), F.lit(1)) == 0
+    return _prep_counts(
+        spark, sf_dir, ((sem, semantic_dup, "semantic_dup"),)
+    ).drop("kept_chunks")

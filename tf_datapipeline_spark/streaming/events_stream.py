@@ -649,14 +649,16 @@ def q4o_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arrive as a stream and are LSH-checked IN-FLIGHT against the static
 # corpus band index — the "dedup the incoming crawl before it lands"
 # shape. Entirely STATELESS streaming: the per-doc MinHash signature is
-# computed as pure row expressions (MIN over a multiset equals MIN over
-# the set, so array_min over the in-row shingle array equals the batch
-# explode+groupBy signature bit-for-bit), bands explode to (band, key)
-# rows, and the check is a stream-static equi-join — no watermark, no
-# state store, arbitrary stream length. The static index applies the
-# same corpus-side hot-bucket cap as the batch family (window count <=
-# cap). Emits one row per (band, new, old) match with the estimated
-# Jaccard; the batch oracle replays signature, cap, join, and estimate.
+# computed as pure row expressions (dedup.with_row_signature: MIN over a
+# multiset equals MIN over the set, so array_min over the in-row shingle
+# array equals the batch explode+groupBy signature bit-for-bit), both
+# sides explode to (band, bkey) rows through the batch family's
+# dedup.band_index, and the check is a stream-static equi-join — no
+# watermark, no state store, arbitrary stream length. The static index
+# applies the same corpus-side hot-bucket cap as the batch family
+# (window count <= cap). Emits one row per (band, new, old) match with
+# the estimated Jaccard; the batch oracle replays signature, cap, join,
+# and estimate with its own band-key SQL.
 # --------------------------------------------------------------------------
 def _stream_incr_dedup_oracle() -> str:
     from tf_datapipeline_spark.operators.dedup import (
@@ -697,103 +699,43 @@ def _stream_incr_dedup_oracle() -> str:
     ) i2 ON i2.band_id = d.band_id AND i2.bkey = d.bkey
     WHERE CAST(({est}) AS DOUBLE) / {_K} >= 0.5
     """
-    return _with_prelude("duckdb", body, need_sig=True)
+    return _with_prelude(body, need_sig=True)
 
 
 @query("q6c_stream_incremental_dedup", oracle=_stream_incr_dedup_oracle())
 def q6c_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from tf_datapipeline_spark.operators.dedup import (
         _BUCKET_CAP,
         _DELTA_MOD,
-        _K,
-        _PARAMS,
         _materialize_sig,
-    )
-    from tf_datapipeline_spark.functions.texthash import (
-        sql_hash32_dialect,
-        sql_minhash_perm,
-    )
-
-    # static side: corpus band index from the shared signature table,
-    # with the corpus-side hot-bucket cap applied batch-side
-    _materialize_sig(spark, sf_dir)
-    sig = spark.table("sig").filter(F.col("doc_id") % _DELTA_MOD != 0)
-    mcols = [f"m{i}" for i in range(_K)]
-    half = _K // 2
-    idx = (
-        sig.select(
-            F.lit(0).alias("band_id"),
-            F.concat_ws("|", *mcols[:half]).alias("bkey"),
-            F.col("doc_id").alias("old_id"),
-            *mcols,
-        )
-        .unionByName(
-            sig.select(
-                F.lit(1).alias("band_id"),
-                F.concat_ws("|", *mcols[half:]).alias("bkey"),
-                F.col("doc_id").alias("old_id"),
-                *mcols,
-            )
-        )
-    )
-    wb = Window.partitionBy("band_id", "bkey")
-    idx = (
-        idx.withColumn("bc", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bc") <= _BUCKET_CAP)
-        .drop("bc")
+        band_index,
+        est_jaccard,
+        minhash_bands,
+        with_row_signature,
     )
 
-    # stream side: the delta slice of `documents`, signature as pure row
-    # expressions (shingle array projected ONCE, then k permutation mins)
+    # static side: the corpus band index over the shared signature table,
+    # with the batch family's hot-bucket cap
+    sig = _materialize_sig(spark, sf_dir)
+    corpus = sig.filter(F.col("doc_id") % _DELTA_MOD != 0)
+    idx = band_index(corpus, minhash_bands(), _BUCKET_CAP)
+
+    # stream side: the delta slice of `documents`, signed in-row and
+    # banded the same way (uncapped: a stream has no bucket counts)
     sdf = (
         read_table_stream(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % _DELTA_MOD == 0)
+        .filter((F.col("doc_id") % _DELTA_MOD == 0) & (F.length("text") >= 5))
+        .select("doc_id", "text")
     )
-    h32 = sql_hash32_dialect("substr(text, CAST(i AS INT), 5)", "spark")
-    sh = (
-        f"CASE WHEN length(text) >= 5 THEN "
-        f"transform(sequence(1, length(text) - 4), i -> {h32}) "
-        f"ELSE CAST(array() AS array<bigint>) END"
-    )
-    sdf = sdf.selectExpr("doc_id AS new_id", f"{sh} AS sh").filter(
-        F.size("sh") > 0
-    )
-    for i, (a, b) in enumerate(_PARAMS):
-        sdf = sdf.withColumn(
-            f"dm{i}",
-            F.expr(f"array_min(transform(sh, h -> {sql_minhash_perm('h', a, b)}))"),
-        )
-    dkeys = sdf.select(
-        "new_id",
-        *[f"dm{i}" for i in range(_K)],
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band_id"),
-                    F.concat_ws("|", *[f"dm{i}" for i in range(half)]).alias("bkey"),
-                ),
-                F.struct(
-                    F.lit(1).alias("band_id"),
-                    F.concat_ws("|", *[f"dm{i}" for i in range(half, _K)]).alias(
-                        "bkey"
-                    ),
-                ),
-            )
-        ).alias("bk"),
-    ).select("new_id", *[f"dm{i}" for i in range(_K)], "bk.band_id", "bk.bkey")
-
-    est = sum(
-        F.when(F.col(f"dm{i}") == F.col(f"m{i}"), 1).otherwise(0) for i in range(_K)
-    ).cast("double") / _K
+    new = band_index(with_row_signature(sdf).drop("text"), minhash_bands())
     joined = (
-        dkeys.join(idx, ["band_id", "bkey"])
+        new.alias("d")
+        .join(idx.alias("i"), ["band", "bkey"])
         .select(
-            "band_id",
-            "new_id",
-            "old_id",
-            est.alias("est_jaccard"),
+            F.col("band").alias("band_id"),
+            F.col("d.doc_id").alias("new_id"),
+            F.col("i.doc_id").alias("old_id"),
+            est_jaccard("d", "i").alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= 0.5)
     )
@@ -973,8 +915,10 @@ def q8j_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline as ONE stateless streaming job — newly crawled documents are
 # (1) quality-gated (q51's rule: length + stopword evidence), (2)
 # near-dup-checked against the static corpus LSH band index (q6c's
-# machinery, here as two stream-static LEFT ANTI joins — a doc survives
-# only if NO corpus doc shares a band with estimated Jaccard >= 0.5),
+# machinery: dedup.band_index over the corpus signatures, the stream
+# signed in-row by dedup.with_row_signature; here as one stream-static
+# LEFT ANTI join per band — a doc survives only if NO corpus doc shares
+# a band with estimated Jaccard >= 0.5),
 # and (3) annotated with media metadata (the q80 dims model; the real
 # binary decode twin is q8j) — emitting exactly the ACCEPTED documents,
 # which is the production ingest contract. No watermark, no state
@@ -1034,35 +978,26 @@ def _stream_ingest_oracle() -> str:
         WHERE s.doc_id = d.doc_id
       )
     """
-    return _with_prelude("duckdb", body, need_sig=True)
+    return _with_prelude(body, need_sig=True)
 
 
 @query("qt4_stream_ingest", oracle=_stream_ingest_oracle())
 def qt4_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.functions.texthash import (
-        sql_hash32_dialect,
-        sql_minhash_perm,
-    )
     from tf_datapipeline_spark.operators.dedup import (
         _DELTA_MOD,
-        _K,
-        _PARAMS,
         _materialize_sig,
+        band_index,
+        band_keys,
+        est_jaccard,
+        minhash_bands,
+        with_row_signature,
     )
     from tf_datapipeline_spark.operators.text import _STOPWORDS
 
-    _materialize_sig(spark, sf_dir)
-    mcols = [f"m{i}" for i in range(_K)]
-    half = _K // 2
-    corpus_sig = spark.table("sig").filter(F.col("doc_id") % _DELTA_MOD != 0)
-    idx0 = corpus_sig.select(
-        F.concat_ws("|", *mcols[:half]).alias("i_bkey"),
-        *[F.col(m).alias(f"i_{m}") for m in mcols],
-    )
-    idx1 = corpus_sig.select(
-        F.concat_ws("|", *mcols[half:]).alias("i_bkey"),
-        *[F.col(m).alias(f"i_{m}") for m in mcols],
-    )
+    sig = _materialize_sig(spark, sf_dir)
+    corpus = sig.filter(F.col("doc_id") % _DELTA_MOD != 0)
+    bands = minhash_bands()
+    idx = band_index(corpus, bands)
 
     sdf = (
         read_table_stream(spark, sf_dir, "documents")
@@ -1072,38 +1007,18 @@ def qt4_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = (F.col("n_chars") >= 100) & (
         F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS))) > 0
     )
-    sdf = sdf.filter(quality)
-    h32 = sql_hash32_dialect("substr(text, CAST(i AS INT), 5)", "spark")
-    sh = (
-        f"CASE WHEN length(text) >= 5 THEN "
-        f"transform(sequence(1, length(text) - 4), i -> {h32}) "
-        f"ELSE CAST(array() AS array<bigint>) END"
+    survivors = with_row_signature(sdf.filter(quality)).withColumn(
+        "bkeys", band_keys(bands)
     )
-    sdf = sdf.withColumn("_sh", F.expr(sh))
-    for i, (a, b) in enumerate(_PARAMS):
-        sdf = sdf.withColumn(
-            f"dm{i}",
-            F.expr(
-                f"array_min(transform(_sh, h -> {sql_minhash_perm('h', a, b)}))"
-            ),
+    # one anti-join per band: a hash-joinable key each, where one join
+    # on "any band matches" would be an OR condition
+    for b in range(len(bands)):
+        match = (F.col("d.bkeys")[b] == F.col("i.bkey")) & (
+            est_jaccard("d", "i") >= 0.5
         )
-    sdf = sdf.withColumn(
-        "bkey0", F.concat_ws("|", *[f"dm{i}" for i in range(half)])
-    ).withColumn("bkey1", F.concat_ws("|", *[f"dm{i}" for i in range(half, _K)]))
-
-    def est_ok(side):
-        hits = sum(
-            F.when(F.col(f"dm{k}") == side[f"i_m{k}"], 1).otherwise(0)
-            for k in range(_K)
+        survivors = survivors.alias("d").join(
+            idx.filter(F.col("band") == b).alias("i"), match, "left_anti"
         )
-        return hits.cast("double") / _K >= 0.5
-
-    survivors = sdf.join(
-        idx0, (F.col("bkey0") == idx0.i_bkey) & est_ok(idx0), "left_anti"
-    )
-    survivors = survivors.join(
-        idx1, (F.col("bkey1") == idx1.i_bkey) & est_ok(idx1), "left_anti"
-    )
     out = survivors.select(
         "doc_id",
         "n_chars",

@@ -6,16 +6,105 @@ Usage:
 Writes plans/<tag>/<query>_<suffix>.txt for each query (suffix is
 "before" / "after" per the optimization-round deliverable). Uses
 $SPARK_GRAFT_SF_DIR (default sf0.1) so the plans match the bench scale.
+Each plan is written in `canonical_plan` form, so the captures of two
+checkouts diff cleanly (`diff -r plans/<a> plans/<b>`).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
+
+# ids that depend on what ran earlier in the JVM, not on the plan
+_IDS = [
+    (re.compile(r"#\d+"), "#N"),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),  # checkpoint RDDs
+    (re.compile(r"(lambda [A-Za-z]\w*?)_\d+#"), r"\1_N#"),  # lambda variables
+    # the distinct-aggregate group id literals follow the groups' order
+    (re.compile(r"\(gid#N = \d+\)"), "(gid#N = ?)"),
+]
+_LIST_LINE = re.compile(r"^(Input|Output|Keys|Results) \[(\d+)\]: \[(.*)\]$")
+_NODE = re.compile(r"^\(\d+\) (\w+)")
+
+
+def _split_top(s: str) -> list[str]:
+    """Comma-separated items of `s`, splitting only outside brackets."""
+    items, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    tail = s[start:].strip()
+    return items + [tail] if tail else items
+
+
+def _sorted_list(body: str) -> str:
+    return "[" + ", ".join(sorted(_split_top(body))) + "]"
+
+
+def _canonical_expand(args: str) -> str:
+    """An Expand node's `[[group], ...], [output]` arguments with each
+    projection group's entries sorted (its group-id literal masked) and
+    the groups and the output attributes sorted: Spark orders the
+    distinct-aggregate groups by expression ids, so the same query
+    plans them in either order depending on what ran before it."""
+    groups, output = _split_top(args)
+    canon = []
+    for g in _split_top(groups[1:-1]):
+        entries = ["?" if e.isdigit() else e for e in _split_top(g[1:-1])]
+        canon.append(_sorted_list(", ".join(entries)))
+    return "[" + ", ".join(sorted(canon)) + "], " + _sorted_list(output[1:-1])
+
+
+def _canonical_hashpartitioning(line: str) -> str:
+    """`hashpartitioning(keys..., n)` with its keys sorted: the keys
+    follow the child's attribute order (see canonical_plan)."""
+    start = line.find("hashpartitioning(")
+    if start < 0:
+        return line
+    open_at = start + len("hashpartitioning")
+    depth = 0
+    for end in range(open_at, len(line)):
+        depth += {"(": 1, ")": -1}.get(line[end], 0)
+        if depth == 0:
+            break
+    *keys, n = _split_top(line[open_at + 1 : end])
+    return f"{line[:open_at]}({', '.join(sorted(keys) + [n])}{line[end:]}"
+
+
+def canonical_plan(plan: str) -> str:
+    """`plan` (formatted explain text) with run-dependent ids masked, the
+    attribute lists of Input/Output/Keys/Results lines and hash
+    partitioning keys sorted, and each Expand node's groups sorted
+    (`_canonical_expand`). Two plans that differ only in what ran before
+    them in the JVM or in where the checkout lives compare equal; column
+    ORDER within a node is not compared."""
+    plan = plan.replace(REPO_DIR, "<repo>")
+    for pat, rep in _IDS:
+        plan = pat.sub(rep, plan)
+    out, node = [], None
+    for line in plan.splitlines():
+        head = _NODE.match(line)
+        if head:
+            node = head.group(1)
+        listed = _LIST_LINE.match(line)
+        if listed:
+            label, n, body = listed.groups()
+            line = f"{label} [{n}]: {_sorted_list(body)}"
+        elif node == "Expand" and line.startswith("Arguments: "):
+            line = "Arguments: " + _canonical_expand(line[len("Arguments: "):])
+        out.append(_canonical_hashpartitioning(line))
+    return "\n".join(out) + "\n"
 
 
 def main() -> None:
@@ -37,8 +126,10 @@ def main() -> None:
     for name in names:
         try:
             df = qs[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            plan = canonical_plan(
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
             )
         except Exception as exc:  # noqa: BLE001 - record the failure in-file
             plan = f"PLAN CAPTURE FAILED: {type(exc).__name__}: {exc}"

@@ -54,7 +54,7 @@ def main() -> None:
     t0 = time.time()
     con.execute(
         "CREATE TABLE sig AS "
-        + _with_prelude("duckdb", "SELECT * FROM sig", need_sig=True)
+        + _with_prelude("SELECT * FROM sig", need_sig=True)
     )
     stage_sec = round(time.time() - t0, 1)
 
@@ -77,7 +77,7 @@ def main() -> None:
           f"match={sig_match}", flush=True)
 
     # ---- run both composites against the staged table
-    prefix = _with_prelude("duckdb", "", need_sig=True)
+    prefix = _with_prelude("", need_sig=True)
     qs = registry.queries()
     oracles = registry.oracle_sql()
     for name in ("q6c_stream_incremental_dedup", "qt4_stream_ingest"):
