@@ -373,6 +373,10 @@ def test_collect_sites_are_bounded_metadata_only():
         # against _MMR_COLLECT_CAP and fails fast past the ceiling — see
         # test_mmr_driver_greedy_regime_guard below.
         ("operators/similarity.py", "q7f_mmr_rerank"),
+        # the class-data archive's fixed warm-up: <= 180 rows from a
+        # generated 20k-row table, collected so the driver's collect
+        # path is loaded (and archived) too
+        ("cds.py", "warm_up"),
     }
     found = set()
     for py in pkg.rglob("*.py"):
@@ -577,6 +581,17 @@ def test_lsh_pairs_plan_is_one_join(spark):
     assert "Union" not in final
     assert final.count("Exchange") == 3, final  # index, its reuse, DISTINCT
     assert "ReusedExchange" in final, final
+
+
+def test_q65_bands_its_candidates_once(spark):
+    """q65 materializes its LSH candidate pairs once: the shingle-set
+    build and the final verify plan both read that checkpoint, so the
+    final plan has no band-index window (and none of its exchange)."""
+    df = _q("q65_ngram_jaccard", spark)
+    assert df.collect()
+    final = formatted_plan(df).split("== Final Plan ==")[1]
+    final = final.split("== Initial Plan ==")[0]
+    assert "Window" not in final, final
 
 
 def test_canonical_plan_ignores_expand_group_order():

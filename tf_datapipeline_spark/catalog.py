@@ -92,16 +92,19 @@ def docs_scan_source(spark: SparkSession, sf_dir: str) -> str:
     return f"(SELECT /*+ REPARTITION({n}) */ * FROM documents)"
 
 
-def materialize(spark: SparkSession, sf_dir: str, view: str, sql: str) -> DataFrame:
-    """The ONE way an operator materializes a shared table: run `sql`
-    (over the catalog views of `sf_dir`, registered here) as an eager
-    localCheckpoint, bind the result to temp view `view`, and return
-    it. Built once per CALL — every downstream reference in the
-    invocation reads the checkpoint instead of re-deriving it under
-    Spark's CTE inlining, and nothing is cached across invocations, so
-    each query pays its own build and sees the current table data."""
+def materialize(
+    spark: SparkSession, sf_dir: str, view: str, sql: str | DataFrame
+) -> DataFrame:
+    """The ONE way an operator materializes a shared table: run `sql` (a
+    query over the catalog views of `sf_dir`, registered here, or a
+    DataFrame built over them) as an eager localCheckpoint, bind the
+    result to temp view `view`, and return it. Built once per CALL —
+    every downstream reference in the invocation reads the checkpoint
+    instead of re-deriving it under Spark's CTE inlining, and nothing is
+    cached across invocations, so each query pays its own build and sees
+    the current table data."""
     register_views(spark, sf_dir)
-    df = spark.sql(sql).localCheckpoint()
+    df = (spark.sql(sql) if isinstance(sql, str) else sql).localCheckpoint()
     df.createOrReplaceTempView(view)
     return df
 
