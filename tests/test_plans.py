@@ -404,6 +404,86 @@ def test_collect_sites_are_bounded_metadata_only():
     )
 
 
+def test_vector_folds_live_in_one_module():
+    """Source-level audit: the order-pinned vector fold is spelled only in
+    functions/vectors.py. Every other array fold in the package — an
+    F.aggregate call, or `aggregate(` / `list_reduce(` in SQL text — must
+    be on the allowlist with a reason. A new inline fold over embeddings
+    fails here until it uses the module."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "tf_datapipeline_spark"
+    allowed = {
+        # (file, enclosing function): why it is not a vectors.py fold
+        # integer ADC sum over the quantized LUT (order-independent)
+        ("operators/similarity.py", "q77_knn_ivfpq"),
+        # 8-dim subvector distances over element_at slices of the vectors
+        ("operators/similarity.py", "_pq_dists_ctes"),
+        # fold over the collected per-label centroid dims, in pos order
+        ("operators/similarity.py", "_centroid_drift_sql"),
+        # DuckDB-only oracle text: the same left-to-right fold as
+        # fold_l2/fold_dot/fold_norm2, spelled with other lambda names
+        # or nesting, and kept byte-for-byte so the oracle SQL is
+        # provably unchanged by the move to functions/vectors.py
+        ("operators/similarity.py", "_cell_balance_oracle"),
+        ("operators/dedup.py", "_embedding_neardup_sql"),
+        ("streaming/events_stream.py", "_stream_ivf_oracle"),
+        # PageRank contributions summed in src order
+        ("operators/dedup.py", "q6g_pagerank"),
+        ("operators/dedup.py", "_pagerank_oracle"),
+        # integer reconstruction-error sum of the SQ codes
+        ("streaming/events_stream.py", "q7a_stream_sq_ingest"),
+        # integer char_sum over tokens
+        ("operators/text.py", "q59_gopher_filter"),
+        # integer sum of winnowed fingerprints
+        ("operators/text.py", "q5h_winnow_fingerprint"),
+        # BPE merge rounds over string units, and their length sums
+        ("operators/text.py", "_bpe_round_spark"),
+        ("operators/text.py", "_bpe_round_duckdb"),
+        ("operators/text.py", "_bpe_encode_oracle"),
+        ("operators/text.py", "_bpe_doc_counts"),
+    }
+    fold_sql = re.compile(r"\b(aggregate|list_reduce)\(")
+    found = set()
+    for py in pkg.rglob("*.py"):
+        rel = str(py.relative_to(pkg))
+        if rel == "functions/vectors.py":
+            continue
+
+        def visit(node, fn_name):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, ast.Expr) and isinstance(
+                    child.value, ast.Constant
+                ):
+                    continue  # a docstring, not code
+                name = fn_name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = child.name if fn_name is None else fn_name
+                is_call = (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "aggregate"
+                )
+                is_sql = (
+                    isinstance(child, ast.Constant)
+                    and isinstance(child.value, str)
+                    and fold_sql.search(child.value)
+                )
+                if is_call or is_sql:
+                    found.add((rel, fn_name or "<module>"))
+                visit(child, name)
+
+        visit(ast.parse(py.read_text()), None)
+    unexpected = found - allowed
+    assert not unexpected, (
+        "inline array folds (use functions/vectors.py, or allowlist with "
+        f"a reason): {sorted(unexpected)}"
+    )
+    assert allowed <= found, f"stale allowlist entries: {sorted(allowed - found)}"
+
+
 def test_mmr_driver_greedy_regime_guard(spark):
     """q7f's driver-side greedy is allowlisted ONLY under the documented
     shortlist bound (r7 verdict task 5): _N_QUERIES * _MMR_POOL * (1 +

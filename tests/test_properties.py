@@ -1416,10 +1416,7 @@ def test_cell_balance_matches_numpy_assignment(spark):
     import numpy as np
     from tests.conftest import SF_SMOKE
     from tf_datapipeline_spark.catalog import load_table
-    from tf_datapipeline_spark.operators.similarity import (
-        _CENTROID_STRIDE,
-        _N_CELLS,
-    )
+    from tf_datapipeline_spark.operators.similarity import _N_CELLS, seed_ids
     from tf_datapipeline_spark import registry
 
     rows = registry.queries()["q7k_cell_balance"](spark, SF_SMOKE).collect()
@@ -1429,9 +1426,8 @@ def test_cell_balance_matches_numpy_assignment(spark):
     n_cells = len(rows)
     for r in rows:
         assert abs(r.balance - r.share * n_cells) < 1e-9, r
-    seed_ids = [8 + _CENTROID_STRIDE * k for k in range(_N_CELLS)]
     by_id = {e.vec_id: np.asarray(e.embedding, dtype=np.float64) for e in emb}
-    cents = [(k, by_id[v]) for k, v in enumerate(seed_ids) if v in by_id]
+    cents = [(k, by_id[v]) for k, v in enumerate(seed_ids(_N_CELLS)) if v in by_id]
     counts: dict = {}
     for e in emb:
         v = np.asarray(e.embedding, dtype=np.float64)

@@ -1,6 +1,8 @@
-"""Similarity-search behavior checks beyond the oracle gate: the ANN path
-must agree with the exact baseline (recall), and the packed (performance)
-brute-force variant must rank identically to the oracle-checked q70."""
+"""Similarity-search behavior checks beyond the oracle gate: the vector
+kernels' fold contract (bit-identical across its four spellings), ANN
+recall against the exact q70 baseline and candidate pruning, and
+properties of the quantization, hybrid-retrieval and rerank operators
+that a result hash cannot see."""
 
 from __future__ import annotations
 
@@ -16,14 +18,64 @@ def _topk_sets(df):
     return out
 
 
-def test_packed_matches_oracle_form(spark):
-    exact = _topk_sets(sim.q70_knn_bruteforce(spark, SF_ORACLE))
-    packed = _topk_sets(sim.knn_bruteforce_packed(spark, SF_ORACLE))
-    assert exact.keys() == packed.keys()
-    for qid in exact:
-        # float vs decimal accumulation may flip near-exact ties; demand
-        # >= 4/5 overlap and identical top-1.
-        assert len(exact[qid] & packed[qid]) >= 4, qid
+def test_vector_folds_are_bit_identical(spark):
+    """functions/vectors.py's contract on the oracle corpus: norm2 of
+    every vector, and its dot product and squared L2 distance to vector
+    0, come out as the same doubles, bit for bit, from the Column form,
+    the Spark SQL form, the DuckDB SQL form and the numpy loops
+    (seq_norm2, seq_dot)."""
+    import duckdb
+    import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from tf_datapipeline_spark.catalog import load_table
+    from tf_datapipeline_spark.functions import vectors as V
+
+    path = f"{SF_ORACLE}/embeddings.parquet"
+    tbl = pq.read_table(path, columns=["vec_id", "embedding"]).to_pydict()
+    mat = np.asarray(tbl["embedding"], dtype=np.float32).astype(np.float64)
+    q = mat[tbl["vec_id"].index(0)]
+    numpy_cols = (V.seq_norm2(mat), V.seq_dot(mat, q), V.seq_norm2(mat - q))
+    forms = {"numpy": dict(zip(tbl["vec_id"], zip(*numpy_cols)))}
+
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    pairs = emb.crossJoin(
+        emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
+    )
+    spark_forms = {
+        "column": (
+            V.norm2("embedding"),
+            V.dot("embedding", "q_emb"),
+            V.l2("embedding", "q_emb"),
+        ),
+        "spark_sql": (
+            F.expr(V.fold_norm2("spark", "embedding")),
+            F.expr(V.fold_dot("spark", "embedding", "q_emb")),
+            F.expr(V.fold_l2("spark", "embedding", "q_emb")),
+        ),
+    }
+    for name, (n2, dt, d2) in spark_forms.items():
+        rows = pairs.select("vec_id", n2, dt, d2).collect()
+        forms[name] = {r[0]: tuple(r[1:]) for r in rows}
+
+    d = "duckdb"
+    rows = duckdb.sql(f"""
+        SELECT e.vec_id, {V.fold_norm2(d, "e.embedding")},
+               {V.fold_dot(d, "e.embedding", "q.embedding")},
+               {V.fold_l2(d, "e.embedding", "q.embedding")}
+        FROM read_parquet('{path}') e,
+             (SELECT embedding FROM read_parquet('{path}') WHERE vec_id = 0) q
+    """).fetchall()
+    forms["duckdb_sql"] = {r[0]: tuple(r[1:]) for r in rows}
+
+    def hexed(form):
+        return {k: tuple(float(x).hex() for x in v) for k, v in form.items()}
+
+    want = hexed(forms["numpy"])
+    assert len(want) == len(mat) > 0
+    for name, form in forms.items():
+        assert hexed(form) == want, name
 
 
 def test_ann_recall(spark):

@@ -112,3 +112,36 @@ def sql_minhash_perm(h_expr: str, a: int, b: int) -> str:
     reduced mod the Mersenne prime first so a*h stays under 2^62 (Spark
     runs ANSI mode: BIGINT overflow is an error, not a wrap)."""
     return f"(({a} * ({h_expr} % {MERSENNE}) + {b}) % {MERSENNE})"
+
+
+def sql_shl1(bit: str, dialect: str) -> str:
+    """BIGINT 1 << bit. Spark spells it shiftleft(); DuckDB <<."""
+    if dialect == "spark":
+        return f"shiftleft(CAST(1 AS BIGINT), CAST({bit} AS INT))"
+    return f"(CAST(1 AS BIGINT) << CAST({bit} AS INT))"
+
+
+def sql_bxor(a: str, b: str, dialect: str) -> str:
+    """Bitwise xor of two integers. Spark spells it ^; DuckDB xor()."""
+    if dialect == "spark":
+        return f"({a} ^ {b})"
+    return f"xor({a}, {b})"
+
+
+# Bloom filter geometry: m bits (prime, so the double-hash probe sequence
+# has full period) in 63-bit BIGINT words (63 keeps shiftleft off the
+# sign bit under ANSI), k probes per key.
+BLOOM_M = 64513
+BLOOM_K = 3
+BLOOM_WORD = 63
+
+
+def sql_bloom_hashes(md5_expr: str, dialect: str) -> tuple[str, str]:
+    """(h1, h2) for Bloom double hashing from ONE md5 digest: probe i of
+    a key sits at bit (h1 + i * h2) % BLOOM_M. h1 is the digest's 8-hex
+    window at offset 1; h2 = 1 + (window at 9) % (BLOOM_M - 1). That
+    stride guard keeps the stride in [1, m-1], never 0: without it a key
+    whose raw h2 is divisible by m puts all k probes on one bit."""
+    h1 = sql_hash32_from_md5_at(md5_expr, 1, dialect)
+    h2 = f"(1 + (({sql_hash32_from_md5_at(md5_expr, 9, dialect)}) % {BLOOM_M - 1}))"
+    return h1, h2

@@ -37,14 +37,21 @@ from tf_datapipeline_spark.catalog import (
     materialize,
     register_views,
 )
+from tf_datapipeline_spark.functions import vectors as V
 from tf_datapipeline_spark.functions.texthash import (
+    BLOOM_K,
+    BLOOM_M,
+    BLOOM_WORD,
     MERSENNE,
     minhash_params,
+    sql_bloom_hashes,
     sql_hash32_dialect,
     sql_hash32_from_md5_dialect,
     sql_hash60_from_md5_dialect,
     sql_minhash_perm,
+    sql_shl1,
 )
+from tf_datapipeline_spark.functions.vectors import fold_dot, fold_norm2
 from tf_datapipeline_spark.operators.semcells import (  # noqa: F401
     _COARSE_CAP,  # re-export: tests and docs reference it via dedup
     _cells_ctes_sql,
@@ -521,18 +528,8 @@ def _embedding_neardup_sql(dialect: str) -> str:
     # for 64 O(1) terms), so with a 1e-3 margin no pair whose true
     # cosine clears 0.4 can be dropped.
     #
-    # The exact arm's cross-engine contract is ORDER-PINNED IEEE DOUBLE,
-    # not decimal (a round-6 sf1 finding): the old per-term
-    # CAST(double AS DECIMAL(38,12)) device is NOT correctly rounded in
-    # DuckDB near half-ulp boundaries (it scales by 1e12 in double and
-    # half-even-rounds the scaled value; e.g. exact product
-    # ..2945000020978 cast to ..294, where Spark's BigDecimal HALF_UP
-    # correctly gives ..295) — 47 of 98k sf1 pairs diverged in the last
-    # ulp. Decimals were only ever needed for ORDER independence under
-    # exploded SUM(); both engines now fold the SAME array sequentially
-    # (DuckDB list_reduce ≡ Spark aggregate(), left fold, float32
-    # products exact in double), so every intermediate double is
-    # bit-identical by construction and no rounding device is needed.
+    # The exact arm is the order-pinned fold of functions/vectors.py,
+    # spelled out here with this oracle's own lambda names.
     del dialect  # single-dialect oracle; Spark side is DataFrame code
 
     ddot = (
@@ -599,19 +596,12 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one cogrouped applyInPandas task per unordered block pair, numpy
     float64 A @ B.T per tile (seconds for sf1's 25.6 GFLOPs), margin-
     bounded emission. Only candidate pairs then recompute with the
-    ORDER-PINNED sequential double fold — both engines fold the same
-    array left-to-right with exact float32-product terms, so every
-    intermediate double is bit-identical to the oracle's list_reduce
-    (the old decimal quantization device turned out to be the UNSAFE
-    choice cross-engine: DuckDB's double->DECIMAL cast mis-rounds near
-    half-ulp boundaries — see the oracle comment)."""
+    order-pinned fold (functions/vectors.py), bit-identical to the
+    oracle's."""
     emb = load_table(spark, sf_dir, "embeddings")
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
+    corpus = emb.select(
+        "vec_id", "embedding", F.sqrt(V.norm2("embedding")).alias("nrm")
     )
-    corpus = emb.select("vec_id", "embedding", F.sqrt(norm2).alias("nrm"))
     # Pair enumeration = TILED BLOCK MATMUL, not a per-pair expression.
     # A dense all-pairs float prescreen is a GEMM; evaluating it as a
     # join-condition expression tree ran interpreted/non-JIT and burned
@@ -707,11 +697,6 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    dot_d = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     # Broadcast the margin-bounded candidate side, not the corpus: each
     # rejoin streams the corpus once against a tiny hash table. Outside
     # the broadcast regime (guard above) the hint is dropped and the
@@ -722,7 +707,7 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_a = e1.join(_cand_side(cand_ids), "vec_a")
     return (
         e2.join(_cand_side(with_a), "vec_b")
-        .withColumn("cos_sim", dot_d / (F.col("na") * F.col("nb")))
+        .withColumn("cos_sim", V.dot("ea", "eb") / (F.col("na") * F.col("nb")))
         .filter(F.col("cos_sim") >= _Q66_TAU)
         .select("vec_a", "vec_b", "cos_sim")
     )
@@ -924,12 +909,9 @@ def q67_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Determinism/oracle: cells come from the same fixed seed centroids as
 # q73's IVF (corpus vectors at vec_id = 8 + 37*c), assignment is argmax
 # cosine with ties broken by cell index, and every dot product is an
-# ORDER-PINNED packed-array double fold (fold_dot/fold_norm2, the r7
-# migration off the DECIMAL(38,12) device) — bit-identical in Spark and
-# DuckDB by construction, so the whole pipeline (assignment -> in-cell
-# pairs -> keep flags) is value-checked, not rows-only. The migration
-# also deleted the old two-phase float-prescreen/decimal-verify margin
-# machinery: the "cheap" JVM double fold IS the oracle value now.
+# order-pinned fold (functions/vectors.py) — bit-identical in Spark and
+# DuckDB, so the whole pipeline (assignment -> in-cell pairs -> keep
+# flags) is value-checked, not rows-only.
 #
 # Scale (100 TB): q68's FROZEN 16 cells are the oracle-checkable harness
 # contract, not the deployment config — the deployment shape is q6b
@@ -961,22 +943,11 @@ _Q68_KEEPER_CAP = 512  # keeper-side candidates per cell (see header)
 
 
 def _semantic_dedup_sql(dialect: str) -> str:
-    from tf_datapipeline_spark.operators.similarity import (
-        _CENTROID_STRIDE,
-        _N_CELLS,
-        fold_dot,
-        fold_norm2,
-    )
+    from tf_datapipeline_spark.operators.similarity import _N_CELLS, seed_values_sql
 
-    cent_vals = ", ".join(
-        f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
-    )
-    # PACKED order-pinned folds (the r7 migration off the DECIMAL
-    # device): the corpus never explodes to (vec, pos) rows in either
-    # engine — each cosine is one left-to-right fold over the packed
-    # arrays, bit-identical across engines by construction.
+    # packed folds: the corpus never explodes to (vec, pos) rows
     return f"""
-    WITH cent(cell, cvec_id) AS (VALUES {cent_vals}),
+    WITH cent(cell, cvec_id) AS (VALUES {seed_values_sql(_N_CELLS)}),
     norms AS (
       SELECT vec_id, embedding,
              SQRT({fold_norm2(dialect, "embedding")}) AS nrm
@@ -1039,33 +1010,23 @@ def q68_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest-id near-duplicate it lost to.
 
     The Spark side is the PACKED form (q70's pattern): vectors stay as
-    arrays, dots are plain zip_with/aggregate left-to-right double folds
-    — bit-identical to the oracle's list_reduce folds by construction
-    (the r7 order-pinned migration; the former decimal accumulator and
-    its two-phase float-prescreen/decimal-verify margins are gone) — and
-    the in-cell pair join's equi-key is (cell), so the corpus never
-    explodes to (vec, pos) rows and nothing all-pairs ever materializes
+    arrays, dots are the order-pinned folds (functions/vectors.py),
+    bit-identical to the oracle's, and the in-cell pair join's equi-key
+    is (cell), so the corpus never explodes to (vec, pos) rows and
+    nothing all-pairs ever materializes
     (the exploded SQL form measured 32s at sf0.1 / stalled at sf1; this
     form is sub-second / seconds)."""
-    from pyspark.sql import Window
-
-    from tf_datapipeline_spark.operators.similarity import (
-        _CENTROID_STRIDE,
-        _N_CELLS,
-    )
+    from tf_datapipeline_spark.operators.similarity import _N_CELLS, seed_ids
 
     emb = load_table(spark, sf_dir, "embeddings")
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
+    corpus = emb.select(
+        "vec_id", "embedding", F.sqrt(V.norm2("embedding")).alias("nrm")
     )
-    corpus = emb.select("vec_id", "embedding", F.sqrt(norm2).alias("nrm"))
     # centroid c = corpus vector 8 + 37c (q73's convention; a centroid id
     # absent from a small corpus simply contributes no cell, exactly as
     # the oracle's VALUES-join drops it)
     cmap = spark.createDataFrame(
-        [(c, 8 + _CENTROID_STRIDE * c) for c in range(_N_CELLS)],
+        list(enumerate(seed_ids(_N_CELLS))),
         "cell int, cvec_id bigint",
     )
     cents = corpus.join(
@@ -1076,22 +1037,12 @@ def q68_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("c_nrm"),
     )
 
-    # Cell argmax over the plain double fold: since the r7 order-pinned
-    # migration this IS the oracle's value (same fold, same ranking) —
-    # no borderline re-rank needed.
-    def fold_dot_f(left: str, right: str):
-        return F.aggregate(
-            F.zip_with(
-                left, right, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
+    # Cell argmax over the order-pinned fold: the oracle's value, so no
+    # borderline re-rank is needed.
     csims_f = corpus.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cell",
-        (fold_dot_f("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))).alias(
+        (V.dot("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))).alias(
             "cos_c"
         ),
     )
@@ -1136,17 +1087,9 @@ def q68_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("b_nrm"),
         F.pmod(F.col("vec_id"), F.lit(_SALT)).cast("int").alias("slice"),
     )
-    # Threshold on the plain double fold — identical to the oracle's
-    # packed fold by construction (whole-stage codegen, no decimal
-    # boxing, no margin re-evaluation).
-    dot_f = F.aggregate(
-        F.zip_with(
-            "a_emb", "b_emb", lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos_f = dot_f / (F.col("a_nrm") * F.col("b_nrm"))
+    # Threshold on the order-pinned fold: the oracle's value, no margin
+    # re-evaluation.
+    cos_f = V.dot("a_emb", "b_emb") / (F.col("a_nrm") * F.col("b_nrm"))
     dup = (
         a.join(b, ["cell", "slice"])
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -1443,17 +1386,13 @@ def q6b_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("b_nrm"),
         F.pmod(F.col("vec_id"), F.lit(_SALT)).cast("int").alias("slice"),
     )
-    dot = F.aggregate(
-        F.zip_with(
-            "a_emb", "b_emb", lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     dup = (
         a.join(b, ["cell", "slice"])
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter((dot / (F.col("a_nrm") * F.col("b_nrm"))) >= _SEM_TAU)
+        .filter(
+            (V.dot("a_emb", "b_emb") / (F.col("a_nrm") * F.col("b_nrm")))
+            >= _SEM_TAU
+        )
         .groupBy("vec_b")
         .agg(F.min("vec_a").alias("dup_of"))
     )
@@ -1534,40 +1473,21 @@ def q6d_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arithmetic runs in both engines, so every bit — and therefore every
 # maybe/exact flag — is hash-exact against the oracle.
 # --------------------------------------------------------------------------
-_BLOOM_M = 64513  # prime -> double-hash probe sequence cycles full period
-_BLOOM_K = 3
-_BLOOM_WORD = 63
-
-
 def _bloom_body(dialect: str) -> str:
-    from tf_datapipeline_spark.functions.texthash import sql_hash32_from_md5_at
-
-    h1 = sql_hash32_from_md5_at("m", 1, dialect)
-    # Standard double-hash stride guard: h2' = 1 + (h2 mod (m-1)) keeps
-    # the probe stride in [1, m-1], never 0 — without it, any key whose
-    # raw h2 is divisible by m collapses all k probe positions onto one
-    # bit (~1/m of the corpus), silently inflating the FP rate. Same
-    # arithmetic in both dialects, so oracle parity is unaffected.
-    h2 = f"(1 + (({sql_hash32_from_md5_at('m', 9, dialect)}) % {_BLOOM_M - 1}))"
-    if dialect == "spark":
-        def shl(b: str) -> str:
-            return f"shiftleft(CAST(1 AS BIGINT), CAST({b} AS INT))"
-    else:
-        def shl(b: str) -> str:
-            return f"(CAST(1 AS BIGINT) << CAST({b} AS INT))"
-    ks = ", ".join(f"({k})" for k in range(_BLOOM_K))
+    h1, h2 = sql_bloom_hashes("m", dialect)
+    ks = ", ".join(f"({k})" for k in range(BLOOM_K))
     return f"""
     WITH corpus AS (
       SELECT md5(text) AS m FROM documents WHERE doc_id % {_DELTA_MOD} <> 0
     ),
     chash AS (SELECT {h1} AS h1, {h2} AS h2 FROM corpus),
     cpos AS (
-      SELECT DISTINCT ((h1 + k.k * h2) % {_BLOOM_M}) AS pos
+      SELECT DISTINCT ((h1 + k.k * h2) % {BLOOM_M}) AS pos
       FROM chash, (VALUES {ks}) AS k(k)
     ),
     filter_words AS (
-      SELECT CAST(FLOOR(pos / {_BLOOM_WORD}.0) AS INT) AS word_idx,
-             BIT_OR({shl(f"pos % {_BLOOM_WORD}")}) AS bits
+      SELECT CAST(FLOOR(pos / {BLOOM_WORD}.0) AS INT) AS word_idx,
+             BIT_OR({sql_shl1(f"pos % {BLOOM_WORD}", dialect)}) AS bits
       FROM cpos GROUP BY 1
     ),
     delta AS (
@@ -1575,18 +1495,18 @@ def _bloom_body(dialect: str) -> str:
       FROM documents WHERE doc_id % {_DELTA_MOD} = 0
     ),
     dpos AS (
-      SELECT doc_id, m, ((h1 + k.k * h2) % {_BLOOM_M}) AS pos
+      SELECT doc_id, m, ((h1 + k.k * h2) % {BLOOM_M}) AS pos
       FROM (SELECT doc_id, m, {h1} AS h1, {h2} AS h2 FROM delta) d,
            (VALUES {ks}) AS k(k)
     ),
     probe AS (
       SELECT d.doc_id,
              MIN(CASE WHEN (COALESCE(f.bits, 0)
-                            & {shl(f"d.pos % {_BLOOM_WORD}")}) <> 0
+                            & {sql_shl1(f"d.pos % {BLOOM_WORD}", dialect)}) <> 0
                       THEN 1 ELSE 0 END) AS maybe_dup
       FROM dpos d
       LEFT JOIN filter_words f
-        ON f.word_idx = CAST(FLOOR(d.pos / {_BLOOM_WORD}.0) AS INT)
+        ON f.word_idx = CAST(FLOOR(d.pos / {BLOOM_WORD}.0) AS INT)
       GROUP BY d.doc_id
     ),
     corpus_set AS (SELECT DISTINCT m FROM corpus)

@@ -18,7 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from tf_datapipeline_spark.catalog import materialize, register_views
-from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
+from tf_datapipeline_spark.functions.texthash import (
+    BLOOM_K,
+    BLOOM_M,
+    BLOOM_WORD,
+    sql_bloom_hashes,
+    sql_hash32_dialect,
+    sql_shl1,
+)
 from tf_datapipeline_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -715,26 +722,14 @@ def q9e_kmv_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bit, hit flag and count is integer arithmetic on the shared md5
 # device — hash-exact against the oracle.
 # --------------------------------------------------------------------------
-_BSK_M = 64513  # prime: double-hash probe sequence has full period
-_BSK_K = 3
-_BSK_WORD = 63  # bits per BIGINT word (63 avoids the sign bit)
 _BSK_FILES = 64
 _BSK_PROBES = 8
 
 
 def _bloom_skip_body(dialect: str) -> str:
-    from tf_datapipeline_spark.functions.texthash import sql_hash32_from_md5_at
-
     ctype = "STRING" if dialect == "spark" else "VARCHAR"
-    h1 = sql_hash32_from_md5_at("m", 1, dialect)
-    h2 = f"(1 + (({sql_hash32_from_md5_at('m', 9, dialect)}) % {_BSK_M - 1}))"
-    if dialect == "spark":
-        def shl(b: str) -> str:
-            return f"shiftleft(CAST(1 AS BIGINT), CAST({b} AS INT))"
-    else:
-        def shl(b: str) -> str:
-            return f"(CAST(1 AS BIGINT) << CAST({b} AS INT))"
-    ks = ", ".join(f"({k})" for k in range(_BSK_K))
+    h1, h2 = sql_bloom_hashes("m", dialect)
+    ks = ", ".join(f"({k})" for k in range(BLOOM_K))
     return f"""
     WITH maxk AS (SELECT MAX(o_orderkey) AS mk FROM orders),
     placed AS (
@@ -752,9 +747,9 @@ def _bloom_skip_body(dialect: str) -> str:
     fhash AS (SELECT file_id, {h1} AS h1, {h2} AS h2 FROM fkeys),
     fwords AS (
       SELECT file_id,
-             CAST(FLOOR(((h1 + k.k * h2) % {_BSK_M}) / {_BSK_WORD}.0) AS INT)
+             CAST(FLOOR(((h1 + k.k * h2) % {BLOOM_M}) / {BLOOM_WORD}.0) AS INT)
                AS word_idx,
-             BIT_OR({shl(f"((h1 + k.k * h2) % {_BSK_M}) % {_BSK_WORD}")})
+             BIT_OR({sql_shl1(f"((h1 + k.k * h2) % {BLOOM_M}) % {BLOOM_WORD}", dialect)})
                AS bits
       FROM fhash, (VALUES {ks}) AS k(k)
       GROUP BY 1, 2
@@ -767,7 +762,7 @@ def _bloom_skip_body(dialect: str) -> str:
       LIMIT {_BSK_PROBES}
     ),
     ppos AS (
-      SELECT ck, ((h1 + k.k * h2) % {_BSK_M}) AS pos
+      SELECT ck, ((h1 + k.k * h2) % {BLOOM_M}) AS pos
       FROM (
         SELECT ck, {h1} AS h1, {h2} AS h2
         FROM (SELECT ck, md5('bsk-' || CAST(ck AS {ctype})) AS m FROM probes) p
@@ -776,13 +771,13 @@ def _bloom_skip_body(dialect: str) -> str:
     checks AS (
       SELECT p.ck, f.file_id,
              MIN(CASE WHEN (COALESCE(w.bits, 0)
-                            & {shl(f"p.pos % {_BSK_WORD}")}) <> 0
+                            & {sql_shl1(f"p.pos % {BLOOM_WORD}", dialect)}) <> 0
                       THEN 1 ELSE 0 END) AS hit
       FROM ppos p
       CROSS JOIN frows f
       LEFT JOIN fwords w
         ON w.file_id = f.file_id
-       AND w.word_idx = CAST(FLOOR(p.pos / {_BSK_WORD}.0) AS INT)
+       AND w.word_idx = CAST(FLOOR(p.pos / {BLOOM_WORD}.0) AS INT)
       GROUP BY 1, 2
     ),
     truth AS (

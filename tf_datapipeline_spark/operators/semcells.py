@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import load_table
+from tf_datapipeline_spark.functions import vectors as V
 
 _COARSE_CAP = 1024  # corpus-INDEPENDENT ceiling on driver-collected /
                     # broadcast centroid rows (tests/test_plans.py pins it)
@@ -166,13 +167,7 @@ def semantic_cells_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
         return pd.Series(ids[np.argmax(mat @ m.T, axis=1)])
 
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
+    norm = F.sqrt(V.norm2("embedding"))
     cv0 = emb.select(
         "vec_id",
         "embedding",

@@ -2,11 +2,8 @@
 cosine top-k baseline + an LSH-bucketed approximate variant for scale).
 
 q70 (brute force) is the correctness baseline and fully oracle-checked:
-dot products and norms are ORDER-PINNED packed-array double folds
-(fold_dot/fold_norm2 below) — both engines fold the same array left to
-right, so every value is bit-identical by construction (the round-7
-migration off the DECIMAL(38,12) device, whose DuckDB double→decimal
-cast mis-rounds near half-ulp boundaries; see q66's note in dedup.py).
+dot products and norms are the order-pinned folds of
+functions/vectors.py, bit-identical in both engines by construction.
 
 q71 (ANN) is the 100 TB path: sign-random-projection buckets prune the
 candidate set; the bucket join is an equi-join on the bucket id instead
@@ -19,10 +16,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import load_table, materialize, register_views
+from tf_datapipeline_spark.functions import vectors as V
+from tf_datapipeline_spark.functions.texthash import sql_bxor, sql_shl1
+from tf_datapipeline_spark.functions.vectors import fold_dot, fold_l2, fold_norm2
 from tf_datapipeline_spark.registry import query
 
 _DIM = 64
@@ -64,84 +64,6 @@ def _dims_cte(dialect: str) -> str:
     return _dims_sql(dialect)
 
 
-# ---------------------------------------------------------------------------
-# ORDER-PINNED IEEE-double fold snippets — the q66 migration recipe,
-# applied engine-wide in round 7 (the round-6 verdict's task 4: retire
-# every remaining double->DECIMAL oracle device before the hazard fires
-# a fourth time). Both engines fold the SAME packed array left to right
-# (Spark aggregate()/zip_with() == DuckDB list_reduce()/list_zip()), so
-# every intermediate double — and the emitted sum — is bit-identical by
-# construction: float32 elements cast to double exactly, each product
-# rounds once identically (IEEE mult is commutative and deterministic),
-# each running sum rounds once identically. Spark's CAST(0 AS DOUBLE)
-# init is bit-inert (0.0 + t == t for every t except -0.0, which would
-# need an exact-zero first product — the gaussian corpus has none; q66's
-# in-gate fold has accepted the same convention since round 6). The old
-# per-term CAST(x AS DECIMAL(38,12)) device bought order-independence
-# but inherited DuckDB's vectorized half-even double->decimal
-# mis-rounding near half-ulp boundaries (pinned in
-# tests/test_properties.py::test_duckdb_decimal_cast_misrounds...).
-# ---------------------------------------------------------------------------
-def _seq_norm2(mat: "np.ndarray") -> "np.ndarray":
-    """Row-wise sum of squares with LEFT-TO-RIGHT accumulation —
-    bit-identical to fold_norm2's SQL fold (numpy .sum() pairwise-sums
-    and would drift in the last ulp; verified bit-equal against DuckDB
-    list_reduce on the real corpus in the r10 session)."""
-    acc = np.zeros(len(mat))
-    for i in range(mat.shape[1]):
-        acc = acc + mat[:, i] * mat[:, i]
-    return acc
-
-
-def fold_norm2(dialect: str, e: str) -> str:
-    """Sum of squares of a packed float array, identical fold order in
-    both dialects."""
-    if dialect == "spark":
-        return (
-            f"aggregate(transform({e}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-            " CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
-        )
-    return (
-        f"list_reduce(list_transform({e},"
-        " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, t) -> acc + t)"
-    )
-
-
-def fold_dot(dialect: str, a: str, b: str) -> str:
-    """Dot product of two packed float arrays, identical fold order in
-    both dialects."""
-    if dialect == "spark":
-        return (
-            f"aggregate(zip_with({a}, {b},"
-            " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-            " CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
-        )
-    return (
-        f"list_reduce(list_transform(list_zip({a}, {b}),"
-        " s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)),"
-        " (acc, t) -> acc + t)"
-    )
-
-
-def fold_l2(dialect: str, a: str, b: str) -> str:
-    """Squared L2 distance of two packed float arrays, identical fold
-    order in both dialects (differences and squares each round once,
-    identically; terms are >= 0 so the 0.0 init is bit-inert)."""
-    if dialect == "spark":
-        return (
-            f"aggregate(zip_with({a}, {b},"
-            " (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-            " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-            " CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
-        )
-    return (
-        f"list_reduce(list_transform(list_zip({a}, {b}),"
-        " s -> (CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE))"
-        " * (CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE))),"
-        " (acc, t) -> acc + t)"
-    )
-
-
 def _knn_sql(dialect: str) -> str:
     return f"""
     WITH norms AS (
@@ -169,103 +91,40 @@ def _knn_sql(dialect: str) -> str:
     """
 
 
-# (The decimal(20,12) fold accumulator that used to live here — and the
-# per-term DECIMAL(38,12) quantization contract it mirrored — was
-# retired in round 7: every cross-engine float aggregate in this family
-# now uses the order-pinned double folds above.)
-
-
 @query("q70_knn_bruteforce", oracle=_knn_sql("duckdb"))
 def q70_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: query set (vec_id < 8) against the full corpus,
     in the packed production shape — vectors stay as arrays, the tiny
     query side broadcasts, one corpus pass computes every dot via
     zip_with/aggregate (JVM codegen), so the corpus never shuffles and no
-    row explosion happens. Values hash-match the oracle because BOTH
-    engines fold the same packed array left to right in plain IEEE
-    double (fold_dot/fold_norm2 — the order-pinned contract that
-    replaced the per-term DECIMAL(38,12) device, whose DuckDB cast
-    mis-rounds near half-ulp boundaries)."""
+    row explosion happens. Values hash-match the oracle because both
+    engines run the same order-pinned folds (functions/vectors.py)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
+    corpus = emb.select(
+        "vec_id", "embedding", F.sqrt(V.norm2("embedding")).alias("nrm")
     )
-    corpus = emb.select("vec_id", "embedding", F.sqrt(norm2).alias("nrm"))
     queries = corpus.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
-    )
-    dot = F.aggregate(
-        F.zip_with(
-            "embedding", "q_emb", lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
     scored = corpus.join(
         F.broadcast(queries), F.col("vec_id") != F.col("query_id")
     ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        (dot / (F.col("nrm") * F.col("q_nrm"))).alias("cos_sim"),
+        (V.dot("embedding", "q_emb") / (F.col("nrm") * F.col("q_nrm"))).alias(
+            "cos_sim"
+        ),
     )
-    from pyspark.sql import Window
+    return cosine_topk(scored, _TOP_K)
 
+
+def cosine_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The exact top-k tail of every cosine search: per query_id, the k
+    rows with the highest cos_sim, ties to the lower neighbor_id, ranked
+    1..k as (query_id, neighbor_id, rank, cos_sim)."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
-
-
-def knn_bruteforce_packed(
-    spark: SparkSession, sf_dir: str, n_queries: int = _N_QUERIES, k: int = _TOP_K
-) -> DataFrame:
-    """Performance-shaped exact top-k (same semantics as q70, float math):
-    broadcast the (tiny) query set, one pass over the corpus computing
-    dots with zip_with/aggregate array expressions (JVM codegen, no
-    Python), per-query top-k via window. At 100 TB: corpus never moves —
-    the only shuffle is the final (n_queries × corpus) scored rows for
-    the window, prunable by local top-k first."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-    corpus = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    queries = (
-        corpus.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot / (F.col("nrm") * F.col("q_nrm"))).alias("cos_sim"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -313,13 +172,7 @@ def q71_knn_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         buckets = (by_table * bit_weights).sum(axis=2).astype(np.int32)
         return pd.Series(list(buckets))
 
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
+    norm = F.sqrt(V.norm2("embedding"))
     base = emb.select(
         "vec_id", "embedding", norm.alias("nrm"), bucket_udf("embedding").alias("buckets")
     )
@@ -347,11 +200,7 @@ def q71_knn_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "q_emb", "q_nrm", "table_id", F.explode("probes").alias("bucket")
         )
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = V.dot("embedding", "q_emb")
     scored = (
         index.join(F.broadcast(queries), ["table_id", "bucket"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -362,14 +211,7 @@ def q71_knn_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()  # a candidate can match in several tables/probes
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return cosine_topk(scored, _TOP_K)
 
 
 def _centroid_sql(dialect: str) -> str:
@@ -415,6 +257,16 @@ _N_PROBE = 4
 _CENTROID_STRIDE = 37  # centroid c = corpus vector with vec_id = 8 + 37*c
 
 
+def seed_ids(n: int) -> list[int]:
+    """The first `n` ids of the fixed seed grid, in grid order."""
+    return [8 + _CENTROID_STRIDE * c for c in range(n)]
+
+
+def seed_values_sql(n: int) -> str:
+    """`(c, seed id)` VALUES rows for the first `n` grid positions."""
+    return ", ".join(f"({c}, {i})" for c, i in enumerate(seed_ids(n)))
+
+
 def nearest_seed(
     spark: SparkSession, sf_dir: str, df: DataFrame
 ) -> tuple[DataFrame, Column]:
@@ -422,38 +274,24 @@ def nearest_seed(
     nearest seed centroid: returns `df` with one named distance column
     `_d2_<cell>` per seed, and the argmin struct `(d2, cell)` over them.
     Cells are the seeds this corpus has (the oracles' `cw` JOIN drops
-    missing seed ids the same way). Each distance is an order-pinned
-    double fold over the zipped squared diffs, the bitwise twin of the
-    oracles' `list_reduce` (the 0.0 init is inert: every term is >= 0).
-    Ties break to the lowest cell, as the oracles' ORDER BY d2, cell.
-    The folds are projected to named columns first because nesting them
-    inside a when-chain copies each 64-term tree once per level."""
-    seed_ids = [8 + _CENTROID_STRIDE * k for k in range(_N_CELLS)]
+    missing seed ids the same way). Each distance is the order-pinned
+    `l2` fold against the seed as a literal array, the bitwise twin of
+    the oracles' `list_reduce`. Ties break to the lowest cell, as the
+    oracles' ORDER BY d2, cell. The folds are projected to named columns
+    first because nesting them inside a when-chain copies each 64-term
+    tree once per level."""
+    ids = seed_ids(_N_CELLS)
     seed_rows = (
         load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id").isin(seed_ids))
+        .filter(F.col("vec_id").isin(ids))
         .select("vec_id", "embedding")
         .collect()
     )
-    cents = {
-        seed_ids.index(r.vec_id): [float(x) for x in r.embedding]
-        for r in seed_rows
-    }
+    cents = {ids.index(r.vec_id): [float(x) for x in r.embedding] for r in seed_rows}
     ks = sorted(cents)
     for k in ks:
         arr = F.array(*[F.lit(v) for v in cents[k]])
-        df = df.withColumn(
-            f"_d2_{k}",
-            F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    arr,
-                    lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ),
-        )
+        df = df.withColumn(f"_d2_{k}", V.l2("embedding", arr))
     best = F.array_sort(
         F.array(
             *[
@@ -468,7 +306,7 @@ def nearest_seed(
 @query("q73_knn_ann_ivf")
 def q73_knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cent_ids = [8 + _CENTROID_STRIDE * c for c in range(_N_CELLS)]
+    cent_ids = seed_ids(_N_CELLS)
     cent_rows = (
         emb.filter(F.col("vec_id").isin(cent_ids))
         .select("vec_id", "embedding")
@@ -488,13 +326,7 @@ def q73_knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         order = np.argsort(-sims, axis=1, kind="stable")[:, :_N_PROBE]
         return pd.Series(list(order.astype(np.int32)))
 
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
+    norm = F.sqrt(V.norm2("embedding"))
     base = emb.select(
         "vec_id", "embedding", norm.alias("nrm"), cell_udf("embedding").alias("cells")
     )
@@ -509,11 +341,7 @@ def q73_knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("q_nrm"),
         F.explode("cells").alias("cell"),
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = V.dot("embedding", "q_emb")
     scored = (
         index.join(F.broadcast(queries), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -523,14 +351,7 @@ def q73_knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot / (F.col("nrm") * F.col("q_nrm"))).alias("cos_sim"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return cosine_topk(scored, _TOP_K)
 
 
 # --------------------------------------------------------------------------
@@ -547,9 +368,7 @@ def q73_knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (localCheckpoint per round, as q67 does for label propagation).
 # --------------------------------------------------------------------------
 def _kmeans_step_sql(dialect: str) -> str:
-    cells = ", ".join(
-        f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
-    )
+    cells = seed_values_sql(_N_CELLS)
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
     WITH dims AS ({_dims_cte(dialect)}),
@@ -604,22 +423,10 @@ _PQ_CODES = 8
 
 
 def _pq_dists_ctes(dialect: str, n_codewords: int | None = None) -> str:
-    """Shared q75/q76 subvector-distance CTEs, ORDER-PINNED (the q66
-    migration, applied here after the round-6 sf1 sweep caught the
-    decimal device mis-rounding in q75's 12th digit): per (vec, sub,
-    code), both engines fold the SAME 8 squared-diff doubles left to
-    right (Spark aggregate(transform(...)) == DuckDB
-    list_reduce(list_transform(...)); Spark's 0.0 init is bit-inert
-    because every term is >= 0), so every intermediate double — and the
-    emitted d2 — is bit-identical by construction. The old exploded
-    SUM(CAST(term AS DECIMAL(38,12))) needed order-independence but
-    inherited DuckDB's half-even double->decimal mis-rounding near
-    half-ulp boundaries (2 of 58k sf1 rows diverged in the last ulp).
-    """
-    cws = ", ".join(
-        f"({k}, {8 + _CENTROID_STRIDE * k})"
-        for k in range(n_codewords or _PQ_CODES)
-    )
+    """Shared q75/q76 subvector-distance CTEs: per (vec, sub, code), both
+    engines fold the same 8 squared-diff doubles left to right — the
+    order contract of functions/vectors.py, over an 8-dim slice."""
+    cws = seed_values_sql(n_codewords or _PQ_CODES)
     if dialect == "spark":
         subs = "SELECT explode(sequence(0, 7)) AS sub"
         # BROADCAST hints pin the build sides to the BOUNDED relations:
@@ -812,9 +619,7 @@ def _ivfpq_sql() -> str:
     rescore. Cross-IMPLEMENTATION, not shared-SQL: the Spark side is the
     numpy mapInPandas/pandas_udf pipeline whose accumulations are
     sequenced to match the folds bit-for-bit (see q77's docstring)."""
-    cents_vals = ", ".join(
-        f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
-    )
+    cents_vals = seed_values_sql(_N_CELLS)
     return f"""
     WITH {_pq_dists_ctes("duckdb", _IVFPQ_NCODES)},
     codes AS (
@@ -900,22 +705,19 @@ def _ivfpq_sql() -> str:
 
 @query("q77_knn_ivfpq", oracle=_ivfpq_sql())
 def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ, numpy-implemented but FOLD-EXACT (r10): every float
-    accumulation in the encode path is sequenced left-to-right so it is
-    bit-identical to the oracle's order-pinned folds (numpy's .sum()
-    pairwise-sums and BLAS matmuls reorder — both were replaced with
-    explicit sequential accumulation loops, verified bit-equal against
-    DuckDB list_reduce on the real corpus), ADC is an integer sum of
+    """IVF-PQ, numpy-implemented but FOLD-EXACT: every float
+    accumulation in the encode path is a numpy form of functions/
+    vectors.py (seq_norm2, seq_dot), bit-identical to the oracle's
+    order-pinned folds (numpy's .sum() and BLAS matmuls would reorder
+    them), ADC is an integer sum of
     FLOOR-quantized LUT entries (order-independent, FAISS fast-scan
     style), and the shortlist is integer-ordered with vec_id ties — so
     the whole query is ORACLE-CHECKED, leaving only the recall-floor
     rungs (q71/q73) and the randomized augment/IO ops rows-only."""
     emb = load_table(spark, sf_dir, "embeddings")
-    seed_ids = sorted(
-        {8 + _CENTROID_STRIDE * c for c in range(max(_N_CELLS, _IVFPQ_NCODES))}
-    )
+    grid = seed_ids(max(_N_CELLS, _IVFPQ_NCODES))
     seed_rows = (
-        emb.filter(F.col("vec_id").isin(seed_ids))
+        emb.filter(F.col("vec_id").isin(grid))
         .select("vec_id", "embedding")
         .collect()
     )
@@ -929,9 +731,9 @@ def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # smaller corpus may truncate the TAIL, never punch a mid-range
     # hole). A sparse vec_id space must fail here, not hash-diverge.
     found = sorted(seeds)
-    assert found == seed_ids[: len(found)], (
+    assert found == grid[: len(found)], (
         "IVF-PQ seed grid has mid-range holes (non-dense vec_ids): "
-        f"missing {sorted(set(seed_ids[: len(found)]) - set(found))[:5]} — "
+        f"missing {sorted(set(grid[: len(found)]) - set(found))[:5]} — "
         "cell/code labels would silently diverge from the oracle"
     )
     # like q73: a small corpus may not contain every seed id — cells are
@@ -942,51 +744,37 @@ def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents_raw = np.stack([seeds[i] for i in cent_ids])
     # order-pinned centroid norms: sequential accumulation == the
     # oracle's fold_norm2 per centroid vec_id, then IEEE sqrt
-    cent_nrms = np.sqrt(_seq_norm2(cents_raw))
+    cent_nrms = np.sqrt(V.seq_norm2(cents_raw))
     # codebook[code, sub] = sub'th 8-dim slice of seed vector `code`
     # (q75's convention); positions equal k because vec_ids are dense,
     # so numpy code indices == the oracle's cw.code labels. The
     # production 256-codeword setting simply reads more seeds (corpus
     # permitting — see the dial comment).
-    book_ids = [
-        8 + _CENTROID_STRIDE * k
-        for k in range(_IVFPQ_NCODES)
-        if 8 + _CENTROID_STRIDE * k in seeds
-    ]
+    book_ids = [i for i in seed_ids(_IVFPQ_NCODES) if i in seeds]
     book = np.stack([seeds[i] for i in book_ids]).reshape(
         len(book_ids), _PQ_CODES, _SUB_DIM
     )
 
     def _sub_d2(mat: np.ndarray) -> np.ndarray:
-        """d2[row, sub, code]: order-pinned squared subvector distances —
-        each 8-term accumulation runs left to right (numpy's .sum()
-        would pairwise-sum and break bit-parity with the oracle fold)."""
-        n = len(mat)
-        d2 = np.empty((n, _PQ_CODES, len(book_ids)))
+        """d2[row, sub, code]: order-pinned squared subvector distances,
+        the oracle's 8-term fold."""
+        d2 = np.empty((len(mat), _PQ_CODES, len(book_ids)))
         for b in range(len(book_ids)):
             for s in range(_PQ_CODES):
-                acc = np.zeros(n)
-                base = s * _SUB_DIM
-                for i in range(_SUB_DIM):
-                    d = mat[:, base + i] - book[b, s, i]
-                    acc = acc + d * d
-                d2[:, s, b] = acc
+                sub = mat[:, s * _SUB_DIM : (s + 1) * _SUB_DIM]
+                d2[:, s, b] = V.seq_norm2(sub - book[b, s])
         return d2
 
     @F.pandas_udf("struct<cell:int, codes:array<int>, probe:array<int>>")
     def encode_udf(emb_col: pd.Series) -> pd.DataFrame:
         mat = np.stack(emb_col.to_numpy()).astype(np.float64)
         n = len(mat)
-        nrm = np.sqrt(_seq_norm2(mat))
+        nrm = np.sqrt(V.seq_norm2(mat))
         # cosine per centroid, same op sequence as the oracle:
         # pinned-fold dot, then one division by (row_norm * cent_norm)
         sims = np.empty((n, len(cent_ids)))
         for c in range(len(cent_ids)):
-            acc = np.zeros(n)
-            cv = cents_raw[c]
-            for i in range(_DIM):
-                acc = acc + mat[:, i] * cv[i]
-            sims[:, c] = acc / (nrm * cent_nrms[c])
+            sims[:, c] = V.seq_dot(mat, cents_raw[c]) / (nrm * cent_nrms[c])
         # ORDER BY sim DESC, cell — stable argsort keeps low cell first
         order = np.argsort(-sims, axis=1, kind="stable")
         # ORDER BY d2, code — argmin takes the first (lowest code) tie
@@ -1037,8 +825,6 @@ def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", adc.alias("ad2"))
     )
-    from pyspark.sql import Window
-
     wc = Window.partitionBy("query_id").orderBy(F.asc("ad2"), F.asc("vec_id"))
     shortlist = (
         cand.withColumn("crn", F.row_number().over(wc))
@@ -1046,26 +832,14 @@ def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id")
     )
     # exact rescore: only the shortlist touches full vectors
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
+    norm = F.sqrt(V.norm2("embedding"))
     vecs = emb.select("vec_id", "embedding", norm.alias("nrm"))
     qvecs = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    dot = F.aggregate(
-        F.zip_with(
-            "embedding", "q_emb", lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = V.dot("embedding", "q_emb")
     rescored = (
         shortlist.join(vecs, "vec_id")
         .join(F.broadcast(qvecs), "query_id")
@@ -1075,14 +849,7 @@ def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot / (F.col("nrm") * F.col("q_nrm"))).alias("cos_sim"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return cosine_topk(rescored, _TOP_K)
 
 
 # --------------------------------------------------------------------------
@@ -1253,22 +1020,12 @@ def q79_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
+    norm2 = V.norm2("embedding")
     corpus = emb.select("vec_id", "embedding", F.sqrt(norm2).alias("nrm"))
     qv = corpus.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
     )
-    dot = F.aggregate(
-        F.zip_with(
-            "embedding", "q_emb", lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = V.dot("embedding", "q_emb")
     vscore = corpus.crossJoin(F.broadcast(qv)).select(
         "vec_id", (dot / (F.col("nrm") * F.col("q_nrm"))).alias("cos_sim")
     )
@@ -1376,8 +1133,6 @@ def _mknn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed cell-blocked kNN edge list (va, vb) — q7c's graph
     construction, shared with q7m's NSW-style beam search. Out-degree
     is bounded at _MKNN_K by the per-va window."""
-    from pyspark.sql import Window
-
     from tf_datapipeline_spark.operators.semcells import semantic_cells_df
 
     cv = semantic_cells_df(spark, sf_dir)  # vec_id, embedding, nrm, cell
@@ -1396,18 +1151,15 @@ def _mknn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("b_nrm"),
         F.pmod(F.col("vec_id"), F.lit(_SALT)).cast("int").alias("slice"),
     )
-    dot = F.aggregate(
-        F.zip_with(
-            "a_emb", "b_emb", lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     pairs = (
         a.join(b, ["cell", "slice"])
         .filter(F.col("va") != F.col("vb"))
         .select(
-            "va", "vb", (dot / (F.col("a_nrm") * F.col("b_nrm"))).alias("cos")
+            "va",
+            "vb",
+            (V.dot("a_emb", "b_emb") / (F.col("a_nrm") * F.col("b_nrm"))).alias(
+                "cos"
+            ),
         )
     )
     w = Window.partitionBy("va").orderBy(F.desc("cos"), F.asc("vb"))
@@ -1470,33 +1222,21 @@ _BH_TOPK = 10
 
 
 def _binary_hamming_sql(dialect: str) -> str:
-    if dialect == "spark":
-        def shl(b: str) -> str:
-            return f"shiftleft(CAST(1 AS BIGINT), CAST({b} AS INT))"
-
-        def bxor(a: str, b: str) -> str:
-            return f"({a} ^ {b})"
-    else:
-        def shl(b: str) -> str:
-            return f"(CAST(1 AS BIGINT) << CAST({b} AS INT))"
-
-        def bxor(a: str, b: str) -> str:
-            return f"xor({a}, {b})"
     return f"""
     WITH codes AS (
       SELECT vec_id,
              SUM(CASE WHEN pos <= 32 AND x >= 0
-                      THEN {shl("pos - 1")} ELSE 0 END) AS w0,
+                      THEN {sql_shl1("pos - 1", dialect)} ELSE 0 END) AS w0,
              SUM(CASE WHEN pos > 32 AND x >= 0
-                      THEN {shl("pos - 33")} ELSE 0 END) AS w1
+                      THEN {sql_shl1("pos - 33", dialect)} ELSE 0 END) AS w1
       FROM ({_dims_cte(dialect)}) d
       GROUP BY vec_id
     ),
     scored AS (
       SELECT {"/*+ BROADCAST(q) */ " if dialect == "spark" else ""}
              q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST(bit_count({bxor("q.w0", "c.w0")})
-                  + bit_count({bxor("q.w1", "c.w1")}) AS INT) AS hamming
+             CAST(bit_count({sql_bxor("q.w0", "c.w0", dialect)})
+                  + bit_count({sql_bxor("q.w1", "c.w1", dialect)}) AS INT) AS hamming
       FROM codes q JOIN codes c
         ON q.vec_id < {_N_QUERIES} AND c.vec_id >= {_N_QUERIES}
     ),
@@ -1836,26 +1576,16 @@ _REC_K = 10  # recall@10 over q7e's Hamming codes (same k as _BH_TOPK)
 
 
 def _recall_eval_sql(dialect: str) -> str:
-    hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
-    if dialect == "spark":
-        def shl(b: str) -> str:
-            return f"shiftleft(CAST(1 AS BIGINT), CAST({b} AS INT))"
+    def hint(alias: str) -> str:
+        return f"/*+ BROADCAST({alias}) */ " if dialect == "spark" else ""
 
-        def bxor(a: str, b: str) -> str:
-            return f"({a} ^ {b})"
-    else:
-        def shl(b: str) -> str:
-            return f"(CAST(1 AS BIGINT) << CAST({b} AS INT))"
-
-        def bxor(a: str, b: str) -> str:
-            return f"xor({a}, {b})"
     return f"""
     WITH codes AS (
       SELECT vec_id,
              SUM(CASE WHEN pos <= 32 AND x >= 0
-                      THEN {shl("pos - 1")} ELSE 0 END) AS w0,
+                      THEN {sql_shl1("pos - 1", dialect)} ELSE 0 END) AS w0,
              SUM(CASE WHEN pos > 32 AND x >= 0
-                      THEN {shl("pos - 33")} ELSE 0 END) AS w1
+                      THEN {sql_shl1("pos - 33", dialect)} ELSE 0 END) AS w1
       FROM ({_dims_cte(dialect)}) d
       GROUP BY vec_id
     ),
@@ -1870,10 +1600,10 @@ def _recall_eval_sql(dialect: str) -> str:
           -- side provably bounded for the NLJ audit, and the hint pins
           -- the build side regardless of stats (Catalyst built the
           -- corpus codes side here before — caught by the audit)
-          SELECT {hint.replace("(q)", "(qc)")}qc.vec_id AS query_id,
+          SELECT {hint("qc")}qc.vec_id AS query_id,
                  c.vec_id AS neighbor_id,
-                 CAST(bit_count({bxor("qc.w0", "c.w0")})
-                      + bit_count({bxor("qc.w1", "c.w1")}) AS INT) AS hamming
+                 CAST(bit_count({sql_bxor("qc.w0", "c.w0", dialect)})
+                      + bit_count({sql_bxor("qc.w1", "c.w1", dialect)}) AS INT) AS hamming
           FROM (SELECT * FROM codes WHERE vec_id < {_N_QUERIES}) qc
           JOIN codes c ON c.vec_id >= {_N_QUERIES}
         ) s
@@ -1893,7 +1623,7 @@ def _recall_eval_sql(dialect: str) -> str:
                ROW_NUMBER() OVER (PARTITION BY query_id
                                   ORDER BY cos_sim DESC, neighbor_id) AS rnk
         FROM (
-          SELECT {hint}q.vec_id AS query_id, d.vec_id AS neighbor_id,
+          SELECT {hint("q")}q.vec_id AS query_id, d.vec_id AS neighbor_id,
                  {fold_dot(dialect, "d.embedding", "q.embedding")}
                    / (q.nrm * d.nrm) AS cos_sim
           FROM (SELECT * FROM norms WHERE vec_id < {_N_QUERIES}) q
@@ -2016,9 +1746,7 @@ def q7j_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reads identically in both engines either way.
 # --------------------------------------------------------------------------
 def _cell_balance_oracle() -> str:
-    cells = ", ".join(
-        f"({k}, {8 + _CENTROID_STRIDE * k})" for k in range(_N_CELLS)
-    )
+    cells = seed_values_sql(_N_CELLS)
     d2 = (
         "list_reduce("
         "list_transform("
@@ -2062,8 +1790,6 @@ def q7k_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy()
     return percell.select(
         "cell",
@@ -2290,14 +2016,8 @@ def _graph_ann_sql() -> str:
 
 @query("q7m_graph_ann", oracle=_graph_ann_sql())
 def q7m_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
+    norm2 = V.norm2("embedding")
     gnorms = emb.select("vec_id", "embedding", F.sqrt(norm2).alias("nrm"))
     queries = gnorms.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -2314,15 +2034,9 @@ def q7m_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # In(vec_id, ...) into the scan, so the beam0 cross product's build
     # side is provably bounded by the query text (the stride-arithmetic
     # filter form hid that bound from the scan AND the NLJ audit)
-    seed_ids = [8 + _CENTROID_STRIDE * k for k in range(_N_CELLS)]
+    ids = seed_ids(_N_CELLS)
 
-    dot = F.aggregate(
-        F.zip_with(
-            "embedding", "q_emb", lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = V.dot("embedding", "q_emb")
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
@@ -2343,7 +2057,7 @@ def q7m_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus side; here no round touches the corpus at all.
     seed_rel = spark.sql(
         "SELECT CAST(vec_id AS BIGINT) AS vec_id FROM VALUES "
-        + ", ".join(f"({i})" for i in seed_ids)
+        + ", ".join(f"({i})" for i in ids)
         + " AS t(vec_id)"
     )  # LocalTableScan: structurally bounded for the NLJ audit
     reach = seed_rel
@@ -2584,9 +2298,7 @@ def _ivf_probe_prelude(dialect: str) -> str:
     self-contained form re-derived the assignment + rescore joins per
     consumer. DuckDB keeps the one-statement form (it materializes
     multiply-referenced CTEs on its own)."""
-    cells = ", ".join(
-        f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
-    )
+    cells = seed_values_sql(_N_CELLS)
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     qhint = "/*+ BROADCAST(qc) */ " if dialect == "spark" else ""
     return f"""cells(cell, cvec_id) AS (VALUES {cells}),
@@ -2833,9 +2545,7 @@ _SIL_Q = 68719476736.0  # 2^36 — the shared mean-quantization device
 
 
 def _silhouette_sql(dialect: str) -> str:
-    cells = ", ".join(
-        f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
-    )
+    cells = seed_values_sql(_N_CELLS)
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
     WITH cells(cell, cvec_id) AS (VALUES {cells}),
@@ -2884,9 +2594,7 @@ def q7p_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (d2, cell) structs replays exactly the ROW_NUMBER order, so a/b
     # and every downstream value are identical (oracle unchanged,
     # parity-verified).
-    cells = ", ".join(
-        f"({c}, {8 + _CENTROID_STRIDE * c})" for c in range(_N_CELLS)
-    )
+    cells = seed_values_sql(_N_CELLS)
     return spark.sql(f"""
     WITH cells(cell, cvec_id) AS (VALUES {cells}),
     cente AS (

@@ -31,7 +31,14 @@ from tf_datapipeline_spark.registry import query
 # requires an active SparkSession).
 def _tokens_spark():
     return F.split(F.trim(F.col("text")), r"\s+")
-_TOKENS_SQL = "regexp_split_to_array(trim(text), '\\s+')"
+
+
+def _tokens_sql(col: str) -> str:
+    """DuckDB whitespace tokens of the string column `col`."""
+    return f"regexp_split_to_array(trim({col}), '\\s+')"
+
+
+_TOKENS_SQL = _tokens_sql("text")
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _SW_LIST = ", ".join(f"'{w}'" for w in _STOPWORDS)

@@ -935,10 +935,13 @@ def _stream_ingest_oracle() -> str:
         _K,
         _with_prelude,
     )
-    from tf_datapipeline_spark.operators.text import _SW_LIST, _TOKENS_SQL
+    from tf_datapipeline_spark.operators.text import _SW_LIST, _tokens_sql
 
-    mcols_half1 = ", ".join(f"m{i}" for i in range(_K // 2))
-    mcols_half2 = ", ".join(f"m{i}" for i in range(_K // 2, _K))
+    def band_cols(q: str, band: int) -> str:
+        """`q.m<k>, ...` over the MinHash columns of LSH band 0 or 1."""
+        half = _K // 2
+        return ", ".join(f"{q}.m{k}" for k in range(band * half, (band + 1) * half))
+
     est = " + ".join(
         f"(CASE WHEN i.m{k} = s.m{k} THEN 1 ELSE 0 END)" for k in range(_K)
     )
@@ -949,7 +952,7 @@ def _stream_ingest_oracle() -> str:
     FROM documents d
     WHERE d.doc_id % {_DELTA_MOD} = 0
       AND d.n_chars >= 100
-      AND length(list_filter({_TOKENS_SQL.replace('text', 'd.text')},
+      AND length(list_filter({_tokens_sql('d.text')},
                              t -> t IN ({_SW_LIST}))) > 0
       -- NOT(A OR B) split into two AND'ed NOT EXISTS, one per band, so
       -- each subquery carries a pure band-key EQUALITY the oracle engine
@@ -963,8 +966,8 @@ def _stream_ingest_oracle() -> str:
         SELECT 1
         FROM sig s JOIN sig i
           ON i.doc_id % {_DELTA_MOD} <> 0
-         AND concat_ws('|', i.{mcols_half1.replace(', ', ', i.')})
-               = concat_ws('|', s.{mcols_half1.replace(', ', ', s.')})
+         AND concat_ws('|', {band_cols('i', 0)})
+               = concat_ws('|', {band_cols('s', 0)})
          AND CAST(({est}) AS DOUBLE) / {_K} >= 0.5
         WHERE s.doc_id = d.doc_id
       )
@@ -972,8 +975,8 @@ def _stream_ingest_oracle() -> str:
         SELECT 1
         FROM sig s JOIN sig i
           ON i.doc_id % {_DELTA_MOD} <> 0
-         AND concat_ws('|', i.{mcols_half2.replace(', ', ', i.')})
-               = concat_ws('|', s.{mcols_half2.replace(', ', ', s.')})
+         AND concat_ws('|', {band_cols('i', 1)})
+               = concat_ws('|', {band_cols('s', 1)})
          AND CAST(({est}) AS DOUBLE) / {_K} >= 0.5
         WHERE s.doc_id = d.doc_id
       )
@@ -1131,19 +1134,11 @@ def q4b_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _stream_ivf_oracle() -> str:
     from tf_datapipeline_spark.operators.dedup import _DELTA_MOD
-    from tf_datapipeline_spark.operators.similarity import (
-        _CENTROID_STRIDE,
-        _N_CELLS,
-    )
+    from tf_datapipeline_spark.operators.similarity import _N_CELLS, seed_values_sql
 
-    cells = ", ".join(
-        f"({k}, {8 + _CENTROID_STRIDE * k})" for k in range(_N_CELLS)
-    )
-    # ORDER-PINNED distance fold (the q66 migration, applied after the
-    # round-6 sf1 sweep caught the decimal device mis-rounding q7b's d2
-    # in the 12th digit on 1 of 5k rows): list_reduce over the zipped
-    # per-dim squared diffs, left to right — bit-identical to the Spark
-    # side's aggregate(zip_with(...)) double fold by construction.
+    cells = seed_values_sql(_N_CELLS)
+    # order-pinned distance fold: the same order as vectors.l2, which
+    # the Spark side (similarity.nearest_seed) runs
     d2 = (
         "list_reduce("
         "list_transform("
