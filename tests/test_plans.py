@@ -674,10 +674,7 @@ def test_q65_bands_its_candidates_once(spark):
     assert "Window" not in final, final
 
 
-def test_canonical_plan_ignores_expand_group_order():
-    """tools/capture_plans.canonical_plan: an Expand whose distinct
-    groups Spark ordered by expression ids reads the same in either
-    order, as do the attribute lists downstream of it."""
+def _capture_plans():
     import importlib.util
     import os
 
@@ -688,6 +685,14 @@ def test_canonical_plan_ignores_expand_group_order():
     )
     capture_plans = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(capture_plans)
+    return capture_plans
+
+
+def test_canonical_plan_ignores_expand_group_order():
+    """tools/capture_plans.canonical_plan: an Expand whose distinct
+    groups Spark ordered by expression ids reads the same in either
+    order, as do the attribute lists downstream of it."""
+    capture_plans = _capture_plans()
 
     def plan(groups: list[str], base: int) -> str:
         # `groups` in Spark's order; `base` shifts every expression id
@@ -713,3 +718,34 @@ def test_canonical_plan_ignores_expand_group_order():
     canon = capture_plans.canonical_plan
     assert canon(a) == canon(b)
     assert canon(a) != canon(plan(["shard", "lang"], 10))
+
+
+def test_canonical_stream_plan_masks_run_ids():
+    """tools/capture_plans.canonical_stream_plan: two runs of one
+    stateful stream differ in run and watermark ids, checkpoint path,
+    batch timestamp, writer object and expression ids, and read the
+    same; a different state partition count does not."""
+    canon = _capture_plans().canonical_stream_plan
+
+    def plan(run: str, ts: int, base: int, parts: int) -> str:
+        ck = f"file:/tmp/temporary-{run}/state"
+        return "\n".join(
+            [
+                "WriteToDataSourceV2 MicroBatchWrite[epoch: 0, writer: "
+                f"org.apache.spark.sql.execution.streaming.sources."
+                f"MemoryStreamingWrite@{ts % 65536:x}]",
+                f"+- !FlatMapGroupsInPandasWithState f(user_id#{base}L), "
+                f"[user_id#{base}L], state info [ checkpoint = {ck}, "
+                f"runId = {run}, opId = 0, ver = 0, numPartitions = {parts}] "
+                f"stateStoreCkptIds = None, 2, Update, NoTimeout, {ts}, 0, 0, false",
+                f"   +- Exchange hashpartitioning(user_id#{base}L, {parts}), "
+                "REQUIRED_BY_STATEFUL_OPERATOR, [plan_id=40]",
+                f"      +- EventTimeWatermark {run}, ts#{base + 1}: timestamp, 1 hours",
+            ]
+        )
+
+    run = "c49a5e69-9b45-4d77-9de2-86a87b291b76"
+    a = plan(run, 1792412549403, 17, 4)
+    b = plan("0999ad5f-5a27-47b1-80c6-175f7e9747b5", 1792412551077, 517, 4)
+    assert canon(a) == canon(b)
+    assert canon(a) != canon(plan(run, 1792412549403, 17, 8))

@@ -195,25 +195,54 @@ def test_connected_components_independent_of_partitions_and_batches(spark):
         spark.conf.set(key, saved)
 
 
+def _jobs_in_group(spark, group: str, fn):
+    """`fn()`'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_one_partition_is_one_job(spark):
+    """Edges in ONE partition: the local contraction sees every edge, so
+    its checkpoint already holds the final labels. Connected components
+    is that one checkpoint job, with no seed or confirming round, and
+    its labels are the loop union-find's."""
+    import random
+
+    from tf_datapipeline_spark.operators.dedup import connected_components
+
+    rng = random.Random(11)
+    raw = [(rng.randrange(2000), rng.randrange(2000)) for _ in range(1500)]
+    raw += [(7, 7), (7, 7)]  # a self-loop, twice
+    expected = _reference_components(raw)
+    edges = spark.createDataFrame(raw, "doc_a long, doc_b long")
+    # the repartition's shuffle is the input's cost, not the operator's
+    one = edges.repartition(1).localCheckpoint()
+    labels, n_jobs = _jobs_in_group(
+        spark, "cc-one-partition", lambda: connected_components(one)
+    )
+    assert n_jobs == 1, n_jobs
+    assert {r.doc_id: r.label for r in labels.collect()} == expected
+
+
 def test_cc_labels_build_runs_few_jobs(spark):
     """The pair graph's labels on the smoke corpus — signature build,
-    LSH pairs, contraction and the confirming round — stay within 16
-    Spark jobs. A per-round count join, a separate pairs checkpoint or
-    per-band pair joins coming back push it past the bound (it was 45
-    jobs, then 20 with one join per band)."""
+    LSH pairs and the contraction, whose one-partition checkpoint is the
+    labels — stay within 8 Spark jobs (6 today). A per-round count join,
+    a separate pairs checkpoint, per-band pair joins or rounds after an
+    exact contraction coming back push it past the bound."""
     from tests.conftest import SF_SMOKE
     from tf_datapipeline_spark.operators.dedup import materialize_cc_labels
 
-    sc = spark.sparkContext
-    group = "cc-labels-job-count"
-    sc.setJobGroup(group, group)
-    try:
-        labels = materialize_cc_labels(spark, SF_SMOKE)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    labels, n_jobs = _jobs_in_group(
+        spark, "cc-labels-job-count", lambda: materialize_cc_labels(spark, SF_SMOKE)
+    )
     assert labels.count() > 0
-    assert n_jobs <= 16, n_jobs
+    assert n_jobs <= 8, n_jobs
 
 
 def test_hot_bucket_caps_bind_like_the_oracle(spark, monkeypatch):

@@ -921,3 +921,151 @@ def test_streams_read_multi_file_tables(spark, tmp_path):
         assert got_rows == want_rows, (
             f"{n}: {len(got_rows)} rows over part files vs {len(want_rows)}"
         )
+
+
+def test_bounded_stream_state_partitions_capped_at_slots(spark):
+    """`run_bounded` starts a stateful stream (q4zk) with its state
+    store in `min(shuffle.partitions, defaultParallelism)` partitions,
+    as its `StateOperatorProgress` reports, and leaves the session's
+    `spark.sql.shuffle.partitions` as it found it — also when `start()`
+    raises."""
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from tests.conftest import SF_SMOKE
+    from tf_datapipeline_spark import registry
+    from tf_datapipeline_spark.streaming.events_stream import (
+        read_events_stream,
+        run_bounded,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    slots = spark.sparkContext.defaultParallelism
+    progress, terminated = [], []
+
+    class Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(event.progress)
+
+        def onQueryTerminated(self, event):
+            terminated.append(event.id)
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        registry.queries()["q4zk_stream_funnel"](spark, SF_SMOKE).collect()
+        # listener events arrive asynchronously, the query's own in order
+        deadline = time.time() + 60
+        while not terminated and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert terminated, "no QueryTerminatedEvent within 60 s"
+    parts = {
+        op.numShufflePartitions
+        for p in progress
+        if p.id == terminated[0]
+        for op in p.stateOperators
+    }
+    assert parts == {min(int(before), slots)}, parts
+    assert spark.conf.get(key) == before
+
+    # append mode over an aggregation without a watermark: start() raises
+    unsupported = read_events_stream(spark, SF_SMOKE).groupBy("user_id").count()
+    with pytest.raises(AnalysisException):
+        run_bounded(unsupported, "append")
+    assert spark.conf.get(key) == before
+
+
+def test_stateful_stream_restart_keeps_checkpointed_partitions(spark, tmp_path):
+    """A checkpointed stateful stream (q4zk's funnel state machine) run
+    once under `shuffle.partitions` 8, then resumed from the same
+    checkpoint under 4 after a file lands, gives the same per-user steps
+    as one uninterrupted run. The resumed run keeps 8 state partitions:
+    Spark pins the count in the checkpoint's offset log, so the state
+    the first run wrote is read back by the same key partitioning."""
+    from tf_datapipeline_spark.streaming.events_stream import _funnel_state
+
+    m = 60_000_000  # one minute in micros
+    first = [
+        (_T0 + 0 * m, 1, 1, "view"),
+        (_T0 + 1 * m, 2, 2, "click"),
+        (_T0 + 2 * m, 3, 3, "view"),
+        (_T0 + 3 * m, 4, 4, "view"),
+        (_T0 + 4 * m, 5, 1, "click"),
+    ]
+    second = [
+        (_T0 + 10 * m, 6, 1, "purchase"),
+        (_T0 + 11 * m, 7, 2, "view"),
+        (_T0 + 12 * m, 8, 3, "click"),
+        (_T0 + 13 * m, 9, 2, "click"),
+        (_T0 + 14 * m, 10, 4, "purchase"),
+    ]
+    resumed_src, whole_src = str(tmp_path / "resumed"), str(tmp_path / "whole")
+    os.makedirs(resumed_src), os.makedirs(whole_src)
+    _write_funnel_events(os.path.join(whole_src, "all.parquet"), first + second)
+
+    def drain(src_dir: str, ck: str, partitions: str) -> tuple[dict, set]:
+        steps: dict[int, int] = {}
+
+        def keep(batch_df, batch_id: int) -> None:
+            # update mode re-emits a touched user; the machine only advances
+            for r in batch_df.collect():
+                steps[r.user_id] = max(steps.get(r.user_id, 0), r.step_reached)
+
+        staged = (
+            spark.readStream.schema(
+                "ts timestamp, event_id bigint, user_id bigint, event_type string"
+            )
+            .parquet(src_dir)
+            .withWatermark("ts", "1 hour")
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                _funnel_state,
+                outputStructType="user_id bigint, step_reached int",
+                stateStructType="t1 timestamp, t2 timestamp, t3 timestamp",
+                outputMode="update",
+                timeoutConf="NoTimeout",
+            )
+        )
+        key = "spark.sql.shuffle.partitions"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, partitions)
+        try:
+            q = (
+                staged.writeStream.foreachBatch(keep)
+                .outputMode("update")
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            spark.conf.set(key, saved)
+        q.awaitTermination()
+        parts = {
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        }
+        return steps, parts
+
+    ck = str(tmp_path / "ck")
+    _write_funnel_events(os.path.join(resumed_src, "f0.parquet"), first)
+    steps, parts = drain(resumed_src, ck, "8")
+    assert parts == {8}, parts
+    p = os.path.join(resumed_src, "f1.parquet")
+    _write_funnel_events(p, second)
+    later = time.time() + 5  # the file source lists oldest mtime first
+    os.utime(p, (later, later))
+    resumed, parts = drain(resumed_src, ck, "4")
+    assert parts == {8}, parts
+    for user, step in resumed.items():
+        steps[user] = max(steps.get(user, 0), step)
+
+    whole, _ = drain(whole_src, str(tmp_path / "ck_whole"), "4")
+    assert steps == whole == {1: 3, 2: 2, 3: 2, 4: 1}

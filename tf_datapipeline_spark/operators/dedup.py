@@ -721,7 +721,7 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Components at Scale via Local Contractions"; cf. large-star/small-star,
 # Kiveris et al. SoCC 2014) — see `connected_components`. On the local
 # corpus the pair graph is one partition, so the contraction is exact
-# and one confirming round follows it. Oracle: DuckDB recursive CTE
+# and its stars are the labels; no round runs. Oracle: DuckDB recursive CTE
 # computing reachability, then MIN over reached nodes — same fixpoint,
 # declaratively.
 # --------------------------------------------------------------------------
@@ -794,15 +794,18 @@ def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
        edge partition and emits star edges node -> partition-local
        minimum; one localCheckpoint. Memory is bounded by one edge
        partition, and the stars connect exactly the input's components.
-    2. Seed: each node's label is the minimum over its stars.
-    3. Rounds over the symmetrized star edges, each combining
+    2. Exact contraction: when the checkpoint has ONE partition, one
+       union-find saw every edge, so each node's star already points at
+       its component's minimum. The stars are the labels; no further
+       job runs.
+    3. Otherwise seed each node's label with the minimum over its stars,
+       then run rounds over the symmetrized star edges, each combining
        neighbor-min propagation — label(v) <- min over v's neighbors'
        labels — and pointer jumping — label(v) <- label(label(v)):
        labels are always real node ids of the same component, so the
        jump HALVES the remaining propagation distance. Rounds are
        therefore O(log diameter) of the contracted graph: `max_rounds`=30
-       covers a diameter of ~2^30. When the contraction was exact (one
-       edge partition), round 1 changes nothing and is the last.
+       covers a diameter of ~2^30.
 
     Each round is ONE action: the new labels' localCheckpoint, which
     also observes (`DataFrame.observe`) how many labels changed — the
@@ -813,6 +816,9 @@ def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
         .mapInPandas(_local_stars, "doc_id long, label long")
         .localCheckpoint()
     )
+    # the checkpoint's partition count is known without running a job
+    if stars.rdd.getNumPartitions() == 1:
+        return stars
     links = stars.filter(F.col("doc_id") != F.col("label"))
     # neighbor-min is one-directional, so correctness REQUIRES the
     # symmetric closure of the star edges
@@ -883,7 +889,8 @@ def materialize_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     goes straight into `connected_components`: its contraction
     checkpoint is the one action that evaluates the pairs, and its
     union-find absorbs duplicate pairs. The returned frame is backed by
-    the final round's checkpoint."""
+    that checkpoint when the pairs come in one partition (the local
+    corpus), else by the final round's checkpoint."""
     return connected_components(lsh_pairs(spark, sf_dir))
 
 

@@ -18,10 +18,11 @@ whole composition declaratively (recursive CTE for components).
 
 Scale shape: inherits each stage's design — broadcast benchmark grams,
 banded LSH (never all-pairs), components by per-partition union-find
-contraction then O(log diameter) rounds of one observed checkpoint
-each, and a single md5-partitioned window for exact dedup. The only new
-shuffles the composite adds are the two LEFT JOINs of per-doc flags
-back to the documents scan, both on doc_id.
+contraction (exact, and the whole job, when the pairs fit one
+partition as on the local corpus) then O(log diameter) rounds of one
+observed checkpoint each, and a single md5-partitioned window for
+exact dedup. The only new shuffles the composite adds are the two LEFT
+JOINs of per-doc flags back to the documents scan, both on doc_id.
 """
 
 from __future__ import annotations

@@ -24,6 +24,8 @@ def get_spark(app_name: str = "tf_datapipeline_spark") -> SparkSession:
         only robust answer to skewed keys at 100 TB.
       - shuffle.partitions is max(local cores, 8) here; on a real cluster
         this is sized to ~2-3x total executor cores (AQE coalesces the rest).
+        Streams run without AQE, so `run_bounded` starts each bounded
+        stream with the count capped at the task slots.
       - session timezone pinned UTC so results are comparable across
         engines (the DuckDB oracle is UTC-naive).
       - Arrow enabled: every pandas-UDF operator (image decode/augment,

@@ -79,17 +79,33 @@ def _ntz(name: str, alias: str):
 def run_bounded(sdf: DataFrame, output_mode: str) -> DataFrame:
     """Drain all available input through the streaming plan into a memory
     sink and return the result as a batch DataFrame (B7: bounded-stream
-    termination)."""
+    termination).
+
+    The stream starts with `spark.sql.shuffle.partitions` capped at the
+    session's task slots (`defaultParallelism`): streaming runs without
+    AQE, so nothing coalesces the state store's partitions, and each one
+    is a task; more partitions than slots only adds waves. `start()`
+    clones the session, so the stream keeps the count it started with,
+    and the caller's value is restored even when `start()` raises. This
+    stream has no checkpoint of its own to resume from; a stream that
+    has one keeps the count its first run recorded there."""
     name = f"stream_sink_{next(_sink_counter)}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     spark = sdf.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    slots = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, str(min(int(saved), slots)))
+    try:
+        q = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, saved)
+    q.awaitTermination()
     return spark.table(name)
 
 

@@ -7,7 +7,10 @@ Writes plans/<tag>/<query>_<suffix>.txt for each query (suffix is
 "before" / "after" per the optimization-round deliverable). Uses
 $SPARK_GRAFT_SF_DIR (default sf0.1) so the plans match the bench scale.
 Each plan is written in `canonical_plan` form, so the captures of two
-checkouts diff cleanly (`diff -r plans/<a> plans/<b>`).
+checkouts diff cleanly (`diff -r plans/<a> plans/<b>`). A query that
+runs streams (a bounded stream returns its sink's rows, whose plan is a
+`LocalTableScan`) also gets each stream's last micro-batch plan,
+appended in `canonical_stream_plan` form.
 """
 
 from __future__ import annotations
@@ -28,6 +31,14 @@ _IDS = [
     (re.compile(r"(lambda [A-Za-z]\w*?)_\d+#"), r"\1_N#"),  # lambda variables
     # the distinct-aggregate group id literals follow the groups' order
     (re.compile(r"\(gid#N = \d+\)"), "(gid#N = ?)"),
+]
+# a stream's physical plan names its run, its checkpoint, its batch time
+# and the sink's writer object
+_STREAM_IDS = [
+    (re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "<uuid>"),
+    (re.compile(r"checkpoint = [^,\]]+"), "checkpoint = <checkpoint>"),
+    (re.compile(r"((?:No|ProcessingTime|EventTime)Timeout), \d+"), r"\1, <batch_ts>"),
+    (re.compile(r"(?<=[A-Za-z])@[0-9a-f]+\b"), "@N"),
 ]
 _LIST_LINE = re.compile(r"^(Input|Output|Keys|Results) \[(\d+)\]: \[(.*)\]$")
 _NODE = re.compile(r"^\(\d+\) (\w+)")
@@ -107,13 +118,36 @@ def canonical_plan(plan: str) -> str:
     return "\n".join(out) + "\n"
 
 
+def canonical_stream_plan(plan: str) -> str:
+    """A streaming query's `explainInternal` text in `canonical_plan`
+    form, with its run and watermark ids, checkpoint path, batch
+    timestamp and writer object masked."""
+    for pat, rep in _STREAM_IDS:
+        plan = pat.sub(rep, plan)
+    return canonical_plan(plan)
+
+
 def main() -> None:
     tag = sys.argv[1]
     suffix = sys.argv[2]
     names_arg = sys.argv[3] if len(sys.argv) > 3 else "ALL"
 
+    from pyspark.sql.streaming import DataStreamWriter
+
     from tf_datapipeline_spark import registry
     from tf_datapipeline_spark.session import get_spark
+
+    # keep the handle of every stream a query starts, so its plan can be
+    # explained after the query has drained it
+    started = []
+    start = DataStreamWriter.start
+
+    def start_and_keep(self, *args, **kwargs):
+        handle = start(self, *args, **kwargs)
+        started.append(handle)
+        return handle
+
+    DataStreamWriter.start = start_and_keep
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("capture-plans")
@@ -124,6 +158,7 @@ def main() -> None:
     out_dir = os.path.join(REPO_DIR, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
+        started.clear()
         try:
             df = qs[name](spark, sf_dir)
             plan = canonical_plan(
@@ -131,6 +166,9 @@ def main() -> None:
                     df._jdf.queryExecution(), "formatted"
                 )
             )
+            for i, handle in enumerate(started):
+                stream_plan = canonical_stream_plan(handle._jsq.explainInternal(False))
+                plan += f"\n== Stream {i} ==\n{stream_plan}"
         except Exception as exc:  # noqa: BLE001 - record the failure in-file
             plan = f"PLAN CAPTURE FAILED: {type(exc).__name__}: {exc}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
