@@ -22,3 +22,14 @@ def spark():
 
     s = get_spark("tf_datapipeline_spark-tests")
     yield s
+
+
+def jobs_in_group(spark, group: str, fn):
+    """`fn()`'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1,44 +1,38 @@
-"""The two-pass offset-numbering device (pipeline.offset_row_number /
-offset_running_sum) and its r10 bucket coarsening.
+"""The partition-offset scan (pipeline.offset_scan) behind every global
+row number, group rank and running sum.
 
-The r9 advice: q4zf passed a raw metric (cents) as the bucket, so the
-pass-1 per-bucket collect was ~user-cardinality — corpus-proportional
-driver memory behind a '100 TB' comment. The fix guards on the exact
-value SPAN (hi - lo + 1 ≤ ceiling keeps raw buckets and the plan
-byte-identical) and otherwise re-buckets to ≤ _MAX_OFFSET_BUCKETS
-EQUI-DEPTH cells from approxQuantile cut points (monotone, so global
-order is preserved; equi-width was the first draft and collapses when
-one outlier stretches the span). These tests pin:
+A raw metric bucket (q4zf's cents) has ~user-cardinality distinct
+values, so its per-bucket collect would grow with the corpus. When the
+first, limited collect overflows _MAX_OFFSET_BUCKETS rows, offset_scan
+re-buckets to EQUI-DEPTH cells from approxQuantile cut points
+(monotone, so global order is preserved; equi-width cuts collapse when
+one outlier stretches the span). The cut count follows the row count,
+k = min(ceiling, ceil(n / _TARGET_BUCKET_ROWS)); the tests that need the
+sketch path monkeypatch the target down so a 20k-row frame gets k > 1.
+These tests pin:
 
-  1. the coarse bucket count is bounded for a corpus-sized distinct set,
-  2. numbering is still exactly the global sort order,
-  3. an already-bounded bucket is left untouched (pre-r10 plans intact),
-  4. offset_running_sum agrees with the unpartitioned running sum.
-
-`_coarsen_bucket` is the one coarsening step offset_row_number,
-offset_running_sum and grouped_offset_row_number all call, so 1 and 3
-hold for each of them.
-
-r11: the sketch's bucket count ADAPTS to the measured row count
-(k = min(ceiling, ceil(n / _TARGET_BUCKET_ROWS))) — a fixed-4096
-sketch paid approxQuantile's eps=1/4096, 4095-probe cost ceiling on
-every input, which dominated q4zf/q4zm at bench scale. The balance
-test monkeypatches the target down so the sketch path (k > 1) is
-exercised on a 20k-row frame; a new test pins the k ≤ 1 degenerate
-case (small input → ONE constant bucket, no sketch, no Python node).
+  1. the coarse bucket count is bounded and balanced, and monotone,
+  2. a small overflowing input is ONE constant bucket: no sketch, no
+     Python node,
+  3. an already-bounded bucket is left raw (no cuts),
+  4. numbering and the weighted running sum equal the global sort /
+     window, per group too, on the fitting and the overflow paths,
+  5. the job counts of the fitting and the constant-bucket paths.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql import Window
 
 import tf_datapipeline_spark.operators.pipeline as _pipeline
+from tests.conftest import SF_SMOKE, jobs_in_group
 from tf_datapipeline_spark.operators.pipeline import (
     _MAX_OFFSET_BUCKETS,
-    _coarsen_bucket,
-    offset_row_number,
-    offset_running_sum,
+    offset_scan,
 )
+from tf_datapipeline_spark.plans.inspect import formatted_plan
 
 
 def _wide_df(spark, n=20_000):
@@ -54,25 +48,41 @@ def _wide_df(spark, n=20_000):
     )
 
 
+def _spy_cuts(monkeypatch):
+    """Record every frame offset_scan re-buckets with equi-depth cuts."""
+    applied = []
+    real = _pipeline._apply_cuts
+
+    def spy(df, cuts):
+        out = real(df, cuts)
+        applied.append(out)
+        return out
+
+    monkeypatch.setattr(_pipeline, "_apply_cuts", spy)
+    return applied
+
+
 def test_coarsen_bounds_bucket_count(spark, monkeypatch):
     # force the sketch path (k > 1) on a 20k-row frame: with the real
     # 64Ki-row target a 20k input would collapse to one bucket
     monkeypatch.setattr(_pipeline, "_TARGET_BUCKET_ROWS", 64)
-    df = _wide_df(spark).withColumn("_b", F.col("v"))
-    out, _ = _coarsen_bucket(df, df)
+    applied = _spy_cuts(monkeypatch)
+    offset_scan(_wide_df(spark), F.col("v"), [F.asc("v"), F.asc("k")])
+    # the full frame the final plan numbers (the other is the slim copy)
+    out = next(f for f in applied if "v" in f.columns)
     counts = {
         r["_b"]: r["n"]
         for r in out.groupBy("_b").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert len(counts) <= _MAX_OFFSET_BUCKETS + 1
-    # BALANCE under range outliers (the r10 review finding): _wide_df's
-    # 2^55 whale values stretch the span ~2^35x beyond the dense
-    # clusters; equi-width shifting funneled everything into one bucket.
-    # Equi-depth must keep every bucket within a small multiple of ideal
-    # (values are unique here, so no tie excuse). k = ceil(20000/64)
-    # capped at the ceiling, so ideal is total / k.
+    # BALANCE under range outliers: _wide_df's 2^55 whale values stretch
+    # the span ~2^35x beyond the dense clusters; equi-width shifting
+    # funneled everything into one bucket. Equi-depth must keep every
+    # bucket within a small multiple of ideal (values are unique here, so
+    # no tie excuse). k = ceil(20000/64) capped at the ceiling, so ideal
+    # is total / k.
     total = sum(counts.values())
-    k = _pipeline._adaptive_k(total, _MAX_OFFSET_BUCKETS)
+    k = _pipeline._adaptive_k(total)
     assert k > 1  # the sketch path is actually exercised
     ideal = total / k
     assert max(counts.values()) <= max(16, 8 * ideal), (
@@ -89,31 +99,37 @@ def test_coarsen_bounds_bucket_count(spark, monkeypatch):
     )
 
 
-def test_coarsen_small_input_single_bucket(spark):
-    # r11 adaptive k: a wide-SPAN but small-COUNT input needs no sketch
-    # at all — every row lands in constant bucket 0 (one ≤64Ki-row sort
-    # task), and the plan carries no Python eval node.
-    df = _wide_df(spark).withColumn("_b", F.col("v"))
-    out, _ = _coarsen_bucket(df, df)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
+def test_coarsen_small_input_single_bucket(spark, monkeypatch):
+    # a wide-SPAN but small-COUNT input needs no sketch at all — every
+    # row lands in one constant bucket (one ≤64Ki-row sort task), and
+    # the plan carries no Python eval node.
+    applied = _spy_cuts(monkeypatch)
+    numbered, total = offset_scan(
+        _wide_df(spark), F.col("v"), [F.asc("v"), F.asc("k")]
     )
+    assert applied == []
+    plan = formatted_plan(numbered)
     assert "EvalPython" not in plan and "MapInPandas" not in plan
-    vals = {r["_b"] for r in out.select("_b").distinct().collect()}
-    assert vals == {0}
+    assert "BroadcastHashJoin" not in plan  # one bucket: every offset is 0
+    rows = numbered.select("rn", "_n").collect()
+    assert total == 20_000
+    assert sorted(r["rn"] for r in rows) == list(range(1, total + 1))
+    assert {r["_n"] for r in rows} == {total}
 
 
-def test_coarsen_leaves_bounded_buckets_alone(spark):
-    df = spark.range(1000).withColumn("_b", F.col("id") % 17)
-    slim, b = _coarsen_bucket(df, df)
-    assert slim is df and b is df  # byte-identical plan for every pre-r10 caller
+def test_coarsen_leaves_bounded_buckets_alone(spark, monkeypatch):
+    applied = _spy_cuts(monkeypatch)
+    df = spark.range(1000).select(F.col("id").alias("k"))
+    numbered, total = offset_scan(df, F.floor(F.col("k") / 64), ["k"])
+    assert applied == []  # 16 raw buckets fit: no sketch, no re-bucket
+    assert "EvalPython" not in formatted_plan(numbered)
+    assert total == 1000
+    assert all(r["rn"] == r["k"] + 1 for r in numbered.collect())
 
 
-def test_offset_row_number_matches_global_sort(spark):
+def test_offset_scan_numbers_in_global_order(spark):
     df = _wide_df(spark)
-    numbered, total = offset_row_number(
-        df, F.col("v"), [F.asc("v"), F.asc("k")]
-    )
+    numbered, total = offset_scan(df, F.col("v"), [F.asc("v"), F.asc("k")])
     rows = numbered.select("k", "v", "rn").collect()
     assert total == len(rows) == 20_000
     by_rn = sorted(rows, key=lambda r: r["rn"])
@@ -123,13 +139,71 @@ def test_offset_row_number_matches_global_sort(spark):
     )
 
 
-def test_offset_running_sum_matches_global(spark):
+def test_offset_scan_running_sum_matches_global(spark):
     df = _wide_df(spark, n=5_000).withColumn("val", F.col("k") % 97)
-    out = offset_running_sum(
-        df, F.col("v"), [F.asc("v"), F.asc("k")], F.col("val")
-    ).collect()
-    ordered = sorted(out, key=lambda r: (r["v"], r["k"]))
+    out, _ = offset_scan(
+        df, F.col("v"), [F.asc("v"), F.asc("k")],
+        weight=F.col("val"), name="running_sum",
+    )
+    ordered = sorted(out.collect(), key=lambda r: (r["v"], r["k"]))
     acc = 0
     for r in ordered:
         assert r["running_sum"] == acc, (r["k"], r["running_sum"], acc)
         acc += r["val"]
+
+
+@pytest.mark.parametrize(
+    "path,target,width",
+    [("fits", None, 2**50), ("one-bucket", None, 1), ("cuts", 64, 1)],
+)
+def test_grouped_weighted_scan_matches_window(spark, monkeypatch, path, target, width):
+    """Per-group exclusive running sum and group count against the
+    single-partition-per-group Window they replace: on the fitting path
+    (few raw buckets), on the overflow path that collapses to one
+    constant bucket, and on the overflow path that sketches cuts."""
+    if target is not None:
+        monkeypatch.setattr(_pipeline, "_TARGET_BUCKET_ROWS", target)
+    applied = _spy_cuts(monkeypatch)
+    df = _wide_df(spark, n=9_000).select(
+        "k", "v", (F.col("k") % 5).alias("g"), (F.col("k") % 89).alias("w")
+    )
+    got, total = offset_scan(
+        df, F.floor(F.col("v") / width), [F.asc("v"), F.asc("k")],
+        groups=["g"], weight=F.col("w"), name="s",
+    )
+    assert (len(applied) > 0) == (path == "cuts"), path
+    before = (
+        Window.partitionBy("g").orderBy("v", "k")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    want = df.select(
+        "k",
+        F.coalesce(F.sum("w").over(before), F.lit(0)).alias("s"),
+        F.count(F.lit(1)).over(Window.partitionBy("g")).alias("_n"),
+    )
+    assert total == 9_000
+    assert sorted(got.select("k", "s", "_n").collect()) == sorted(want.collect())
+
+
+def test_small_scans_run_few_jobs(spark, monkeypatch):
+    """q35 at the smoke scale builds in ≤ 2 jobs (the one limited bucket
+    collect), and so does an overflowing input of ≤ _TARGET_BUCKET_ROWS
+    rows: its observed row count picks one constant bucket, with no
+    checkpoint, sketch or recount."""
+    from tf_datapipeline_spark import registry
+
+    q35 = registry.queries()["q35_batch_ragged_tail"]
+    _, n_jobs = jobs_in_group(spark, "offset-q35", lambda: q35(spark, SF_SMOKE))
+    assert n_jobs <= 2, n_jobs
+
+    def no_sketch(df, cuts):
+        raise AssertionError("sketched cuts for a one-bucket input")
+
+    monkeypatch.setattr(_pipeline, "_apply_cuts", no_sketch)
+    df = _wide_df(spark, n=_MAX_OFFSET_BUCKETS + 100)
+    (numbered, total), n_jobs = jobs_in_group(
+        spark, "offset-overflow",
+        lambda: offset_scan(df, F.col("v"), [F.asc("v"), F.asc("k")]),
+    )
+    assert total == _MAX_OFFSET_BUCKETS + 100
+    assert n_jobs <= 2, n_jobs

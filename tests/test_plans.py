@@ -129,9 +129,9 @@ def test_partition_pruning(spark):
 
 
 def test_exact_numbering_has_no_single_partition_exchange(spark):
-    """q32/q35/q36 use two-pass partition-offset numbering: their plans
-    must contain NO `Exchange SinglePartition` (the 1-task global-window
-    bottleneck the old formulation paid)."""
+    """Every caller of pipeline.offset_scan numbers or sums in partition
+    offsets: its plan must contain NO `Exchange SinglePartition` (the
+    1-task global-window bottleneck the old formulation paid)."""
     from tf_datapipeline_spark.plans.inspect import formatted_plan
 
     for name in (
@@ -139,16 +139,18 @@ def test_exact_numbering_has_no_single_partition_exchange(spark):
         "q35_batch_ragged_tail",
         "q36_shard_assignment",
         "q5d_sequence_packing",
-        # r8: the clustering-depth audit numbers 60M rows through the
-        # same two-pass offset machinery — the window must stay
-        # partitioned by the orderkey bucket
+        "qt7_tokenize_pack",
+        # the clustering-depth audit numbers 60M rows at sf10 — the
+        # window must stay partitioned by the orderkey bucket
         "q9j_clustering_depth",
-        # r10 (r9 verdict task 2): the last data-sized windows keyed on
-        # the 5-value c_mktsegment, rewritten onto
-        # grouped_offset_row_number — every window must stay partitioned
-        # by (segment, balance-bucket) / (segment, balance)
+        # windows the oracle keys on the 5-value c_mktsegment (q26/q28)
+        # or the 2-value funnel step (q4zm) must stay partitioned by
+        # (group, bucket) / (segment, balance)
         "q26_ntile_frames",
         "q28_distribution_ranks",
+        "q4zm_funnel_latency",
+        # three global ranks over the per-user triple
+        "q4zf_rfm_segments",
     ):
         plan = formatted_plan(_q(name, spark))
         assert "SinglePartition" not in plan, (name, plan)
@@ -335,22 +337,16 @@ def test_collect_sites_are_bounded_metadata_only():
     allowed = {
         # (file, enclosing function): why it is bounded
         ("operators/multimodal.py", "q8h_tfrecord_roundtrip"),  # shard manifest rows
-        ("operators/pipeline.py", "offset_running_sum"),  # n_buckets agg rows
-        ("operators/pipeline.py", "offset_row_number"),  # n_buckets agg rows
-        # 1-row (min, max) span guard + equi-depth approxQuantile cuts;
-        # bounds the two collects above at _MAX_OFFSET_BUCKETS rows (r9
-        # advice: a raw metric bucket is otherwise corpus-proportional)
-        ("operators/pipeline.py", "_coarsen_bucket"),
-        # fused multi-metric variant of the same probe: one 1-row span
-        # agg + one multi-column approxQuantile for ALL ranked metrics
-        ("operators/pipeline.py", "plan_coarsen_cuts"),
+        # the partition-offset scan: ≤ _MAX_OFFSET_BUCKETS + 1 per-(group,
+        # bucket) rows (a limited collect), then on overflow ≤ |groups|·k
+        # rows after equi-depth coarsening (k ≤ _MAX_OFFSET_BUCKETS; the
+        # row count that picks k is an observed metric, not a collect);
+        # groups is a low-cardinality metadata key by contract (q26's
+        # 5-value c_mktsegment)
+        ("operators/pipeline.py", "offset_scan"),
         # <= _BPE_K merge-table rows (top-K over a partial aggregate);
         # inlined as literals so the vocab fold stays codegen-cheap
         ("operators/text.py", "_bpe_doc_counts"),
-        # <= |groups| * _MAX_OFFSET_BUCKETS agg rows; group_cols is a
-        # low-cardinality metadata key by contract (q26/q28's 5-value
-        # c_mktsegment)
-        ("operators/pipeline.py", "grouped_offset_row_number"),
         ("operators/similarity.py", "q73_knn_ann_ivf"),  # k=16 centroid rows
         ("operators/similarity.py", "q77_knn_ivfpq"),  # k=16 seed-centroid rows
         ("operators/similarity.py", "nearest_seed"),  # <=16 seed rows (q7k, q7b)

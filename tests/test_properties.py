@@ -7,6 +7,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tests.conftest import jobs_in_group
 from tf_datapipeline_spark.functions.texthash import MERSENNE, minhash_params
 from tf_datapipeline_spark.operators.pipeline import (
     _SHUFFLE_MOD,
@@ -64,13 +65,13 @@ def test_rng_for_row_is_stable_and_row_dependent(seed, row):
     assert (a != c) or True  # collisions allowed but same-(seed,row) must agree
 
 
-def test_offset_running_sum_matches_global_window(spark):
-    """The two-pass partition-offset running sum must equal the
-    single-partition global window it replaces, for any bucket width."""
+def test_offset_scan_running_sum_matches_global_window(spark):
+    """The partition-offset running sum must equal the single-partition
+    global window it replaces, for any bucket width."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from tf_datapipeline_spark.operators.pipeline import offset_running_sum
+    from tf_datapipeline_spark.operators.pipeline import offset_scan
 
     rows = [(i, (i * 37) % 11) for i in range(257)]
     df = spark.createDataFrame(rows, "k bigint, v bigint")
@@ -85,12 +86,8 @@ def test_offset_running_sum_matches_global_window(spark):
         ).collect()
     }
     for width in (1, 16, 300):
-        got = offset_running_sum(
-            df,
-            bucket=F.floor(F.col("k") / width),
-            order_cols=["k"],
-            value=F.col("v"),
-            sum_name="s",
+        got, _ = offset_scan(
+            df, F.floor(F.col("k") / width), ["k"], weight=F.col("v"), name="s"
         )
         assert {r.k: r.s for r in got.collect()} == expected, width
 
@@ -195,17 +192,6 @@ def test_connected_components_independent_of_partitions_and_batches(spark):
         spark.conf.set(key, saved)
 
 
-def _jobs_in_group(spark, group: str, fn):
-    """`fn()`'s result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_connected_components_one_partition_is_one_job(spark):
     """Edges in ONE partition: the local contraction sees every edge, so
     its checkpoint already holds the final labels. Connected components
@@ -222,7 +208,7 @@ def test_connected_components_one_partition_is_one_job(spark):
     edges = spark.createDataFrame(raw, "doc_a long, doc_b long")
     # the repartition's shuffle is the input's cost, not the operator's
     one = edges.repartition(1).localCheckpoint()
-    labels, n_jobs = _jobs_in_group(
+    labels, n_jobs = jobs_in_group(
         spark, "cc-one-partition", lambda: connected_components(one)
     )
     assert n_jobs == 1, n_jobs
@@ -238,7 +224,7 @@ def test_cc_labels_build_runs_few_jobs(spark):
     from tests.conftest import SF_SMOKE
     from tf_datapipeline_spark.operators.dedup import materialize_cc_labels
 
-    labels, n_jobs = _jobs_in_group(
+    labels, n_jobs = jobs_in_group(
         spark, "cc-labels-job-count", lambda: materialize_cc_labels(spark, SF_SMOKE)
     )
     assert labels.count() > 0

@@ -1069,3 +1069,21 @@ def test_stateful_stream_restart_keeps_checkpointed_partitions(spark, tmp_path):
 
     whole, _ = drain(whole_src, str(tmp_path / "ck_whole"), "4")
     assert steps == whole == {1: 3, 2: 2, 3: 2, 4: 1}
+
+
+def test_bounded_streams_leave_no_sink_views(spark):
+    """Each `run_bounded` call drops its memory sink's temp view once the
+    result frame is bound: after two q4zk runs no `stream_sink_*` table is
+    listed, and both results still read the same rows."""
+    from tests.conftest import SF_SMOKE
+    from tf_datapipeline_spark import registry
+
+    fn = registry.queries()["q4zk_stream_funnel"]
+    first, second = fn(spark, SF_SMOKE), fn(spark, SF_SMOKE)
+    sinks = [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("stream_sink_")
+    ]
+    assert sinks == [], sinks
+    rows = sorted(first.collect())
+    assert rows and rows == sorted(second.collect())

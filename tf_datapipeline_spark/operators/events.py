@@ -675,9 +675,9 @@ def q4c_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scan-sized cross join). The LOCF window partitions by event_type over
 # the timeline; at 100 TB you'd chunk it (partition by (event_type, day),
 # carry each day's closing value forward via a second tiny broadcast
-# join — same two-pass offset pattern as offset_running_sum). Averages
-# are exact-decimal sums / count: one IEEE division, identical in both
-# engines; carried values are copies of those.
+# join — the same partition-offset pattern as pipeline.offset_scan).
+# Averages are exact-decimal sums / count: one IEEE division, identical
+# in both engines; carried values are copies of those.
 # --------------------------------------------------------------------------
 @query(
     "q4y_gap_fill",
@@ -1498,14 +1498,14 @@ def q4ze_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Spark shape (100 TB): the global ROW_NUMBER the oracle declares would
 # be an Exchange SinglePartition; the engine instead ranks each metric
-# with the two-pass offset numbering (pipeline.offset_row_number —
-# per-bucket counts to the driver, broadcast prefix offsets, windows
-# partitioned BY BUCKET), three user-keyed joins reassemble the triple.
-# The raw metric is passed as the bucket; offset_row_number's coarsening
-# (r10, the r9 advice fix) re-buckets it to ≤ _MAX_OFFSET_BUCKETS driver
-# rows, so the pass-1 collect is corpus-INDEPENDENT even for `cents`,
-# whose distinct count is ~user-cardinality. Everything after the
-# per-user aggregate is user-cardinality, not event-cardinality.
+# with pipeline.offset_scan (per-bucket counts to the driver, broadcast
+# prefix offsets, windows partitioned BY BUCKET), and three user-keyed
+# joins reassemble the triple. The raw metric is passed as the bucket;
+# offset_scan re-buckets it to ≤ _MAX_OFFSET_BUCKETS equi-depth cells
+# when it has more distinct values, so the driver collect is
+# corpus-INDEPENDENT even for `cents`, whose distinct count is
+# ~user-cardinality. Everything after the per-user aggregate is
+# user-cardinality, not event-cardinality.
 # --------------------------------------------------------------------------
 def _q4zf_oracle() -> str:
     def quint(rank_expr: str) -> str:
@@ -1547,10 +1547,7 @@ def _q4zf_oracle() -> str:
 
 @query("q4zf_rfm_segments", oracle=_q4zf_oracle())
 def q4zf_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.operators.pipeline import (
-        offset_row_number,
-        plan_coarsen_cuts,
-    )
+    from tf_datapipeline_spark.operators.pipeline import offset_scan
 
     ev = load_table(spark, sf_dir, "events")
     eday = F.floor(_epoch_s("ts") / F.lit(86400.0)).cast("bigint")
@@ -1565,9 +1562,9 @@ def q4zf_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("last_day").alias("corpus_day"), F.count(F.lit(1)).alias("n")
     )
     # materialize the per-user triple ONCE (localCheckpoint, the q67
-    # idiom): every pass below — the fused coarsening probe, the three
-    # rank passes' count collects, and the four arms of the reassembly
-    # join — would otherwise re-run the event scan + user aggregate.
+    # idiom): every pass below — the three rank passes' bucket collects
+    # and the four arms of the reassembly join — would otherwise re-run
+    # the event scan + user aggregate.
     # m is user-cardinality (the small table this analytic exists to
     # produce), so the materialization is bounded at any corpus scale.
     m = (
@@ -1580,22 +1577,15 @@ def q4zf_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    # ONE fused span-guard + quantile-sketch job for all three ranked
-    # metrics (r10 verdict task 6: per-metric probes re-aggregated the
-    # event scan up to six times; values are unchanged by construction)
-    cuts = plan_coarsen_cuts(m, ["rec", "freq", "cents"])
     ranked = {}
     total = None
     for metric, rn_name in (("rec", "rn_r"), ("freq", "rn_f"), ("cents", "rn_m")):
-        num, tot = offset_row_number(
+        ranked[metric], total = offset_scan(
             m.select("user_id", metric),
             F.col(metric),
             [F.asc(metric), F.asc("user_id")],
-            rn_name,
-            cuts=cuts[metric],
+            name=rn_name,
         )
-        ranked[metric] = num
-        total = tot
 
     def quint(rn: F.Column) -> F.Column:
         x = (rn - 1) * 5
@@ -1956,14 +1946,13 @@ def q4zi_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Spark shape (100 TB): reuses _funnel_first_touch's single scan +
 # single user-keyed exchange, explodes each user into ≤2 transition
-# rows in the same pass (no per-step re-derived lineage — the r10
-# verdict's q4zi finding, applied from the start), then aggregates per
-# transition (2 metadata rows). The median deliberately does NOT window
-# on the 2-value transition key (a 2-partition global sort — the q26
-# single-task shape): grouped_offset_row_number numbers each
-# transition's latencies via equi-depth coarsened buckets, so every
-# window is partitioned (transition, bucket) and the driver table stays
-# ≤ groups x 4096 rows at any corpus size.
+# rows in the same pass (no per-step re-derived lineage), then
+# aggregates per transition (2 metadata rows). The median deliberately
+# does NOT window on the 2-value transition key (a 2-partition global
+# sort — the q26 single-task shape): pipeline.offset_scan numbers each
+# transition's latencies (groups = step) via equi-depth coarsened
+# buckets, so every window is partitioned (transition, bucket) and the
+# driver table stays ≤ groups x 4096 rows at any corpus size.
 # --------------------------------------------------------------------------
 # Shared by q4zm and the streaming twin q4zn (on bounded input the
 # streamed state machine must reproduce the batch latency table
@@ -2014,9 +2003,7 @@ def funnel_latency_report(per_user: DataFrame) -> DataFrame:
     """Step-latency distribution over a per-user (t1, t2, t3)
     first-touch table — SHARED by q4zm (batch) and q4zn (streaming
     twin), so the explode/stats/median semantics cannot drift."""
-    from tf_datapipeline_spark.operators.pipeline import (
-        grouped_offset_row_number,
-    )
+    from tf_datapipeline_spark.operators.pipeline import offset_scan
 
     d12 = _epoch_us("t2") - _epoch_us("t1")
     d23 = _epoch_us("t3") - _epoch_us("t2")
@@ -2044,9 +2031,9 @@ def funnel_latency_report(per_user: DataFrame) -> DataFrame:
         )
         .select("user_id", "s.step", "s.transition", "s.d")
         .filter(F.col("d").isNotNull())
-        # r11: materialize ONCE (the q4zf idiom) — the stats aggregate,
-        # the median machinery's probe/sketch/counts and the final
-        # numbered plan would otherwise each re-derive the upstream
+        # materialize ONCE (the q4zf idiom) — the stats aggregate, the
+        # median's bucket collects and the final numbered plan would
+        # otherwise each re-derive the upstream
         # first-touch pass (an events scan + user-keyed window per job).
         # lat is ≤ 2 rows per CONVERTING user (~30 B/row), bounded at
         # any corpus scale.
@@ -2058,13 +2045,8 @@ def funnel_latency_report(per_user: DataFrame) -> DataFrame:
         F.max("d").cast("bigint").alias("max_us"),
         F.sum("d").cast("bigint").alias("sum_us"),
     )
-    numbered = grouped_offset_row_number(
-        lat,
-        ["step"],
-        F.col("d"),
-        [F.col("d"), F.col("user_id")],
-        rn_name="rn",
-        n_name="_n",
+    numbered, _ = offset_scan(
+        lat, F.col("d"), [F.col("d"), F.col("user_id")], groups=["step"]
     )
     med = numbered.filter(
         F.col("rn") == F.floor((F.col("_n") + 1) / 2)

@@ -1110,11 +1110,10 @@ def q9i_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n_files metadata rows (a real deployment reads them from the
 # transaction log — zero scan); the overlap join is n_files² on that
 # metadata (64² here; bounded by manifest size, never rows). The
-# write-order numbering uses the two-pass partition-offset shape
-# (q32/q5d's offset_row_number — every window partitioned by a
-# monotone orderkey bucket, NO Exchange SinglePartition); the oracle
-# replays it as a plain global ROW_NUMBER, which is the same function
-# on a single-node engine.
+# write-order numbering is pipeline.offset_scan (q32/q5d's numbering —
+# every window partitioned by a monotone orderkey bucket, NO
+# Exchange SinglePartition); the oracle replays it as a plain global
+# ROW_NUMBER, which is the same function on a single-node engine.
 # --------------------------------------------------------------------------
 _CLUSTER_FILES = 64
 
@@ -1150,12 +1149,12 @@ def q9j_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from tf_datapipeline_spark.catalog import load_table
-    from tf_datapipeline_spark.operators.pipeline import offset_row_number
+    from tf_datapipeline_spark.operators.pipeline import offset_scan
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate"
     )
-    numbered, total = offset_row_number(
+    numbered, total = offset_scan(
         li,
         (F.col("l_orderkey") / 4096).cast("bigint"),
         [F.asc("l_orderkey"), F.asc("l_linenumber")],

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import load_table
@@ -44,329 +44,141 @@ def sql_shuffle_key(expr: str, seed: int = 0) -> str:
 
 _MAX_OFFSET_BUCKETS = 4096  # driver prefix-table ceiling (corpus-independent)
 
-# Per-bucket row target for the coarsening sketch (r11 optimization):
-# the bucket count only has to (a) keep the driver prefix table bounded
-# (≤ _MAX_OFFSET_BUCKETS rows) and (b) keep each (group, bucket) window
-# task's sort bounded — a 64Ki-row in-task sort is noise at any scale.
-# A FIXED 4096-bucket sketch (the r10 shape) paid the sketch's cost
-# ceiling on every input: approxQuantile at eps=1/4096 with 4095 probes
-# is multi-second even on a 3000-row table (driver-side sketch query per
-# probe), which dominated q4zf/q4zm at bench scale. k now adapts to the
-# measured row count — k = min(ceiling, ceil(n / 64Ki)) — so small
-# inputs sketch a handful of cuts (or none: k ≤ 1 collapses to one
-# bucket, a single ≤64Ki-row sort) while 100 TB inputs still get the
-# full 4096 buckets. Cut placement only shapes the PLAN, never values
-# (monotone re-bucket — see _coarsen_bucket), so results are identical.
+# Per-bucket row target for the equi-depth cuts. The bucket count only has
+# to keep the driver prefix table bounded (≤ _MAX_OFFSET_BUCKETS rows) and
+# each (group, bucket) window task's sort bounded; a 64Ki-row in-task sort
+# is noise at any scale. A fixed 4096-cut sketch (approxQuantile at
+# eps=1/4096, 4095 probes) costs seconds even on a 3000-row table, so the
+# cut count follows the row count, k = min(ceiling, ceil(n / 64Ki)): a
+# small input is one constant bucket, a 100 TB one gets the full 4096.
 _TARGET_BUCKET_ROWS = 65536
 
 
-def _adaptive_k(n: int, max_buckets: int) -> int:
-    return min(max_buckets, -(-n // _TARGET_BUCKET_ROWS))
-
-
-def _sketch_cuts(df: DataFrame, cols: list[str], k: int) -> list["np.ndarray"]:
-    """Equi-depth cut points (k-quantiles) for each column, one sketch
-    job. k ≤ 1 means a single bucket: empty cut array (every row maps to
-    bucket 0 in _apply_cuts)."""
-    if k <= 1:
-        return [np.array([], dtype=np.int64) for _ in cols]
-    probs = [i / k for i in range(1, k)]
-    return [
-        np.array(sorted(int(v) for v in qs), dtype=np.int64)
-        for qs in df.stat.approxQuantile(cols, probs, 1.0 / k)
-    ]
-
-
-def plan_coarsen_cuts(
-    df: DataFrame, cols: list[str], max_buckets: int = _MAX_OFFSET_BUCKETS
-) -> dict[str, "np.ndarray | None"]:
-    """Fused coarsening probe for callers that rank SEVERAL metrics of
-    the same table (r10 verdict task 6: q4zf ran the span guard + the
-    approxQuantile sketch once PER ranked metric — three stats jobs and
-    up to three sketch jobs over the same per-user aggregate). ONE agg
-    computes every metric's span AND the row count; ONE multi-column
-    approxQuantile call sketches exactly the metrics whose span exceeds
-    the ceiling, at the adaptive bucket count (see _TARGET_BUCKET_ROWS).
-    Returns per-column cut arrays (None = span fits, keep raw buckets)
-    to pass as offset_row_number(..., cuts=...). The cut semantics are
-    identical to _coarsen_bucket's own probe, so the fusion changes job
-    count, never values."""
-    aggs = [F.count(F.lit(1)).alias("_n_rows")]
-    for c in cols:
-        aggs.append(F.min(F.col(c).cast("bigint")).alias(f"_lo_{c}"))
-        aggs.append(F.max(F.col(c).cast("bigint")).alias(f"_hi_{c}"))
-    stats = df.agg(*aggs).collect()[0]
-    need = [
-        c
-        for c in cols
-        if stats[f"_lo_{c}"] is not None
-        and stats[f"_hi_{c}"] - stats[f"_lo_{c}"] + 1 > max_buckets
-    ]
-    cuts: dict[str, np.ndarray | None] = {c: None for c in cols}
-    if need:
-        k = _adaptive_k(stats["_n_rows"], max_buckets)
-        for c, arr in zip(need, _sketch_cuts(df, need, k)):
-            cuts[c] = arr
-    return cuts
+def _adaptive_k(n: int) -> int:
+    return min(_MAX_OFFSET_BUCKETS, -(-n // _TARGET_BUCKET_ROWS))
 
 
 def _apply_cuts(df: DataFrame, cuts: "np.ndarray") -> DataFrame:
-    """Monotone re-bucket of `_b` by binary search over the cut points
-    (vectorized Arrow-batched np.searchsorted — the engine's sanctioned
-    Python path; a pure-SQL binary search either duplicates the index
-    expression exponentially or scans all cuts linearly). An EMPTY cut
-    array is the k ≤ 1 degenerate case (input fits one target-sized
-    bucket): constant bucket 0, pure codegen, no Python node at all."""
-    if len(cuts) == 0:
-        return df.withColumn("_b", F.lit(0).cast("bigint"))
+    """Monotone re-bucket of `_b`: the number of cut points ≤ the raw
+    value, by a vectorized Arrow-batched np.searchsorted (a pure-SQL
+    binary search either duplicates the index expression exponentially
+    or scans all cuts linearly)."""
 
     @F.pandas_udf("bigint")
     def _equi_depth(vals: pd.Series) -> pd.Series:
         return pd.Series(
-            np.searchsorted(cuts, vals.to_numpy(), side="right").astype(
-                "int64"
-            )
+            np.searchsorted(cuts, vals.to_numpy(), side="right").astype("int64")
         )
 
     return df.withColumn("_b", _equi_depth("_b"))
 
 
-def _coarsen_bucket(
-    slim: DataFrame, b: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Re-bucket `_b` so the driver prefix table stays ≤
-    _MAX_OFFSET_BUCKETS rows no matter the caller's bucket cardinality
-    (r9 advice: a raw metric bucket — e.g. q4zf's cents — is
-    ~user-cardinality, so the pass-1 collect would grow with the
-    corpus). The probe and the sketch run over `slim` (the caller's slim
-    checkpoint of `_b`); the same cuts re-bucket both `slim` and `b`
-    (the full lineage the final plan numbers). Returns (slim, b).
-
-    Guard: when the value SPAN already fits (hi - lo + 1 ≤ ceiling),
-    distinct ≤ span is an EXACT bound — both frames come back unchanged
-    and the final plan stays byte-identical (the r10 review killed the
-    earlier approx_count_distinct guard, whose HLL error made the
-    documented ceiling only approximate).
-
-    Otherwise: EQUI-DEPTH cut points (approxQuantile, one sketch pass)
-    + a vectorized Arrow-batched np.searchsorted per row (the engine's
-    sanctioned Python path — a pure-SQL binary search either duplicates
-    the index expression exponentially or scans all cuts linearly).
-    Equi-width shifting was the first draft and collapses under range
-    outliers (one whale value stretches the span so every other row
-    lands in coarse bucket 0 — re-creating the single-task sort this
-    device exists to prevent); quantile cuts keep partitions balanced
-    for ANY distribution. The mapping (count of cuts ≤ raw) is monotone
-    in raw, so bucket order still equals global order, and the RESULT is
-    invariant to where the cuts land — only plan balance depends on
-    sketch accuracy. Heavy TIES in the leading order key cannot be split
-    by any monotone bucketing (they must share a window partition), so
-    tie-skew is inherent to exact global numbering, not to this
-    device.
-
-    r11: the sketch's bucket count adapts to the measured row count
-    (see _TARGET_BUCKET_ROWS) — the span probe already aggregates the
-    table, so the count rides the same job. Values are unchanged for
-    any k (monotone re-bucket); only sketch cost and plan balance
-    move."""
-    st = slim.agg(
-        F.min("_b").alias("lo"),
-        F.max("_b").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    if st["lo"] is None or st["hi"] - st["lo"] + 1 <= _MAX_OFFSET_BUCKETS:
-        return slim, b
-    k = _adaptive_k(st["n"], _MAX_OFFSET_BUCKETS)
-    cuts = _sketch_cuts(slim, ["_b"], k)[0]
-    return _apply_cuts(slim, cuts), _apply_cuts(b, cuts)
-
-
-def offset_running_sum(
+def offset_scan(
     df: DataFrame,
     bucket: Column,
     order_cols: list[Column | str],
-    value: Column,
-    sum_name: str = "running_sum",
-) -> DataFrame:
-    """Exclusive global running sum of `value` WITHOUT an unpartitioned
-    window — the same two-pass partition-offset shape as
-    `offset_row_number`: (1) per-bucket value sums -> driver prefix sum
-    (one tiny row per bucket), (2) within-bucket exclusive running sum +
-    broadcast-joined bucket offset. `bucket` must be a monotone function
-    of the leading order key. Row r gets sum(value) over all rows
-    strictly before r in the global order."""
-    spark = df.sparkSession
-    b = df.withColumn("_b", bucket.cast("bigint")).withColumn(
-        "_v", value.cast("bigint")
-    )
-    # r11: run the coarsening probe/sketch and the pass-1 sums over a
-    # SLIM (16 B/row) localCheckpoint of just (_b, _v) instead of
-    # re-deriving the caller's full lineage once per stats job (3-4
-    # upstream re-evaluations at bench scale; 3-4 full corpus scans at
-    # 100 TB). The final numbered plan below stays on the original
-    # lineage — exactly one more evaluation — so payload columns are
-    # never materialized.
-    slim, b = _coarsen_bucket(b.select("_b", "_v").localCheckpoint(), b)
-    sums = {
-        r["_b"]: r["s"]
-        for r in slim.groupBy("_b").agg(F.sum("_v").alias("s")).collect()
-    }
-    w = (
-        Window.partitionBy("_b")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    if len(sums) <= 1:
-        # single bucket: the only prefix offset is 0 — no join (see
-        # offset_row_number's single-bucket note)
-        return b.withColumn(
-            sum_name, F.coalesce(F.sum("_v").over(w), F.lit(0))
-        ).drop("_b", "_v")
-    offsets, acc = [], 0
-    for k in sorted(sums):
-        offsets.append((k, acc))
-        acc += sums[k]
-    odf = spark.createDataFrame(offsets, "_b bigint, _off bigint")
-    return (
-        b.join(F.broadcast(odf), "_b")
-        .withColumn(sum_name, F.coalesce(F.sum("_v").over(w), F.lit(0)) + F.col("_off"))
-        .drop("_b", "_v", "_off")
-    )
-
-
-def offset_row_number(
-    df: DataFrame,
-    bucket: Column,
-    order_cols: list[Column | str],
-    rn_name: str = "rn",
-    cuts: "np.ndarray | None | str" = "auto",
+    *,
+    groups: tuple[str, ...] | list[str] = (),
+    weight: Column | None = None,
+    name: str = "rn",
 ) -> tuple[DataFrame, int]:
-    """Global 1-based row numbering WITHOUT an unpartitioned window.
+    """Global (or per-group) scan over `order_cols` without a window on
+    the whole frame or on a low-cardinality group key alone: every window
+    is partitioned by (groups, bucket), so no data-sized
+    `Exchange SinglePartition` or one-task-per-group sort appears (an
+    input of ≤ _TARGET_BUCKET_ROWS rows is one bucket, one sort task).
 
-    Two passes: (1) per-bucket counts -> driver prefix sum (one tiny row
-    per bucket), (2) partitioned row_number + broadcast-joined offset.
-    `bucket` must be a monotone function of the leading order key so that
-    bucket order == global order; every window in the final plan is
-    partitioned by bucket — no `Exchange SinglePartition`, the shape that
-    survives 100 TB. High-cardinality buckets (a raw metric value is
-    fine) are re-coarsened to ≤ _MAX_OFFSET_BUCKETS driver rows first
-    (`cuts="auto"`). `cuts=None` certifies the span already fits and
-    skips the coarsening stats pass entirely: a bucket bounded BY
-    CONSTRUCTION (q32/q36's fixed 64-cell hash-key grid), or a metric
-    the fused plan_coarsen_cuts probe found in range. An ndarray applies
-    those cut points, so a caller ranking several metrics of one table
-    runs the guard + sketch once for ALL metrics, not once per call.
-    Returns (numbered df, total row count) — the total falls out of
-    pass 1 for free.
+    Appends `name` — the 1-based row number within the group, or with
+    `weight` the exclusive running sum of `weight` (the sum over rows
+    strictly before) — and `_n`, the group's row count. Returns
+    (frame, total row count).
+
+    `bucket` must be a monotone function of the leading order key, so
+    bucket order is the group's global order. Per-(group, bucket)
+    aggregates go to the driver; their prefix sums are each bucket's
+    offset, broadcast-joined back. `groups` must be a low-cardinality
+    key (q26's five market segments).
+
+    The first job collects at most _MAX_OFFSET_BUCKETS + 1 aggregate
+    rows; when they fit they are the offsets. Otherwise the row count
+    that job observed sets the cut count k (_adaptive_k). At k ≤ 1 every
+    row shares one constant bucket: offsets are 0 and no further job
+    runs. Above it the slim (groups, bucket, weight) columns are
+    checkpointed, cut at equi-depth quantiles of the raw bucket and
+    recounted (≤ |groups|·k rows). Equi-width cuts collapse under range
+    outliers (one whale value puts every other row in one bucket);
+    quantile cuts stay balanced for any distribution. The cuts map raw
+    buckets monotonically, so the result never depends on where they
+    land, only the plan balance does. Ties in the leading key cannot be
+    split by any monotone bucketing; that skew is inherent to exact
+    numbering.
     """
     spark = df.sparkSession
+    groups = list(groups)
+    keys = [*groups, "_b"]
     b = df.withColumn("_b", bucket.cast("bigint"))
-    counts_src = b
-    if isinstance(cuts, str):  # "auto": probe + sketch per call
-        # r11: probe/sketch/counts over a SLIM (_b-only) localCheckpoint
-        # — one lineage evaluation instead of one per stats job (see
-        # offset_running_sum). Callers on the None/ndarray paths skip
-        # the checkpoint: they either certify the span or have already
-        # materialized their input (q4zf's per-user m).
-        counts_src, b = _coarsen_bucket(b.select("_b").localCheckpoint(), b)
-    elif cuts is not None:
-        b = counts_src = _apply_cuts(b, cuts)
-    counts = {
-        r["_b"]: r["n"]
-        for r in counts_src.groupBy("_b")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    total = sum(counts.values())
-    w = Window.partitionBy("_b").orderBy(*order_cols)
-    if len(counts) <= 1:
-        # single bucket (e.g. the adaptive-k degenerate constant bucket):
-        # the only offset is 0 — no join at all. (A literal-_b equi-join
-        # also constant-folds into a nested-loop join, which the
-        # structural NLJ audit rightly rejects.)
-        numbered = b.withColumn(rn_name, F.row_number().over(w)).drop("_b")
-        return numbered, total
-    offsets, acc = [], 0
-    for k in sorted(counts):
-        offsets.append((k, acc))
-        acc += counts[k]
-    odf = spark.createDataFrame(offsets, "_b bigint, _off bigint")
-    numbered = (
-        b.join(F.broadcast(odf), "_b")
-        .withColumn(rn_name, F.row_number().over(w) + F.col("_off"))
-        .drop("_b", "_off")
-    )
-    return numbered, total
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if weight is not None:
+        b = b.withColumn("_v", weight.cast("bigint"))
+        aggs.append(F.coalesce(F.sum("_v"), F.lit(0)).alias("s"))
+    w = Window.partitionBy(*keys).orderBy(*order_cols)
+    if weight is None:
+        scan = F.row_number().over(w).cast("bigint")
+    else:
+        before = w.rowsBetween(Window.unboundedPreceding, -1)
+        scan = F.coalesce(F.sum("_v").over(before), F.lit(0))
 
-
-def grouped_offset_row_number(
-    df: DataFrame,
-    group_cols: list[str],
-    bucket: Column,
-    order_cols: list[Column | str],
-    rn_name: str = "rn",
-    n_name: str = "_n",
-) -> DataFrame:
-    """Per-GROUP 1-based row numbering plus the group's row count,
-    without partitioning any window on the group key alone — the fix for
-    the q26/q28 class (r9 verdict task 2): a data-sized window
-    partitioned on a ≤5-value key funnels each group through ONE task's
-    sort. Same two-pass shape as `offset_row_number`, prefix-summed per
-    group: (1) (group, bucket) counts -> driver (≤ |groups| ·
-    _MAX_OFFSET_BUCKETS rows — group_cols must be a LOW-cardinality
-    metadata key, the very property that made the single-task sort a
-    bottleneck), (2) windows partitioned by (group, bucket) + a
-    broadcast-joined per-(group, bucket) offset. `bucket` must be a
-    monotone function of the group's leading order key. Appends rn_name
-    and n_name (the group total, for rank-ratio arithmetic)."""
-    spark = df.sparkSession
-    b = df.withColumn("_b", bucket.cast("bigint"))
-    # r11: slim checkpoint for probe/sketch/counts (see offset_running_sum)
-    slim, b = _coarsen_bucket(b.select(*group_cols, "_b").localCheckpoint(), b)
-    counts = (
-        slim.groupBy(*group_cols, "_b")
-        .agg(F.count(F.lit(1)).alias("n"))
+    counted = Observation()
+    cells = (
+        b.observe(counted, F.count(F.lit(1)).alias("n"))
+        .groupBy(*keys)
+        .agg(*aggs)
+        .limit(_MAX_OFFSET_BUCKETS + 1)
         .collect()
     )
+    if len(cells) > _MAX_OFFSET_BUCKETS:
+        total = counted.get["n"]
+        k = _adaptive_k(total)
+        if k <= 1:
+            # one constant bucket: every offset is 0, and the group count
+            # is a window over the same partitioning (a join on a literal
+            # bucket would constant-fold into a nested-loop join)
+            out = (
+                b.withColumn("_b", F.lit(0).cast("bigint"))
+                .withColumn(name, scan)
+                .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+            )
+            return out.drop("_b", "_v"), total
+        slim = b.select(*keys, *(["_v"] if weight is not None else []))
+        slim = slim.localCheckpoint()
+        qs = slim.stat.approxQuantile("_b", [i / k for i in range(1, k)], 1.0 / k)
+        cuts = np.array(sorted(int(v) for v in qs), dtype=np.int64)
+        b = _apply_cuts(b, cuts)
+        cells = _apply_cuts(slim, cuts).groupBy(*keys).agg(*aggs).collect()
+
     by_group: dict[tuple, list] = {}
-    for r in counts:
-        by_group.setdefault(tuple(r[c] for c in group_cols), []).append(r)
-    offsets = []
-    for g in sorted(by_group, key=repr):
+    for r in cells:
+        by_group.setdefault(tuple(r[c] for c in groups), []).append(r)
+    offsets, total = [], 0
+    for g, rows in by_group.items():
+        n = sum(r["n"] for r in rows)
+        total += n
         acc = 0
-        rows = sorted(by_group[g], key=lambda r: r["_b"])
-        total = sum(r["n"] for r in rows)
-        for r in rows:
-            offsets.append((*g, r["_b"], acc, total))
-            acc += r["n"]
-    schema_groups = b.select(*group_cols).schema
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in schema_groups.fields
-    )
-    w = Window.partitionBy(*group_cols, "_b").orderBy(*order_cols)
-    if len({r["_b"] for r in counts}) <= 1:
-        # single bucket everywhere (the adaptive-k degenerate case):
-        # per-group offset is 0 and the join key reduces to the group
-        # columns (a literal-_b equi-join would constant-fold into a
-        # nested-loop join — see offset_row_number)
-        odf = spark.createDataFrame(
-            [(*g, sum(r["n"] for r in rows))
-             for g, rows in ((g, by_group[g]) for g in sorted(by_group, key=repr))],
-            f"{fields}, {n_name} bigint",
-        )
-        return (
-            b.join(F.broadcast(odf), list(group_cols))
-            .withColumn(rn_name, F.row_number().over(w))
-            .drop("_b")
-        )
+        for r in sorted(rows, key=lambda r: r["_b"]):
+            offsets.append((*g, r["_b"], acc, n))
+            acc += r["n" if weight is None else "s"]
+    if not groups and len(offsets) <= 1:
+        # one bucket: its offset is 0
+        out = b.withColumn(name, scan).withColumn("_n", F.lit(total).cast("bigint"))
+        return out.drop("_b", "_v"), total
+    fields = [
+        f"{f.name} {f.dataType.simpleString()}" for f in b.select(*groups).schema
+    ]
     odf = spark.createDataFrame(
-        offsets, f"{fields}, _b bigint, _off bigint, {n_name} bigint"
+        offsets, ", ".join([*fields, "_b bigint, _off bigint, _n bigint"])
     )
-    return (
-        b.join(F.broadcast(odf), [*group_cols, "_b"])
-        .withColumn(rn_name, F.row_number().over(w) + F.col("_off"))
-        .drop("_b", "_off")
-    )
+    out = b.join(F.broadcast(odf), keys).withColumn(name, scan + F.col("_off"))
+    return out.drop("_b", "_v", "_off"), total
 
 
 # --------------------------------------------------------------------------
@@ -423,9 +235,9 @@ def q31_seeded_shuffle_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q32 — exact-head split: the reference's literal semantics (shuffle, then
 # the first N records are validation; make_tf_record.py:157-158). Exact
 # AND scalable: the permutation key is uniform in [0, 2^32), so its top
-# bits are an order-preserving bucket — two-pass offset numbering
-# (offset_row_number) gives the global rank with every window partitioned
-# by bucket, no single-task Exchange.
+# bits are an order-preserving bucket (a fixed 64-cell grid) — offset_scan
+# gives the global rank with every window partitioned by bucket, no
+# single-task Exchange.
 # --------------------------------------------------------------------------
 _KEY_BUCKETS = 64  # order-preserving buckets over the uniform 32-bit key
 _KEY_BUCKET_W = _SHUFFLE_MOD // _KEY_BUCKETS
@@ -446,9 +258,8 @@ _KEY_BUCKET_W = _SHUFFLE_MOD // _KEY_BUCKETS
 def q32_split_exact_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     key = shuffle_key(F.col("doc_id"))
-    numbered, total = offset_row_number(
-        docs, F.floor(key / _KEY_BUCKET_W), [key, F.col("doc_id")],
-        cuts=None,  # fixed 64-cell grid by construction
+    numbered, total = offset_scan(
+        docs, F.floor(key / _KEY_BUCKET_W), [key, F.col("doc_id")]
     )
     return numbered.select(
         "doc_id",
@@ -527,7 +338,7 @@ def q35_batch_ragged_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id itself is the order key: bucket its value range directly
     # (4096-wide, order-preserving; balanced for the dense ids this table
     # carries, and correctness never depends on balance).
-    numbered, _ = offset_row_number(
+    numbered, _ = offset_scan(
         docs, F.floor(F.col("doc_id") / 4096), [F.col("doc_id")]
     )
     return (
@@ -562,9 +373,8 @@ def q36_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     key = shuffle_key(F.col("doc_id"))
-    numbered, total = offset_row_number(
-        docs, F.floor(key / _KEY_BUCKET_W), [key, F.col("doc_id")],
-        cuts=None,  # fixed 64-cell grid by construction
+    numbered, total = offset_scan(
+        docs, F.floor(key / _KEY_BUCKET_W), [key, F.col("doc_id")]
     )
     per_shard = math.ceil(total / 5) if total else 1
     rn0 = F.col("rn") - 1

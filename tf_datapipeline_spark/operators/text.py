@@ -828,10 +828,10 @@ def q5c_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # each doc occupies token positions [start_tok, start_tok + n_tokens) and
 # is cut into context chunks of 512 — the packing layout LLM trainers
 # feed (docs spanning a chunk boundary are split across sequences). The
-# global exclusive running sum uses the two-pass partition-offset shape
-# (offset_running_sum): per-bucket sums -> driver prefix -> partitioned
-# window; no `Exchange SinglePartition` anywhere, so the layout job
-# scales to a 100 TB corpus.
+# global exclusive running sum is pipeline.offset_scan with a weight:
+# per-bucket sums -> driver prefix -> partitioned window; no
+# `Exchange SinglePartition` anywhere, so the layout job scales to a
+# 100 TB corpus.
 # --------------------------------------------------------------------------
 _PACK_B = 512
 
@@ -859,19 +859,16 @@ _PACK_B = 512
     """,
 )
 def q5d_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.operators.pipeline import offset_running_sum
+    from tf_datapipeline_spark.operators.pipeline import offset_scan
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", F.size(_tokens_spark()).cast("bigint").alias("n_tokens")
     )
     # doc_id is the order key; its high bits are an order-preserving bucket
-    c = offset_running_sum(
-        d,
-        bucket=F.col("doc_id") / 4096,
-        order_cols=["doc_id"],
-        value=F.col("n_tokens"),
-        sum_name="start_tok",
+    c, _ = offset_scan(
+        d, F.col("doc_id") / 4096, ["doc_id"],
+        weight=F.col("n_tokens"), name="start_tok",
     )
     first = F.expr(f"start_tok DIV {_PACK_B}")
     last = F.expr(f"(start_tok + n_tokens - 1) DIV {_PACK_B}")
@@ -2473,10 +2470,9 @@ def q5w_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Exactness: all-integer (token counts, exclusive prefix sums, FLOOR
 # chunk division on non-negative values). Spark's global exclusive
-# running sum is the two-pass partition-offset shape
-# (offset_running_sum — per-bucket sums, driver prefix over bounded
-# bucket rows, partitioned window), so there is no
-# Exchange SinglePartition anywhere; the oracle's single ORDER BY
+# running sum is pipeline.offset_scan with a weight (per-bucket sums,
+# driver prefix over bounded bucket rows, partitioned window), so there
+# is no Exchange SinglePartition anywhere; the oracle's single ORDER BY
 # window is the semantic twin.
 #
 # Spark shape (100 TB): q5t's vocab-sized encode (fold over DISTINCT
@@ -2506,17 +2502,14 @@ def q5w_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def qt7_tokenize_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.operators.pipeline import offset_running_sum
+    from tf_datapipeline_spark.operators.pipeline import offset_scan
 
     d = _bpe_doc_counts(spark, sf_dir).select(
         "doc_id", F.col("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens")
     )
-    c = offset_running_sum(
-        d,
-        bucket=F.col("doc_id") / 4096,
-        order_cols=["doc_id"],
-        value=F.col("n_bpe_tokens"),
-        sum_name="start_tok",
+    c, _ = offset_scan(
+        d, F.col("doc_id") / 4096, ["doc_id"],
+        weight=F.col("n_bpe_tokens"), name="start_tok",
     )
     first = F.expr(f"start_tok DIV {_PACK_B}")
     last = F.expr(f"(start_tok + n_bpe_tokens - 1) DIV {_PACK_B}")

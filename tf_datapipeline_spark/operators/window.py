@@ -226,13 +226,12 @@ def _idiv(a: Column, d: Column) -> Column:
 # market segment (rounds out the analytic-function surface: q20-q25 cover
 # rank/lag/running/percentile; this adds tile + positional frame access).
 #
-# Spark shape (100 TB, r10 — the r9 verdict's last single-task sort):
-# the oracle's PARTITION BY c_mktsegment is a 5-value key, so a naive
-# window funnels each segment through ONE task. The engine instead
-# numbers rows per segment with the grouped two-pass offset machinery
-# (pipeline.grouped_offset_row_number — windows partitioned by
-# (segment, balance-bucket), ≤ 5·4096 driver prefix rows) and derives
-# every analytic from (rn, n) with exact integer arithmetic:
+# Spark shape (100 TB): the oracle's PARTITION BY c_mktsegment is a
+# 5-value key, so a naive window funnels each segment through ONE task.
+# The engine instead numbers rows per segment with pipeline.offset_scan
+# (groups = segment; windows partitioned by (segment, balance-bucket),
+# ≤ 5·4096 driver prefix rows) and derives every analytic from (rn, n)
+# with exact integer arithmetic:
 #   NTILE(k): q = n DIV k, r = n MOD k (first r tiles take q+1 rows) —
 #     rn ≤ r·(q+1) ? (rn-1) DIV (q+1) + 1 : r + (rn - r·(q+1) - 1) DIV q + 1,
 #     integer divisions via the exact-multiple device (the q27 pattern);
@@ -257,20 +256,18 @@ def _idiv(a: Column, d: Column) -> Column:
     """,
 )
 def q26_ntile_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.operators.pipeline import (
-        grouped_offset_row_number,
-    )
+    from tf_datapipeline_spark.operators.pipeline import offset_scan
 
     c = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment", "c_custkey", "c_acctbal"
     )
     # bucket = -acctbal truncated: nondecreasing in the DESC sort order
-    # (trunc is monotone); grouped_offset_row_number coarsens it.
-    numbered = grouped_offset_row_number(
+    # (trunc is monotone); offset_scan coarsens it.
+    numbered, _ = offset_scan(
         c,
-        ["c_mktsegment"],
         -F.col("c_acctbal"),
         [F.desc("c_acctbal"), F.asc("c_custkey")],
+        groups=["c_mktsegment"],
     )
     rn, n = F.col("rn"), F.col("_n")
     k = F.lit(4).cast("bigint")
@@ -367,8 +364,8 @@ def q27_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are rank-ratio divisions of exact integers, so cross-engine values are
 # bit-identical.
 #
-# Spark shape (100 TB, r10 — the other half of the q26 fix): per-segment
-# rn via grouped_offset_row_number (windows partitioned by (segment,
+# Spark shape (100 TB, the other half of the q26 fix): per-segment
+# rn via pipeline.offset_scan (windows partitioned by (segment,
 # balance-bucket), never by the 5-value segment alone), then SQL peer
 # semantics recovered from rn: RANK = MIN(rn) over the peer group,
 # CUME_DIST numerator = MAX(rn) over it. Peers share one balance value,
@@ -389,18 +386,16 @@ def q27_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q28_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tf_datapipeline_spark.operators.pipeline import (
-        grouped_offset_row_number,
-    )
+    from tf_datapipeline_spark.operators.pipeline import offset_scan
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    numbered = grouped_offset_row_number(
+    numbered, _ = offset_scan(
         cust,
-        ["c_mktsegment"],
         F.col("c_acctbal"),
         [F.asc("c_acctbal"), F.asc("c_custkey")],
+        groups=["c_mktsegment"],
     )
     wpeer = Window.partitionBy("c_mktsegment", "c_acctbal")
     rank = F.min("rn").over(wpeer)

@@ -88,7 +88,11 @@ def run_bounded(sdf: DataFrame, output_mode: str) -> DataFrame:
     clones the session, so the stream keeps the count it started with,
     and the caller's value is restored even when `start()` raises. This
     stream has no checkpoint of its own to resume from; a stream that
-    has one keeps the count its first run recorded there."""
+    has one keeps the count its first run recorded there.
+
+    The returned frame holds the memory sink itself, so the sink's temp
+    view is dropped before returning: a session that runs many bounded
+    streams keeps no `stream_sink_N` view behind."""
     name = f"stream_sink_{next(_sink_counter)}"
     spark = sdf.sparkSession
     key = "spark.sql.shuffle.partitions"
@@ -106,7 +110,9 @@ def run_bounded(sdf: DataFrame, output_mode: str) -> DataFrame:
     finally:
         spark.conf.set(key, saved)
     q.awaitTermination()
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 # --------------------------------------------------------------------------
