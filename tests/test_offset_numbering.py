@@ -17,7 +17,8 @@ These tests pin:
   3. an already-bounded bucket is left raw (no cuts),
   4. numbering and the weighted running sum equal the global sort /
      window, per group too, on the fitting and the overflow paths,
-  5. the job counts of the fitting and the constant-bucket paths.
+  5. the job counts of the fitting and the constant-bucket paths,
+  6. the plan of an ungrouped overflowing scan on both branches.
 """
 
 from __future__ import annotations
@@ -125,6 +126,31 @@ def test_coarsen_leaves_bounded_buckets_alone(spark, monkeypatch):
     assert "EvalPython" not in formatted_plan(numbered)
     assert total == 1000
     assert all(r["rn"] == r["k"] + 1 for r in numbered.collect())
+
+
+@pytest.mark.parametrize("branch,target", [("one-bucket", None), ("cuts", 64)])
+def test_ungrouped_overflow_plan(spark, monkeypatch, branch, target):
+    """The plan of an ungrouped scan whose first collect overflows. The
+    one-constant-bucket branch DOES plan an `Exchange SinglePartition`:
+    Spark folds the literal bucket out of the window's partition spec.
+    That exchange is bounded, because the branch is taken only when the
+    observed row count is at most _TARGET_BUCKET_ROWS, so its one sort
+    task never holds more rows than that. The sketched-cuts branch
+    partitions every window by the cut bucket and plans NO
+    `Exchange SinglePartition`."""
+    if target is not None:
+        monkeypatch.setattr(_pipeline, "_TARGET_BUCKET_ROWS", target)
+    applied = _spy_cuts(monkeypatch)
+    numbered, total = offset_scan(
+        _wide_df(spark), F.col("v"), [F.asc("v"), F.asc("k")]
+    )
+    plan = formatted_plan(numbered)
+    assert (len(applied) > 0) == (branch == "cuts"), branch
+    if branch == "one-bucket":
+        assert "Arguments: SinglePartition" in plan, plan  # the Exchange
+        assert numbered.count() == total <= _pipeline._TARGET_BUCKET_ROWS
+    else:
+        assert "SinglePartition" not in plan, plan
 
 
 def test_offset_scan_numbers_in_global_order(spark):

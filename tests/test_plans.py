@@ -419,13 +419,6 @@ def test_vector_folds_live_in_one_module():
         ("operators/similarity.py", "_pq_dists_ctes"),
         # fold over the collected per-label centroid dims, in pos order
         ("operators/similarity.py", "_centroid_drift_sql"),
-        # DuckDB-only oracle text: the same left-to-right fold as
-        # fold_l2/fold_dot/fold_norm2, spelled with other lambda names
-        # or nesting, and kept byte-for-byte so the oracle SQL is
-        # provably unchanged by the move to functions/vectors.py
-        ("operators/similarity.py", "_cell_balance_oracle"),
-        ("operators/dedup.py", "_embedding_neardup_sql"),
-        ("streaming/events_stream.py", "_stream_ivf_oracle"),
         # PageRank contributions summed in src order
         ("operators/dedup.py", "q6g_pagerank"),
         ("operators/dedup.py", "_pagerank_oracle"),
@@ -478,6 +471,42 @@ def test_vector_folds_live_in_one_module():
         f"a reason): {sorted(unexpected)}"
     )
     assert allowed <= found, f"stale allowlist entries: {sorted(allowed - found)}"
+
+
+def test_temp_views_are_bound_only_in_catalog():
+    """Source-level audit: only catalog.py binds a temp view. A shared
+    table goes through catalog.sql_with, which drops every name it binds,
+    so the session's temp views stay the catalog tables."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "tf_datapipeline_spark"
+    binders = {
+        "createTempView",
+        "createOrReplaceTempView",
+        "createGlobalTempView",
+        "createOrReplaceGlobalTempView",
+    }
+    found = set()
+    for py in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in binders:
+                found.add(str(py.relative_to(pkg)))
+    assert found == {"catalog.py"}, sorted(found)
+
+
+def test_registry_build_leaves_only_catalog_views(spark):
+    """Building every registered query once in one session leaves exactly
+    the catalog tables as temp views: no shared table, digest source or
+    stream sink outlives the call that bound it. A new session keeps the
+    other tests' views out of the count."""
+    from tf_datapipeline_spark.catalog import TABLES
+
+    session = spark.newSession()
+    for name, fn in sorted(registry.queries().items()):
+        fn(session, SF_SMOKE)
+    views = {t.name for t in session.catalog.listTables() if t.isTemporary}
+    assert views == set(TABLES), sorted(views - set(TABLES))
 
 
 def test_mmr_driver_greedy_regime_guard(spark):

@@ -296,15 +296,29 @@ def test_substring_dup_interval_union(spark):
     assert got[2] == (_SUB_K + 12, _SUB_K)
 
 
-def _view_after(query_name, view):
-    """A build function for a per-invocation view: it runs the
-    registered query that materializes `view`, then reads the view."""
+def _shared_table_of(query_name):
+    """A build function for a query's one shared table: it builds the
+    registered query and returns the checkpoint that build made
+    (catalog.sql_with binds it only while the query is analyzed)."""
 
     def build(spark, sf_dir):
         from tf_datapipeline_spark import registry
 
-        registry.queries()[query_name](spark, sf_dir)
-        return spark.table(view)
+        made = []
+        cls = type(spark.range(1))
+        real = cls.localCheckpoint
+
+        def recording(self, *args, **kwargs):
+            made.append(real(self, *args, **kwargs))
+            return made[-1]
+
+        cls.localCheckpoint = recording
+        try:
+            registry.queries()[query_name](spark, sf_dir)
+        finally:
+            cls.localCheckpoint = real
+        (table,) = made
+        return table
 
     return build
 
@@ -330,10 +344,10 @@ def _ahash(spark, sf_dir):
 _MATERIALIZED_TABLES = {
     "sig": _sig,
     "cc_labels": _cc_labels,
-    "dims_mat": _view_after("q72_label_centroids", "dims_mat"),
+    "dims": _shared_table_of("q72_label_centroids"),
     "ahash": _ahash,
-    "kmv_base_mat": _view_after("q9e_kmv_quantile_rollup", "kmv_base_mat"),
-    "dv_pospl_mat": _view_after("q9g_deletion_vectors", "dv_pospl_mat"),
+    "kmv_base": _shared_table_of("q9e_kmv_quantile_rollup"),
+    "dv_pospl": _shared_table_of("q9g_deletion_vectors"),
 }
 
 
@@ -364,6 +378,69 @@ def test_materialization_is_per_invocation(spark, table):
     rows_a = sorted(map(tuple, a.collect()), key=repr)
     rows_b = sorted(map(tuple, b.collect()), key=repr)
     assert rows_a == rows_b and rows_a
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_sql_with_checkpoints_in_order_and_drops_its_names(spark, monkeypatch):
+    """catalog.sql_with binds each shared entry under its bare name, in
+    order: SQL text is checkpointed once, a DataFrame is bound as it is,
+    and a later entry reads the earlier ones. Every bound name is gone
+    once the body is analyzed, also when the body fails to analyze, and
+    a name that collides with a catalog table raises before any bind."""
+    from pyspark.errors import AnalysisException
+
+    from tests.conftest import SF_SMOKE
+    from tf_datapipeline_spark.catalog import sql_with
+
+    checkpointed = []
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(self.columns)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    before = _temp_views(spark)
+    df = sql_with(
+        spark,
+        SF_SMOKE,
+        "SELECT a.x, b.y FROM a JOIN b ON b.x = a.x",
+        base=spark.range(5),
+        a="SELECT id AS x FROM base WHERE id < 3",
+        b="SELECT x, x * 10 AS y FROM a",
+    )
+    assert checkpointed == [["x"], ["x", "y"]]  # SQL entries only, in order
+    assert _temp_views(spark) == before
+    assert sorted(map(tuple, df.collect())) == [(0, 0), (1, 10), (2, 20)]
+
+    with pytest.raises(AnalysisException):
+        sql_with(spark, SF_SMOKE, "SELECT * FROM no_such_table", a="SELECT 1 AS x")
+    assert _temp_views(spark) == before
+
+    checkpointed.clear()
+    with pytest.raises(ValueError, match="orders"):
+        sql_with(spark, SF_SMOKE, "SELECT 1", a="SELECT 1 AS x", orders="SELECT 1")
+    assert checkpointed == [] and _temp_views(spark) == before
+
+
+def test_oracle_with_reads_shared_ctes_from_a_nested_body():
+    """catalog.oracle_with: the body reads the shared CTEs by name, also
+    from inside its own WITH list, and a later shared CTE reads an
+    earlier one."""
+    import duckdb
+
+    from tf_datapipeline_spark.catalog import oracle_with
+
+    sql = oracle_with(
+        "WITH c AS (SELECT x + y AS z FROM b) SELECT z FROM c ORDER BY z",
+        a="SELECT * FROM range(3) t(x)",
+        b="SELECT x, x * 10 AS y FROM a",
+    )
+    assert duckdb.sql(sql).fetchall() == [(0,), (11,), (22,)]
 
 
 def _copy_of_smoke_tables(sf_dir: str) -> None:
@@ -1019,7 +1096,8 @@ def test_deletion_vectors_actually_mask(spark):
     (both DV commits fire)."""
     from tests.conftest import SF_SMOKE
     from tf_datapipeline_spark import registry
-    from tf_datapipeline_spark.catalog import load_table
+    from tf_datapipeline_spark.catalog import load_table, sql_with
+    from tf_datapipeline_spark.operators.layout import _DV_POSPL_SQL
 
     rows = registry.queries()["q9g_deletion_vectors"](spark, SF_SMOKE).collect()
     orders_n = load_table(spark, SF_SMOKE, "orders").count()
@@ -1030,10 +1108,11 @@ def test_deletion_vectors_actually_mask(spark):
     # both DELETE predicates: a surviving match means the positional
     # mask missed a row (the failure mode positional deletes are
     # notorious for when file/pos assignment drifts between commits)
-    live_leaks = spark.sql(
-        f"""
-        WITH pospl AS (SELECT * FROM dv_pospl_mat),
-        dv AS (
+    live_leaks = sql_with(
+        spark,
+        SF_SMOKE,
+        """
+        WITH dv AS (
           SELECT DISTINCT file_id, pos FROM (
             SELECT file_id, pos FROM pospl
             WHERE o_orderstatus = 'F' AND o_custkey % 7 = 0
@@ -1048,7 +1127,8 @@ def test_deletion_vectors_actually_mask(spark):
         SELECT COUNT(*) AS leaks FROM live
         WHERE (o_orderstatus = 'F' AND o_custkey % 7 = 0)
            OR o_orderkey % 13 = 3
-        """
+        """,
+        pospl=_DV_POSPL_SQL,
     ).collect()[0].leaks
     assert live_leaks == 0
 

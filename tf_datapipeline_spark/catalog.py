@@ -5,7 +5,8 @@ label is encoded in the path (reference: generator.py:8-34). Our engine's
 catalog is a flat Parquet directory per scale factor; Spark gets schema,
 column pruning, and predicate pushdown from the Parquet footers for free.
 
-The session's temp views are the only table state. `register_views`
+The session's temp views are the only table state, and they are the ten
+`TABLES`: nothing else binds a view outside this module. `register_views`
 binds one view per table to a directory, with each schema declared from
 the parquet footer (no Spark job). `load_table` is `spark.table` over
 those views, and `read_table_stream` is its streaming twin: the one
@@ -17,6 +18,10 @@ file listing when it is bound, so:
 - a caller that rewrites a table in place must call
   `spark.catalog.refreshTable(name)`, or later reads keep the old
   listing (a file that grew in place is read only up to its old length).
+
+A query that reads an intermediate table more than once declares it as a
+shared CTE, once for both engines: `sql_with` runs the query on Spark
+and `oracle_with` spells its DuckDB oracle (see `sql_with`).
 """
 
 from __future__ import annotations
@@ -92,21 +97,48 @@ def docs_scan_source(spark: SparkSession, sf_dir: str) -> str:
     return f"(SELECT /*+ REPARTITION({n}) */ * FROM documents)"
 
 
-def materialize(
-    spark: SparkSession, sf_dir: str, view: str, sql: str | DataFrame
+def sql_with(
+    spark: SparkSession, sf_dir: str, body: str, **shared: str | DataFrame
 ) -> DataFrame:
-    """The ONE way an operator materializes a shared table: run `sql` (a
-    query over the catalog views of `sf_dir`, registered here, or a
-    DataFrame built over them) as an eager localCheckpoint, bind the
-    result to temp view `view`, and return it. Built once per CALL —
-    every downstream reference in the invocation reads the checkpoint
-    instead of re-deriving it under Spark's CTE inlining, and nothing is
-    cached across invocations, so each query pays its own build and sees
-    the current table data."""
+    """`body`, a query over the catalog views of `sf_dir` (registered
+    here) and the `shared` tables, analyzed by Spark.
+
+    This is the one shared-table step. Spark inlines CTEs, so a CTE that
+    `body` references N times is derived (and its tables scanned) N
+    times. Each `shared` entry is therefore bound, in order, as a temp
+    view under its bare CTE name: SQL text is run once as an eager
+    `localCheckpoint`, a DataFrame is bound as it is. A later entry and
+    `body` read the earlier ones by name. Once `body` is analyzed every
+    name bound here is dropped, also when analysis fails: the returned
+    frame keeps its plan, the checkpoints live as long as it does, and
+    nothing is cached across calls, so each call pays its own build and
+    sees the current table data. `oracle_with` is the DuckDB twin."""
+    clash = sorted(set(shared) & set(TABLES))
+    if clash:
+        raise ValueError(f"shared table names collide with catalog tables: {clash}")
     register_views(spark, sf_dir)
-    df = (spark.sql(sql) if isinstance(sql, str) else sql).localCheckpoint()
-    df.createOrReplaceTempView(view)
-    return df
+    bound = []
+    try:
+        for name, src in shared.items():
+            if isinstance(src, str):
+                src = spark.sql(src).localCheckpoint()
+            src.createOrReplaceTempView(name)
+            bound.append(name)
+        return spark.sql(body)
+    finally:
+        for name in bound:
+            spark.catalog.dropTempView(name)
+
+
+def oracle_with(body: str, **shared: str) -> str:
+    """The DuckDB spelling of `sql_with`: each `shared` entry becomes a
+    `MATERIALIZED` CTE (DuckDB inlines a plain CTE per reference too),
+    and `body` reads them from a subquery, so it is the same text the
+    Spark side analyzes."""
+    ctes = ",\n".join(
+        f"{name} AS MATERIALIZED ({sql}\n)" for name, sql in shared.items()
+    )
+    return f"WITH {ctes}\nSELECT * FROM ({body}\n)"
 
 
 def footer_schema(path: str) -> StructType:

@@ -36,75 +36,34 @@ def minhash_params(k: int, seed: int = 7) -> list[tuple[int, int]]:
     return params
 
 
-def sql_hash32(expr: str) -> str:
-    """SQL (valid in BOTH Spark SQL and DuckDB) computing
-    int(md5(expr)[:8], 16) as BIGINT."""
-    return sql_hash32_from_md5(f"md5({expr})")
-
-
-def sql_hash32_from_md5(md5_expr: str) -> str:
-    """hash32 from an already-computed md5 hex column — use this when the
-    md5 can be projected once in an inner SELECT (the digit extraction
-    references the digest 8 times; inlining md5() would recompute it 8×
-    unless the engine's CSE catches it)."""
+def sql_md5_window(
+    md5_expr: str, dialect: str = "portable", start: int = 1, width: int = 8
+) -> str:
+    """The BIGINT value of `width` hex digits of the md5 hex digest
+    `md5_expr`, from 1-based offset `start`: the one hex-window decoder.
+    Several windows of one digest give independent hash values (Bloom
+    double hashing reads offsets 1 and 9); width 15 is the wide-keyspace
+    variant, still < 2^60 in signed BIGINT, for key universes that can
+    approach 2^32 at 100 TB (KMV bottom-k order statistics, corpus-wide
+    gram join keys). Spark spells it conv(), one JVM intrinsic; any other
+    dialect gets the instr digit arithmetic, which parses identically in
+    Spark SQL and DuckDB (the portable form). Pass a projected digest
+    column: the digit decode references it `width` times."""
+    if dialect == "spark":
+        return f"CAST(conv(substr({md5_expr}, {start}, {width}), 16, 10) AS BIGINT)"
     terms = []
-    for i in range(1, 9):
-        digit = f"substr({md5_expr}, {i}, 1)"
-        val = f"CAST(instr('0123456789abcdef', {digit}) - 1 AS BIGINT)"
-        terms.append(f"{val} * {16 ** (8 - i)}")
-    return "(" + " + ".join(terms) + ")"
-
-
-def sql_hash32_dialect(expr: str, dialect: str) -> str:
-    """hash32 with the cheapest expression per engine. Spark has conv()
-    (hex string -> bigint in one JVM intrinsic, ~8x fewer expression nodes
-    than the digit decode); DuckDB lacks conv, so the oracle keeps the
-    shared instr arithmetic. Equality of the two forms is asserted in
-    tests (same md5 prefix, same integer)."""
-    if dialect == "spark":
-        return f"CAST(conv(substr(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
-    return sql_hash32(expr)
-
-
-def sql_hash32_from_md5_dialect(md5_expr: str, dialect: str) -> str:
-    """Like sql_hash32_dialect, over an already-projected md5 hex column."""
-    if dialect == "spark":
-        return f"CAST(conv(substr({md5_expr}, 1, 8), 16, 10) AS BIGINT)"
-    return sql_hash32_from_md5(md5_expr)
-
-
-def sql_hash60_from_md5_dialect(md5_expr: str, dialect: str) -> str:
-    """60-bit integer from the first 15 hex digits of an already-projected
-    md5 digest — the wide-keyspace variant for operators whose distinct-key
-    universe can approach 2^32 at 100 TB, where a 32-bit space saturates
-    (KMV bottom-k order statistics, corpus-wide gram join keys — r7
-    advisor). 15 hex digits keep the value < 2^60, safely inside signed
-    BIGINT arithmetic in both engines. Spark spells it conv(); DuckDB
-    keeps the shared instr digit arithmetic (pass a PROJECTED md5 column:
-    the decode references the digest 15 times)."""
-    if dialect == "spark":
-        return f"CAST(conv(substr({md5_expr}, 1, 15), 16, 10) AS BIGINT)"
-    terms = []
-    for i in range(15):
-        digit = f"substr({md5_expr}, {1 + i}, 1)"
-        val = f"CAST(instr('0123456789abcdef', {digit}) - 1 AS BIGINT)"
-        terms.append(f"{val} * {16 ** (14 - i)}")
-    return "(" + " + ".join(terms) + ")"
-
-
-def sql_hash32_from_md5_at(md5_expr: str, start: int, dialect: str) -> str:
-    """32-bit integer from an 8-hex-digit window of an md5 digest starting
-    at 1-based offset `start` — lets one md5 computation yield several
-    independent hash values (Bloom double-hashing uses windows 1 and 9).
-    Spark spells it conv(); DuckDB keeps the instr digit arithmetic."""
-    if dialect == "spark":
-        return f"CAST(conv(substr({md5_expr}, {start}, 8), 16, 10) AS BIGINT)"
-    terms = []
-    for i in range(8):
+    for i in range(width):
         digit = f"substr({md5_expr}, {start + i}, 1)"
         val = f"CAST(instr('0123456789abcdef', {digit}) - 1 AS BIGINT)"
-        terms.append(f"{val} * {16 ** (7 - i)}")
+        terms.append(f"{val} * {16 ** (width - 1 - i)}")
     return "(" + " + ".join(terms) + ")"
+
+
+def sql_hash32(expr: str, dialect: str = "portable") -> str:
+    """int(md5(expr)[:8], 16) as BIGINT (see sql_md5_window). Both
+    spellings give the same integer: every oracle-checked hash query
+    compares Spark's conv() against the oracle's digit arithmetic."""
+    return sql_md5_window(f"md5({expr})", dialect)
 
 
 def sql_minhash_perm(h_expr: str, a: int, b: int) -> str:
@@ -142,6 +101,6 @@ def sql_bloom_hashes(md5_expr: str, dialect: str) -> tuple[str, str]:
     window at offset 1; h2 = 1 + (window at 9) % (BLOOM_M - 1). That
     stride guard keeps the stride in [1, m-1], never 0: without it a key
     whose raw h2 is divisible by m puts all k probes on one bit."""
-    h1 = sql_hash32_from_md5_at(md5_expr, 1, dialect)
-    h2 = f"(1 + (({sql_hash32_from_md5_at(md5_expr, 9, dialect)}) % {BLOOM_M - 1}))"
+    h1 = sql_md5_window(md5_expr, dialect)
+    h2 = f"(1 + (({sql_md5_window(md5_expr, dialect, start=9)}) % {BLOOM_M - 1}))"
     return h1, h2

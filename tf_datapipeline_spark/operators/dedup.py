@@ -34,8 +34,9 @@ from pyspark.sql import functions as F
 from tf_datapipeline_spark.catalog import (
     docs_scan_source,
     load_table,
-    materialize,
+    oracle_with,
     register_views,
+    sql_with,
 )
 from tf_datapipeline_spark.functions import vectors as V
 from tf_datapipeline_spark.functions.texthash import (
@@ -45,9 +46,8 @@ from tf_datapipeline_spark.functions.texthash import (
     MERSENNE,
     minhash_params,
     sql_bloom_hashes,
-    sql_hash32_dialect,
-    sql_hash32_from_md5_dialect,
-    sql_hash60_from_md5_dialect,
+    sql_hash32,
+    sql_md5_window,
     sql_minhash_perm,
     sql_shl1,
 )
@@ -123,7 +123,7 @@ def _sql_shingles(dialect: str, distinct: bool = True, src: str = "documents") -
         pos = "unnest(generate_series(1, length(text) - 4)) AS pos"
     d = "DISTINCT" if distinct else ""
     return f"""
-      SELECT {d} doc_id, {sql_hash32_from_md5_dialect("md5s", dialect)} AS h
+      SELECT {d} doc_id, {sql_md5_window("md5s", dialect)} AS h
       FROM (
         SELECT doc_id, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
         FROM (SELECT doc_id, text, {pos}
@@ -133,10 +133,10 @@ def _sql_shingles(dialect: str, distinct: bool = True, src: str = "documents") -
 
 
 # The signature/shingle tables, like every shared table in the engine,
-# are materialized PER INVOCATION (catalog.materialize): a session-keyed
-# cache would let min-of-N bench rows time a cached read instead of the
-# build they claim to measure, and would serve stale rows after an
-# in-place table rewrite.
+# are built PER INVOCATION (catalog.sql_with): a session-keyed cache
+# would let min-of-N bench rows time a cached read instead of the build
+# they claim to measure, and would serve stale rows after an in-place
+# table rewrite.
 def _sql_signature(dialect: str = "duckdb", src: str = "documents") -> str:
     """MinHash signature aggregation. MIN over a multiset equals MIN over
     the set, so the Spark side aggregates the RAW shingle stream — the
@@ -157,34 +157,25 @@ def _sql_signature(dialect: str = "duckdb", src: str = "documents") -> str:
     return f"SELECT doc_id,\n             {mins}\n      FROM {sh} GROUP BY doc_id"
 
 
-def _with_prelude(body: str, need_sig: bool) -> str:
-    """Wrap an oracle query body with the DuckDB shingle (and signature)
-    CTEs; the Spark side pre-materializes the `sig` table instead (see
-    _materialize_sig) so it is computed once."""
-    ctes = [f"shingles AS ({_sql_shingles('duckdb')})"]
-    if need_sig:
-        ctes.append(f"sig AS ({_sql_signature()})")
-    return "WITH " + ",\n    ".join(ctes) + "\n" + body
+# The oracles' shared shingle and signature tables (catalog.oracle_with);
+# the Spark side checkpoints `sig` itself (_materialize_sig).
+_SIG_CTES = {"shingles": _sql_shingles("duckdb"), "sig": _sql_signature()}
 
 
 def _materialize_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the 5000-rows-per-million-docs signature table (NOT the
-    raw shingle stream — q65 materializes that separately only when it
-    needs exact intersection counts). Per-invocation: every caller pays
-    the build (see the module note above); callers that need the table
-    twice read the returned checkpoint / the `sig` view."""
+    """Checkpoint the 5000-rows-per-million-docs signature table (NOT the
+    raw shingle stream — q65 builds that separately only when it needs
+    exact intersection counts). Per-invocation: every caller pays the
+    build (see the module note above)."""
     # adaptive scan parallelism (catalog.docs_scan_source): the
     # md5-per-5-gram stream is the family's dominant cost and runs on
     # ONE core when the local corpus is a single parquet file —
     # measured 2.6 s → 0.85 s at sf0.1 (OPTIMIZATION_r12.md)
     src = docs_scan_source(spark, sf_dir)
-    return materialize(spark, sf_dir, "sig", _sql_signature("spark", src))
+    return spark.sql(_sql_signature("spark", src)).localCheckpoint()
 
 
-@query(
-    "q62_minhash_signature",
-    oracle=_with_prelude("SELECT * FROM sig", need_sig=True),
-)
+@query("q62_minhash_signature", oracle=oracle_with("SELECT * FROM sig", **_SIG_CTES))
 def q62_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc MinHash signature (k=8) over hashed 5-char shingles.
     Reference analog: none (the reference has no dedup; driver-contract
@@ -278,7 +269,7 @@ def with_row_signature(df: DataFrame) -> DataFrame:
     the set, so this equals the `sig` table's explode + group-by
     signature bit for bit — the stream operators' signature, which
     needs no aggregation state. Texts shorter than 5 chars get NULLs."""
-    h32 = sql_hash32_dialect("substr(text, CAST(i AS INT), 5)", "spark")
+    h32 = sql_hash32("substr(text, CAST(i AS INT), 5)", "spark")
     sh = (
         f"CASE WHEN length(text) >= 5 THEN "
         f"transform(sequence(1, length(text) - 4), i -> {h32}) "
@@ -369,7 +360,7 @@ def _lsh_pairs_body() -> str:
 
 
 def _lsh_pairs_sql() -> str:
-    return _with_prelude(_lsh_pairs_body(), need_sig=True)
+    return oracle_with(_lsh_pairs_body(), **_SIG_CTES)
 
 
 @query("q63_minhash_lsh_pairs", oracle=_lsh_pairs_sql())
@@ -396,7 +387,7 @@ def _simhash_sql(dialect: str, src: str = "documents") -> str:
     WITH toks AS (
       SELECT doc_id, {tok} FROM {src}
     ), th AS (
-      SELECT doc_id, {sql_hash32_dialect("term", dialect)} AS h FROM toks
+      SELECT doc_id, {sql_hash32("term", dialect)} AS h FROM toks
     )
     SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash
     FROM th GROUP BY doc_id
@@ -447,8 +438,8 @@ def _jaccard_body() -> str:
 def _materialize_shingle_sets(
     spark: SparkSession, sf_dir: str, cand: DataFrame
 ) -> DataFrame:
-    """Bind `shingle_sets` = (doc_id, hs array<bigint>, sz) for the docs
-    of the candidate pairs `cand` only — exact-verify cost then scales
+    """Checkpoint (doc_id, hs array<bigint>, sz) for the docs of the
+    candidate pairs `cand` only — exact-verify cost then scales
     with the candidate set, not the corpus; the oracle computes the
     corpus-wide CTE and agrees because the verify joins only touch
     candidate docs' rows either way. Per-invocation (module note). ONE
@@ -459,12 +450,17 @@ def _materialize_shingle_sets(
     commutes with the per-doc explode), so the full corpus's
     md5-per-5-gram stream is not run a second time."""
     ids = cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
-    ids.distinct().createOrReplaceTempView("_cand_ids")
     cand_docs = (
         f"(SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
-        " LEFT SEMI JOIN _cand_ids c ON c.doc_id = d.doc_id)"
+        " LEFT SEMI JOIN cand_ids c ON c.doc_id = d.doc_id)"
     )
-    return materialize(spark, sf_dir, "shingle_sets", _shingle_sets_sql(cand_docs))
+    return sql_with(
+        spark,
+        sf_dir,
+        "SELECT * FROM sets",
+        cand_ids=ids.distinct(),
+        sets=_shingle_sets_sql(cand_docs),
+    )
 
 
 def _shingle_sets_sql(src: str) -> str:
@@ -478,9 +474,7 @@ def _shingle_sets_sql(src: str) -> str:
     )
 
 
-@query(
-    "q65_ngram_jaccard", oracle=_with_prelude(_jaccard_body(), need_sig=True)
-)
+@query("q65_ngram_jaccard", oracle=oracle_with(_jaccard_body(), **_SIG_CTES))
 def q65_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by EXACT 5-gram Jaccard, verified over MinHash-LSH
     candidate pairs (generate candidates cheaply, verify exactly — the
@@ -491,12 +485,10 @@ def q65_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle⋈shingle exchange of the oracle's portable form becomes a
     join of the candidates against one array row per candidate doc
     (measured ~4x faster warm at sf1). Results are identical: sets are
-    distinct, |A∩B| is |A∩B|. The candidate pairs are materialized once:
+    distinct, |A∩B| is |A∩B|. The candidate pairs are checkpointed once:
     the shingle-set build and the verify join both read that checkpoint,
     so the band join runs once per call."""
-    cand = materialize(
-        spark, sf_dir, "lsh_cand", _lsh_candidates(_materialize_sig(spark, sf_dir))
-    )
+    cand = _lsh_candidates(_materialize_sig(spark, sf_dir)).localCheckpoint()
     sets = _materialize_shingle_sets(spark, sf_dir, cand)
 
     def side(s: str) -> DataFrame:
@@ -528,19 +520,8 @@ def _embedding_neardup_sql(dialect: str) -> str:
     # for 64 O(1) terms), so with a 1e-3 margin no pair whose true
     # cosine clears 0.4 can be dropped.
     #
-    # The exact arm is the order-pinned fold of functions/vectors.py,
-    # spelled out here with this oracle's own lambda names.
+    # The exact arm is the order-pinned fold of functions/vectors.py.
     del dialect  # single-dialect oracle; Spark side is DataFrame code
-
-    ddot = (
-        "list_reduce(list_transform(list_zip(ea, eb), "
-        "s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)), "
-        "(a, b) -> a + b)"
-    )
-    dnorm2 = (
-        "list_reduce(list_transform(embedding, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)"
-    )
     return f"""
     WITH cand AS (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -549,11 +530,11 @@ def _embedding_neardup_sql(dialect: str) -> str:
       WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.399
     ),
     norms AS (
-      SELECT vec_id, SQRT(CAST({dnorm2} AS DOUBLE)) AS nrm
+      SELECT vec_id, SQRT({fold_norm2("duckdb", "embedding")}) AS nrm
       FROM embeddings
     ),
     dots AS (
-      SELECT vec_a, vec_b, CAST({ddot} AS DOUBLE) AS dot FROM cand
+      SELECT vec_a, vec_b, {fold_dot("duckdb", "ea", "eb")} AS dot FROM cand
     )
     SELECT d.vec_a, d.vec_b, d.dot / (na.nrm * nb.nrm) AS cos_sim
     FROM dots d
@@ -1142,7 +1123,7 @@ _SUB_K = 8  # tokens per span
 def _substring_dup_oracle() -> str:
     from tf_datapipeline_spark.operators.text import _TOKENS_SQL
 
-    g32 = sql_hash32_dialect(f"array_to_string(t[i:i+{_SUB_K - 1}], ' ')", "duckdb")
+    g32 = sql_hash32(f"array_to_string(t[i:i+{_SUB_K - 1}], ' ')", "duckdb")
     return f"""
     WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents),
     pos AS (
@@ -1196,7 +1177,7 @@ def q69_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "i",
-        F.expr(sql_hash32_dialect("g", "spark")).alias("g32"),
+        F.expr(sql_hash32("g", "spark")).alias("g32"),
     )
     dupg = (
         occ.groupBy("g32")
@@ -1778,45 +1759,33 @@ _KMV_K = 128
 
 
 def _kmv_sketch_sql(dialect: str, src: str = "documents") -> str:
-    """The corpus-proportional part: per-source bottom-k shingle-hash
-    sketch (k x N_sources rows out) over the `src` relation."""
+    """The shared table `sk`, the corpus-proportional part: per-source
+    bottom-k shingle-hash sketch (k x N_sources rows out) over the `src`
+    relation, read by `srcs` and both pair-join arms."""
     if dialect == "spark":
         pos = "explode(sequence(1, length(text) - 4)) AS pos"
     else:
         pos = "unnest(generate_series(1, length(text) - 4)) AS pos"
-    h = sql_hash60_from_md5_dialect("md5s", dialect)
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
-    return f"""sh AS {mat}(
+    h = sql_md5_window("md5s", dialect, width=15)
+    return f"""
+    WITH sh AS (
       SELECT DISTINCT source, {h} AS h
       FROM (
         SELECT source, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
         FROM (SELECT source, text, {pos}
               FROM {src} WHERE length(text) >= 5)
       )
-    ),
-    sk AS {mat}(
-      SELECT source, h FROM (
-        SELECT source, h,
-               ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rk
-        FROM sh
-      ) r WHERE rk <= {_KMV_K}
-    )"""
+    )
+    SELECT source, h FROM (
+      SELECT source, h,
+             ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rk
+      FROM sh
+    ) r WHERE rk <= {_KMV_K}
+    """
 
 
-def _kmv_overlap_sql(dialect: str) -> str:
-    # sk is referenced 3x (srcs + both pair-join arms). DuckDB gets the
-    # MATERIALIZED hint; the Spark side (r11) materializes the k x N
-    # sketch as a localCheckpoint view instead (see q6h below) — plain
-    # CTEs inline in Spark, so the self-contained form re-derived the
-    # corpus-wide shingle explode + md5 stream (the family's dominant
-    # cost) once per reference.
-    if dialect == "spark":
-        sketch = "sk AS (SELECT source, h FROM kmv_sk_mat)"
-    else:
-        sketch = _kmv_sketch_sql(dialect)
-    return f"""
-    WITH {sketch},
-    srcs AS (SELECT DISTINCT source FROM sk),
+_KMV_OVERLAP_BODY = f"""
+    WITH srcs AS (SELECT DISTINCT source FROM sk),
     pairs AS (
       SELECT a.source AS sa, b.source AS sb
       FROM srcs a JOIN srcs b ON a.source < b.source
@@ -1846,15 +1815,16 @@ def _kmv_overlap_sql(dialect: str) -> str:
     """
 
 
-@query("q6h_kmv_source_overlap", oracle=_kmv_overlap_sql("duckdb"))
+@query(
+    "q6h_kmv_source_overlap",
+    oracle=oracle_with(_KMV_OVERLAP_BODY, sk=_kmv_sketch_sql("duckdb")),
+)
 def q6h_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE shingle scan: materialize the k x N_sources sketch (bounded
-    # metadata at any corpus size), then run the pair/merge arithmetic
-    # over it — the Spark twin of the oracle's MATERIALIZED hint.
-    # Adaptive scan parallelism — see _materialize_sig.
-    sk_sql = _kmv_sketch_sql("spark", docs_scan_source(spark, sf_dir))
-    materialize(spark, sf_dir, "kmv_sk_mat", f"WITH {sk_sql} SELECT * FROM sk")
-    return spark.sql(_kmv_overlap_sql("spark"))
+    # ONE shingle scan into the k x N_sources sketch (bounded metadata
+    # at any corpus size); adaptive scan parallelism — see
+    # _materialize_sig.
+    sk = _kmv_sketch_sql("spark", docs_scan_source(spark, sf_dir))
+    return sql_with(spark, sf_dir, _KMV_OVERLAP_BODY, sk=sk)
 
 
 # --------------------------------------------------------------------------
@@ -1878,26 +1848,9 @@ def q6h_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ROW_NUMBER for one max_by pass). Everything is integer-exact.
 # --------------------------------------------------------------------------
 def _canonical_pick_sql(dialect: str) -> str:
-    if dialect == "spark":
-        tok = "explode(split(trim(text), '\\\\s+')) AS term"
-        bit = "shiftright(h, {b}) & 1"
-    else:
-        tok = "unnest(regexp_split_to_array(trim(text), '\\s+')) AS term"
-        bit = "(h >> {b}) & 1"
-    bit_terms = " + ".join(
-        f"(CASE WHEN SUM(CASE WHEN {bit.format(b=b)} = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN {2 ** b} ELSE 0 END)"
-        for b in range(_SIMHASH_BITS)
-    )
     return f"""
-    WITH toks AS (
-      SELECT doc_id, {tok} FROM documents
-    ), th AS (
-      SELECT doc_id, {sql_hash32_dialect("term", dialect)} AS h FROM toks
-    ), sh AS (
-      SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash
-      FROM th GROUP BY doc_id
-    ), grp AS (
+    WITH sh AS ({_simhash_sql(dialect)}),
+    grp AS (
       SELECT d.source, d.n_chars,
              ROW_NUMBER() OVER (PARTITION BY s.simhash
                                 ORDER BY d.n_chars DESC, d.doc_id) AS rk,
@@ -2022,12 +1975,8 @@ def q6j_dup_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CAL_BLOCKS = 64  # sampled blocks of ~32 docs -> <= ~2k docs, ~32k pairs
 
 
-def _cal_pairs_sql(dialect: str) -> str:
-    """CTE chain `nblk .. cal_pairs`: the deterministic bounded pair
-    sample. Split out (r11) so the Spark side can materialize the
-    ≤ ~32k-pair table once — `cal_pairs` is consumed by both the exact-
-    Jaccard arm and the capture-scoring arm, and each reference
-    re-derived the per-doc md5 block keying from a documents scan."""
+def _cal_docs_sql(dialect: str) -> str:
+    """CTE chain `nblk, cal_docs`: the sampled docs and their blocks."""
     str_t = "STRING" if dialect == "spark" else "VARCHAR"
     return f"""nblk AS (
       SELECT GREATEST(CAST(16 AS BIGINT),
@@ -2038,18 +1987,25 @@ def _cal_pairs_sql(dialect: str) -> str:
     cal_docs AS (
       SELECT doc_id, blk FROM (
         SELECT t.doc_id,
-               {sql_hash32_from_md5_dialect("t.md5s", dialect)} % nblk.nb
+               {sql_md5_window("t.md5s", dialect)} % nblk.nb
                  AS blk
         FROM (SELECT doc_id, md5(CAST(doc_id AS {str_t})) AS md5s
               FROM documents WHERE length(text) >= 5) t
         CROSS JOIN nblk
       ) keyed WHERE blk < {_CAL_BLOCKS}
-    ),
-    cal_pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM cal_docs a
-      JOIN cal_docs b ON a.blk = b.blk AND a.doc_id < b.doc_id
     )"""
+
+
+def _cal_pairs_sql(dialect: str) -> str:
+    """The shared table `cal_pairs`: the deterministic bounded pair
+    sample (≤ ~32k pairs), read by both the exact-Jaccard arm and the
+    capture-scoring arm."""
+    return f"""
+    WITH {_cal_docs_sql(dialect)}
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM cal_docs a
+    JOIN cal_docs b ON a.blk = b.blk AND a.doc_id < b.doc_id
+    """
 
 
 def _lsh_calibration_body(dialect: str) -> str:
@@ -2068,15 +2024,10 @@ def _lsh_calibration_body(dialect: str) -> str:
         f" / CAST(10.0 AS DOUBLE))"
     )
     p_band = " * ".join([sm] * _BAND)
-    pairs_chain = (
-        "cal_pairs AS (SELECT doc_a, doc_b FROM q6k_pairs_mat)"
-        if dialect == "spark"
-        else _cal_pairs_sql(dialect)
-    )
     if dialect == "spark":
         # r12 (the q65 set idiom, guide §2.4): per-doc shingle SETS
-        # (unordered collect_set arrays) are already materialized
-        # (cal_sets); |A∩B| is then one codegen array_intersect per pair
+        # (unordered collect_set arrays) are the shared table `cal_sets`;
+        # |A∩B| is then one codegen array_intersect per pair
         # instead of the shingle self-join + two COUNT(*) arms (n_common
         # and sz are the same integers either way: sets are distinct,
         # |A∩B| is |A∩B|). The oracle keeps the portable shingle-join
@@ -2118,8 +2069,7 @@ def _lsh_calibration_body(dialect: str) -> str:
       JOIN sig gb ON gb.doc_id = p.doc_b
     )"""
     return f"""
-    {pairs_chain},
-    {scored}
+    WITH {scored}
     SELECT CAST(j_bucket AS INT) AS j_bucket,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
            CAST(SUM(captured) AS BIGINT) AS n_captured,
@@ -2136,52 +2086,42 @@ def _lsh_calibration_body(dialect: str) -> str:
     """
 
 
-def _materialize_cal_sets(spark: SparkSession, sf_dir: str) -> None:
-    """Bind `cal_sets` = (doc_id, hs array<bigint>, sz) for the SAMPLED
-    calibration docs only (the q65 candidate-restriction + set idiom):
-    exact-Jaccard cost then scales with the fixed-size sample, not the
-    corpus, and ONE collect_set aggregate replaces the r11 chain
-    (distinct -> checkpoint -> downstream COUNT arms). The oracle
-    computes the corpus-wide shingle CTE; results agree because every
-    join is keyed on sampled doc_ids and |A∩B|/|A| are the same
-    integers over sets either way. Per-invocation (see module note);
-    the sample restriction lands BEFORE the shingle explode."""
-    spark.sql(
-        f"WITH {_cal_pairs_sql('spark')} SELECT doc_id FROM cal_docs"
-    ).createOrReplaceTempView("_cal_ids")
+def _cal_sets_sql(spark: SparkSession, sf_dir: str) -> str:
+    """The shared table `cal_sets` = (doc_id, hs array<bigint>, sz) for
+    the SAMPLED calibration docs `cal_ids` only (the q65 candidate-
+    restriction + set idiom): exact-Jaccard cost then scales with the
+    fixed-size sample, not the corpus, and ONE collect_set aggregate
+    replaces the r11 chain (distinct -> checkpoint -> downstream COUNT
+    arms). The oracle computes the corpus-wide shingle CTE; results
+    agree because every join is keyed on sampled doc_ids and |A∩B|/|A|
+    are the same integers over sets either way. The sample restriction
+    lands BEFORE the shingle explode."""
     sampled_docs = (
         f"(SELECT d.* FROM {docs_scan_source(spark, sf_dir)} d"
-        " LEFT SEMI JOIN _cal_ids c ON c.doc_id = d.doc_id)"
+        " LEFT SEMI JOIN cal_ids c ON c.doc_id = d.doc_id)"
     )
-    materialize(spark, sf_dir, "cal_sets", _shingle_sets_sql(sampled_docs))
+    return _shingle_sets_sql(sampled_docs)
 
 
-def _lsh_calibration_sql(dialect: str) -> str:
-    # the body is itself a CTE chain, so it merges into ONE WITH list
-    # (a _with_prelude wrap would nest two WITH keywords)
-    if dialect == "spark":
-        return "WITH " + _lsh_calibration_body("spark")
-    return (
-        f"WITH shingles AS ({_sql_shingles('duckdb')}),\n"
-        f"    sig AS ({_sql_signature()}),\n"
-        + _lsh_calibration_body("duckdb")
-    )
-
-
-@query("q6k_lsh_calibration", oracle=_lsh_calibration_sql("duckdb"))
+@query(
+    "q6k_lsh_calibration",
+    oracle=oracle_with(
+        _lsh_calibration_body("duckdb"),
+        **_SIG_CTES,
+        cal_pairs=_cal_pairs_sql("duckdb"),
+    ),
+)
 def q6k_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical-vs-theoretical LSH capture curve per Jaccard decile over
     a deterministic bounded pair sample — the (bands, rows) tuning
     table. See _lsh_calibration_body for the sampling contract."""
     register_views(spark, sf_dir)
-    _materialize_sig(spark, sf_dir)
-    _materialize_cal_sets(spark, sf_dir)
-    # r11: ONE documents scan for the pair sample (≤ ~32k pairs by the
-    # query text) — both downstream arms read the checkpoint
-    materialize(
+    return sql_with(
         spark,
         sf_dir,
-        "q6k_pairs_mat",
-        f"WITH {_cal_pairs_sql('spark')} SELECT * FROM cal_pairs",
+        _lsh_calibration_body("spark"),
+        sig=_materialize_sig(spark, sf_dir),
+        cal_ids=spark.sql(f"WITH {_cal_docs_sql('spark')} SELECT doc_id FROM cal_docs"),
+        cal_sets=_cal_sets_sql(spark, sf_dir),
+        cal_pairs=_cal_pairs_sql("spark"),
     )
-    return spark.sql(_lsh_calibration_sql("spark"))

@@ -2153,10 +2153,10 @@ def q4zj_entry_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Nothing after the scan is event-cardinality; output is one row.
 # --------------------------------------------------------------------------
 def _ab_uplift_sql(dialect: str) -> str:
-    from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
+    from tf_datapipeline_spark.functions.texthash import sql_hash32
 
     cast_t = "STRING" if dialect == "spark" else "VARCHAR"
-    h = sql_hash32_dialect(f"'ab-' || CAST(user_id AS {cast_t})", dialect)
+    h = sql_hash32(f"'ab-' || CAST(user_id AS {cast_t})", dialect)
     rate = "(CAST({c} AS DOUBLE) / {n})"
     ra = rate.format(c="c_a", n="n_a")
     rb = rate.format(c="c_b", n="n_b")

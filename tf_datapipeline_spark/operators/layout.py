@@ -17,13 +17,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tf_datapipeline_spark.catalog import materialize, register_views
+from tf_datapipeline_spark.catalog import oracle_with, register_views, sql_with
 from tf_datapipeline_spark.functions.texthash import (
     BLOOM_K,
     BLOOM_M,
     BLOOM_WORD,
     sql_bloom_hashes,
-    sql_hash32_dialect,
+    sql_hash32,
     sql_shl1,
 )
 from tf_datapipeline_spark.registry import query
@@ -92,15 +92,6 @@ def _bucketed_sql(dialect: str) -> str:
     """
 
 
-# bucketed is consumed by THREE downstream aggregates (zfiles, lfiles,
-# hits); Spark inlines CTEs, so the CTE form re-derived it — and
-# re-scanned orders — three times (the r5 verdict's q9a plan-audit nit:
-# 3 full scans at 100 TB). q9a/q9o therefore materialize the 16-byte
-# (xb, yb) projection as `bucketed_mat` once per invocation. The DuckDB
-# oracle keeps the self-contained CTE (DuckDB materializes
-# multiply-referenced CTEs on its own).
-
-
 def _probe_pred() -> str:
     return (
         f"xmin <= {_QX[1]} AND xmax >= {_QX[0]} "
@@ -108,17 +99,17 @@ def _probe_pred() -> str:
     )
 
 
-def _zorder_body(dialect: str) -> str:
+def _zorder_body() -> str:
+    """The skip arithmetic over the shared table `bucketed`. Each
+    layout's file count and its probe-box scan figures come from ONE
+    conditional aggregate over that layout's file table (a CASE-filtered
+    COUNT/SUM is value-identical to a filtered aggregate: COUNT skips
+    NULLs, SUM of none is NULL), so Spark runs 3 aggregate arms, not a
+    probe-filtered aggregate plus a scalar COUNT subquery per layout."""
     zspan = 65536 // _N_FILES
     xspan = _GRID // _N_FILES
-    bucketed = (
-        "SELECT xb, yb FROM bucketed_mat"
-        if dialect == "spark"
-        else _bucketed_sql(dialect)
-    )
-    files_ctes = f"""
-    WITH bucketed AS ({bucketed}),
-    zfiles AS (
+    return f"""
+    WITH zfiles AS (
       SELECT CAST(FLOOR({_interleave('xb', 'yb')} / {zspan}.0) AS INT)
                AS file_id,
              MIN(xb) AS xmin, MAX(xb) AS xmax,
@@ -137,18 +128,7 @@ def _zorder_body(dialect: str) -> str:
       SELECT CAST(COUNT(*) AS BIGINT) AS matching_rows FROM bucketed
       WHERE xb BETWEEN {_QX[0]} AND {_QX[1]}
         AND yb BETWEEN {_QY[0]} AND {_QY[1]}
-    )"""
-    if dialect == "spark":
-        # r11: each layout's file count and its probe-box scan figures
-        # come from ONE conditional aggregate over that layout's file
-        # table instead of a probe-filtered aggregate PLUS a scalar
-        # COUNT subquery (Spark re-derives CTE subtrees per consumer:
-        # 5 aggregate arms -> 3, two fewer passes over the file stats;
-        # a CASE-filtered COUNT/SUM is value-identical to the filtered
-        # aggregate — COUNT skips NULLs, SUM of none is NULL). DuckDB
-        # keeps the self-contained multi-CTE form (it materializes
-        # multiply-referenced CTEs on its own).
-        return f"""{files_ctes},
+    ),
     zstat AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_files,
              CAST(COUNT(CASE WHEN {_probe_pred()} THEN 1 END) AS BIGINT)
@@ -174,32 +154,14 @@ def _zorder_body(dialect: str) -> str:
            h.matching_rows
     FROM zstat z, lstat l, hits h
     """
-    return f"""{files_ctes},
-    zscan AS (
-      SELECT COUNT(*) AS files, CAST(SUM(n_rows) AS BIGINT) AS rows_scanned
-      FROM zfiles
-      WHERE {_probe_pred()}
-    ),
-    lscan AS (
-      SELECT COUNT(*) AS files, CAST(SUM(n_rows) AS BIGINT) AS rows_scanned
-      FROM lfiles
-      WHERE {_probe_pred()}
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM zfiles) AS n_files_z,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM lfiles) AS n_files_linear,
-           CAST(z.files AS BIGINT) AS z_files_scanned,
-           z.rows_scanned AS z_rows_scanned,
-           CAST(l.files AS BIGINT) AS linear_files_scanned,
-           l.rows_scanned AS linear_rows_scanned,
-           h.matching_rows
-    FROM zscan z, lscan l, hits h
-    """
 
 
-@query("q9a_zorder_layout", oracle=_zorder_body("duckdb"))
+@query(
+    "q9a_zorder_layout",
+    oracle=oracle_with(_zorder_body(), bucketed=_bucketed_sql("duckdb")),
+)
 def q9a_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "bucketed_mat", _bucketed_sql("spark"))
-    return spark.sql(_zorder_body("spark"))
+    return sql_with(spark, sf_dir, _zorder_body(), bucketed=_bucketed_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -253,16 +215,23 @@ def _hilbert_rounds() -> str:
     return ",".join(ctes)
 
 
-def _hilbert_body(dialect: str) -> str:
+def _hilbert_body() -> str:
+    """The head-to-head over the shared table `bucketed`: ONE
+    conditional aggregate per layout (count + probe-box count/rows +
+    total box area), the q9a device, so Spark runs 3 aggregate arms, not
+    7. The 8 Hilbert rounds are per-row projections and run once."""
     span = _GRID * _GRID // _N_FILES
-    bucketed = (
-        "SELECT xb, yb FROM bucketed_mat"
-        if dialect == "spark"
-        else _bucketed_sql(dialect)
-    )
-    files_ctes = f"""
-    WITH bucketed AS ({bucketed}),
-    h0 AS (
+    stat = f"""
+      SELECT CAST(COUNT(*) AS BIGINT) AS n_files,
+             CAST(COUNT(CASE WHEN {_probe_pred()} THEN 1 END) AS BIGINT)
+               AS files_scanned,
+             CAST(SUM(CASE WHEN {_probe_pred()} THEN n_rows END) AS BIGINT)
+               AS rows_scanned,
+             CAST(SUM((xmax - xmin + 1) * (ymax - ymin + 1)) AS BIGINT)
+               AS total_box_area
+      FROM"""
+    return f"""
+    WITH h0 AS (
       SELECT xb, yb, xb AS x, yb AS y, CAST(0 AS BIGINT) AS d FROM bucketed
     ),
     {_hilbert_rounds()},
@@ -285,24 +254,7 @@ def _hilbert_body(dialect: str) -> str:
       SELECT CAST(COUNT(*) AS BIGINT) AS matching_rows FROM bucketed
       WHERE xb BETWEEN {_QX[0]} AND {_QX[1]}
         AND yb BETWEEN {_QY[0]} AND {_QY[1]}
-    )"""
-    if dialect == "spark":
-        # r11: ONE conditional aggregate per layout (count + probe-box
-        # count/rows + total box area) replaces the probe-filtered scan
-        # CTE + the unfiltered area CTE + the scalar COUNT subquery —
-        # 7 aggregate arms -> 3 (the q9a device; value-identical CASE
-        # aggregation). The 8 Hilbert rounds are per-row projections
-        # and now run exactly once.
-        stat = f"""
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_files,
-             CAST(COUNT(CASE WHEN {_probe_pred()} THEN 1 END) AS BIGINT)
-               AS files_scanned,
-             CAST(SUM(CASE WHEN {_probe_pred()} THEN n_rows END) AS BIGINT)
-               AS rows_scanned,
-             CAST(SUM((xmax - xmin + 1) * (ymax - ymin + 1)) AS BIGINT)
-               AS total_box_area
-      FROM"""
-        return f"""{files_ctes},
+    ),
     hstat AS ({stat} hfiles),
     zstat AS ({stat} zfiles)
     SELECT h.n_files AS n_files_hilbert,
@@ -316,44 +268,14 @@ def _hilbert_body(dialect: str) -> str:
            t.matching_rows
     FROM hstat h, zstat z, hits t
     """
-    return f"""{files_ctes},
-    hscan AS (
-      SELECT COUNT(*) AS files, CAST(SUM(n_rows) AS BIGINT) AS rows_scanned
-      FROM hfiles
-      WHERE {_probe_pred()}
-    ),
-    zscan AS (
-      SELECT COUNT(*) AS files, CAST(SUM(n_rows) AS BIGINT) AS rows_scanned
-      FROM zfiles
-      WHERE {_probe_pred()}
-    ),
-    harea AS (
-      SELECT CAST(SUM((xmax - xmin + 1) * (ymax - ymin + 1)) AS BIGINT)
-               AS total_box_area
-      FROM hfiles
-    ),
-    zarea AS (
-      SELECT CAST(SUM((xmax - xmin + 1) * (ymax - ymin + 1)) AS BIGINT)
-               AS total_box_area
-      FROM zfiles
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM hfiles) AS n_files_hilbert,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM zfiles) AS n_files_z,
-           CAST(h.files AS BIGINT) AS hilbert_files_scanned,
-           h.rows_scanned AS hilbert_rows_scanned,
-           CAST(z.files AS BIGINT) AS z_files_scanned,
-           z.rows_scanned AS z_rows_scanned,
-           ha.total_box_area AS hilbert_box_area,
-           za.total_box_area AS z_box_area,
-           t.matching_rows
-    FROM hscan h, zscan z, harea ha, zarea za, hits t
-    """
 
 
-@query("q9o_hilbert_layout", oracle=_hilbert_body("duckdb"))
+@query(
+    "q9o_hilbert_layout",
+    oracle=oracle_with(_hilbert_body(), bucketed=_bucketed_sql("duckdb")),
+)
 def q9o_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "bucketed_mat", _bucketed_sql("spark"))
-    return spark.sql(_hilbert_body("spark"))
+    return sql_with(spark, sf_dir, _hilbert_body(), bucketed=_bucketed_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -530,7 +452,7 @@ _RP_TARGET = 4096  # expected sample rows, corpus-size-independent
 def _range_partition_body(dialect: str) -> str:
     b = _RP_BUCKETS
     ctype = "STRING" if dialect == "spark" else "VARCHAR"
-    h = sql_hash32_dialect(f"'rp-' || CAST(o_orderkey AS {ctype})", dialect)
+    h = sql_hash32(f"'rp-' || CAST(o_orderkey AS {ctype})", dialect)
     if dialect == "spark":
         idx = f"SELECT explode(sequence(1, {b - 1})) AS i"
         arr = "array_sort(collect_list(val))"
@@ -596,9 +518,8 @@ def q9d_range_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partition-local work under hour-partitioned storage. The direct
 # sketch and the exact quantiles are the CERTIFICATION arms only (they
 # rescan events; a production rollup would not run them), which is why
-# the narrow (day, hr, hash, id, value) projection is materialized once
-# per invocation — the q9a pattern — instead of being re-derived per
-# consumer under Spark CTE inlining. Quantile ranks use integer-exact
+# the narrow (day, hr, hash, id, value) projection is the shared table
+# `base`, read by all of them. Quantile ranks use integer-exact
 # ceil arithmetic (FLOOR((kk+1)/2.0), FLOOR((9kk+9)/10.0)) so neither
 # engine's decimal-vs-double literal typing can shift a rank boundary.
 # --------------------------------------------------------------------------
@@ -607,7 +528,7 @@ _KMV_K = 32  # bottom-k sketch size; quantile error ~ 1/sqrt(k)
 
 def _kmv_base_sql(dialect: str) -> str:
     ctype = "STRING" if dialect == "spark" else "VARCHAR"
-    h = sql_hash32_dialect(f"'kmv-' || CAST(event_id AS {ctype})", dialect)
+    h = sql_hash32(f"'kmv-' || CAST(event_id AS {ctype})", dialect)
     return f"""
       SELECT CAST(ts AS DATE) AS day, date_trunc('hour', ts) AS hr,
              value AS v, event_id AS ek, {h} AS hv
@@ -620,16 +541,13 @@ def _kmv_rollup_body(dialect: str) -> str:
     ctype = "STRING" if dialect == "spark" else "VARCHAR"
     elem = f"CAST(hv AS {ctype}) || ':' || CAST(ek AS {ctype})"
     if dialect == "spark":
-        base = "SELECT * FROM kmv_base_mat"
         fp = f"md5(concat_ws(',', array_sort(collect_list({elem}))))"
     else:
-        base = _kmv_base_sql(dialect)
         fp = f"md5(array_to_string(list_sort(list({elem})), ','))"
     p50 = "CAST(FLOOR((kk + 1) / 2.0) AS BIGINT)"
     p90 = "CAST(FLOOR((9 * kk + 9) / 10.0) AS BIGINT)"
     return f"""
-    WITH base AS ({base}),
-    hourly AS (
+    WITH hourly AS (
       SELECT day, hv, ek, v,
              ROW_NUMBER() OVER (PARTITION BY day, hr ORDER BY hv, ek) AS rn
       FROM base
@@ -684,10 +602,14 @@ def _kmv_rollup_body(dialect: str) -> str:
     """
 
 
-@query("q9e_kmv_quantile_rollup", oracle=_kmv_rollup_body("duckdb"))
+@query(
+    "q9e_kmv_quantile_rollup",
+    oracle=oracle_with(_kmv_rollup_body("duckdb"), base=_kmv_base_sql("duckdb")),
+)
 def q9e_kmv_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "kmv_base_mat", _kmv_base_sql("spark"))
-    return spark.sql(_kmv_rollup_body("spark"))
+    return sql_with(
+        spark, sf_dir, _kmv_rollup_body("spark"), base=_kmv_base_sql("spark")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -859,24 +781,9 @@ _DV_POSPL_SQL = f"""
     """
 
 
-def _dv_pospl_cte(dialect: str) -> str:
-    """The pospl CTE body. Spark reads the per-invocation view
-    `dv_pospl_mat` built from _DV_POSPL_SQL (one scan + one shuffle,
-    reused by every CTE reference — the dims_mat pattern); DuckDB keeps
-    the inline CTE."""
-    if dialect == "spark":
-        return "SELECT file_id, pos, o_orderkey, o_custkey, o_orderstatus FROM dv_pospl_mat"
-    return _DV_POSPL_SQL
-
-
-def _dv_body(dialect: str) -> str:
-    # pospl is referenced 3x (two DELETE scans + the flagged join):
-    # MATERIALIZED in DuckDB so the window pass runs once (plain CTEs
-    # inline per reference); Spark reads the per-invocation view
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
-    return f"""
-    WITH pospl AS {mat}({_dv_pospl_cte(dialect)}),
-    dv1 AS (
+# The two DELETE commits' positions over the shared table `pospl`,
+# which q9g's flagged join and q9k's manifest read again.
+_DV_CTES = """dv1 AS (
       SELECT file_id, pos FROM pospl
       WHERE o_orderstatus = 'F' AND o_custkey % 7 = 0
     ),
@@ -886,7 +793,10 @@ def _dv_body(dialect: str) -> str:
     dv AS (
       SELECT DISTINCT file_id, pos
       FROM (SELECT * FROM dv1 UNION ALL SELECT * FROM dv2) u
-    ),
+    )"""
+
+_DV_BODY = f"""
+    WITH {_DV_CTES},
     flagged AS (
       SELECT p.file_id, p.o_orderkey,
              CASE WHEN d.pos IS NOT NULL THEN 1 ELSE 0 END AS del
@@ -904,10 +814,9 @@ def _dv_body(dialect: str) -> str:
     """
 
 
-@query("q9g_deletion_vectors", oracle=_dv_body("duckdb"))
+@query("q9g_deletion_vectors", oracle=oracle_with(_DV_BODY, pospl=_DV_POSPL_SQL))
 def q9g_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dv_pospl_mat", _DV_POSPL_SQL)
-    return spark.sql(_dv_body("spark"))
+    return sql_with(spark, sf_dir, _DV_BODY, pospl=_DV_POSPL_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1224,21 +1133,8 @@ def q9j_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VACUUM_RETENTION_COMMIT = 5
 
 
-def _vacuum_body(dialect: str) -> str:
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
-    return f"""
-    WITH pospl AS {mat}({_dv_pospl_cte(dialect)}),
-    dv1 AS (
-      SELECT file_id, pos FROM pospl
-      WHERE o_orderstatus = 'F' AND o_custkey % 7 = 0
-    ),
-    dv2 AS (
-      SELECT file_id, pos FROM pospl WHERE o_orderkey % 13 = 3
-    ),
-    dv AS (
-      SELECT DISTINCT file_id, pos
-      FROM (SELECT * FROM dv1 UNION ALL SELECT * FROM dv2) u
-    ),
+_VACUUM_BODY = f"""
+    WITH {_DV_CTES},
     manifest AS (
       SELECT p.file_id,
              CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -1268,10 +1164,9 @@ def _vacuum_body(dialect: str) -> str:
     """
 
 
-@query("q9k_vacuum_plan", oracle=_vacuum_body("duckdb"))
+@query("q9k_vacuum_plan", oracle=oracle_with(_VACUUM_BODY, pospl=_DV_POSPL_SQL))
 def q9k_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dv_pospl_mat", _DV_POSPL_SQL)
-    return spark.sql(_vacuum_body("spark"))
+    return sql_with(spark, sf_dir, _VACUUM_BODY, pospl=_DV_POSPL_SQL)
 
 
 # --------------------------------------------------------------------------

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from tf_datapipeline_spark.catalog import load_table
 from tf_datapipeline_spark.functions.dicts import dense_id_dict
 from tf_datapipeline_spark.registry import query
-from tf_datapipeline_spark.functions.texthash import sql_hash32, sql_hash32_dialect
+from tf_datapipeline_spark.functions.texthash import sql_hash32
 
 # Knuth's multiplicative constant (2^32 / phi); modulus 2^32.
 _SHUFFLE_MULT = 2654435761
@@ -694,7 +694,7 @@ def q3c_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.expr(
-            sql_hash32_dialect("'strat-' || CAST(doc_id AS STRING)", "spark")
+            sql_hash32("'strat-' || CAST(doc_id AS STRING)", "spark")
         )
         % 100
     )
@@ -740,7 +740,7 @@ _RESERVOIR_K = 8
 )
 def q3d_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    hk = F.expr(sql_hash32_dialect("'resv-' || CAST(doc_id AS STRING)", "spark"))
+    hk = F.expr(sql_hash32("'resv-' || CAST(doc_id AS STRING)", "spark"))
     w = Window.partitionBy("lang").orderBy(F.col("hk").asc(), F.col("doc_id").asc())
     return (
         docs.select("doc_id", "lang", "n_chars", hk.alias("hk"))
@@ -826,10 +826,8 @@ _IMP_TARGET = "CAST(0.2 AS DOUBLE)"  # sampled fraction of documents
 
 
 def _importance_sample_sql(dialect: str) -> str:
-    from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
-
     cast_t = "STRING" if dialect == "spark" else "VARCHAR"
-    h = sql_hash32_dialect(f"'imp-' || CAST(doc_id AS {cast_t})", dialect)
+    h = sql_hash32(f"'imp-' || CAST(doc_id AS {cast_t})", dialect)
     p = (
         f"LEAST(CAST(1 AS DOUBLE), CAST(n_chars AS DOUBLE)"
         f" * ({_IMP_TARGET} * n_total) / chars_total)"

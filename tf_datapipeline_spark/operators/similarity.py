@@ -19,7 +19,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tf_datapipeline_spark.catalog import load_table, materialize, register_views
+from tf_datapipeline_spark.catalog import (
+    load_table,
+    oracle_with,
+    register_views,
+    sql_with,
+)
 from tf_datapipeline_spark.functions import vectors as V
 from tf_datapipeline_spark.functions.texthash import sql_bxor, sql_shl1
 from tf_datapipeline_spark.functions.vectors import fold_dot, fold_l2, fold_norm2
@@ -51,17 +56,6 @@ def _dims_sql(dialect: str) -> str:
       SELECT vec_id, CAST({x} AS DOUBLE) AS x, pos
       FROM (SELECT vec_id, embedding, {pos} AS pos FROM embeddings)
     """
-
-
-def _dims_cte(dialect: str) -> str:
-    if dialect == "spark":
-        # Spark inlines CTEs, so a `dims` CTE referenced N times would
-        # re-explode (and re-scan) the corpus N times — q76's plan showed
-        # 8 parquet scans before this. Spark callers therefore
-        # materialize _dims_sql once per invocation as `dims_mat` and
-        # read that; the DuckDB oracle keeps the self-contained CTE.
-        return "SELECT vec_id, x, pos FROM dims_mat"
-    return _dims_sql(dialect)
 
 
 def _knn_sql(dialect: str) -> str:
@@ -221,8 +215,7 @@ def _centroid_sql(dialect: str) -> str:
     # engines. Quantization error ≤ 2^-36 per element, deterministic.
     q = "CAST(FLOOR(x * 68719476736.0) AS BIGINT)"
     return f"""
-    WITH dims AS ({_dims_cte(dialect)}),
-    labeled AS (
+    WITH labeled AS (
       SELECT e.label, d.pos, d.x
       FROM dims d JOIN embeddings e ON e.vec_id = d.vec_id
     )
@@ -233,13 +226,15 @@ def _centroid_sql(dialect: str) -> str:
     """
 
 
-@query("q72_label_centroids", oracle=_centroid_sql("duckdb"))
+@query(
+    "q72_label_centroids",
+    oracle=oracle_with(_centroid_sql("duckdb"), dims=_dims_sql("duckdb")),
+)
 def q72_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid, one row per (label, dimension) — the A3-style
     'running averages' reduction (reference train.py:52-53) applied to
     vectors. Exact integer sums → deterministic at any parallelism."""
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
-    return spark.sql(_centroid_sql("spark"))
+    return sql_with(spark, sf_dir, _centroid_sql("spark"), dims=_dims_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -371,8 +366,7 @@ def _kmeans_step_sql(dialect: str) -> str:
     cells = seed_values_sql(_N_CELLS)
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
-    WITH dims AS ({_dims_cte(dialect)}),
-    cells(cell, cvec_id) AS (VALUES {cells}),
+    WITH cells(cell, cvec_id) AS (VALUES {cells}),
     cente AS (
       SELECT c.cell, e.embedding AS cemb
       FROM cells c JOIN embeddings e ON e.vec_id = c.cvec_id
@@ -399,10 +393,12 @@ def _kmeans_step_sql(dialect: str) -> str:
     """
 
 
-@query("q74_kmeans_step", oracle=_kmeans_step_sql("duckdb"))
+@query(
+    "q74_kmeans_step",
+    oracle=oracle_with(_kmeans_step_sql("duckdb"), dims=_dims_sql("duckdb")),
+)
 def q74_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
-    return spark.sql(_kmeans_step_sql("spark"))
+    return sql_with(spark, sf_dir, _kmeans_step_sql("spark"), dims=_dims_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -481,7 +477,7 @@ def _pq_encode_sql(dialect: str) -> str:
 
 @query("q75_pq_encode", oracle=_pq_encode_sql("duckdb"))
 def q75_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
+    register_views(spark, sf_dir)
     return spark.sql(_pq_encode_sql("spark"))
 
 
@@ -562,7 +558,7 @@ def _pq_ann_sql(dialect: str) -> str:
 
 @query("q76_pq_ann", oracle=_pq_ann_sql("duckdb"))
 def q76_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
+    register_views(spark, sf_dir)
     return spark.sql(_pq_ann_sql("spark"))
 
 
@@ -877,8 +873,7 @@ def _sq_encode_sql(dialect: str) -> str:
     else:
         digest = "md5(string_agg(CAST(code AS VARCHAR), ',' ORDER BY pos))"
     return f"""
-    WITH dims AS ({_dims_cte(dialect)}),
-    rng AS (
+    WITH rng AS (
       SELECT pos, MIN(x) AS mn, MAX(x) AS mx FROM dims GROUP BY 1
     ),
     codes AS (
@@ -905,10 +900,12 @@ def _sq_encode_sql(dialect: str) -> str:
     """
 
 
-@query("q78_sq_encode", oracle=_sq_encode_sql("duckdb"))
+@query(
+    "q78_sq_encode",
+    oracle=oracle_with(_sq_encode_sql("duckdb"), dims=_dims_sql("duckdb")),
+)
 def q78_sq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
-    return spark.sql(_sq_encode_sql("spark"))
+    return sql_with(spark, sf_dir, _sq_encode_sql("spark"), dims=_dims_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -1229,7 +1226,7 @@ def _binary_hamming_sql(dialect: str) -> str:
                       THEN {sql_shl1("pos - 1", dialect)} ELSE 0 END) AS w0,
              SUM(CASE WHEN pos > 32 AND x >= 0
                       THEN {sql_shl1("pos - 33", dialect)} ELSE 0 END) AS w1
-      FROM ({_dims_cte(dialect)}) d
+      FROM dims d
       GROUP BY vec_id
     ),
     scored AS (
@@ -1251,10 +1248,14 @@ def _binary_hamming_sql(dialect: str) -> str:
     """
 
 
-@query("q7e_binary_hamming", oracle=_binary_hamming_sql("duckdb"))
+@query(
+    "q7e_binary_hamming",
+    oracle=oracle_with(_binary_hamming_sql("duckdb"), dims=_dims_sql("duckdb")),
+)
 def q7e_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
-    return spark.sql(_binary_hamming_sql("spark"))
+    return sql_with(
+        spark, sf_dir, _binary_hamming_sql("spark"), dims=_dims_sql("spark")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1586,7 +1587,7 @@ def _recall_eval_sql(dialect: str) -> str:
                       THEN {sql_shl1("pos - 1", dialect)} ELSE 0 END) AS w0,
              SUM(CASE WHEN pos > 32 AND x >= 0
                       THEN {sql_shl1("pos - 33", dialect)} ELSE 0 END) AS w1
-      FROM ({_dims_cte(dialect)}) d
+      FROM dims d
       GROUP BY vec_id
     ),
     ham AS (
@@ -1643,10 +1644,12 @@ def _recall_eval_sql(dialect: str) -> str:
     """
 
 
-@query("q7i_recall_eval", oracle=_recall_eval_sql("duckdb"))
+@query(
+    "q7i_recall_eval",
+    oracle=oracle_with(_recall_eval_sql("duckdb"), dims=_dims_sql("duckdb")),
+)
 def q7i_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
-    return spark.sql(_recall_eval_sql("spark"))
+    return sql_with(spark, sf_dir, _recall_eval_sql("spark"), dims=_dims_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -1671,7 +1674,7 @@ def q7i_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from either half has no centroid to compare and is deliberately
 # absent from the output (not silently zeroed).
 #
-# Scale (100 TB): ONE explode scan (shared via dims_mat) into a
+# Scale (100 TB): ONE explode scan (the shared `dims` table) into a
 # partial-aggregated (label, dim, half) sum — the shuffle carries
 # labels x 64 x 2 metadata rows, not vectors; everything downstream is
 # per-label arithmetic on ~128-element lists. No windows, no collects.
@@ -1689,8 +1692,7 @@ def _centroid_drift_sql(dialect: str) -> str:
             return f"list_reduce(list({expr} ORDER BY pos), (acc, t) -> acc + t)"
 
     return f"""
-    WITH dims AS ({_dims_cte(dialect)}),
-    halves AS (
+    WITH halves AS (
       SELECT e.label, d.pos, CAST(d.vec_id % 2 AS INT) AS half,
              CAST(FLOOR(d.x * 68719476736.0) AS BIGINT) AS q
       FROM dims d JOIN embeddings e ON e.vec_id = d.vec_id
@@ -1717,10 +1719,14 @@ def _centroid_drift_sql(dialect: str) -> str:
     """
 
 
-@query("q7j_centroid_drift", oracle=_centroid_drift_sql("duckdb"))
+@query(
+    "q7j_centroid_drift",
+    oracle=oracle_with(_centroid_drift_sql("duckdb"), dims=_dims_sql("duckdb")),
+)
 def q7j_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
-    return spark.sql(_centroid_drift_sql("spark"))
+    return sql_with(
+        spark, sf_dir, _centroid_drift_sql("spark"), dims=_dims_sql("spark")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1747,14 +1753,7 @@ def q7j_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _cell_balance_oracle() -> str:
     cells = seed_values_sql(_N_CELLS)
-    d2 = (
-        "list_reduce("
-        "list_transform("
-        "list_transform(list_zip(v.embedding, c.cemb), "
-        "s -> CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE)), "
-        "d -> d * d), "
-        "(a, b) -> a + b)"
-    )
+    d2 = fold_l2("duckdb", "v.embedding", "c.cemb")
     return f"""
     WITH cw(cell, cwvec_id) AS (VALUES {cells}),
     cwe AS (
@@ -2289,19 +2288,16 @@ def q7n_farthest_first_init(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PROBE_LEVELS = (1, 2, 4, 8, 16)
 
 
-def _ivf_probe_prelude(dialect: str) -> str:
-    """CTE chain `cells .. scored` — the corpus-proportional part of the
-    probe curve (assignment + query cell ranking + ONE shared rescore).
-    Split out so the Spark side can materialize `scored` once (r11):
-    plain CTEs inline in Spark, and `scored` is consumed by BOTH the
-    per-level top-k window and the per-level candidate counts, so the
-    self-contained form re-derived the assignment + rescore joins per
-    consumer. DuckDB keeps the one-statement form (it materializes
-    multiply-referenced CTEs on its own)."""
+def _ivf_scored_sql(dialect: str) -> str:
+    """The shared table `scored` (query_id, vec_id, prank, cos): the
+    corpus-proportional part of the probe curve (assignment + query
+    cell ranking + ONE rescore), read by both the per-level top-k
+    window and the per-level candidate counts."""
     cells = seed_values_sql(_N_CELLS)
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     qhint = "/*+ BROADCAST(qc) */ " if dialect == "spark" else ""
-    return f"""cells(cell, cvec_id) AS (VALUES {cells}),
+    return f"""
+    WITH cells(cell, cvec_id) AS (VALUES {cells}),
     cente AS (
       SELECT c.cell, e.embedding AS cemb
       FROM cells c JOIN embeddings e ON e.vec_id = c.cvec_id
@@ -2330,23 +2326,27 @@ def _ivf_probe_prelude(dialect: str) -> str:
         FROM embeddings q CROSS JOIN cente c
         WHERE q.vec_id < {_N_QUERIES}
       ) r
-    ),
-    scored AS (
-      SELECT {qhint}qc.query_id, a.vec_id, qc.prank,
-             {fold_dot(dialect, "vn.embedding", "qn.embedding")}
-               / (qn.n * vn.n) AS cos
-      FROM qcells qc
-      JOIN assign a ON a.cell = qc.cell
-      JOIN nrm vn ON vn.vec_id = a.vec_id
-      JOIN nrm qn ON qn.vec_id = qc.query_id
-    )"""
+    )
+    SELECT {qhint}qc.query_id, a.vec_id, qc.prank,
+           {fold_dot(dialect, "vn.embedding", "qn.embedding")}
+             / (qn.n * vn.n) AS cos
+    FROM qcells qc
+    JOIN assign a ON a.cell = qc.cell
+    JOIN nrm vn ON vn.vec_id = a.vec_id
+    JOIN nrm qn ON qn.vec_id = qc.query_id
+    """
 
 
-def _ivf_probe_tail(dialect: str) -> str:
-    """CTE chain `levels, found .. cands` + the final SELECT — consumes
-    `scored` and `nrm` declared upstream."""
+def _ivf_probe_body(dialect: str) -> str:
+    """The probe curve over the shared table `scored`."""
     levels = ", ".join(f"({p})" for p in _PROBE_LEVELS)
-    return f"""levels(p) AS (VALUES {levels}),
+    return f"""
+    WITH nrm AS (
+      SELECT vec_id, embedding,
+             SQRT({fold_norm2(dialect, "embedding")}) AS n
+      FROM embeddings
+    ),
+    levels(p) AS (VALUES {levels}),
     found AS (
       SELECT p, query_id, vec_id FROM (
         SELECT l.p, s.query_id, s.vec_id,
@@ -2390,35 +2390,13 @@ def _ivf_probe_tail(dialect: str) -> str:
     """
 
 
-def _ivf_probe_sql(dialect: str) -> str:
-    """Self-contained single statement (the oracle form)."""
-    return f"""
-    WITH {_ivf_probe_prelude(dialect)},
-    {_ivf_probe_tail(dialect)}"""
-
-
-@query("q7o_ivf_probe_curve", oracle=_ivf_probe_sql("duckdb"))
+@query(
+    "q7o_ivf_probe_curve",
+    oracle=oracle_with(_ivf_probe_body("duckdb"), scored=_ivf_scored_sql("duckdb")),
+)
 def q7o_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11: materialize `scored` once (queries x probed-candidate
-    # metadata — bounded by the fixed query set at any corpus size);
-    # the per-level top-k window, the candidate counts and the hits
-    # join then all read the checkpoint instead of re-deriving the
-    # assignment + rescore joins (plain CTEs inline in Spark).
-    materialize(
-        spark,
-        sf_dir,
-        "q7o_scored_mat",
-        f"WITH {_ivf_probe_prelude('spark')} SELECT * FROM scored",
-    )
-    return spark.sql(
-        f"""
-    WITH scored AS (SELECT query_id, vec_id, prank, cos FROM q7o_scored_mat),
-    nrm AS (
-      SELECT vec_id, embedding,
-             SQRT({fold_norm2("spark", "embedding")}) AS n
-      FROM embeddings
-    ),
-    {_ivf_probe_tail("spark")}"""
+    return sql_with(
+        spark, sf_dir, _ivf_probe_body("spark"), scored=_ivf_scored_sql("spark")
     )
 
 
@@ -2492,26 +2470,27 @@ def _index_build_oracle() -> str:
             for k in range(1, _FF_K)
         ]
     )
-    return f"""
-    WITH dims AS ({_dims_cte(d)}),
-    {chain},
+    return oracle_with(
+        f"""
+    WITH {chain},
     seeds AS (
       {seed_rows}
     ),
     {_index_build_tail(d)}
-    """
+    """,
+        dims=_dims_sql(d),
+    )
 
 
 @query("qt6_index_build", oracle=_index_build_oracle())
 def qt6_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    materialize(spark, sf_dir, "dims_mat", _dims_sql("spark"))
     picks = _farthest_first_picks(spark, sf_dir)
     seeds = ", ".join(f"({rnd}, {vid})" for rnd, vid, _ in picks)
-    return spark.sql(f"""
-    WITH dims AS ({_dims_cte("spark")}),
-    seeds(cell, svec) AS (VALUES {seeds}),
+    body = f"""
+    WITH seeds(cell, svec) AS (VALUES {seeds}),
     {_index_build_tail("spark")}
-    """)
+    """
+    return sql_with(spark, sf_dir, body, dims=_dims_sql("spark"))
 
 
 # --------------------------------------------------------------------------

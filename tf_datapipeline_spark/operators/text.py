@@ -17,13 +17,13 @@ from pyspark.sql import functions as F
 from tf_datapipeline_spark.catalog import (
     docs_scan_source,
     load_table,
-    materialize,
+    oracle_with,
     register_views,
+    sql_with,
 )
 from tf_datapipeline_spark.functions.texthash import (
     sql_hash32,
-    sql_hash32_dialect,
-    sql_hash60_from_md5_dialect,
+    sql_md5_window,
 )
 from tf_datapipeline_spark.registry import query
 
@@ -1179,7 +1179,7 @@ def q5h_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.sql(f"SELECT * FROM {docs_scan_source(spark, sf_dir)}").filter(
         F.length("text") >= _WIN_K + _WIN_W - 1
     )
-    h = sql_hash32_dialect(f"substr(text, CAST(i AS INT), {_WIN_K})", "spark")
+    h = sql_hash32(f"substr(text, CAST(i AS INT), {_WIN_K})", "spark")
     hashed = docs.select(
         "doc_id",
         F.expr(
@@ -1710,9 +1710,7 @@ _DSIR_SCALE = 1_000_000
 
 
 def _dsir_body(dialect: str) -> str:
-    from tf_datapipeline_spark.functions.texthash import sql_hash32_dialect
-
-    h = sql_hash32_dialect("'dsir-' || tok", dialect)
+    h = sql_hash32("'dsir-' || tok", dialect)
     if dialect == "spark":
         toks = "SELECT doc_id, lang, explode(split(text, ' ')) AS tok FROM documents"
         spine = f"SELECT explode(sequence(0, {_DSIR_B - 1})) AS bucket"
@@ -1794,7 +1792,7 @@ def q5o_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _novelty_oracle() -> str:
-    gh = sql_hash60_from_md5_dialect("m", "duckdb")
+    gh = sql_md5_window("m", "duckdb", width=15)
     return f"""
     WITH pos AS (
       SELECT doc_id, t,
@@ -1834,7 +1832,7 @@ def q5p_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.expr(
-                sql_hash60_from_md5_dialect("md5(g)", "spark")
+                sql_md5_window("md5(g)", "spark", width=15)
             ).alias("gh"),
         )
     )
@@ -2318,12 +2316,12 @@ _CLF_BUCKETS = 4096
 def _clf_weight_sql(dialect: str) -> str:
     """w[b] for a bucket column `b`: deterministic stand-in weights."""
     s = "CAST(b AS STRING)" if dialect == "spark" else "CAST(b AS VARCHAR)"
-    h = sql_hash32_dialect(f"concat('w|', {s})", dialect)
+    h = sql_hash32(f"concat('w|', {s})", dialect)
     return f"CAST({h} % 2001 - 1000 AS BIGINT)"
 
 
 def _clf_oracle() -> str:
-    tok_h = sql_hash32_dialect("tok", "duckdb")
+    tok_h = sql_hash32("tok", "duckdb")
     return f"""
     WITH weights AS (
       SELECT CAST(b AS BIGINT) AS bucket, {_clf_weight_sql("duckdb")} AS w
@@ -2353,7 +2351,7 @@ def q5u_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.expr(
-                f"{sql_hash32_dialect('tok', 'spark')} % {_CLF_BUCKETS}"
+                f"{sql_hash32('tok', 'spark')} % {_CLF_BUCKETS}"
             ).alias("bucket"),
         )
     )
@@ -2406,14 +2404,16 @@ _DRIFT_BAND_W = 64.0
 _DRIFT_Q = 68719476736.0  # 2^36, the shared quantization device
 
 
-_Q5W_CELLT = f"""cellt AS (
+# the shared (source, band) contingency table `cellt`, read by the row,
+# column and total marginals and the grid join
+_Q5W_CELLT = f"""
       SELECT source, CAST(FLOOR(n_chars / {_DRIFT_BAND_W}) AS BIGINT) AS band,
              CAST(COUNT(*) AS BIGINT) AS o
       FROM documents GROUP BY 1, 2
-    )"""
+    """
 
-_Q5W_TAIL = f"""
-    rowt AS (SELECT source, CAST(SUM(o) AS BIGINT) AS r FROM cellt GROUP BY 1),
+_Q5W_BODY = f"""
+    WITH rowt AS (SELECT source, CAST(SUM(o) AS BIGINT) AS r FROM cellt GROUP BY 1),
     colt AS (SELECT band, CAST(SUM(o) AS BIGINT) AS c FROM cellt GROUP BY 1),
     nt AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cellt),
     grid AS (
@@ -2439,22 +2439,9 @@ _Q5W_TAIL = f"""
     FROM contrib GROUP BY 1
 """
 
-_Q5W_SQL = f"WITH {_Q5W_CELLT},{_Q5W_TAIL}"
-
-
-@query("q5w_chi2_drift", oracle=_Q5W_SQL)
+@query("q5w_chi2_drift", oracle=oracle_with(_Q5W_BODY, cellt=_Q5W_CELLT))
 def q5w_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11: the (source, band) contingency table is consumed by the row/
-    # column/total marginals AND the grid join — materialize the
-    # metadata-sized table once (ONE documents scan instead of four;
-    # plain CTEs inline in Spark). Oracle unchanged; parity-verified.
-    materialize(
-        spark, sf_dir, "q5w_cellt_mat", f"WITH {_Q5W_CELLT} SELECT * FROM cellt"
-    )
-    return spark.sql(
-        f"WITH cellt AS (SELECT source, band, o FROM q5w_cellt_mat),"
-        f"{_Q5W_TAIL}"
-    )
+    return sql_with(spark, sf_dir, _Q5W_BODY, cellt=_Q5W_CELLT)
 
 
 # --------------------------------------------------------------------------

@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tf_datapipeline_spark.catalog import load_table
-from tf_datapipeline_spark.functions.exact import dsum
+from tf_datapipeline_spark.catalog import load_table, oracle_with, sql_with
+from tf_datapipeline_spark.functions.exact import sql_dsum
 from tf_datapipeline_spark.registry import query
 
 
@@ -533,9 +533,8 @@ def q29_cumulative_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Every addend is therefore unambiguous under decimal cast, and dsum
 # makes the fold order-independent.
 # --------------------------------------------------------------------------
-def _digest_sql_q21(src: str) -> str:
-    from tf_datapipeline_spark.functions.exact import sql_dsum
-
+def _digest_sql_q21() -> str:
+    """The digest of the shared table `src`, q21's output."""
     return f"""
     SELECT l_orderkey % 4096 AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -544,14 +543,13 @@ def _digest_sql_q21(src: str) -> str:
              AS key_mix,
            {sql_dsum("running_qty", 4)} AS d_running,
            {sql_dsum("trailing3_avg_qty * 3.0", 6)} AS d_trailing3x
-    FROM {src}
+    FROM src
     GROUP BY 1
     """
 
 
-def _digest_sql_q25(src: str) -> str:
-    from tf_datapipeline_spark.functions.exact import sql_dsum
-
+def _digest_sql_q25() -> str:
+    """The digest of the shared table `src`, q25's output."""
     return f"""
     SELECT o_custkey % 4096 AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -561,14 +559,13 @@ def _digest_sql_q25(src: str) -> str:
            {sql_dsum("COALESCE(prev_price, 0.0) * 100", 2)} AS d_prev_cents,
            {sql_dsum("COALESCE(next_price, 0.0) * 100", 2)} AS d_next_cents,
            {sql_dsum("delta_prev * 100", 2)} AS d_delta_cents
-    FROM {src}
+    FROM src
     GROUP BY 1
     """
 
 
-def _digest_sql_q28(src: str) -> str:
-    from tf_datapipeline_spark.functions.exact import sql_dsum
-
+def _digest_sql_q28() -> str:
+    """The digest of the shared table `src`, q28's output."""
     return f"""
     SELECT c_mktsegment,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -577,7 +574,7 @@ def _digest_sql_q28(src: str) -> str:
            {sql_dsum("pct_rank * (cnt - 1)", 4)} AS d_rank_sum,
            {sql_dsum("cum_dist * cnt", 4)} AS d_peer_sum
     FROM (SELECT *, COUNT(*) OVER (PARTITION BY c_mktsegment) AS cnt
-          FROM {src}) ranked
+          FROM src) ranked
     GROUP BY 1
     """
 
@@ -590,31 +587,29 @@ def _oracle_of(name: str) -> str:
 
 @query(
     "q2a_window_digest_running",
-    oracle=_digest_sql_q21(f"({_oracle_of('q21_window_running')}) src"),
+    oracle=oracle_with(_digest_sql_q21(), src=_oracle_of("q21_window_running")),
 )
 def q2a_window_digest_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q21_window_running(spark, sf_dir).createOrReplaceTempView("q21_digest_src")
-    return spark.sql(_digest_sql_q21("q21_digest_src"))
+    src = q21_window_running(spark, sf_dir)
+    return sql_with(spark, sf_dir, _digest_sql_q21(), src=src)
 
 
 @query(
     "q2b_window_digest_lag",
-    oracle=_digest_sql_q25(f"({_oracle_of('q25_lag_lead')}) src"),
+    oracle=oracle_with(_digest_sql_q25(), src=_oracle_of("q25_lag_lead")),
 )
 def q2b_window_digest_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q25_lag_lead(spark, sf_dir).createOrReplaceTempView("q25_digest_src")
-    return spark.sql(_digest_sql_q25("q25_digest_src"))
+    src = q25_lag_lead(spark, sf_dir)
+    return sql_with(spark, sf_dir, _digest_sql_q25(), src=src)
 
 
 @query(
     "q2c_window_digest_ranks",
-    oracle=_digest_sql_q28(f"({_oracle_of('q28_distribution_ranks')}) src"),
+    oracle=oracle_with(_digest_sql_q28(), src=_oracle_of("q28_distribution_ranks")),
 )
 def q2c_window_digest_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q28_distribution_ranks(spark, sf_dir).createOrReplaceTempView(
-        "q28_digest_src"
-    )
-    return spark.sql(_digest_sql_q28("q28_digest_src"))
+    src = q28_distribution_ranks(spark, sf_dir)
+    return sql_with(spark, sf_dir, _digest_sql_q28(), src=src)
 
 
 # --------------------------------------------------------------------------

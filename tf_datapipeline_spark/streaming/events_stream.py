@@ -31,9 +31,12 @@ from pyspark.sql import functions as F
 from tf_datapipeline_spark.catalog import (
     events_raw_ts_type,
     nanos_to_timestamp,
+    oracle_with,
     read_table_stream,
 )
 from tf_datapipeline_spark.functions.exact import dsum, sql_dsum
+from tf_datapipeline_spark.functions.vectors import fold_l2
+from tf_datapipeline_spark.operators.dedup import _SIG_CTES
 from tf_datapipeline_spark.registry import query
 
 _sink_counter = itertools.count()
@@ -682,19 +685,15 @@ def q4o_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the estimated Jaccard; the batch oracle replays signature, cap, join,
 # and estimate with its own band-key SQL.
 # --------------------------------------------------------------------------
-def _stream_incr_dedup_oracle() -> str:
-    from tf_datapipeline_spark.operators.dedup import (
-        _BUCKET_CAP,
-        _DELTA_MOD,
-        _K,
-        _with_prelude,
-    )
+def _stream_incr_dedup_body() -> str:
+    """The oracle body over the shared signature table `sig`."""
+    from tf_datapipeline_spark.operators.dedup import _BUCKET_CAP, _DELTA_MOD, _K
 
     mcols = ", ".join(f"m{i}" for i in range(_K))
     est = " + ".join(
         f"(CASE WHEN d.m{i} = i2.m{i} THEN 1 ELSE 0 END)" for i in range(_K)
     )
-    body = f"""
+    return f"""
     SELECT d.band_id, d.doc_id AS new_id, i2.doc_id AS old_id,
            CAST(({est}) AS DOUBLE) / {_K} AS est_jaccard
     FROM (
@@ -721,10 +720,12 @@ def _stream_incr_dedup_oracle() -> str:
     ) i2 ON i2.band_id = d.band_id AND i2.bkey = d.bkey
     WHERE CAST(({est}) AS DOUBLE) / {_K} >= 0.5
     """
-    return _with_prelude(body, need_sig=True)
 
 
-@query("q6c_stream_incremental_dedup", oracle=_stream_incr_dedup_oracle())
+@query(
+    "q6c_stream_incremental_dedup",
+    oracle=oracle_with(_stream_incr_dedup_body(), **_SIG_CTES),
+)
 def q6c_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.operators.dedup import (
         _BUCKET_CAP,
@@ -781,12 +782,13 @@ _VEC_DELTA_MOD = 5  # vec_id % 5 == 0 is the "newly crawled" delta slice
 
 
 def _stream_sq_oracle() -> str:
-    from tf_datapipeline_spark.operators.similarity import _sq_encode_sql
+    from tf_datapipeline_spark.operators.similarity import _dims_sql, _sq_encode_sql
 
-    return f"""
+    body = f"""
     SELECT * FROM ({_sq_encode_sql("duckdb")}) q
     WHERE vec_id % {_VEC_DELTA_MOD} = 0
     """
+    return oracle_with(body, dims=_dims_sql("duckdb"))
 
 
 @query("q7a_stream_sq_ingest", oracle=_stream_sq_oracle())
@@ -951,12 +953,9 @@ def q8j_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hot-bucket cap — the anti-join discards rather than enumerates
 # matches, so bucket fan-out never materializes rows.)
 # --------------------------------------------------------------------------
-def _stream_ingest_oracle() -> str:
-    from tf_datapipeline_spark.operators.dedup import (
-        _DELTA_MOD,
-        _K,
-        _with_prelude,
-    )
+def _stream_ingest_body() -> str:
+    """The oracle body over the shared signature table `sig`."""
+    from tf_datapipeline_spark.operators.dedup import _DELTA_MOD, _K
     from tf_datapipeline_spark.operators.text import _SW_LIST, _tokens_sql
 
     def band_cols(q: str, band: int) -> str:
@@ -967,7 +966,7 @@ def _stream_ingest_oracle() -> str:
     est = " + ".join(
         f"(CASE WHEN i.m{k} = s.m{k} THEN 1 ELSE 0 END)" for k in range(_K)
     )
-    body = f"""
+    return f"""
     SELECT d.doc_id, d.n_chars,
            8 + (d.doc_id * 7919) % 25 AS height,
            8 + (d.doc_id * 104729) % 25 AS width
@@ -1003,10 +1002,9 @@ def _stream_ingest_oracle() -> str:
         WHERE s.doc_id = d.doc_id
       )
     """
-    return _with_prelude(body, need_sig=True)
 
 
-@query("qt4_stream_ingest", oracle=_stream_ingest_oracle())
+@query("qt4_stream_ingest", oracle=oracle_with(_stream_ingest_body(), **_SIG_CTES))
 def qt4_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.operators.dedup import (
         _DELTA_MOD,
@@ -1159,16 +1157,9 @@ def _stream_ivf_oracle() -> str:
     from tf_datapipeline_spark.operators.similarity import _N_CELLS, seed_values_sql
 
     cells = seed_values_sql(_N_CELLS)
-    # order-pinned distance fold: the same order as vectors.l2, which
-    # the Spark side (similarity.nearest_seed) runs
-    d2 = (
-        "list_reduce("
-        "list_transform("
-        "list_transform(list_zip(v.embedding, c.cemb), "
-        "s -> CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE)), "
-        "d -> d * d), "
-        "(a, b) -> a + b)"
-    )
+    # the order-pinned twin of vectors.l2, which the Spark side
+    # (similarity.nearest_seed) runs
+    d2 = fold_l2("duckdb", "v.embedding", "c.cemb")
     return f"""
     WITH cw(cell, cwvec_id) AS (VALUES {cells}),
     cwe AS (

@@ -1,16 +1,16 @@
 """Staged DuckDB oracle for the two streaming MinHash composites (r8
 verdict task 6): q6c_stream_incremental_dedup and qt4_stream_ingest.
 
-Their registered oracles inline the corpus MinHash signature as a CTE
-(`_with_prelude`), so at sf10 each one re-derives the 500k-doc
-signature table inside DuckDB (~40+ min single-node, observed in the r8
-sweep) — the only two streaming rows without sf10-adjacent evidence.
-This tool STAGES the oracle: it materializes the signature CTE ONCE as
-a DuckDB table, value-checks the staged table itself against Spark's
-`sig` view (the same exact compare the driver gate uses — so the stage
-is verified, not trusted), then runs both oracle BODIES (prelude
-stripped — the staged table takes the CTE's place) against the Spark
-results with the standard order-insensitive exact compare.
+Their registered oracles derive the corpus MinHash signature as a
+shared CTE (`catalog.oracle_with`), so at sf10 each run re-derives the
+500k-doc signature table inside DuckDB (~40+ min single-node, observed
+in the r8 sweep) — the only two streaming rows without sf10-adjacent
+evidence. This tool STAGES the oracle: it builds the signature table
+ONCE as a DuckDB table, value-checks the staged table itself against
+Spark's signature checkpoint (the same exact compare the driver gate
+uses — so the stage is verified, not trusted), then runs both oracle
+BODIES (the staged table takes the shared CTE's place) against the
+Spark results with the standard order-insensitive exact compare.
 
 Usage: python tools/staged_minhash_oracle.py <sf_dir> <out_json>
 """
@@ -33,12 +33,13 @@ def main() -> None:
 
     from tests.oracle_harness import _norm_rows, expected_duck_type
     from tf_datapipeline_spark import registry
-    from tf_datapipeline_spark.catalog import TABLES, table_path
-    from tf_datapipeline_spark.operators.dedup import (
-        _materialize_sig,
-        _with_prelude,
-    )
+    from tf_datapipeline_spark.catalog import TABLES, oracle_with, table_path
+    from tf_datapipeline_spark.operators.dedup import _SIG_CTES, _materialize_sig
     from tf_datapipeline_spark.session import get_spark
+    from tf_datapipeline_spark.streaming.events_stream import (
+        _stream_incr_dedup_body,
+        _stream_ingest_body,
+    )
 
     report: dict[str, dict] = {}
     spark = get_spark("staged-minhash-oracle")
@@ -50,18 +51,14 @@ def main() -> None:
             f"read_parquet('{table_path(sf_dir, t)}')"
         )
 
-    # ---- stage: materialize the signature CTE once
+    # ---- stage: build the signature table once
     t0 = time.time()
-    con.execute(
-        "CREATE TABLE sig AS "
-        + _with_prelude("SELECT * FROM sig", need_sig=True)
-    )
+    con.execute("CREATE TABLE sig AS " + oracle_with("SELECT * FROM sig", **_SIG_CTES))
     stage_sec = round(time.time() - t0, 1)
 
     # ---- verify the stage itself against Spark's sig (exact compare)
     t0 = time.time()
-    _materialize_sig(spark, sf_dir)
-    sdf = spark.table("sig")
+    sdf = _materialize_sig(spark, sf_dir)
     got = _norm_rows([tuple(r) for r in sdf.collect()], sdf.columns)
     exp_rows = con.execute("SELECT * FROM sig").fetchall()
     exp_cols = [d[0] for d in con.description]
@@ -77,14 +74,13 @@ def main() -> None:
           f"match={sig_match}", flush=True)
 
     # ---- run both composites against the staged table
-    prefix = _with_prelude("", need_sig=True)
     qs = registry.queries()
-    oracles = registry.oracle_sql()
-    for name in ("q6c_stream_incremental_dedup", "qt4_stream_ingest"):
+    bodies = {
+        "q6c_stream_incremental_dedup": _stream_incr_dedup_body(),
+        "qt4_stream_ingest": _stream_ingest_body(),
+    }
+    for name, body in bodies.items():
         t0 = time.time()
-        oracle = oracles[name]
-        assert oracle.startswith(prefix), f"{name}: prelude shape changed"
-        body = oracle[len(prefix):]
         try:
             df = qs[name](spark, sf_dir)
             got_rows = [tuple(r) for r in df.collect()]
