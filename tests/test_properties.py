@@ -344,7 +344,7 @@ def _ahash(spark, sf_dir):
 _MATERIALIZED_TABLES = {
     "sig": _sig,
     "cc_labels": _cc_labels,
-    "dims": _shared_table_of("q72_label_centroids"),
+    "dims": _shared_table_of("q78_sq_encode"),
     "ahash": _ahash,
     "kmv_base": _shared_table_of("q9e_kmv_quantile_rollup"),
     "dv_pospl": _shared_table_of("q9g_deletion_vectors"),

@@ -244,3 +244,18 @@ def test_rejected_archive_never_runs_unshared(tmp_path):
         tmp_path,
     )
     assert proc.returncode == 0 and proc.stdout.strip() == "ok", proc.stderr[-3000:]
+
+
+def test_driver_heap_fits_the_host_unless_set(monkeypatch):
+    """With SPARK_GRAFT_DRIVER_MEM unset the driver heap stays below the
+    host's physical memory (half of it, at most 48g); when set, its value
+    is used unchanged."""
+    from tf_datapipeline_spark import session
+
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    heap = cds.heap_bytes(session.driver_heap())
+    assert 0 < heap < phys
+    assert heap <= 48 << 30
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "48g")
+    assert session.driver_heap() == "48g"

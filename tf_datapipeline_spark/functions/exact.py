@@ -36,7 +36,7 @@ def dsum(col: Column | str, scale: int = 4) -> Column:
     """Exact sum: cast each addend to DECIMAL(28, scale), sum, emit double.
 
     The final decimal -> double conversion goes THROUGH A STRING on both
-    engines. Found by the round-5 sf1 parity sweep: once a sum carries
+    engines. Found by an sf1 parity sweep: once a sum carries
     >16 significant digits (5e10 at scale 6 — any 10x growth step gets
     there), DuckDB's direct decimal->double cast double-rounds (int128
     -> double, then / 10^scale: two roundings) while Spark's

@@ -107,7 +107,7 @@ def encode_png(img: np.ndarray) -> bytes:
         raise ValueError(f"expected uint8, got {img.dtype}")
     h, w = img.shape[:2]
     flat = img.astype(np.int32).reshape(h, w * _BPP)
-    # r11: whole-image vectorization (byte-identical to the old per-row
+    # whole-image vectorization (byte-identical to the old per-row
     # loop — PNG filters reference the RAW previous scanline, so left/
     # up/upper-left are plain array shifts and all five filters apply to
     # row subsets in five fancy-indexed ops; the old shape paid ~10
@@ -180,7 +180,7 @@ def decode_png(data: bytes) -> np.ndarray:
     stride = w * _BPP
     if len(raw) != h * (1 + stride):
         raise ValueError(f"PNG scanline payload {len(raw)} != {h * (1 + stride)}")
-    # r12 (r11 verdict task 6): parse every scanline up front (one
+    # parse every scanline up front (one
     # frombuffer + reshape instead of per-row slicing) and reconstruct
     # each filter class with the cheapest shape its data dependency
     # allows: filter 0/1 rows never read the previous row (batch-
@@ -215,7 +215,7 @@ def decode_png(data: bytes) -> np.ndarray:
             img[r] = cur = (rows[r, 1:].astype(np.int32) + prev) & 0xFF
         elif f >= 3:
             # left-and-up dependent: sequential per byte. Pure small-int
-            # Python (the r8 profile showed per-byte numpy-scalar _paeth
+            # Python (a profile showed per-byte numpy-scalar _paeth
             # calls dominating the media path); the Paeth distances
             # reduce algebraically to |b-c|, |a-c|, |a+b-2c|.
             lb = raw[r * (1 + stride) + 1 : r * (1 + stride) + 1 + stride]

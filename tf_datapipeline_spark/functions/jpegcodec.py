@@ -412,7 +412,7 @@ def _extend(v: int, size: int) -> int:
 
 
 # --------------------------------------------------------------------------
-# Fast-path decode machinery (round 9). The r8 profile showed per-byte
+# Fast-path decode machinery. A profile showed per-byte
 # huffman decode dominating the media path (q8n: 6.1s sf0.1 / 66.6s sf1),
 # with the old _BitReader paying a Python call + dict probe PER BIT. The
 # decoder below keeps the identical integer coefficient semantics (same
@@ -595,7 +595,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     buf = _unstuff_entropy(data, pos)
     nbits_avail = 8 * len(buf)
     bb = np.frombuffer(buf, dtype=np.uint8).astype(np.uint32)
-    # Zero-pad to the worst-case single-block overrun (r9 advice): the
+    # Zero-pad to the worst-case single-block overrun: the
     # truncation check below runs once per BLOCK, and one corrupt block
     # can legally consume 64 coefficient entries x (16-bit code + 16-bit
     # magnitude) = 256 bytes past the end before the check fires — with

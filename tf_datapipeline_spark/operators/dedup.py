@@ -512,7 +512,7 @@ def q65_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_neardup_sql(dialect: str) -> str:
-    # DuckDB oracle, ALSO two-phase (round-6): the original single-phase
+    # DuckDB oracle, ALSO two-phase: the original single-phase
     # exploded form built the full ~n²/2 x 64 pair-dim intermediate into
     # an ~n²/2-group decimal aggregation — tractable at sf0.1, but the
     # sf1 sweep measured it grinding for over an hour. The prescreen is
@@ -566,10 +566,10 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale paths, threshold 0.4 exercises the op on a corpus with no
     seeded embedding dups).
 
-    Spark side is TWO-PHASE (q68's margin device), reworked twice by
-    the round-6 sf1 sweep: the original exploded (vec,pos)-join form
-    shuffled ~n²/2 x 64 rows into an ~n²/2-group aggregation (the
-    defect class the r4 sweep caught in q68) and stalled at sf1; the
+    Spark side is TWO-PHASE (q68's margin device), reworked twice after
+    an sf1 sweep: the original exploded (vec,pos)-join form shuffled
+    ~n²/2 x 64 rows into an ~n²/2-group aggregation (the defect class an
+    earlier sweep caught in q68) and stalled at sf1; the
     first rework evaluated a per-pair dot expression under a nested
     loop — zero shuffle, but 400M interpreted/non-JIT expression evals
     still burned ~25 min at sf1. The landed form recognizes the float
@@ -642,7 +642,7 @@ def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_ids = both.groupBy("bi", "bj").applyInPandas(
         emit_pairs, schema="vec_a long, vec_b long"
     )
-    # Broadcast-regime guard (r6 verdict nit): |candidates| is O(true
+    # Broadcast-regime guard: |candidates| is O(true
     # near-dup pairs) — ~98k rows at sf1 on this corpus, but a
     # pathological mass-near-duplicate corpus makes it O(n²) and would
     # blow the driver-side broadcast long before the quadratic contract
@@ -909,19 +909,18 @@ def q67_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroids with the residual split executor-side. Keep-decision
 # equality between the two is test-pinned at the shared 16-cell scales.
 #
-# Pair-work cap (r8, the q56 treatment — retires the last weak-ledger
-# entry): with frozen cells, naive in-cell pair enumeration is
-# O(n_c^2) — quadratic in corpus size. _Q68_KEEPER_CAP bounds the
-# KEEPER side of every pair to the cap lowest vec_ids per cell, so pair
-# work is O(cap * n * d) — linear, ~33k fused multiply-adds per corpus
-# vector — while the dup side still scans every vector. Semantics
-# become "keep-first against the cap earliest candidates of the cell":
-# deterministic, replayed VERBATIM by the oracle (the cap lives in the
-# shared SQL body), and non-binding below cap*16 vectors (~8k — the
-# q6b keep-equality test runs at sf0.001, far below). Measured Spark
-# side at sf1 (200k vectors), warm: cap 2048 -> 81s, 512 -> 57s,
-# 64 -> 9s — linear in cap as designed; 512 keeps ~100M candidate
-# checks at sf1, a defensible keeper-coverage level for the
+# Pair-work cap (the q56 treatment): with frozen cells, naive in-cell
+# pair enumeration is O(n_c^2) — quadratic in corpus size.
+# _Q68_KEEPER_CAP bounds the KEEPER side of every pair to the cap lowest
+# vec_ids per cell, so pair work is O(cap * n * d) — linear, ~33k fused
+# multiply-adds per corpus vector — while the dup side still scans every
+# vector. Semantics become "keep-first against the cap earliest
+# candidates of the cell": deterministic, replayed VERBATIM by the
+# oracle (the cap lives in the shared SQL body), and non-binding below
+# cap*16 vectors (~8k — the q6b keep-equality test runs at sf0.001, far
+# below). Measured Spark side at sf1 (200k vectors), warm: cap 2048 ->
+# 81s, 512 -> 57s, 64 -> 9s — linear in cap as designed; 512 keeps ~100M
+# candidate checks at sf1, a defensible keeper-coverage level for the
 # oracle-harness twin (q6b's numpy path is the deployment shape).
 # Reference analog: none (extension family, BASELINE.json).
 # --------------------------------------------------------------------------
@@ -1041,7 +1040,7 @@ def q68_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "cell")
     )
     cv = corpus.join(cells, "vec_id")
-    # Keeper-side cap (r8, linear pair work — see _Q68_KEEPER_CAP): rank
+    # Keeper-side cap (linear pair work — see _Q68_KEEPER_CAP): rank
     # METADATA ONLY (cell, vec_id — the embeddings never shuffle for the
     # ranking), then broadcast the <= cap*16-row id list back onto the
     # corpus. The oracle replays the same prefix via ROW_NUMBER in the
@@ -1293,7 +1292,7 @@ def q6a_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q6b — semantic dedup, PRODUCTION shape: the deployment configuration
 # SCALING.md promises for q68, with every corpus-proportional data path
-# kept executor-side (round-5 fix for the r4 verdict's top finding):
+# kept executor-side:
 #   - cluster count GROWS with the corpus (target max(16, n/128) cells,
 #     SemDeDup's own recipe — 50k clusters for LAION — so per-cell
 #     population, and the quadratic in-cell pair cost, stays ~128
@@ -1312,8 +1311,8 @@ def q6a_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     closure. Per-task memory is n/k1 vectors (the coarse group);
 #     _COARSE_CAP is the knob that bounds it for a given corpus;
 #   - cell assignment is one numpy matmul per Arrow batch (q73's
-#     Pandas-UDF pattern), pair cosines are plain float folds (since r7
-#     q68 uses the same order-pinned double folds — no decimal device
+#     Pandas-UDF pattern), pair cosines are plain float folds (q68
+#     uses the same order-pinned double folds — no decimal device
 #     anywhere in the family).
 # The DuckDB oracle below replays the EXACT contract — dynamic cell
 # count from COUNT(*), capped coarse level, deterministic in-group fine
@@ -1324,7 +1323,7 @@ def q6a_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pinned in tests/test_properties.py (matmul vs sequential-fold floats
 # can only diverge inside a ~1e-12 cosine sliver, empty on this corpus).
 #
-# Config scan note (r4 verdict nit): n_vecs comes from a separate
+# Config scan note: n_vecs comes from a separate
 # emb.count() rather than riding the centroid scan — deliberately. The
 # count is satisfied from parquet footer metadata (no data pages read),
 # while the centroid scan pushes its vec_id predicate into the scan and
@@ -1749,8 +1748,8 @@ def q6g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # everything downstream — pair enumeration, sketch merge, estimates —
 # touches k*N_sources rows (~2.5k here). Deterministic: md5-derived
 # hashes, integer ranks, one final double division that rounds once
-# identically in both engines. The KMV ordering hash is 60-bit (r7
-# advisor: a 32-bit space saturates when the distinct-shingle count
+# identically in both engines. The KMV ordering hash is 60-bit (a
+# 32-bit space saturates when the distinct-shingle count
 # approaches 2^32 — plausible at 100 TB — which biases bottom-k order
 # statistics; 15 md5 hex digits keep the estimator valid to ~2^60
 # distinct keys while staying inside signed BIGINT in both engines).
@@ -1876,7 +1875,7 @@ def q6i_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q6j — DUPLICATE-CLUSTER SIZE HISTOGRAM + concentration (round 10): the
+# q6j — DUPLICATE-CLUSTER SIZE HISTOGRAM + concentration: the
 # dedup-family monitoring table — how duplicated IS the corpus? Exact
 # content clusters (q61's sha2 shuffle key) rolled into a size
 # histogram: for every cluster size, how many clusters, how many docs,
@@ -1946,7 +1945,7 @@ def q6j_dup_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q6k — LSH S-CURVE CALIBRATION (round 11): the tuning audit for the
+# q6k — LSH S-CURVE CALIBRATION: the tuning audit for the
 # whole MinHash-LSH family — measure, on a deterministic bounded pair
 # sample, how the band scheme's ACTUAL capture probability tracks exact
 # Jaccard similarity, next to the textbook S-curve 1-(1-s^r)^b the
@@ -2025,7 +2024,7 @@ def _lsh_calibration_body(dialect: str) -> str:
     )
     p_band = " * ".join([sm] * _BAND)
     if dialect == "spark":
-        # r12 (the q65 set idiom, guide §2.4): per-doc shingle SETS
+        # The q65 set idiom (guide §2.4): per-doc shingle SETS
         # (unordered collect_set arrays) are the shared table `cal_sets`;
         # |A∩B| is then one codegen array_intersect per pair
         # instead of the shingle self-join + two COUNT(*) arms (n_common
@@ -2091,8 +2090,8 @@ def _cal_sets_sql(spark: SparkSession, sf_dir: str) -> str:
     the SAMPLED calibration docs `cal_ids` only (the q65 candidate-
     restriction + set idiom): exact-Jaccard cost then scales with the
     fixed-size sample, not the corpus, and ONE collect_set aggregate
-    replaces the r11 chain (distinct -> checkpoint -> downstream COUNT
-    arms). The oracle computes the corpus-wide shingle CTE; results
+    replaces a distinct -> checkpoint -> downstream COUNT-arms
+    chain. The oracle computes the corpus-wide shingle CTE; results
     agree because every join is keyed on sampled doc_ids and |A∩B|/|A|
     are the same integers over sets either way. The sample restriction
     lands BEFORE the shingle explode."""

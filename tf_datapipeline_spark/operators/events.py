@@ -1150,7 +1150,7 @@ def seasonal_keyed_ctes(extra: str = "") -> str:
     """The hour-of-week keying CTEs (dayed + keyed) shared VERBATIM by
     the q4zb (batch) and q4zc (streaming twin) oracles — one string so
     the floor-device arithmetic cannot drift between the two copies
-    (r10 review; the r10 floor fix had to edit both in lockstep).
+    (a floor fix once had to edit both in lockstep).
     `extra` prepends pass-through columns (q4zc carries event_id)."""
     cols = f"{extra}event_type, value"
     return f"""dayed AS (
@@ -1235,7 +1235,7 @@ def _seasonal_stats(keyed: DataFrame) -> DataFrame:
 # exact inputs — sqrt IS correctly rounded under IEEE-754, so every
 # derived double is bit-identical in both engines; the 2σ comparison is
 # then exact. Slots absent from one side survive the FULL OUTER ledger
-# join (the q9h advisor precedent: insert-only groups must surface).
+# join (the q9h precedent: insert-only groups must surface).
 #
 # Scale (100 TB): two partial-aggregated passes over the event scan
 # (baseline slots, then eval counts) shuffling |types|·168 rows each;
@@ -1414,7 +1414,7 @@ def q4zd_user_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4ze — RETENTION TRIANGLE (round 9): the classic cohort matrix — users
+# q4ze — RETENTION TRIANGLE: the classic cohort matrix — users
 # grouped by first-seen week, each cohort tracked across week offsets
 # (how many of week-W's new users were active W+k?). The one
 # product-analytics table q4zd's growth curve doesn't subsume: it needs
@@ -1483,7 +1483,7 @@ def q4ze_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zf — RFM SEGMENTATION (round 9): per-user recency / frequency /
+# q4zf — RFM SEGMENTATION: per-user recency / frequency /
 # monetary quintiles, reported as the ≤125-cell segment grid with exact
 # totals — the curation-policy analog for user data (which cohorts to
 # keep, downsample, or refresh) and the one events analytic that needs
@@ -1608,7 +1608,7 @@ def q4zf_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zg — LAST-TOUCH ATTRIBUTION (round 9): credit each purchase to the
+# q4zg — LAST-TOUCH ATTRIBUTION: credit each purchase to the
 # user's most recent preceding click within a 24h lookback (channel =
 # the click's props.k mod 5), else 'direct' — the marketing-analytics
 # twin of the ASOF family, expressed WITHOUT a range join: one
@@ -1693,7 +1693,7 @@ def q4zg_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zh — TEMPORAL SPLIT + LEAKAGE AUDIT (round 9): split the event log
+# q4zh — TEMPORAL SPLIT + LEAKAGE AUDIT: split the event log
 # at the 80% point of its time range (exact integer arithmetic on epoch
 # seconds — the division-free %-then-divide device) into train/test and
 # report, per event type, the split sizes AND the leakage surface: how
@@ -1770,7 +1770,7 @@ def q4zh_temporal_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zi — ORDERED CONVERSION FUNNEL (round 10): the product-analytics
+# q4zi — ORDERED CONVERSION FUNNEL: the product-analytics
 # table the retention/RFM/attribution trio (q4ze/q4zf/q4zg) still
 # lacked — per-user first-touch progression through view -> click ->
 # purchase, where each step must occur STRICTLY AFTER the user's
@@ -1785,8 +1785,8 @@ def q4zh_temporal_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # t2), so Catalyst stacks them on a single Window exchange, the
 # per-user rollup reuses that partitioning without a new shuffle, and
 # everything after is a 1-row global aggregate exploded into the 3-row
-# ladder. (The first cut ran one groupBy+join PER STEP — three event
-# scans whose re-derived lineage the r10 verdict flagged.)
+# ladder. (One groupBy+join PER STEP would cost three event scans,
+# each re-deriving its lineage.)
 # Exactness: counts are integers; ratios are one IEEE division each;
 # the strictly-after comparison is exact microsecond arithmetic
 # identical in both engines.
@@ -1842,7 +1842,7 @@ def _funnel_oracle() -> str:
 def _funnel_ratios(ladder: DataFrame) -> DataFrame:
     """Conversion ratios over a (step, step_name, n_users) ladder —
     SHARED by q4zi (batch) and q4zk (streaming twin) so the ratio
-    semantics cannot drift between them (r10 review finding). An empty
+    semantics cannot drift between them. An empty
     previous/first step yields NULL in BOTH engines by explicit CASE:
     Spark's ANSI double 0/0 would error while DuckDB emits NaN, so an
     unguarded division (or a blanket coalesce-to-1.0) diverges exactly
@@ -1930,7 +1930,7 @@ def q4zi_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zm — FUNNEL STEP-LATENCY DISTRIBUTION (round 11): the time dimension
+# q4zm — FUNNEL STEP-LATENCY DISTRIBUTION: the time dimension
 # q4zi's count ladder drops — per converting user, HOW LONG each step
 # transition took (first-touch t2-t1 and t3-t2), reported per transition
 # as exact count/min/max/mean plus the exact low-median. The p50 is the
@@ -2067,7 +2067,7 @@ def funnel_latency_report(per_user: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zj — ENTRY-PATH ANALYSIS (round 10): the "how do journeys start"
+# q4zj — ENTRY-PATH ANALYSIS: the "how do journeys start"
 # table next to q4zi's fixed funnel — each user's first three event
 # types under the deterministic (ts, event_id) total order, folded to a
 # path string, counted and shared. Missing steps (users with < 3
@@ -2138,7 +2138,7 @@ def q4zj_entry_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zl — A/B UPLIFT with z-statistic (round 10): the experiment-readout
+# q4zl — A/B UPLIFT with z-statistic: the experiment-readout
 # table — users deterministically split into two variants by the
 # cross-engine md5 hash (the q3c sampling device, so assignment is
 # identical in both engines and stable under retries), per-variant
@@ -2165,7 +2165,7 @@ def _ab_uplift_sql(dialect: str) -> str:
     # purchases/user over value ~ U[0, 200] this splits users near 50/50
     # at every scale factor; plain ">= 1 purchase" converts everyone in
     # this corpus and degenerates the z (pooled p = 1). EVERY division —
-    # the rates and the uplift too, not just the z (r10 review) — is
+    # the rates and the uplift too, not just the z — is
     # CASE-guarded for degenerate corpora: both engines emit NULL
     # instead of Spark's ANSI divide-by-zero error / DuckDB's NaN-inf.
     denom = (
@@ -2215,7 +2215,7 @@ def q4zl_ab_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zo — PERIODICITY DETECTION (round 11): the seasonality DISCOVERY
+# q4zo — PERIODICITY DETECTION: the seasonality DISCOVERY
 # step ahead of q4zb's seasonal baseline — q4zb assumes the hour-of-week
 # cycle; this op finds the dominant cycle from the data via raw
 # autocorrelation of hourly event counts over lags 1..48h. The score at
@@ -2301,7 +2301,7 @@ def q4zo_periodicity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zp — CUSUM CHANGEPOINT DETECTION (round 11): the regime-shift audit
+# q4zp — CUSUM CHANGEPOINT DETECTION: the regime-shift audit
 # that closes the monitoring ladder — q4zb models a KNOWN cycle, q4zo
 # DISCOVERS the cycle, q4zp finds the single most likely LEVEL SHIFT in
 # each event type's daily volume (a feed going dark, a bot flood, an

@@ -232,7 +232,7 @@ def q1t_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q1ab — XML round-trip (round 10): supplier written as element-rows XML
+# q1ab — XML round-trip: supplier written as element-rows XML
 # (Spark 4's NATIVE xml source — no external package), read back with an
 # explicit schema, then a per-nation supplier rollup value-checked
 # against the raw-parquet oracle. XML is the interchange container

@@ -1,4 +1,4 @@
-"""Storage-layout & index-maintenance operators (round 5: the q9 family).
+"""Storage-layout & index-maintenance operators (the q9 family).
 
 At 100 TB the scan you avoid is worth more than the scan you speed up:
 data layout (multi-dimensional clustering + per-file min/max stats) and
@@ -165,7 +165,7 @@ def q9a_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q9o — HILBERT-CURVE layout vs z-order (round 11): the alternative
+# q9o — HILBERT-CURVE layout vs z-order: the alternative
 # space-filling clustering key production table formats actually prefer
 # (Delta Lake's OPTIMIZE ... BY HILBERT, Iceberg's hilbert sort-order) —
 # the Hilbert walk never makes the long diagonal jumps z-order's bit
@@ -291,8 +291,8 @@ def q9o_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # single-pass sketch must sit inside the published HLL error envelope
 # of the exact distinct count (computed engine-side, emitted as flags
 # the oracle replays as literal truth).
-# REGIME NOTE (found by the round-6 sf1 parity sweep): round 5 asserted
-# merged == DIRECT exactly. That held at sf0.1 only because every daily
+# REGIME NOTE (found by an sf1 parity sweep): asserting merged == DIRECT
+# exactly holds at sf0.1 only because every daily
 # sketch stayed in sparse (coupon-list) mode, where estimates are exact
 # counts. Past that regime (~1.3k+ distinct at lgK=12 — every sf1 day:
 # 291/291 diverged), NO estimate-level equality survives: direct uses
@@ -302,7 +302,7 @@ def q9o_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # estimate in the sparse->dense transition band differs even under
 # input DUPLICATION (idempotence) and 6-hour REGROUPING — the union
 # gadget keeps its own HIP history over the input multiset. The honest
-# mergeability contract — what this query now certifies — is the error
+# mergeability contract — what this query certifies — is the error
 # envelope at every grain, which is exactly what a production rollup
 # promises its consumers. (At the extremes the estimators coincide
 # again: exact counts below ~100, saturated composite at 60k.)
@@ -712,7 +712,7 @@ def _bloom_skip_body(dialect: str) -> str:
            -- layout width: at tiny scale factors sparse orderkey ranges
            -- leave files empty and they drop out of frows/checks, so a
            -- hardcoded width would overstate the universe files_hit /
-           -- rows_scanned are measured against (r6 advisor)
+           -- rows_scanned are measured against
            CAST((SELECT COUNT(*) FROM frows) AS INT) AS n_files,
            CAST(SUM(c.hit) AS INT) AS files_hit,
            CAST(COUNT(t.file_id) AS INT) AS files_true,
@@ -885,7 +885,7 @@ def _ivm_body(dialect: str = "spark") -> str:
       -- FULL OUTER, not base LEFT JOIN delta: a group that exists only
       -- in the new snapshot (insert-only group, no base row) has a delta
       -- row but no base row, and a LEFT JOIN would silently drop it from
-      -- the maintained view (r7 advisor). Not reachable with TPC-H's 5
+      -- the maintained view. Not reachable with TPC-H's 5
       -- always-present priorities, but the algebra must be complete.
       SELECT COALESCE(b.o_orderpriority, d.prio) AS o_orderpriority,
              CAST(COALESCE(b.cnt, 0) AS BIGINT) AS base_cnt,
@@ -1170,7 +1170,7 @@ def q9k_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q9l — PARTITION-EVOLUTION PLANNER (round 9): the table migrates from
+# q9l — PARTITION-EVOLUTION PLANNER: the table migrates from
 # its current physical layout (4096-row orderkey files, the shared
 # device) to a new partition spec (order month). For each current file,
 # count how many target partitions its rows straddle: 1 → the file can
@@ -1209,7 +1209,7 @@ def q9l_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q9m — SNAPSHOT MANIFEST DIFF (round 9): the file-level time-travel
+# q9m — SNAPSHOT MANIFEST DIFF: the file-level time-travel
 # report between two table versions — which 4096-key files were added,
 # removed, rewritten, or untouched by the CDC apply, with exact row and
 # integer-cents deltas per file. The q1y/q9i device derives both
@@ -1266,7 +1266,7 @@ def q9m_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q9n — OPTIMISTIC-CONCURRENCY conflict detection (round 10): the
+# q9n — OPTIMISTIC-CONCURRENCY conflict detection: the
 # lakehouse commit protocol made explicit — two transactions prepared
 # against the same snapshot of the hourly file manifest (the q9c
 # derivation), validated Delta/Iceberg-style before the second commit:
@@ -1319,7 +1319,7 @@ def q9n_occ_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q9p — LWW UPSERT COMPACTION (round 11): resolve a MULTI-commit CDC
+# q9p — LWW UPSERT COMPACTION: resolve a MULTI-commit CDC
 # log to the table's current state by last-writer-wins — the log
 # compaction every streaming-upsert table (Delta CDF apply, Iceberg
 # upsert, Hudi MOR compaction, Kafka compacted topics) runs. The
@@ -1399,7 +1399,7 @@ def q9p_lww_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q9q — TIME-TRAVEL (AS-OF) SNAPSHOT RECONSTRUCTION (round 11): the read
+# q9q — TIME-TRAVEL (AS-OF) SNAPSHOT RECONSTRUCTION: the read
 # path q9p's write path implies — reconstruct the table state AS OF each
 # commit v from the same 4-commit changelog and audit every historical
 # snapshot in ONE query (live-key count, tombstone count, exact cents

@@ -361,7 +361,7 @@ def q8d_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q8d2 — JPEG codec on NON-trivial content (r4 verdict task 6): a 64-doc
+# q8d2 — JPEG codec on NON-trivial content: a 64-doc
 # gradient-RGB corpus (every AC band populated, odd non-multiple-of-16
 # dims) encoded 4:2:0 at quality 75 and decoded executor-side — the
 # huffman AC run/size paths, chroma subsample/upsample and MCU padding
@@ -728,9 +728,9 @@ def q82g_augment_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 # literal would parse as DECIMAL and could lose the last ulp).
 #
 # Golden provenance: these literals were GENERATED by this
-# implementation (frozen round 5) — they pin behavior against future
+# implementation and then frozen — they pin behavior against future
 # regressions, they do not independently verify it. The independent
-# check is tests/test_eval_independent.py (round 6): hand-derived
+# check is tests/test_eval_independent.py: hand-derived
 # closed-form bilinear literals + a scalar spec-loop derivation of the
 # full /255 -> central-slice -> bilinear chain, sharing no code with
 # functions/imageops.py — the q83g analog of tests/jpeg_independent.py.
@@ -1980,7 +1980,7 @@ def q8n_media_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q8o — CROSS-CODEC TRANSCODE AUDIT (round 9): re-encode the whole PPM
+# q8o — CROSS-CODEC TRANSCODE AUDIT: re-encode the whole PPM
 # corpus as PNG inside one mapInPandas pass (decode raster -> PNG encode
 # -> PNG decode -> pixel-array equality) and report corpus-level
 # losslessness — the migration job a media lake runs before switching
@@ -2040,7 +2040,7 @@ def q8o_transcode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q8p — DCT PERCEPTUAL HASH (pHash, round 11): the frequency-domain
+# q8p — DCT PERCEPTUAL HASH (pHash): the frequency-domain
 # image fingerprint one rung above q8f's aHash — resize to 32x32, gray,
 # 2-D DCT, keep the top-left 8x8 frequency block, threshold each
 # coefficient against the low-median of the 63 AC coefficients, pack 64

@@ -802,7 +802,7 @@ def q3e_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q3f — IMPORTANCE-WEIGHTED DOWNSAMPLE (round 10): the inverse-
+# q3f — IMPORTANCE-WEIGHTED DOWNSAMPLE: the inverse-
 # propensity sampling shape behind size-aware corpus thinning — keep
 # each document with probability proportional to its length (capped at
 # 1), carry the inverse-probability weight, and report the per-language

@@ -149,12 +149,12 @@ def _prep_counts(
     toks = _tokens_spark()
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
     w = Window.partitionBy(F.md5("text"))
-    # r12 (guide §2.3 — project before the exchange): the md5-dedup
+    # Project before the exchange (guide §2.3): the md5-dedup
     # window only needs the HASH as its key, and everything downstream
     # needs length(text), never text itself — computing n_chunks' input
     # here keeps the document payload out of BOTH the window exchange
-    # and the doc_id join exchange (the r11 plan shipped full text
-    # through each: ~text-sized shuffles for a 16-byte decision).
+    # and the doc_id join exchange (shipping full text through each
+    # costs ~text-sized shuffles for a 16-byte decision).
     n_chunks = F.expr(
         f"1 + CAST(greatest(length(text), 1) - 1 AS LONG) DIV {_CHUNK_STRIDE}"
     )

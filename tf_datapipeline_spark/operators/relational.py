@@ -854,7 +854,7 @@ def q1h_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # floor) of the top-10 counts is a value-level oracle. Tests additionally
 # assert the approx item set recovers the exact top items.
 #
-# Capacity regimes (found by the round-5 sf1 parity sweep): below
+# Capacity regimes (found by an sf1 parity sweep): below
 # capacity >= distinct, the Datasketches frequent-items sketch reports
 # only items it can CERTIFY as heavy (count lower-bound above the purge
 # error), and on near-uniform data that set is legitimately EMPTY — at
@@ -889,7 +889,7 @@ def q1i_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    # Regime guard (round-6, from the round-5 advisor): the exact-oracle
+    # Regime guard: the exact-oracle
     # contract above REQUIRES distinct keys <= _TOPK_TRACKED. Past that,
     # the sketch legitimately enters certified-only mode and the gate row
     # would hard-fail with an opaque value mismatch. The 1-row guard
@@ -933,7 +933,7 @@ def q1i_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so every addend casts exactly) with the same IEEE formulas on both
 # engines. The original formulation used each engine's NATIVE kernels
 # (stddev_samp/corr/covar_samp) rounded to 6dp as the cross-engine
-# tolerance; the round-8 sf10 relational sweep caught that device
+# tolerance; an sf10 relational sweep caught that device
 # failing at scale — at 1.5M rows/group the engines' merge-order
 # difference reaches ~6e-11 relative on the cancellation-heavy covar,
 # which straddles the 6dp rounding boundary (…669 vs …671). Exact
@@ -1541,7 +1541,7 @@ def q1z_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q1aa — DATA-QUALITY EXPECTATION SUITE (round 10): the Deequ/Great-
+# q1aa — DATA-QUALITY EXPECTATION SUITE: the Deequ/Great-
 # Expectations shape — a declared constraint set validated in bulk with
 # per-constraint violation counts and pass rates, the admission gate a
 # production lake runs before letting a snapshot into training:

@@ -179,8 +179,8 @@ def semantic_cells_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding", "nrm", F.col("coarse").alias("cell")
         )
     else:
-        # Executor-side residual split, TWO-PASS (r6; the r5 shape ran one
-        # applyInPandas per coarse group, materializing the whole group —
+        # Executor-side residual split, TWO-PASS (a one-pass shape, one
+        # applyInPandas per coarse group, materializes the whole group —
         # n/k1 vectors, ~500 MB/task at 10^9 vectors, OOM past 10^10).
         #
         # Pass A (pure SQL, no Python): stride-pick each coarse group's
@@ -197,7 +197,7 @@ def semantic_cells_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vectors, the per-cell population constant, instead of the whole
         # group; nothing scales with corpus size until n_f itself does
         # (~4 MB blocks at 10^9 vectors, ~400 MB at 10^11 — two orders
-        # past the r5 shape's wall).
+        # past the one-pass shape's wall).
         # Cost of the bound: the coarse pandas-UDF assignment runs in
         # both passes (cv0 is referenced twice, uncached), one extra
         # corpus-scan + matmul — the documented memory-for-compute trade.

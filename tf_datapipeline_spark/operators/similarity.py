@@ -215,7 +215,8 @@ def _centroid_sql(dialect: str) -> str:
     # engines. Quantization error ≤ 2^-36 per element, deterministic.
     q = "CAST(FLOOR(x * 68719476736.0) AS BIGINT)"
     return f"""
-    WITH labeled AS (
+    WITH dims AS ({_dims_sql(dialect)}),
+    labeled AS (
       SELECT e.label, d.pos, d.x
       FROM dims d JOIN embeddings e ON e.vec_id = d.vec_id
     )
@@ -228,13 +229,13 @@ def _centroid_sql(dialect: str) -> str:
 
 @query(
     "q72_label_centroids",
-    oracle=oracle_with(_centroid_sql("duckdb"), dims=_dims_sql("duckdb")),
+    oracle=_centroid_sql("duckdb"),
 )
 def q72_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid, one row per (label, dimension) — the A3-style
     'running averages' reduction (reference train.py:52-53) applied to
     vectors. Exact integer sums → deterministic at any parallelism."""
-    return sql_with(spark, sf_dir, _centroid_sql("spark"), dims=_dims_sql("spark"))
+    return sql_with(spark, sf_dir, _centroid_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -355,7 +356,7 @@ def q73_knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # then recompute each cell's mean — the index-build/training step that
 # turns q73's fixed seeds into data-adapted centroids. Fully
 # oracle-checked: squared distances are ORDER-PINNED packed-array folds
-# (fold_l2 — the r7 migration off the DECIMAL(38,12) device), means use
+# (fold_l2, not the DECIMAL(38,12) device), means use
 # the same FLOOR·2^36 integer quantization as q72. Scale shape: the
 # centroid side is 16 packed rows (broadcast-hinted); assignment scores
 # stream the corpus once with zero shuffle before the argmin window;
@@ -367,6 +368,7 @@ def _kmeans_step_sql(dialect: str) -> str:
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
     WITH cells(cell, cvec_id) AS (VALUES {cells}),
+    dims AS ({_dims_sql(dialect)}),
     cente AS (
       SELECT c.cell, e.embedding AS cemb
       FROM cells c JOIN embeddings e ON e.vec_id = c.cvec_id
@@ -395,10 +397,10 @@ def _kmeans_step_sql(dialect: str) -> str:
 
 @query(
     "q74_kmeans_step",
-    oracle=oracle_with(_kmeans_step_sql("duckdb"), dims=_dims_sql("duckdb")),
+    oracle=_kmeans_step_sql("duckdb"),
 )
 def q74_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sql_with(spark, sf_dir, _kmeans_step_sql("spark"), dims=_dims_sql("spark"))
+    return sql_with(spark, sf_dir, _kmeans_step_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -429,8 +431,8 @@ def _pq_dists_ctes(dialect: str, n_codewords: int | None = None) -> str:
         # without them Catalyst broadcast the (corpus x 8-sub) side of
         # the second cross join and streamed the 8-row codeword side —
         # harmless at test scale, a corpus-sized broadcast at 100 TB
-        # (caught replacing the r6 name-allowlist with the structural
-        # bounded-build-side audit in test_plans.py).
+        # (caught by the structural bounded-build-side audit in
+        # test_plans.py).
         hint = "/*+ BROADCAST(s), BROADCAST(c) */ "
         fold = """
              aggregate(
@@ -533,7 +535,7 @@ def _pq_ann_sql(dialect: str) -> str:
       FROM embeddings
     ),
     rescored AS (
-      -- packed order-pinned rescore (r7 migration off the DECIMAL
+      -- packed order-pinned rescore (not the DECIMAL
       -- device): the short list rejoins the corpus by id, one fold per
       -- candidate
       SELECT c.query_id, c.vec_id AS neighbor_id,
@@ -577,15 +579,15 @@ def q76_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reads — only _N_PROBE/_N_CELLS of the index is touched per query);
 # the in-cell scan reads 8-byte codes, not vectors; the only full-vector
 # reads are the OVERFETCH-sized shortlist join at the end. Centroids +
-# codebook + per-query LUTs are tiny broadcasts. FULLY ORACLE-CHECKED
-# since r10 (r9 verdict task 8): the numpy encode path is fold-exact
+# codebook + per-query LUTs are tiny broadcasts. FULLY ORACLE-CHECKED:
+# the numpy encode path is fold-exact
 # (sequential accumulation == the order-pinned SQL folds, bit-for-bit)
 # and ADC sums FLOOR-quantized integer LUTs, so the shortlist — and
 # therefore the exact rescore output — is engine-exact; recall vs the
 # exact q70 baseline stays pinned in tests/test_similarity.py, and q76
 # is the shared-SQL ADC twin.
 #
-# TUNING DIALS (r7 verdict task 6): IVFPQ recall is bought with two
+# TUNING DIALS: IVFPQ recall is bought with two
 # module-level dials (tests sweep them) —
 #   _IVFPQ_OVERFETCH: shortlist size rescored exactly. The sf10 measured
 #     curve (SCALING.md): recall 0.05 @ 40, 0.125 @ 320, 0.275 @ 2560 —
@@ -607,8 +609,8 @@ _IVFPQ_NCODES = _PQ_NCODES
 
 
 def _ivfpq_sql() -> str:
-    """DuckDB oracle replaying the WHOLE q77 flow declaratively (r9
-    verdict task 8 — q77 leaves rows-only): cells + probes from
+    """DuckDB oracle replaying the WHOLE q77 flow declaratively (so q77
+    is value-checked, not rows-only): cells + probes from
     order-pinned cosine folds, PQ codes from order-pinned subvector
     distances, ADC from FLOOR-quantized integer LUT sums
     (order-independent), shortlist by (ad2, vec_id), exact order-pinned
@@ -720,7 +722,7 @@ def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = {
         r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in seed_rows
     }
-    # loud dense-prefix guard (r10 advice): the engine labels cells and
+    # loud dense-prefix guard: the engine labels cells and
     # codes by POSITION among the found seeds while the oracle keeps the
     # ORIGINAL grid indices and inner-joins missing seeds away — the two
     # agree iff the found seeds are a prefix of the requested grid (a
@@ -946,7 +948,7 @@ def _rrf_oracle() -> str:
       FROM embeddings
     ),
     dots AS (
-      -- packed order-pinned fold (r7 migration off the DECIMAL device)
+      -- packed order-pinned fold (not the DECIMAL device)
       SELECT d.vec_id,
              {fold_dot("duckdb", "d.embedding", "q.embedding")} AS dot
       FROM norms d CROSS JOIN (SELECT embedding FROM norms WHERE vec_id = 0) q
@@ -1070,22 +1072,21 @@ def q79_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # artifacts) and the edge set UMAP/HDBSCAN-style structure analyses
 # start from.
 #
-# Scale (the round-5 verdict's weak-#2 fix): round 5 blocked on `label`
-# (10 distinct values in testdata), making pair work O(n^2/10) — a
-# quadratic hidden behind a constant. The blocking key is now the SAME
-# capped-coarse + in-group-fine cell assignment q6b broadcasts
-# (semcells.semantic_cells_df): cell count grows as max(16, n/128), so
-# per-cell population — and therefore per-block pair work — stays ~128
-# vectors INDEPENDENT of corpus size; total pair work is O(n * 128),
-# linear in n. The b-side salt spreads each cell over the cluster
-# instead of one task per cell. The top-k is a per-vector window over
-# the blocked pairs (shuffle keyed by vec_id), and the reciprocity check
-# is a self-join of the (k*n)-row edge list — never of the pair set.
-# The DuckDB oracle replays the IDENTICAL cell assignment via the shared
-# _cells_ctes_sql chain, so the blocked neighbor graph is hash-exact on
-# both engines (cosines are plain float per q6b's contract: rank flips
-# live inside a ~1e-12 sliver this corpus never hits; ties break by
-# partner id identically in both).
+# Scale: blocking on `label` (10 distinct values in testdata) would make
+# pair work O(n^2/10) — a quadratic hidden behind a constant. The
+# blocking key is the SAME capped-coarse + in-group-fine cell assignment
+# q6b broadcasts (semcells.semantic_cells_df): cell count grows as
+# max(16, n/128), so per-cell population — and therefore per-block pair
+# work — stays ~128 vectors INDEPENDENT of corpus size; total pair work
+# is O(n * 128), linear in n. The b-side salt spreads each cell over the
+# cluster instead of one task per cell. The top-k is a per-vector window
+# over the blocked pairs (shuffle keyed by vec_id), and the reciprocity
+# check is a self-join of the (k*n)-row edge list — never of the pair
+# set. The DuckDB oracle replays the IDENTICAL cell assignment via the
+# shared _cells_ctes_sql chain, so the blocked neighbor graph is
+# hash-exact on both engines (cosines are plain float per q6b's
+# contract: rank flips live inside a ~1e-12 sliver this corpus never
+# hits; ties break by partner id identically in both).
 # --------------------------------------------------------------------------
 _MKNN_K = 3
 
@@ -1291,7 +1292,7 @@ _MMR_POOL = 24
 _MMR_K = 10
 _MMR_LAMBDA = "CAST(0.7 AS DOUBLE)"
 _MMR_ONE_MINUS = "CAST(0.3 AS DOUBLE)"
-# Contract for the driver-side greedy (r7 verdict task 5): the collected
+# Contract for the driver-side greedy: the collected
 # shortlist is _N_QUERIES x _MMR_POOL rel rows + _N_QUERIES x _MMR_POOL^2
 # pairwise sims — LINEAR in query count x pool^2, so a future query-set
 # or pool increase grows the driver collect silently. The cap below is
@@ -1309,12 +1310,12 @@ def _mmr_collect_rows() -> int:
     return _N_QUERIES * _MMR_POOL + _N_QUERIES * _MMR_POOL * _MMR_POOL
 
 
-def _mmr_shortlist_sql(dialect: str) -> str:
-    """The distributed part, shared by both engines: per-query
-    top-_MMR_POOL shortlist (rel) and its pairwise sims."""
+def _mmr_shortlist_ctes(dialect: str) -> tuple[str, str]:
+    """The distributed part, shared by both engines: the CTE list of the
+    per-query top-_MMR_POOL shortlist (rel), and the select of its
+    pairwise sims over them."""
     hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
-    return f"""
-    WITH norms AS (
+    ctes = f"""norms AS (
       SELECT vec_id, embedding, SQRT({fold_norm2(dialect, "embedding")}) AS nrm
       FROM embeddings
     ),
@@ -1336,12 +1337,20 @@ def _mmr_shortlist_sql(dialect: str) -> str:
     pemb AS (
       SELECT p.query_id, p.vec_id, p.rel, n.embedding, n.nrm
       FROM pool p JOIN norms n ON n.vec_id = p.vec_id
-    )
-    SELECT a.query_id, a.vec_id AS va, a.rel, b.vec_id AS vb,
+    )"""
+    sims = f"""SELECT a.query_id, a.vec_id AS va, a.rel, b.vec_id AS vb,
            {fold_dot(dialect, "a.embedding", "b.embedding")}
              / (a.nrm * b.nrm) AS sim
     FROM pemb a JOIN pemb b ON b.query_id = a.query_id
-                           AND b.vec_id <> a.vec_id
+                           AND b.vec_id <> a.vec_id"""
+    return ctes, sims
+
+
+def _mmr_shortlist_sql(dialect: str) -> str:
+    ctes, sims = _mmr_shortlist_ctes(dialect)
+    return f"""
+    WITH {ctes}
+    {sims}
     """
 
 
@@ -1391,14 +1400,10 @@ def _mmr_oracle() -> str:
         f"SELECT query_id, {k} AS rank, vec_id, mmr_score FROM sel{k}"
         for k in range(1, _MMR_K + 1)
     )
-    shortlist = _mmr_shortlist_sql("duckdb").strip()
-    assert shortlist.startswith("WITH ")
-    body = shortlist[len("WITH "):]
-    # re-wrap: the shortlist's final SELECT becomes the psim CTE
-    ctes, final_select = body.rsplit(")\n    SELECT", 1)
+    ctes, sims = _mmr_shortlist_ctes("duckdb")
     return f"""
-    WITH {ctes}),
-    psim AS MATERIALIZED (SELECT{final_select}),{",".join(steps)}
+    WITH {ctes},
+    psim AS MATERIALIZED ({sims}),{",".join(steps)}
     SELECT query_id, CAST(rank AS INT) AS rank, vec_id, mmr_score
     FROM ({picks}) allp
     """
@@ -1561,8 +1566,8 @@ def q7h_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compressed index still finding what exact search finds?"). Both arms
 # are fully deterministic — the Hamming arm is pure integer ops and the
 # exact arm is the order-pinned packed-array fold — so unlike the
-# float-ordered ANN rungs (q71/q73, rows-only by necessity; q77 became
-# fold-exact and oracle-checked in r10) this
+# float-ordered ANN rungs (q71/q73, rows-only by necessity; q77 is
+# fold-exact and oracle-checked) this
 # evaluation is itself ORACLE-CHECKED end to end: the whole
 # eval-harness arithmetic is value-verified, and the recall floors the
 # rows-only rungs are tested against locally are exactly this shape.
@@ -1804,7 +1809,7 @@ def q7k_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q7l — PER-DIMENSION VARIANCE PROFILE (round 9): mean and variance of
+# q7l — PER-DIMENSION VARIANCE PROFILE: mean and variance of
 # every embedding dimension in one scan — the PCA/whitening precursor
 # and the index-health probe that catches dead or exploding dimensions
 # before they poison ANN recall (a dimension with near-zero variance
@@ -1812,7 +1817,7 @@ def q7k_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Exactness (the hard-won device): raw float->decimal casts can land on
 # rounding-mode ties across engines (HALF_UP vs half-even — the q75
-# class; the r9 sf10 sweep caught EXACTLY this on this query's first
+# class; an sf10 sweep caught EXACTLY this on this query's first
 # dsum-based draft: float32 lanes are coarse dyadics, maximally
 # midpoint-prone). So the moments accumulate FLOOR(x * 2^30) /
 # FLOOR(x*x * 2^30) exact BIGINTs instead (the q72/q78 quantization:
@@ -1882,8 +1887,8 @@ def q7l_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q7m — GRAPH-ANN (NSW-style neighbor-graph beam search, round 11
-# verdict task 5): the one mainstream ANN family the quantization
+# q7m — GRAPH-ANN (NSW-style neighbor-graph beam search): the one
+# mainstream ANN family the quantization
 # ladder lacked — search by WALKING a bounded-out-degree neighbor graph
 # instead of probing cells (the HNSW/NSW class, public method:
 # Malkov & Yashunin 2016, single-layer variant). The graph is q7c's
@@ -2039,21 +2044,21 @@ def q7m_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
-    # r12 (r11 verdict task 2, A/B in OPTIMIZATION_r12.md): hop-superset
-    # prescore replaces the r11 unrolled per-round rescore. The beam can
-    # only ever visit nodes within _GANN_ROUNDS edge-hops of the seed
-    # set — a reachable set derivable from edge METADATA alone, bounded
-    # by seeds · out_degree^T regardless of corpus size — so ONE corpus
-    # pass (semi-joined down to the reachable set, then scored against
-    # the broadcast query set) replaces the three per-round corpus
-    # rescore joins, and the per-round subtrees bottom out in the
-    # bounded `scored` checkpoint instead of corpus exchanges (r11 plan:
-    # 2167 lines / 134 Exchange mentions, 4.1 MiB task binaries; the
-    # matched-window A/B measured the shapes wall-equal at sf0.1 — the
-    # shared edge build dominates there — and the one-scan shape is the
-    # strictly better scaling term). The r11-rejected per-round
-    # localCheckpoint was slow because each round RE-SHUFFLED the
-    # corpus side; here no round touches the corpus at all.
+    # Hop-superset prescore (A/B in OPTIMIZATION_r12.md) instead of an
+    # unrolled per-round rescore. The beam can only ever visit nodes
+    # within _GANN_ROUNDS edge-hops of the seed set — a reachable set
+    # derivable from edge METADATA alone, bounded by seeds · out_degree^T
+    # regardless of corpus size — so ONE corpus pass (semi-joined down to
+    # the reachable set, then scored against the broadcast query set)
+    # replaces the three per-round corpus rescore joins, and the
+    # per-round subtrees bottom out in the bounded `scored` checkpoint
+    # instead of corpus exchanges (the unrolled plan: 2167 lines / 134
+    # Exchange mentions, 4.1 MiB task binaries; the matched-window A/B
+    # measured the shapes wall-equal at sf0.1 — the shared edge build
+    # dominates there — and the one-scan shape is the strictly better
+    # scaling term). A per-round corpus-side localCheckpoint was measured
+    # slow because each round RE-SHUFFLED the corpus side; here no round
+    # touches the corpus at all.
     seed_rel = spark.sql(
         "SELECT CAST(vec_id AS BIGINT) AS vec_id FROM VALUES "
         + ", ".join(f"({i})" for i in ids)
@@ -2108,7 +2113,8 @@ def q7m_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ≤ queries × _GANN_BEAM rows: checkpointing per round keeps
             # the plan from doubling (cand references beam twice) at the
             # cost of three tiny jobs — matched-window A/B: hop_ckpt
-            # 5.21 vs unrolled 5.25 vs r11 shape 5.25 (min-of-4, quiet)
+            # 5.21 vs unrolled 5.25 vs per-round rescore 5.25 (min-of-4,
+            # quiet)
             .localCheckpoint()
         )
     found = beam.withColumn(
@@ -2149,7 +2155,7 @@ def q7m_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q7n — FARTHEST-FIRST CENTROID INITIALIZATION (round 11): the k-means++
+# q7n — FARTHEST-FIRST CENTROID INITIALIZATION: the k-means++
 # style seeding rung the training ladder lacked — q73/q74 take their
 # seeds from a FIXED id grid, but a production index build initializes
 # centroids from the data (Arthur & Vassilvitskii 2007; the maximin
@@ -2177,7 +2183,9 @@ _FF_K = 8  # centroids to select (seed + 7 maximin rounds)
 _FF_SEED = 8  # first centroid: the q73 seed-grid origin
 
 
-def _farthest_first_sql() -> str:
+def _farthest_first_ctes() -> str:
+    """q7n's maximin chain as a CTE list: m1/p1 .. m7/p7, where p{k} is
+    round k's one-row pick (vec_id, md); qt6's oracle seeds from it."""
     d = "duckdb"
     parts = [
         f"""m1 AS (
@@ -2195,13 +2203,16 @@ def _farthest_first_sql() -> str:
       JOIN embeddings c ON c.vec_id = (SELECT vec_id FROM p{k - 1})
     ),
     p{k} AS (SELECT vec_id, md FROM m{k} ORDER BY md DESC, vec_id LIMIT 1)""")
+    return ",\n    ".join(parts)
+
+
+def _farthest_first_sql() -> str:
     picks = "\n    UNION ALL ".join(
         f"SELECT {k} AS rnd, vec_id, md FROM p{k}"
         for k in range(1, _FF_K)
     )
-    ctes = ",\n    ".join(parts)
     return f"""
-    WITH {ctes}
+    WITH {_farthest_first_ctes()}
     SELECT CAST(rnd AS INT) AS rnd, CAST(vec_id AS BIGINT) AS vec_id,
            CAST(md AS DOUBLE) AS maximin_d2
     FROM (
@@ -2261,7 +2272,7 @@ def q7n_farthest_first_init(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q7o — IVF PROBE-COUNT TUNING CURVE (round 11): the ANN twin of q6k's
+# q7o — IVF PROBE-COUNT TUNING CURVE: the ANN twin of q6k's
 # LSH S-curve calibration — the recall-vs-cost table an operator reads
 # before picking nprobe in production. For each probe budget p in
 # {1, 2, 4, 8, 16}, every query searches only the corpus vectors whose
@@ -2401,7 +2412,7 @@ def q7o_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# qt6 — INDEX-BUILD COMPOSITE (round 11): the end-to-end ANN training
+# qt6 — INDEX-BUILD COMPOSITE: the end-to-end ANN training
 # pipeline in one oracle-checked query — data-adaptive seeding (q7n's
 # farthest-first maximin picks) feeding a Lloyd assignment + quantized
 # centroid recompute (q74's step) over the picked seeds instead of the
@@ -2428,6 +2439,7 @@ def q7o_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _index_build_tail(dialect: str) -> str:
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
+    dims AS ({_dims_sql(dialect)}),
     scente AS (
       SELECT s.cell, e.embedding AS cemb
       FROM seeds s JOIN embeddings e ON e.vec_id = s.svec
@@ -2455,14 +2467,6 @@ def _index_build_tail(dialect: str) -> str:
 
 
 def _index_build_oracle() -> str:
-    d = "duckdb"
-    ff = _farthest_first_sql()
-    # reuse q7n's CTE chain: extract everything between WITH and the
-    # final SELECT (the m1/p1..m7/p7 ledger CTEs)
-    chain = ff.split("WITH ", 1)[1].rsplit("SELECT CAST(rnd AS INT)", 1)[0]
-    chain = chain.rstrip().rstrip("\n")
-    # drop the trailing newline-SELECT remnant: chain ends with the last
-    # p CTE closing paren
     seed_rows = "\n      UNION ALL ".join(
         [f"SELECT 0 AS cell, CAST({_FF_SEED} AS BIGINT) AS svec"]
         + [
@@ -2470,16 +2474,13 @@ def _index_build_oracle() -> str:
             for k in range(1, _FF_K)
         ]
     )
-    return oracle_with(
-        f"""
-    WITH {chain},
+    return f"""
+    WITH {_farthest_first_ctes()},
     seeds AS (
       {seed_rows}
     ),
-    {_index_build_tail(d)}
-    """,
-        dims=_dims_sql(d),
-    )
+    {_index_build_tail("duckdb")}
+    """
 
 
 @query("qt6_index_build", oracle=_index_build_oracle())
@@ -2490,11 +2491,11 @@ def qt6_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH seeds(cell, svec) AS (VALUES {seeds}),
     {_index_build_tail("spark")}
     """
-    return sql_with(spark, sf_dir, body, dims=_dims_sql("spark"))
+    return sql_with(spark, sf_dir, body)
 
 
 # --------------------------------------------------------------------------
-# q7p — SILHOUETTE AUDIT of the IVF cell assignment (round 11): the
+# q7p — SILHOUETTE AUDIT of the IVF cell assignment: the
 # cluster-quality rung the index family lacked — q7k counts cell sizes
 # (balance), q7j tracks centroid drift, but neither says whether the
 # PARTITIONING ITSELF is any good. The (centroid-based) silhouette does:
@@ -2565,14 +2566,14 @@ def _silhouette_sql(dialect: str) -> str:
 @query("q7p_silhouette", oracle=_silhouette_sql("duckdb"))
 def q7p_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    # r11 Spark-side restructure: the rn=1 / rn=2 self-join re-derived
-    # the (corpus x 16 broadcast centroids) distance table + window
-    # twice (plain CTEs inline). The two smallest (d2, cell) pairs per
+    # Spark side: an rn=1 / rn=2 self-join would re-derive the (corpus x
+    # 16 broadcast centroids) distance table + window twice (plain CTEs
+    # inline). The two smallest (d2, cell) pairs per
     # vector are just the first two elements of the 16-element sorted
     # struct array — ONE window-free aggregate pass; array_sort on
     # (d2, cell) structs replays exactly the ROW_NUMBER order, so a/b
-    # and every downstream value are identical (oracle unchanged,
-    # parity-verified).
+    # and every downstream value are identical to the oracle's
+    # self-join form.
     cells = seed_values_sql(_N_CELLS)
     return spark.sql(f"""
     WITH cells(cell, cvec_id) AS (VALUES {cells}),

@@ -352,7 +352,7 @@ def q55_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (lang, source, band) key space saturates (~350 blocks on this corpus
 # shape at any scale), so block POPULATION grows linearly with the
 # corpus and in-block pair work quadratically — measured 412k banded
-# pairs at sf1 -> 39M at sf10 (the r6 verdict's last uncapped
+# pairs at sf1 -> 39M at sf10 (an uncapped
 # quadratic). _Q56_BAND_CAP is the q63-style hot-block guard: each
 # block keeps only its _Q56_BAND_CAP lowest doc_ids (deterministic,
 # replayed verbatim by the oracle's ROW_NUMBER), so total pair work is
@@ -1108,7 +1108,7 @@ def q5g_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shape: positions explode map-side; one shuffle on doc_id for the
 # window + the distinct/rollup — no cross-doc comparison anywhere.
 #
-# r8 restructure (found by the sf10 sweep, the q56 class of finding):
+# Restructured after the sf10 sweep (the q56 class of finding):
 # the original shape computed n_pos with a MAX(i) window and hashed
 # k-grams in the SAME select, so BOTH engines' window operators
 # materialized the exploded rows WITH the full text column attached —
@@ -1158,7 +1158,7 @@ _WIN_W = 4  # winnow window positions
     """,
 )
 def q5h_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11 restructure: the whole winnow is PER-DOCUMENT — k-gram hashes,
+    # The whole winnow is PER-DOCUMENT — k-gram hashes,
     # the w-wide sliding min, the distinct, and the four rollup figures
     # never cross documents — so the explode → window(doc_id) →
     # distinct → groupBy(doc_id) pipeline (two exchanges + a sort of
@@ -1778,7 +1778,7 @@ def q5o_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Spark shape (100 TB): one gram explode (array expression, JVM
 # codegen), then the raw gram text is immediately replaced by a 60-bit
-# md5-derived hash (r7 advisor: a raw-string shuffle key carries the
+# md5-derived hash (a raw-string shuffle key carries the
 # full gram text through both the groupBy and the join — 8-byte longs
 # instead). One groupBy(gram_hash) MIN(doc_id) — partial-aggregated
 # map-side so the shuffle carries one row per DISTINCT gram, not per
@@ -1966,7 +1966,7 @@ def qt5_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q5q — LENGTH-BAND SELECTION PROFILE (round 9): per-source document-
+# q5q — LENGTH-BAND SELECTION PROFILE: per-source document-
 # length quartile bands with exact boundaries — the length-stratified
 # curation policy ("keep the middle two bands, cap the tails") every
 # pretraining mix applies before token budgeting. Rank-based banding
@@ -2005,7 +2005,7 @@ def q5q_length_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q5s — ZIPF RANK-FREQUENCY PROFILE (round 10): the corpus-quality
+# q5s — ZIPF RANK-FREQUENCY PROFILE: the corpus-quality
 # diagnostic every tokenizer/mixture audit starts from — the top-64
 # global token frequencies with each rank's Zipf ratio f(1)/f(r)
 # (natural text tracks ~r^-1; boilerplate/dup-heavy corpora flatten, and
@@ -2065,7 +2065,7 @@ def q5s_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q5t — BPE tokenizer APPLICATION (round 11, verdict task 4): the rung
+# q5t — BPE tokenizer APPLICATION: the rung
 # above q5n (merge statistics) and below q5i (vocab coverage) that a
 # training-data pipeline actually ships — ENCODE the corpus with the
 # merge table the statistics derive. The merge table is the top-K
@@ -2084,7 +2084,7 @@ def q5s_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokens per whitespace token). n_unit_chars re-derives the char total
 # from the FINAL units, so a merge that lost or duplicated characters
 # cannot hash-match (conservation is part of the oracle row, and
-# tests/test_round11_ops.py pins the detokenize round-trip itself).
+# tests/test_text.py pins the detokenize round-trip itself).
 #
 # Exactness: everything is integer counting over exact string folds —
 # both engines fold unit lists left-to-right with identical CASE
@@ -2284,7 +2284,7 @@ def q5t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q5u — HASHED-FEATURE LINEAR QUALITY CLASSIFIER (round 11): model-BASED
+# q5u — HASHED-FEATURE LINEAR QUALITY CLASSIFIER: model-BASED
 # quality filtering, the rung above q51's hand-written heuristics — the
 # fastText-style linear scorer (hashed bag-of-words -> weight lookup ->
 # margin) that production pipelines (CCNet, fastText lang/quality
@@ -2377,7 +2377,7 @@ def q5u_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q5w — CHI-SQUARE SOURCE-DRIFT AUDIT (round 11): the distribution-drift
+# q5w — CHI-SQUARE SOURCE-DRIFT AUDIT: the distribution-drift
 # monitor for the curation mix — per source, the chi-square statistic of
 # its document-length histogram (fixed 64-char-wide bands) against the
 # corpus-wide band distribution. A source whose length profile diverges
@@ -2445,7 +2445,7 @@ def q5w_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# qt7 — TOKENIZE-THEN-PACK COMPOSITE (round 11): the job a trainer
+# qt7 — TOKENIZE-THEN-PACK COMPOSITE: the job a trainer
 # actually submits — encode the corpus with the q5n-derived BPE merge
 # table (q5t's per-doc counts, reused verbatim) and lay the ENCODED
 # token stream out into fixed 512-token training sequences (q5d's

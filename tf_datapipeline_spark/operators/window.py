@@ -297,10 +297,10 @@ def q26_ntile_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q27 — grouped quantiles: exact interpolated percentiles per segment.
-# Round 9 retires the last ROUND(6) tolerance device (the q1j pattern —
-# its instance of this device class DID diverge at 1.5M rows/group before
-# the r8 fix): instead of comparing two engines' native interpolation
-# kernels at 6dp, BOTH engines compute the identical exact quantity.
+# No ROUND(6) tolerance device (the q1j pattern — its instance of this
+# device class DID diverge at 1.5M rows/group): instead of comparing
+# two engines' native interpolation kernels at 6dp, BOTH engines
+# compute the identical exact quantity.
 # A linearly-interpolated quantile at q = k/20 over n order statistics is
 #     pos = (n-1)·k/20,  lo = ⌊pos⌋,  rem = ((n-1)·k) mod 20,
 #     Q   = (x[lo]·(20-rem) + x[lo+1]·rem) / 20
@@ -509,9 +509,9 @@ def q29_cumulative_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q2a/q2b/q2c — WINDOW-FAMILY VALUE DIGESTS (round 9, r8 verdict task 3).
+# q2a/q2b/q2c — WINDOW-FAMILY VALUE DIGESTS.
 # q21/q25/q28 emit one row per input row, so a full-output compare at
-# sf10 measures the harness, not the engine (35 GB RSS observed in r8).
+# sf10 measures the harness, not the engine (35 GB RSS observed).
 # These wrappers compute a BOUNDED per-group digest of the full output —
 # identically in SQL on both engines (the oracle wraps the original
 # oracle as a subquery; the Spark side digests the engine DataFrame
@@ -613,7 +613,7 @@ def q2c_window_digest_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q2d — MOVING MEDIAN (round 10): the order-statistic window the family
+# q2d — MOVING MEDIAN: the order-statistic window the family
 # lacked — per customer, the median of the trailing 5 order totals
 # (ROWS 4 PRECEDING..CURRENT), the robust trend smoother a mean-based
 # rolling average can't give (one fat-finger order shifts a mean for 5

@@ -43,92 +43,61 @@ _OPERATOR_MODULES = [
 
 _loaded = False
 
-# ---------------------------------------------------------------------------
-# Driver-gate ordering. The round driver checks the FIRST 50 queries in
-# `queries()` iteration order. Rounds 1-8 rotated this window a few slots
-# at a time (the per-slot rotation rationale lives in git history of this
-# file); that left 63 oracle-checked queries with sf0.01+sf1 local
-# evidence but NO driver row ever. Round 9 switches to a ROUND-ROBIN
-# refresh schedule, enforced by tools/gate_rotation.py: each round the
-# window turns over (near-)completely to the stalest oracle-checked
-# queries — never-gated first, then oldest last-green round — so every
-# one of the ~215 oracle-checked queries earns a driver row within a
-# 5-round cycle (215 / 50 ≈ 4.3). Rotated-out queries keep their green
-# history AND their local oracle check (the slow pytest tier replays
-# every registered oracle each round — that is the compensating control
-# between driver rows).
-#
-# Only the current window is kept here; past rounds' windows (GATE_ORDER_R8
-# through GATE_ORDER_R11) live in this file's git history and in the
-# CORRECTNESS_r*.json artifacts.
-# ---------------------------------------------------------------------------
-# Permanent anchor slots (r9 advice): high-risk composites that exercise
-# many operator layers in one query, re-gated EVERY round so an
-# engine-side bug in shared machinery can't ride out a fully-rotated
-# window between driver rows. The remaining WINDOW - len(GATE_ANCHORS)
-# slots rotate round-robin (tools/gate_rotation.py).
-# ---------------------------------------------------------------------------
-GATE_ANCHORS = [
-    "qp1_feed_pipeline",  # shuffle/split/batch/epoch composite (R1-B3)
-    "qt0_text_profile",  # text-analysis composite over documents
-    "qt1_prep_pipeline",  # prep + exact-dedup composite
-    "qt4_stream_ingest",  # streaming quality gate + dual anti-join dedup
-    "qt5_corpus_health",  # cross-family corpus monitor composite
+# The driver value-checks the first 50 queries of `queries()`: a fixed
+# window that leads with five composites spanning many operator layers,
+# so a bug in shared machinery shows in every run.
+GATE_ORDER = [
+    "qp1_feed_pipeline",
+    "qt0_text_profile",
+    "qt1_prep_pipeline",
+    "qt4_stream_ingest",
+    "qt5_corpus_health",
+    "q4zm_funnel_latency",
+    "q4zo_periodicity",
+    "q4zp_cusum_changepoint",
+    "q5t_bpe_encode",
+    "q5u_quality_classifier",
+    "q5w_chi2_drift",
+    "qt7_tokenize_pack",
+    "q7m_graph_ann",
+    "q7n_farthest_first_init",
+    "q7o_ivf_probe_curve",
+    "qt6_index_build",
+    "q7p_silhouette",
+    "q6k_lsh_calibration",
+    "q8p_image_phash",
+    "q4zn_stream_funnel_latency",
+    "q9o_hilbert_layout",
+    "q9p_lww_upsert",
+    "q9q_time_travel",
+    "q58_vocabulary",
+    "q61_dedup_exact_hash",
+    "q66_embedding_near_dup",
+    "q72_label_centroids",
+    "q81_pixel_stats",
+    "q89_resize_nearest",
+    "q32_split_exact_head",
+    "q4u_stream_stream_join",
+    "q4v_range_join_salted",
+    "q5h_winnow_fingerprint",
+    "q64_simhash",
+    "q65_ngram_jaccard",
+    "q86_audio_rms",
+    "q8c_bbox_overlay",
+    "q8d_jpeg_decode",
+    "q1i_heavy_hitters",
+    "q1w_approx_quantiles",
+    "q22_topk_per_group",
+    "q42_sessionization",
+    "q4i_range_frame",
+    "q55_tfidf",
+    "q5g_doc_chunking",
+    "q68_semantic_dedup",
+    "q69_substring_dup",
+    "q70_knn_bruteforce",
+    "q8e_format_sniff",
+    "q5c_contamination",
 ]
-
-# Round-12 window: the 5 anchors, then the 18 never-gated round-11
-# operators (headed by the two r11-era never-gated ops, per the r11
-# verdict), then the stalest of the staleness backlog — the block
-# `tools/gate_rotation.py propose --round 12` emits verbatim.
-GATE_ORDER_R12 = GATE_ANCHORS + [
-    "q4zm_funnel_latency",  # never
-    "q4zo_periodicity",  # never
-    "q4zp_cusum_changepoint",  # never
-    "q5t_bpe_encode",  # never
-    "q5u_quality_classifier",  # never
-    "q5w_chi2_drift",  # never
-    "qt7_tokenize_pack",  # never
-    "q7m_graph_ann",  # never
-    "q7n_farthest_first_init",  # never
-    "q7o_ivf_probe_curve",  # never
-    "qt6_index_build",  # never
-    "q7p_silhouette",  # never
-    "q6k_lsh_calibration",  # never
-    "q8p_image_phash",  # never
-    "q4zn_stream_funnel_latency",  # never
-    "q9o_hilbert_layout",  # never
-    "q9p_lww_upsert",  # never
-    "q9q_time_travel",  # never
-    "q58_vocabulary",  # stale 9
-    "q61_dedup_exact_hash",  # stale 9
-    "q66_embedding_near_dup",  # stale 9
-    "q72_label_centroids",  # stale 9
-    "q81_pixel_stats",  # stale 9
-    "q89_resize_nearest",  # stale 9
-    "q32_split_exact_head",  # stale 8
-    "q4u_stream_stream_join",  # stale 8
-    "q4v_range_join_salted",  # stale 8
-    "q5h_winnow_fingerprint",  # stale 8
-    "q64_simhash",  # stale 8
-    "q65_ngram_jaccard",  # stale 8
-    "q86_audio_rms",  # stale 8
-    "q8c_bbox_overlay",  # stale 8
-    "q8d_jpeg_decode",  # stale 8
-    "q1i_heavy_hitters",  # stale 7
-    "q1w_approx_quantiles",  # stale 7
-    "q22_topk_per_group",  # stale 7
-    "q42_sessionization",  # stale 7
-    "q4i_range_frame",  # stale 7
-    "q55_tfidf",  # stale 7
-    "q5g_doc_chunking",  # stale 7
-    "q68_semantic_dedup",  # stale 7
-    "q69_substring_dup",  # stale 7
-    "q70_knn_bruteforce",  # stale 7
-    "q8e_format_sniff",  # stale 7
-    "q5c_contamination",  # stale 6
-]
-GATE_ORDER = GATE_ORDER_R12
-
 
 
 def _gate_sorted(d: dict) -> dict:

@@ -59,7 +59,7 @@ def get_spark(app_name: str = "tf_datapipeline_spark") -> SparkSession:
     """
     from pyspark import SparkContext
 
-    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    heap = driver_heap()
     builder = engine_builder(app_name, heap)
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         spark = builder.getOrCreate()
@@ -67,6 +67,17 @@ def get_spark(app_name: str = "tf_datapipeline_spark") -> SparkSession:
         spark = _start_shared(builder, heap)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_heap() -> str:
+    """The driver heap: SPARK_GRAFT_DRIVER_MEM as given, else half the
+    host's physical memory and never more than 48g, so a caller that
+    sets no heap cannot start a driver that outgrows its host."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 48 << 30) >> 20}m"
 
 
 def engine_builder(app_name: str, heap: str) -> SparkSession.Builder:

@@ -32,8 +32,9 @@ def write_bucketed(
 def bucketed_orders_lineitem(
     spark: SparkSession, sf_dir: str, n_buckets: int = 8
 ) -> tuple[str, str]:
-    """Materialize orders+lineitem bucketed on the join key; returns the
-    table names. Idempotent per (session, sf_dir)."""
+    """Write orders+lineitem bucketed on the join key; returns the table
+    names. Every call rebuilds both tables, so each call pays its own
+    build and reads the current source rows."""
     from tf_datapipeline_spark.catalog import load_table
 
     import hashlib
@@ -43,21 +44,20 @@ def bucketed_orders_lineitem(
     # stable across processes (Python's str hash is seed-randomized)
     suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
     t_orders, t_lineitem = f"orders_b{suffix}", f"lineitem_b{suffix}"
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
 
-    def ensure(table: str, df_fn) -> None:
-        if spark.catalog.tableExists(table):
-            return
+    def build(table: str, df: DataFrame) -> None:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
         # a fresh session's catalog doesn't know tables a previous process
         # wrote; saveAsTable refuses to adopt the orphaned location, so
-        # clear it and rebuild (the build is deterministic)
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+        # clear it too
         shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
-        write_bucketed(df_fn(), table, "o_orderkey", n_buckets)
+        write_bucketed(df, table, "o_orderkey", n_buckets)
 
-    ensure(t_orders, lambda: load_table(spark, sf_dir, "orders"))
-    ensure(
+    build(t_orders, load_table(spark, sf_dir, "orders"))
+    build(
         t_lineitem,
-        lambda: load_table(spark, sf_dir, "lineitem").withColumnRenamed(
+        load_table(spark, sf_dir, "lineitem").withColumnRenamed(
             "l_orderkey", "o_orderkey"
         ),
     )

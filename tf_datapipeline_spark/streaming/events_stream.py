@@ -979,8 +979,8 @@ def _stream_ingest_body() -> str:
       -- each subquery carries a pure band-key EQUALITY the oracle engine
       -- can hash-join (matching the engine's two separate anti-joins).
       -- The original single OR-join condition defeated hash planning and
-      -- degenerated to a ~5e9-pair nested loop at sf10 (observed >80 min
-      -- before the r9 rewrite; the split runs the same semantics in
+      -- degenerated to a ~5e9-pair nested loop at sf10 (observed >80 min;
+      -- the split runs the same semantics in
       -- seconds — admission iff NO band-sharing corpus doc has est>=0.5,
       -- identical under the split by De Morgan).
       AND NOT EXISTS (
@@ -1148,7 +1148,7 @@ def q4b_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # argmin sorts the per-cell distance folds — ties break to the LOWEST
 # cell, mirroring the oracle's ORDER BY d2, cell. Distances are
 # ORDER-PINNED double folds (the q66 device — migrated from
-# DECIMAL(38,12) after the round-6 sf1 sweep caught the decimal cast's
+# DECIMAL(38,12) after an sf1 parity sweep caught the decimal cast's
 # cross-engine mis-rounding here), so the whole routing path is
 # hash-exact despite being an ANN component.
 # --------------------------------------------------------------------------
@@ -1277,7 +1277,7 @@ def q4zc_stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zk — STREAMING FUNNEL twin (round 10): q4zi's ordered view -> click
+# q4zk — STREAMING FUNNEL twin: q4zi's ordered view -> click
 # -> purchase ladder maintained INCREMENTALLY with per-user state
 # (applyInPandasWithState) instead of a batch re-scan — the live
 # conversion dashboard over an append-only event log. State per user is
@@ -1299,7 +1299,7 @@ def _fold_funnel_batch(pdf_iter, state):
     drift between the two streaming twins. Returns the updated tuple;
     the caller persists it and shapes its own emission.
 
-    r11: vectorized. The ordered scan (sort by (ts, event_id), advance
+    Vectorized: the ordered scan (sort by (ts, event_id), advance
     on the first qualifying event) reduces to three strict-min picks —
     t1 = MIN ts over step-1 events, t2 = MIN ts over step-2 events with
     ts > t1, t3 likewise after t2 — because the machine compares
@@ -1323,9 +1323,9 @@ def _fold_funnel_batch(pdf_iter, state):
     s1, s2, s3 = _FUNNEL_STEPS
 
     def _first_after(step: str, lo):
-        # r12 (r11 advice): mask out null timestamps — numpy min over a
-        # set containing NaT returns NaT, whereas the pre-r11 sorted
-        # scan (NaT sorts last) picked the first VALID qualifying event.
+        # mask out null timestamps — numpy min over a set containing NaT
+        # returns NaT, whereas the ordered scan's semantics (NaT sorts
+        # last) pick the first VALID qualifying event.
         m = (et_a == step) & ~np.isnat(ts_a)
         if lo is not None:
             m &= ts_a > np.datetime64(lo)
@@ -1391,7 +1391,7 @@ def q4zk_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = per_user.groupBy("user_id").agg(
         F.max("step_reached").alias("step_reached")
     )
-    # r11: ONE conditional aggregate + explode (batch q4zi's exact
+    # ONE conditional aggregate + explode (batch q4zi's exact
     # shape) instead of three filter+count arms unioned — the memory
     # sink was re-aggregated once per step (3 jobs; 3 scans at scale).
     counts = final.agg(
@@ -1422,7 +1422,7 @@ def q4zk_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q4zn — STREAMING FUNNEL LATENCY twin (round 11): q4zm's step-latency
+# q4zn — STREAMING FUNNEL LATENCY twin: q4zm's step-latency
 # distribution maintained from the SAME per-user first-touch state
 # machine as q4zk — the live "how long does conversion take" dashboard
 # next to the live ladder. The state function shares q4zk's fold

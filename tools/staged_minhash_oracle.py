@@ -1,5 +1,5 @@
-"""Staged DuckDB oracle for the two streaming MinHash composites (r8
-verdict task 6): q6c_stream_incremental_dedup and qt4_stream_ingest.
+"""Staged DuckDB oracle for the two streaming MinHash composites:
+q6c_stream_incremental_dedup and qt4_stream_ingest.
 
 Their registered oracles derive the corpus MinHash signature as a
 shared CTE (`catalog.oracle_with`), so at sf10 each run re-derives the

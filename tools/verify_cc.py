@@ -2,7 +2,7 @@
 where the registered DuckDB oracle is infeasible.
 
 q67's oracle is a recursive-CTE REACHABILITY fixpoint; its materialized
-(src, dst) set is quadratic in component size, and the round-6 sf10
+(src, dst) set is quadratic in component size, and an sf10
 attempt filled the disk with DuckDB spill before completing. Rather
 than weaken the oracle, big-scale verification decomposes the claim:
 
