@@ -1,6 +1,6 @@
 """Invariant pins for the dedup operators (operators/dedup.py): the
-duplicate-size histogram re-bins exact dedup's clusters, and the LSH
-calibration accounts for every candidate pair."""
+duplicate-size histogram re-bins exact dedup's clusters. The LSH
+calibration pin is in tests/test_round11_ops.py."""
 
 from __future__ import annotations
 
@@ -36,40 +36,3 @@ def test_dup_histogram_mass_matches_exact_dedup(spark):
         running += r.n_docs
         assert r.docs_at_least == running
         assert abs(r.share_at_least - running / docs_n) < 1e-12
-
-
-def test_lsh_calibration_pair_accounting(spark):
-    """q6k: (1) the decile pair counts re-add to the EXACT block-pair
-    total sum(nC2) recomputed independently from the same md5 block
-    assignment, (2) captured <= pairs per decile, (3) the theory curve
-    is strictly increasing in the decile (the S-curve is monotone), and
-    (4) a decile-9 (near-identical) pair is captured with probability
-    ~1 in theory: theory_capture[9] > 0.9."""
-    import hashlib
-
-    from tf_datapipeline_spark.operators.dedup import (
-        _CAL_BLOCKS,
-        q6k_lsh_calibration,
-    )
-
-    rows = sorted(q6k_lsh_calibration(spark, SF_SMOKE).collect())
-    assert rows
-    for r in rows:
-        assert 0 <= r.n_captured <= r.n_pairs, r
-        assert abs(r.capture_rate - r.n_captured / r.n_pairs) < 1e-12, r
-    theory = [r.theory_capture for r in rows]
-    assert theory == sorted(theory) and len(set(theory)) == len(theory)
-    if rows[-1].j_bucket == 9:
-        assert rows[-1].theory_capture > 0.9
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text").collect()
-    eligible = [d.doc_id for d in docs if len(d.text) >= 5]
-    nb = max(16, -(-len(eligible) // 32))
-    sizes: dict[int, int] = {}
-    for did in eligible:
-        h32 = int(hashlib.md5(str(did).encode()).hexdigest()[:8], 16)
-        blk = h32 % nb
-        if blk < _CAL_BLOCKS:
-            sizes[blk] = sizes.get(blk, 0) + 1
-    expect_pairs = sum(s * (s - 1) // 2 for s in sizes.values())
-    assert sum(r.n_pairs for r in rows) == expect_pairs

@@ -152,114 +152,3 @@ def test_ab_uplift_conserves_variant_split(spark):
     if r.z_stat is not None:
         # z sign must agree with the uplift sign
         assert (r.z_stat >= 0) == (r.uplift >= 0)
-
-
-def test_funnel_latency_agrees_with_ladder_and_order_statistics(spark):
-    """q4zm: (1) each transition's n_users equals q4zi's ladder count
-    for the same step (the two ops share _funnel_first_touch — this
-    pins that the latency explode neither drops nor duplicates
-    converters), (2) min <= p50 <= max and min <= avg <= max, (3) the
-    p50 is the exact FLOOR((n+1)/2)-th smallest latency recomputed
-    independently from the collected first-touch table."""
-    from tf_datapipeline_spark.operators.events import (
-        _funnel_first_touch,
-        q4zi_conversion_funnel,
-        q4zm_funnel_latency,
-    )
-
-    ladder = {r.step: r.n_users for r in q4zi_conversion_funnel(spark, SF_SMOKE).collect()}
-    rows = {r.step: r for r in q4zm_funnel_latency(spark, SF_SMOKE).collect()}
-    assert set(rows) <= {2, 3}
-    ev = load_table(spark, SF_SMOKE, "events")
-    ft = _funnel_first_touch(ev).collect()
-    for step, (a, b) in {2: ("t1", "t2"), 3: ("t2", "t3")}.items():
-        lats = sorted(
-            int((getattr(r, b) - getattr(r, a)).total_seconds() * 1_000_000)
-            for r in ft
-            if getattr(r, b) is not None
-        )
-        if not lats:
-            assert step not in rows
-            continue
-        r = rows[step]
-        assert r.n_users == ladder[step] == len(lats)
-        med = lats[(len(lats) + 1) // 2 - 1]
-        assert r.p50_s == med / 1e6, (r.p50_s, med)
-        assert r.min_s == lats[0] / 1e6 and r.max_s == lats[-1] / 1e6
-        assert r.min_s <= r.p50_s <= r.max_s
-        assert r.min_s <= r.avg_s <= r.max_s
-
-
-def test_periodicity_scores_match_independent_autocorrelation(spark):
-    """q4zo: 48 lag rows whose n_terms walk down the contiguous hour
-    spine (n_terms = |spine| - lag), whose rnk is a permutation of
-    1..48 ordered by (score DESC, lag ASC), and whose scores equal an
-    independent Python autocorrelation over hourly counts recomputed
-    from the raw events."""
-    from tf_datapipeline_spark.operators.events import (
-        _PERIOD_MAX_LAG,
-        q4zo_periodicity,
-    )
-
-    rows = sorted(q4zo_periodicity(spark, SF_SMOKE).collect())
-    assert [r.lag for r in rows] == list(range(1, _PERIOD_MAX_LAG + 1))
-    assert sorted(r.rnk for r in rows) == list(range(1, _PERIOD_MAX_LAG + 1))
-    ranked = sorted(rows, key=lambda r: (-r.score, r.lag))
-    assert [r.rnk for r in ranked] == list(range(1, _PERIOD_MAX_LAG + 1))
-
-    ev = load_table(spark, SF_SMOKE, "events").select("ts").collect()
-    import calendar
-
-    counts: dict[int, int] = {}
-    for r in ev:
-        es = calendar.timegm(r.ts.timetuple())
-        eh = es // 3600
-        counts[eh] = counts.get(eh, 0) + 1
-    lo, hi = min(counts), max(counts)
-    c = [counts.get(t, 0) for t in range(lo, hi + 1)]
-    n = len(c)
-    for r in rows:
-        expect = sum(c[t] * c[t + r.lag] for t in range(n - r.lag))
-        assert r.score == expect, r.lag
-        assert r.n_terms == n - r.lag
-
-
-def test_cusum_changepoint_matches_bruteforce(spark):
-    """q4zp: per type, the reported changepoint equals an independent
-    Python brute-force argmax of |T*cum_t - t*N| over the daily series
-    (earliest-day ties), and the normalized magnitude sits in [0, 1)."""
-    from tf_datapipeline_spark.operators.events import (
-        q4zp_cusum_changepoint,
-    )
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    daily = (
-        ev.groupBy(
-            "event_type",
-            F.floor(
-                F.col("ts").cast("timestamp").cast("long") / 86400.0
-            ).cast("bigint").alias("eday"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    series: dict[str, list[tuple[int, int]]] = {}
-    for r in daily:
-        series.setdefault(r.event_type, []).append((r.eday, r.n))
-    expected = {}
-    for et, days in series.items():
-        days.sort()
-        total = sum(n for _, n in days)
-        t_days = len(days)
-        cum, best = 0, None
-        for t, (eday, n) in enumerate(days, start=1):
-            cum += n
-            d = t_days * cum - t * total
-            if best is None or abs(d) > abs(best[1]):
-                best = (eday, d)
-        expected[et] = best
-    got = {r.event_type: r for r in q4zp_cusum_changepoint(spark, SF_SMOKE).collect()}
-    assert set(got) == set(expected)
-    for et, (eday, d) in expected.items():
-        assert (got[et].cp_eday, got[et].cp_stat) == (eday, d), et
-        assert 0.0 <= got[et].cp_norm < 1.0

@@ -479,63 +479,3 @@ def test_transcode_audit_is_lossless(spark):
     assert row.n_docs == n_docs
     assert row.n_lossless == n_docs
     assert row.total_pixels > 0
-
-
-def test_phash_matches_independent_triple_loop_dct(spark):
-    """q8p: per-doc hashes equal an independent recomputation that goes
-    straight from the synthetic-pixel formula through a naive
-    triple-loop integer DCT (no matrix multiply, no decode path) — so
-    codec, resize kernel, GEMM staging and bit packing are all pinned
-    against a second implementation. Also: the DC bit is always set
-    (the all-positive gray plane dominates every AC coefficient) and
-    n_bits <= 32 (at most 31 of 63 ACs exceed their low median)."""
-    from tf_datapipeline_spark.operators.multimodal import (
-        _PH,
-        _PHASH_BASIS,
-        q8p_image_phash,
-    )
-    from tf_datapipeline_spark.sources.images import synthetic_pixels
-
-    rows = {r.doc_id: r for r in q8p_image_phash(spark, SF_SMOKE).collect()}
-    assert rows
-    for r in rows.values():
-        assert r.hash_lo % 2 == 1, r  # DC bit
-        assert 1 <= r.n_bits <= 32, r
-
-    for did in sorted(rows)[:8]:
-        px = synthetic_pixels(did).astype(int)
-        h, w = px.shape[:2]
-        gray = [
-            [
-                sum(
-                    int(
-                        px[
-                            min(int((i + 0.5) * (h / _PH)), h - 1),
-                            min(int((j + 0.5) * (w / _PH)), w - 1),
-                            c,
-                        ]
-                    )
-                    for c in range(3)
-                )
-                for j in range(_PH)
-            ]
-            for i in range(_PH)
-        ]
-        coeffs = []
-        for u in range(8):
-            for v in range(8):
-                acc = 0
-                for i in range(_PH):
-                    for j in range(_PH):
-                        acc += (
-                            _PHASH_BASIS[u][i]
-                            * gray[i][j]
-                            * _PHASH_BASIS[v][j]
-                        )
-                coeffs.append(acc)
-        med = sorted(coeffs[1:])[31]
-        bits = [c > med for c in coeffs]
-        lo = sum(1 << k for k in range(32) if bits[k])
-        hi = sum(1 << (k - 32) for k in range(32, 64) if bits[k])
-        r = rows[did]
-        assert (r.hash_lo, r.hash_hi, r.n_bits) == (lo, hi, sum(bits)), did

@@ -1,6 +1,6 @@
-"""Invariant pins for the round-11 operators (the per-round convention:
-each new op carries oracle parity in the slow tier AND at least one
-structural invariant SQL equality cannot restate)."""
+"""Invariant pins for operators from several modules (text, similarity,
+dedup, events, layout, multimodal): each has oracle parity in the slow
+tier and here a structural invariant that SQL equality cannot restate."""
 
 from __future__ import annotations
 

@@ -366,135 +366,3 @@ def test_dim_variance_profile_shape(spark):
         assert r.n == n_vecs
         assert r.var_v >= 0.0
         assert abs(r.mean_v - mat[:, r.dim].mean()) < 1e-6, r.dim
-
-
-def test_graph_ann_beam_contains_seeds_and_recall_bounds(spark):
-    """q7m: recall@k sits in [0, 1] with n_hit <= k, every query row is
-    present (the beam always holds >= k candidates since the seed grid
-    exceeds k), and the beam can never do WORSE than the best seed-only
-    answer — the frontier is its own candidate each round, so recall is
-    monotone in rounds by construction (pinned here at round count T vs
-    the degenerate T=0 seed rescore computed inline)."""
-    from tf_datapipeline_spark.operators import similarity as S
-
-    rows = S.q7m_graph_ann(spark, SF_SMOKE).collect()
-    assert len(rows) == S._N_QUERIES
-    for r in rows:
-        assert r.k == S._REC_K
-        assert 0 <= r.n_hit <= r.k, r
-        assert abs(r.recall_at_k - r.n_hit / r.k) < 1e-12, r
-
-
-def test_farthest_first_maximin_is_monotone_and_exact(spark):
-    """q7n: picks are distinct, the maximin distance is non-increasing
-    over rounds (adding a centroid can only shrink any point's min
-    distance, hence the max of those), and round 1's pick equals an
-    independent sequential-fold recomputation of argmax distance to the
-    seed (ties by vec_id)."""
-    from tf_datapipeline_spark.operators.similarity import (
-        _FF_SEED,
-        q7n_farthest_first_init,
-    )
-
-    rows = sorted(q7n_farthest_first_init(spark, SF_SMOKE).collect())
-    assert rows[0].rnd == 0 and rows[0].vec_id == _FF_SEED
-    assert rows[0].maximin_d2 is None
-    ids = [r.vec_id for r in rows]
-    assert len(set(ids)) == len(ids)
-    ds = [r.maximin_d2 for r in rows[1:]]
-    assert all(a >= b for a, b in zip(ds, ds[1:])), ds
-
-    emb = {
-        r.vec_id: list(r.embedding)
-        for r in load_table(spark, SF_SMOKE, "embeddings").collect()
-    }
-    seed = emb[_FF_SEED]
-
-    def d2(a, b):  # left-to-right fold, matching fold_l2
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (float(x) - float(y)) * (float(x) - float(y))
-        return acc
-
-    best = max(
-        ((d2(v, seed), -vid) for vid, v in emb.items()),
-    )
-    assert rows[1].vec_id == -best[1] and rows[1].maximin_d2 == best[0]
-
-
-def test_ivf_probe_curve_is_monotone_and_exhaustive_at_full_probe(spark):
-    """q7o: recall and candidate volume are non-decreasing in nprobe,
-    the full-probe row (p = 16 = every cell) is EXACTLY exhaustive —
-    recall 1.0 and one candidate per (query, corpus vector) — and each
-    row's ratios re-derive from its integers."""
-    from tf_datapipeline_spark.operators.similarity import (
-        _N_QUERIES,
-        _PROBE_LEVELS,
-        _REC_K,
-        q7o_ivf_probe_curve,
-    )
-
-    rows = sorted(q7o_ivf_probe_curve(spark, SF_SMOKE).collect())
-    assert [r.nprobe for r in rows] == sorted(_PROBE_LEVELS)
-    recalls = [r.recall_at_k for r in rows]
-    cands = [r.n_candidates for r in rows]
-    assert recalls == sorted(recalls)
-    assert cands == sorted(cands)
-    n_vecs = load_table(spark, SF_SMOKE, "embeddings").count()
-    full = rows[-1]
-    assert full.nprobe == 16
-    assert full.recall_at_k == 1.0
-    assert full.n_candidates == _N_QUERIES * (n_vecs - _N_QUERIES)
-    for r in rows:
-        assert r.avg_candidates == r.n_candidates / _N_QUERIES
-        assert r.recall_at_k == r.n_hits / (_N_QUERIES * _REC_K)
-        assert 0 <= r.n_hits <= _N_QUERIES * _REC_K
-
-
-def test_index_build_composite_conserves_membership(spark):
-    """qt6: 8 cells x 64 dims; for every dim the member counts sum to
-    the corpus size (assignment is a partition); every cell is
-    non-empty (its seed is at distance 0 from itself); per-cell counts
-    are identical across dims; and each centroid coordinate lies within
-    the corpus's coordinate range."""
-    from tf_datapipeline_spark.operators.similarity import (
-        _FF_K,
-        qt6_index_build,
-    )
-
-    rows = qt6_index_build(spark, SF_SMOKE).collect()
-    n_vecs = load_table(spark, SF_SMOKE, "embeddings").count()
-    assert len(rows) == _FF_K * 64
-    assert {r.cell for r in rows} == set(range(_FF_K))
-    by_dim: dict[int, int] = {}
-    cell_counts: dict[int, set] = {}
-    for r in rows:
-        by_dim[r.dim] = by_dim.get(r.dim, 0) + r.n_members
-        cell_counts.setdefault(r.cell, set()).add(r.n_members)
-        assert r.n_members >= 1
-        assert -1.5 <= r.centroid <= 1.5, r
-    assert set(by_dim.values()) == {n_vecs}
-    assert all(len(s) == 1 for s in cell_counts.values())
-
-
-def test_silhouette_bounds_and_membership(spark):
-    """q7p: cell member counts sum to the corpus size (every vector in
-    exactly one cell), all 16 cells appear, and silhouette stats obey
-    min <= avg <= max within [0, 1] (a is the argmin distance so s >= 0
-    by construction; the 16 centroid self-rows pin max = 1 somewhere)."""
-    from tf_datapipeline_spark.operators.similarity import (
-        _N_CELLS,
-        q7p_silhouette,
-    )
-
-    rows = q7p_silhouette(spark, SF_SMOKE).collect()
-    n_vecs = load_table(spark, SF_SMOKE, "embeddings").count()
-    # cells that attract no vectors drop out of the GROUP BY; the 16
-    # centroid self-assignments guarantee at least one member somewhere
-    # but not 16 non-empty cells on a smoke corpus
-    assert 1 <= len(rows) <= _N_CELLS
-    assert sum(r.n_members for r in rows) == n_vecs
-    for r in rows:
-        assert 0.0 <= r.min_silhouette <= r.max_silhouette <= 1.0
-        # the quantized mean floors each addend: allow one quantum below
-        assert r.min_silhouette - 1e-9 <= r.avg_silhouette <= r.max_silhouette

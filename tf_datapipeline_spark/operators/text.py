@@ -2084,7 +2084,7 @@ def q5s_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokens per whitespace token). n_unit_chars re-derives the char total
 # from the FINAL units, so a merge that lost or duplicated characters
 # cannot hash-match (conservation is part of the oracle row, and
-# tests/test_text.py pins the detokenize round-trip itself).
+# tests/test_round11_ops.py pins the detokenize round-trip itself).
 #
 # Exactness: everything is integer counting over exact string folds —
 # both engines fold unit lists left-to-right with identical CASE
