@@ -8,7 +8,7 @@ agree bit-for-bit; a soft tolerance here would hide mismatches the
 driver would flag.
 
 The TYPE check exists because the driver's value hash is type-sensitive:
-round 2 lost seven gate rows to DuckDB `SUM(BIGINT) -> HUGEINT` /
+an earlier gate run lost seven rows to DuckDB `SUM(BIGINT) -> HUGEINT` /
 `MIN(expr) -> BIGINT` aggregates hashed against Spark bigint/int results
 whose VALUES were bit-identical. Every oracle must therefore CAST its
 aggregates to the width the Spark side declares; this harness maps

@@ -1,7 +1,7 @@
 """Independent verification of the eval preprocessing chain (M9 +
 bilinear M4) — the q83g analog of tests/jpeg_independent.py.
 
-The round-5 advisor's finding: q83g's golden oracle literals were
+Why: q83g's golden oracle literals were
 generated by the implementation under test, so the gate freezes current
 behavior rather than verifying it. This module derives the expected
 values from the SPEC alone — tf.image.central_crop (keep the central

@@ -1,6 +1,6 @@
 """Negative-epoch (pre-1970) parity for the epoch-keyed event queries.
 
-Pins the floor-division convention the r9 advice flagged: DuckDB's `//`
+Pins the floor-division convention: DuckDB's `//`
 TRUNCATES toward zero (-86401 // 86400 = -1), while the engine keys
 days/weeks with F.floor (-2). The oracles therefore spell every such
 division as CAST(FLOOR(x / d) AS BIGINT); this test would catch either
@@ -30,7 +30,7 @@ from tf_datapipeline_spark import registry
 
 # Queries keyed on floor(epoch/86400) / floor(eday/7): the q4zb device.
 # q4zc (streaming) shares _seasonal_keyed AND the oracle keyed CTE
-# (events.seasonal_keyed_ctes, one string since r10) — included anyway
+# (events.seasonal_keyed_ctes, one string) — included anyway
 # so the parity holds even if the sharing is ever undone; q4zg/q4zh
 # subtract epochs with no division and are unaffected.
 AFFECTED = [

@@ -36,8 +36,8 @@ def test_every_query_runs(spark):
 
 def test_harness_is_type_sensitive(spark):
     """The local gate must catch DuckDB width divergence (HUGEINT from an
-    uncast SUM vs Spark bigint) — the class that cost round 2 seven
-    driver rows on bit-identical values. compare() has to fail an
+    uncast SUM vs Spark bigint) — the class that once cost seven driver
+    rows on bit-identical values. compare() has to fail an
     intentionally uncast SUM twin BEFORE any value comparison."""
     df = spark.range(3).selectExpr("sum(id) AS s")
     with pytest.raises(AssertionError, match="type-width"):
@@ -48,7 +48,7 @@ def test_events_ts_is_ntz(spark):
     """events.ts must load as TIMESTAMP_NTZ — the exact type DuckDB reads
     for the driver testdata's naive parquet timestamps — regardless of the
     storage era (nanos-bigint legacy vs plain microseconds). Guards the
-    round-2 regression where a type drift broke 6 gate rows + 12 tests."""
+    regression where a type drift broke 6 gate rows + 12 tests."""
     from pyspark.sql.types import TimestampNTZType
 
     from tf_datapipeline_spark.catalog import load_table
@@ -60,7 +60,7 @@ def test_events_ts_is_ntz(spark):
 def test_batch_equals_streaming_windows(spark):
     """Batch q40 and streaming q47 share one oracle; they must also agree
     with each other row-for-row AND schema-for-schema — a divergence here
-    is the silent event-time corruption class (round 2's stream reader
+    is the silent event-time corruption class (a stream reader once
     divided microseconds by 1000 and only the oracle caught it)."""
     from tf_datapipeline_spark.operators.events import q40_tumbling_window
     from tf_datapipeline_spark.streaming.events_stream import (
@@ -84,7 +84,7 @@ def test_entry_smoke(spark):
 
 
 def test_events_nanos_era_compat(spark, tmp_path):
-    """Round 1's testdata stored events.ts as TIMESTAMP(NANOS); round 2's
+    """The first testdata stored events.ts as TIMESTAMP(NANOS); a later
     regeneration switched to plain microseconds and broke 6 gate rows.
     Both batch and streaming readers must keep handling BOTH eras: this
     synthesizes a nanos-era events table and checks the catalog

@@ -212,8 +212,8 @@ def test_no_accidental_cross_products(spark):
     bounded by the query text — verified per-NLJ by
     plans.inspect.unbounded_nlj_builds (literal relation, one-row scalar,
     keyless aggregate, literal-id-filtered query set, or a join that
-    key-filters through one of those). This replaced the r2-r6 per-query
-    name allowlist after the r6 advisor pointed out a blanket exemption
+    key-filters through one of those). This replaced an earlier per-query
+    name allowlist because a blanket exemption
     would let a future edit plan a genuine corpus x corpus nested loop
     silently — and the structural audit promptly caught q75/q76
     broadcasting the (corpus x 8-sub) side while streaming the 8-row
@@ -252,8 +252,8 @@ def test_no_accidental_cross_products(spark):
         "q5w_chi2_drift",
     }
     # Accumulate violations across ALL queries before asserting — a single
-    # failure must not shadow the rest of the sweep (round-5 lesson: an
-    # in-loop assert left q7c/q9a/q9b unaudited).
+    # failure must not shadow the rest of the sweep (an in-loop assert
+    # once left q7c/q9a/q9b unaudited).
     violations: list[tuple[str, object]] = []
     for name, fn in sorted(registry.queries().items()):
         if "stream" in name:
@@ -356,9 +356,9 @@ def test_collect_sites_are_bounded_metadata_only():
         # winner row crosses to the driver)
         ("operators/similarity.py", "_farthest_first_picks"),
         # <= _COARSE_CAP coarse seed rows — the filter itself caps the row
-        # count at a corpus-INDEPENDENT constant (r5 fix; the fine split
-        # happens executor-side). Pinned corpus-independent below. Moved
-        # to semcells.semantic_cells_df in r6 (shared by q6b and q7c).
+        # count at a corpus-INDEPENDENT constant (the fine split happens
+        # executor-side). Pinned corpus-independent below. Lives in
+        # semcells.semantic_cells_df (shared by q6b and q7c).
         ("operators/semcells.py", "semantic_cells_df"),
         ("streaming/events_stream.py", "q7a_stream_sq_ingest"),  # 64 dim-range rows
         # query-set-bounded shortlist: _N_QUERIES x _MMR_POOL rel rows +
@@ -415,10 +415,6 @@ def test_vector_folds_live_in_one_module():
         # (file, enclosing function): why it is not a vectors.py fold
         # integer ADC sum over the quantized LUT (order-independent)
         ("operators/similarity.py", "q77_knn_ivfpq"),
-        # 8-dim subvector distances over element_at slices of the vectors
-        ("operators/similarity.py", "_pq_dists_ctes"),
-        # fold over the collected per-label centroid dims, in pos order
-        ("operators/similarity.py", "_centroid_drift_sql"),
         # PageRank contributions summed in src order
         ("operators/dedup.py", "q6g_pagerank"),
         ("operators/dedup.py", "_pagerank_oracle"),
@@ -473,6 +469,31 @@ def test_vector_folds_live_in_one_module():
     assert allowed <= found, f"stale allowlist entries: {sorted(allowed - found)}"
 
 
+def test_dialect_spellings_live_in_one_module():
+    """Source-level audit: a shared Spark/DuckDB builder writes one text,
+    and a spelling the two engines do not share comes from
+    functions/dialect.py (or, for the order-pinned folds and the md5 hex
+    window, functions/vectors.py and functions/texthash.py). A
+    `dialect ==` comparison anywhere else fails here."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "tf_datapipeline_spark"
+    allowed = {"functions/dialect.py", "functions/vectors.py", "functions/texthash.py"}
+    compare = re.compile(r"\bdialect\s*==")
+    found = sorted(
+        f"{rel}:{i}"
+        for py in pkg.rglob("*.py")
+        if (rel := str(py.relative_to(pkg))) not in allowed
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if compare.search(line)
+    )
+    assert not found, (
+        "dialect branches outside functions/dialect.py (spell it once, or "
+        f"add the differing construct there): {found}"
+    )
+
+
 def test_temp_views_are_bound_only_in_catalog():
     """Source-level audit: only catalog.py binds a temp view. A shared
     table goes through catalog.sql_with, which drops every name it binds,
@@ -511,7 +532,7 @@ def test_registry_build_leaves_only_catalog_views(spark):
 
 def test_mmr_driver_greedy_regime_guard(spark):
     """q7f's driver-side greedy is allowlisted ONLY under the documented
-    shortlist bound (r7 verdict task 5): _N_QUERIES * _MMR_POOL * (1 +
+    shortlist bound: _N_QUERIES * _MMR_POOL * (1 +
     _MMR_POOL) rows must stay under _MMR_COLLECT_CAP, and a configuration
     past the ceiling must fail fast with the regime message instead of
     silently growing the collect."""
@@ -535,8 +556,8 @@ def test_mmr_driver_greedy_regime_guard(spark):
 
 
 def test_semantic_centroid_collect_is_corpus_independent():
-    """The r4 verdict's top finding: q6b collected max(16, n/128) centroid
-    rows — LINEAR in the corpus — to the driver. The r5 shape caps the
+    """q6b once collected max(16, n/128) centroid rows — LINEAR in the
+    corpus — to the driver. The current shape caps the
     driver-visible coarse level at _COARSE_CAP and splits the residual
     executor-side; this pins that the cap holds at ANY corpus size (the
     allowlist entry above relies on it), that the target cell count

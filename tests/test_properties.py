@@ -516,7 +516,7 @@ def test_refresh_table_reads_a_table_grown_in_place(spark, tmp_path):
 
 
 def test_register_views_recovers_dropped_view(spark):
-    """r12 (r11 advice): the register_views same-dir skip must notice a
+    """The register_views same-dir skip must notice a
     dropped temp view and re-register instead of silently returning."""
     import pyarrow.parquet as pq
 
@@ -605,7 +605,7 @@ def test_events_raw_ts_type_from_footer(spark, tmp_path, unit, tz, raw):
 
 
 def test_approx_top_k_certification_regime(spark):
-    """Found by the round-5 sf1 parity sweep: with capacity below the
+    """Found by an sf1 parity sweep: with capacity below the
     distinct-key count, the frequent-items sketch reports only items it
     can CERTIFY as heavy, and on near-uniform data that set is
     legitimately empty — q1i's exact oracle therefore requires
@@ -631,7 +631,7 @@ def test_approx_top_k_certification_regime(spark):
 
 
 def test_heavy_hitters_regime_guard_fires(spark):
-    """q1i's capacity guard (round 6): when distinct keys exceed
+    """q1i's capacity guard: when distinct keys exceed
     _TOPK_TRACKED the query must fail FAST with a capacity message, not
     hand the gate an opaque empty-vs-top10 value mismatch. Shrink the
     capacity under the sf0.001 distinct-part-key count and expect the
@@ -655,7 +655,7 @@ def test_semantic_cells_fine_path_oracle_exact(spark):
     ~_COARSE_CAP*128 vectors, so the sf0.001/sf0.01 gates never execute
     it. Force it locally: shrink _COARSE_CAP to 4 (500 vecs -> target 16,
     k1 4, n_fine 4), rebuild the dynamic-cell oracle with the SAME
-    patched cap, and require q6b hash-exact — this pins the r6 two-pass
+    patched cap, and require q6b hash-exact — this pins the two-pass
     fine split (narrow-window stride picks + cogrouped block assignment)
     to the oracle's grp/fcfg/fcent replay at test scale."""
     from tests.conftest import SF_ORACLE
@@ -833,7 +833,7 @@ def test_zorder_layout_prunes_both_dimensions(spark):
 
 
 def test_sketch_rollup_envelope(spark):
-    """The q9b contract after the round-6 sf1 finding: both the merged
+    """The q9b contract after an sf1 finding: both the merged
     (union-of-hourly) and direct daily estimates sit inside the HLL
     error envelope of the exact count, for every day. (The old
     merged==DIRECT assertion was a sparse-regime artifact; no
@@ -849,7 +849,7 @@ def test_sketch_rollup_envelope(spark):
 
 
 def test_duckdb_decimal_cast_misrounds_near_half_ulp(spark):
-    """The round-6 sf1 finding behind q66's order-pinned-double rework,
+    """The sf1 finding behind q66's order-pinned-double rework,
     pinned: DuckDB's double->DECIMAL cast is NOT correctly rounded near
     half-ulp boundaries (it scales by 10^s in double and half-even
     rounds), while Spark's BigDecimal cast rounds the exact decimal
@@ -923,7 +923,7 @@ def test_kmv_rollup_exact_mergeability_nonvacuous(spark):
 
 
 def test_sketch_union_no_exact_invariant_in_transition(spark):
-    """The round-6 sf1 finding, pinned at test scale: replicate the sf1
+    """The q9b sf1 finding, pinned at test scale: replicate the sf1
     day shape (1338 distinct users over 24 hourly sketches — past the
     lgK=12 sparse band where estimates are exact counts) and document
     that NO estimate-level equality survives there: merged vs direct
@@ -997,8 +997,8 @@ def test_spectro_fft_contracts_hold_over_full_waveform_space():
     """The three q8m oracle contracts (dominant bin == f, dc == sum(v),
     Parseval round == integer energy) over every distinct waveform the
     corpus can produce: (f, window_idx) in 13 x 10 — n_windows = 4 +
-    doc_id % 7 reaches 10, so window_idx reaches 9 (the r6 advisor
-    caught this sweep stopping at 7 and leaving the amp-79/76/73
+    doc_id % 7 reaches 10, so window_idx reaches 9 (this sweep once
+    stopped at 7 and leaving the amp-79/76/73
     waveforms untested; the amp stays positive through widx 9). A
     corpus doc only realizes window_idx < its own n_windows, but the
     waveform function is pure so the full grid is checkable. Also pins
@@ -1782,7 +1782,7 @@ def test_media_audit_agrees_with_sniff_and_probe(spark):
 
 
 def test_double_to_int_cast_semantics_differ_across_engines(spark):
-    """Pin the r10-caught engine trap behind q2d's index arithmetic:
+    """Pin the engine trap behind q2d's index arithmetic:
     DuckDB's double->int CAST ROUNDS (1.5 -> 2) while Spark's TRUNCATES
     (1.5 -> 1) — so any shared SQL that casts a fractional quotient to
     INT silently diverges. The engine convention (q2d, the floor-device

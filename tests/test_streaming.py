@@ -296,7 +296,7 @@ def _write_clickview(path: str, rows: list[tuple[int, int, str, int]]) -> None:
 
 
 def test_outer_join_null_emission_invariant_to_batch_count(spark, tmp_path):
-    """q4b's class (r4 verdict task 7): stream-stream LEFT OUTER interval
+    """q4b's class: stream-stream LEFT OUTER interval
     join with the min-of-both-sides watermark NULL emission — the
     subtlest rule in the streaming surface — must not depend on how the
     input is micro-batched. One-batch and three-batch (maxFilesPerTrigger
@@ -392,10 +392,10 @@ def test_outer_join_null_emission_invariant_to_batch_count(spark, tmp_path):
 
 
 def test_stateless_ingest_antijoin_invariant_to_batch_count(spark, tmp_path):
-    """qt4's class (r4 verdict task 7): the streaming ingest composite is
+    """qt4's class: the streaming ingest composite is
     a stateless quality gate + anti-join against a STATIC dedup index,
     so its accepted set must be exactly batching-independent — each row's
-    verdict depends on (row, static index) alone. Drive the same shape
+    outcome depends on (row, static index) alone. Drive the same shape
     (quality filter + band-key anti-join) over one file and over three
     files with maxFilesPerTrigger=1 and pin equal row sets."""
     docs = [
@@ -475,7 +475,7 @@ def _write_ohlc_events(path: str, rows: list[tuple[int, int, str, float]]) -> No
 
 
 def test_ohlc_bars_invariant_to_batch_count(spark, tmp_path):
-    """q4o's class (r5 verdict task 8): watermarked min_by/max_by OHLC
+    """q4o's class: watermarked min_by/max_by OHLC
     aggregation in append mode must emit identical bars whether the
     input arrives in one batch or file-by-file. The split is adversarial
     for the open/close state merge: the same minute's rows land in TWO
@@ -560,7 +560,7 @@ def test_ohlc_bars_invariant_to_batch_count(spark, tmp_path):
 
 
 def test_stateless_stream_twins_invariant_to_batch_count(spark, tmp_path):
-    """q7a/q7b/q8j's class (r5 verdict task 8): stateless stream-static
+    """q7a/q7b/q8j's class: stateless stream-static
     row-local transforms — int8 SQ encode against a static (mn, mx)
     index, IVF cell assign against static centroids, and the Arrow-
     batched image decode probe — must be exactly batching-independent.
@@ -662,7 +662,7 @@ def _write_funnel_events(path: str, rows: list[tuple[int, int, int, str]]) -> No
 
 
 def test_stream_funnel_invariant_to_batch_count(spark, tmp_path):
-    """q4zk's class (r10 verdict task 3): the applyInPandasWithState
+    """q4zk's class: the applyInPandasWithState
     first-touch funnel must reach the same per-user step whether input
     arrives in one batch or file-by-file (maxFilesPerTrigger=1, >= 3
     data batches), matching the batch-SQL ladder semantics. The split is
@@ -850,7 +850,7 @@ def test_stream_funnel_latency_state_invariant_to_batch_count(spark, tmp_path):
 
 
 def test_funnel_fold_skips_null_timestamps():
-    """r12 (r11 advice): a null ts inside a batch must not freeze a
+    """A null ts inside a batch must not freeze a
     funnel slot to NaT — numpy min over a set containing NaT is NaT,
     whereas the pre-vectorization sorted scan (NaT sorts last) picked
     the first VALID qualifying event. The fold must match the old scan."""

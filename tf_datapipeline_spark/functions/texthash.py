@@ -73,18 +73,9 @@ def sql_minhash_perm(h_expr: str, a: int, b: int) -> str:
     return f"(({a} * ({h_expr} % {MERSENNE}) + {b}) % {MERSENNE})"
 
 
-def sql_shl1(bit: str, dialect: str) -> str:
-    """BIGINT 1 << bit. Spark spells it shiftleft(); DuckDB <<."""
-    if dialect == "spark":
-        return f"shiftleft(CAST(1 AS BIGINT), CAST({bit} AS INT))"
+def sql_shl1(bit: str) -> str:
+    """BIGINT 1 << bit (Spark's shiftleft, which both engines parse as <<)."""
     return f"(CAST(1 AS BIGINT) << CAST({bit} AS INT))"
-
-
-def sql_bxor(a: str, b: str, dialect: str) -> str:
-    """Bitwise xor of two integers. Spark spells it ^; DuckDB xor()."""
-    if dialect == "spark":
-        return f"({a} ^ {b})"
-    return f"xor({a}, {b})"
 
 
 # Bloom filter geometry: m bits (prime, so the double-hash probe sequence

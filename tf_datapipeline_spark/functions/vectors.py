@@ -17,7 +17,9 @@ One order, three spellings:
 
 - Column forms ``norm2``, ``dot``, ``l2`` for DataFrame code;
 - SQL text ``fold_norm2``, ``fold_dot``, ``fold_l2`` for the ``"spark"``
-  and ``"duckdb"`` dialects;
+  and ``"duckdb"`` dialects, with ``fold_l2_slice`` (a subvector's
+  distance) and ``fold_sum_ordered`` (a group's values summed in a
+  given order) in the same order;
 - ``seq_norm2`` and ``seq_dot`` for numpy, row-wise over a matrix.
 
 tests/test_similarity.py::test_vector_folds_are_bit_identical pins the
@@ -30,6 +32,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from tf_datapipeline_spark.functions import dialect as D
 
 
 def norm2(arr: Column | str) -> Column:
@@ -125,3 +129,27 @@ def seq_dot(mat: np.ndarray, v: np.ndarray) -> np.ndarray:
     for i in range(mat.shape[1]):
         acc = acc + mat[:, i] * v[i]
     return acc
+
+
+def fold_l2_slice(dialect: str, a: str, b: str, start: str, n: int) -> str:
+    """Squared L2 distance of the `n`-element slices of arrays `a` and
+    `b` after the 0-based offset `start`, in :func:`fold_l2`'s order."""
+    x, y = (D.element_at(v, f"{start} + i", dialect) for v in (a, b))
+    diff = f"i -> CAST({x} AS DOUBLE) - CAST({y} AS DOUBLE)"
+    if dialect == "spark":
+        sq = f"transform(transform(sequence(1, {n}), {diff}), d -> d * d)"
+        return f"aggregate({sq}, CAST(0 AS DOUBLE), (a, b) -> a + b)"
+    sq = f"list_transform(list_transform(generate_series(1, {n}), {diff}), d -> d * d)"
+    return f"list_reduce({sq}, (a, b) -> a + b)"
+
+
+def fold_sum_ordered(dialect: str, expr: str, order: str) -> str:
+    """Aggregate: the sum of the group's DOUBLE `expr` values, folded left
+    to right in `order` (a column unique within the group)."""
+    if dialect == "spark":
+        return (
+            "aggregate(transform(array_sort(collect_list("
+            f"named_struct('p', {order}, 'v', {expr}))), x -> x.v), "
+            "CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
+        )
+    return f"list_reduce(list({expr} ORDER BY {order}), (acc, t) -> acc + t)"

@@ -39,6 +39,7 @@ from tf_datapipeline_spark.catalog import (
     sql_with,
 )
 from tf_datapipeline_spark.functions import vectors as V
+from tf_datapipeline_spark.functions import dialect as D
 from tf_datapipeline_spark.functions.texthash import (
     BLOOM_K,
     BLOOM_M,
@@ -108,25 +109,29 @@ def q61_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Shared SQL fragments (dialect = "spark" | "duckdb"). The only dialect
-# differences are array-explosion syntax and bit-shift spelling; the hash
-# arithmetic is byte-identical.
+# Shared SQL fragments (dialect = "spark" | "duckdb"): one text per
+# builder, with the spellings the engines do not share taken from
+# functions/dialect.py and the hash arithmetic from functions/texthash.py.
 # --------------------------------------------------------------------------
-def _sql_shingles(dialect: str, distinct: bool = True, src: str = "documents") -> str:
-    """CTE body producing (doc_id, h) — hashed 5-char shingles of the
-    `src` relation. The md5 digest is projected once in an inner SELECT;
-    the 8-digit decode references that column (not 8 separate md5
-    calls)."""
-    if dialect == "spark":
-        pos = "explode(sequence(1, length(text) - 4)) AS pos"
-    else:
-        pos = "unnest(generate_series(1, length(text) - 4)) AS pos"
+def _sql_shingles(
+    dialect: str,
+    distinct: bool = True,
+    src: str = "documents",
+    key: str = "doc_id",
+    width: int = 8,
+) -> str:
+    """CTE body producing (`key`, h) — the `width`-hex-digit hashes of the
+    5-char shingles of the `src` relation: the one shingle stream of the
+    MinHash family (key doc_id) and the KMV source sketch (key source,
+    15 digits). The md5 digest is projected once in an inner SELECT;
+    the digit decode references that column (not `width` md5 calls)."""
     d = "DISTINCT" if distinct else ""
+    pos = D.explode_series(1, "length(text) - 4", dialect)
     return f"""
-      SELECT {d} doc_id, {sql_md5_window("md5s", dialect)} AS h
+      SELECT {d} {key}, {sql_md5_window("md5s", dialect, width=width)} AS h
       FROM (
-        SELECT doc_id, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
-        FROM (SELECT doc_id, text, {pos}
+        SELECT {key}, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
+        FROM (SELECT {key}, text, {pos} AS pos
               FROM {src} WHERE length(text) >= 5)
       )
     """
@@ -137,29 +142,27 @@ def _sql_shingles(dialect: str, distinct: bool = True, src: str = "documents") -
 # would let min-of-N bench rows time a cached read instead of the build
 # they claim to measure, and would serve stale rows after an in-place
 # table rewrite.
-def _sql_signature(dialect: str = "duckdb", src: str = "documents") -> str:
-    """MinHash signature aggregation. MIN over a multiset equals MIN over
-    the set, so the Spark side aggregates the RAW shingle stream — the
-    map-side partial MIN collapses each partition to one row per doc
-    before the shuffle, skipping the DISTINCT's full 1-row-per-shingle
-    exchange entirely (the dominant cost at corpus scale). The oracle
-    reads the distinct `shingles` CTE: same values either way. `src` is
-    the Spark-side documents relation."""
+def _sql_signature(shingles: str) -> str:
+    """MinHash signature aggregation over the (doc_id, h) relation
+    `shingles`. MIN over a multiset equals MIN over the set, so the Spark
+    side aggregates the RAW shingle stream — the map-side partial MIN
+    collapses each partition to one row per doc before the shuffle,
+    skipping the DISTINCT's full 1-row-per-shingle exchange entirely
+    (the dominant cost at corpus scale). The oracle reads the distinct
+    `shingles` CTE: same values either way."""
     mins = ",\n             ".join(
         f"MIN({sql_minhash_perm('h', a, b)}) AS m{i}"
         for i, (a, b) in enumerate(_PARAMS)
     )
-    sh = (
-        f"({_sql_shingles('spark', distinct=False, src=src)})"
-        if dialect == "spark"
-        else "shingles"
-    )
-    return f"SELECT doc_id,\n             {mins}\n      FROM {sh} GROUP BY doc_id"
+    return f"SELECT doc_id,\n             {mins}\n      FROM {shingles} GROUP BY doc_id"
 
 
 # The oracles' shared shingle and signature tables (catalog.oracle_with);
 # the Spark side checkpoints `sig` itself (_materialize_sig).
-_SIG_CTES = {"shingles": _sql_shingles("duckdb"), "sig": _sql_signature()}
+_SIG_CTES = {
+    "shingles": _sql_shingles("duckdb"),
+    "sig": _sql_signature("shingles"),
+}
 
 
 def _materialize_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,7 +175,8 @@ def _materialize_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE core when the local corpus is a single parquet file —
     # measured 2.6 s → 0.85 s at sf0.1 (OPTIMIZATION_r12.md)
     src = docs_scan_source(spark, sf_dir)
-    return spark.sql(_sql_signature("spark", src)).localCheckpoint()
+    shingles = f"({_sql_shingles('spark', distinct=False, src=src)})"
+    return spark.sql(_sql_signature(shingles)).localCheckpoint()
 
 
 @query("q62_minhash_signature", oracle=oracle_with("SELECT * FROM sig", **_SIG_CTES))
@@ -372,20 +376,15 @@ def q63_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_sql(dialect: str, src: str = "documents") -> str:
-    if dialect == "spark":
-        tok = "explode(split(trim(text), '\\\\s+')) AS term"
-        bit = "shiftright(h, {b}) & 1"
-    else:
-        tok = "unnest(regexp_split_to_array(trim(text), '\\s+')) AS term"
-        bit = "(h >> {b}) & 1"
     bit_terms = " + ".join(
-        f"(CASE WHEN SUM(CASE WHEN {bit.format(b=b)} = 1 THEN 1 ELSE -1 END) > 0 "
+        f"(CASE WHEN SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
         f"THEN {2 ** b} ELSE 0 END)"
         for b in range(_SIMHASH_BITS)
     )
     return f"""
     WITH toks AS (
-      SELECT doc_id, {tok} FROM {src}
+      SELECT doc_id, {D.explode(D.split_ws('trim(text)', dialect), dialect)} AS term
+      FROM {src}
     ), th AS (
       SELECT doc_id, {sql_hash32("term", dialect)} AS h FROM toks
     )
@@ -511,7 +510,7 @@ def q65_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _embedding_neardup_sql(dialect: str) -> str:
+def _embedding_neardup_sql() -> str:
     # DuckDB oracle, ALSO two-phase: the original single-phase
     # exploded form built the full ~n²/2 x 64 pair-dim intermediate into
     # an ~n²/2-group decimal aggregation — tractable at sf0.1, but the
@@ -521,7 +520,6 @@ def _embedding_neardup_sql(dialect: str) -> str:
     # cosine clears 0.4 can be dropped.
     #
     # The exact arm is the order-pinned fold of functions/vectors.py.
-    del dialect  # single-dialect oracle; Spark side is DataFrame code
     return f"""
     WITH cand AS (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -559,7 +557,7 @@ _Q66_CAND_CAP = 8_000_000  # max candidate pairs broadcast (~128 MB); above
 # this the exact arm switches to shuffle joins (see the regime guard)
 
 
-@query("q66_embedding_near_dup", oracle=_embedding_neardup_sql("duckdb"))
+@query("q66_embedding_near_dup", oracle=_embedding_neardup_sql())
 def q66_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs — the exact BRUTE-FORCE baseline
     (quadratic pair enumeration by contract; q71/q8i are the bucketed
@@ -1474,7 +1472,7 @@ def _bloom_body(dialect: str) -> str:
     ),
     filter_words AS (
       SELECT CAST(FLOOR(pos / {BLOOM_WORD}.0) AS INT) AS word_idx,
-             BIT_OR({sql_shl1(f"pos % {BLOOM_WORD}", dialect)}) AS bits
+             BIT_OR({sql_shl1(f"pos % {BLOOM_WORD}")}) AS bits
       FROM cpos GROUP BY 1
     ),
     delta AS (
@@ -1489,7 +1487,7 @@ def _bloom_body(dialect: str) -> str:
     probe AS (
       SELECT d.doc_id,
              MIN(CASE WHEN (COALESCE(f.bits, 0)
-                            & {sql_shl1(f"d.pos % {BLOOM_WORD}", dialect)}) <> 0
+                            & {sql_shl1(f"d.pos % {BLOOM_WORD}")}) <> 0
                       THEN 1 ELSE 0 END) AS maybe_dup
       FROM dpos d
       LEFT JOIN filter_words f
@@ -1761,20 +1759,8 @@ def _kmv_sketch_sql(dialect: str, src: str = "documents") -> str:
     """The shared table `sk`, the corpus-proportional part: per-source
     bottom-k shingle-hash sketch (k x N_sources rows out) over the `src`
     relation, read by `srcs` and both pair-join arms."""
-    if dialect == "spark":
-        pos = "explode(sequence(1, length(text) - 4)) AS pos"
-    else:
-        pos = "unnest(generate_series(1, length(text) - 4)) AS pos"
-    h = sql_md5_window("md5s", dialect, width=15)
     return f"""
-    WITH sh AS (
-      SELECT DISTINCT source, {h} AS h
-      FROM (
-        SELECT source, md5(substr(text, CAST(pos AS INT), 5)) AS md5s
-        FROM (SELECT source, text, {pos}
-              FROM {src} WHERE length(text) >= 5)
-      )
-    )
+    WITH sh AS ({_sql_shingles(dialect, src=src, key="source", width=15)})
     SELECT source, h FROM (
       SELECT source, h,
              ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rk
@@ -1976,7 +1962,6 @@ _CAL_BLOCKS = 64  # sampled blocks of ~32 docs -> <= ~2k docs, ~32k pairs
 
 def _cal_docs_sql(dialect: str) -> str:
     """CTE chain `nblk, cal_docs`: the sampled docs and their blocks."""
-    str_t = "STRING" if dialect == "spark" else "VARCHAR"
     return f"""nblk AS (
       SELECT GREATEST(CAST(16 AS BIGINT),
                       CAST(CEIL(COUNT(*) / CAST(32.0 AS DOUBLE)) AS BIGINT))
@@ -1988,7 +1973,7 @@ def _cal_docs_sql(dialect: str) -> str:
         SELECT t.doc_id,
                {sql_md5_window("t.md5s", dialect)} % nblk.nb
                  AS blk
-        FROM (SELECT doc_id, md5(CAST(doc_id AS {str_t})) AS md5s
+        FROM (SELECT doc_id, md5(CAST(doc_id AS STRING)) AS md5s
               FROM documents WHERE length(text) >= 5) t
         CROSS JOIN nblk
       ) keyed WHERE blk < {_CAL_BLOCKS}
@@ -2007,34 +1992,21 @@ def _cal_pairs_sql(dialect: str) -> str:
     """
 
 
-def _lsh_calibration_body(dialect: str) -> str:
-    n_bands = _K // _BAND
-    band_eq = " OR ".join(
-        "("
-        + " AND ".join(
-            f"ga.m{i} = gb.m{i}" for i in range(b * _BAND, (b + 1) * _BAND)
-        )
-        + ")"
-        for b in range(n_bands)
-    )
-    one = "CAST(1.0 AS DOUBLE)"
-    sm = (
-        f"((CAST(j_bucket AS DOUBLE) + CAST(0.5 AS DOUBLE))"
-        f" / CAST(10.0 AS DOUBLE))"
-    )
-    p_band = " * ".join([sm] * _BAND)
-    if dialect == "spark":
-        # The q65 set idiom (guide §2.4): per-doc shingle SETS
-        # (unordered collect_set arrays) are the shared table `cal_sets`;
-        # |A∩B| is then one codegen array_intersect per pair
-        # instead of the shingle self-join + two COUNT(*) arms (n_common
-        # and sz are the same integers either way: sets are distinct,
-        # |A∩B| is |A∩B|). The oracle keeps the portable shingle-join
-        # form below.
-        scored = f"""scored AS (
+_CAL_BAND_EQ = " OR ".join(
+    "("
+    + " AND ".join(f"ga.m{i} = gb.m{i}" for i in range(b * _BAND, (b + 1) * _BAND))
+    + ")"
+    for b in range(_K // _BAND)
+)
+# The q65 set idiom (guide §2.4), Spark's `scored`: per-doc shingle SETS
+# (unordered collect_set arrays) are the shared table `cal_sets`; |A∩B|
+# is then one codegen array_intersect per pair instead of the shingle
+# self-join + two COUNT(*) arms (n_common and sz are the same integers
+# either way: sets are distinct, |A∩B| is |A∩B|).
+_CAL_SCORED_SPARK = f"""scored AS (
       SELECT CAST(ic.n_common AS DOUBLE)
                / (ic.sz_a + ic.sz_b - ic.n_common) AS jaccard,
-             CASE WHEN {band_eq} THEN 1 ELSE 0 END AS captured
+             CASE WHEN {_CAL_BAND_EQ} THEN 1 ELSE 0 END AS captured
       FROM (
         SELECT p.doc_a, p.doc_b,
                CAST(size(array_intersect(sa.hs, sb.hs)) AS BIGINT)
@@ -2047,8 +2019,8 @@ def _lsh_calibration_body(dialect: str) -> str:
       JOIN sig ga ON ga.doc_id = ic.doc_a
       JOIN sig gb ON gb.doc_id = ic.doc_b
     )"""
-    else:
-        scored = f"""inter AS (
+# The oracle's `scored`: the portable shingle-join form.
+_CAL_SCORED_ORACLE = f"""inter AS (
       SELECT p.doc_a, p.doc_b, COUNT(*) AS n_common
       FROM cal_pairs p
       JOIN shingles sa ON sa.doc_id = p.doc_a
@@ -2059,7 +2031,7 @@ def _lsh_calibration_body(dialect: str) -> str:
     scored AS (
       SELECT CAST(COALESCE(i.n_common, 0) AS DOUBLE)
                / (za.sz + zb.sz - COALESCE(i.n_common, 0)) AS jaccard,
-             CASE WHEN {band_eq} THEN 1 ELSE 0 END AS captured
+             CASE WHEN {_CAL_BAND_EQ} THEN 1 ELSE 0 END AS captured
       FROM cal_pairs p
       LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
       JOIN sizes za ON za.doc_id = p.doc_a
@@ -2067,6 +2039,17 @@ def _lsh_calibration_body(dialect: str) -> str:
       JOIN sig ga ON ga.doc_id = p.doc_a
       JOIN sig gb ON gb.doc_id = p.doc_b
     )"""
+
+
+def _lsh_calibration_body(scored: str) -> str:
+    """The q6k report over the CTE list `scored` (_CAL_SCORED_SPARK or
+    _CAL_SCORED_ORACLE), which ends in `scored(jaccard, captured)`."""
+    one = "CAST(1.0 AS DOUBLE)"
+    sm = (
+        f"((CAST(j_bucket AS DOUBLE) + CAST(0.5 AS DOUBLE))"
+        f" / CAST(10.0 AS DOUBLE))"
+    )
+    p_band = " * ".join([sm] * _BAND)
     return f"""
     WITH {scored}
     SELECT CAST(j_bucket AS INT) AS j_bucket,
@@ -2105,7 +2088,7 @@ def _cal_sets_sql(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "q6k_lsh_calibration",
     oracle=oracle_with(
-        _lsh_calibration_body("duckdb"),
+        _lsh_calibration_body(_CAL_SCORED_ORACLE),
         **_SIG_CTES,
         cal_pairs=_cal_pairs_sql("duckdb"),
     ),
@@ -2118,7 +2101,7 @@ def q6k_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql_with(
         spark,
         sf_dir,
-        _lsh_calibration_body("spark"),
+        _lsh_calibration_body(_CAL_SCORED_SPARK),
         sig=_materialize_sig(spark, sf_dir),
         cal_ids=spark.sql(f"WITH {_cal_docs_sql('spark')} SELECT doc_id FROM cal_docs"),
         cal_sets=_cal_sets_sql(spark, sf_dir),

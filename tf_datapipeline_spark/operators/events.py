@@ -2155,8 +2155,7 @@ def q4zj_entry_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ab_uplift_sql(dialect: str) -> str:
     from tf_datapipeline_spark.functions.texthash import sql_hash32
 
-    cast_t = "STRING" if dialect == "spark" else "VARCHAR"
-    h = sql_hash32(f"'ab-' || CAST(user_id AS {cast_t})", dialect)
+    h = sql_hash32("'ab-' || CAST(user_id AS STRING)", dialect)
     rate = "(CAST({c} AS DOUBLE) / {n})"
     ra = rate.format(c="c_a", n="n_a")
     rb = rate.format(c="c_b", n="n_b")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from tf_datapipeline_spark.catalog import oracle_with, register_views, sql_with
+from tf_datapipeline_spark.functions import dialect as D
 from tf_datapipeline_spark.functions.texthash import (
     BLOOM_K,
     BLOOM_M,
@@ -71,10 +72,7 @@ def _interleave(xb: str, yb: str) -> str:
 def _bucketed_sql(dialect: str) -> str:
     """The (xb, yb) bucket-id projection of orders (bounds-normalized
     8-bit grid coordinates) — the shared input of zfiles/lfiles/hits."""
-    if dialect == "spark":
-        day = "datediff(o_orderdate, DATE '1970-01-01')"
-    else:
-        day = "datediff('day', DATE '1970-01-01', o_orderdate)"
+    day = D.epoch_day("o_orderdate", dialect)
     xb = (
         f"LEAST(CAST(FLOOR((d.ep_day - b.min_day) * {_GRID}.0 "
         f"/ (b.max_day - b.min_day + 1)) AS BIGINT), {_GRID - 1})"
@@ -383,11 +381,10 @@ def q9b_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COMPACT_TARGET = 1000  # rows per compacted output file
 
 
-def _compaction_body(dialect: str) -> str:
-    hr = "hour(ts)" if dialect == "spark" else "EXTRACT(hour FROM ts)"
+def _compaction_body() -> str:
     return f"""
     WITH files AS (
-      SELECT CAST(ts AS DATE) AS day, CAST({hr} AS INT) AS hr,
+      SELECT CAST(ts AS DATE) AS day, CAST(hour(ts) AS INT) AS hr,
              COUNT(*) AS f_rows,
              CAST(SUM(LENGTH(props) + 64) AS BIGINT) AS f_bytes
       FROM events GROUP BY 1, 2
@@ -410,10 +407,10 @@ def _compaction_body(dialect: str) -> str:
     """
 
 
-@query("q9c_compaction_plan", oracle=_compaction_body("duckdb"))
+@query("q9c_compaction_plan", oracle=_compaction_body())
 def q9c_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    return spark.sql(_compaction_body("spark"))
+    return spark.sql(_compaction_body())
 
 
 # --------------------------------------------------------------------------
@@ -451,16 +448,8 @@ _RP_TARGET = 4096  # expected sample rows, corpus-size-independent
 
 def _range_partition_body(dialect: str) -> str:
     b = _RP_BUCKETS
-    ctype = "STRING" if dialect == "spark" else "VARCHAR"
-    h = sql_hash32(f"'rp-' || CAST(o_orderkey AS {ctype})", dialect)
-    if dialect == "spark":
-        idx = f"SELECT explode(sequence(1, {b - 1})) AS i"
-        arr = "array_sort(collect_list(val))"
-        nle = "size(filter(bs, x -> x <= val))"
-    else:
-        idx = f"SELECT i FROM generate_series(1, {b - 1}) AS t(i)"
-        arr = "list_sort(list(val))"
-        nle = "len(list_filter(bs, x -> x <= val))"
+    h = sql_hash32("'rp-' || CAST(o_orderkey AS STRING)", dialect)
+    nle = D.size("filter(bs, x -> x <= val)", dialect)
     return f"""
     WITH stats AS (SELECT COUNT(*) AS cnt FROM orders),
     sample AS (
@@ -474,9 +463,10 @@ def _range_partition_body(dialect: str) -> str:
     ),
     bounds AS (
       SELECT r.val FROM ranked r
-      JOIN ({idx}) ix ON r.rn = CAST(CEIL(ix.i * r.n / {b}.0) AS BIGINT)
+      JOIN (SELECT {D.explode_series(1, b - 1, dialect)} AS i) ix
+        ON r.rn = CAST(CEIL(ix.i * r.n / {b}.0) AS BIGINT)
     ),
-    barr AS (SELECT {arr} AS bs FROM bounds),
+    barr AS (SELECT array_sort(array_agg(val)) AS bs FROM bounds),
     assigned AS (
       SELECT CAST({nle} AS INT) AS bucket, val
       FROM (SELECT o_totalprice AS val FROM orders) o, barr
@@ -527,8 +517,7 @@ _KMV_K = 32  # bottom-k sketch size; quantile error ~ 1/sqrt(k)
 
 
 def _kmv_base_sql(dialect: str) -> str:
-    ctype = "STRING" if dialect == "spark" else "VARCHAR"
-    h = sql_hash32(f"'kmv-' || CAST(event_id AS {ctype})", dialect)
+    h = sql_hash32("'kmv-' || CAST(event_id AS STRING)", dialect)
     return f"""
       SELECT CAST(ts AS DATE) AS day, date_trunc('hour', ts) AS hr,
              value AS v, event_id AS ek, {h} AS hv
@@ -538,12 +527,8 @@ def _kmv_base_sql(dialect: str) -> str:
 
 def _kmv_rollup_body(dialect: str) -> str:
     k = _KMV_K
-    ctype = "STRING" if dialect == "spark" else "VARCHAR"
-    elem = f"CAST(hv AS {ctype}) || ':' || CAST(ek AS {ctype})"
-    if dialect == "spark":
-        fp = f"md5(concat_ws(',', array_sort(collect_list({elem}))))"
-    else:
-        fp = f"md5(array_to_string(list_sort(list({elem})), ','))"
+    elem = "CAST(hv AS STRING) || ':' || CAST(ek AS STRING)"
+    fp = "md5(" + D.join_strings(f"array_sort(array_agg({elem}))", ",", dialect) + ")"
     p50 = "CAST(FLOOR((kk + 1) / 2.0) AS BIGINT)"
     p90 = "CAST(FLOOR((9 * kk + 9) / 10.0) AS BIGINT)"
     return f"""
@@ -649,7 +634,6 @@ _BSK_PROBES = 8
 
 
 def _bloom_skip_body(dialect: str) -> str:
-    ctype = "STRING" if dialect == "spark" else "VARCHAR"
     h1, h2 = sql_bloom_hashes("m", dialect)
     ks = ", ".join(f"({k})" for k in range(BLOOM_K))
     return f"""
@@ -663,7 +647,7 @@ def _bloom_skip_body(dialect: str) -> str:
     fkeys AS (
       SELECT DISTINCT file_id,
              o_custkey,
-             md5('bsk-' || CAST(o_custkey AS {ctype})) AS m
+             md5('bsk-' || CAST(o_custkey AS STRING)) AS m
       FROM placed
     ),
     fhash AS (SELECT file_id, {h1} AS h1, {h2} AS h2 FROM fkeys),
@@ -671,7 +655,7 @@ def _bloom_skip_body(dialect: str) -> str:
       SELECT file_id,
              CAST(FLOOR(((h1 + k.k * h2) % {BLOOM_M}) / {BLOOM_WORD}.0) AS INT)
                AS word_idx,
-             BIT_OR({sql_shl1(f"((h1 + k.k * h2) % {BLOOM_M}) % {BLOOM_WORD}", dialect)})
+             BIT_OR({sql_shl1(f"((h1 + k.k * h2) % {BLOOM_M}) % {BLOOM_WORD}")})
                AS bits
       FROM fhash, (VALUES {ks}) AS k(k)
       GROUP BY 1, 2
@@ -680,20 +664,20 @@ def _bloom_skip_body(dialect: str) -> str:
     probes AS (
       SELECT o_custkey AS ck
       FROM (SELECT DISTINCT o_custkey FROM orders) d
-      ORDER BY md5('bskp-' || CAST(o_custkey AS {ctype})), o_custkey
+      ORDER BY md5('bskp-' || CAST(o_custkey AS STRING)), o_custkey
       LIMIT {_BSK_PROBES}
     ),
     ppos AS (
       SELECT ck, ((h1 + k.k * h2) % {BLOOM_M}) AS pos
       FROM (
         SELECT ck, {h1} AS h1, {h2} AS h2
-        FROM (SELECT ck, md5('bsk-' || CAST(ck AS {ctype})) AS m FROM probes) p
+        FROM (SELECT ck, md5('bsk-' || CAST(ck AS STRING)) AS m FROM probes) p
       ) ph, (VALUES {ks}) AS k(k)
     ),
     checks AS (
       SELECT p.ck, f.file_id,
              MIN(CASE WHEN (COALESCE(w.bits, 0)
-                            & {sql_shl1(f"p.pos % {BLOOM_WORD}", dialect)}) <> 0
+                            & {sql_shl1(f"p.pos % {BLOOM_WORD}")}) <> 0
                       THEN 1 ELSE 0 END) AS hit
       FROM ppos p
       CROSS JOIN frows f
@@ -844,10 +828,10 @@ def q9g_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVM_CENTS = "CAST(FLOOR(o_totalprice * 100) AS BIGINT)"
 
 
-def _ivm_body(dialect: str = "spark") -> str:
+def _ivm_body(dialect: str) -> str:
     # old/new snapshots are each referenced twice (base/diff, diff/direct):
     # MATERIALIZED in DuckDB so each snapshot scan runs once
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
+    mat = D.materialized(dialect)
     return f"""
     WITH old AS {mat}(
       SELECT o_orderkey, o_orderpriority, {_IVM_CENTS} AS cents
@@ -927,7 +911,7 @@ def q9h_incremental_view_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     register_views(spark, sf_dir)
-    return spark.sql(_ivm_body())
+    return spark.sql(_ivm_body("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -957,8 +941,8 @@ def q9h_incremental_view_maintenance(
 # --------------------------------------------------------------------------
 
 
-def _scd2_body(dialect: str = "spark") -> str:
-    mat = "MATERIALIZED " if dialect == "duckdb" else ""
+def _scd2_body(dialect: str) -> str:
+    mat = D.materialized(dialect)
     return f"""
     WITH old AS {mat}(
       SELECT o_orderkey, {_IVM_CENTS} AS cents
@@ -997,7 +981,7 @@ def _scd2_body(dialect: str = "spark") -> str:
 @query("q9i_scd2_history", oracle=_scd2_body("duckdb"))
 def q9i_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    return spark.sql(_scd2_body())
+    return spark.sql(_scd2_body("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -1286,19 +1270,17 @@ def q9m_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the conflict check never touches table data — the whole point of
 # manifest-level OCC. All integer arithmetic; hash-exact cross-engine.
 # --------------------------------------------------------------------------
-def _occ_body(dialect: str) -> str:
-    hr = "hour(ts)" if dialect == "spark" else "EXTRACT(hour FROM ts)"
-    dom = "day(day)" if dialect == "spark" else "EXTRACT(day FROM day)"
+def _occ_body() -> str:
     return f"""
     WITH files AS (
-      SELECT CAST(ts AS DATE) AS day, CAST({hr} AS INT) AS hr,
+      SELECT CAST(ts AS DATE) AS day, CAST(hour(ts) AS INT) AS hr,
              CAST(COUNT(*) AS BIGINT) AS f_rows
       FROM events GROUP BY 1, 2
     ),
     flagged AS (
       SELECT day, hr, f_rows,
-             CAST(({dom} % 3 = 0) AS INT) AS in_a,
-             CAST(({dom} % 2 = 0 AND hr <= 5) AS INT) AS in_b
+             CAST((day(day) % 3 = 0) AS INT) AS in_a,
+             CAST((day(day) % 2 = 0 AND hr <= 5) AS INT) AS in_b
       FROM files
     )
     SELECT day,
@@ -1312,10 +1294,10 @@ def _occ_body(dialect: str) -> str:
     """
 
 
-@query("q9n_occ_conflicts", oracle=_occ_body("duckdb"))
+@query("q9n_occ_conflicts", oracle=_occ_body())
 def q9n_occ_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    return spark.sql(_occ_body("spark"))
+    return spark.sql(_occ_body())
 
 
 # --------------------------------------------------------------------------
@@ -1374,7 +1356,7 @@ def _commit_log_cte() -> str:
     """
 
 
-def _lww_body(dialect: str = "spark") -> str:
+def _lww_body() -> str:
     return f"""
     WITH log AS ({_commit_log_cte()}),
     winners AS (
@@ -1392,7 +1374,7 @@ def _lww_body(dialect: str = "spark") -> str:
     """
 
 
-@query("q9p_lww_upsert", oracle=_lww_body("duckdb"))
+@query("q9p_lww_upsert", oracle=_lww_body())
 def q9p_lww_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(_lww_body())
@@ -1427,15 +1409,14 @@ def q9p_lww_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_COMMITS = 4
 
 
-def _time_travel_body(dialect: str = "spark") -> str:
-    hint = "/*+ BROADCAST(s) */ " if dialect == "spark" else ""
+def _time_travel_body() -> str:
     versions = ", ".join(f"({v})" for v in range(1, _N_COMMITS + 1))
     return f"""
     WITH log AS ({_commit_log_cte()}),
     versions(v) AS (VALUES {versions}),
     winners AS (
       SELECT v, k, op, cents FROM (
-        SELECT {hint}s.v, l.k, l.op, l.cents,
+        SELECT /*+ BROADCAST(s) */ s.v, l.k, l.op, l.cents,
                ROW_NUMBER() OVER (PARTITION BY s.v, l.k
                                   ORDER BY l.commit DESC, l.op) AS rn
         FROM log l JOIN versions s ON l.commit <= s.v
@@ -1452,7 +1433,7 @@ def _time_travel_body(dialect: str = "spark") -> str:
     """
 
 
-@query("q9q_time_travel", oracle=_time_travel_body("duckdb"))
+@query("q9q_time_travel", oracle=_time_travel_body())
 def q9q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(_time_travel_body())

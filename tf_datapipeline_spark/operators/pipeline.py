@@ -826,8 +826,7 @@ _IMP_TARGET = "CAST(0.2 AS DOUBLE)"  # sampled fraction of documents
 
 
 def _importance_sample_sql(dialect: str) -> str:
-    cast_t = "STRING" if dialect == "spark" else "VARCHAR"
-    h = sql_hash32(f"'imp-' || CAST(doc_id AS {cast_t})", dialect)
+    h = sql_hash32("'imp-' || CAST(doc_id AS STRING)", dialect)
     p = (
         f"LEAST(CAST(1 AS DOUBLE), CAST(n_chars AS DOUBLE)"
         f" * ({_IMP_TARGET} * n_total) / chars_total)"

@@ -60,13 +60,11 @@ def _reason_counts(reasons: tuple[str, ...]) -> str:
     )
 
 
-def _prep_oracle() -> str:
-    reason_counts = _reason_counts(
-        ("kept", "quality", "exact_dup", "near_dup", "contaminated")
-    )
-    return f"""
-    WITH RECURSIVE shingles AS ({_sql_shingles('duckdb')}),
-    sig AS ({_sql_signature()}),
+def _prep_flag_ctes() -> str:
+    """The oracles' shared CTE list (qt1, qt2; recursive): per-doc
+    `flags`, near-dup component `labels` and `contam`."""
+    return f"""shingles AS ({_sql_shingles('duckdb')}),
+    sig AS ({_sql_signature('shingles')}),
     pairs AS ({_lsh_pairs_body()}),
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -106,7 +104,15 @@ def _prep_oracle() -> str:
       FROM grams c JOIN bench b USING (g)
       WHERE c.doc_id % {_CONTAM_MOD} <> 0
       GROUP BY 1
-    ),
+    )"""
+
+
+def _prep_oracle() -> str:
+    reason_counts = _reason_counts(
+        ("kept", "quality", "exact_dup", "near_dup", "contaminated")
+    )
+    return f"""
+    WITH RECURSIVE {_prep_flag_ctes()},
     reasoned AS (
       SELECT f.lang, f.n_tokens,
              1 + (greatest(length(f.text), 1) - 1) // {_CHUNK_STRIDE}
@@ -234,13 +240,12 @@ def qt1_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _prep_semantic_oracle() -> str:
     from tf_datapipeline_spark.operators.dedup import _semantic_dedup_sql
 
-    prelude = _prep_oracle().split("reasoned AS (")[0].rstrip()
     reason_counts = _reason_counts(
         ("kept", "quality", "exact_dup", "near_dup", "contaminated", "semantic_dup")
     )
-    return (
-        prelude
-        + f"""sem AS (
+    return f"""
+    WITH RECURSIVE {_prep_flag_ctes()},
+    sem AS (
       SELECT vec_id, keep FROM ({_semantic_dedup_sql('duckdb')}) s
     ),
     reasoned AS (
@@ -262,7 +267,6 @@ def _prep_semantic_oracle() -> str:
                 AS BIGINT) AS kept_tokens
     FROM reasoned GROUP BY 1
     """
-    )
 
 
 @query("qt2_prep_semantic", oracle=_prep_semantic_oracle())

@@ -946,7 +946,7 @@ def q1i_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # holds to ~1e24 — beyond sf100's ~3e24 the key moments widen to
 # DECIMAL(38,4) behind the same expressions.
 # --------------------------------------------------------------------------
-def _q1j_sql(dialect: str) -> str:
+def _q1j_sql() -> str:
     x, y = "c_acctbal", "CAST(c_custkey AS DOUBLE)"
     sx = sql_dsum(x, 2)
     sxx = sql_dsum(f"{x} * {x}", 4)
@@ -981,12 +981,12 @@ def _q1j_sql(dialect: str) -> str:
     """
 
 
-@query("q1j_stats_kernel", oracle=_q1j_sql("duckdb"))
+@query("q1j_stats_kernel", oracle=_q1j_sql())
 def q1j_stats_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_datapipeline_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql(_q1j_sql("spark"))
+    return spark.sql(_q1j_sql())
 
 
 # --------------------------------------------------------------------------

@@ -26,7 +26,8 @@ from tf_datapipeline_spark.catalog import (
     sql_with,
 )
 from tf_datapipeline_spark.functions import vectors as V
-from tf_datapipeline_spark.functions.texthash import sql_bxor, sql_shl1
+from tf_datapipeline_spark.functions import dialect as D
+from tf_datapipeline_spark.functions.texthash import sql_shl1
 from tf_datapipeline_spark.functions.vectors import fold_dot, fold_l2, fold_norm2
 from tf_datapipeline_spark.registry import query
 
@@ -46,24 +47,25 @@ _N_BITS = 6
 def _dims_sql(dialect: str) -> str:
     """The exploded (vec_id, x, pos) table: one row per embedding
     dimension (1-based pos)."""
-    if dialect == "spark":
-        x = "element_at(embedding, CAST(pos AS INT))"
-        pos = "explode(sequence(1, 64))"
-    else:
-        x = "embedding[CAST(pos AS INT)]"
-        pos = "unnest(generate_series(1, 64))"
+    x = D.element_at("embedding", "CAST(pos AS INT)", dialect)
     return f"""
       SELECT vec_id, CAST({x} AS DOUBLE) AS x, pos
-      FROM (SELECT vec_id, embedding, {pos} AS pos FROM embeddings)
+      FROM (SELECT vec_id, embedding, {D.explode_series(1, 64, dialect)} AS pos
+            FROM embeddings)
     """
+
+
+def _norms(dialect: str) -> str:
+    """CTE `norms` (vec_id, embedding, nrm): every vector and its L2 norm."""
+    return f"""norms AS (
+      SELECT vec_id, embedding, SQRT({fold_norm2(dialect, "embedding")}) AS nrm
+      FROM embeddings
+    )"""
 
 
 def _knn_sql(dialect: str) -> str:
     return f"""
-    WITH norms AS (
-      SELECT vec_id, embedding, SQRT({fold_norm2(dialect, "embedding")}) AS nrm
-      FROM embeddings
-    ),
+    WITH {_norms(dialect)},
     dots AS (
       SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
              {fold_dot(dialect, "d.embedding", "q.embedding")} AS dot
@@ -263,6 +265,15 @@ def seed_values_sql(n: int) -> str:
     return ", ".join(f"({c}, {i})" for c, i in enumerate(seed_ids(n)))
 
 
+# The CTE list `cells, cente`: the _N_CELLS seed cells and their
+# centroid embeddings (cell, cemb).
+_CELL_CENTERS = f"""cells(cell, cvec_id) AS (VALUES {seed_values_sql(_N_CELLS)}),
+    cente AS (
+      SELECT c.cell, e.embedding AS cemb
+      FROM cells c JOIN embeddings e ON e.vec_id = c.cvec_id
+    )"""
+
+
 def nearest_seed(
     spark: SparkSession, sf_dir: str, df: DataFrame
 ) -> tuple[DataFrame, Column]:
@@ -364,17 +375,11 @@ def q73_knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (localCheckpoint per round, as q67 does for label propagation).
 # --------------------------------------------------------------------------
 def _kmeans_step_sql(dialect: str) -> str:
-    cells = seed_values_sql(_N_CELLS)
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
-    WITH cells(cell, cvec_id) AS (VALUES {cells}),
+    WITH {_CELL_CENTERS},
     dims AS ({_dims_sql(dialect)}),
-    cente AS (
-      SELECT c.cell, e.embedding AS cemb
-      FROM cells c JOIN embeddings e ON e.vec_id = c.cvec_id
-    ),
     dists AS (
-      SELECT {hint}v.vec_id, c.cell,
+      SELECT /*+ BROADCAST(c) */ v.vec_id, c.cell,
              {fold_l2(dialect, "v.embedding", "c.cemb")} AS d2
       FROM embeddings v CROSS JOIN cente c
     ),
@@ -425,42 +430,21 @@ def _pq_dists_ctes(dialect: str, n_codewords: int | None = None) -> str:
     engines fold the same 8 squared-diff doubles left to right — the
     order contract of functions/vectors.py, over an 8-dim slice."""
     cws = seed_values_sql(n_codewords or _PQ_CODES)
-    if dialect == "spark":
-        subs = "SELECT explode(sequence(0, 7)) AS sub"
-        # BROADCAST hints pin the build sides to the BOUNDED relations:
-        # without them Catalyst broadcast the (corpus x 8-sub) side of
-        # the second cross join and streamed the 8-row codeword side —
-        # harmless at test scale, a corpus-sized broadcast at 100 TB
-        # (caught by the structural bounded-build-side audit in
-        # test_plans.py).
-        hint = "/*+ BROADCAST(s), BROADCAST(c) */ "
-        fold = """
-             aggregate(
-               transform(transform(sequence(1, 8),
-                   i -> CAST(element_at(v.embedding, s.sub * 8 + i) AS DOUBLE)
-                        - CAST(element_at(c.cemb, s.sub * 8 + i) AS DOUBLE)),
-                 d -> d * d),
-               CAST(0 AS DOUBLE), (a, b) -> a + b)"""
-    else:
-        hint = ""
-        subs = "SELECT CAST(unnest(range(8)) AS INTEGER) AS sub"
-        fold = """
-             list_reduce(
-               list_transform(
-                 list_transform(generate_series(1, 8),
-                   i -> CAST(v.embedding[s.sub * 8 + i] AS DOUBLE)
-                        - CAST(c.cemb[s.sub * 8 + i] AS DOUBLE)),
-                 d -> d * d),
-               (a, b) -> a + b)"""
+    fold = V.fold_l2_slice(dialect, "v.embedding", "c.cemb", "s.sub * 8", 8)
+    # BROADCAST hints pin the build sides to the BOUNDED relations:
+    # without them Catalyst broadcast the (corpus x 8-sub) side of the
+    # second cross join and streamed the 8-row codeword side — harmless
+    # at test scale, a corpus-sized broadcast at 100 TB (caught by the
+    # structural bounded-build-side audit in test_plans.py).
     return f"""
     cw(code, cwvec_id) AS (VALUES {cws}),
     cwe AS (
       SELECT c.code, e.embedding AS cemb
       FROM cw c JOIN embeddings e ON e.vec_id = c.cwvec_id
     ),
-    subs AS ({subs}),
+    subs AS (SELECT {D.explode_series(0, 7, dialect)} AS sub),
     dists AS (
-      SELECT {hint}v.vec_id, s.sub, c.code, {fold} AS d2
+      SELECT /*+ BROADCAST(s), BROADCAST(c) */ v.vec_id, s.sub, c.code, {fold} AS d2
       FROM embeddings v CROSS JOIN subs s CROSS JOIN cwe c
     )"""
 
@@ -867,13 +851,7 @@ def q77_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two-pass structure, no shuffle either way.)
 # --------------------------------------------------------------------------
 def _sq_encode_sql(dialect: str) -> str:
-    if dialect == "spark":
-        digest = (
-            "md5(array_join(transform(array_sort(collect_list(struct(pos, code))), "
-            "s -> CAST(s.code AS STRING)), ','))"
-        )
-    else:
-        digest = "md5(string_agg(CAST(code AS VARCHAR), ',' ORDER BY pos))"
+    digest = f"md5({D.string_agg_ordered('code', 'pos', ',', dialect)})"
     return f"""
     WITH rng AS (
       SELECT pos, MIN(x) AS mn, MAX(x) AS mx FROM dims GROUP BY 1
@@ -1219,22 +1197,32 @@ def q7c_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BH_TOPK = 10
 
 
-def _binary_hamming_sql(dialect: str) -> str:
-    return f"""
-    WITH codes AS (
+# The shared CTE `codes` (vec_id, w0, w1): each vector's 64 sign bits
+# (x >= 0) over the `dims` table, dims 1-32 in w0 and 33-64 in w1.
+_SIGN_CODES = f"""codes AS (
       SELECT vec_id,
              SUM(CASE WHEN pos <= 32 AND x >= 0
-                      THEN {sql_shl1("pos - 1", dialect)} ELSE 0 END) AS w0,
+                      THEN {sql_shl1("pos - 1")} ELSE 0 END) AS w0,
              SUM(CASE WHEN pos > 32 AND x >= 0
-                      THEN {sql_shl1("pos - 33", dialect)} ELSE 0 END) AS w1
+                      THEN {sql_shl1("pos - 33")} ELSE 0 END) AS w1
       FROM dims d
       GROUP BY vec_id
-    ),
+    )"""
+
+
+def _hamming(a: str, b: str, dialect: str) -> str:
+    """INT Hamming distance between the sign codes of aliases `a`, `b`."""
+    w0, w1 = (D.bxor(f"{a}.{w}", f"{b}.{w}", dialect) for w in ("w0", "w1"))
+    return f"CAST(bit_count({w0}) + bit_count({w1}) AS INT)"
+
+
+def _binary_hamming_sql(dialect: str) -> str:
+    return f"""
+    WITH {_SIGN_CODES},
     scored AS (
-      SELECT {"/*+ BROADCAST(q) */ " if dialect == "spark" else ""}
+      SELECT /*+ BROADCAST(q) */
              q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST(bit_count({sql_bxor("q.w0", "c.w0", dialect)})
-                  + bit_count({sql_bxor("q.w1", "c.w1", dialect)}) AS INT) AS hamming
+             {_hamming("q", "c", dialect)} AS hamming
       FROM codes q JOIN codes c
         ON q.vec_id < {_N_QUERIES} AND c.vec_id >= {_N_QUERIES}
     ),
@@ -1314,13 +1302,9 @@ def _mmr_shortlist_ctes(dialect: str) -> tuple[str, str]:
     """The distributed part, shared by both engines: the CTE list of the
     per-query top-_MMR_POOL shortlist (rel), and the select of its
     pairwise sims over them."""
-    hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
-    ctes = f"""norms AS (
-      SELECT vec_id, embedding, SQRT({fold_norm2(dialect, "embedding")}) AS nrm
-      FROM embeddings
-    ),
+    ctes = f"""{_norms(dialect)},
     scored AS (
-      SELECT {hint}q.vec_id AS query_id, d.vec_id,
+      SELECT /*+ BROADCAST(q) */ q.vec_id AS query_id, d.vec_id,
              {fold_dot(dialect, "d.embedding", "q.embedding")}
                / (d.nrm * q.nrm) AS rel
       FROM norms q JOIN norms d
@@ -1484,14 +1468,10 @@ _RADIUS_TAU = 0.25  # ~2 sigma for this corpus (random gaussian: cos has
 
 
 def _radius_sql(dialect: str) -> str:
-    hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
     return f"""
-    WITH norms AS (
-      SELECT vec_id, embedding, SQRT({fold_norm2(dialect, "embedding")}) AS nrm
-      FROM embeddings
-    ),
+    WITH {_norms(dialect)},
     hits AS (
-      SELECT {hint}q.vec_id AS query_id, d.vec_id AS neighbor_id,
+      SELECT /*+ BROADCAST(q) */ q.vec_id AS query_id, d.vec_id AS neighbor_id,
              {fold_dot(dialect, "d.embedding", "q.embedding")}
                / (q.nrm * d.nrm) AS cos_sim
       FROM (SELECT * FROM norms WHERE vec_id < {_N_QUERIES}) q
@@ -1526,7 +1506,6 @@ def q7g_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the filtered candidate set only.
 # --------------------------------------------------------------------------
 def _filtered_knn_sql(dialect: str) -> str:
-    hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
     return f"""
     WITH norms AS (
       SELECT vec_id, label, embedding,
@@ -1534,7 +1513,7 @@ def _filtered_knn_sql(dialect: str) -> str:
       FROM embeddings
     ),
     scored AS (
-      SELECT {hint}q.vec_id AS query_id, d.vec_id AS neighbor_id,
+      SELECT /*+ BROADCAST(q) */ q.vec_id AS query_id, d.vec_id AS neighbor_id,
              d.label,
              {fold_dot(dialect, "d.embedding", "q.embedding")}
                / (q.nrm * d.nrm) AS cos_sim
@@ -1582,19 +1561,8 @@ _REC_K = 10  # recall@10 over q7e's Hamming codes (same k as _BH_TOPK)
 
 
 def _recall_eval_sql(dialect: str) -> str:
-    def hint(alias: str) -> str:
-        return f"/*+ BROADCAST({alias}) */ " if dialect == "spark" else ""
-
     return f"""
-    WITH codes AS (
-      SELECT vec_id,
-             SUM(CASE WHEN pos <= 32 AND x >= 0
-                      THEN {sql_shl1("pos - 1", dialect)} ELSE 0 END) AS w0,
-             SUM(CASE WHEN pos > 32 AND x >= 0
-                      THEN {sql_shl1("pos - 33", dialect)} ELSE 0 END) AS w1
-      FROM dims d
-      GROUP BY vec_id
-    ),
+    WITH {_SIGN_CODES},
     ham AS (
       SELECT query_id, neighbor_id FROM (
         SELECT query_id, neighbor_id,
@@ -1606,19 +1574,15 @@ def _recall_eval_sql(dialect: str) -> str:
           -- side provably bounded for the NLJ audit, and the hint pins
           -- the build side regardless of stats (Catalyst built the
           -- corpus codes side here before — caught by the audit)
-          SELECT {hint("qc")}qc.vec_id AS query_id,
+          SELECT /*+ BROADCAST(qc) */ qc.vec_id AS query_id,
                  c.vec_id AS neighbor_id,
-                 CAST(bit_count({sql_bxor("qc.w0", "c.w0", dialect)})
-                      + bit_count({sql_bxor("qc.w1", "c.w1", dialect)}) AS INT) AS hamming
+                 {_hamming("qc", "c", dialect)} AS hamming
           FROM (SELECT * FROM codes WHERE vec_id < {_N_QUERIES}) qc
           JOIN codes c ON c.vec_id >= {_N_QUERIES}
         ) s
       ) r WHERE rnk <= {_REC_K}
     ),
-    norms AS (
-      SELECT vec_id, embedding, SQRT({fold_norm2(dialect, "embedding")}) AS nrm
-      FROM embeddings
-    ),
+    {_norms(dialect)},
     exact AS (
       -- the broadcast hint lives in its own window-free block: Spark
       -- drops relation hints from blocks it splits around a window
@@ -1629,7 +1593,7 @@ def _recall_eval_sql(dialect: str) -> str:
                ROW_NUMBER() OVER (PARTITION BY query_id
                                   ORDER BY cos_sim DESC, neighbor_id) AS rnk
         FROM (
-          SELECT {hint("q")}q.vec_id AS query_id, d.vec_id AS neighbor_id,
+          SELECT /*+ BROADCAST(q) */ q.vec_id AS query_id, d.vec_id AS neighbor_id,
                  {fold_dot(dialect, "d.embedding", "q.embedding")}
                    / (q.nrm * d.nrm) AS cos_sim
           FROM (SELECT * FROM norms WHERE vec_id < {_N_QUERIES}) q
@@ -1671,9 +1635,8 @@ def q7i_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact integers (the q72 quantization — raw float->decimal casts can
 # land on rounding-mode ties across engines, FLOOR of an exact double
 # product cannot); the centroid division is one IEEE op; the 64-term
-# dot/norm folds run in EXPLICIT dim order on both engines (Spark
-# aggregate(array_sort(collect_list(...))), DuckDB list(... ORDER BY) —
-# the q6g recipe), and sqrt is correctly rounded under IEEE-754, so
+# dot/norm folds run in EXPLICIT dim order on both engines
+# (vectors.fold_sum_ordered — the q6g recipe), and sqrt is correctly rounded under IEEE-754, so
 # drift_cos is bit-identical. Spark's 0.0 fold init is bit-inert for
 # the nonzero first term (the accepted q66 convention). A label absent
 # from either half has no centroid to compare and is deliberately
@@ -1685,17 +1648,6 @@ def q7i_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-label arithmetic on ~128-element lists. No windows, no collects.
 # --------------------------------------------------------------------------
 def _centroid_drift_sql(dialect: str) -> str:
-    if dialect == "spark":
-        def fold(expr: str) -> str:
-            return (
-                "aggregate(transform(array_sort(collect_list("
-                f"named_struct('p', pos, 'v', {expr}))), x -> x.v), "
-                "CAST(0 AS DOUBLE), (acc, t) -> acc + t)"
-            )
-    else:
-        def fold(expr: str) -> str:
-            return f"list_reduce(list({expr} ORDER BY pos), (acc, t) -> acc + t)"
-
     return f"""
     WITH halves AS (
       SELECT e.label, d.pos, CAST(d.vec_id % 2 AS INT) AS half,
@@ -1717,8 +1669,9 @@ def _centroid_drift_sql(dialect: str) -> str:
     SELECT label,
            CAST(MIN(na) AS BIGINT) AS n_a,
            CAST(MIN(nb) AS BIGINT) AS n_b,
-           {fold("ca * cb")}
-             / (SQRT({fold("ca * ca")}) * SQRT({fold("cb * cb")}))
+           {V.fold_sum_ordered(dialect, "ca * cb", "pos")}
+             / (SQRT({V.fold_sum_ordered(dialect, "ca * ca", "pos")})
+                * SQRT({V.fold_sum_ordered(dialect, "cb * cb", "pos")}))
              AS drift_cos
     FROM paired GROUP BY label
     """
@@ -2304,15 +2257,8 @@ def _ivf_scored_sql(dialect: str) -> str:
     corpus-proportional part of the probe curve (assignment + query
     cell ranking + ONE rescore), read by both the per-level top-k
     window and the per-level candidate counts."""
-    cells = seed_values_sql(_N_CELLS)
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
-    qhint = "/*+ BROADCAST(qc) */ " if dialect == "spark" else ""
     return f"""
-    WITH cells(cell, cvec_id) AS (VALUES {cells}),
-    cente AS (
-      SELECT c.cell, e.embedding AS cemb
-      FROM cells c JOIN embeddings e ON e.vec_id = c.cvec_id
-    ),
+    WITH {_CELL_CENTERS},
     nrm AS (
       SELECT vec_id, embedding,
              SQRT({fold_norm2(dialect, "embedding")}) AS n
@@ -2320,7 +2266,7 @@ def _ivf_scored_sql(dialect: str) -> str:
     ),
     assign AS (
       SELECT vec_id, cell FROM (
-        SELECT {hint}v.vec_id, c.cell,
+        SELECT /*+ BROADCAST(c) */ v.vec_id, c.cell,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
                                   ORDER BY {fold_l2(dialect, "v.embedding", "c.cemb")},
                                            c.cell) AS rn
@@ -2330,7 +2276,7 @@ def _ivf_scored_sql(dialect: str) -> str:
     ),
     qcells AS (
       SELECT query_id, cell, prank FROM (
-        SELECT {hint}q.vec_id AS query_id, c.cell,
+        SELECT /*+ BROADCAST(c) */ q.vec_id AS query_id, c.cell,
                ROW_NUMBER() OVER (PARTITION BY q.vec_id
                                   ORDER BY {fold_l2(dialect, "q.embedding", "c.cemb")},
                                            c.cell) AS prank
@@ -2338,7 +2284,7 @@ def _ivf_scored_sql(dialect: str) -> str:
         WHERE q.vec_id < {_N_QUERIES}
       ) r
     )
-    SELECT {qhint}qc.query_id, a.vec_id, qc.prank,
+    SELECT /*+ BROADCAST(qc) */ qc.query_id, a.vec_id, qc.prank,
            {fold_dot(dialect, "vn.embedding", "qn.embedding")}
              / (qn.n * vn.n) AS cos
     FROM qcells qc
@@ -2368,7 +2314,7 @@ def _ivf_probe_body(dialect: str) -> str:
     ),
     exact AS (
       SELECT query_id, vec_id FROM (
-        SELECT {"/*+ BROADCAST(qn) */ " if dialect == "spark" else ""}
+        SELECT /*+ BROADCAST(qn) */
                qn.vec_id AS query_id, vn.vec_id,
                ROW_NUMBER() OVER (
                  PARTITION BY qn.vec_id
@@ -2437,7 +2383,6 @@ def q7o_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # driver.
 # --------------------------------------------------------------------------
 def _index_build_tail(dialect: str) -> str:
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
     dims AS ({_dims_sql(dialect)}),
     scente AS (
@@ -2445,7 +2390,7 @@ def _index_build_tail(dialect: str) -> str:
       FROM seeds s JOIN embeddings e ON e.vec_id = s.svec
     ),
     bdists AS (
-      SELECT {hint}v.vec_id, c.cell,
+      SELECT /*+ BROADCAST(c) */ v.vec_id, c.cell,
              {fold_l2(dialect, "v.embedding", "c.cemb")} AS d2
       FROM embeddings v CROSS JOIN scente c
     ),
@@ -2525,16 +2470,10 @@ _SIL_Q = 68719476736.0  # 2^36 — the shared mean-quantization device
 
 
 def _silhouette_sql(dialect: str) -> str:
-    cells = seed_values_sql(_N_CELLS)
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
-    WITH cells(cell, cvec_id) AS (VALUES {cells}),
-    cente AS (
-      SELECT c.cell, e.embedding AS cemb
-      FROM cells c JOIN embeddings e ON e.vec_id = c.cvec_id
-    ),
+    WITH {_CELL_CENTERS},
     dists AS (
-      SELECT {hint}v.vec_id, c.cell,
+      SELECT /*+ BROADCAST(c) */ v.vec_id, c.cell,
              {fold_l2(dialect, "v.embedding", "c.cemb")} AS d2
       FROM embeddings v CROSS JOIN cente c
     ),
@@ -2574,13 +2513,8 @@ def q7p_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (d2, cell) structs replays exactly the ROW_NUMBER order, so a/b
     # and every downstream value are identical to the oracle's
     # self-join form.
-    cells = seed_values_sql(_N_CELLS)
     return spark.sql(f"""
-    WITH cells(cell, cvec_id) AS (VALUES {cells}),
-    cente AS (
-      SELECT c.cell, e.embedding AS cemb
-      FROM cells c JOIN embeddings e ON e.vec_id = c.cvec_id
-    ),
+    WITH {_CELL_CENTERS},
     dists AS (
       SELECT /*+ BROADCAST(c) */ v.vec_id, c.cell,
              {fold_l2("spark", "v.embedding", "c.cemb")} AS d2

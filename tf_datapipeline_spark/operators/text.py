@@ -21,6 +21,7 @@ from tf_datapipeline_spark.catalog import (
     register_views,
     sql_with,
 )
+from tf_datapipeline_spark.functions import dialect as D
 from tf_datapipeline_spark.functions.texthash import (
     sql_hash32,
     sql_md5_window,
@@ -1711,23 +1712,19 @@ _DSIR_SCALE = 1_000_000
 
 def _dsir_body(dialect: str) -> str:
     h = sql_hash32("'dsir-' || tok", dialect)
-    if dialect == "spark":
-        toks = "SELECT doc_id, lang, explode(split(text, ' ')) AS tok FROM documents"
-        spine = f"SELECT explode(sequence(0, {_DSIR_B - 1})) AS bucket"
-        idiv = "DIV"
-    else:
-        toks = (
-            "SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok"
-            " FROM documents"
-        )
-        spine = f"SELECT unnest(range({_DSIR_B})) AS bucket"
-        idiv = "//"
+    words = D.explode("split(text, ' ')", dialect)
+    toks = f"SELECT doc_id, lang, {words} AS tok FROM documents"
+
+    def share(c: str, n: str) -> str:
+        num = f"(COALESCE({c}, 0) + 1) * {_DSIR_SCALE}"
+        return D.idiv(num, f"({n} + {_DSIR_B})", dialect)
+
     return f"""
     WITH tok AS (
       SELECT doc_id, lang, ({h}) % {_DSIR_B} AS bucket
       FROM ({toks}) t WHERE tok <> ''
     ),
-    spine AS ({spine}),
+    spine AS (SELECT {D.explode_series(0, _DSIR_B - 1, dialect)} AS bucket),
     tcnt AS (
       SELECT bucket, COUNT(*) AS c FROM tok WHERE lang = 'en' GROUP BY 1
     ),
@@ -1738,8 +1735,7 @@ def _dsir_body(dialect: str) -> str:
     rtot AS (SELECT COUNT(*) AS n FROM tok WHERE lang <> 'en'),
     dshare AS (
       SELECT s.bucket,
-             ((COALESCE(t.c, 0) + 1) * {_DSIR_SCALE} {idiv} (tt.n + {_DSIR_B}))
-           - ((COALESCE(r.c, 0) + 1) * {_DSIR_SCALE} {idiv} (rt.n + {_DSIR_B}))
+             ({share("t.c", "tt.n")}) - ({share("r.c", "rt.n")})
                AS d
       FROM spine s
       LEFT JOIN tcnt t ON t.bucket = s.bucket
@@ -1876,13 +1872,11 @@ _VOCAB_DRIFT_TOP = 50
 
 
 def _vocab_drift_sql(dialect: str) -> str:
-    if dialect == "spark":
-        tok = "explode(split(trim(text), '\\\\s+')) AS token"
-    else:
-        tok = "unnest(regexp_split_to_array(trim(text), '\\s+')) AS token"
     return f"""
     WITH toks AS (
-      SELECT CAST(doc_id % 2 AS INT) AS half, {tok} FROM documents
+      SELECT CAST(doc_id % 2 AS INT) AS half,
+             {D.explode(D.split_ws('trim(text)', dialect), dialect)} AS token
+      FROM documents
     ), counts AS (
       SELECT token,
              CAST(SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -1927,14 +1921,9 @@ def q5r_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IEEE divisions.
 # --------------------------------------------------------------------------
 def _corpus_health_sql(dialect: str) -> str:
-    if dialect == "spark":
-        toks = "split(trim(text), '\\\\s+')"
-        nstop = f"size(filter({toks}, t -> t IN ({_SW_LIST})))"
-        ntok = f"size({toks})"
-    else:
-        toks = "regexp_split_to_array(trim(text), '\\s+')"
-        nstop = f"length(list_filter({toks}, t -> t IN ({_SW_LIST})))"
-        ntok = f"length({toks})"
+    toks = D.split_ws("trim(text)", dialect)
+    nstop = D.size(f"filter({toks}, t -> t IN ({_SW_LIST}))", dialect)
+    ntok = D.size(toks, dialect)
     return f"""
     WITH perdoc AS (
       SELECT source, n_chars, md5(text) AS th,
@@ -2084,7 +2073,7 @@ def q5s_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokens per whitespace token). n_unit_chars re-derives the char total
 # from the FINAL units, so a merge that lost or duplicated characters
 # cannot hash-match (conservation is part of the oracle row, and
-# tests/test_round11_ops.py pins the detokenize round-trip itself).
+# tests/test_text.py pins the detokenize round-trip itself).
 #
 # Exactness: everything is integer counting over exact string folds —
 # both engines fold unit lists left-to-right with identical CASE
@@ -2315,8 +2304,7 @@ _CLF_BUCKETS = 4096
 
 def _clf_weight_sql(dialect: str) -> str:
     """w[b] for a bucket column `b`: deterministic stand-in weights."""
-    s = "CAST(b AS STRING)" if dialect == "spark" else "CAST(b AS VARCHAR)"
-    h = sql_hash32(f"concat('w|', {s})", dialect)
+    h = sql_hash32("concat('w|', CAST(b AS STRING))", dialect)
     return f"CAST({h} % 2001 - 1000 AS BIGINT)"
 
 
