@@ -30,8 +30,12 @@ from tf_datapipeline_spark.sources.etl import (
     write_sharded_records,
 )
 from tf_datapipeline_spark.sources.images import (
+    SYNTHETIC_DIMS_SQL,
+    SYNTHETIC_JPEG_DIMS_SQL,
     scan_image_dir,
     synthetic_corpus,
+    synthetic_dims,
+    synthetic_jpeg_dims,
     synthetic_pixels,
 )
 
@@ -409,6 +413,25 @@ def test_eval_preprocess_deterministic_range01():
 # --------------------------------------------------------------------------
 # sources: binaryFile dir scan (real directory) + synthetic corpus
 # --------------------------------------------------------------------------
+@pytest.mark.parametrize(
+    "dims_sql, dims",
+    [
+        (SYNTHETIC_DIMS_SQL, synthetic_dims),
+        (SYNTHETIC_JPEG_DIMS_SQL, synthetic_jpeg_dims),
+    ],
+)
+def test_synthetic_dims_sql_matches_python(dims_sql, dims):
+    """The SQL spelling of the synthetic image dims, which the oracles
+    and Spark SQL read, gives the Python generator's (height, width)."""
+    import duckdb
+
+    h, w = dims_sql
+    got = duckdb.sql(
+        f"SELECT doc_id, {h}, {w} FROM range(1000) r(doc_id) ORDER BY doc_id"
+    ).fetchall()
+    assert got == [(d, *dims(d)) for d in range(1000)]
+
+
 def test_scan_image_dir_binaryfile(spark):
     root = scratch_dir("corpus_dir/ignored")
     root = root.rsplit("/", 1)[0]

@@ -494,6 +494,66 @@ def test_dialect_spellings_live_in_one_module():
     )
 
 
+def test_text_rules_live_in_one_place():
+    """Source-level audit: the quality gate's threshold, the stopword
+    list and the whitespace token split are spelled only in the text
+    rule definitions of operators/text.py (and the split's dialect pair
+    in functions/dialect.py). Components and composites select those
+    definitions; a gate, stopword filter or split written anywhere else
+    fails here."""
+    import ast
+    import pathlib
+    import re
+
+    from tf_datapipeline_spark.operators.text import _GATE_MIN_CHARS
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "tf_datapipeline_spark"
+    rules = {
+        "operators/text.py": {
+            "_tokens_spark",
+            "_tokens_sql",
+            "_STOPWORDS",
+            "_n_stop_spark",
+            "_n_stop_sql",
+            "_GATE_MIN_CHARS",
+            "_quality_spark",
+            "_quality_sql",
+        },
+        "functions/dialect.py": {"split_ws"},
+    }
+    # the gate's threshold, the rule's constants, a whitespace split
+    spelled = re.compile(
+        rf"n_chars\W*>=\s*{_GATE_MIN_CHARS}\b"
+        r"|\b_GATE_MIN_CHARS\b|\b_STOPWORDS\b"
+        r"|\bsplit\b.*\\+s\+|\bsplit_ws\(|regexp_split_to_array"
+    )
+    found = []
+    for py in pkg.rglob("*.py"):
+        rel = str(py.relative_to(pkg))
+        source = py.read_text()
+        exempt = set()
+        defined = set()
+        for node in ast.parse(source).body:
+            names = {getattr(node, "name", None)} | {
+                t.id for t in getattr(node, "targets", []) if isinstance(t, ast.Name)
+            }
+            if names & rules.get(rel, set()):
+                defined |= names
+                exempt.update(range(node.lineno, node.end_lineno + 1))
+        assert defined >= rules.get(rel, set()), (
+            f"stale rule names in {rel}: {sorted(rules[rel] - defined)}"
+        )
+        found += [
+            f"{rel}:{i}: {line.strip()}"
+            for i, line in enumerate(source.splitlines(), 1)
+            if i not in exempt and spelled.search(line)
+        ]
+    assert not found, (
+        "text rules spelled outside their definitions in operators/text.py "
+        f"(select _quality_spark/_quality_sql, _n_stop_*, _tokens_*): {found}"
+    )
+
+
 def test_temp_views_are_bound_only_in_catalog():
     """Source-level audit: only catalog.py binds a temp view. A shared
     table goes through catalog.sql_with, which drops every name it binds,
@@ -764,6 +824,31 @@ def test_canonical_plan_ignores_expand_group_order():
     canon = capture_plans.canonical_plan
     assert canon(a) == canon(b)
     assert canon(a) != canon(plan(["shard", "lang"], 10))
+
+
+def test_canonical_plan_masks_rdd_call_site():
+    """tools/capture_plans.canonical_plan: the Java call site of a
+    checkpointed or Python-built RDD prints as
+    `NativeMethodAccessorImpl.java:0` early in a JVM's life and as
+    `<unknown>:0` after its reflection accessor is swapped; both read
+    the same, and a different RDD origin does not."""
+    canon = _capture_plans().canonical_plan
+
+    def plan(rdd: int, origin: str, site: str) -> str:
+        return "\n".join(
+            [
+                "(1) Scan ExistingRDD",
+                f"Output [2]: [doc_a#{rdd + 7}L, doc_b#{rdd + 8}L]",
+                f"Arguments: [doc_a#{rdd + 7}L, doc_b#{rdd + 8}L], "
+                f"MapPartitionsRDD[{rdd}] at {origin} at {site}, ExistingRDD, "
+                "UnknownPartitioning(0)",
+            ]
+        )
+
+    a = plan(41, "localCheckpoint", "NativeMethodAccessorImpl.java:0")
+    b = plan(977, "localCheckpoint", "<unknown>:0")
+    assert canon(a) == canon(b)
+    assert canon(a) != canon(plan(41, "applySchemaToPythonRDD", "<unknown>:0"))
 
 
 def test_canonical_stream_plan_masks_run_ids():

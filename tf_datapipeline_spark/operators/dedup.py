@@ -376,6 +376,8 @@ def q63_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_sql(dialect: str, src: str = "documents") -> str:
+    from tf_datapipeline_spark.operators.text import _tokens_sql
+
     bit_terms = " + ".join(
         f"(CASE WHEN SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
         f"THEN {2 ** b} ELSE 0 END)"
@@ -383,7 +385,7 @@ def _simhash_sql(dialect: str, src: str = "documents") -> str:
     )
     return f"""
     WITH toks AS (
-      SELECT doc_id, {D.explode(D.split_ws('trim(text)', dialect), dialect)} AS term
+      SELECT doc_id, {D.explode(_tokens_sql(dialect), dialect)} AS term
       FROM {src}
     ), th AS (
       SELECT doc_id, {sql_hash32("term", dialect)} AS h FROM toks

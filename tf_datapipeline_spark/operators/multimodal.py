@@ -50,15 +50,14 @@ from tf_datapipeline_spark.sources.etl import (
     scratch_dir,
     write_sharded_records,
 )
-from tf_datapipeline_spark.sources.images import synthetic_corpus
-
-# Shared dims CTE — MUST stay in sync with sources/images.py synthetic spec.
-_DIMS_SQL = """
-  SELECT doc_id, lang,
-         8 + (doc_id * 7919) % 25 AS h,
-         8 + (doc_id * 104729) % 25 AS w
-  FROM documents
-"""
+from tf_datapipeline_spark.sources.images import (
+    DIMS_SQL,
+    SYNTHETIC_DIMS_SQL,
+    SYNTHETIC_JPEG_DIMS_SQL,
+    synthetic_corpus,
+    synthetic_dims,
+    synthetic_jpeg_dims,
+)
 
 _PPM_BYTES_SQL = (
     "9 + length(CAST(w AS VARCHAR)) + length(CAST(h AS VARCHAR)) + 3 * h * w"
@@ -116,7 +115,7 @@ def map_decoded(
     SELECT doc_id, lang AS class_name, 'ppm' AS image_format,
            h AS height, w AS width, 3 AS channels,
            {_PPM_BYTES_SQL} AS n_bytes
-    FROM ({_DIMS_SQL})
+    FROM ({DIMS_SQL})
     """,
 )
 def q80_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,7 +168,7 @@ def q80_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q81_pixel_stats",
     oracle=f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     px AS (
       SELECT d.doc_id, (3*i.i + 5*j.j + 11*c.c + d.doc_id) % 256 AS v
       FROM dims d,
@@ -237,7 +236,7 @@ def _decoded_dims_stats(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame
 @query(
     "q8b_png_decode",
     oracle=f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     px AS (
       SELECT d.doc_id, d.h, d.w,
              (3*i.i + 5*j.j + 11*c.c + d.doc_id) % 256 AS v
@@ -269,7 +268,7 @@ def q8b_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q8c_bbox_overlay",
     oracle=f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     box AS (
       SELECT doc_id, h, w,
              h // 4 AS y0, w // 4 AS x0,
@@ -336,11 +335,11 @@ def q8c_bbox_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "q8d_jpeg_decode",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
       SELECT doc_id,
-             8 * (1 + (doc_id * 7919) % 4) AS h,
-             8 * (1 + (doc_id * 104729) % 4) AS w
+             {SYNTHETIC_JPEG_DIMS_SQL[0]} AS h,
+             {SYNTHETIC_JPEG_DIMS_SQL[1]} AS w
       FROM documents
     ),
     px AS (
@@ -938,7 +937,7 @@ def _etl_oracle() -> str:
     WITH corpus AS (
       SELECT 'corpus/' || lang || '/' || CAST(doc_id AS VARCHAR) || '.ppm' AS path,
              lang AS class_name, h, w
-      FROM ({_DIMS_SQL})
+      FROM ({DIMS_SQL})
     ),
     dict AS (
       SELECT class_name, ROW_NUMBER() OVER (ORDER BY class_name) - 1 AS label
@@ -1024,7 +1023,7 @@ def q8h_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q85_frame_sample",
     oracle=f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     fr AS (
       SELECT d.doc_id, d.w, i.i AS frame_idx
       FROM dims d, LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS i) i
@@ -1136,7 +1135,7 @@ _SCAN_DOCS = 64  # docs with doc_id < _SCAN_DOCS get written as files
     SELECT lang AS class_name, COUNT(*) AS n_files,
            CAST(SUM({_PPM_BYTES_SQL}) AS BIGINT) AS total_bytes,
            CAST(SUM(h * w) AS BIGINT) AS total_px
-    FROM ({_DIMS_SQL})
+    FROM ({DIMS_SQL})
     WHERE doc_id < {_SCAN_DOCS}
     GROUP BY lang
     """,
@@ -1244,7 +1243,7 @@ _RSZ = 16
 @query(
     "q89_resize_nearest",
     oracle=f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     grid AS (
       SELECT d.doc_id, d.h, d.w,
              LEAST(CAST(FLOOR((i.i + 0.5) * (d.h / {_RSZ}.0)) AS BIGINT), d.h - 1) AS si,
@@ -1286,7 +1285,7 @@ def q89_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q8a_channel_stats",
     oracle=f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     px AS (
       SELECT d.doc_id, c.c AS channel,
              (3*i.i + 5*j.j + 11*c.c + d.doc_id) % 256 AS v
@@ -1389,7 +1388,7 @@ def _ahash_oracle() -> str:
         f"((3*{si} + 5*{sj} + {11 * c} + d.doc_id) % 256)" for c in range(3)
     )
     return f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     grid AS (
       SELECT d.doc_id, (ti.i * {_AH} + tj.j) AS bit_idx, {gray} AS gray
       FROM dims d,
@@ -1620,7 +1619,7 @@ _SCENE_CUT = 6.0
 @query(
     "q8k_scene_change",
     oracle=f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     fr AS (
       SELECT d.doc_id, d.w, i.i AS frame_idx
       FROM dims d, LATERAL (SELECT unnest(generate_series(1, d.h - 1)) AS i) i
@@ -1677,7 +1676,7 @@ def q8k_scene_change(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q8l_keyframe_dedup",
     oracle=f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     fr AS (
       SELECT d.doc_id, d.w, i.i AS frame_idx
       FROM dims d, LATERAL (SELECT unnest(generate_series(1, d.h - 1)) AS i) i
@@ -1899,7 +1898,7 @@ def q8m_audio_spectrogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the JPEG third uses the flat-block corpus's 8-multiple dims rule
     # (sources/images.py synthetic_jpeg_dims); PPM/PNG use the gradient
     # corpus rule — the oracle replays both generative formulas
-    oracle="""
+    oracle=f"""
     SELECT image_format,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(COUNT(*) AS BIGINT) AS n_sniff_match,
@@ -1908,10 +1907,10 @@ def q8m_audio_spectrogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (
       SELECT CASE doc_id % 3 WHEN 0 THEN 'ppm' WHEN 1 THEN 'png'
              ELSE 'jpeg' END AS image_format,
-             CASE WHEN doc_id % 3 = 2 THEN 8 * (1 + (doc_id * 7919) % 4)
-                  ELSE 8 + (doc_id * 7919) % 25 END AS h,
-             CASE WHEN doc_id % 3 = 2 THEN 8 * (1 + (doc_id * 104729) % 4)
-                  ELSE 8 + (doc_id * 104729) % 25 END AS w
+             CASE WHEN doc_id % 3 = 2 THEN {SYNTHETIC_JPEG_DIMS_SQL[0]}
+                  ELSE {SYNTHETIC_DIMS_SQL[0]} END AS h,
+             CASE WHEN doc_id % 3 = 2 THEN {SYNTHETIC_JPEG_DIMS_SQL[1]}
+                  ELSE {SYNTHETIC_DIMS_SQL[1]} END AS w
       FROM documents
     )
     GROUP BY 1
@@ -1944,12 +1943,8 @@ def q8n_media_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if magic == b"\xff\xd8\xff"
                     else "unknown"
                 )
-                if fmt == "jpeg":
-                    want_h = 8 * (1 + (doc_id * 7919) % 4)
-                    want_w = 8 * (1 + (doc_id * 104729) % 4)
-                else:
-                    want_h = 8 + (doc_id * 7919) % 25
-                    want_w = 8 + (doc_id * 104729) % 25
+                dims = synthetic_jpeg_dims if fmt == "jpeg" else synthetic_dims
+                want_h, want_w = dims(doc_id)
                 try:
                     arr = decode_image(payload, fmt)
                     ok = int(
@@ -1998,12 +1993,11 @@ def q8n_media_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "q8o_transcode_audit",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(COUNT(*) AS BIGINT) AS n_lossless,
-           CAST(SUM(3 * (8 + (doc_id * 7919) % 25)
-                      * (8 + (doc_id * 104729) % 25)) AS BIGINT)
-             AS total_pixels
+           CAST(SUM(3 * ({SYNTHETIC_DIMS_SQL[0]}) * ({SYNTHETIC_DIMS_SQL[1]}))
+                AS BIGINT) AS total_pixels
     FROM documents
     """,
 )
@@ -2093,7 +2087,7 @@ def _phash_oracle() -> str:
         for i in range(_PH)
     )
     return f"""
-    WITH dims AS ({_DIMS_SQL}),
+    WITH dims AS ({DIMS_SQL}),
     pgrid AS (
       SELECT d.doc_id, ti.i AS gi, tj.j AS gj, {gray} AS gray
       FROM dims d,

@@ -2,13 +2,15 @@
 multimodal with a SemDeDup stage over `embeddings`): the full document
 pipeline a pretraining corpus runs, as ONE DataFrame chain —
 
-    quality filter (q51's rule) ->
+    quality gate ->
     exact dedup (q60/q61's min-doc-per-md5) ->
     near-dup removal (q63 LSH pairs -> q67 connected components,
                       keep the component representative) ->
     benchmark decontamination (q5c's 5-gram overlap) ->
     per-language accounting of kept docs / tokens / context chunks
-    (q50 token rule, q5g chunk arithmetic).
+    (q50 token rule, q5g chunk arithmetic),
+
+each per-document rule as operators/text.py defines it for both engines.
 
 Each doc gets all four flags computed INDEPENDENTLY and is assigned one
 drop reason by fixed priority (quality > exact-dup > near-dup >
@@ -38,13 +40,15 @@ from tf_datapipeline_spark.operators.dedup import (
     materialize_cc_labels,
 )
 from tf_datapipeline_spark.operators.text import (
-    _CONTAM_MIN_OVERLAP,
-    _CONTAM_MOD,
-    _CONTAM_N,
-    _SW_LIST,
-    _STOPWORDS,
+    _FINGERPRINT_SQL,
     _TOKENS_SQL,
-    _grams_spark,
+    _contamination_spark,
+    _contamination_sql,
+    _fingerprint_spark,
+    _n_stop_spark,
+    _n_stop_sql,
+    _quality_spark,
+    _quality_sql,
     _tokens_spark,
 )
 from tf_datapipeline_spark.registry import query
@@ -52,17 +56,9 @@ from tf_datapipeline_spark.registry import query
 _CHUNK_STRIDE = 192  # q5g's stride: chunks per kept doc
 
 
-def _reason_counts(reasons: tuple[str, ...]) -> str:
-    return ",\n           ".join(
-        f"CAST(COUNT(CASE WHEN reason = '{r}' THEN 1 END) AS BIGINT)"
-        f" AS n_{r}"
-        for r in reasons
-    )
-
-
-def _prep_flag_ctes() -> str:
-    """The oracles' shared CTE list (qt1, qt2; recursive): per-doc
-    `flags`, near-dup component `labels` and `contam`."""
+def _label_ctes() -> str:
+    """Recursive CTEs ending in `labels` (doc_id, label): each near-dup
+    doc's component minimum, by reachability over q63's LSH pairs."""
     return f"""shingles AS ({_sql_shingles('duckdb')}),
     sig AS ({_sql_signature('shingles')}),
     pairs AS ({_lsh_pairs_body()}),
@@ -75,59 +71,65 @@ def _prep_flag_ctes() -> str:
       UNION
       SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst
     ),
-    labels AS (SELECT src AS doc_id, MIN(dst) AS label FROM reach GROUP BY src),
-    toks AS (
+    labels AS (SELECT src AS doc_id, MIN(dst) AS label FROM reach GROUP BY src)"""
+
+
+def _flag_ctes() -> str:
+    """CTEs of the per-doc `flags` and the 5-gram `contam`."""
+    return f"""toks AS (
       SELECT doc_id, lang, text, n_chars, {_TOKENS_SQL} AS t FROM documents
     ),
     flags AS (
-      SELECT doc_id, lang, text, len(t) AS n_tokens,
-             NOT (n_chars >= 100
-                  AND len(list_filter(t, x -> x IN ({_SW_LIST}))) > 0)
-               AS bad_quality,
-             doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text)) AS exact_dup
+      SELECT doc_id, lang, len(t) AS n_tokens,
+             1 + (greatest(length(text), 1) - 1) // {_CHUNK_STRIDE} AS n_chunks,
+             NOT {_quality_sql(_n_stop_sql('t', 'duckdb'))} AS bad_quality,
+             doc_id <> MIN(doc_id) OVER (PARTITION BY {_FINGERPRINT_SQL})
+               AS exact_dup
       FROM toks
     ),
-    pos AS (
-      SELECT doc_id, t,
-             unnest(generate_series(1, greatest(len(t) - {_CONTAM_N - 1}, 0)))
-               AS i
-      FROM toks
-    ),
-    grams AS (
-      SELECT DISTINCT doc_id,
-             array_to_string(t[i:i+{_CONTAM_N - 1}], ' ') AS g
-      FROM pos
-    ),
-    bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % {_CONTAM_MOD} = 0),
-    contam AS (
-      SELECT c.doc_id, COUNT(*) >= {_CONTAM_MIN_OVERLAP} AS contaminated
-      FROM grams c JOIN bench b USING (g)
-      WHERE c.doc_id % {_CONTAM_MOD} <> 0
-      GROUP BY 1
-    )"""
+    {_contamination_sql('doc_id', 'toks')}"""
 
 
-def _prep_oracle() -> str:
-    reason_counts = _reason_counts(
-        ("kept", "quality", "exact_dup", "near_dup", "contaminated")
+# The oracle's drop reasons over `flags f` in priority order, as
+# `reasons` in _prep_counts: (condition, reason)
+_ORACLE_REASONS = (
+    ("f.bad_quality", "quality"),
+    ("f.exact_dup", "exact_dup"),
+    ("COALESCE(l.label <> f.doc_id, FALSE)", "near_dup"),
+    ("COALESCE(ct.contaminated, FALSE)", "contaminated"),
+)
+
+
+def _prep_oracle(
+    stages: tuple[tuple[str, str, str, str], ...] = (),
+    label_ctes: str = _label_ctes(),
+) -> str:
+    """qt1's oracle. Each of `stages` — (CTE, LEFT JOIN, drop condition,
+    reason) — adds one reason after `contaminated`, before `kept`, as in
+    _prep_counts. `label_ctes` defines `labels`; pass "" to read a
+    `labels` table instead (tools/staged_prep_oracle.py)."""
+    reasons = _ORACLE_REASONS + tuple(st[2:] for st in stages)
+    ctes = ",\n    ".join(
+        cte for cte in (label_ctes, _flag_ctes(), *(st[0] for st in stages)) if cte
+    )
+    whens = "\n                  ".join(f"WHEN {c} THEN '{r}'" for c, r in reasons)
+    counts = ",\n           ".join(
+        f"CAST(COUNT(CASE WHEN reason = '{r}' THEN 1 END) AS BIGINT) AS n_{r}"
+        for r in ("kept", *(r for _, r in reasons))
     )
     return f"""
-    WITH RECURSIVE {_prep_flag_ctes()},
+    WITH RECURSIVE {ctes},
     reasoned AS (
-      SELECT f.lang, f.n_tokens,
-             1 + (greatest(length(f.text), 1) - 1) // {_CHUNK_STRIDE}
-               AS n_chunks,
-             CASE WHEN f.bad_quality THEN 'quality'
-                  WHEN f.exact_dup THEN 'exact_dup'
-                  WHEN COALESCE(l.label <> f.doc_id, FALSE) THEN 'near_dup'
-                  WHEN COALESCE(ct.contaminated, FALSE) THEN 'contaminated'
+      SELECT f.lang, f.n_tokens, f.n_chunks,
+             CASE {whens}
                   ELSE 'kept' END AS reason
       FROM flags f
       LEFT JOIN labels l USING (doc_id)
       LEFT JOIN contam ct USING (doc_id)
+      {" ".join(st[1] for st in stages)}
     )
     SELECT lang,
-           {reason_counts},
+           {counts},
            CAST(COALESCE(SUM(CASE WHEN reason = 'kept' THEN n_tokens END), 0)
                 AS BIGINT) AS kept_tokens,
            CAST(COALESCE(SUM(CASE WHEN reason = 'kept' THEN n_chunks END), 0)
@@ -153,8 +155,7 @@ def _prep_counts(
     # shuffle measured 1.3s -> 2.1-2.8s; the device only pays on
     # md5-per-position streams like the shingle/winnow families)
     toks = _tokens_spark()
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
-    w = Window.partitionBy(F.md5("text"))
+    w = Window.partitionBy(_fingerprint_spark())
     # Project before the exchange (guide §2.3): the md5-dedup
     # window only needs the HASH as its key, and everything downstream
     # needs length(text), never text itself — computing n_chunks' input
@@ -169,22 +170,13 @@ def _prep_counts(
         "lang",
         n_chunks.alias("n_chunks"),
         F.size(toks).alias("n_tokens"),
-        (~((F.col("n_chars") >= 100) & (n_stop > 0))).alias("bad_quality"),
+        (~_quality_spark(_n_stop_spark(toks))).alias("bad_quality"),
         (F.col("doc_id") != F.min("doc_id").over(w)).alias("exact_dup"),
     )
 
     labels = materialize_cc_labels(spark, sf_dir)
 
-    grams = docs.select("doc_id", _tokens_spark().alias("_toks")).select(
-        "doc_id", F.explode(_grams_spark(F.col("_toks"))).alias("g")
-    )
-    bench = grams.filter(F.col("doc_id") % _CONTAM_MOD == 0).select("g").distinct()
-    contam = (
-        grams.filter(F.col("doc_id") % _CONTAM_MOD != 0)
-        .join(F.broadcast(bench), "g")
-        .groupBy("doc_id")
-        .agg((F.count(F.lit(1)) >= _CONTAM_MIN_OVERLAP).alias("contaminated"))
-    )
+    contam = _contamination_spark(docs, ["doc_id"])
 
     near_dup = F.col("label").isNotNull() & (F.col("label") != F.col("doc_id"))
     reasons = [
@@ -237,35 +229,17 @@ def qt1_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedded. Oracle replays the entire composition (recursive-CTE
 # components + q68's decimal-exact cell pipeline as a sub-select).
 # --------------------------------------------------------------------------
-def _prep_semantic_oracle() -> str:
+def _prep_semantic_oracle(label_ctes: str = _label_ctes()) -> str:
     from tf_datapipeline_spark.operators.dedup import _semantic_dedup_sql
 
-    reason_counts = _reason_counts(
-        ("kept", "quality", "exact_dup", "near_dup", "contaminated", "semantic_dup")
+    sem = (
+        f"sem AS (SELECT vec_id, keep FROM ({_semantic_dedup_sql('duckdb')}) s)",
+        "LEFT JOIN sem s ON s.vec_id = f.doc_id",
+        "COALESCE(s.keep, 1) = 0",
+        "semantic_dup",
     )
     return f"""
-    WITH RECURSIVE {_prep_flag_ctes()},
-    sem AS (
-      SELECT vec_id, keep FROM ({_semantic_dedup_sql('duckdb')}) s
-    ),
-    reasoned AS (
-      SELECT f.lang, f.n_tokens,
-             CASE WHEN f.bad_quality THEN 'quality'
-                  WHEN f.exact_dup THEN 'exact_dup'
-                  WHEN COALESCE(l.label <> f.doc_id, FALSE) THEN 'near_dup'
-                  WHEN COALESCE(ct.contaminated, FALSE) THEN 'contaminated'
-                  WHEN COALESCE(s.keep, 1) = 0 THEN 'semantic_dup'
-                  ELSE 'kept' END AS reason
-      FROM flags f
-      LEFT JOIN labels l USING (doc_id)
-      LEFT JOIN contam ct USING (doc_id)
-      LEFT JOIN sem s ON s.vec_id = f.doc_id
-    )
-    SELECT lang,
-           {reason_counts},
-           CAST(COALESCE(SUM(CASE WHEN reason = 'kept' THEN n_tokens END), 0)
-                AS BIGINT) AS kept_tokens
-    FROM reasoned GROUP BY 1
+    SELECT * EXCLUDE (kept_chunks) FROM ({_prep_oracle((sem,), label_ctes)})
     """
 
 

@@ -11,7 +11,7 @@ are exact integers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import (
@@ -28,21 +28,221 @@ from tf_datapipeline_spark.functions.texthash import (
 )
 from tf_datapipeline_spark.registry import query
 
-# Whitespace-token split shared by several ops (lazy: building a Column
-# requires an active SparkSession).
-def _tokens_spark():
+# --------------------------------------------------------------------------
+# The per-document text rules, each written once as a Spark Column
+# (`*_spark`, lazy: a Column needs an active session) and as the oracle's
+# SQL (`*_sql`/`*_SQL`; `dialect` where a shared builder reads it too).
+# Components and composites (qt0, q57, qt5; qt1/qt2 in prep.py, qt4 in
+# streaming/events_stream.py) select them; test_plans.py audits that.
+# --------------------------------------------------------------------------
+def _tokens_spark() -> Column:  # the whitespace tokens of `text`
     return F.split(F.trim(F.col("text")), r"\s+")
 
 
-def _tokens_sql(col: str) -> str:
-    """DuckDB whitespace tokens of the string column `col`."""
-    return f"regexp_split_to_array(trim({col}), '\\s+')"
+def _tokens_sql(dialect: str) -> str:
+    return D.split_ws("trim(text)", dialect)
 
 
-_TOKENS_SQL = _tokens_sql("text")
+_TOKENS_SQL = _tokens_sql("duckdb")
+
+
+def _count_words_spark(toks: Column, words: tuple[str, ...]) -> Column:
+    """How many elements of the token array `toks` are in `words`."""
+    return F.size(F.filter(toks, lambda t: t.isin(*words)))
+
+
+def _count_words_sql(toks: str, words: tuple[str, ...], dialect: str) -> str:
+    listed = ", ".join(f"'{w}'" for w in words)
+    return D.size(f"filter({toks}, t -> t IN ({listed}))", dialect)
+
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
-_SW_LIST = ", ".join(f"'{w}'" for w in _STOPWORDS)
+
+
+def _n_stop_spark(toks: Column | None = None) -> Column:
+    return _count_words_spark(_tokens_spark() if toks is None else toks, _STOPWORDS)
+
+
+def _n_stop_sql(toks: str, dialect: str) -> str:
+    return _count_words_sql(toks, _STOPWORDS, dialect)
+
+
+_N_STOP_SQL = _n_stop_sql(_TOKENS_SQL, "duckdb")
+
+# q51's quality gate (Gopher-style, Rae et al. 2021): a minimum length in
+# characters and at least one stopword (`n_stop` counts them)
+_GATE_MIN_CHARS = 100
+
+
+def _quality_spark(n_stop: Column | None = None) -> Column:
+    n_stop = _n_stop_spark() if n_stop is None else n_stop
+    return (F.col("n_chars") >= _GATE_MIN_CHARS) & (n_stop > 0)
+
+
+def _quality_sql(n_stop: str) -> str:
+    return f"(n_chars >= {_GATE_MIN_CHARS} AND {n_stop} > 0)"
+
+
+_QUALITY_SQL = _quality_sql(_N_STOP_SQL)
+
+# The share of `text`'s characters matching a one-character regex, by
+# length difference after deleting them (DuckDB deletes every match only
+# with the 'g' flag); and the count of a regex's matches.
+_ALPHA_RE, _SPACE_RE = "[a-z]", r"\s"
+
+
+def _char_ratio_spark(pattern: str) -> Column:
+    text_len = F.length("text")
+    hits = text_len - F.length(F.regexp_replace("text", pattern, ""))
+    return hits.cast("double") / text_len
+
+
+def _char_ratio_sql(pattern: str) -> str:
+    return (
+        f"(CAST(length(text) - length(regexp_replace(text, '{pattern}', '', 'g'))"
+        " AS DOUBLE) / length(text))"
+    )
+
+
+def _regex_count_spark(pattern: str) -> Column:
+    return F.regexp_count("text", F.lit(pattern))
+
+
+def _regex_count_sql(pattern: str) -> str:
+    return f"CAST(length(regexp_extract_all(text, '{pattern}')) AS INT)"
+
+
+# q52's language ID: marker-word counts per language, argmax with ties
+# going to the first language in sorted order.
+_LANG_MARKERS = {
+    "de": ("der", "die", "das", "und", "ist"),
+    "en": ("the", "a", "of", "and", "is"),
+    "es": ("el", "la", "los", "y", "es"),
+    "fr": ("le", "la", "les", "et", "est"),
+    "zh": ("de", "shi", "le", "zai", "he"),
+}
+_LANG_SCORES_SQL = {
+    lang: _count_words_sql(_TOKENS_SQL, words, "duckdb")
+    for lang, words in _LANG_MARKERS.items()
+}
+
+
+def _lang_scores_spark() -> dict[str, Column]:
+    toks = _tokens_spark()
+    return {lang: _count_words_spark(toks, w) for lang, w in _LANG_MARKERS.items()}
+
+
+def _lang_id_spark(scores: dict[str, Column]) -> tuple[Column, Column]:
+    """(pred_lang, top_score) over the per-language `scores`."""
+    langs = sorted(scores)
+    top = F.greatest(*[scores[lang] for lang in langs])
+    pred = F.when(scores[langs[0]] == top, langs[0])
+    for lang in langs[1:-1]:
+        pred = pred.when(scores[lang] == top, lang)
+    return pred.otherwise(langs[-1]), top
+
+
+def _lang_id_sql(scores: dict[str, str]) -> tuple[str, str]:
+    langs = sorted(scores)
+    top = f"GREATEST({', '.join(scores[lang] for lang in langs)})"
+    whens = " ".join(f"WHEN {scores[lang]} THEN '{lang}'" for lang in langs[:-1])
+    return f"CASE {top} {whens} ELSE '{langs[-1]}' END", top
+
+
+_BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"  # q53: words, numbers, punctuation
+
+
+# q54's content fingerprint and the size of its exact-duplicate cluster
+def _fingerprint_spark() -> Column:
+    return F.md5("text")
+
+
+def _cluster_size_spark() -> Column:
+    return F.count(F.lit(1)).over(Window.partitionBy(_fingerprint_spark()))
+
+
+_FINGERPRINT_SQL = "md5(text)"
+_CLUSTER_SIZE_SQL = f"COUNT(*) OVER (PARTITION BY {_FINGERPRINT_SQL})"
+
+
+# Word n-grams: the oracle's from position rows over a relation (keys, t)
+# of token arrays t, Spark's array-side (1-indexed in both engines).
+def _doc_tokens_sql(keys: str) -> str:
+    return f"(SELECT {keys}, {_TOKENS_SQL} AS t FROM documents)"
+
+
+def _gram_pos_sql(n: int, keys: str, src: str) -> str:
+    """Rows (keys, t, i) of `src`, one per start i of an n-token window."""
+    return f"""SELECT {keys}, t,
+             unnest(generate_series(1, greatest(len(t) - {n - 1}, 0))) AS i
+      FROM {src}"""
+
+
+def _gram_sql(n: int) -> str:
+    return f"array_to_string(t[i:i+{n - 1}], ' ')"
+
+
+def _bigram_strings_spark(toks: str) -> Column:
+    """The bigrams of the token array column `toks` (at least 2 long)."""
+    return F.expr(
+        f"transform(sequence(1, size({toks}) - 1), "
+        f"i -> concat(element_at({toks}, i), ' ', element_at({toks}, i + 1)))"
+    )
+
+
+# q5c's benchmark contamination: a doc outside the benchmark slice shares
+# at least _CONTAM_MIN_OVERLAP of its distinct _CONTAM_N-grams with it.
+_CONTAM_N = 5  # words per gram
+_CONTAM_MIN_OVERLAP = 3  # distinct shared grams => contaminated
+_CONTAM_MOD = 23  # doc_id % _CONTAM_MOD == 0 -> benchmark slice
+
+
+def _gram_rows_spark(docs: DataFrame, keys: list[str]) -> DataFrame:
+    """Rows (keys, g): each doc's distinct 5-grams. The token array is
+    projected first: split inline, it is re-evaluated inside the
+    transform lambda for every slice (6.5x slower at sf0.1)."""
+    toks = F.col("_toks")
+    grams = F.array_distinct(
+        F.when(
+            F.size(toks) >= _CONTAM_N,
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks) - (_CONTAM_N - 1)),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, _CONTAM_N)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+    )
+    return docs.select(*keys, _tokens_spark().alias("_toks")).select(
+        *keys, F.explode(grams).alias("g")
+    )
+
+
+def _contamination_spark(docs: DataFrame, keys: list[str]) -> DataFrame:
+    """Rows (keys, n_overlap, contaminated) of the docs outside the slice
+    that share a benchmark gram. The small benchmark gram set is
+    broadcast."""
+    grams = _gram_rows_spark(docs, keys)
+    bench = grams.filter(F.col("doc_id") % _CONTAM_MOD == 0).select("g").distinct()
+    n = F.count(F.lit(1))
+    return (
+        grams.filter(F.col("doc_id") % _CONTAM_MOD != 0)
+        .join(F.broadcast(bench), "g")
+        .groupBy(*keys)
+        .agg(n.alias("n_overlap"), (n >= _CONTAM_MIN_OVERLAP).alias("contaminated"))
+    )
+
+
+def _contamination_sql(keys: str, src: str) -> str:
+    """CTEs ending in `contam`, as _contamination_spark, over `src` (keys, t)."""
+    return f"""pos AS ({_gram_pos_sql(_CONTAM_N, keys, src)}),
+    grams AS (SELECT DISTINCT {keys}, {_gram_sql(_CONTAM_N)} AS g FROM pos),
+    bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % {_CONTAM_MOD} = 0),
+    contam AS (
+      SELECT {keys}, COUNT(*) AS n_overlap,
+             COUNT(*) >= {_CONTAM_MIN_OVERLAP} AS contaminated
+      FROM grams JOIN bench USING (g)
+      WHERE doc_id % {_CONTAM_MOD} <> 0
+      GROUP BY {keys}
+    )"""
 
 
 # --------------------------------------------------------------------------
@@ -70,122 +270,81 @@ def q50_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q51 — quality scoring: alpha/space/stopword ratios + a quality flag.
-# Counting by length-difference after regexp_replace (global in Spark by
-# default; DuckDB needs the 'g' flag).
+# q51 — quality scoring: alpha/space/stopword ratios + the quality gate.
 # --------------------------------------------------------------------------
 @query(
     "q51_quality_score",
     oracle=f"""
     SELECT doc_id,
-           (CAST(length(text) - length(regexp_replace(text, '[a-z]', '', 'g')) AS DOUBLE)
-             / length(text)) AS alpha_ratio,
-           (CAST(length(text) - length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE)
-             / length(text)) AS space_ratio,
-           (CAST(length(list_filter({_TOKENS_SQL}, t -> t IN ({_SW_LIST}))) AS DOUBLE)
-             / length({_TOKENS_SQL})) AS stopword_ratio,
-           CASE WHEN n_chars >= 100
-                 AND length(list_filter({_TOKENS_SQL}, t -> t IN ({_SW_LIST}))) > 0
-                THEN 1 ELSE 0 END AS is_quality
+           {_char_ratio_sql(_ALPHA_RE)} AS alpha_ratio,
+           {_char_ratio_sql(_SPACE_RE)} AS space_ratio,
+           CAST({_N_STOP_SQL} AS DOUBLE) / length({_TOKENS_SQL}) AS stopword_ratio,
+           CASE WHEN {_QUALITY_SQL} THEN 1 ELSE 0 END AS is_quality
     FROM documents
     """,
 )
 def q51_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    text_len = F.length("text")
-    alpha = text_len - F.length(F.regexp_replace("text", "[a-z]", ""))
-    space = text_len - F.length(F.regexp_replace("text", r"\s", ""))
-    n_stop = F.size(
-        F.filter(_tokens_spark(), lambda t: t.isin(*_STOPWORDS))
-    )
+    n_stop = _n_stop_spark()
     n_tokens = F.size(_tokens_spark())
     return docs.select(
         "doc_id",
-        (alpha.cast("double") / text_len).alias("alpha_ratio"),
-        (space.cast("double") / text_len).alias("space_ratio"),
+        _char_ratio_spark(_ALPHA_RE).alias("alpha_ratio"),
+        _char_ratio_spark(_SPACE_RE).alias("space_ratio"),
         (n_stop.cast("double") / n_tokens).alias("stopword_ratio"),
-        F.when((F.col("n_chars") >= 100) & (n_stop > 0), 1)
-        .otherwise(0)
-        .alias("is_quality"),
+        F.when(_quality_spark(n_stop), 1).otherwise(0).alias("is_quality"),
     )
 
 
 # --------------------------------------------------------------------------
-# q52 — language-ID heuristic: marker-word counts per language, argmax
-# with lexicographic tie-break. (The engine op; on this synthetic corpus
-# most docs score 'en'.)
+# q52 — language-ID heuristic (the rule above). On this synthetic corpus
+# most docs score 'en'.
 # --------------------------------------------------------------------------
-_LANG_MARKERS = {
-    "de": ("der", "die", "das", "und", "ist"),
-    "en": ("the", "a", "of", "and", "is"),
-    "es": ("el", "la", "los", "y", "es"),
-    "fr": ("le", "la", "les", "et", "est"),
-    "zh": ("de", "shi", "le", "zai", "he"),
-}
-
-
-def _sql_lang_score(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in _LANG_MARKERS[lang])
-    return f"length(list_filter({_TOKENS_SQL}, t -> t IN ({words})))"
-
-
-@query(
-    "q52_lang_id",
-    oracle=f"""
+def _q52_oracle() -> str:
+    pred, top = _lang_id_sql({lang: f"s_{lang}" for lang in _LANG_MARKERS})
+    named = ",\n             ".join(
+        f"{sql} AS s_{lang}" for lang, sql in _LANG_SCORES_SQL.items()
+    )
+    return f"""
     WITH scored AS (
       SELECT doc_id, lang AS actual_lang,
-             {_sql_lang_score('de')} AS s_de,
-             {_sql_lang_score('en')} AS s_en,
-             {_sql_lang_score('es')} AS s_es,
-             {_sql_lang_score('fr')} AS s_fr,
-             {_sql_lang_score('zh')} AS s_zh
+             {named}
       FROM documents
     )
-    SELECT doc_id, actual_lang,
-           CASE GREATEST(s_de, s_en, s_es, s_fr, s_zh)
-                WHEN s_de THEN 'de' WHEN s_en THEN 'en' WHEN s_es THEN 'es'
-                WHEN s_fr THEN 'fr' ELSE 'zh' END AS pred_lang,
-           CAST(GREATEST(s_de, s_en, s_es, s_fr, s_zh) AS INTEGER) AS top_score
+    SELECT doc_id, actual_lang, {pred} AS pred_lang,
+           CAST({top} AS INTEGER) AS top_score
     FROM scored
-    """,
-)
+    """
+
+
+@query("q52_lang_id", oracle=_q52_oracle())
 def q52_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    def count_markers(words):
-        return F.size(F.filter(_tokens_spark(), lambda t: t.isin(*words)))
-
-    scores = {lang: count_markers(words) for lang, words in _LANG_MARKERS.items()}
+    scores = _lang_scores_spark()
     scored = docs.select(
         "doc_id",
         F.col("lang").alias("actual_lang"),
-        *[scores[lang].alias(f"s_{lang}") for lang in sorted(_LANG_MARKERS)],
+        *[scores[lang].alias(f"s_{lang}") for lang in sorted(scores)],
     )
-    top = F.greatest(*[F.col(f"s_{lang}") for lang in sorted(_LANG_MARKERS)])
-    pred = (
-        F.when(F.col("s_de") == top, "de")
-        .when(F.col("s_en") == top, "en")
-        .when(F.col("s_es") == top, "es")
-        .when(F.col("s_fr") == top, "fr")
-        .otherwise("zh")
-    )
+    pred, top = _lang_id_spark({lang: F.col(f"s_{lang}") for lang in scores})
     return scored.select(
         "doc_id", "actual_lang", pred.alias("pred_lang"), top.alias("top_score")
     )
 
 
 # --------------------------------------------------------------------------
-# q53 — BPE-ish token counting: words / numbers / punctuation as separate
-# tokens (the "token budget" op of a training-data pipeline).
+# q53 — BPE-ish token counting (the "token budget" op of a training-data
+# pipeline) and the number tokens among them.
 # --------------------------------------------------------------------------
-_BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
+_NUMBER_RE = "[0-9]+"
 
 
 @query(
     "q53_token_count_bpe",
     oracle=f"""
     SELECT doc_id,
-           CAST(length(regexp_extract_all(text, '{_BPE_PATTERN}')) AS INT) AS n_bpe_tokens,
-           CAST(length(regexp_extract_all(text, '[0-9]+')) AS INT) AS n_number_tokens
+           {_regex_count_sql(_BPE_PATTERN)} AS n_bpe_tokens,
+           {_regex_count_sql(_NUMBER_RE)} AS n_number_tokens
     FROM documents
     """,
 )
@@ -193,8 +352,8 @@ def q53_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.regexp_count("text", F.lit(_BPE_PATTERN)).alias("n_bpe_tokens"),
-        F.regexp_count("text", F.lit("[0-9]+")).alias("n_number_tokens"),
+        _regex_count_spark(_BPE_PATTERN).alias("n_bpe_tokens"),
+        _regex_count_spark(_NUMBER_RE).alias("n_number_tokens"),
     )
 
 
@@ -204,97 +363,63 @@ def q53_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "q54_fingerprint",
-    oracle="""
-    SELECT doc_id, md5(text) AS fingerprint,
-           COUNT(*) OVER (PARTITION BY md5(text)) AS cluster_size
+    oracle=f"""
+    SELECT doc_id, {_FINGERPRINT_SQL} AS fingerprint,
+           {_CLUSTER_SIZE_SQL} AS cluster_size
     FROM documents
     """,
 )
 def q54_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.md5("text").alias("fingerprint"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy(F.md5("text")))
-        .alias("cluster_size"),
+        _fingerprint_spark().alias("fingerprint"),
+        _cluster_size_spark().alias("cluster_size"),
     )
 
 
 # --------------------------------------------------------------------------
-# qt0 — composite per-document text profile: token stats (q50), quality
-# ratios + flag (q51), language-ID heuristic (q52), BPE-ish token budget
-# (q53) and content fingerprint + duplicate-cluster size (q54) in ONE
-# scan — one wide oracle-checked row per document covering the five
-# mandated text ops. Everything is built-in column expressions (single
-# codegen stage); the only shuffle is the fingerprint-cluster window,
+# qt0 — composite per-document text profile: the q50-q54 rules (token
+# stats, quality ratios and gate, language ID, BPE token budget, content
+# fingerprint and duplicate-cluster size) in ONE scan, one wide row per
+# document. Everything is built-in column expressions (single codegen
+# stage); the only shuffle is the fingerprint-cluster window,
 # partitioned by the content hash.
 # --------------------------------------------------------------------------
-@query(
-    "qt0_text_profile",
-    oracle=f"""
+def _qt0_oracle() -> str:
+    pred, _ = _lang_id_sql(_LANG_SCORES_SQL)
+    return f"""
     SELECT doc_id,
            n_chars,
            CAST(length({_TOKENS_SQL}) AS INT) AS n_tokens,
-           (CAST(length(text) - length(regexp_replace(text, '[a-z]', '', 'g')) AS DOUBLE)
-             / length(text)) AS alpha_ratio,
-           (CAST(length(list_filter({_TOKENS_SQL}, t -> t IN ({_SW_LIST}))) AS DOUBLE)
-             / length({_TOKENS_SQL})) AS stopword_ratio,
-           CASE WHEN n_chars >= 100
-                 AND length(list_filter({_TOKENS_SQL}, t -> t IN ({_SW_LIST}))) > 0
-                THEN 1 ELSE 0 END AS is_quality,
-           CASE GREATEST({_sql_lang_score('de')}, {_sql_lang_score('en')},
-                         {_sql_lang_score('es')}, {_sql_lang_score('fr')},
-                         {_sql_lang_score('zh')})
-                WHEN {_sql_lang_score('de')} THEN 'de'
-                WHEN {_sql_lang_score('en')} THEN 'en'
-                WHEN {_sql_lang_score('es')} THEN 'es'
-                WHEN {_sql_lang_score('fr')} THEN 'fr'
-                ELSE 'zh' END AS pred_lang,
-           CAST(length(regexp_extract_all(text, '{_BPE_PATTERN}')) AS INT) AS n_bpe_tokens,
-           md5(text) AS fingerprint,
-           COUNT(*) OVER (PARTITION BY md5(text)) AS cluster_size
+           {_char_ratio_sql(_ALPHA_RE)} AS alpha_ratio,
+           CAST({_N_STOP_SQL} AS DOUBLE) / length({_TOKENS_SQL}) AS stopword_ratio,
+           CASE WHEN {_QUALITY_SQL} THEN 1 ELSE 0 END AS is_quality,
+           {pred} AS pred_lang,
+           {_regex_count_sql(_BPE_PATTERN)} AS n_bpe_tokens,
+           {_FINGERPRINT_SQL} AS fingerprint,
+           {_CLUSTER_SIZE_SQL} AS cluster_size
     FROM documents
-    """,
-)
+    """
+
+
+@query("qt0_text_profile", oracle=_qt0_oracle())
 def qt0_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    text_len = F.length("text")
-    alpha = text_len - F.length(F.regexp_replace("text", "[a-z]", ""))
-    n_stop = F.size(F.filter(_tokens_spark(), lambda t: t.isin(*_STOPWORDS)))
+    n_stop = _n_stop_spark()
     n_tokens = F.size(_tokens_spark())
-
-    def count_markers(words):
-        return F.size(F.filter(_tokens_spark(), lambda t: t.isin(*words)))
-
-    scores = {lang: count_markers(words) for lang, words in _LANG_MARKERS.items()}
-    top = F.greatest(*[scores[lang] for lang in sorted(_LANG_MARKERS)])
-    pred = (
-        F.when(scores["de"] == top, "de")
-        .when(scores["en"] == top, "en")
-        .when(scores["es"] == top, "es")
-        .when(scores["fr"] == top, "fr")
-        .otherwise("zh")
-    )
+    pred, _ = _lang_id_spark(_lang_scores_spark())
     return docs.select(
         "doc_id",
         "n_chars",
         n_tokens.alias("n_tokens"),
-        (alpha.cast("double") / text_len).alias("alpha_ratio"),
+        _char_ratio_spark(_ALPHA_RE).alias("alpha_ratio"),
         (n_stop.cast("double") / n_tokens).alias("stopword_ratio"),
-        F.when((F.col("n_chars") >= 100) & (n_stop > 0), 1)
-        .otherwise(0)
-        .alias("is_quality"),
+        F.when(_quality_spark(n_stop), 1).otherwise(0).alias("is_quality"),
         pred.alias("pred_lang"),
-        F.regexp_count("text", F.lit(_BPE_PATTERN)).alias("n_bpe_tokens"),
-        F.md5("text").alias("fingerprint"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy(F.md5("text")))
-        .alias("cluster_size"),
+        _regex_count_spark(_BPE_PATTERN).alias("n_bpe_tokens"),
+        _fingerprint_spark().alias("fingerprint"),
+        _cluster_size_spark().alias("cluster_size"),
     )
 
 
@@ -455,23 +580,21 @@ def q56_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q57 — corpus preparation: the composed training-data filter chain a
-# reference user actually runs — quality gate (length + stopword
-# presence, q51's predicate) AND exact-dedup keeper (min doc_id per
-# content hash, q60/q61's policy) — rolled up per (lang, source). One
-# scan + one dedup shuffle + one semi join + one agg; every stage is the
-# already-verified operator, composed.
+# reference user actually runs — the quality gate AND the exact-dedup
+# keeper (min doc_id per content fingerprint, q60/q61's policy) —
+# rolled up per (lang, source). One scan + one dedup shuffle + one semi
+# join + one agg.
 # --------------------------------------------------------------------------
 @query(
     "q57_corpus_prep",
     oracle=f"""
     WITH keepers AS (
-      SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
+      SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY {_FINGERPRINT_SQL}
     ),
     quality AS (
       SELECT doc_id, lang, source, n_chars
       FROM documents
-      WHERE n_chars >= 100
-        AND length(list_filter({_TOKENS_SQL}, t -> t IN ({_SW_LIST}))) > 0
+      WHERE {_QUALITY_SQL}
     )
     SELECT q.lang, q.source,
            COUNT(*) AS n_kept,
@@ -482,9 +605,8 @@ def q56_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q57_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    keepers = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    n_stop = F.size(F.filter(_tokens_spark(), lambda t: t.isin(*_STOPWORDS)))
-    quality = docs.filter((F.col("n_chars") >= 100) & (n_stop > 0)).select(
+    keepers = docs.groupBy(_fingerprint_spark()).agg(F.min("doc_id").alias("doc_id"))
+    quality = docs.filter(_quality_spark()).select(
         "doc_id", "lang", "source", "n_chars"
     )
     kept = quality.join(keepers.select("doc_id"), "doc_id", "left_semi")
@@ -562,8 +684,7 @@ _G_MAX_TOP_FRAC = 0.2
       SELECT doc_id,
              CAST(list_sum(list_transform(list_filter({_TOKENS_SQL}, t -> t <> ''),
                                           t -> length(t))) AS BIGINT) AS char_sum,
-             CAST(length(list_filter({_TOKENS_SQL}, t -> t IN ({_SW_LIST})))
-                  AS BIGINT) AS stop_hits
+             CAST({_N_STOP_SQL} AS BIGINT) AS stop_hits
       FROM documents
     )
     SELECT r.doc_id,
@@ -597,9 +718,7 @@ def q59_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.aggregate(
             nonempty, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
         ).alias("char_sum"),
-        F.size(F.filter(_tokens_spark(), lambda t: t.isin(*_STOPWORDS)))
-        .cast("bigint")
-        .alias("stop_hits"),
+        _n_stop_spark().cast("bigint").alias("stop_hits"),
     )
     mwl = F.col("char_sum").cast("double") / F.col("n_words")
     top_frac = F.col("top_count").cast("double") / F.col("n_words")
@@ -628,27 +747,14 @@ def q59_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are built array-side (1-indexed element access — identical semantics in
 # Spark SQL and DuckDB) then explode->aggregate per doc_id.
 # --------------------------------------------------------------------------
-_BIGRAMS_SPARK = (
-    "transform(sequence(1, size(toks) - 1), "
-    "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-)
-_BIGRAMS_DUCK = (
-    "list_transform(generate_series(1, length(toks) - 1), "
-    "i -> toks[i] || ' ' || toks[i + 1])"
-)
-
-
 @query(
     "q5a_repetition_profile",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, list_filter({_TOKENS_SQL}, x -> x <> '') AS toks
-      FROM documents
+      SELECT doc_id, list_filter({_TOKENS_SQL}, x -> x <> '') AS t FROM documents
     ),
-    bg AS (
-      SELECT doc_id, unnest({_BIGRAMS_DUCK}) AS bigram FROM t
-      WHERE length(toks) >= 2
-    ),
+    pos AS ({_gram_pos_sql(2, 'doc_id', 't')}),
+    bg AS (SELECT doc_id, {_gram_sql(2)} AS bigram FROM pos),
     bc AS (
       SELECT doc_id, bigram, COUNT(*) AS c FROM bg GROUP BY doc_id, bigram
     )
@@ -666,7 +772,7 @@ def q5a_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id", F.filter(_tokens_spark(), lambda x: x != "").alias("toks")
     ).filter(F.size("toks") >= 2)
-    bg = t.select("doc_id", F.explode(F.expr(_BIGRAMS_SPARK)).alias("bigram"))
+    bg = t.select("doc_id", F.explode(_bigram_strings_spark("toks")).alias("bigram"))
     bc = bg.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("c"))
     return bc.groupBy("doc_id").agg(
         F.sum("c").cast("bigint").alias("n_bigrams"),
@@ -757,70 +863,18 @@ def q5b_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # At 100 TB the only shuffle is the corpus-gram dedup per doc (map-local
 # array_distinct, no exchange) plus the final per-doc count.
 # --------------------------------------------------------------------------
-_CONTAM_N = 5  # words per gram
-_CONTAM_MIN_OVERLAP = 3  # distinct shared grams => contaminated
-_CONTAM_MOD = 23  # doc_id % _CONTAM_MOD == 0 -> benchmark slice
-
-
-def _grams_spark(toks=None):
-    """5-gram array expression. Pass an already-PROJECTED token column:
-    with the default inline ``_tokens_spark()`` the regexp split is
-    re-evaluated inside the transform lambda for every slice — measured
-    6.5x slower at sf0.1 (6.2s -> 0.95s for the full gram explode)."""
-    if toks is None:
-        toks = _tokens_spark()
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= _CONTAM_N,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (_CONTAM_N - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, _CONTAM_N)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
-
-
 @query(
     "q5c_contamination",
     oracle=f"""
-    WITH pos AS (
-      SELECT doc_id, lang, t,
-             unnest(generate_series(1, greatest(len(t) - {_CONTAM_N - 1}, 0))) AS i
-      FROM (SELECT doc_id, lang, {_TOKENS_SQL} AS t FROM documents)
-    ),
-    grams AS (
-      SELECT DISTINCT doc_id, lang,
-             array_to_string(t[i:i+{_CONTAM_N - 1}], ' ') AS g
-      FROM pos
-    ),
-    bench AS (
-      SELECT DISTINCT g FROM grams WHERE doc_id % {_CONTAM_MOD} = 0
-    )
-    SELECT c.doc_id, c.lang, COUNT(*) AS n_overlap,
-           CAST(COUNT(*) >= {_CONTAM_MIN_OVERLAP} AS INT) AS contaminated
-    FROM grams c JOIN bench b USING (g)
-    WHERE c.doc_id % {_CONTAM_MOD} <> 0
-    GROUP BY 1, 2
+    WITH {_contamination_sql('doc_id, lang', _doc_tokens_sql('doc_id, lang'))}
+    SELECT doc_id, lang, n_overlap, CAST(contaminated AS INT) AS contaminated
+    FROM contam
     """,
 )
 def q5c_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select(
-        "doc_id", "lang", _tokens_spark().alias("_toks")
-    ).select("doc_id", "lang", F.explode(_grams_spark(F.col("_toks"))).alias("g"))
-    bench = (
-        grams.filter(F.col("doc_id") % _CONTAM_MOD == 0).select("g").distinct()
-    )
-    corpus = grams.filter(F.col("doc_id") % _CONTAM_MOD != 0)
-    n = F.count(F.lit(1))
-    return (
-        corpus.join(F.broadcast(bench), "g")
-        .groupBy("doc_id", "lang")
-        .agg(
-            n.alias("n_overlap"),
-            (n >= _CONTAM_MIN_OVERLAP).cast("int").alias("contaminated"),
-        )
-    )
+    contam = _contamination_spark(docs, ["doc_id", "lang"])
+    return contam.withColumn("contaminated", F.col("contaminated").cast("int"))
 
 
 # --------------------------------------------------------------------------
@@ -899,11 +953,9 @@ def q5d_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LM_SCALE = 1 << 30
 
 
-def _bigrams_spark(toks=None):
-    """Bigram array expression — like ``_grams_spark``, pass a projected
-    token column so the split isn't re-evaluated per element."""
-    if toks is None:
-        toks = _tokens_spark()
+def _bigrams_spark(toks):
+    """Bigram array expression over a projected token column (so the
+    split isn't re-evaluated per element, as in _gram_rows_spark)."""
     pair = lambda i: F.struct(
         F.element_at(toks, i).alias("w1"),
         F.element_at(toks, i + 1).alias("w2"),
@@ -918,11 +970,7 @@ def _bigrams_spark(toks=None):
 # head/middle/tail bucketing over it) — identical text so both oracles
 # replay the exact same arithmetic.
 _LM_SCORE_SQL = f"""
-    WITH pos AS (
-      SELECT doc_id, t,
-             unnest(generate_series(1, greatest(len(t) - 1, 0))) AS i
-      FROM (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents)
-    ),
+    WITH pos AS ({_gram_pos_sql(2, "doc_id", _doc_tokens_sql("doc_id"))}),
     bg AS (
       SELECT doc_id, t[i] AS w1, t[i+1] AS w2 FROM pos
     ),
@@ -987,17 +1035,8 @@ def q5e_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q5f_top_ngrams",
     oracle=f"""
-    WITH toks AS (
-      SELECT {_TOKENS_SQL} AS tokens FROM documents
-    ),
-    idx AS (
-      SELECT tokens, unnest(generate_series(1, length(tokens) - 1)) AS i
-      FROM toks
-    ),
-    counts AS (
-      SELECT tokens[i] || ' ' || tokens[i + 1] AS bigram, COUNT(*) AS n
-      FROM idx GROUP BY 1
-    )
+    WITH pos AS ({_gram_pos_sql(2, "doc_id", _doc_tokens_sql("doc_id"))}),
+    counts AS (SELECT {_gram_sql(2)} AS bigram, COUNT(*) AS n FROM pos GROUP BY 1)
     SELECT bigram, n, CAST(rnk AS INTEGER) AS rnk FROM (
       SELECT bigram, n,
              ROW_NUMBER() OVER (ORDER BY n DESC, bigram) AS rnk
@@ -1011,12 +1050,7 @@ def q5f_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams = toks.select(
         F.explode(
             F.when(
-                F.size("tokens") >= 2,
-                F.expr(
-                    "transform(sequence(1, size(tokens) - 1), "
-                    "i -> concat(element_at(tokens, i), ' ', "
-                    "element_at(tokens, i + 1)))"
-                ),
+                F.size("tokens") >= 2, _bigram_strings_spark("tokens")
             ).otherwise(F.array().cast("array<string>"))
         ).alias("bigram")
     )
@@ -1220,7 +1254,7 @@ _VOCAB_V = 64
 @query(
     "q5i_oov_rate",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents),
+    WITH toks AS {_doc_tokens_sql("doc_id")},
     occ AS (SELECT doc_id, unnest(t) AS token FROM toks),
     vocab AS (
       SELECT token FROM (
@@ -1790,17 +1824,10 @@ def q5o_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _novelty_oracle() -> str:
     gh = sql_md5_window("m", "duckdb", width=15)
     return f"""
-    WITH pos AS (
-      SELECT doc_id, t,
-             unnest(generate_series(1, greatest(len(t) - {_CONTAM_N - 1}, 0))) AS i
-      FROM (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents)
-    ),
+    WITH pos AS ({_gram_pos_sql(_CONTAM_N, "doc_id", _doc_tokens_sql("doc_id"))}),
     grams AS (
       SELECT DISTINCT doc_id, {gh} AS gh
-      FROM (
-        SELECT doc_id, md5(array_to_string(t[i:i+{_CONTAM_N - 1}], ' ')) AS m
-        FROM pos
-      )
+      FROM (SELECT doc_id, md5({_gram_sql(_CONTAM_N)}) AS m FROM pos)
     ),
     first_seen AS (
       SELECT gh, MIN(doc_id) AS first_doc FROM grams GROUP BY gh
@@ -1822,15 +1849,8 @@ def q5p_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.sql(
         f"SELECT doc_id, text FROM {docs_scan_source(spark, sf_dir)}"
     )
-    grams = (
-        docs.select("doc_id", _tokens_spark().alias("_toks"))
-        .select("doc_id", F.explode(_grams_spark(F.col("_toks"))).alias("g"))
-        .select(
-            "doc_id",
-            F.expr(
-                sql_md5_window("md5(g)", "spark", width=15)
-            ).alias("gh"),
-        )
+    grams = _gram_rows_spark(docs, ["doc_id"]).select(
+        "doc_id", F.expr(sql_md5_window("md5(g)", "spark", width=15)).alias("gh")
     )
     first_seen = grams.groupBy("gh").agg(F.min("doc_id").alias("first_doc"))
     novel = F.sum(
@@ -1875,7 +1895,7 @@ def _vocab_drift_sql(dialect: str) -> str:
     return f"""
     WITH toks AS (
       SELECT CAST(doc_id % 2 AS INT) AS half,
-             {D.explode(D.split_ws('trim(text)', dialect), dialect)} AS token
+             {D.explode(_tokens_sql(dialect), dialect)} AS token
       FROM documents
     ), counts AS (
       SELECT token,
@@ -1907,9 +1927,9 @@ def q5r_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # qt5 — CORPUS-HEALTH report: the per-source scorecard a data-curation
 # team reads before every training run, composing the engine's
 # monitoring signals in ONE scan — volume (docs/chars/tokens), exact
-# duplication rate (distinct md5 over docs), the q51 quality-gate pass
-# rate (same n_chars>=100 AND stopwords>0 gate, replayed verbatim), and
-# the stopword share (corpus-register proxy). The composite closes the
+# duplication rate (distinct fingerprints over docs), the quality-gate
+# pass rate and the stopword share (corpus-register proxy), all from the
+# text rules at the top of this module. The composite closes the
 # qt-series: qt1 preps, qt2 goes multimodal, qt4 ingests in-flight,
 # qt5 reports.
 #
@@ -1921,16 +1941,14 @@ def q5r_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IEEE divisions.
 # --------------------------------------------------------------------------
 def _corpus_health_sql(dialect: str) -> str:
-    toks = D.split_ws("trim(text)", dialect)
-    nstop = D.size(f"filter({toks}, t -> t IN ({_SW_LIST}))", dialect)
-    ntok = D.size(toks, dialect)
+    toks = _tokens_sql(dialect)
+    nstop = _n_stop_sql(toks, dialect)
     return f"""
     WITH perdoc AS (
-      SELECT source, n_chars, md5(text) AS th,
-             CAST({ntok} AS BIGINT) AS n_tokens,
+      SELECT source, n_chars, {_FINGERPRINT_SQL} AS th,
+             CAST({D.size(toks, dialect)} AS BIGINT) AS n_tokens,
              CAST({nstop} AS BIGINT) AS n_stop,
-             CASE WHEN n_chars >= 100 AND {nstop} > 0
-                  THEN 1 ELSE 0 END AS is_q
+             CASE WHEN {_quality_sql(nstop)} THEN 1 ELSE 0 END AS is_q
       FROM documents
     )
     SELECT source,

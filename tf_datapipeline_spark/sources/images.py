@@ -16,7 +16,7 @@ Two ways to obtain the directory-of-files corpus the reference scans
    decode results cell-for-cell (operators/multimodal.py) — the closest a
    binary pipeline can get to full oracle coverage.
 
-Synthetic image spec (shared with the SQL oracle — keep in sync):
+Synthetic image spec (synthetic_dims; SQL spelling SYNTHETIC_DIMS_SQL):
     height        = 8 + (doc_id * 7919)   % 25          (8..32)
     width         = 8 + (doc_id * 104729) % 25          (8..32)
     pixel[i,j,c]  = (3*i + 5*j + 11*c + doc_id) % 256
@@ -67,6 +67,18 @@ def synthetic_jpeg_dims(doc_id: int) -> tuple[int, int]:
     """(height, width) of the flat-block JPEG image — 8-multiples so every
     block is full (no encoder edge padding enters the decoded crop)."""
     return 8 * (1 + (doc_id * 7919) % 4), 8 * (1 + (doc_id * 104729) % 4)
+
+
+# synthetic_dims and synthetic_jpeg_dims over a `doc_id` column: (height,
+# width) as SQL that Spark and DuckDB both parse (tests/test_multimodal.py
+# compares them), and (doc_id, lang, h, w) of every document's image
+SYNTHETIC_DIMS_SQL = ("8 + (doc_id * 7919) % 25", "8 + (doc_id * 104729) % 25")
+SYNTHETIC_JPEG_DIMS_SQL = (
+    "8 * (1 + (doc_id * 7919) % 4)", "8 * (1 + (doc_id * 104729) % 4)"
+)
+DIMS_SQL = "SELECT doc_id, lang, {} AS h, {} AS w FROM documents".format(
+    *SYNTHETIC_DIMS_SQL
+)
 
 
 def synthetic_jpeg_pixels(doc_id: int) -> np.ndarray:

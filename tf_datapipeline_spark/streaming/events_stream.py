@@ -865,16 +865,14 @@ def q7a_stream_sq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _stream_image_oracle() -> str:
     from tf_datapipeline_spark.operators.dedup import _DELTA_MOD
-    from tf_datapipeline_spark.operators.multimodal import (
-        _DIMS_SQL,
-        _PPM_BYTES_SQL,
-    )
+    from tf_datapipeline_spark.operators.multimodal import _PPM_BYTES_SQL
+    from tf_datapipeline_spark.sources.images import DIMS_SQL
 
     return f"""
     SELECT doc_id, lang AS class_name, 'ppm' AS image_format,
            h AS height, w AS width, 3 AS channels,
            {_PPM_BYTES_SQL} AS n_bytes
-    FROM ({_DIMS_SQL}) d
+    FROM ({DIMS_SQL}) d
     WHERE doc_id % {_DELTA_MOD} = 0
     """
 
@@ -937,15 +935,15 @@ def q8j_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # qt4 — STREAMING INGEST composite: the end-to-end "admit the crawl"
 # pipeline as ONE stateless streaming job — newly crawled documents are
-# (1) quality-gated (q51's rule: length + stopword evidence), (2)
+# (1) quality-gated (operators/text.py's gate), (2)
 # near-dup-checked against the static corpus LSH band index (q6c's
 # machinery: dedup.band_index over the corpus signatures, the stream
 # signed in-row by dedup.with_row_signature; here as one stream-static
 # LEFT ANTI join per band — a doc survives only if NO corpus doc shares
 # a band with estimated Jaccard >= 0.5),
-# and (3) annotated with media metadata (the q80 dims model; the real
-# binary decode twin is q8j) — emitting exactly the ACCEPTED documents,
-# which is the production ingest contract. No watermark, no state
+# and (3) annotated with media metadata (sources/images.py's synthetic
+# dims; the real binary decode twin is q8j) — emitting exactly the
+# ACCEPTED documents, which is the production ingest contract. No watermark, no state
 # store: quality is row-local, the dedup check is an equi-join against
 # a static index, so state is O(1) for an unbounded stream. The batch
 # oracle replays the same quality + NOT EXISTS band-match + dims logic
@@ -956,7 +954,8 @@ def q8j_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stream_ingest_body() -> str:
     """The oracle body over the shared signature table `sig`."""
     from tf_datapipeline_spark.operators.dedup import _DELTA_MOD, _K
-    from tf_datapipeline_spark.operators.text import _SW_LIST, _tokens_sql
+    from tf_datapipeline_spark.operators.text import _QUALITY_SQL
+    from tf_datapipeline_spark.sources.images import SYNTHETIC_DIMS_SQL
 
     def band_cols(q: str, band: int) -> str:
         """`q.m<k>, ...` over the MinHash columns of LSH band 0 or 1."""
@@ -967,14 +966,12 @@ def _stream_ingest_body() -> str:
         f"(CASE WHEN i.m{k} = s.m{k} THEN 1 ELSE 0 END)" for k in range(_K)
     )
     return f"""
-    SELECT d.doc_id, d.n_chars,
-           8 + (d.doc_id * 7919) % 25 AS height,
-           8 + (d.doc_id * 104729) % 25 AS width
+    SELECT doc_id, n_chars,
+           {SYNTHETIC_DIMS_SQL[0]} AS height,
+           {SYNTHETIC_DIMS_SQL[1]} AS width
     FROM documents d
     WHERE d.doc_id % {_DELTA_MOD} = 0
-      AND d.n_chars >= 100
-      AND length(list_filter({_tokens_sql('d.text')},
-                             t -> t IN ({_SW_LIST}))) > 0
+      AND {_QUALITY_SQL}
       -- NOT(A OR B) split into two AND'ed NOT EXISTS, one per band, so
       -- each subquery carries a pure band-key EQUALITY the oracle engine
       -- can hash-join (matching the engine's two separate anti-joins).
@@ -1015,7 +1012,8 @@ def qt4_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_bands,
         with_row_signature,
     )
-    from tf_datapipeline_spark.operators.text import _STOPWORDS
+    from tf_datapipeline_spark.operators.text import _quality_spark
+    from tf_datapipeline_spark.sources.images import SYNTHETIC_DIMS_SQL
 
     sig = _materialize_sig(spark, sf_dir)
     corpus = sig.filter(F.col("doc_id") % _DELTA_MOD != 0)
@@ -1026,11 +1024,7 @@ def qt4_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table_stream(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _DELTA_MOD == 0)
     )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    quality = (F.col("n_chars") >= 100) & (
-        F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS))) > 0
-    )
-    survivors = with_row_signature(sdf.filter(quality)).withColumn(
+    survivors = with_row_signature(sdf.filter(_quality_spark())).withColumn(
         "bkeys", band_keys(bands)
     )
     # one anti-join per band: a hash-joinable key each, where one join
@@ -1045,8 +1039,8 @@ def qt4_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = survivors.select(
         "doc_id",
         "n_chars",
-        F.expr("8 + (doc_id * 7919) % 25").alias("height"),
-        F.expr("8 + (doc_id * 104729) % 25").alias("width"),
+        F.expr(SYNTHETIC_DIMS_SQL[0]).alias("height"),
+        F.expr(SYNTHETIC_DIMS_SQL[1]).alias("width"),
     )
     return run_bounded(out, "append")
 

@@ -1,13 +1,15 @@
-"""Capture .explain("formatted") for a set of queries into plans/<tag>/.
+"""Capture .explain("formatted") for a set of queries into .plans/<tag>/.
 
 Usage:
   python tools/capture_plans.py <tag> <suffix> [q1,q2,... | ALL]
 
-Writes plans/<tag>/<query>_<suffix>.txt for each query (suffix is
-"before" / "after" per the optimization-round deliverable). Uses
+Writes .plans/<tag>/<query>_<suffix>.txt for each query (suffix is
+"before" / "after" per the optimization-round deliverable); .plans/ is
+git-ignored, so a capture leaves the checkout clean (the committed
+plans/r11 and plans/r12 are earlier captures). Uses
 $SPARK_GRAFT_SF_DIR (default sf0.1) so the plans match the bench scale.
 Each plan is written in `canonical_plan` form, so the captures of two
-checkouts diff cleanly (`diff -r plans/<a> plans/<b>`). A query that
+checkouts diff cleanly (`diff -r <a>/.plans/<tag> <b>/.plans/<tag>`). A query that
 runs streams (a bounded stream returns its sink's rows, whose plan is a
 `LocalTableScan`) also gets each stream's last micro-batch plan,
 appended in `canonical_stream_plan` form.
@@ -28,6 +30,10 @@ _IDS = [
     (re.compile(r"#\d+"), "#N"),  # expression ids
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),  # checkpoint RDDs
+    # the Java call site that made an RDD prints as
+    # `NativeMethodAccessorImpl.java:0` or, once the JVM has swapped its
+    # reflection accessor after enough calls, `<unknown>:0`
+    (re.compile(r"(RDD\[N\] at \w+ at )[^\s,]+:\d+"), r"\1<callsite>"),
     (re.compile(r"(lambda [A-Za-z]\w*?)_\d+#"), r"\1_N#"),  # lambda variables
     # the distinct-aggregate group id literals follow the groups' order
     (re.compile(r"\(gid#N = \d+\)"), "(gid#N = ?)"),
@@ -155,7 +161,7 @@ def main() -> None:
     names = (
         sorted(qs) if names_arg == "ALL" else [n for n in names_arg.split(",") if n]
     )
-    out_dir = os.path.join(REPO_DIR, "plans", tag)
+    out_dir = os.path.join(REPO_DIR, ".plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         started.clear()

@@ -10,11 +10,11 @@ Decomposition (the verify_cc pattern, extended to the composites):
      sequential union-find (path compression + union by size) and
      compared row-for-row against Spark's pointer-doubling labels — the
      same cross-ALGORITHM check tools/verify_cc.py runs for q67.
-  3. The VERIFIED label table is staged into DuckDB, and the REST of
-     the registered qt1/qt2 oracle (everything after the recursive
-     prelude: toks/flags/grams/contam/[sem]/reasoned) runs declaratively
-     against it, value-compared to the Spark composite output with the
-     driver-gate comparison.
+  3. The VERIFIED label table is staged into DuckDB, and the qt1/qt2
+     oracle, built by the same prep builders without the recursive label
+     CTEs (`label_ctes=""`: flags, 5-gram overlap, [sem], reasoned),
+     runs declaratively against it, value-compared to the Spark
+     composite output with the driver-gate comparison.
 
 Usage: python tools/staged_prep_oracle.py <sf_dir> <out_json>
 """
@@ -120,9 +120,7 @@ def main() -> None:
         ("qt2_prep_semantic", _prep_semantic_oracle),
     ):
         t0 = time.time()
-        full = oracle_fn()
-        cut = full.index("toks AS (")
-        staged_sql = "WITH " + full[cut:]
+        staged_sql = oracle_fn(label_ctes="")
         try:
             df = qs[name](spark, sf_dir)
             got_rows = [tuple(r) for r in df.collect()]
