@@ -496,11 +496,11 @@ def test_dialect_spellings_live_in_one_module():
 
 def test_text_rules_live_in_one_place():
     """Source-level audit: the quality gate's threshold, the stopword
-    list and the whitespace token split are spelled only in the text
-    rule definitions of operators/text.py (and the split's dialect pair
-    in functions/dialect.py). Components and composites select those
-    definitions; a gate, stopword filter or split written anywhere else
-    fails here."""
+    list, the whitespace token split and the md5 content fingerprint
+    are spelled only in the text rule definitions of operators/text.py
+    (and the split's dialect pair in functions/dialect.py). Components
+    and composites select those definitions; a gate, stopword filter,
+    split or exact-dup key written anywhere else fails here."""
     import ast
     import pathlib
     import re
@@ -518,14 +518,18 @@ def test_text_rules_live_in_one_place():
             "_GATE_MIN_CHARS",
             "_quality_spark",
             "_quality_sql",
+            "_fingerprint_spark",
+            "_FINGERPRINT_SQL",
         },
         "functions/dialect.py": {"split_ws"},
     }
-    # the gate's threshold, the rule's constants, a whitespace split
+    # the gate's threshold, the rule's constants, a whitespace split,
+    # an md5 of the document text
     spelled = re.compile(
         rf"n_chars\W*>=\s*{_GATE_MIN_CHARS}\b"
         r"|\b_GATE_MIN_CHARS\b|\b_STOPWORDS\b"
         r"|\bsplit\b.*\\+s\+|\bsplit_ws\(|regexp_split_to_array"
+        r"""|\bmd5\(\s*["']?text["']?\s*\)"""
     )
     found = []
     for py in pkg.rglob("*.py"):
@@ -550,7 +554,7 @@ def test_text_rules_live_in_one_place():
         ]
     assert not found, (
         "text rules spelled outside their definitions in operators/text.py "
-        f"(select _quality_spark/_quality_sql, _n_stop_*, _tokens_*): {found}"
+        f"(select _quality_*, _n_stop_*, _tokens_*, _fingerprint_*): {found}"
     )
 
 

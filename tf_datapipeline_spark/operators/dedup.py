@@ -59,6 +59,7 @@ from tf_datapipeline_spark.operators.semcells import (  # noqa: F401
     _semantic_cells_config,
     semantic_cells_df,
 )
+from tf_datapipeline_spark.operators.text import _FINGERPRINT_SQL, _fingerprint_spark
 from tf_datapipeline_spark.registry import query
 
 _K = 8  # MinHash signature length
@@ -1238,11 +1239,12 @@ def _incremental_dedup_oracle() -> str:
     ),
     near AS (SELECT new_id, MIN(old_id) AS near_dup_of FROM cross_pairs GROUP BY new_id),
     corpus_md5 AS (
-      SELECT md5(text) AS h, MIN(doc_id) AS old_id
-      FROM documents WHERE doc_id % {_DELTA_MOD} <> 0 GROUP BY md5(text)
+      SELECT {_FINGERPRINT_SQL} AS h, MIN(doc_id) AS old_id
+      FROM documents WHERE doc_id % {_DELTA_MOD} <> 0 GROUP BY {_FINGERPRINT_SQL}
     ),
     delta AS (
-      SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % {_DELTA_MOD} = 0
+      SELECT doc_id, {_FINGERPRINT_SQL} AS h
+      FROM documents WHERE doc_id % {_DELTA_MOD} = 0
     )
     SELECT d.doc_id,
            c.old_id AS exact_dup_of,
@@ -1269,11 +1271,11 @@ def q6a_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus_md5 = (
         docs.filter(F.col("doc_id") % _DELTA_MOD != 0)
-        .groupBy(F.md5("text").alias("h"))
+        .groupBy(_fingerprint_spark().alias("h"))
         .agg(F.min("doc_id").alias("exact_dup_of"))
     )
     delta = docs.filter(F.col("doc_id") % _DELTA_MOD == 0).select(
-        "doc_id", F.md5("text").alias("h")
+        "doc_id", _fingerprint_spark().alias("h")
     )
     return (
         delta.join(corpus_md5, "h", "left")
@@ -1465,7 +1467,7 @@ def _bloom_body(dialect: str) -> str:
     ks = ", ".join(f"({k})" for k in range(BLOOM_K))
     return f"""
     WITH corpus AS (
-      SELECT md5(text) AS m FROM documents WHERE doc_id % {_DELTA_MOD} <> 0
+      SELECT {_FINGERPRINT_SQL} AS m FROM documents WHERE doc_id % {_DELTA_MOD} <> 0
     ),
     chash AS (SELECT {h1} AS h1, {h2} AS h2 FROM corpus),
     cpos AS (
@@ -1478,7 +1480,7 @@ def _bloom_body(dialect: str) -> str:
       FROM cpos GROUP BY 1
     ),
     delta AS (
-      SELECT doc_id, md5(text) AS m
+      SELECT doc_id, {_FINGERPRINT_SQL} AS m
       FROM documents WHERE doc_id % {_DELTA_MOD} = 0
     ),
     dpos AS (

@@ -45,7 +45,6 @@ from tf_datapipeline_spark.operators.text import (
     _contamination_spark,
     _contamination_sql,
     _fingerprint_spark,
-    _n_stop_spark,
     _n_stop_sql,
     _quality_spark,
     _quality_sql,
@@ -170,7 +169,7 @@ def _prep_counts(
         "lang",
         n_chunks.alias("n_chunks"),
         F.size(toks).alias("n_tokens"),
-        (~_quality_spark(_n_stop_spark(toks))).alias("bad_quality"),
+        (~_quality_spark()).alias("bad_quality"),
         (F.col("doc_id") != F.min("doc_id").over(w)).alias("exact_dup"),
     )
 

@@ -59,8 +59,8 @@ def _count_words_sql(toks: str, words: tuple[str, ...], dialect: str) -> str:
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 
-def _n_stop_spark(toks: Column | None = None) -> Column:
-    return _count_words_spark(_tokens_spark() if toks is None else toks, _STOPWORDS)
+def _n_stop_spark() -> Column:
+    return _count_words_spark(_tokens_spark(), _STOPWORDS)
 
 
 def _n_stop_sql(toks: str, dialect: str) -> str:
@@ -74,9 +74,8 @@ _N_STOP_SQL = _n_stop_sql(_TOKENS_SQL, "duckdb")
 _GATE_MIN_CHARS = 100
 
 
-def _quality_spark(n_stop: Column | None = None) -> Column:
-    n_stop = _n_stop_spark() if n_stop is None else n_stop
-    return (F.col("n_chars") >= _GATE_MIN_CHARS) & (n_stop > 0)
+def _quality_spark() -> Column:
+    return (F.col("n_chars") >= _GATE_MIN_CHARS) & (_n_stop_spark() > 0)
 
 
 def _quality_sql(n_stop: str) -> str:
@@ -152,7 +151,8 @@ def _lang_id_sql(scores: dict[str, str]) -> tuple[str, str]:
 _BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"  # q53: words, numbers, punctuation
 
 
-# q54's content fingerprint and the size of its exact-duplicate cluster
+# q54's content fingerprint (also the exact-dup key of q57, qt1/qt2 and
+# q6a/q6e) and the size of its exact-duplicate cluster
 def _fingerprint_spark() -> Column:
     return F.md5("text")
 
@@ -292,7 +292,7 @@ def q51_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         _char_ratio_spark(_ALPHA_RE).alias("alpha_ratio"),
         _char_ratio_spark(_SPACE_RE).alias("space_ratio"),
         (n_stop.cast("double") / n_tokens).alias("stopword_ratio"),
-        F.when(_quality_spark(n_stop), 1).otherwise(0).alias("is_quality"),
+        F.when(_quality_spark(), 1).otherwise(0).alias("is_quality"),
     )
 
 
@@ -415,7 +415,7 @@ def qt0_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tokens.alias("n_tokens"),
         _char_ratio_spark(_ALPHA_RE).alias("alpha_ratio"),
         (n_stop.cast("double") / n_tokens).alias("stopword_ratio"),
-        F.when(_quality_spark(n_stop), 1).otherwise(0).alias("is_quality"),
+        F.when(_quality_spark(), 1).otherwise(0).alias("is_quality"),
         pred.alias("pred_lang"),
         _regex_count_spark(_BPE_PATTERN).alias("n_bpe_tokens"),
         _fingerprint_spark().alias("fingerprint"),
