@@ -562,3 +562,71 @@ def test_phash_matches_independent_triple_loop_dct(spark):
         hi = sum(1 << (k - 32) for k in range(32, 64) if bits[k])
         r = rows[did]
         assert (r.hash_lo, r.hash_hi, r.n_bits) == (lo, hi, sum(bits)), did
+
+
+# the package function that calls map_rows or map_decoded -> the registered
+# query that runs it, where the two names differ (processed_records is run
+# directly: no query feeds it)
+_ROW_MAP_RUNNERS = {
+    "map_decoded": "q81_pixel_stats",
+    "_decoded_dims_stats": "q8b_png_decode",
+    "_train_augment_stats": "q82_augment_train",
+    "_eval_stats": "q83_augment_eval",
+    "_ahash_table": "q8f_image_ahash",
+    "synthetic_corpus": "q80_image_metadata",
+    "read_tfrecords": "q8h_tfrecord_roundtrip",
+    "processed_records": None,
+}
+
+
+def test_row_maps_independent_of_arrow_batches(spark):
+    """Every caller of functions/rows.map_rows and map_decoded returns the
+    same rows (order-insensitive) whether Spark cuts its input into Arrow
+    batches of 7 records or of 2048: a row function sees one row, so no
+    result may depend on where a batch ends. The callers are found in the
+    source: a new query is run too, and a new helper fails here until
+    _ROW_MAP_RUNNERS names a query that runs it."""
+    import ast
+    import pathlib
+
+    from tests.oracle_harness import _norm_rows
+    from tests.test_feed import _records
+    from tf_datapipeline_spark import registry
+    from tf_datapipeline_spark.operators.feed import processed_records
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "tf_datapipeline_spark"
+    callers = {
+        top.name
+        for py in pkg.rglob("*.py")
+        for top in ast.parse(py.read_text()).body
+        if isinstance(top, ast.FunctionDef)
+        and any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Name)
+            and n.func.id in ("map_rows", "map_decoded")
+            for n in ast.walk(top)
+        )
+    }
+    qs = registry.queries()
+    runners = {_ROW_MAP_RUNNERS.get(c, c) for c in callers}
+    assert not _ROW_MAP_RUNNERS.keys() - callers, "stale _ROW_MAP_RUNNERS entries"
+    assert runners - {None} <= qs.keys(), sorted(runners - {None} - qs.keys())
+    builds = {n: (lambda n=n: qs[n](spark, SF_SMOKE)) for n in runners - {None}}
+    records = _records(spark)
+    builds["processed_records"] = lambda: processed_records(records, 8, 8, seed=3)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    results = {}
+    try:
+        for batch in ("7", "2048"):
+            spark.conf.set(key, batch)
+            for name, build in sorted(builds.items()):
+                df = build()
+                rows = _norm_rows([tuple(r) for r in df.collect()], df.columns)
+                assert rows, (name, batch)
+                results.setdefault(name, []).append(rows)
+    finally:
+        spark.conf.set(key, saved)
+    differ = sorted(name for name, (small, large) in results.items() if small != large)
+    assert not differ, differ

@@ -474,24 +474,96 @@ def test_dialect_spellings_live_in_one_module():
     and a spelling the two engines do not share comes from
     functions/dialect.py (or, for the order-pinned folds and the md5 hex
     window, functions/vectors.py and functions/texthash.py). A
-    `dialect ==` comparison anywhere else fails here."""
+    `dialect ==` comparison anywhere else fails here, and so does an
+    exact sum's `CONCAT(SUM(` decimal-to-string route outside
+    functions/exact.py (use sql_dsum)."""
     import pathlib
     import re
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "tf_datapipeline_spark"
     allowed = {"functions/dialect.py", "functions/vectors.py", "functions/texthash.py"}
     compare = re.compile(r"\bdialect\s*==")
+    lines = [
+        (str(py.relative_to(pkg)), i, line)
+        for py in pkg.rglob("*.py")
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+    ]
     found = sorted(
         f"{rel}:{i}"
-        for py in pkg.rglob("*.py")
-        if (rel := str(py.relative_to(pkg))) not in allowed
-        for i, line in enumerate(py.read_text().splitlines(), 1)
-        if compare.search(line)
+        for rel, i, line in lines
+        if rel not in allowed and compare.search(line)
     )
     assert not found, (
         "dialect branches outside functions/dialect.py (spell it once, or "
         f"add the differing construct there): {found}"
     )
+    exact_sum = re.compile(r"CONCAT\(SUM\(", re.IGNORECASE)
+    inline = sorted(
+        f"{rel}:{i}"
+        for rel, i, line in lines
+        if rel != "functions/exact.py" and exact_sum.search(line)
+    )
+    assert not inline, f"exact sums spelled inline (use sql_dsum): {inline}"
+
+
+def test_row_loops_live_in_one_place():
+    """Source-level audit: a row-at-a-time Python stage is a row function
+    handed to functions/rows.map_rows, the one loop over Arrow batches.
+    Every other function the package hands to mapInPandas,
+    applyInPandas or applyInPandasWithState works on whole batches or
+    groups and is on the allowlist with a reason; a new `for pdf in
+    batches` loop that yields a pd.DataFrame fails here until it uses
+    map_rows."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "tf_datapipeline_spark"
+    allowed = {
+        # (file, function handed to Spark): why it is not a row loop
+        # one vectorized rfft over the whole batch's (rows, 256) matrix
+        ("operators/multimodal.py", "spectro"),
+        # numpy union-find over every edge of the partition at once
+        ("operators/dedup.py", "_local_stars"),
+        # one similarity tile per block pair (a group, not a row)
+        ("operators/dedup.py", "emit_pairs"),
+        # per-user as-of merge of two cogrouped frames
+        ("operators/events.py", "merge"),
+        # per-cell nearest-centroid matrix product over a cogroup
+        ("operators/semcells.py", "assign"),
+        # writes one TFRecord shard file per (split, shard) group
+        ("sources/tfrecord.py", "write_shard"),
+        # applyInPandasWithState folds: per-key state across batches
+        ("streaming/events_stream.py", "_stateful_counts"),
+        ("streaming/events_stream.py", "_funnel_state"),
+        ("streaming/events_stream.py", "_funnel_latency_state"),
+        # the class-data archive's warm-up of both pandas code paths
+        ("cds.py", "double"),
+        ("cds.py", "count"),
+    }
+    apis = {"mapInPandas", "applyInPandas", "applyInPandasWithState"}
+    found = set()
+    for py in pkg.rglob("*.py"):
+        rel = str(py.relative_to(pkg))
+        if rel == "functions/rows.py":
+            continue
+        for node in ast.walk(ast.parse(py.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in apis
+            ):
+                fn = (
+                    node.args[0]
+                    if node.args
+                    else next(k.value for k in node.keywords if k.arg == "func")
+                )
+                found.add((rel, ast.unparse(fn)))
+    unexpected = found - allowed
+    assert not unexpected, (
+        "pandas batch functions outside functions/rows.py (write a row "
+        f"function for map_rows, or allowlist with a reason): {sorted(unexpected)}"
+    )
+    assert allowed <= found, f"stale allowlist entries: {sorted(allowed - found)}"
 
 
 def test_text_rules_live_in_one_place():
@@ -884,3 +956,26 @@ def test_canonical_stream_plan_masks_run_ids():
     b = plan("0999ad5f-5a27-47b1-80c6-175f7e9747b5", 1792412551077, 517, 4)
     assert canon(a) == canon(b)
     assert canon(a) != canon(plan(run, 1792412549403, 17, 8))
+
+
+def test_capture_keeps_scan_filters_whole(spark):
+    """tools/capture_plans.capture prints a scan's filter list whole.
+    Spark cuts a scan field at spark.sql.maxMetadataStringLength (100
+    characters) before the expression ids are masked, so a cut plan
+    read differently when the ids had more or fewer digits. qt4's
+    stream scans documents under the quality gate's filters, longer
+    than the cut; the session's own setting is left as it was."""
+    key = "spark.sql.maxMetadataStringLength"
+    before = spark.conf.get(key)
+    plans = dict(_capture_plans().capture(spark, ["qt4_stream_ingest"], SF_SMOKE))
+    assert spark.conf.get(key) == before
+    scans = [
+        line
+        for line in plans["qt4_stream_ingest"].splitlines()
+        if "FileScan" in line and "DataFilters: [" in line
+    ]
+    assert scans
+    for line in scans:
+        filters = line.split("DataFilters: [", 1)[1].split("], Format: ", 1)
+        assert len(filters) == 2 and "..." not in filters[0], line
+        assert "(n_chars#NL >= 100)" in filters[0] and "size(filter(" in filters[0]

@@ -1249,10 +1249,8 @@ def _seasonal_stats(keyed: DataFrame) -> DataFrame:
     base AS (
       SELECT event_type, dow, hr,
              CAST(COUNT(value) AS BIGINT) AS n_base,
-             TRY_CAST(CONCAT(SUM(CAST(value AS DECIMAL(28,6))), '')
-                      AS DOUBLE) AS s1,
-             TRY_CAST(CONCAT(SUM(CAST(value * value AS DECIMAL(28,6))), '')
-                      AS DOUBLE) AS s2
+             {sql_dsum("value", 6)} AS s1,
+             {sql_dsum("value * value", 6)} AS s2
       FROM keyed WHERE is_base GROUP BY 1, 2, 3
     ),
     stats AS (

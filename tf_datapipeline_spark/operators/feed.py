@@ -25,7 +25,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,6 +34,7 @@ from tf_datapipeline_spark.functions.imageops import (
     preprocess_for_train,
     rng_for_row,
 )
+from tf_datapipeline_spark.functions.rows import map_rows
 from tf_datapipeline_spark.operators.pipeline import shuffle_key
 
 
@@ -48,25 +48,18 @@ def processed_records(
 ) -> DataFrame:
     """records (image_encoded, image_format, label, ...) -> one fused
     decode+preprocess stage emitting flattened float pixels (reference
-    M1-M10 as a single mapInPandas — each image crosses Arrow once).
+    M1-M10 as a single mapInPandas — each image crosses Arrow once); the
+    row loop is `functions/rows.map_rows`, `proc` its per-record body.
     Epoch-aware shuffle: orderBy the seeded permutation key so every epoch
     visits records in a different deterministic order (R1/R3 analog)."""
 
-    def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for enc, fmt, label, key in zip(
-                pdf["image_encoded"], pdf["image_format"], pdf["label"], pdf["k"]
-            ):
-                arr = decode_image(bytes(enc), fmt)
-                if is_training:
-                    img, _ = preprocess_for_train(
-                        arr, rng_for_row(seed, int(key)), out_h, out_w
-                    )
-                else:
-                    img = preprocess_for_eval(arr, out_h, out_w)
-                out_rows.append((img.astype(np.float32).ravel(), int(label), int(key)))
-            yield pd.DataFrame(out_rows, columns=["pixels", "label", "k"])
+    def proc(enc: bytes, fmt: str, label: int, key: int) -> list[tuple]:
+        arr = decode_image(bytes(enc), fmt)
+        if is_training:
+            img, _ = preprocess_for_train(arr, rng_for_row(seed, key), out_h, out_w)
+        else:
+            img = preprocess_for_eval(arr, out_h, out_w)
+        return [(img.astype(np.float32).ravel(), label, key)]
 
     # stable per-record key from the UNIQUE record path (hashing the
     # payload would give exact-duplicate images identical RNG streams and
@@ -75,9 +68,7 @@ def processed_records(
     # bigint range
     keyed = records.withColumn("k", F.pmod(F.xxhash64("path"), F.lit(2**31)))
     proj = keyed.select("image_encoded", "image_format", "label", "k")
-    done = proj.mapInPandas(
-        proc, schema="pixels array<float>, label int, k bigint"
-    )
+    done = map_rows(proj, proc, "pixels array<float>, label int, k bigint")
     # epoch-dependent deterministic order (the UDF preserves k)
     return done.withColumn("ek", shuffle_key(F.col("k"), seed=seed + epoch)).orderBy(
         "ek", "k"

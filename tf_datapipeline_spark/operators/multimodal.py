@@ -3,11 +3,14 @@ plus the driver-contract multimodal extensions (§2B).
 
 Image/audio/video payloads travel as opaque BinaryType columns with typed
 metadata; decode / feature-extract / frame-sample run executor-side in
-Arrow-batched pandas UDFs (mapInPandas). The corpus is the deterministic
-synthetic one from sources/images.py, whose pixel function is plain
-integer arithmetic — so the DuckDB oracle re-derives the expected decoded
-values cell-for-cell in SQL, giving a binary pipeline full value-level
-oracle coverage (q80/q81/q84/q85/q86). The randomized augment paths
+Arrow-batched pandas UDFs (mapInPandas). Every per-row stage is a row
+function handed to `functions/rows.map_rows`, the package's one per-row
+Arrow loop (image stages through `map_decoded`, which decodes first);
+only q8m's spectrogram works on whole batches. The corpus is the
+deterministic synthetic one from sources/images.py, whose pixel function
+is plain integer arithmetic — so the DuckDB oracle re-derives the
+expected decoded values cell-for-cell in SQL, giving a binary pipeline
+full value-level oracle coverage (q80/q81/q84/q85/q86). The randomized augment paths
 (q82/q83 partially) are rows-only checked by the driver; their invariants
 (shape, range, seed-determinism) are pinned by tests/test_multimodal.py.
 
@@ -44,6 +47,7 @@ from tf_datapipeline_spark.functions.imageops import (
     preprocess_for_train,
     rng_for_row,
 )
+from tf_datapipeline_spark.functions.rows import map_rows
 from tf_datapipeline_spark.registry import query
 from tf_datapipeline_spark.sources.etl import (
     read_records,
@@ -78,27 +82,35 @@ def map_decoded(
     rows_of: Callable[[int, np.ndarray], list[tuple]],
     schema: str,
 ) -> DataFrame:
-    """The one per-image decode loop: project (path, image_format,
-    content), decode each payload once, and emit the rows
-    `rows_of(doc_id, decoded array)` returns — one or several per image —
-    under `schema`, a DDL string whose field names are the pandas column
-    names. The plan's MapInPandas node carries `rows_of`'s name."""
-    columns = [field.split()[0] for field in schema.split(",")]
+    """The one per-image decode stage, on `functions/rows.map_rows`:
+    project (path, image_format, content), decode each payload once, and
+    emit the rows `rows_of(doc_id, decoded array)` returns — one or
+    several per image — under `schema`. The plan's MapInPandas node
+    carries `rows_of`'s name."""
 
-    def decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                arr = decode_image(bytes(content), fmt)
-                rows.extend(rows_of(_doc_id_of(path), arr))
-            yield pd.DataFrame(rows, columns=columns)
+    def decode_rows(path: str, fmt: str, content: bytes) -> list[tuple]:
+        return rows_of(_doc_id_of(path), decode_image(bytes(content), fmt))
 
     decode_rows.__name__ = rows_of.__name__
-    return corpus.select("path", "image_format", "content").mapInPandas(
-        decode_rows, schema=schema
+    return map_rows(
+        corpus.select("path", "image_format", "content"), decode_rows, schema
     )
+
+
+# q80's and q8j's metadata row (doc_id, class_name, image_format, height,
+# width, channels, n_bytes): dims and channels come from the DECODED
+# payload, so a broken codec or Arrow plumbing shows in the row
+IMAGE_META_SCHEMA = (
+    "doc_id bigint, class_name string, image_format string, "
+    "height bigint, width bigint, channels int, n_bytes bigint"
+)
+
+
+def image_meta_row(
+    doc_id: int, class_name: str, fmt: str, payload: bytes
+) -> tuple:
+    h, w, c = decode_image(payload, fmt).shape
+    return (doc_id, class_name, fmt, h, w, c, len(payload))
 
 
 # --------------------------------------------------------------------------
@@ -119,43 +131,14 @@ def map_decoded(
     """,
 )
 def q80_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def probe(path: str, class_name: str, fmt: str, content: bytes) -> list[tuple]:
+        return [image_meta_row(_doc_id_of(path), class_name, fmt, bytes(content))]
+
     corpus = synthetic_corpus(spark, sf_dir)
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, cls, fmt, content in zip(
-                pdf["path"], pdf["class_name"], pdf["image_format"], pdf["content"]
-            ):
-                arr = decode_image(bytes(content), fmt)
-                rows.append(
-                    (
-                        _doc_id_of(path),
-                        cls,
-                        fmt,
-                        arr.shape[0],
-                        arr.shape[1],
-                        arr.shape[2],
-                        len(content),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "class_name",
-                    "image_format",
-                    "height",
-                    "width",
-                    "channels",
-                    "n_bytes",
-                ],
-            )
-
-    return corpus.mapInPandas(
+    return map_rows(
+        corpus.select("path", "class_name", "image_format", "content"),
         probe,
-        schema="doc_id bigint, class_name string, image_format string, "
-        "height bigint, width bigint, channels int, n_bytes bigint",
+        IMAGE_META_SCHEMA,
     )
 
 
@@ -475,38 +458,29 @@ def q8d2_jpeg420_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def codec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                src = synthetic_jpeg_rgb_pixels(int(doc_id))
-                out = decode_jpeg(
-                    encode_jpeg(src, quality=75, subsampling="420")
-                ).astype(np.int64)
-                hh, ww = out.shape[:2]
-                rows.append(
-                    (
-                        int(doc_id),
-                        hh,
-                        ww,
-                        int(out.min()),
-                        int(out.max()),
-                        int(out.sum()),
-                        int(out[hh // 3, ww // 3, 0]),
-                        int(out[hh // 2, ww // 2, 2]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "height", "width", "px_min", "px_max",
-                    "px_sum", "px_probe_a", "px_probe_b",
-                ],
+    def codec(doc_id: int) -> list[tuple]:
+        src = synthetic_jpeg_rgb_pixels(doc_id)
+        out = decode_jpeg(encode_jpeg(src, quality=75, subsampling="420")).astype(
+            np.int64
+        )
+        hh, ww = out.shape[:2]
+        return [
+            (
+                doc_id,
+                hh,
+                ww,
+                int(out.min()),
+                int(out.max()),
+                int(out.sum()),
+                int(out[hh // 3, ww // 3, 0]),
+                int(out[hh // 2, ww // 2, 2]),
             )
+        ]
 
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         codec,
-        schema="doc_id bigint, height int, width int, px_min int, "
+        "doc_id bigint, height int, width int, px_min int, "
         "px_max int, px_sum bigint, px_probe_a int, px_probe_b int",
     )
 
@@ -527,56 +501,34 @@ def _train_augment_stats(corpus: DataFrame) -> DataFrame:
     by q82 (full corpus, rows-only) and q82g (fixed slice, golden-hash
     value check)."""
 
-    def augment(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, cls, fmt, content in zip(
-                pdf["path"], pdf["class_name"], pdf["image_format"], pdf["content"]
-            ):
-                doc_id = _doc_id_of(path)
-                arr = decode_image(bytes(content), fmt)
-                out, meta = preprocess_for_train(
-                    arr, rng_for_row(_AUG_SEED, doc_id), _AUG_H, _AUG_W
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        cls,
-                        out.shape[0],
-                        out.shape[1],
-                        out.shape[2],
-                        meta["crop_h"],
-                        meta["crop_w"],
-                        meta["resize_method"],
-                        meta["flipped"],
-                        meta["color_ordering"],
-                        float(out.min()),
-                        float(out.max()),
-                        float(out.mean()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "class_name",
-                    "out_h",
-                    "out_w",
-                    "channels",
-                    "crop_h",
-                    "crop_w",
-                    "resize_method",
-                    "flipped",
-                    "color_ordering",
-                    "px_min",
-                    "px_max",
-                    "px_mean",
-                ],
+    def augment(path: str, cls: str, fmt: str, content: bytes) -> list[tuple]:
+        doc_id = _doc_id_of(path)
+        arr = decode_image(bytes(content), fmt)
+        out, meta = preprocess_for_train(
+            arr, rng_for_row(_AUG_SEED, doc_id), _AUG_H, _AUG_W
+        )
+        return [
+            (
+                doc_id,
+                cls,
+                out.shape[0],
+                out.shape[1],
+                out.shape[2],
+                meta["crop_h"],
+                meta["crop_w"],
+                meta["resize_method"],
+                meta["flipped"],
+                meta["color_ordering"],
+                float(out.min()),
+                float(out.max()),
+                float(out.mean()),
             )
+        ]
 
-    return corpus.mapInPandas(
+    return map_rows(
+        corpus.select("path", "class_name", "image_format", "content"),
         augment,
-        schema="doc_id bigint, class_name string, out_h int, out_w int, "
+        "doc_id bigint, class_name string, out_h int, out_w int, "
         "channels int, crop_h int, crop_w int, resize_method int, "
         "flipped boolean, color_ordering int, px_min double, "
         "px_max double, px_mean double",
@@ -585,10 +537,7 @@ def _train_augment_stats(corpus: DataFrame) -> DataFrame:
 
 @query("q82_augment_train")
 def q82_augment_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = synthetic_corpus(spark, sf_dir).select(
-        "path", "class_name", "image_format", "content"
-    )
-    return _train_augment_stats(corpus)
+    return _train_augment_stats(synthetic_corpus(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -661,13 +610,11 @@ def _golden_digest(df: DataFrame, cols: list[str]) -> F.Column:
 )
 def q82g_augment_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     flt = F.col("doc_id") < _GOLDEN_DOCS
-    train_corpus = synthetic_corpus(spark, sf_dir, docs_filter=flt).select(
-        "path", "class_name", "image_format", "content"
-    )
-    eval_corpus = synthetic_corpus(spark, sf_dir, docs_filter=flt)
     # class_name/lang is sf-dependent — exclude it from the canonical
     # string; everything else is a pure function of (doc_id, seed)
-    train = _train_augment_stats(train_corpus).select(
+    train = _train_augment_stats(
+        synthetic_corpus(spark, sf_dir, docs_filter=flt)
+    ).select(
         "doc_id",
         "out_h",
         "out_w",
@@ -681,7 +628,7 @@ def q82g_augment_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("px_max", 6).alias("px_max"),
         F.round("px_mean", 6).alias("px_mean"),
     )
-    ev = _eval_stats(eval_corpus).select(
+    ev = _eval_stats(synthetic_corpus(spark, sf_dir, docs_filter=flt)).select(
         "doc_id",
         "out_h",
         "out_w",
@@ -1099,21 +1046,16 @@ def q86_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def rms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                wave = synthetic_waveform(doc_id).reshape(-1, _WIN)
-                energy = (wave * wave).sum(axis=1)
-                for window_idx, e in enumerate(energy):
-                    rows.append(
-                        (doc_id, window_idx, _WIN, float(np.sqrt(float(e) / _WIN)))
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "window_idx", "n_samples", "rms"])
+    def rms(doc_id: int) -> list[tuple]:
+        wave = synthetic_waveform(doc_id).reshape(-1, _WIN)
+        energy = (wave * wave).sum(axis=1)
+        return [
+            (doc_id, window_idx, _WIN, float(np.sqrt(float(e) / _WIN)))
+            for window_idx, e in enumerate(energy)
+        ]
 
-    return docs.mapInPandas(
-        rms, schema="doc_id bigint, window_idx bigint, n_samples int, rms double"
+    return map_rows(
+        docs, rms, "doc_id bigint, window_idx bigint, n_samples int, rms double"
     )
 
 
@@ -1168,18 +1110,14 @@ def q87_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scanned = scan_image_dir(spark, root)
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cls, fmt, content in zip(
-                pdf["class_name"], pdf["image_format"], pdf["content"]
-            ):
-                arr = decode_image(bytes(content), fmt)
-                rows.append((cls, len(content), arr.shape[0] * arr.shape[1]))
-            yield pd.DataFrame(rows, columns=["class_name", "n_bytes", "n_px"])
+    def probe(cls: str, fmt: str, content: bytes) -> list[tuple]:
+        arr = decode_image(bytes(content), fmt)
+        return [(cls, len(content), arr.shape[0] * arr.shape[1])]
 
-    decoded = scanned.mapInPandas(
-        probe, schema="class_name string, n_bytes bigint, n_px bigint"
+    decoded = map_rows(
+        scanned.select("class_name", "image_format", "content"),
+        probe,
+        "class_name string, n_bytes bigint, n_px bigint",
     )
     return decoded.groupBy("class_name").agg(
         F.count(F.lit(1)).alias("n_files"),
@@ -1205,19 +1143,12 @@ def q88_eval_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_sharded_records(corpus, out_dir)
     rec = read_records(spark, out_dir).select("image_encoded", "image_format", "label")
 
-    def ev(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for enc, fmt, label in zip(
-                pdf["image_encoded"], pdf["image_format"], pdf["label"]
-            ):
-                arr = decode_image(bytes(enc), fmt)
-                out = preprocess_for_eval(arr, _AUG_H, _AUG_W)
-                rows.append((int(label), float(out.mean()), float(out.min()), float(out.max())))
-            yield pd.DataFrame(rows, columns=["label", "px_mean", "px_min", "px_max"])
+    def ev(enc: bytes, fmt: str, label: int) -> list[tuple]:
+        out = preprocess_for_eval(decode_image(bytes(enc), fmt), _AUG_H, _AUG_W)
+        return [(label, float(out.mean()), float(out.min()), float(out.max()))]
 
-    processed = rec.mapInPandas(
-        ev, schema="label bigint, px_mean double, px_min double, px_max double"
+    processed = map_rows(
+        rec, ev, "label bigint, px_mean double, px_min double, px_max double"
     )
     return processed.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_images"),
@@ -1573,30 +1504,23 @@ def q8g_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def zcr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                wave = synthetic_waveform(doc_id).reshape(-1, _WIN)
-                for window_idx, win in enumerate(wave):
-                    sg = np.sign(win)
-                    # zeros carry the previous nonzero sign
-                    eff = sg.copy()
-                    for t in range(1, len(eff)):
-                        if eff[t] == 0:
-                            eff[t] = eff[t - 1]
-                    crossings = int(np.sum(eff[1:] * eff[:-1] == -1))
-                    rows.append(
-                        (doc_id, window_idx, crossings, int(np.abs(win).max()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "window_idx", "n_crossings", "peak"]
-            )
+    def zcr(doc_id: int) -> list[tuple]:
+        rows = []
+        wave = synthetic_waveform(doc_id).reshape(-1, _WIN)
+        for window_idx, win in enumerate(wave):
+            # zeros carry the previous nonzero sign
+            eff = np.sign(win)
+            for t in range(1, len(eff)):
+                if eff[t] == 0:
+                    eff[t] = eff[t - 1]
+            crossings = int(np.sum(eff[1:] * eff[:-1] == -1))
+            rows.append((doc_id, window_idx, crossings, int(np.abs(win).max())))
+        return rows
 
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         zcr,
-        schema="doc_id bigint, window_idx bigint, n_crossings bigint, peak bigint",
+        "doc_id bigint, window_idx bigint, n_crossings bigint, peak bigint",
     )
 
 
@@ -1925,46 +1849,35 @@ def q8n_media_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     mixed = parts[0].unionByName(parts[1]).unionByName(parts[2])
 
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, fmt, content in zip(
-                pdf["path"], pdf["image_format"], pdf["content"]
-            ):
-                doc_id = _doc_id_of(path)
-                payload = bytes(content)
-                magic = payload[:3]
-                sniffed = (
-                    "ppm"
-                    if magic[:2] == b"P6"
-                    else "png"
-                    if magic == b"\x89PN"
-                    else "jpeg"
-                    if magic == b"\xff\xd8\xff"
-                    else "unknown"
-                )
-                dims = synthetic_jpeg_dims if fmt == "jpeg" else synthetic_dims
-                want_h, want_w = dims(doc_id)
-                try:
-                    arr = decode_image(payload, fmt)
-                    ok = int(
-                        arr.shape[0] == want_h
-                        and arr.shape[1] == want_w
-                        and arr.shape[2] == 3
-                    )
-                    pix = int(arr.shape[0] * arr.shape[1] * arr.shape[2])
-                except Exception:
-                    ok, pix = 0, 0
-                rows.append((fmt, int(sniffed == fmt), ok, pix))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_format", "sniff_match", "decode_ok", "pix"],
+    def audit(path: str, fmt: str, content: bytes) -> list[tuple]:
+        doc_id = _doc_id_of(path)
+        payload = bytes(content)
+        magic = payload[:3]
+        sniffed = (
+            "ppm"
+            if magic[:2] == b"P6"
+            else "png"
+            if magic == b"\x89PN"
+            else "jpeg"
+            if magic == b"\xff\xd8\xff"
+            else "unknown"
+        )
+        dims = synthetic_jpeg_dims if fmt == "jpeg" else synthetic_dims
+        want_h, want_w = dims(doc_id)
+        try:
+            arr = decode_image(payload, fmt)
+            ok = int(
+                arr.shape[0] == want_h and arr.shape[1] == want_w and arr.shape[2] == 3
             )
+            pix = int(arr.shape[0] * arr.shape[1] * arr.shape[2])
+        except Exception:
+            ok, pix = 0, 0
+        return [(fmt, int(sniffed == fmt), ok, pix)]
 
-    probed = mixed.mapInPandas(
+    probed = map_rows(
+        mixed.select("path", "image_format", "content"),
         audit,
-        schema="image_format string, sniff_match bigint, decode_ok bigint, "
-        "pix bigint",
+        "image_format string, sniff_match bigint, decode_ok bigint, pix bigint",
     )
     return probed.groupBy("image_format").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1986,9 +1899,9 @@ def q8n_media_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equality check, or the Arrow plumbing regresses, n_lossless drops and
 # the hash mismatches.
 #
-# Scale (100 TB): embarrassingly parallel single pass; only three scalar
-# counters leave each Arrow batch (partial-agg rollup); per-task memory
-# is one batch of payloads. The transcode target writes would stream to
+# Scale (100 TB): embarrassingly parallel single pass; only a row of
+# three counters per doc leaves the UDF (summed by the partial
+# aggregate); per-task memory is one batch of payloads. The transcode target writes would stream to
 # the object store from the same pass in production.
 # --------------------------------------------------------------------------
 @query(
@@ -2006,25 +1919,17 @@ def q8o_transcode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = synthetic_corpus(spark, sf_dir, "ppm")
 
-    def transcode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = lossless = pix = 0
-            for content in pdf["content"]:
-                n += 1
-                try:
-                    src = decode_image(bytes(content), "ppm")
-                    out = decode_image(encode_png(src), "png")
-                    if np.array_equal(src, out):
-                        lossless += 1
-                        pix += int(out.size)
-                except Exception:
-                    pass
-            yield pd.DataFrame(
-                {"n": [n], "lossless": [lossless], "pix": [pix]}
-            )
+    def transcode(content: bytes) -> list[tuple]:
+        try:
+            src = decode_image(bytes(content), "ppm")
+            out = decode_image(encode_png(src), "png")
+        except Exception:
+            return [(1, 0, 0)]
+        lossless = np.array_equal(src, out)
+        return [(1, int(lossless), int(out.size) if lossless else 0)]
 
-    probed = corpus.mapInPandas(
-        transcode, schema="n bigint, lossless bigint, pix bigint"
+    probed = map_rows(
+        corpus.select("content"), transcode, "n bigint, lossless bigint, pix bigint"
     )
     return probed.agg(
         F.sum("n").alias("n_docs"),

@@ -32,16 +32,14 @@ lets DuckDB verify a lossy-format decoder cell-for-cell):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_datapipeline_spark.catalog import load_table
 from tf_datapipeline_spark.functions.imagecodec import encode_png, encode_ppm
 from tf_datapipeline_spark.functions.jpegcodec import encode_jpeg
+from tf_datapipeline_spark.functions.rows import map_rows
 
 CORPUS_SCHEMA = (
     "path string, class_name string, image_format string, "
@@ -116,46 +114,22 @@ def synthetic_corpus(
     if fmt not in ("ppm", "png", "jpeg"):
         raise ValueError(f"unsupported synthetic corpus format {fmt!r}")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                if fmt == "jpeg":
-                    gray = synthetic_jpeg_pixels(int(doc_id))
-                    img = np.repeat(gray[:, :, None], 3, axis=2)
-                    payload = encode_jpeg(gray, quality=100)
-                else:
-                    img = synthetic_pixels(int(doc_id))
-                    payload = (encode_ppm if fmt == "ppm" else encode_png)(img)
-                rows.append(
-                    (
-                        f"corpus/{lang}/{int(doc_id)}.{fmt}",
-                        lang,
-                        fmt,
-                        img.shape[0],
-                        img.shape[1],
-                        payload,
-                        len(payload),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path",
-                    "class_name",
-                    "image_format",
-                    "height",
-                    "width",
-                    "content",
-                    "length",
-                ],
-            )
+    def gen(doc_id: int, lang: str) -> list[tuple]:
+        if fmt == "jpeg":
+            img = synthetic_jpeg_pixels(doc_id)
+            payload = encode_jpeg(img, quality=100)
+        else:
+            img = synthetic_pixels(doc_id)
+            payload = (encode_ppm if fmt == "ppm" else encode_png)(img)
+        h, w = img.shape[:2]
+        path = f"corpus/{lang}/{doc_id}.{fmt}"
+        return [(path, lang, fmt, h, w, payload, len(payload))]
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     if docs_filter is not None:
         # pushed below the generator: filtered docs are never encoded
         docs = docs.filter(docs_filter)
-    return docs.mapInPandas(gen, schema=CORPUS_SCHEMA)
+    return map_rows(docs, gen, CORPUS_SCHEMA)
 
 
 def scan_image_dir(spark: SparkSession, root: str, fmt: str = "ppm") -> DataFrame:

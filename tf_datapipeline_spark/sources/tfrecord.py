@@ -19,8 +19,8 @@ shards with this engine, closing the last §2A inventory gap:
 - **Spark plumbing** — the writer fans out by (split, shard) with
   applyInPandas, one task per shard file, using the reference's
   `flowers_%s_%05d-of-%05d.tfrecord` naming (make_tf_record.py:94-97,
-  P7); the reader scans shards via binaryFile and parses frames in
-  Arrow-batched mapInPandas (the queue-free form of S7's
+  P7); the reader scans shards via binaryFile and parses each shard's
+  frames in `functions/rows.map_rows` (the queue-free form of S7's
   filename-queue + TFRecordReader, data_queue.py:10-36).
 
 Scale notes: writer parallelism = number of (split, shard) groups — at
@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tf_datapipeline_spark.functions.rows import map_rows
 from tf_datapipeline_spark.sources.etl import N_SHARDS
 
 # --------------------------------------------------------------------------
@@ -350,39 +351,25 @@ def read_tfrecords(spark: SparkSession, out_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(path)
-                stem = name[: -len(".tfrecord")]
-                parts = stem.split("_")  # flowers_<split>_<i>-of-<n>
-                split = parts[1]
-                shard = int(parts[2].split("-")[0])
-                for frame in iter_tfrecord_frames(bytes(content)):
-                    ex = decode_example(frame)
-                    rows.append(
-                        (
-                            split,
-                            shard,
-                            ex["image/encoded"][0],
-                            ex["image/format"][0].decode(),
-                            ex["image/class/label"][0],
-                            ex["image/height"][0],
-                            ex["image/width"][0],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "split",
-                    "shard",
-                    "image_encoded",
-                    "image_format",
-                    "label",
-                    "height",
-                    "width",
-                ],
+    def parse(path: str, content: bytes) -> list[tuple]:
+        stem = os.path.basename(path)[: -len(".tfrecord")]
+        parts = stem.split("_")  # flowers_<split>_<i>-of-<n>
+        split = parts[1]
+        shard = int(parts[2].split("-")[0])
+        rows = []
+        for frame in iter_tfrecord_frames(bytes(content)):
+            ex = decode_example(frame)
+            rows.append(
+                (
+                    split,
+                    shard,
+                    ex["image/encoded"][0],
+                    ex["image/format"][0].decode(),
+                    ex["image/class/label"][0],
+                    ex["image/height"][0],
+                    ex["image/width"][0],
+                )
             )
+        return rows
 
-    return files.mapInPandas(parse, schema=_RECORD_SCHEMA)
+    return map_rows(files, parse, _RECORD_SCHEMA)

@@ -856,8 +856,8 @@ def q7a_stream_sq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q8j — STREAMING multimodal ingest (q80's streaming twin; completes the
 # in-flight-crawl matrix: q6c dedups text, q7a encodes vectors, q8j
 # probes media): newly crawled documents arrive as a stream and their
-# binary image payloads are built + decoded IN-FLIGHT through the same
-# Arrow-batched mapInPandas codec path as batch q80 — stateless, so
+# binary image payloads are built + decoded IN-FLIGHT through batch q80's
+# row function (multimodal.image_meta_row, on map_rows) — stateless, so
 # state is O(1) for an unbounded stream, and the decode probe
 # (dims/channels from the DECODED array) validates every payload before
 # it lands. Emits rows byte-identical to batch q80 on the delta slice;
@@ -879,12 +879,13 @@ def _stream_image_oracle() -> str:
 
 @query("q8j_stream_image_ingest", oracle=_stream_image_oracle())
 def q8j_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from tf_datapipeline_spark.functions.imagecodec import decode_image, encode_ppm
+    from tf_datapipeline_spark.functions.imagecodec import encode_ppm
+    from tf_datapipeline_spark.functions.rows import map_rows
     from tf_datapipeline_spark.operators.dedup import _DELTA_MOD
+    from tf_datapipeline_spark.operators.multimodal import (
+        IMAGE_META_SCHEMA,
+        image_meta_row,
+    )
     from tf_datapipeline_spark.sources.images import synthetic_pixels
 
     sdf = (
@@ -893,43 +894,11 @@ def q8j_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang")
     )
 
-    def ingest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                img = synthetic_pixels(int(doc_id))
-                payload = encode_ppm(img)
-                arr = decode_image(payload, "ppm")
-                rows.append(
-                    (
-                        int(doc_id),
-                        lang,
-                        "ppm",
-                        arr.shape[0],
-                        arr.shape[1],
-                        arr.shape[2],
-                        len(payload),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "class_name",
-                    "image_format",
-                    "height",
-                    "width",
-                    "channels",
-                    "n_bytes",
-                ],
-            )
+    def ingest(doc_id: int, lang: str) -> list[tuple]:
+        payload = encode_ppm(synthetic_pixels(doc_id))
+        return [image_meta_row(doc_id, lang, "ppm", payload)]
 
-    out = sdf.mapInPandas(
-        ingest,
-        schema="doc_id bigint, class_name string, image_format string, "
-        "height bigint, width bigint, channels int, n_bytes bigint",
-    )
-    return run_bounded(out, "append")
+    return run_bounded(map_rows(sdf, ingest, IMAGE_META_SCHEMA), "append")
 
 
 # --------------------------------------------------------------------------
@@ -1213,20 +1182,14 @@ def q7b_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stream_anomaly_oracle() -> str:
     from tf_datapipeline_spark.operators.events import seasonal_keyed_ctes
 
+    s1, s2 = sql_dsum("value", 6), sql_dsum("value * value", 6)
     return f"""
     WITH {seasonal_keyed_ctes("event_id, ")},
     stats AS (
       SELECT event_type, dow, hr,
-             TRY_CAST(CONCAT(SUM(CAST(value AS DECIMAL(28,6))), '')
-                      AS DOUBLE) / COUNT(value) AS base_avg,
-             SQRT(GREATEST(
-               TRY_CAST(CONCAT(SUM(CAST(value * value AS DECIMAL(28,6))), '')
-                        AS DOUBLE)
-               - TRY_CAST(CONCAT(SUM(CAST(value AS DECIMAL(28,6))), '')
-                          AS DOUBLE)
-                 * (TRY_CAST(CONCAT(SUM(CAST(value AS DECIMAL(28,6))), '')
-                             AS DOUBLE) / COUNT(value)),
-               0.0) / COUNT(value)) AS base_std
+             {s1} / COUNT(value) AS base_avg,
+             SQRT(GREATEST({s2} - {s1} * ({s1} / COUNT(value)), 0.0)
+                  / COUNT(value)) AS base_std
       FROM keyed WHERE is_base GROUP BY 1, 2, 3
     )
     SELECT k.event_id, k.event_type, k.dow, k.hr, k.value,

@@ -12,7 +12,8 @@ Each plan is written in `canonical_plan` form, so the captures of two
 checkouts diff cleanly (`diff -r <a>/.plans/<tag> <b>/.plans/<tag>`). A query that
 runs streams (a bounded stream returns its sink's rows, whose plan is a
 `LocalTableScan`) also gets each stream's last micro-batch plan,
-appended in `canonical_stream_plan` form.
+appended in `canonical_stream_plan` form. Scan fields such as
+`DataFilters` are captured whole, not cut at Spark's metadata length.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from collections.abc import Iterator
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_DIR not in sys.path:
@@ -133,15 +135,16 @@ def canonical_stream_plan(plan: str) -> str:
     return canonical_plan(plan)
 
 
-def main() -> None:
-    tag = sys.argv[1]
-    suffix = sys.argv[2]
-    names_arg = sys.argv[3] if len(sys.argv) > 3 else "ALL"
-
+def capture(spark, names: list[str], sf_dir: str) -> Iterator[tuple[str, str]]:
+    """(name, `canonical_plan` text) of each registered query in `names`
+    over `sf_dir`, with the plans of the streams it ran appended. A scan
+    node's metadata fields (`DataFilters`, `PushedFilters`, ...) are
+    printed whole: Spark cuts them at `spark.sql.maxMetadataStringLength`
+    before the ids are masked, so the cut would move with the ids' digit
+    counts. The session's conf is restored afterwards."""
     from pyspark.sql.streaming import DataStreamWriter
 
     from tf_datapipeline_spark import registry
-    from tf_datapipeline_spark.session import get_spark
 
     # keep the handle of every stream a query starts, so its plan can be
     # explained after the query has drained it
@@ -153,30 +156,52 @@ def main() -> None:
         started.append(handle)
         return handle
 
+    key = "spark.sql.maxMetadataStringLength"
+    saved = spark.conf.get(key)
     DataStreamWriter.start = start_and_keep
+    spark.conf.set(key, str(2**31 - 1))
+    qs = registry.queries()
+    try:
+        for name in names:
+            started.clear()
+            try:
+                df = qs[name](spark, sf_dir)
+                plan = canonical_plan(
+                    df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"
+                    )
+                )
+                for i, handle in enumerate(started):
+                    stream_plan = canonical_stream_plan(
+                        handle._jsq.explainInternal(False)
+                    )
+                    plan += f"\n== Stream {i} ==\n{stream_plan}"
+            except Exception as exc:  # noqa: BLE001 - record the failure in-file
+                plan = f"PLAN CAPTURE FAILED: {type(exc).__name__}: {exc}"
+            yield name, plan
+    finally:
+        DataStreamWriter.start = start
+        spark.conf.set(key, saved)
+
+
+def main() -> None:
+    tag = sys.argv[1]
+    suffix = sys.argv[2]
+    names_arg = sys.argv[3] if len(sys.argv) > 3 else "ALL"
+
+    from tf_datapipeline_spark import registry
+    from tf_datapipeline_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("capture-plans")
-    qs = registry.queries()
     names = (
-        sorted(qs) if names_arg == "ALL" else [n for n in names_arg.split(",") if n]
+        sorted(registry.queries())
+        if names_arg == "ALL"
+        else [n for n in names_arg.split(",") if n]
     )
     out_dir = os.path.join(REPO_DIR, ".plans", tag)
     os.makedirs(out_dir, exist_ok=True)
-    for name in names:
-        started.clear()
-        try:
-            df = qs[name](spark, sf_dir)
-            plan = canonical_plan(
-                df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                )
-            )
-            for i, handle in enumerate(started):
-                stream_plan = canonical_stream_plan(handle._jsq.explainInternal(False))
-                plan += f"\n== Stream {i} ==\n{stream_plan}"
-        except Exception as exc:  # noqa: BLE001 - record the failure in-file
-            plan = f"PLAN CAPTURE FAILED: {type(exc).__name__}: {exc}"
+    for name, plan in capture(spark, names, sf_dir):
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
